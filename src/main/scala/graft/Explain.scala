@@ -51,7 +51,7 @@ object Explain {
     "count_window_agg" ->
       ("ORACLE SHAPE: total arrival order = single-partition global sort. " +
         "Scale paths: count_window_per_key (WindowAssign.countWindowPerKey, sort shards by key) " +
-        "or the streaming CountWindow (EmitterBuilder.size — per-stream state, no global sort)."),
+        "or the streaming CountWindow (EmitterBuilder.size — per-stream carry, no global sort)."),
     "sorted_window" ->
       ("ORACLE SHAPE: the README example's total sort order = single-partition global sort. " +
         "Scale deployments key the sort (Window.partitionBy)."),

@@ -67,7 +67,7 @@ object SparkEntry {
     // A6 CountWindow — ORACLE SHAPE: total arrival order forces a global
     // single-partition sort. The front doors at scale are
     // count_window_per_key (sort shards by key) and the streaming
-    // CountWindow (EmitterBuilder.size — per-stream state, never sorts
+    // CountWindow (EmitterBuilder.size — per-stream carry, never sorts
     // globally); this query exists to oracle-check their semantics.
     "count_window_agg" -> ((s, dir) => {
       val ev = events(s, dir).select(col("event_id"), col("value"))

@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
   * because the reference semantics are a total arrival order. That is
   * inherently sequential; at cluster scale callers should prefer
   * `countWindowPerKey` (per-stream/user ordering — parallel by key) or the
-  * streaming count window in [[graft.streaming.CountWindowStream]], which
-  * keeps state per key and never globally sorts.
+  * streaming count window (`EmitterBuilder.size`, [[graft.streaming.CountCarry]]),
+  * which carries each stream's sub-N remainder and never globally sorts.
   */
 object WindowAssign {
 

@@ -2,9 +2,12 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.LongType
 
 /** The consumer-side run loop (reference `WindowEmitter.run`,
   * minibatch/window.py:13-227) on Structured Streaming.
@@ -15,6 +18,17 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * (at-least-once into side effects, same as the reference's undo/redo,
   * window.py:119-124); `persist(keep=True)` → append to the stream's
   * windows table (window.py:126-136).
+  *
+  * Count windows run on the driver: each micro-batch is collected, cut by
+  * [[CountCarry.step]] and handed to `emitFn` window by window as local
+  * DataFrames, so a trigger runs one scan job and no shuffle or state
+  * store. The carry (next window id, newest `created`, sub-N remainder)
+  * is one small file per batch under `checkpoints/graft-count/` (format
+  * in [[CountCarry]]); batch `b` starts from the carry of `b - 1`, so a
+  * batch replayed after a failed emit recomputes the same windows. Carry
+  * files older than `spark.sql.streaming.minBatchesToRetain` are pruned.
+  * The driver holds one micro-batch at a time; `maxFilesPerTrigger`
+  * bounds it.
   */
 object EmitterRunner {
 
@@ -22,14 +36,11 @@ object EmitterRunner {
 
   case class Message(stream: String, created: Timestamp, data: String)
   case class WindowedMessage(stream: String, created: Timestamp, data: String, window_id: Long)
-  case class CountState(pending: Seq[Message], nextWindowId: Long, emittedInBatch: Long)
 
   implicit val msgEnc: Encoder[Message] = Encoders.product[Message]
   implicit val winMsgEnc: Encoder[WindowedMessage] = Encoders.product[WindowedMessage]
-  implicit val stateEnc: Encoder[CountState] = Encoders.product[CountState]
-  implicit val strEnc: Encoder[String] = Encoders.STRING
 
-  /** Reserved control message: a CountWindow state function that sees this
+  /** Reserved control message: a CountWindow batch that holds this
     * payload emits its sub-N remainder as a final partial window (see
     * [[EmitterBuilder.flushPartialOnDrain]]). Never surfaces as data — all
     * strategies filter it out of the message flow.
@@ -46,9 +57,8 @@ object EmitterRunner {
     * CountWindow has no such bound — a remainder below N waits in the
     * buffer forever (window.py:305-327 only ever emits complete windows);
     * this is the standard fix (count trigger OR timeout, whichever first).
-    * Implemented with an event-time GroupState timeout against a
-    * 0-second watermark on arrival time, so the flush is deterministic
-    * (driven by data, not wall clock) and replay-safe.
+    * The flush is driven by the newest arrival time seen, not the wall
+    * clock, so it is deterministic and replay-safe (see [[CountCarry.step]]).
     */
   final case class CountWindowTimeout(size: Int, maxAgeSeconds: Long) extends Strategy
   /** Aligned tumbling windows over arrival time (reference FixedTimeWindow,
@@ -78,99 +88,18 @@ object EmitterRunner {
     reader.parquet(stream.bufferDir).as[Message]
   }
 
-  /** Assign window ids per strategy. Count windows keep exact-N semantics
-    * across micro-batches via per-stream `flatMapGroupsWithState`: the
-    * state holds the sub-N remainder and the next window id, so windows
-    * never straddle a batch boundary with the wrong size. State size is
-    * bounded by N messages per stream key.
+  /** Assign window ids for the time strategies (Fixed, Relaxed); count
+    * windows are cut on the driver by [[CountCarry.step]].
     */
-  def assign(ds: Dataset[Message], strategy: Strategy): Dataset[WindowedMessage] =
-    strategy match {
-      case CountWindow(n) =>
-        ds.groupByKey(_.stream)
-          .flatMapGroupsWithState[CountState, WindowedMessage](
-            OutputMode.Append, GroupStateTimeout.NoTimeout) {
-            (key: String, it: Iterator[Message], state: GroupState[CountState]) =>
-              val prev = state.getOption.getOrElse(CountState(Seq.empty, 0L, 0L))
-              // arrival order within the batch: by created, then payload;
-              // the flush sentinel is a control signal, not data
-              val (sentinels, incoming) = it.toSeq
-                .sortBy(m => (m.created.getTime, m.data))
-                .partition(_.data == FlushSentinel)
-              val all = prev.pending ++ incoming
-              val nFull = all.size / n
-              val (full, rest) = all.splitAt(nFull * n)
-              val out = full.zipWithIndex.map { case (m, i) =>
-                WindowedMessage(m.stream, m.created, m.data, prev.nextWindowId + i / n)
-              }
-              if (sentinels.nonEmpty && rest.nonEmpty) {
-                // flush requested: the sub-N tail becomes one final partial
-                // window instead of carrying to the next micro-batch
-                val tailId = prev.nextWindowId + nFull
-                val tail = rest.map(m => WindowedMessage(m.stream, m.created, m.data, tailId))
-                state.update(CountState(Seq.empty, tailId + 1, nFull + 1))
-                (out ++ tail).iterator
-              } else {
-                state.update(CountState(rest, prev.nextWindowId + nFull, nFull))
-                out.iterator
-              }
-          }
-      case CountWindowTimeout(n, maxAge) =>
-        ds.withWatermark("created", "0 seconds")
-          .groupByKey(_.stream)
-          .flatMapGroupsWithState[CountState, WindowedMessage](
-            OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-            (key: String, it: Iterator[Message], state: GroupState[CountState]) =>
-              val prev = state.getOption.getOrElse(CountState(Seq.empty, 0L, 0L))
-              if (state.hasTimedOut) {
-                // watermark moved past oldest-pending + maxAge: the tail
-                // becomes one partial window (bounded staleness). A stale
-                // timeout with nothing pending emits nothing.
-                val out = prev.pending.map(m =>
-                  WindowedMessage(m.stream, m.created, m.data, prev.nextWindowId))
-                val bump = if (prev.pending.nonEmpty) 1L else 0L
-                state.update(CountState(Seq.empty, prev.nextWindowId + bump, bump))
-                out.iterator
-              } else {
-                val (sentinels, incoming) = it.toSeq
-                  .sortBy(m => (m.created.getTime, m.data))
-                  .partition(_.data == FlushSentinel)
-                val all = prev.pending ++ incoming
-                val nFull = all.size / n
-                val (full, rest) = all.splitAt(nFull * n)
-                val out = full.zipWithIndex.map { case (m, i) =>
-                  WindowedMessage(m.stream, m.created, m.data, prev.nextWindowId + i / n)
-                }
-                if (sentinels.nonEmpty && rest.nonEmpty) {
-                  val tailId = prev.nextWindowId + nFull
-                  val tail = rest.map(m => WindowedMessage(m.stream, m.created, m.data, tailId))
-                  state.update(CountState(Seq.empty, tailId + 1, nFull + 1))
-                  (out ++ tail).iterator
-                } else {
-                  state.update(CountState(rest, prev.nextWindowId + nFull, nFull))
-                  if (rest.nonEmpty) {
-                    // flush when event time passes oldest-pending + maxAge;
-                    // clamp above the current watermark (setting a timeout
-                    // at-or-below it is rejected), which also means an
-                    // already-stale tail fires on the very next batch
-                    val oldest = rest.map(_.created.getTime).min
-                    state.setTimeoutTimestamp(
-                      math.max(oldest + maxAge * 1000L, state.getCurrentWatermarkMs() + 1L))
-                  }
-                  out.iterator
-                }
-              }
-          }
-      case FixedTimeWindow(secs) =>
-        ds.filter(_.data != FlushSentinel)
-          .withColumn("window_id",
-            floor(unix_timestamp(col("created")) / secs))
-          .as[WindowedMessage]
-      case RelaxedTimeWindow =>
-        // window id assigned per micro-batch in the runner (batchId)
-        ds.filter(_.data != FlushSentinel)
-          .withColumn("window_id", lit(-1L)).as[WindowedMessage]
+  def assign(ds: Dataset[Message], strategy: Strategy): Dataset[WindowedMessage] = {
+    val windowId = strategy match {
+      case FixedTimeWindow(secs) => floor(unix_timestamp(col("created")) / secs)
+      // window id assigned per micro-batch in the runner (batchId)
+      case RelaxedTimeWindow => lit(-1L)
+      case count => throw new IllegalArgumentException(s"$count is cut by CountCarry.step, not assign")
     }
+    ds.filter(_.data != FlushSentinel).withColumn("window_id", windowId).as[WindowedMessage]
+  }
 
   /** Start the emitter: strategy-assign, then per micro-batch hand each
     * complete window to `emitFn` (the reference's dill-marshalled emitfn —
@@ -225,68 +154,95 @@ object EmitterRunner {
             "spanning this restart will not be synthesized", e)
       }
     }
-    val assigned = assign(readBuffer(stream, maxFilesPerTrigger), strategy)
-    val writer = assigned.writeStream
+    val count = strategy match {
+      case CountWindow(n) => Some((n, None))
+      case CountWindowTimeout(n, secs) => Some((n, Some(secs * 1000L)))
+      case _ => None
+    }
+    if (count.nonEmpty) CountCarry.requireResumable(stream)
+    val spark = stream.spark
+    val retain = spark.conf.get("spark.sql.streaming.minBatchesToRetain").toInt
+    def persist(windowed: DataFrame, batchId: Long): Unit = {
+      if (keep) {
+        // replay-safe history: partition by batch_id and overwrite ONLY
+        // this batch's partition (dynamic mode), so a failed-then-
+        // replayed micro-batch rewrites its own slice instead of
+        // appending duplicates — the same effectively-once trick as
+        // IdempotentTableSink, built into the keep path
+        windowed.withColumn("batch_id", lit(batchId))
+          .select("stream", "created", "data", "window_id", "batch_id")
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("batch_id")
+          .parquet(stream.windowsDir)
+      }
+      // batch-level sink (gets the batch id → enables idempotent,
+      // replay-safe writes, e.g. IdempotentTableSink)
+      batchSink.foreach(_(windowed, batchId))
+    }
+    val writer = readBuffer(stream, maxFilesPerTrigger).writeStream
       .trigger(trigger)
       .option("checkpointLocation", stream.checkpointsDir)
-      .foreachBatch { (batch: Dataset[WindowedMessage], batchId: Long) =>
-        val df = strategy match {
-          case RelaxedTimeWindow =>
-            batch.toDF().withColumn("window_id", lit(batchId))
-          case _ => batch.toDF()
+      .foreachBatch { (batch: Dataset[Message], batchId: Long) =>
+        count match {
+          case Some((n, maxAgeMs)) =>
+            val (windows, carry) =
+              CountCarry.step(CountCarry.before(stream, batchId), batch.collect().toSeq, n, maxAgeMs)
+            val byId = windows.toMap
+            emitAll(windows.map(_._1), id => emitFn(id, spark.createDataFrame(
+              byId(id).map(m => Row(m.stream, m.created, m.data)).asJava, MbStream.MessageSchema)),
+              maxWorkers)
+            if (windows.nonEmpty)
+              persist(spark.createDataFrame(
+                windows.flatMap { case (id, ms) => ms.map(m => Row(m.stream, m.created, m.data, id)) }.asJava,
+                MbStream.MessageSchema.add("window_id", LongType, nullable = false)), batchId)
+            CountCarry.write(stream, batchId, carry, retain)
+          case None =>
+            val assigned = assign(batch, strategy)
+            val df = strategy match {
+              case RelaxedTimeWindow => assigned.toDF().withColumn("window_id", lit(batchId))
+              case _ => assigned.toDF()
+            }
+            val cached = df.cache()
+            try {
+              val ids = cached.select("window_id").distinct()
+                .collect().map(_.getLong(0)).sorted
+              val fillIds: Seq[Long] = strategy match {
+                case FixedTimeWindow(_) if emitEmpty && ids.nonEmpty =>
+                  val from =
+                    if (lastMaxWindow.get() == Long.MinValue) ids.head
+                    else lastMaxWindow.get() + 1
+                  val present = ids.toSet
+                  // cap the synthesized burst: a long outage can leave millions
+                  // of missed intervals; emitting one window (≈ one Spark job)
+                  // per interval in a single micro-batch would wedge the query.
+                  // Clamp the range BEFORE materializing it, then trim exactly.
+                  val span = ids.last - from + 1
+                  val clampedFrom =
+                    if (span > maxGapWindows.toLong + ids.size) {
+                      val cf = ids.last - (maxGapWindows.toLong + ids.size) + 1
+                      log.warn(s"emitEmpty: gap of ${span - ids.size} missed windows " +
+                        s"exceeds maxGapWindows=$maxGapWindows; emitting only the most " +
+                        s"recent $maxGapWindows empty windows (ids < $cf collapsed)")
+                      cf
+                    } else from
+                  (clampedFrom to ids.last).filterNot(present).takeRight(maxGapWindows)
+                case _ => Seq.empty
+              }
+              val emptyWindow = cached.filter(lit(false)).drop("window_id")
+              val presentIds = ids.toSet
+              emitAll((ids ++ fillIds).sorted.toIndexedSeq,
+                id =>
+                  if (presentIds(id))
+                    emitFn(id, cached.filter(col("window_id") === id).drop("window_id"))
+                  else emitFn(id, emptyWindow),
+                maxWorkers)
+              if (ids.nonEmpty) {
+                lastMaxWindow.set(ids.last)
+                persist(cached, batchId)
+              }
+            } finally cached.unpersist()
         }
-        val cached = df.cache()
-        try {
-          val ids = cached.select("window_id").distinct()
-            .collect().map(_.getLong(0)).sorted
-          val fillIds: Seq[Long] = strategy match {
-            case FixedTimeWindow(_) if emitEmpty && ids.nonEmpty =>
-              val from =
-                if (lastMaxWindow.get() == Long.MinValue) ids.head
-                else lastMaxWindow.get() + 1
-              val present = ids.toSet
-              // cap the synthesized burst: a long outage can leave millions
-              // of missed intervals; emitting one window (≈ one Spark job)
-              // per interval in a single micro-batch would wedge the query.
-              // Clamp the range BEFORE materializing it, then trim exactly.
-              val span = ids.last - from + 1
-              val clampedFrom =
-                if (span > maxGapWindows.toLong + ids.size) {
-                  val cf = ids.last - (maxGapWindows.toLong + ids.size) + 1
-                  log.warn(s"emitEmpty: gap of ${span - ids.size} missed windows " +
-                    s"exceeds maxGapWindows=$maxGapWindows; emitting only the most " +
-                    s"recent $maxGapWindows empty windows (ids < $cf collapsed)")
-                  cf
-                } else from
-              (clampedFrom to ids.last).filterNot(present).takeRight(maxGapWindows)
-            case _ => Seq.empty
-          }
-          val emptyWindow = cached.filter(lit(false)).drop("window_id")
-          val presentIds = ids.toSet
-          emitAll((ids ++ fillIds).sorted.toIndexedSeq,
-            id =>
-              if (presentIds(id))
-                emitFn(id, cached.filter(col("window_id") === id).drop("window_id"))
-              else emitFn(id, emptyWindow),
-            maxWorkers)
-          if (ids.nonEmpty) lastMaxWindow.set(ids.last)
-          if (keep && ids.nonEmpty) {
-            // replay-safe history: partition by batch_id and overwrite ONLY
-            // this batch's partition (dynamic mode), so a failed-then-
-            // replayed micro-batch rewrites its own slice instead of
-            // appending duplicates — the same effectively-once trick as
-            // IdempotentTableSink, built into the keep path
-            cached.withColumn("batch_id", lit(batchId))
-              .select("stream", "created", "data", "window_id", "batch_id")
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id")
-              .parquet(stream.windowsDir)
-          }
-          // batch-level sink (gets the batch id → enables idempotent,
-          // replay-safe writes, e.g. IdempotentTableSink)
-          if (ids.nonEmpty) batchSink.foreach(_(cached, batchId))
-        } finally cached.unpersist()
       }
     queryName.fold(writer)(writer.queryName).start()
   }

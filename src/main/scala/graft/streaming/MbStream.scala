@@ -4,7 +4,14 @@ import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -35,7 +42,7 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
     * arrival time, accumulate in the producer-side batcher (models.py:25-81),
     * flush as one parquet file per `batchSize` messages. The durable file is
     * the process boundary — no ack protocol, like the reference's
-    * fast-insert path (models.py:84-113).
+    * fast-insert path (models.py:84-113). Starts no Spark job: see [[flush]].
     */
   def append(dataJson: String, batchSize: Int = 1): Unit = synchronized {
     refuseIfClosed()
@@ -59,14 +66,48 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
     flush()
   }
 
-  /** Flush the producer batch to one parquet file in the buffer dir. */
+  /** Flush the producer batch to one parquet file in the buffer dir.
+    *
+    * The file is written on the calling thread with parquet's example
+    * writer, not by a Spark job: per-message appends would otherwise pay a
+    * job's scheduling cost each. Its schema is [[BufferParquetSchema]]
+    * (`created` as INT64 TIMESTAMP(MICROS, UTC); files written by Spark's
+    * own writer, with INT96 `created`, read back identically) and its codec
+    * is the session's `spark.sql.parquet.compression.codec`. The rows go to
+    * a hidden `.part-<uuid>.parquet.tmp` first and are renamed to
+    * `part-<uuid>.parquet` once the footer is written, so the emitter's file
+    * source and [[buffer]] never list a partial file.
+    */
   def flush(): Unit = synchronized {
     if (pending.nonEmpty) {
-      val rows = pending.map { case (d, ts) => Row(name, ts, d) }.toSeq
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), MessageSchema)
-        .write.mode("append").parquet(bufferDir)
+      writeBufferFile(pending.toSeq)
       pending.clear()
     }
+  }
+
+  /** Write `rows` as one buffer file, as [[flush]] does. */
+  private[graft] def writeBufferFile(rows: Seq[(String, Timestamp)]): Unit = {
+    val id = java.util.UUID.randomUUID()
+    val tmp = new HPath(bufferDir, s".part-$id.parquet.tmp")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = tmp.getFileSystem(conf)
+    val codec = spark.conf.get("spark.sql.parquet.compression.codec").toLowerCase match {
+      case "none" => CompressionCodecName.UNCOMPRESSED
+      case c => CompressionCodecName.fromConf(c)
+    }
+    try {
+      val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
+        .withConf(conf).withType(BufferParquetSchema).withCompressionCodec(codec).build()
+      val groups = new SimpleGroupFactory(BufferParquetSchema)
+      try rows.foreach { case (d, ts) =>
+        writer.write(groups.newGroup().append("stream", name)
+          .append("created", toMicros(ts)).append("data", d))
+      } finally writer.close()
+    } catch {
+      case e: Throwable => fs.delete(tmp, false); throw e
+    }
+    if (!fs.rename(tmp, new HPath(bufferDir, s"part-$id.parquet")))
+      throw new java.io.IOException(s"stream '$name': could not rename $tmp into $bufferDir")
   }
 
   /** Filtered read of the buffer (reference `stream.buffer()`, models.py:282-284). */
@@ -78,15 +119,18 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
     * rather than listing top-level files.
     */
   def windows(): DataFrame = {
-    val hasData = {
-      val p = Paths.get(windowsDir)
-      Files.exists(p) && {
-        val s = Files.walk(p)
-        try s.anyMatch(f => f.toString.endsWith(".parquet"))
-        finally s.close()
-      }
+    // Spark's own listing skips `.`/`_` entries; so must this walk, or a
+    // first kept write's `.spark-staging-*` dir reads as history
+    def hasData(p: java.nio.file.Path): Boolean = Files.isDirectory(p) && {
+      try {
+        val s = Files.list(p)
+        try s.iterator().asScala.exists { f =>
+          val n = f.getFileName.toString
+          !n.startsWith(".") && !n.startsWith("_") && (n.endsWith(".parquet") || hasData(f))
+        } finally s.close()
+      } catch { case _: java.nio.file.NoSuchFileException => false } // replaced mid-walk
     }
-    if (!hasData)
+    if (!hasData(Paths.get(windowsDir)))
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], WindowSchema)
     else
       spark.read.option("ignoreMissingFiles", "true").parquet(windowsDir)
@@ -284,6 +328,14 @@ final class AttachedSource(
 
 object MbStream {
 
+  private[streaming] def toMicros(ts: Timestamp): Long = ts.getTime * 1000L + ts.getNanos / 1000 % 1000
+
+  private[streaming] def fromMicros(us: Long): Timestamp = {
+    val ts = new Timestamp(Math.floorDiv(us, 1000L))
+    ts.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
+    ts
+  }
+
   private val StatusRe = """"status"\s*:\s*"([a-z]+)"""".r
   private val CreatedRe = """"created_ms"\s*:\s*(\d+)""".r
 
@@ -327,6 +379,16 @@ object MbStream {
     StructField("stream", StringType, nullable = false),
     StructField("created", TimestampType, nullable = false),
     StructField("data", StringType, nullable = false)))
+
+  /** [[MessageSchema]] as the parquet schema of the buffer files that
+    * [[MbStream.flush]] writes.
+    */
+  val BufferParquetSchema: org.apache.parquet.schema.MessageType = MessageTypeParser.parseMessageType(
+    """message spark_schema {
+      |  required binary stream (STRING);
+      |  required int64 created (TIMESTAMP(MICROS,true));
+      |  required binary data (STRING);
+      |}""".stripMargin)
 
   /** Mirrors Window `{stream, created, data, query}` (models.py:116-136),
     * one row per message with its window id (relational, not list-of-dicts).

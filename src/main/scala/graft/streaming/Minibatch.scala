@@ -214,7 +214,7 @@ final case class EmitterBuilder(
 
   /** Blocking drain (the reference's run(blocking=True) against a finite
     * buffer; deterministic in tests). With [[flushPartialOnDrain]], a flush
-    * sentinel is appended ahead of the drain so the CountWindow state emits
+    * sentinel is appended ahead of the drain so the count window emits
     * its sub-N tail as a final partial window.
     */
   def run(): Unit = {

@@ -711,37 +711,209 @@ class StreamingSuite extends AnyFunSuite {
   }
 
   test("count window with timeout: exact-N windows; sub-N tail flushes once event time passes maxAge") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    def msg(s: String, sec: Long, d: String) =
-      EmitterRunner.Message(s, new Timestamp(1700000000000L + sec * 1000L), d)
-    val input = MemoryStream[EmitterRunner.Message]
-    val out = EmitterRunner.assign(input.toDS(), EmitterRunner.CountWindowTimeout(5, 60))
-    val q = out.writeStream
-      .format("memory").queryName("graft_cwt").outputMode("append").start()
+    def msg(sec: Long, d: String) =
+      EmitterRunner.Message("s", new Timestamp(1700000000000L + sec * 1000L), d)
+    def step(c: CountCarry, batch: EmitterRunner.Message*) = CountCarry.step(c, batch, 5, Some(60000L))
+    // 7 messages: one full window of 5 emits, 2 stay pending
+    val (w1, c1) = step(CountCarry.Empty, (0 until 7).map(i => msg(i, s"m$i")): _*)
+    assert(w1.map { case (id, ms) => (id, ms.size) } === Seq((0L, 5)), "exactly one full window before the timeout")
+    assert(c1.pending.map(_.data) === Seq("m5", "m6"))
+    // within maxAge of the tail's oldest message (5 s): it joins the tail, nothing flushes
+    val (w2, c2) = step(c1, msg(30, "m7"))
+    assert(w2.isEmpty)
+    // event time far past oldest-pending + 60 s: the tail flushes as one partial window
+    val (w3, c3) = step(c2, msg(300, "m8"))
+    assert(step(c2, msg(300, "m8")) === ((w3, c3)), "a replay from the same carry recomputes the same windows")
+    val rows = (w1 ++ w3).flatMap { case (id, ms) => ms.map(m => (m.data, id)) }
+    assert(rows.size === 9, s"every message emitted once: $rows")
+    val tail = rows.filter(r => r._1 == "m5" || r._1 == "m6").map(_._2).distinct
+    assert(tail === Seq(1L), s"tail must land in ONE window, id 1 after the full window's: $rows")
+    // and the full window ids are untouched by the flush
+    assert(rows.filter(r => r._1 < "m5").map(_._2).distinct === Seq(0L))
+    assert(c3.nextWindowId === 2L && c3.pending.isEmpty)
+  }
+
+  test("size(n, maxWait): rows older than an earlier batch's newest are windowed, not dropped") {
+    // two producers on one stream: the second one's batch arrives after a
+    // newer row from the first was already consumed
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("two_producers")
+    val (sink, fn) = collector()
+    for (batch <- Seq(Seq("a" -> 100L), Seq("b" -> 50L, "c" -> 51L), Seq("d" -> 101L))) {
+      val rows = batch.map { case (d, sec) =>
+        Row(st.name, new Timestamp(1700000000000L + sec * 1000L), s"""{"m":"$d"}""") }
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), MbStream.MessageSchema)
+        .write.mode("append").parquet(st.bufferDir)
+      mb.streaming("two_producers").size(2, 600).emit(fn).run()
+    }
+    assert(sink.toSeq === Seq(
+      0L -> Seq("""{"m":"a"}""", """{"m":"b"}"""),
+      1L -> Seq("""{"m":"c"}""", """{"m":"d"}""")), s"late rows must not be dropped: $sink")
+  }
+
+  test("a count emitter refuses a checkpoint with committed batches but no window carry") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("upgraded")
+    st.appendAll(Seq("""{"i":0}"""))
+    // commits but no carry: the shape a checkpoint of the earlier stateful plan has
+    mb.streaming("upgraded").emitter(EmitterRunner.RelaxedTimeWindow).emit((_, _) => ()).run()
+    st.appendAll(Seq("""{"i":1}""", """{"i":2}"""))
+    val e = intercept[IllegalStateException] {
+      mb.streaming("upgraded").size(2).emit((_, _) => ()).run()
+    }
+    Seq("'upgraded'", "flushPartialOnDrain", st.checkpointsDir).foreach(s =>
+      assert(e.getMessage.contains(s), s"the message must name $s: ${e.getMessage}"))
+    // the named fix works: without the checkpoint the buffer is re-read from its start
+    val cp = java.nio.file.Paths.get(st.checkpointsDir)
+    Files.walk(cp).sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
+    val (sink, fn) = collector()
+    mb.streaming("upgraded").size(2).emit(fn).run()
+    assert(sink.map(_._2.size) === Seq(2), s"one full window of the three messages: $sink")
+  }
+
+  test("windows() skips Spark's hidden staging dir beside an empty history") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("staging")
+    // the first kept write's in-flight rows, as dynamic partition overwrite stages them
+    spark.range(2).selectExpr("'staging' AS stream", "current_timestamp() AS created",
+        "'{}' AS data", "id AS window_id")
+      .write.parquet(s"${st.windowsDir}/.spark-staging-0/batch_id=0")
+    assert(st.windows().count() === 0)
+    assert(st.windows().columns.toSeq === Seq("stream", "created", "data", "window_id", "batch_id"))
+    st.appendAll((0 until 4).map(i => s"""{"i":$i}"""))
+    mb.streaming("staging").size(2).keep(true).run()
+    assert(st.windows().count() === 4)
+  }
+
+  test("buffer compatibility: Spark-written INT96 and flushed INT64 files read identically") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.types._
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("compat")
+    val ts = (0 until 3).map(i => new Timestamp(1700000000123L + i * 7))
+    def rows(src: String) = ts.zipWithIndex.map { case (t, i) => (s"""{"src":"$src","i":$i}""", t) }
+    // the earlier buffer format: Spark's own writer
+    spark.createDataFrame(spark.sparkContext.parallelize(
+        rows("old").map { case (d, t) => Row(st.name, t, d) }, 1), MbStream.MessageSchema)
+      .write.mode("append").parquet(st.bufferDir)
+    st.writeBufferFile(rows("new"))
+    val files = Files.list(java.nio.file.Paths.get(st.bufferDir)).toArray.toSeq.map(_.toString)
+      .filter(f => f.endsWith(".parquet") && !f.split('/').last.startsWith("."))
+    val createdTypes = files.map { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f), spark.sparkContext.hadoopConfiguration))
+      val schema = r.getFooter.getFileMetaData.getSchema
+      try schema.getType(schema.getFieldIndex("created")).asPrimitiveType.getPrimitiveTypeName.name
+      finally r.close()
+    }
+    assert(createdTypes.sorted === Seq("INT64", "INT96"))
+    // (src, i) -> created ms, through each read path
+    def expectTwins(got: Seq[(String, Long, Long)], via: String): Unit =
+      assert(got.sorted === (for (src <- Seq("new", "old"); i <- ts.indices)
+        yield (src, i.toLong, ts(i).getTime)), s"via $via")
+    expectTwins(st.buffer().selectExpr("get_json_object(data, '$.src')",
+        "CAST(get_json_object(data, '$.i') AS LONG)", "unix_millis(created)")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq, "buffer()")
+    expectTwins(st.bufferTyped(new StructType().add("src", StringType).add("i", LongType))
+      .collect().map(r => (r.getAs[String]("src"), r.getAs[Long]("i"), r.getAs[Timestamp]("created").getTime))
+      .toSeq, "bufferTyped")
+    val drained = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Long)]()
+    mb.streaming("compat").size(2).emit((_, df) => df.collect().foreach { r =>
+      val d = r.getString(2)
+      drained.add((if (d.contains("old")) "old" else "new", d.filter(_.isDigit).toLong,
+        r.getTimestamp(1).getTime))
+    }).run()
+    import scala.jdk.CollectionConverters._
+    expectTwins(drained.asScala.toSeq, "a drain")
+    // retention compares each file's newest created to the cutoff, to the ms
+    val newest = ts.last.getTime
+    assert(st.runRetention(1.0, nowMs = newest - 1 + 1000) === 0)
+    assert(st.runRetention(1.0, nowMs = newest + 1000) === 2)
+  }
+
+  test("a directory listing taken during flush never shows a non-hidden partial file") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("listed")
+    val dir = java.nio.file.Paths.get(st.bufferDir)
+    Files.createDirectories(dir)
+    val seen = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    var listings = 0
+    val lister = new Thread(() => while (!done.get) {
+      val s = Files.list(dir)
+      try s.forEach { f =>
+        val n = f.getFileName.toString
+        if (!n.startsWith(".") && !n.startsWith("_"))
+          try seen.merge(n, Files.size(f), (a, b) => math.min(a, b))
+          catch { case _: java.nio.file.NoSuchFileException => () }
+      } finally s.close()
+      listings += 1
+    })
+    lister.start()
+    try (0 until 40).foreach(i => st.append(s"""{"i":$i,"pad":"${"x" * 2000}"}"""))
+    finally { done.set(true); lister.join() }
+    assert(listings > 1 && seen.size > 0)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.foreach { case (n, size) =>
+      assert(n.endsWith(".parquet"), s"unexpected visible file $n")
+      assert(size.longValue === Files.size(dir.resolve(n)), s"$n was listed before it was complete")
+    }
+    assert(st.buffer().count() === 40)
+  }
+
+  test("regression guard: appends post no Spark job; a size(1) drain runs no shuffle and no state store") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val sc = spark.sparkContext
+    val tagKey = "graft.test.layer"
+    // (tag, streaming query id, stage ids) per job, and the stages that ran shuffle map tasks
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Seq[Int])]()
+    val shuffleStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        jobs.add((p.map(_.getProperty(tagKey)).orNull, p.map(_.getProperty("sql.streaming.queryId")).orNull,
+          e.stageIds))
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskType == "ShuffleMapTask") shuffleStages.add(e.stageId)
+    }
+    import scala.jdk.CollectionConverters._
+    def tagged[T](tag: String)(body: => T): T = {
+      sc.setLocalProperty(tagKey, tag)
+      try body finally sc.setLocalProperty(tagKey, null)
+    }
+    // listener events arrive in order: once a marker job's start is seen,
+    // every earlier job's start has been too
+    def settle(marker: String): Unit = {
+      tagged(marker)(spark.range(1).count())
+      val deadline = System.currentTimeMillis() + 30000
+      while (!jobs.asScala.exists(_._1 == marker) && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(jobs.asScala.exists(_._1 == marker), "the listener never saw the marker job")
+    }
+    sc.addSparkListener(listener)
     try {
-      // 7 messages on stream s: one full window of 5 emits, 2 stay pending
-      input.addData((0 until 7).map(i => msg("s", i, s"m$i")): _*)
-      q.processAllAvailable()
-      def rows() = spark.table("graft_cwt")
-        .collect().map(r => (r.getString(0), r.getString(2), r.getLong(3)))
-      assert(rows().count(_._1 == "s") === 5, "exactly one full window before the timeout")
-      // advance event time far past oldest-pending(+60s) on ANOTHER stream —
-      // the watermark is global, so s's tail goes stale without s traffic;
-      // watermark updates at batch end, timeout fires on the following batch
-      input.addData(msg("other", 300, "x"))
-      q.processAllAvailable()
-      input.addData(msg("other", 301, "y"))
-      q.processAllAvailable()
-      val sRows = rows().filter(_._1 == "s")
-      assert(sRows.length === 7, s"the 2-message tail must flush as a partial window: ${sRows.toSeq}")
-      val tail = sRows.filter(r => r._2 == "m5" || r._2 == "m6").map(_._3).distinct
-      assert(tail.length === 1, s"tail must land in ONE window: ${sRows.toSeq}")
-      assert(tail.head === 1L, "tail window id follows the full window's")
-      // and the full window ids are untouched by the flush
-      assert(sRows.filter(r => r._2 < "m5").map(_._3).distinct.toSeq === Seq(0L))
-    } finally q.stop()
+      val mb = Minibatch(spark, freshRoot())
+      val st = mb.stream("guarded")
+      val k = 6
+      tagged("append") {
+        (0 until k).foreach(i => st.append(s"""{"i":$i}"""))
+        st.appendAll(Seq("""{"i":"b0"}""", """{"i":"b1"}"""))
+      }
+      settle("marker-1")
+      assert(jobs.asScala.count(_._1 == "append") === 0, "append and appendAll must start no Spark job")
+      val (sink, fn) = collector()
+      val q = mb.streaming("guarded").size(1).emit(fn).start()
+      q.awaitTermination()
+      settle("marker-2")
+      assert(sink.size === k + 2)
+      val drain = jobs.asScala.filter(_._2 == q.id.toString).toSeq
+      val batches = q.recentProgress.count(_.numInputRows > 0)
+      assert(drain.nonEmpty && drain.size <= batches, s"one scan job per micro-batch: $drain")
+      assert(!drain.exists(_._3.exists(shuffleStages.contains)), "a count drain must run no shuffle stage")
+      assert(q.recentProgress.forall(_.stateOperators.isEmpty), "a count drain must keep no state store")
+      assert(!Files.exists(java.nio.file.Paths.get(st.checkpointsDir, "state")))
+    } finally sc.removeSparkListener(listener)
   }
 
   test("observe: streaming gate metrics surface per micro-batch in query progress") {
