@@ -5,7 +5,7 @@ import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOptio
 
 import scala.jdk.CollectionConverters._
 
-import graft.streaming.EmitterRunner.{FlushSentinel, Message}
+import graft.streaming.EmitterRunner.{FlushSentinel, Message, arrivalOrder}
 
 /** What a count-window emitter carries from one micro-batch to the next:
   * the id of the next window, the newest `created` seen (epoch ms), and
@@ -37,9 +37,7 @@ object CountCarry {
     */
   def step(carry: CountCarry, batch: Seq[Message], size: Int,
       maxAgeMs: Option[Long]): (Seq[(Long, Seq[Message])], CountCarry) = {
-    val (sentinels, incoming) = batch
-      .sortBy(m => (m.created.getTime, m.created.getNanos, m.data))
-      .partition(_.data == FlushSentinel)
+    val (sentinels, incoming) = arrivalOrder(batch).partition(_.data == FlushSentinel)
     val newest = batch.foldLeft(carry.newestMs)((t, m) => math.max(t, m.created.getTime))
     val all = carry.pending ++ incoming
     val nFull = all.size / size

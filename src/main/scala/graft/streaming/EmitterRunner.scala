@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** The consumer-side run loop (reference `WindowEmitter.run`,
   * minibatch/window.py:13-227) on Structured Streaming.
@@ -19,26 +19,22 @@ import org.apache.spark.sql.types.LongType
   * window.py:119-124); `persist(keep=True)` → append to the stream's
   * windows table (window.py:126-136).
   *
-  * Count windows run on the driver: each micro-batch is collected, cut by
-  * [[CountCarry.step]] and handed to `emitFn` window by window as local
-  * DataFrames, so a trigger runs one scan job and no shuffle or state
-  * store. The carry (next window id, newest `created`, sub-N remainder)
-  * is one small file per batch under `checkpoints/graft-count/` (format
-  * in [[CountCarry]]); batch `b` starts from the carry of `b - 1`, so a
-  * batch replayed after a failed emit recomputes the same windows. Carry
-  * files older than `spark.sql.streaming.minBatchesToRetain` are pruned.
-  * The driver holds one micro-batch at a time; `maxFilesPerTrigger`
-  * bounds it.
+  * Every strategy windows on the driver: each micro-batch is collected
+  * once (one scan job) and cut by [[CountCarry.step]] (count strategies,
+  * carried across batches as described there) or [[cutTime]]. Each
+  * window, and each `emitEmpty` gap window, reaches `emitFn` in id order
+  * as a local DataFrame with [[MbStream.MessageSchema]] in arrival order,
+  * so emitting starts no Spark job; the kept history and `batchSink` get
+  * one local frame. No cache, no shuffle, no state store. The driver
+  * holds one micro-batch at a time; `maxFilesPerTrigger` bounds it.
   */
 object EmitterRunner {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   case class Message(stream: String, created: Timestamp, data: String)
-  case class WindowedMessage(stream: String, created: Timestamp, data: String, window_id: Long)
 
   implicit val msgEnc: Encoder[Message] = Encoders.product[Message]
-  implicit val winMsgEnc: Encoder[WindowedMessage] = Encoders.product[WindowedMessage]
 
   /** Reserved control message: a CountWindow batch that holds this
     * payload emits its sub-N remainder as a final partial window (see
@@ -88,25 +84,37 @@ object EmitterRunner {
     reader.parquet(stream.bufferDir).as[Message]
   }
 
-  /** Assign window ids for the time strategies (Fixed, Relaxed); count
-    * windows are cut on the driver by [[CountCarry.step]].
+  /** A message's arrival order within a micro-batch: `created`, then payload. */
+  def arrivalOrder(batch: Seq[Message]): Seq[Message] =
+    batch.sortBy(m => (m.created.getTime, m.created.getNanos, m.data))
+
+  /** The [[FixedTimeWindow]] id, Spark's `floor(unix_timestamp(created) / secs)`:
+    * epoch seconds truncate toward zero as in `unix_timestamp`, so a
+    * fraction of a second before 1970 joins the later whole second. */
+  def fixedWindowId(created: Timestamp, secs: Long): Long =
+    Math.floorDiv(MbStream.toMicros(created) / 1000000L, secs)
+
+  /** Cut one micro-batch into time windows, in id order, each window's
+    * messages in arrival order: [[FixedTimeWindow]] by [[fixedWindowId]],
+    * [[RelaxedTimeWindow]] as one window with id `batchId`. Count windows
+    * carry state across batches and are cut by [[CountCarry.step]].
     */
-  def assign(ds: Dataset[Message], strategy: Strategy): Dataset[WindowedMessage] = {
-    val windowId = strategy match {
-      case FixedTimeWindow(secs) => floor(unix_timestamp(col("created")) / secs)
-      // window id assigned per micro-batch in the runner (batchId)
-      case RelaxedTimeWindow => lit(-1L)
-      case count => throw new IllegalArgumentException(s"$count is cut by CountCarry.step, not assign")
+  def cutTime(strategy: Strategy, batch: Seq[Message], batchId: Long): Seq[(Long, Seq[Message])] = {
+    val msgs = arrivalOrder(batch.filter(_.data != FlushSentinel))
+    strategy match {
+      case FixedTimeWindow(secs) => msgs.groupBy(m => fixedWindowId(m.created, secs)).toSeq.sortBy(_._1)
+      case RelaxedTimeWindow => if (msgs.isEmpty) Nil else Seq((batchId, msgs))
+      case count => throw new IllegalArgumentException(s"$count is cut by CountCarry.step")
     }
-    ds.filter(_.data != FlushSentinel).withColumn("window_id", windowId).as[WindowedMessage]
   }
 
-  /** Start the emitter: strategy-assign, then per micro-batch hand each
-    * complete window to `emitFn` (the reference's dill-marshalled emitfn —
-    * here an ordinary closure; JVM serialization is free, marshaller.py is
-    * moot). `keep=true` appends emitted windows to the stream's windows
-    * table (reference persist(keep), window.py:126-136). Failed emitFn →
-    * whole-batch replay from checkpoint (at-least-once, window.py:119-124).
+  /** Start the emitter: per micro-batch, cut the strategy's windows on the
+    * driver and hand each to `emitFn` (the reference's dill-marshalled
+    * emitfn — here an ordinary closure; JVM serialization is free,
+    * marshaller.py is moot). `keep=true` appends emitted windows to the
+    * stream's windows table (reference persist(keep), window.py:126-136).
+    * Failed emitFn → whole-batch replay from checkpoint (at-least-once,
+    * window.py:119-124).
     */
   def start(
       stream: MbStream,
@@ -162,7 +170,32 @@ object EmitterRunner {
     if (count.nonEmpty) CountCarry.requireResumable(stream)
     val spark = stream.spark
     val retain = spark.conf.get("spark.sql.streaming.minBatchesToRetain").toInt
-    def persist(windowed: DataFrame, batchId: Long): Unit = {
+    def gapIds(ids: Seq[Long]): Seq[Long] = strategy match {
+      case FixedTimeWindow(_) if emitEmpty && ids.nonEmpty =>
+        val from =
+          if (lastMaxWindow.get() == Long.MinValue) ids.head
+          else lastMaxWindow.get() + 1
+        val present = ids.toSet
+        // cap the synthesized burst: a long outage can leave millions of
+        // missed intervals; emitting one window per interval in a single
+        // micro-batch would wedge the query. Clamp the range BEFORE
+        // materializing it, then trim exactly.
+        val span = ids.last - from + 1
+        val clampedFrom =
+          if (span > maxGapWindows.toLong + ids.size) {
+            val cf = ids.last - (maxGapWindows.toLong + ids.size) + 1
+            log.warn(s"emitEmpty: gap of ${span - ids.size} missed windows " +
+              s"exceeds maxGapWindows=$maxGapWindows; emitting only the most " +
+              s"recent $maxGapWindows empty windows (ids < $cf collapsed)")
+            cf
+          } else from
+        (clampedFrom to ids.last).filterNot(present).takeRight(maxGapWindows)
+      case _ => Seq.empty
+    }
+    def local(rows: Seq[Row], schema: StructType): DataFrame = spark.createDataFrame(rows.asJava, schema)
+    def persist(windows: Seq[(Long, Seq[Message])], batchId: Long): Unit = {
+      val windowed = local(windows.flatMap { case (id, ms) => ms.map(m => Row(m.stream, m.created, m.data, id)) },
+        MbStream.MessageSchema.add("window_id", LongType, nullable = false))
       if (keep) {
         // replay-safe history: partition by batch_id and overwrite ONLY
         // this batch's partition (dynamic mode), so a failed-then-
@@ -170,7 +203,6 @@ object EmitterRunner {
         // appending duplicates — the same effectively-once trick as
         // IdempotentTableSink, built into the keep path
         windowed.withColumn("batch_id", lit(batchId))
-          .select("stream", "created", "data", "window_id", "batch_id")
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("batch_id")
@@ -184,65 +216,23 @@ object EmitterRunner {
       .trigger(trigger)
       .option("checkpointLocation", stream.checkpointsDir)
       .foreachBatch { (batch: Dataset[Message], batchId: Long) =>
-        count match {
+        val msgs = batch.collect().toSeq
+        val (windows, carry) = count match {
           case Some((n, maxAgeMs)) =>
-            val (windows, carry) =
-              CountCarry.step(CountCarry.before(stream, batchId), batch.collect().toSeq, n, maxAgeMs)
-            val byId = windows.toMap
-            emitAll(windows.map(_._1), id => emitFn(id, spark.createDataFrame(
-              byId(id).map(m => Row(m.stream, m.created, m.data)).asJava, MbStream.MessageSchema)),
-              maxWorkers)
-            if (windows.nonEmpty)
-              persist(spark.createDataFrame(
-                windows.flatMap { case (id, ms) => ms.map(m => Row(m.stream, m.created, m.data, id)) }.asJava,
-                MbStream.MessageSchema.add("window_id", LongType, nullable = false)), batchId)
-            CountCarry.write(stream, batchId, carry, retain)
-          case None =>
-            val assigned = assign(batch, strategy)
-            val df = strategy match {
-              case RelaxedTimeWindow => assigned.toDF().withColumn("window_id", lit(batchId))
-              case _ => assigned.toDF()
-            }
-            val cached = df.cache()
-            try {
-              val ids = cached.select("window_id").distinct()
-                .collect().map(_.getLong(0)).sorted
-              val fillIds: Seq[Long] = strategy match {
-                case FixedTimeWindow(_) if emitEmpty && ids.nonEmpty =>
-                  val from =
-                    if (lastMaxWindow.get() == Long.MinValue) ids.head
-                    else lastMaxWindow.get() + 1
-                  val present = ids.toSet
-                  // cap the synthesized burst: a long outage can leave millions
-                  // of missed intervals; emitting one window (≈ one Spark job)
-                  // per interval in a single micro-batch would wedge the query.
-                  // Clamp the range BEFORE materializing it, then trim exactly.
-                  val span = ids.last - from + 1
-                  val clampedFrom =
-                    if (span > maxGapWindows.toLong + ids.size) {
-                      val cf = ids.last - (maxGapWindows.toLong + ids.size) + 1
-                      log.warn(s"emitEmpty: gap of ${span - ids.size} missed windows " +
-                        s"exceeds maxGapWindows=$maxGapWindows; emitting only the most " +
-                        s"recent $maxGapWindows empty windows (ids < $cf collapsed)")
-                      cf
-                    } else from
-                  (clampedFrom to ids.last).filterNot(present).takeRight(maxGapWindows)
-                case _ => Seq.empty
-              }
-              val emptyWindow = cached.filter(lit(false)).drop("window_id")
-              val presentIds = ids.toSet
-              emitAll((ids ++ fillIds).sorted.toIndexedSeq,
-                id =>
-                  if (presentIds(id))
-                    emitFn(id, cached.filter(col("window_id") === id).drop("window_id"))
-                  else emitFn(id, emptyWindow),
-                maxWorkers)
-              if (ids.nonEmpty) {
-                lastMaxWindow.set(ids.last)
-                persist(cached, batchId)
-              }
-            } finally cached.unpersist()
+            val (ws, c) = CountCarry.step(CountCarry.before(stream, batchId), msgs, n, maxAgeMs)
+            (ws, Some(c))
+          case None => (cutTime(strategy, msgs, batchId), None)
         }
+        val ids = windows.map(_._1)
+        val byId = windows.toMap
+        emitAll((ids ++ gapIds(ids)).sorted, id => emitFn(id, local(
+          byId.getOrElse(id, Nil).map(m => Row(m.stream, m.created, m.data)), MbStream.MessageSchema)),
+          maxWorkers)
+        if (windows.nonEmpty) {
+          lastMaxWindow.set(ids.last)
+          persist(windows, batchId)
+        }
+        carry.foreach(CountCarry.write(stream, batchId, _, retain))
       }
     queryName.fold(writer)(writer.queryName).start()
   }

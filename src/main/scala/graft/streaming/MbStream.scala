@@ -201,19 +201,29 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
     * young-enough rows survives — same ≤2× maxAge guarantee the reference
     * documents (models.py:327-338). At cluster scale this is a partition
     * drop on a date-partitioned buffer, never a row rewrite.
+    *
+    * One sweep is one Spark job: every partition reports the newest
+    * `created` per file it read (`_metadata.file_path`), and the driver
+    * merges them, so a file split across partitions is judged whole.
+    * Files deleted between the listing and the scan are skipped.
     */
   def runRetention(maxAgeSeconds: Double, nowMs: Long = System.currentTimeMillis()): Int = {
     val cutoff = nowMs - (maxAgeSeconds * 1000L).toLong
-    var dropped = 0
-    listParquet(bufferDir).foreach { f =>
-      val maxCreated = spark.read.schema(MessageSchema).parquet(f)
-        .agg(max(col("created"))).collect()(0).getTimestamp(0)
-      if (maxCreated != null && maxCreated.getTime <= cutoff) {
-        Files.deleteIfExists(Paths.get(f))
-        dropped += 1
-      }
+    import spark.implicits._
+    // the directory, not a list of its files: Spark lists more than a few
+    // dozen explicit paths with a job of its own
+    val newest = if (listParquet(bufferDir).isEmpty) Map.empty[String, Long] else
+      spark.read.schema(MessageSchema).option("ignoreMissingFiles", "true").parquet(bufferDir)
+        .select(col("_metadata.file_path"), col("created")).as[(String, Timestamp)]
+        .mapPartitions { rows =>
+          val m = scala.collection.mutable.Map.empty[String, Long]
+          rows.foreach { case (f, ts) => if (ts != null) m(f) = math.max(m.getOrElse(f, Long.MinValue), ts.getTime) }
+          m.iterator
+        }.collect()
+        .groupMapReduce(_._1)(_._2)(math.max)
+    newest.count { case (f, ms) =>
+      ms <= cutoff && { Files.deleteIfExists(Paths.get(new java.net.URI(f))); true }
     }
-    dropped
   }
 
   @volatile private var retentionHandle: Option[AttachedSource] = None

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions.{col, timestamp_seconds}
   * per-key z-score flags over a trailing event-time window, maintained as
   * `flatMapGroupsWithState` state — window FUNCTIONS (the batch RANGE
   * frame) do not exist in Structured Streaming, so the frame becomes
-  * explicit per-key state, exactly like the exact-N CountWindow in
-  * [[EmitterRunner.assign]].
+  * explicit per-key state: a ring of the key's observations inside the
+  * trailing window, carried from one micro-batch to the next.
   *
   * Semantics: events are processed in (ts, value) order within each
   * micro-batch; each event is judged against the observations in

@@ -862,58 +862,187 @@ class StreamingSuite extends AnyFunSuite {
     assert(st.buffer().count() === 40)
   }
 
-  test("regression guard: appends post no Spark job; a size(1) drain runs no shuffle and no state store") {
+  /** A `SparkListener` log, registered for the body of [[around]]: per job
+    * its tag (set by [[tagged]]), its streaming query id and its stage ids,
+    * and the stages that ran shuffle-map tasks. [[settle]] waits until the
+    * listener has seen every job started before it.
+    */
+  private class JobLog {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-    val sc = spark.sparkContext
-    val tagKey = "graft.test.layer"
-    // (tag, streaming query id, stage ids) per job, and the stages that ran shuffle map tasks
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Seq[Int])]()
-    val shuffleStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new SparkListener {
+    import scala.jdk.CollectionConverters._
+    private val sc = spark.sparkContext
+    private val tagKey = "graft.test.layer"
+    private val log = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Seq[Int])]()
+    private val shuffleStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    private val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val p = Option(e.properties)
-        jobs.add((p.map(_.getProperty(tagKey)).orNull, p.map(_.getProperty("sql.streaming.queryId")).orNull,
+        log.add((p.map(_.getProperty(tagKey)).orNull, p.map(_.getProperty("sql.streaming.queryId")).orNull,
           e.stageIds))
       }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         if (e.taskType == "ShuffleMapTask") shuffleStages.add(e.stageId)
     }
-    import scala.jdk.CollectionConverters._
+    def jobs: Seq[(String, String, Seq[Int])] = log.asScala.toSeq
     def tagged[T](tag: String)(body: => T): T = {
       sc.setLocalProperty(tagKey, tag)
       try body finally sc.setLocalProperty(tagKey, null)
     }
+    def shuffled(job: (String, String, Seq[Int])): Boolean = job._3.exists(shuffleStages.contains)
     // listener events arrive in order: once a marker job's start is seen,
     // every earlier job's start has been too
-    def settle(marker: String): Unit = {
+    def settle(): Unit = {
+      val marker = s"marker-${java.util.UUID.randomUUID()}"
       tagged(marker)(spark.range(1).count())
       val deadline = System.currentTimeMillis() + 30000
-      while (!jobs.asScala.exists(_._1 == marker) && System.currentTimeMillis() < deadline) Thread.sleep(20)
-      assert(jobs.asScala.exists(_._1 == marker), "the listener never saw the marker job")
+      while (!jobs.exists(_._1 == marker) && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(jobs.exists(_._1 == marker), "the listener never saw the marker job")
     }
-    sc.addSparkListener(listener)
-    try {
+    def around[T](body: JobLog => T): T = {
+      sc.addSparkListener(listener)
+      try body(this) finally sc.removeSparkListener(listener)
+    }
+  }
+
+  test("regression guard: appends post no Spark job; a size(1) drain runs no shuffle and no state store") {
+    new JobLog().around { jl =>
       val mb = Minibatch(spark, freshRoot())
       val st = mb.stream("guarded")
       val k = 6
-      tagged("append") {
+      jl.tagged("append") {
         (0 until k).foreach(i => st.append(s"""{"i":$i}"""))
         st.appendAll(Seq("""{"i":"b0"}""", """{"i":"b1"}"""))
       }
-      settle("marker-1")
-      assert(jobs.asScala.count(_._1 == "append") === 0, "append and appendAll must start no Spark job")
+      jl.settle()
+      assert(jl.jobs.count(_._1 == "append") === 0, "append and appendAll must start no Spark job")
       val (sink, fn) = collector()
       val q = mb.streaming("guarded").size(1).emit(fn).start()
       q.awaitTermination()
-      settle("marker-2")
+      jl.settle()
       assert(sink.size === k + 2)
-      val drain = jobs.asScala.filter(_._2 == q.id.toString).toSeq
+      val drain = jl.jobs.filter(_._2 == q.id.toString)
       val batches = q.recentProgress.count(_.numInputRows > 0)
       assert(drain.nonEmpty && drain.size <= batches, s"one scan job per micro-batch: $drain")
-      assert(!drain.exists(_._3.exists(shuffleStages.contains)), "a count drain must run no shuffle stage")
+      assert(!drain.exists(jl.shuffled), "a count drain must run no shuffle stage")
       assert(q.recentProgress.forall(_.stateOperators.isEmpty), "a count drain must keep no state store")
       assert(!Files.exists(java.nio.file.Paths.get(st.checkpointsDir, "state")))
-    } finally sc.removeSparkListener(listener)
+    }
+  }
+
+  private def timestampOfMicros(us: Long): Timestamp = {
+    val ts = new Timestamp(Math.floorDiv(us, 1000L))
+    ts.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
+    ts
+  }
+
+  for ((label, relaxed) <- Seq(("an interval(60, relaxed = false) emitEmpty", false),
+      ("a RelaxedTimeWindow", true)); keep <- Seq(false, true)) {
+    test(s"regression guard: $label drain, keep=$keep, emits local frames and runs no shuffle or cache") {
+      new JobLog().around { jl =>
+        val mb = Minibatch(spark, freshRoot())
+        val st = mb.stream(s"timeguard-$relaxed-$keep")
+        val base = 1699999980L // aligned to the 60 s grid
+        // fixed windows base/60 + {0, 2, 3}, so one gap window, base/60 + 1;
+        // two files per micro-batch in the order written, since the file
+        // source takes the oldest modification times first
+        val dir = java.nio.file.Paths.get(st.bufferDir)
+        val mtime0 = System.currentTimeMillis() - 60000L
+        Seq(Seq(0L, 30L), Seq(130L), Seq(200L, 210L), Seq(230L)).zipWithIndex.foreach { case (offs, f) =>
+          val before = if (Files.exists(dir)) Files.list(dir).toArray.toSet else Set.empty[AnyRef]
+          st.writeBufferFile(offs.map(o => (s"""{"f":$f,"o":$o}""", new Timestamp((base + o) * 1000L))))
+          (Files.list(dir).toArray.toSet -- before).foreach(p => Files.setLastModifiedTime(
+            p.asInstanceOf[java.nio.file.Path], java.nio.file.attribute.FileTime.fromMillis(mtime0 + f * 1000L)))
+        }
+        // other suites share the session and may leave their own RDDs cached
+        val sc = spark.sparkContext
+        val cachedBefore = sc.getPersistentRDDs.keySet
+        def cachedSince() = sc.getPersistentRDDs.keySet -- cachedBefore
+        val frames = new java.util.concurrent.ConcurrentLinkedQueue[(Long, org.apache.spark.sql.types.StructType, Int)]()
+        val cachedDuringEmit = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+        val b = mb.streaming(st.name).keep(keep).maxFilesPerTrigger(2)
+        val q = (if (relaxed) b.emitter(EmitterRunner.RelaxedTimeWindow) else b.interval(60, relaxed = false)
+          .emitEmpty(true))
+          .emit { (id, df) =>
+            cachedSince().foreach(cachedDuringEmit.add)
+            frames.add((id, df.schema, jl.tagged("emit")(df.collect()).length))
+          }
+          .withTrigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        q.awaitTermination()
+        jl.settle()
+        import scala.jdk.CollectionConverters._
+        val emitted = frames.asScala.toSeq
+        assert(emitted.map(_._3).sum === 6)
+        emitted.foreach { case (id, schema, _) =>
+          assert(schema === MbStream.MessageSchema, s"window $id reached emitFn as $schema")
+        }
+        if (relaxed) assert(emitted.map(_._1) === Seq(0L, 1L), "one window per micro-batch, id = batch id")
+        else assert(emitted.map(w => (w._1 - base / 60, w._3)) === Seq((0L, 2), (1L, 0), (2L, 1), (3L, 3)),
+          "fixed windows in id order, the gap window empty")
+        val batches = q.recentProgress.count(_.numInputRows > 0)
+        assert(batches === 2)
+        val drain = jl.jobs.filter(_._2 == q.id.toString)
+        assert(drain.size === batches * (if (keep) 2 else 1),
+          s"one scan job per micro-batch${if (keep) ", plus one keep write" else ""}: $drain")
+        assert(!jl.jobs.exists(_._1 == "emit"), "emitFn's collect() must start no Spark job")
+        assert(!drain.exists(jl.shuffled), "a time-window drain must run no shuffle stage")
+        assert(cachedDuringEmit.isEmpty && cachedSince().isEmpty, "a time-window drain must cache nothing")
+        if (keep) assert(st.windows().count() === 6)
+      }
+    }
+  }
+
+  test("fixed window ids keep the SQL boundaries floor(unix_timestamp(created) / secs)") {
+    val micros = Seq(0L, 7000000L, 1699999995000000L, 1699999995999000L, 1699999995999999L,
+      1700000001999000L, 1700000000123456L, 1700000002000001L,
+      -1L, -999L, -1000L, -999999L, -1000000L, -1000001L, -6999999L, -7000000L, -7000001L,
+      -946684799123457L, -946684800000000L)
+    import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      micros.map(us => Row(timestampOfMicros(us))), 1), StructType(Seq(StructField("created", TimestampType))))
+    for (secs <- Seq(1L, 7L, 60L)) {
+      val got = df.selectExpr("created", s"CAST(floor(unix_timestamp(created) / $secs) AS LONG)").collect()
+      assert(got.length === micros.size)
+      got.foreach { r =>
+        assert(EmitterRunner.fixedWindowId(r.getTimestamp(0), secs) === r.getLong(1),
+          s"created ${r.getTimestamp(0)} secs $secs")
+      }
+    }
+    // the emitter cuts by the same id, each window in arrival order
+    val msgs = micros.map(us => EmitterRunner.Message("s", timestampOfMicros(us), s"""{"us":$us}"""))
+    val cut = EmitterRunner.cutTime(EmitterRunner.FixedTimeWindow(7), scala.util.Random.shuffle(msgs), 0L)
+    assert(cut.map(_._1) === cut.map(_._1).sorted.distinct)
+    assert(cut.flatMap(_._2) === msgs.sortBy(m => (m.created.getTime, m.created.getNanos)))
+    cut.foreach { case (id, ms) => ms.foreach(m => assert(EmitterRunner.fixedWindowId(m.created, 7) === id)) }
+  }
+
+  test("a retention sweep over many buffer files is one Spark job and drops what the per-file rule drops") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("swept")
+    val now = 1700000000000L
+    // newest created per file, as seconds before `now`: old, fresh, and
+    // one old-and-fresh file that the newest-row rule keeps
+    val files = Seq(Seq(7200L), Seq(30L), Seq(4000L, 3700L), Seq(10L, 9000L), Seq(3601L), Seq(3599L), Seq(86400L))
+    files.zipWithIndex.foreach { case (ages, f) =>
+      st.writeBufferFile(ages.map(a => (s"""{"f":$f}""", new Timestamp(now - a * 1000L))))
+    }
+    val dir = java.nio.file.Paths.get(st.bufferDir)
+    def listed(): Set[String] = {
+      val s = Files.list(dir)
+      try s.toArray.map(_.toString).filter(_.endsWith(".parquet")).toSet finally s.close()
+    }
+    // the per-file rule: a file goes when its newest row is at least maxAge old
+    val expected = listed().filter { f =>
+      spark.read.parquet(f).selectExpr("max(unix_millis(created))").head().getLong(0) <= now - 3600 * 1000L
+    }
+    assert(expected.size === 4 && listed().size === files.size)
+    new JobLog().around { jl =>
+      val dropped = jl.tagged("sweep")(st.runRetention(3600, nowMs = now))
+      jl.settle()
+      assert(jl.jobs.count(_._1 == "sweep") <= 1, "one sweep, at most one job")
+      assert(dropped === expected.size)
+    }
+    assert((listed() & expected).isEmpty && listed().size === files.size - expected.size)
+    assert(st.buffer().count() === 4)
   }
 
   test("observe: streaming gate metrics surface per micro-batch in query progress") {
