@@ -1,10 +1,17 @@
 #!/usr/bin/env python3
 """A/B runs of one benchmark workload: a parent checkout against a change.
 
-Usage (from anywhere; both directories are full checkouts):
+Usage (from the root of the change's checkout):
 
+    git worktree add ../parent HEAD~1
     python3 scripts/bench_ab.py --parent ../parent --change . \\
         --workload stream.fixed_keep --pairs 10 --seed 901
+
+Make the parent checkout with `git worktree add` (or `git clone`), never
+by copying a checkout: a copy carries `target/`, whose incremental-compile
+state still names the original's class files, so rebuilding the copy can
+delete them. The script first builds both sides and stops, before the
+first pair, unless each has its compiled classes.
 
 Pair i runs `perfbench/run.py --seed <seed + i>` once in each checkout,
 the parent first in even pairs and the change first in odd ones, and
@@ -26,6 +33,7 @@ import sys
 from pathlib import Path
 
 SIDES = ("parent", "change")
+CLASS_PROBE = Path("target/scala-2.13/classes/graft/streaming/Minibatch.class")
 
 
 def run(checkout: Path, workload: str, seed: int, seconds: int, trace: int):
@@ -39,6 +47,18 @@ def run(checkout: Path, workload: str, seed: int, seconds: int, trace: int):
         print(f"  {checkout}: exit {proc.returncode}\n{tail}", file=sys.stderr)
         return None
     return json.loads(lines[-1])
+
+
+def build(checkout: Path) -> None:
+    """Builds the benchmark in a checkout, as its first run would, and exits
+    unless the program's classes are then in place."""
+    proc = subprocess.run([sys.executable, "-c", "import runpy; runpy.run_path('perfbench/run.py')['build']()"],
+                          cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
+    if proc.returncode != 0:
+        sys.exit(f"{checkout}: the benchmark build failed (exit {proc.returncode}):\n{proc.stderr.strip()}")
+    if not (checkout / CLASS_PROBE).is_file():
+        sys.exit(f"{checkout}: built, but {CLASS_PROBE} is missing, so every run there would fail; "
+                 "make the checkout with `git worktree add` or `git clone`, not by copying one")
 
 
 def quartiles(xs):
@@ -67,6 +87,8 @@ def main() -> int:
     spec = json.loads((a.change / "BENCHMARK.json").read_text())
     gated = spec["end_to_end"]
     dirs = {"parent": a.parent.resolve(), "change": a.change.resolve()}
+    for side in SIDES:
+        build(dirs[side])
     results = []  # per pair: {"seed", "first", "parent", "change"}
     ok = True
     for i in range(a.pairs):

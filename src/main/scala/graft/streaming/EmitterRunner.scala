@@ -27,6 +27,10 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * so emitting starts no Spark job; the kept history and `batchSink` get
   * one local frame. No cache, no shuffle, no state store. The driver
   * holds one micro-batch at a time; `maxFilesPerTrigger` bounds it.
+  *
+  * The checkpoint logs a trigger writes (`sources/0`, `offsets`,
+  * `commits`) go through [[LocalCheckpointFileManager]], which [[start]]
+  * registers on the session unless it already names a manager of its own.
   */
 object EmitterRunner {
 
@@ -169,6 +173,8 @@ object EmitterRunner {
     }
     if (count.nonEmpty) CountCarry.requireResumable(stream)
     val spark = stream.spark
+    if (spark.conf.getOption(LocalCheckpointFileManager.ClassKey).isEmpty)
+      spark.conf.set(LocalCheckpointFileManager.ClassKey, classOf[LocalCheckpointFileManager].getName)
     val retain = spark.conf.get("spark.sql.streaming.minBatchesToRetain").toInt
     def gapIds(ids: Seq[Long]): Seq[Long] = strategy match {
       case FixedTimeWindow(_) if emitEmpty && ids.nonEmpty =>
@@ -193,7 +199,7 @@ object EmitterRunner {
       case _ => Seq.empty
     }
     def local(rows: Seq[Row], schema: StructType): DataFrame = spark.createDataFrame(rows.asJava, schema)
-    def persist(windows: Seq[(Long, Seq[Message])], batchId: Long): Unit = {
+    def persist(windows: Seq[(Long, Seq[Message])], batchId: Long): Unit = if (keep || batchSink.nonEmpty) {
       val windowed = local(windows.flatMap { case (id, ms) => ms.map(m => Row(m.stream, m.created, m.data, id)) },
         MbStream.MessageSchema.add("window_id", LongType, nullable = false))
       if (keep) {

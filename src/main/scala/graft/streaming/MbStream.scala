@@ -1,16 +1,15 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.Timestamp
 
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.io.LocalOutputFile
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -73,10 +72,13 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
     * job's scheduling cost each. Its schema is [[BufferParquetSchema]]
     * (`created` as INT64 TIMESTAMP(MICROS, UTC); files written by Spark's
     * own writer, with INT96 `created`, read back identically) and its codec
-    * is the session's `spark.sql.parquet.compression.codec`. The rows go to
-    * a hidden `.part-<uuid>.parquet.tmp` first and are renamed to
+    * is the session's `spark.sql.parquet.compression.codec`. The rows go
+    * through parquet's `LocalOutputFile` to a hidden
+    * `.part-<uuid>.parquet.tmp` and are moved (`ATOMIC_MOVE`) to
     * `part-<uuid>.parquet` once the footer is written, so the emitter's file
-    * source and [[buffer]] never list a partial file.
+    * source and [[buffer]] never list a partial file. No Hadoop filesystem
+    * is involved: no `.crc` sidecar, and no forked `chmod`/`stat` process
+    * where Hadoop's native library is absent.
     */
   def flush(): Unit = synchronized {
     if (pending.nonEmpty) {
@@ -88,26 +90,25 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
   /** Write `rows` as one buffer file, as [[flush]] does. */
   private[graft] def writeBufferFile(rows: Seq[(String, Timestamp)]): Unit = {
     val id = java.util.UUID.randomUUID()
-    val tmp = new HPath(bufferDir, s".part-$id.parquet.tmp")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = tmp.getFileSystem(conf)
+    val dir = Files.createDirectories(Paths.get(bufferDir))
+    val tmp = dir.resolve(s".part-$id.parquet.tmp")
     val codec = spark.conf.get("spark.sql.parquet.compression.codec").toLowerCase match {
       case "none" => CompressionCodecName.UNCOMPRESSED
       case c => CompressionCodecName.fromConf(c)
     }
     try {
-      val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
-        .withConf(conf).withType(BufferParquetSchema).withCompressionCodec(codec).build()
+      val writer = ExampleParquetWriter.builder(new LocalOutputFile(tmp))
+        .withConf(spark.sparkContext.hadoopConfiguration).withType(BufferParquetSchema)
+        .withCompressionCodec(codec).build()
       val groups = new SimpleGroupFactory(BufferParquetSchema)
       try rows.foreach { case (d, ts) =>
         writer.write(groups.newGroup().append("stream", name)
           .append("created", toMicros(ts)).append("data", d))
       } finally writer.close()
+      Files.move(tmp, dir.resolve(s"part-$id.parquet"), StandardCopyOption.ATOMIC_MOVE)
     } catch {
-      case e: Throwable => fs.delete(tmp, false); throw e
+      case e: Throwable => Files.deleteIfExists(tmp); throw e
     }
-    if (!fs.rename(tmp, new HPath(bufferDir, s"part-$id.parquet")))
-      throw new java.io.IOException(s"stream '$name': could not rename $tmp into $bufferDir")
   }
 
   /** Filtered read of the buffer (reference `stream.buffer()`, models.py:282-284). */

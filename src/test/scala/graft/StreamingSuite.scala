@@ -929,6 +929,93 @@ class StreamingSuite extends AnyFunSuite {
     }
   }
 
+  test("regression guard: appends and a size(1) drain leave no .crc sidecar in the buffer or the checkpoint logs") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("sidecars")
+    (0 until 4).foreach(i => st.append(s"""{"i":$i}"""))
+    st.appendAll(Seq("""{"i":"b0"}""", """{"i":"b1"}"""))
+    val (sink, fn) = collector()
+    mb.streaming("sidecars").size(1).emit(fn).run()
+    assert(sink.size === 6)
+    val dirs = java.nio.file.Paths.get(st.bufferDir) +:
+      Seq("offsets", "commits", "sources").map(java.nio.file.Paths.get(st.checkpointsDir, _))
+    val crcs = dirs.flatMap { d =>
+      assert(Files.isDirectory(d), s"$d must exist after a drain")
+      val s = Files.walk(d)
+      try s.toArray.toSeq.map(_.toString).filter(_.endsWith(".crc")) finally s.close()
+    }
+    assert(crcs.isEmpty, s"checksum sidecars: $crcs")
+  }
+
+  private val SparkDefaultManager =
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+
+  /** Run `body` with the session's checkpoint manager class set to `cls`
+    * (None: unset), and check that the emitter left a set class untouched
+    * and registered the NIO manager in place of an unset one. */
+  private def underManager[T](cls: Option[String])(body: => T): T = {
+    val key = LocalCheckpointFileManager.ClassKey
+    val before = spark.conf.getOption(key)
+    cls.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    try {
+      val r = body
+      assert(spark.conf.getOption(key) ===
+        Some(cls.getOrElse(classOf[LocalCheckpointFileManager].getName)))
+      r
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** The batches whose commit-log entry has a `.crc` sidecar: those Spark's
+    * default manager wrote. */
+  private def checksummedCommits(st: MbStream): Seq[Long] = {
+    val s = Files.list(java.nio.file.Paths.get(st.checkpointsDir, "commits"))
+    try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+      .collect { case n if n.endsWith(".crc") => n.stripPrefix(".").stripSuffix(".crc").toLong }.sorted
+    finally s.close()
+  }
+
+  for ((label, first, second) <- Seq(("Spark's default manager resumes under the NIO one", Some(SparkDefaultManager), None),
+      ("the NIO manager resumes under Spark's default one", None, Some(SparkDefaultManager)))) {
+    test(s"restart: a size(2) checkpoint of $label: exactly once, ids and carry continue") {
+      val mb = Minibatch(spark, freshRoot())
+      val st = mb.stream("restart-count")
+      st.appendAll((0 until 5).map(i => s"""{"i":$i}"""))
+      val (sink1, fn1) = collector()
+      underManager(first)(mb.streaming(st.name).size(2).emit(fn1).run())
+      assert(sink1.map(_._1) === Seq(0L, 1L))
+      st.appendAll((5 until 8).map(i => s"""{"i":$i}"""))
+      val (sink2, fn2) = collector()
+      underManager(second)(mb.streaming(st.name).size(2).emit(fn2).run())
+      // the carried {"i":4} opens window 2
+      assert(sink2.toSeq === Seq(2L -> Seq("""{"i":4}""", """{"i":5}"""), 3L -> Seq("""{"i":6}""", """{"i":7}""")))
+      val all = (sink1 ++ sink2).flatMap(_._2)
+      assert(all.sorted === (0 until 8).map(i => s"""{"i":$i}""").sorted)
+      assert(checksummedCommits(st) === Seq(if (first.isDefined) 0L else 1L))
+    }
+
+    test(s"restart: an interval(60, relaxed = false).keep(true) checkpoint of $label: exactly once, ids and history continue") {
+      val mb = Minibatch(spark, freshRoot())
+      val st = mb.stream("restart-fixed")
+      val base = 1699999980L // aligned to the 60 s grid
+      def write(offs: Long*): Unit =
+        st.writeBufferFile(offs.map(o => (s"""{"o":$o}""", new Timestamp((base + o) * 1000L))))
+      def drain(cls: Option[String]): Seq[(Long, Seq[String])] = {
+        val (sink, fn) = collector()
+        underManager(cls)(mb.streaming(st.name).interval(60, relaxed = false).keep(true).emitEmpty(true)
+          .emit(fn).run())
+        sink.toSeq.map { case (id, rows) => (id - base / 60, rows) }
+      }
+      write(0L, 70L)
+      assert(drain(first) === Seq(0L -> Seq("""{"o":0}"""), 1L -> Seq("""{"o":70}""")))
+      write(190L, 200L)
+      // the gap window 2 comes from the high-water mark read back from the kept history
+      assert(drain(second) === Seq(2L -> Nil, 3L -> Seq("""{"o":190}""", """{"o":200}""")))
+      assert(st.windows().selectExpr("window_id - " + base / 60).collect().map(_.getLong(0)).sorted.toSeq ===
+        Seq(0L, 1L, 3L, 3L))
+      assert(checksummedCommits(st) === Seq(if (first.isDefined) 0L else 1L))
+    }
+  }
+
   private def timestampOfMicros(us: Long): Timestamp = {
     val ts = new Timestamp(Math.floorDiv(us, 1000L))
     ts.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
