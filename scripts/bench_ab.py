@@ -22,8 +22,10 @@ median gap against the parent's quartile spread. The gain verdict follows
 the rule: the change wins at least nine tenths of all pairs, and the median
 gap is in the better direction and larger than the parent's quartile
 spread. The regression verdict compares the median change with the
-metric's bound. Exit status is 0 unless a run failed or was not correct.
-Standard library only.
+metric's bound. With `--trace 1` it also prints both sides' medians of
+every `per_layer` metric of BENCHMARK.json that both sides report, which
+shows the layer a gain or a loss comes from. Exit status is 0 unless a
+run failed or was not correct. Standard library only.
 """
 import argparse
 import json
@@ -72,6 +74,11 @@ def fmt(x: float) -> str:
     return f"{x:.4g}"
 
 
+def values(pairs, name: str):
+    """Each side's values of one metric, over the pairs whose runs report it."""
+    return {s: [p[s]["metrics"][name]["value"] for p in pairs if name in p[s]["metrics"]] for s in SIDES}
+
+
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--parent", required=True, type=Path, help="checkout of the parent commit")
@@ -116,7 +123,7 @@ def main() -> int:
     print(f"\n{a.workload}: {len(done)} complete pairs of {a.pairs}, seeds {a.seed}..{a.seed + a.pairs - 1}")
     for m in gated:
         name, lower = m["name"], m["better"] == "lower"
-        vals = {s: [p[s]["metrics"][name]["value"] for p in done if name in p[s]["metrics"]] for s in SIDES}
+        vals = values(done, name)
         if not vals["parent"] or len(vals["parent"]) != len(vals["change"]):
             print(f"  {name}: not reported by every run")
             continue
@@ -134,6 +141,13 @@ def main() -> int:
         print(f"    change wins {wins}/{len(done)} (loses {losses}); gap {fmt(gap)} ({rel:+.1%}) "
               f"vs parent spread {fmt(spread)}: {'gain' if gain else 'no gain'}; "
               f"{'WORSE than its bound' if worse else 'within its bound'}")
+    if a.trace:
+        print("  per-layer medians, parent -> change:")
+        for m in spec.get("per_layer", []):
+            vals = values(done, m["name"])
+            if vals["parent"] and vals["change"]:
+                print(f"    {m['name']} [{m['unit']}, {m['better']} is better]: "
+                      f"{fmt(statistics.median(vals['parent']))} -> {fmt(statistics.median(vals['change']))}")
     return 0 if ok and len(done) == a.pairs else 1
 
 

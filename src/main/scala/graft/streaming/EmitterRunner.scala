@@ -1,10 +1,18 @@
 package graft.streaming
 
+import java.net.URI
+import java.nio.file.{Path, Paths}
 import java.sql.Timestamp
+import java.util.UUID
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.streaming.checkpointing.OffsetSeqLog
+import org.apache.spark.sql.execution.streaming.runtime.{FileStreamSourceLog, FileStreamSourceOffset, SerializedOffset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StructType}
@@ -19,14 +27,21 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * window.py:119-124); `persist(keep=True)` → append to the stream's
   * windows table (window.py:126-136).
   *
-  * Every strategy windows on the driver: each micro-batch is collected
-  * once (one scan job) and cut by [[CountCarry.step]] (count strategies,
-  * carried across batches as described there) or [[cutTime]]. Each
-  * window, and each `emitEmpty` gap window, reaches `emitFn` in id order
-  * as a local DataFrame with [[MbStream.MessageSchema]] in arrival order,
-  * so emitting starts no Spark job; the kept history and `batchSink` get
-  * one local frame. No cache, no shuffle, no state store. The driver
-  * holds one micro-batch at a time; `maxFilesPerTrigger` bounds it.
+  * Every strategy windows on the driver: each micro-batch is read there
+  * (see [[BatchFiles]]: its buffer files come from the query's own
+  * checkpoint logs and are decoded by [[MbStream.readBufferFile]], so a
+  * trigger runs no Spark job) and cut by [[CountCarry.step]] (count
+  * strategies, carried across batches as described there) or [[cutTime]].
+  * Each window, and each `emitEmpty` gap window, reaches `emitFn` in id
+  * order as a local DataFrame with [[MbStream.MessageSchema]] in arrival
+  * order, so emitting starts no Spark job either; only `keep(true)` runs
+  * one, the kept-history write. No cache, no shuffle, no state store. The
+  * driver holds one micro-batch at a time; `maxFilesPerTrigger` bounds it.
+  *
+  * Spark still plans the file-source scan of each micro-batch for
+  * `foreachBatch`, but never executes it, so `lastProgress.numInputRows`
+  * of a graft emitter reads 0; [[lastInputRows]] holds the engine's own
+  * count, which [[Minibatch.status]] reports.
   *
   * The checkpoint logs a trigger writes (`sources/0`, `offsets`,
   * `commits`) go through [[LocalCheckpointFileManager]], which [[start]]
@@ -37,8 +52,6 @@ object EmitterRunner {
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   case class Message(stream: String, created: Timestamp, data: String)
-
-  implicit val msgEnc: Encoder[Message] = Encoders.product[Message]
 
   /** Reserved control message: a CountWindow batch that holds this
     * payload emits its sub-N remainder as a final partial window (see
@@ -78,15 +91,51 @@ object EmitterRunner {
     * producer-side Batcher size / poll-batch tuning, SURVEY §1.3: Spark's
     * micro-batch sizing knob subsumes it).
     */
-  def readBuffer(stream: MbStream, maxFilesPerTrigger: Option[Int] = None): Dataset[Message] = {
+  def readBuffer(stream: MbStream, maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val reader = stream.spark.readStream
       .schema(MbStream.MessageSchema)
       // tolerate the retention loop deleting aged files under a running
       // emitter (same concurrency the reference's autoclear thread has)
       .option("ignoreMissingFiles", "true")
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(stream.bufferDir).as[Message]
+    reader.parquet(stream.bufferDir)
   }
+
+  /** The buffer files of each micro-batch of an emitter, read from its own
+    * checkpoint logs: batch `b` holds the file-source log entries in
+    * `(logOffset(b - 1), logOffset(b)]`, the offsets being those of
+    * `checkpoints/offsets`, which is exactly the set `FileStreamSource`
+    * scans for it. Every `compactInterval`-th source-log batch (10 by
+    * default) keeps its entries only in `<batch>.compact`, which lists
+    * every file the source has seen, so reading such a batch grows with
+    * the stream's history, as Spark's own compaction write does.
+    */
+  private final class BatchFiles(stream: MbStream) {
+    private val offsets = new OffsetSeqLog(stream.spark, s"${stream.checkpointsDir}/offsets")
+    private val sources =
+      new FileStreamSourceLog(FileStreamSourceLog.VERSION, stream.spark, s"${stream.checkpointsDir}/sources/0")
+
+    private def logOffset(batchId: Long): Long =
+      if (batchId < 0) -1L
+      else offsets.get(batchId)
+        .getOrElse(throw new IllegalStateException(s"stream '${stream.name}': no offsets for batch $batchId"))
+        .offsets.headOption.flatten.fold(-1L)(o => FileStreamSourceOffset(SerializedOffset(o.json)).logOffset)
+
+    def apply(batchId: Long): Seq[Path] = {
+      val (from, to) = (logOffset(batchId - 1), logOffset(batchId))
+      if (to <= from) Nil
+      else sources.get(Some(from + 1), Some(to)).toSeq.flatMap(_._2).map(e => Paths.get(new URI(e.path)))
+    }
+  }
+
+  // keyed by query id, which the checkpoint keeps: one entry per checkpoint,
+  // replaced when its emitter restarts
+  private val inputRows = new ConcurrentHashMap[UUID, AtomicLong]()
+
+  /** The rows an emitter started by [[start]] read in its latest
+    * micro-batch (flush sentinels included), or None before its first. */
+  def lastInputRows(query: StreamingQuery): Option[Long] =
+    Option(inputRows.get(query.id)).map(_.get).filter(_ >= 0)
 
   /** A message's arrival order within a micro-batch: `created`, then payload. */
   def arrivalOrder(batch: Seq[Message]): Seq[Message] =
@@ -176,6 +225,10 @@ object EmitterRunner {
     if (spark.conf.getOption(LocalCheckpointFileManager.ClassKey).isEmpty)
       spark.conf.set(LocalCheckpointFileManager.ClassKey, classOf[LocalCheckpointFileManager].getName)
     val retain = spark.conf.get("spark.sql.streaming.minBatchesToRetain").toInt
+    // the logs open on the query's thread, after Spark has set the checkpoint up
+    lazy val files = new BatchFiles(stream)
+    val readOpts = HadoopReadOptions.builder(spark.sparkContext.hadoopConfiguration).build()
+    val rowsRead = new AtomicLong(-1L)
     def gapIds(ids: Seq[Long]): Seq[Long] = strategy match {
       case FixedTimeWindow(_) if emitEmpty && ids.nonEmpty =>
         val from =
@@ -221,8 +274,9 @@ object EmitterRunner {
     val writer = readBuffer(stream, maxFilesPerTrigger).writeStream
       .trigger(trigger)
       .option("checkpointLocation", stream.checkpointsDir)
-      .foreachBatch { (batch: Dataset[Message], batchId: Long) =>
-        val msgs = batch.collect().toSeq
+      .foreachBatch { (_: DataFrame, batchId: Long) =>
+        val msgs = files(batchId).flatMap(MbStream.readBufferFile(_, readOpts))
+        rowsRead.set(msgs.size)
         val (windows, carry) = count match {
           case Some((n, maxAgeMs)) =>
             val (ws, c) = CountCarry.step(CountCarry.before(stream, batchId), msgs, n, maxAgeMs)
@@ -240,7 +294,9 @@ object EmitterRunner {
         }
         carry.foreach(CountCarry.write(stream, batchId, _, retain))
       }
-    queryName.fold(writer)(writer.queryName).start()
+    val query = queryName.fold(writer)(writer.queryName).start()
+    inputRows.put(query.id, rowsRead)
+    query
   }
 
   /** Emit windows of one micro-batch, optionally in parallel (the

@@ -6,11 +6,16 @@ import java.sql.Timestamp
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.io.LocalOutputFile
-import org.apache.parquet.schema.MessageTypeParser
+import org.apache.parquet.io.{ColumnIOFactory, LocalInputFile, LocalOutputFile}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageTypeParser, PrimitiveType}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -87,8 +92,8 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
     }
   }
 
-  /** Write `rows` as one buffer file, as [[flush]] does. */
-  private[graft] def writeBufferFile(rows: Seq[(String, Timestamp)]): Unit = {
+  /** Write `rows` as one buffer file, as [[flush]] does; the file's path. */
+  private[graft] def writeBufferFile(rows: Seq[(String, Timestamp)]): java.nio.file.Path = {
     val id = java.util.UUID.randomUUID()
     val dir = Files.createDirectories(Paths.get(bufferDir))
     val tmp = dir.resolve(s".part-$id.parquet.tmp")
@@ -400,6 +405,55 @@ object MbStream {
       |  required int64 created (TIMESTAMP(MICROS,true));
       |  required binary data (STRING);
       |}""".stripMargin)
+
+  /** The Julian day number of 1970-01-01, the epoch of INT96 timestamps' day field. */
+  private val JulianDayOfEpoch = 2440588
+
+  /** Read one buffer file on the calling thread, without a Spark job:
+    * every row as a [[EmitterRunner.Message]], in file order. `created` may
+    * be INT64 `TIMESTAMP(MICROS)`, as [[MbStream.flush]] writes it, or
+    * Spark's INT96, as buffers written by Spark's own writer hold it.
+    * `opts` carries the Hadoop configuration the codecs read: build it once
+    * per reader, since a fresh `Configuration` re-parses Hadoop's XML
+    * defaults. No rows when the file is gone, as a scan with
+    * `ignoreMissingFiles` skips it.
+    */
+  private[streaming] def readBufferFile(file: java.nio.file.Path, opts: ParquetReadOptions): Seq[EmitterRunner.Message] = {
+    val opened =
+      try Some(ParquetFileReader.open(new LocalInputFile(file), opts))
+      catch { case _: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException => None }
+    opened.fold(Seq.empty[EmitterRunner.Message]) { reader =>
+      try {
+        val schema = reader.getFooter.getFileMetaData.getSchema
+        val io = new ColumnIOFactory().getColumnIO(schema)
+        val Seq(stream, created, data) = Seq("stream", "created", "data").map(schema.getFieldIndex)
+        val micros = createdMicros(file, schema.getType(created).asPrimitiveType, created)
+        val rows = ArrayBuffer.empty[EmitterRunner.Message]
+        var pages = reader.readNextRowGroup()
+        while (pages != null) {
+          val records = io.getRecordReader(pages, new GroupRecordConverter(schema))
+          for (_ <- 0L until pages.getRowCount) {
+            val g = records.read()
+            rows += EmitterRunner.Message(g.getString(stream, 0), fromMicros(micros(g)), g.getString(data, 0))
+          }
+          pages = reader.readNextRowGroup()
+        }
+        rows.toSeq
+      } finally reader.close()
+    }
+  }
+
+  /** Epoch µs of the `created` field (index `field`, type `t`) of a row. */
+  private def createdMicros(file: java.nio.file.Path, t: PrimitiveType, field: Int): Group => Long =
+    (t.getPrimitiveTypeName, t.getLogicalTypeAnnotation) match {
+      case (PrimitiveTypeName.INT96, _) => g =>
+        val b = g.getInt96(field, 0).toByteBuffer.order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        val nanosOfDay = b.getLong
+        (b.getInt - JulianDayOfEpoch) * 86400000000L + nanosOfDay / 1000L
+      case (PrimitiveTypeName.INT64, ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation)
+          if ts.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS => g => g.getLong(field, 0)
+      case _ => throw new IllegalArgumentException(s"$file: created is $t, not INT96 or INT64 TIMESTAMP(MICROS)")
+    }
 
   /** Mirrors Window `{stream, created, data, query}` (models.py:116-136),
     * one row per message with its window id (relational, not list-of-dicts).

@@ -38,7 +38,10 @@ final case class Minibatch(spark: SparkSession, root: String) {
   /** Emitter status by stream name — the engine-level analogue of the
     * reference's StreamingApp `/status` watcher (contrib/apps/omegaml.py:
     * 8-136), backed by `StreamingQuery.status`/`lastProgress` instead of a
-    * Flask endpoint. Emitters started through [[EmitterBuilder.start]] are
+    * Flask endpoint. `numInputRows` is the emitter's own count of the rows
+    * its latest micro-batch read ([[EmitterRunner.lastInputRows]]): Spark's
+    * `lastProgress.numInputRows` reads 0, as the emitter never executes
+    * Spark's scan. Emitters started through [[EmitterBuilder.start]] are
     * named `graft-emitter-<stream>` so they are discoverable here.
     */
   def status(name: String): EmitterStatus = {
@@ -50,7 +53,7 @@ final case class Minibatch(spark: SparkSession, root: String) {
       case Some(q) =>
         val lp = Option(q.lastProgress)
         EmitterStatus(name, running = q.isActive, queryId = Some(q.id.toString),
-          lastBatchId = lp.map(_.batchId), numInputRows = lp.map(_.numInputRows),
+          lastBatchId = lp.map(_.batchId), numInputRows = EmitterRunner.lastInputRows(q),
           message = q.status.message, streamStatus = lifecycle)
       case None =>
         EmitterStatus(name, running = false, None, None, None,

@@ -921,8 +921,8 @@ class StreamingSuite extends AnyFunSuite {
       jl.settle()
       assert(sink.size === k + 2)
       val drain = jl.jobs.filter(_._2 == q.id.toString)
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      assert(drain.nonEmpty && drain.size <= batches, s"one scan job per micro-batch: $drain")
+      val batches = q.recentProgress.count(_.durationMs.containsKey("addBatch"))
+      assert(batches > 0 && drain.isEmpty, s"a drain reads its micro-batches without a Spark job: $drain")
       assert(!drain.exists(jl.shuffled), "a count drain must run no shuffle stage")
       assert(q.recentProgress.forall(_.stateOperators.isEmpty), "a count drain must keep no state store")
       assert(!Files.exists(java.nio.file.Paths.get(st.checkpointsDir, "state")))
@@ -1016,6 +1016,85 @@ class StreamingSuite extends AnyFunSuite {
     }
   }
 
+  /** Write one buffer file per element of `files`, each with a modification
+    * time a second after the previous one's, so the file source takes them
+    * in this order (oldest first); the paths written, in order. */
+  private def writeInOrder(st: MbStream, files: Seq[Seq[(String, Timestamp)]]): Seq[java.nio.file.Path] = {
+    val mtime0 = System.currentTimeMillis() - 60000L
+    files.zipWithIndex.map { case (rows, f) =>
+      Files.setLastModifiedTime(st.writeBufferFile(rows), java.nio.file.attribute.FileTime.fromMillis(mtime0 + f * 1000L))
+    }
+  }
+
+  test("a maxFilesPerTrigger(1) size(2) drain across the source log's .compact batches resumes exactly once") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("compacted")
+    val n = 24
+    val now = new Timestamp(System.currentTimeMillis())
+    writeInOrder(st, (0 until n).map(i => Seq((s"""{"i":$i}""", now))))
+    // window w holds messages 2w and 2w + 1, emitted by micro-batch 2w + 1;
+    // the stop interrupts window 6's emit before it records, in batch 13
+    val stopAt = 6L
+    val reached = new java.util.concurrent.CountDownLatch(1)
+    val (sink1, fn1) = collector()
+    val q = mb.streaming(st.name).size(2).maxFilesPerTrigger(1)
+      .withTrigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+      .emit { (id, df) =>
+        if (id == stopAt) { reached.countDown(); Thread.sleep(600000L) }
+        fn1(id, df)
+      }.start()
+    try assert(reached.await(120, java.util.concurrent.TimeUnit.SECONDS), "the emitter never reached window 6")
+    finally q.stop()
+    assert(sink1.map(_._1) === (0L until stopAt))
+    val sources = java.nio.file.Paths.get(st.checkpointsDir, "sources", "0")
+    assert(Files.exists(sources.resolve("9.compact")) && !Files.exists(sources.resolve("19.compact")))
+    val (sink2, fn2) = collector()
+    mb.streaming(st.name).size(2).maxFilesPerTrigger(1).emit(fn2).run()
+    assert(Files.exists(sources.resolve("19.compact")))
+    assert((sink1 ++ sink2).toSeq === (0 until n / 2).map(w =>
+      w.toLong -> Seq(s"""{"i":${2 * w}}""", s"""{"i":${2 * w + 1}}""")))
+  }
+
+  test("a buffer file deleted before its micro-batch reads it is skipped; later files still emit") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("vanishing")
+    val now = new Timestamp(System.currentTimeMillis())
+    val files = writeInOrder(st, (0 until 3).map(i => Seq((s"""{"i":$i}""", now))))
+    val (sink, fn) = collector()
+    mb.streaming(st.name).size(1).maxFilesPerTrigger(1).emit { (id, df) =>
+      if (id == 0) Files.delete(files(1))
+      fn(id, df)
+    }.run()
+    // the source had listed the file before it went, so batch 1 names it
+    val batch1 = java.nio.file.Paths.get(st.checkpointsDir, "sources", "0", "1")
+    assert(new String(Files.readAllBytes(batch1), "UTF-8").contains(files(1).getFileName.toString))
+    assert(sink.toSeq === Seq(0L -> Seq("""{"i":0}"""), 1L -> Seq("""{"i":2}""")))
+  }
+
+  test("status reports the rows the emitter read in its latest micro-batch") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("counted")
+    val k = 5
+    st.appendAll((0 until k).map(i => s"""{"i":$i}"""))
+    val emitted = new java.util.concurrent.atomic.AtomicInteger()
+    val q = mb.streaming(st.name).size(1)
+      .withTrigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(100))
+      .emit((_, df) => { emitted.addAndGet(df.collect().length); () }).start()
+    try {
+      val deadline = System.currentTimeMillis() + 60000
+      while (emitted.get < k && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(emitted.get === k)
+      val s = mb.status(st.name)
+      assert(s.running && s.numInputRows === Some(k.toLong))
+      val srv = new StatusServer(mb, port = 0)
+      try {
+        val conn = java.net.URI.create(s"http://127.0.0.1:${srv.boundPort}/status/${st.name}").toURL.openStream()
+        val body = try new String(conn.readAllBytes(), "UTF-8") finally conn.close()
+        assert(body.contains(s""""num_input_rows":$k"""), body)
+      } finally srv.close()
+    } finally q.stop()
+  }
+
   private def timestampOfMicros(us: Long): Timestamp = {
     val ts = new Timestamp(Math.floorDiv(us, 1000L))
     ts.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
@@ -1030,16 +1109,10 @@ class StreamingSuite extends AnyFunSuite {
         val st = mb.stream(s"timeguard-$relaxed-$keep")
         val base = 1699999980L // aligned to the 60 s grid
         // fixed windows base/60 + {0, 2, 3}, so one gap window, base/60 + 1;
-        // two files per micro-batch in the order written, since the file
-        // source takes the oldest modification times first
-        val dir = java.nio.file.Paths.get(st.bufferDir)
-        val mtime0 = System.currentTimeMillis() - 60000L
-        Seq(Seq(0L, 30L), Seq(130L), Seq(200L, 210L), Seq(230L)).zipWithIndex.foreach { case (offs, f) =>
-          val before = if (Files.exists(dir)) Files.list(dir).toArray.toSet else Set.empty[AnyRef]
-          st.writeBufferFile(offs.map(o => (s"""{"f":$f,"o":$o}""", new Timestamp((base + o) * 1000L))))
-          (Files.list(dir).toArray.toSet -- before).foreach(p => Files.setLastModifiedTime(
-            p.asInstanceOf[java.nio.file.Path], java.nio.file.attribute.FileTime.fromMillis(mtime0 + f * 1000L)))
-        }
+        // two files per micro-batch in the order written
+        writeInOrder(st, Seq(Seq(0L, 30L), Seq(130L), Seq(200L, 210L), Seq(230L)).zipWithIndex.map { case (offs, f) =>
+          offs.map(o => (s"""{"f":$f,"o":$o}""", new Timestamp((base + o) * 1000L)))
+        })
         // other suites share the session and may leave their own RDDs cached
         val sc = spark.sparkContext
         val cachedBefore = sc.getPersistentRDDs.keySet
@@ -1065,11 +1138,11 @@ class StreamingSuite extends AnyFunSuite {
         if (relaxed) assert(emitted.map(_._1) === Seq(0L, 1L), "one window per micro-batch, id = batch id")
         else assert(emitted.map(w => (w._1 - base / 60, w._3)) === Seq((0L, 2), (1L, 0), (2L, 1), (3L, 3)),
           "fixed windows in id order, the gap window empty")
-        val batches = q.recentProgress.count(_.numInputRows > 0)
+        val batches = q.recentProgress.count(_.durationMs.containsKey("addBatch"))
         assert(batches === 2)
         val drain = jl.jobs.filter(_._2 == q.id.toString)
-        assert(drain.size === batches * (if (keep) 2 else 1),
-          s"one scan job per micro-batch${if (keep) ", plus one keep write" else ""}: $drain")
+        assert(drain.size === (if (keep) batches else 0),
+          s"no Spark job per micro-batch${if (keep) " but one keep write" else ""}: $drain")
         assert(!jl.jobs.exists(_._1 == "emit"), "emitFn's collect() must start no Spark job")
         assert(!drain.exists(jl.shuffled), "a time-window drain must run no shuffle stage")
         assert(cachedDuringEmit.isEmpty && cachedSince().isEmpty, "a time-window drain must cache nothing")
