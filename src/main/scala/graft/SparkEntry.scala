@@ -1,19 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.Tables
-import graft.operators.{Analytics, Dedup, Graph, Guards, Incremental, Linkage, Multimodal, Pipeline, Profile, QualityModel, Relational, Similarity, TextAnalysis, Timeseries, Web, WindowAssign}
-import graft.functions.{FrequentItems, VectorFunctions}
+import graft.queries.Registry
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Batch query contract — see SURVEY.md §7.
   *
   * Every `queries` entry is a deterministic, order-stable batch query over
   * the driver's parquet tables; every SQL-expressible one has a matching
-  * DuckDB `oracleSql` with IDENTICAL output column names. Cross-engine
-  * determinism rules used throughout:
+  * DuckDB `oracleSql` with IDENTICAL output column names. Both maps derive
+  * from the per-family `QuerySpec` declarations in `graft.queries`.
+  * Cross-engine determinism rules used throughout:
   *   - aggregated doubles are `round(_, 2|4)` on BOTH sides so float
   *     summation order can't flip the hash compare;
   *   - timestamp bucketing is integer epoch-seconds math on BOTH sides
@@ -31,8179 +28,8 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q_multi_join")(spark, "/root/testdata/sf0.001")
 
-  private def lineitem(s: SparkSession, d: String)   = Tables.lineitem(s, d)
-  private def orders(s: SparkSession, d: String)     = Tables.orders(s, d)
-  private def customer(s: SparkSession, d: String)   = Tables.customer(s, d)
-  private def part(s: SparkSession, d: String)       = Tables.part(s, d)
-  private def supplier(s: SparkSession, d: String)   = Tables.supplier(s, d)
-  private def nation(s: SparkSession, d: String)     = Tables.nation(s, d)
-  private def region(s: SparkSession, d: String)     = Tables.region(s, d)
-  private def events(s: SparkSession, d: String)     = Tables.events(s, d)
-  private def documents(s: SparkSession, d: String)  = Tables.documents(s, d)
-  private def embeddings(s: SparkSession, d: String) = Tables.embeddings(s, d)
+  def queries: Map[String, (SparkSession, String) => DataFrame] = Registry.all.queries
 
-  /** LONG-coded trade-graph vertex ids (r22, guide §2.3 — narrower keys):
-    * supplier k ↦ 2k, customer k ↦ 2k+1 — a bijection into disjoint even/
-    * odd longs, so the coded graph is isomorphic to the "s<k>"/"c<k>"
-    * string graph and every id-value-independent computation over it
-    * (rank sums, hop counts, min-costs, degrees) produces identical
-    * per-vertex numbers while the distinct/join/agg exchanges carry and
-    * hash 8-byte longs instead of strings. [[tradeVertexStr]] restores
-    * the public string form at output. NOT used where the algorithm
-    * compares vertex ids themselves across the s/c namespaces (e.g.
-    * graph_components' min-label winner is defined on the string order).
-    */
-  private def supplierVertex(k: Column): Column = k * 2
-  private def customerVertex(k: Column): Column = k * 2 + 1
-  private def tradeVertexStr(v: Column): Column =
-    concat(when(v.bitwiseAND(lit(1L)) === 0L, lit("s")).otherwise(lit("c")),
-      shiftright(v, 1).cast("string"))
-
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ── minibatch emitter strategies, batch-expressible forms ─────────────
-
-    // A6 CountWindow — ORACLE SHAPE: total arrival order forces a global
-    // single-partition sort. The front doors at scale are
-    // count_window_per_key (sort shards by key) and the streaming
-    // CountWindow (EmitterBuilder.size — per-stream carry, never sorts
-    // globally); this query exists to oracle-check their semantics.
-    "count_window_agg" -> ((s, dir) => {
-      val ev = events(s, dir).select(col("event_id"), col("value"))
-      WindowAssign.countWindow(ev, 100, Seq(col("event_id")))
-        .groupBy(col("window_id"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          round(sum(col("value")), 2).as("sum_value"),
-          round(avg(col("value")), 4).as("avg_value"),
-          min(col("event_id")).as("first_id"),
-          max(col("event_id")).as("last_id"))
-        .orderBy(col("window_id"))
-    }),
-
-    // A6 CountWindow, per-key variant (scales: sort shards by user).
-    "count_window_per_key" -> ((s, dir) => {
-      val ev = events(s, dir).select(col("event_id"), col("user_id"), col("value"))
-      WindowAssign.countWindowPerKey(ev, 10, col("user_id"), Seq(col("event_id")))
-        .groupBy(col("user_id"), col("window_id"))
-        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))
-        .orderBy(col("user_id"), col("window_id"))
-    }),
-
-    // A7 FixedTimeWindow: aligned 1h tumbling windows (epoch-seconds grid).
-    "fixed_time_window" -> ((s, dir) => {
-      events(s, dir)
-        .withColumn("window_start_s", floor(unix_timestamp(col("ts")) / 3600) * 3600)
-        .groupBy(col("window_start_s"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          round(sum(col("value")), 2).as("sum_value"),
-          round(avg(col("value")), 4).as("avg_value"))
-        .orderBy(col("window_start_s"))
-    }),
-
-    // A7 with emit_empty=True: 300s grid spine keeps empty windows.
-    "fixed_time_window_spine" -> ((s, dir) => {
-      val ev = events(s, dir)
-        .withColumn("window_start_s", floor(unix_timestamp(col("ts")) / 300) * 300)
-      val agg = ev.groupBy(col("window_start_s"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sv"))
-      val spine = ev
-        .agg(min(col("window_start_s")).as("lo"), max(col("window_start_s")).as("hi"))
-        .select(explode(sequence(col("lo"), col("hi"), lit(300L))).as("window_start_s"))
-      spine.join(agg, Seq("window_start_s"), "left")
-        .select(
-          col("window_start_s"),
-          coalesce(col("n"), lit(0L)).as("n_events"),
-          coalesce(col("sv"), lit(0.0)).as("sum_value"))
-        .orderBy(col("window_start_s"))
-    }),
-
-    // A8 RelaxedTimeWindow batch form: everything at or before the cutoff.
-    "relaxed_time_window" -> ((s, dir) => {
-      WindowAssign.relaxedWindow(events(s, dir), col("ts"),
-          lit("2024-01-15 00:00:00").cast("timestamp"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))
-        .orderBy(col("event_type"))
-    }),
-
-    // A9 custom emitter (README SortedWindow): evens, sorted, batches of 50.
-    // ORACLE SHAPE: the example's total sort order forces a global sort,
-    // like count_window_agg; a scale deployment keys the sort.
-    "sorted_window" -> ((s, dir) => {
-      WindowAssign.sortedWindow(
-          events(s, dir).select(col("event_id"), col("value")),
-          col("event_id"), col("value"), 50)
-        .groupBy(col("window_id"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          round(min(col("value")), 2).as("min_value"),
-          round(max(col("value")), 2).as("max_value"))
-        .orderBy(col("window_id"))
-    }),
-
-    // A18 buffer accessor: filtered projected read (predicate pushdown).
-    "stream_buffer_filter" -> ((s, dir) => {
-      events(s, dir)
-        .filter(col("event_type") === "error" && col("value") > 150)
-        .select(col("event_id"), col("user_id"), col("value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // A17 retention (max_age): rows younger than max(ts) - 7 days.
-    "retention_cutoff" -> ((s, dir) => {
-      val ev = events(s, dir).withColumn("ts_s", unix_timestamp(col("ts")))
-      val cutoff = ev.agg((max(col("ts_s")) - lit(7L * 86400)).as("cutoff_s"))
-      ev.crossJoin(broadcast(cutoff))
-        .filter(col("ts_s") > col("cutoff_s"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_events"), min(col("event_id")).as("first_id"))
-        .orderBy(col("event_type"))
-    }),
-
-    // ── relational surface [EXT] ──────────────────────────────────────────
-
-    // Partial+final hash aggregation, TPC-H Q1 shape.
-    "q1_agg" -> ((s, dir) => {
-      lineitem(s, dir)
-        .filter(col("l_shipdate") <= lit("1995-09-02 00:00:00").cast("timestamp"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          round(sum(col("l_quantity")), 2).as("sum_qty"),
-          round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("sum_disc_price"),
-          round(avg(col("l_quantity")), 4).as("avg_qty"),
-          round(avg(col("l_discount")), 4).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-
-    // Multi-way join; small dims broadcast explicitly.
-    "q_join_broadcast" -> ((s, dir) => {
-      orders(s, dir)
-        .join(customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nation(s, dir)), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(region(s, dir)), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name"), col("n_name"))
-        .agg(count(lit(1)).as("n_orders"), round(sum(col("o_totalprice")), 2).as("revenue"))
-        .orderBy(col("r_name"), col("n_name"))
-    }),
-
-    // Bloom-pruned shuffle join (semi-join reduction): the dim side is a
-    // selective filter of orders whose KEYS build a Bloom sketch; fact
-    // rows failing the sketch die at the scan and never enter the join
-    // exchange. No false negatives → result ≡ the plain join the oracle
-    // runs. Integer-exact revenue (price and discount carried as scaled
-    // longs) so the sum is order-independent across engines.
-    "q_join_bloom_pruned" -> ((s, dir) => {
-      val dim = orders(s, dir)
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_orderkey"), col("o_orderdate"))
-      Relational.bloomPrunedJoin(
-          lineitem(s, dir)
-            .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount")),
-          col("l_orderkey"), dim, col("o_orderkey"))
-        .groupBy((year(col("o_orderdate")) * 100 + month(col("o_orderdate")))
-          .as("month"))
-        .agg(count(lit(1)).as("n_items"),
-          sum(round(col("l_extendedprice") * 100, 0).cast("long") *
-            (lit(10000L) - round(col("l_discount") * 10000, 0).cast("long")))
-            .as("revenue_u"))
-        .orderBy(col("month"))
-    }),
-
-    // Left-semi join (EXISTS).
-    "q_semi_join" -> ((s, dir) => {
-      customer(s, dir)
-        .join(orders(s, dir), col("c_custkey") === col("o_custkey"), "left_semi")
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n_customers"), round(sum(col("c_acctbal")), 2).as("sum_acctbal"))
-        .orderBy(col("c_mktsegment"))
-    }),
-
-    // Left-anti join (NOT EXISTS): customers with no 1995 orders.
-    "q_anti_join" -> ((s, dir) => {
-      customer(s, dir)
-        .join(orders(s, dir).filter(year(col("o_orderdate")) === 1995),
-          col("c_custkey") === col("o_custkey"), "left_anti")
-        .join(broadcast(nation(s, dir)), col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(count(lit(1)).as("n_customers"))
-        .orderBy(col("n_name"))
-    }),
-
-    // Ranking window function: top-3 parts per brand.
-    "q_topk_per_group" -> ((s, dir) => {
-      val w = Window.partitionBy(col("p_brand"))
-        .orderBy(col("p_retailprice").desc, col("p_partkey"))
-      part(s, dir)
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 3)
-        .select(col("p_brand"), col("rnk"), col("p_partkey"), col("p_retailprice"))
-        .orderBy(col("p_brand"), col("rnk"))
-    }),
-
-    // Scale companion to q_topk_per_group: the SAME result through the
-    // graft.functions.TopKPairs bounded-heap aggregate — a hash agg with
-    // map-side combine instead of a partition-wide ranking-window sort.
-    // At scale the exchange carries <= k rows per (group, input
-    // partition) instead of every row of the table; identical tie order
-    // (score desc, id asc), so the oracle SQL is the window form's.
-    "q_topk_per_group_agg" -> ((s, dir) => {
-      part(s, dir)
-        .groupBy(col("p_brand"))
-        .agg(graft.functions.TopKPairs.topK(
-          col("p_retailprice"), col("p_partkey"), 3).as("t"))
-        .select(col("p_brand"), posexplode(col("t")).as(Seq("pos0", "p")))
-        .select(col("p_brand"), (col("pos0") + 1).as("rnk"),
-          col("p.id").as("p_partkey"), col("p.score").as("p_retailprice"))
-        .orderBy(col("p_brand"), col("rnk"))
-    }),
-
-    // Analytic window functions with explicit ROWS frame.
-    "q_window_running" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-      orders(s, dir)
-        .withColumn("running_total",
-          round(sum(col("o_totalprice"))
-            .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)), 2))
-        .withColumn("prev_price", round(coalesce(lag(col("o_totalprice"), 1).over(w), lit(0.0)), 2))
-        .withColumn("rn", row_number().over(w))
-        .select(col("o_orderkey"), col("o_custkey"), col("running_total"),
-          col("prev_price"), col("rn"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    // Value window functions (first/last/nth over an explicit full-
-    // partition frame) — per-key windows shard by customer, money in
-    // integer cents. A customer's second-ever order is NULL for singleton
-    // histories → sentinel -1 (oracle hash never sees a NULL).
-    "q_window_value_fns" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-      val full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      orders(s, dir)
-        .withColumn("price_c", round(col("o_totalprice") * 100, 0).cast("long"))
-        .withColumn("first_c", first(col("price_c")).over(full))
-        .withColumn("last_c", last(col("price_c")).over(full))
-        .withColumn("second_c", coalesce(nth_value(col("price_c"), 2).over(full), lit(-1L)))
-        .select(col("o_orderkey"), col("o_custkey"), col("price_c"),
-          col("first_c"), col("last_c"), col("second_c"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    // TPC-H Q3 shape (shipping priority): selective filters on all three
-    // inputs reach the scans, the small filtered dimension broadcasts,
-    // and the final top-10 plans as TakeOrderedAndProject — per-partition
-    // heaps, never a materialized global sort (plan-asserted). Revenue in
-    // integer micro-units (cents × basis points), exact cross-engine.
-    "q_shipping_priority" -> ((s, dir) => {
-      val cut = lit("1998-01-01").cast("timestamp")
-      lineitem(s, dir).filter(col("l_shipdate") > cut)
-        .join(orders(s, dir).filter(col("o_orderdate") < cut),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(customer(s, dir).filter(col("c_mktsegment") === "BUILDING"),
-          col("o_custkey") === col("c_custkey"))
-        .groupBy(col("l_orderkey"), col("o_orderpriority"))
-        .agg(sum(round(col("l_extendedprice") * 100, 0).cast("long") *
-          (lit(10000L) - round(col("l_discount") * 10000, 0).cast("long"))).as("revenue_u"))
-        .orderBy(col("revenue_u").desc, col("l_orderkey"))
-        .limit(10)
-        .select(col("l_orderkey"), col("o_orderpriority"), col("revenue_u"))
-    }),
-
-    // Distribution window functions: percent_rank / cume_dist / ntile
-    // over a total order (unique tie-break), so every value is a single
-    // integer division — bit-identical cross-engine. The window computes
-    // over FULL partitions; the output filter only bounds result size.
-    "q_window_dist" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_orderpriority"))
-        .orderBy(col("o_totalprice"), col("o_orderkey"))
-      orders(s, dir)
-        .withColumn("pr", percent_rank().over(w))
-        .withColumn("cd", cume_dist().over(w))
-        .withColumn("nt", ntile(10).over(w).cast("long"))
-        .filter(pmod(col("o_orderkey"), lit(100)) === 0)
-        .select(col("o_orderkey"), col("o_orderpriority"), col("pr"), col("cd"), col("nt"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    // Global sort + limit (top-k).
-    "q_sort_limit" -> ((s, dir) => {
-      orders(s, dir)
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(20)
-        .select(col("o_orderkey"), col("o_totalprice"))
-    }),
-
-    // Set operations: INTERSECT / EXCEPT / UNION on distinct key sets.
-    "q_set_ops" -> ((s, dir) => {
-      def keys(st: String) =
-        orders(s, dir).filter(col("o_orderstatus") === st).select(col("o_custkey")).distinct()
-      def counted(df: DataFrame, opName: String) =
-        df.agg(count(lit(1)).as("n")).select(lit(opName).as("op"), col("n"))
-      counted(keys("O").intersect(keys("F")), "intersect")
-        .union(counted(keys("O").except(keys("F")), "except"))
-        .union(counted(keys("O").union(keys("F")).distinct(), "union"))
-        .orderBy(col("op"))
-    }),
-
-    // UNPIVOT (wide→long melt) through Spark's native unpivot operator;
-    // measures are pre-scaled to integer micro-units so the per-metric
-    // totals are integer-exact cross-engine. Oracle is the portable
-    // UNION ALL formulation of the same melt.
-    "q_unpivot" -> ((s, dir) => {
-      lineitem(s, dir)
-        .select(
-          col("l_returnflag"),
-          round(col("l_quantity") * 100, 0).cast("long").as("quantity_c"),
-          round(col("l_discount") * 10000, 0).cast("long").as("discount_bp"),
-          round(col("l_tax") * 10000, 0).cast("long").as("tax_bp"))
-        .unpivot(
-          Array(col("l_returnflag")),
-          Array(col("quantity_c"), col("discount_bp"), col("tax_bp")),
-          "metric", "v")
-        .groupBy(col("l_returnflag"), col("metric"))
-        .agg(count(lit(1)).as("n"), sum(col("v")).as("sum_v"))
-        .orderBy(col("l_returnflag"), col("metric"))
-    }),
-
-    // Conditional / filtered aggregation: count_if, bool_and/bool_or, and
-    // a FILTER-style conditional max (max is comparison-only, so the raw
-    // double is cross-engine exact — no rounding needed).
-    "q_conditional_agg" -> ((s, dir) => {
-      customer(s, dir)
-        .join(broadcast(nation(s, dir)), col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(
-          count(lit(1)).as("n_cust"),
-          count_if(col("c_acctbal") > 0).as("n_pos"),
-          bool_or(col("c_mktsegment") === "BUILDING").as("any_building"),
-          bool_and(col("c_acctbal") > 0).as("all_pos"),
-          max(when(col("c_mktsegment") === "BUILDING", col("c_acctbal"))).as("max_building_bal"))
-        .orderBy(col("n_name"))
-    }),
-
-    // Correlated scalar subquery — Catalyst de-correlates it into an
-    // aggregate + join (no per-row re-execution, unlike the reference's
-    // per-message Python callbacks). min() is comparison-only and ×2 is
-    // exact IEEE, so the predicate is bit-stable cross-engine and
-    // run-to-run (an avg() here would make the boundary summation-order
-    // dependent — the q_outliers_mad failure class).
-    "q_scalar_subquery" -> ((s, dir) => {
-      orders(s, dir).createOrReplaceTempView("graft_sq_orders")
-      s.sql("""SELECT o_orderpriority, count(*) AS n_big
-              |FROM graft_sq_orders o
-              |WHERE o_totalprice > 2 * (SELECT min(o2.o_totalprice)
-              |                          FROM graft_sq_orders o2
-              |                          WHERE o2.o_custkey = o.o_custkey)
-              |GROUP BY o_orderpriority
-              |ORDER BY o_orderpriority""".stripMargin)
-    }),
-
-    // Z-order (Morton) clustering arithmetic: bucket census over the
-    // interleaved bits of two join keys — pure integer shift/mask, exact
-    // in any engine. The write-side twin (Layout.zorderWrite) has its
-    // both-dimensions-bounded locality property asserted in ScalaTest;
-    // this query oracle-pins the curve arithmetic itself.
-    "q_zorder_cluster" -> ((s, dir) => {
-      lineitem(s, dir)
-        .withColumn("z_bucket",
-          shiftright(graft.sources.Layout.zValue(col("l_partkey"), col("l_suppkey"), 6), 6)
-            .cast("long"))
-        .groupBy(col("z_bucket"))
-        .agg(count(lit(1)).as("n"),
-          min(pmod(col("l_partkey"), lit(64))).as("min_x"),
-          max(pmod(col("l_partkey"), lit(64))).as("max_x"),
-          min(pmod(col("l_suppkey"), lit(64))).as("min_y"),
-          max(pmod(col("l_suppkey"), lit(64))).as("max_y"))
-        .orderBy(col("z_bucket"))
-    }),
-
-    // Distinct aggregation.
-    "q_distinct_agg" -> ((s, dir) => {
-      events(s, dir)
-        .groupBy(col("event_type"))
-        .agg(
-          countDistinct(col("user_id")).as("n_users"),
-          count(lit(1)).as("n_events"),
-          round(sum(col("value")), 2).as("sum_value"))
-        .orderBy(col("event_type"))
-    }),
-
-    // HLL approximate distinct — no DuckDB oracle (sketch-dependent);
-    // accuracy asserted against exact counts in ScalaTest. Spark's HLL++
-    // has NO exact regime (register estimation approximates at any
-    // cardinality), so this entry stays rows-tier BY NATURE, not by gap —
-    // the distinct-count sketch with an exact regime is the theta path
-    // (Incremental.setState: k-smallest-hashes IS the distinct set below
-    // 2^lgK), hash-gated end to end in events_user_overlap_exact.
-    "q_approx_distinct" -> ((s, dir) => {
-      lineitem(s, dir)
-        .groupBy(col("l_returnflag"))
-        .agg(
-          approx_count_distinct(col("l_orderkey")).as("approx_orders"),
-          approx_count_distinct(col("l_partkey")).as("approx_parts"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    // ROLLUP grouping sets (rolled-up levels shown as 'ALL').
-    "q_rollup" -> ((s, dir) => {
-      lineitem(s, dir)
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(round(sum(col("l_quantity")), 2).as("sum_qty"), count(lit(1)).as("n"))
-        .select(
-          coalesce(col("l_returnflag"), lit("ALL")).as("returnflag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("linestatus"),
-          col("sum_qty"), col("n"))
-        .orderBy(col("returnflag"), col("linestatus"))
-    }),
-
-    // Semi-structured payload: JSON extraction from events.props.
-    "q_json_extract" -> ((s, dir) => {
-      events(s, dir)
-        .withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
-        .groupBy(pmod(col("k"), lit(10)).as("k_mod"))
-        .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
-          round(avg(col("value")), 4).as("avg_value"))
-        .orderBy(col("k_mod"))
-    }),
-
-    // Scalar string functions.
-    "q_scalar_funcs" -> ((s, dir) => {
-      part(s, dir)
-        .withColumn("type_prefix", element_at(split(col("p_type"), " "), 1))
-        .groupBy(col("type_prefix"))
-        .agg(
-          count(lit(1)).as("n_parts"),
-          round(avg(col("p_retailprice")), 2).as("avg_price"),
-          max(length(col("p_name"))).as("max_name_len"),
-          min(upper(col("p_brand"))).as("min_brand"))
-        .orderBy(col("type_prefix"))
-    }),
-
-    // Date/time functions.
-    "q_date_agg" -> ((s, dir) => {
-      orders(s, dir)
-        .groupBy(year(col("o_orderdate")).as("o_year"), quarter(col("o_orderdate")).as("o_quarter"))
-        .agg(count(lit(1)).as("n_orders"), round(sum(col("o_totalprice")), 2).as("revenue"))
-        .orderBy(col("o_year"), col("o_quarter"))
-    }),
-
-    // As-of join: for each purchase, the latest click at or before it by
-    // the same user. Linear formulation (sort-carry), not a range join.
-    "q_asof_join" -> ((s, dir) => {
-      Relational.lastMatchAsOf(
-          events(s, dir), col("user_id"), col("event_id"),
-          col("event_type") === "click", col("event_id"), "last_click_id")
-        .filter(col("event_type") === "purchase")
-        .select(
-          col("event_id").as("purchase_id"),
-          col("user_id"),
-          coalesce(col("last_click_id"), lit(-1L)).as("last_click_id"))
-        .orderBy(col("purchase_id"))
-    }),
-
-    // NEAREST as-of with tolerance (pandas merge_asof direction='nearest'):
-    // every click matched to its time-closest purchase within 1h, either
-    // direction, nulls when none. Two RANGE-window passes over one
-    // key-hash shuffle — never a per-row probe join; all ties
-    // deterministic and mirrored in the oracle's ORDER BY.
-    "q_asof_join_nearest" -> ((s, dir) => {
-      val ev = events(s, dir).withColumn("ts_us", unix_micros(col("ts")))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts_us"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts_us").as("p_ts_us"), col("value"))
-      Relational.nearestAsOf(clicks, purchases, "user_id",
-          col("ts_us"), col("p_ts_us"), col("value"), tolerance = 3600000000L)
-        .select(col("event_id"), col("user_id"), col("ts_us"),
-          col("matched_v").as("purchase_value"),
-          col("matched_t").as("purchase_ts_us"), col("dist"))
-        .orderBy(col("event_id"))
-    }),
-
-    // Range/interval join against broadcast value tiers (theta join).
-    "q_range_join" -> ((s, dir) => {
-      import s.implicits._
-      val tiers = Seq(
-        (0.0, 50.0, "t1_low"), (50.0, 100.0, "t2_mid"),
-        (100.0, 150.0, "t3_high"), (150.0, 100000.0, "t4_extreme"))
-        .toDF("lo", "hi", "tier")
-      Relational.rangeJoin(events(s, dir), tiers, col("value"), col("lo"), col("hi"))
-        .groupBy(col("tier"))
-        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))
-        .orderBy(col("tier"))
-    }),
-
-    // Funnel analysis: per-user ordered stage completion (view -> click ->
-    // purchase by event time). One hash agg computes each user's first
-    // time per stage; the stage comparison is a map-side projection.
-    "q_funnel" -> ((s, dir) => {
-      val firsts = events(s, dir)
-        .groupBy(col("user_id"))
-        .agg(
-          min(when(col("event_type") === "view", col("ts"))).as("t_view"),
-          min(when(col("event_type") === "click", col("ts"))).as("t_click"),
-          min(when(col("event_type") === "purchase", col("ts"))).as("t_purchase"))
-      firsts.agg(
-          count(lit(1)).as("n_users"),
-          sum(when(col("t_view").isNotNull, 1).otherwise(0)).as("n_view"),
-          sum(when(col("t_view").isNotNull && col("t_click") > col("t_view"), 1)
-            .otherwise(0)).as("n_view_click"),
-          sum(when(col("t_view").isNotNull && col("t_click") > col("t_view") &&
-              col("t_purchase") > col("t_click"), 1)
-            .otherwise(0)).as("n_view_click_purchase"))
-    }),
-
-    // Cohort retention: users cohorted by FIRST event day, distinct users
-    // counted per (cohort, day offset) — the standard product-analytics
-    // retention matrix. Day ids are integer epoch days end to end (dates
-    // as date32 round-trip differently through the two engines' pandas
-    // paths). Shape: the first-touch table derives from the same user_id
-    // shuffle the join consumes (exchange reuse), then one hash agg on
-    // (cohort, offset) — n_users at offset 0 IS the cohort size, every
-    // other offset counts a subset of it.
-    "q_cohort_retention" -> ((s, dir) => {
-      val ev = events(s, dir)
-        .select(col("user_id"), datediff(to_date(col("ts")), lit("1970-01-01")).as("d"))
-      val first = ev.groupBy(col("user_id")).agg(min(col("d")).as("cohort_day"))
-      ev.join(first, Seq("user_id"))
-        .groupBy(col("cohort_day"), (col("d") - col("cohort_day")).as("day_offset"))
-        .agg(countDistinct(col("user_id")).as("n_users"))
-        .orderBy(col("cohort_day"), col("day_offset"))
-    }),
-
-    // Data profiling: fixed-width value histogram — the pre-training
-    // distribution check. Bin id is integer math (map-side); one hash agg.
-    "q_histogram" -> ((s, dir) => {
-      events(s, dir)
-        .groupBy(floor(col("value") / 25).cast("long").as("bin"))
-        .agg(count(lit(1)).as("n"),
-          round(min(col("value")), 2).as("lo"),
-          round(max(col("value")), 2).as("hi"))
-        .orderBy(col("bin"))
-    }),
-
-    // Equi-DEPTH histogram (equal row counts per bucket) — ORACLE SHAPE:
-    // exact ntile needs one global sort with a total tie-break order. The
-    // scale path computes bucket boundaries with approx_percentile (one
-    // pass, mergeable sketch — see q_approx_percentiles) and range-buckets
-    // rows against the broadcast boundaries, never sorting globally.
-    "q_histogram_equidepth" -> ((s, dir) => {
-      val w = Window.orderBy(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
-      lineitem(s, dir)
-        .select(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
-        .withColumn("bucket", ntile(8).over(w))
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n_rows"),
-          round(min(col("l_extendedprice")), 2).as("lo"),
-          round(max(col("l_extendedprice")), 2).as("hi"),
-          round(avg(col("l_extendedprice")), 2).as("avg_price"))
-        .orderBy(col("bucket"))
-    }),
-
-    // Rolling z-score anomaly census: every event judged against its own
-    // user's trailing 24 h — the streaming-shaped outlier screen next to
-    // the global MAD census. One shuffle on the user key, per-key RANGE
-    // frame; census output so measure-zero boundary flips can't move the
-    // hash.
-    "events_anomaly" -> ((s, dir) => {
-      val ev = events(s, dir)
-      Timeseries.rollingAnomalies(ev, col("user_id"),
-          unix_timestamp(col("ts")), col("value"), windowSeconds = 86400L, z = 3.0)
-        .groupBy(col("key").as("user_id"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(when(col("is_anomaly"), 1L).otherwise(0L)).as("n_anomalies"))
-        .orderBy(col("user_id"))
-    }),
-
-    // SCD2 change intervals: each user's event_type mutation log collapsed
-    // into [valid_from, valid_to) validity runs; the open (current) run's
-    // valid_to is the 9999-12-31 sentinel so the oracle hash never sees a
-    // NULL. Gaps-and-islands: one shuffle on user, runs collapse to a hash
-    // agg before the lead() window ever sorts anything.
-    "q_scd2_intervals" -> ((s, dir) => {
-      val ev = events(s, dir).withColumn("ts_s", unix_timestamp(col("ts")))
-      Timeseries.changeIntervals(ev, col("user_id"), col("ts_s"),
-          col("event_id"), col("event_type"))
-        .select(col("user_id"), col("value").as("event_type"),
-          col("valid_from"),
-          coalesce(col("valid_to"), lit(253402300800L)).as("valid_to"),
-          col("n_events"))
-        .orderBy(col("user_id"), col("valid_from"))
-    }),
-
-    // Interval-overlap (temporal) join: per validity interval of the first
-    // user cohort, how many intervals of the second cohort were in force
-    // at the same time — concurrency analysis as a banded equi-join on the
-    // time band (each pair emitted only in its overlap-start band: exactly
-    // once, no dedup), never |L|·|R|. Oracle = the naive theta join.
-    "q_interval_overlap" -> ((s, dir) => {
-      val ev = events(s, dir).withColumn("ts_s", unix_timestamp(col("ts")))
-      def iv(loU: Int, hiU: Int, pfx: String) =
-        Timeseries.changeIntervals(
-            ev.filter(col("user_id") >= loU && col("user_id") < hiU),
-            col("user_id"), col("ts_s"), col("event_id"), col("event_type"))
-          .filter(col("valid_to").isNotNull) // open runs: no finite interval
-          .select(col("user_id").as(s"${pfx}_user"),
-            col("valid_from").as(s"${pfx}_from"), col("valid_to").as(s"${pfx}_to"))
-      Relational.intervalOverlapJoin(
-          iv(0, 10, "l"), iv(10, 20, "r"),
-          col("l_from"), col("l_to"), col("r_from"), col("r_to"),
-          bandWidth = 86400L)
-        .groupBy(col("l_user"), col("l_from"))
-        .agg(count(lit(1)).as("n_concurrent"))
-        .orderBy(col("l_user"), col("l_from"))
-    }),
-
-    // Bounded-horizon EWMA per user: exponential smoothing re-expressed as
-    // a pure function of the last 8 rows (geometric weights truncated where
-    // they vanish), so the sequential recurrence becomes one per-key window
-    // — embarrassingly parallel, no cross-row state. Value quantized once
-    // to micro-units; weight literals embedded identically in the oracle.
-    "events_ewma" -> ((s, dir) => {
-      events(s, dir)
-        .withColumn("ewma", Analytics.ewma("user_id",
-          Seq(unix_micros(col("ts")), col("event_id")), "value",
-          alpha = 0.3, horizon = 8))
-        .filter(pmod(col("event_id"), lit(20)) === 0)
-        .select(col("event_id"), col("user_id"), col("ewma"))
-        .orderBy(col("event_id"))
-    }),
-
-    // Rolling 20-row Pearson correlation of value against time per user,
-    // from exact integer moment sums (decimal ≡ DuckDB HUGEINT) — the
-    // engines' native `corr` window aggregate accumulates doubles in
-    // engine-private order and can't be checked cross-engine. Degenerate
-    // frames (zero variance) yield sentinel 2.0, never NULL.
-    "events_rolling_corr" -> ((s, dir) => {
-      events(s, dir)
-        .withColumn("corr20", Analytics.rollingCorr("user_id",
-          Seq(unix_micros(col("ts")), col("event_id")),
-          xCol = unix_timestamp(col("ts")) - 1704067200L,
-          yCol = round(col("value") * 10000, 0).cast("long"),
-          frameRows = 20))
-        .filter(pmod(col("event_id"), lit(20)) === 0)
-        .select(col("event_id"), col("user_id"), col("corr20"))
-        .orderBy(col("event_id"))
-    }),
-
-    // Autocorrelation census per event type at lags 1..3 — the
-    // seasonality/persistence detector. One window pass computes all lags'
-    // leads, one hash agg per (type, lag); exact deci-unit moments (chosen
-    // so moment differences stay inside int64 through sf1 for the oracle's
-    // single-cvt BIGINT→DOUBLE), sentinel 2.0 on degenerate lags.
-    "events_acf" -> ((s, dir) => {
-      Analytics.autocorrCensus(events(s, dir), "event_type",
-          Seq(unix_micros(col("ts")), col("event_id")), col("value"),
-          lags = Seq(1, 2, 3))
-        .select(col("event_type"), col("lag"), col("n_pairs"), col("acf"))
-        .orderBy(col("event_type"), col("lag"))
-    }),
-
-    // Gini concentration of document mass per source — "is this source a
-    // few huge docs or many small ones?". Rank formula over a total
-    // (n_chars, doc_id) order, exact decimal products, integer-ppm
-    // round-half-up output; the per-group window sort is the exact oracle
-    // shape (groups shard across the cluster).
-    "q_gini_source" -> ((s, dir) => {
-      Analytics.giniPerGroup(documents(s, dir), Seq(col("source")),
-          col("n_chars"), col("doc_id"))
-        .select(col("source"), col("n"), col("gini_ppm"))
-        .orderBy(col("source"))
-    }),
-
-    // Benford first-digit census over order totals (cents) — the
-    // fraud/synthetic-data screen. First digit via decimal-string head (no
-    // log10 boundary risk); observed ppm round-half-up integer, expected
-    // ppm the published Benford constants as literals on both engines.
-    "q_benford" -> ((s, dir) => {
-      Analytics.benfordCensus(orders(s, dir),
-          round(col("o_totalprice") * 100, 0).cast("long"))
-        .select(col("digit"), col("n"), col("obs_ppm"), col("exp_ppm"), col("dev_ppm"))
-        .orderBy(col("digit"))
-    }),
-
-    // Interval-union coverage per user: each event holds activity open for
-    // 5 minutes; overlapping holds merge into maximal spans (total active
-    // time — the union metric a gap-cut session window can't express).
-    // Gaps-and-islands in exact epoch-µs integers: one per-key sort, a
-    // prior-ends running max, flag-sum island ids, two hash aggs.
-    "events_active_spans" -> ((s, dir) => {
-      Timeseries.coverageSpans(events(s, dir), "user_id",
-          unix_micros(col("ts")), holdSeconds = 300)
-        .select(col("user_id"), col("n_spans"), col("active_us"), col("max_span_us"))
-        .orderBy(col("user_id"))
-    }),
-
-    // Spearman rank correlation of char length vs token count per source —
-    // the monotone-association sanity monitor (a source where length stops
-    // tracking token count is full of markup or binary junk). Tie-corrected
-    // via exact integer DOUBLED average ranks; then the family's decimal
-    // moments + one closed-form division.
-    "q_spearman_source" -> ((s, dir) => {
-      Analytics.spearmanPerGroup(documents(s, dir), Seq(col("source")),
-          col("n_chars"), TextAnalysis.tokenCount(col("text")))
-        .select(col("source"), col("n"), col("rho"))
-        .orderBy(col("source"))
-    }),
-
-    // Okapi BM25 relevance scores for a fixed 3-term query — the search
-    // scoring function, completing the retrieval family (TF-IDF weighs the
-    // corpus, DSIR matches distributions, BM25 ranks against a query).
-    // One 1-row stats broadcast + a per-row projection; the float chain is
-    // written in one fixed order the oracle mirrors token for token.
-    "text_bm25" -> ((s, dir) => {
-      TextAnalysis.bm25Scores(documents(s, dir), col("doc_id"), col("text"),
-          terms = Seq("join", "vector", "spark"))
-        .filter(pmod(col("id"), lit(10)) === 0)
-        .select(col("id").as("doc_id"), col("dl"), col("bm25"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Hapax-legomena census per source: what fraction of the distinct
-    // vocabulary occurs exactly once — the Heaps-law freshness signal
-    // (template spam collapses toward 0, OCR noise explodes toward 1).
-    "text_hapax" -> ((s, dir) => {
-      TextAnalysis.hapaxCensus(documents(s, dir), Seq(col("source")), col("text"))
-        .select(col("source"), col("n_terms"), col("n_hapax"), col("hapax_ppm"))
-        .orderBy(col("source"))
-    }),
-
-    // Zipf-exponent census per source: OLS slope of ln(freq) on ln(rank)
-    // over the top-200 terms — natural text sits near −1; templated or
-    // synthetic partitions flatten/steepen it. Bounded-heap top-K, no
-    // vocabulary sort; tie-invariant so the heap's hash tiebreak and the
-    // oracle's (freq DESC, term ASC) row_number see the same multiset.
-    "text_zipf" -> ((s, dir) => {
-      TextAnalysis.zipfCensus(documents(s, dir), Seq(col("source")), col("text"))
-        .select(col("source"), col("n_tokens"), col("vocab"),
-          col("n_top"), col("zipf_slope"))
-        .orderBy(col("source"))
-    }),
-
-    // Blocklist filter census (C4 badwords drop rule): ONE Aho-Corasick
-    // pass per doc over the whole phrase list — the list includes a
-    // pattern nested inside another ("merge" ⊂ "merge batch", exercising
-    // the dictionary-suffix collapse) and an absent phrase. Oracle: plain
-    // per-pattern strpos in DuckDB — doc-level distinct-pattern semantics
-    // keep it exact.
-    "text_blocklist" -> ((s, dir) => {
-      TextAnalysis.blocklistCensus(documents(s, dir), Seq(col("source")),
-          col("text"), SparkEntry.blocklistPatterns)
-        .select(col("source"), col("n_docs"), col("n_flagged"),
-          col("n_kept"), col("pattern_hits"))
-        .orderBy(col("source"))
-    }),
-
-    // Char-mass midpoint per source: the lower WEIGHTED median of document
-    // length weighted by length — "half this source's bytes live in docs
-    // shorter than this". Exact integers: total-order cumsum, suffix test
-    // 2·cumw >= tot, min(struct) pick.
-    "q_wmedian_source" -> ((s, dir) => {
-      Analytics.weightedMedianPerGroup(documents(s, dir), Seq(col("source")),
-          col("n_chars"), col("n_chars"), col("doc_id"))
-        .select(col("source"), col("n"), col("total_w"), col("wmedian"))
-        .orderBy(col("source"))
-    }),
-
-    // State-dwell census: how long users sit in each event type before
-    // their next event (stint = holds-until-next, the TWAP duration
-    // model on a categorical) — the natural companion to the transition
-    // census. Exact epoch-µs; mean is the family round-half-up division.
-    "events_dwell" -> ((s, dir) => {
-      Timeseries.dwellCensus(events(s, dir), "user_id",
-          Seq(unix_micros(col("ts")), col("event_id")),
-          unix_micros(col("ts")), col("event_type"))
-        .select(col("state"), col("n_stints"), col("total_us"), col("mean_us"))
-        .orderBy(col("state"))
-    }),
-
-    // SAX symbolic discretization per user: 8 PAA segments, 4-symbol
-    // alphabet over the series' own nearest-rank quartile breakpoints —
-    // the time-series-to-word transform, bit-exact because breakpoints
-    // are data quantiles (exact integers), not Gaussian z-norm floats.
-    "events_sax" -> ((s, dir) => {
-      Timeseries.saxSymbols(events(s, dir), "user_id",
-          Seq(unix_micros(col("ts")), col("event_id")), col("value"),
-          buckets = 8, alphabet = 4)
-        .orderBy(col("user_id"), col("bucket"))
-    }),
-
-    // SAX word census: each user's 8-symbol SAX word (segments in order)
-    // counted across the population — the motif table ("how many users
-    // share this activity shape"). Composition over events_sax; the word
-    // assembles from an ORDERED collect, deterministic on both engines.
-    "events_sax_words" -> ((s, dir) => {
-      Timeseries.saxSymbols(events(s, dir), "user_id",
-          Seq(unix_micros(col("ts")), col("event_id")), col("value"),
-          buckets = 8, alphabet = 4)
-        .groupBy(col("user_id"))
-        .agg(array_join(transform(
-          array_sort(collect_list(struct(col("bucket"), col("symbol")))),
-          x => x.getField("symbol").cast("string")), "").as("sax_word"))
-        .groupBy(col("sax_word"))
-        .agg(count(lit(1)).as("n_users"))
-        .orderBy(col("sax_word"))
-    }),
-
-    // Multi-touch attribution census: which event types earn conversion
-    // credit under first-touch / last-touch / linear models at once.
-    // Exact integer ppm — the last touch absorbs the split remainder, so
-    // every converted window sums to exactly 1e6.
-    "events_attribution" -> ((s, dir) => {
-      Analytics.attributionCensus(events(s, dir), "user_id",
-          Seq(unix_micros(col("ts")), col("event_id")),
-          col("event_type"), convType = "purchase")
-        .orderBy(col("event_type"))
-    }),
-
-    // RFM segmentation census: recency/frequency/monetary quintiles per
-    // customer (best = bin 1), counted per occupied cell — the classic
-    // customer-value grid, exact integers end to end (recency against the
-    // corpus max date, a 1-row broadcast).
-    "q_rfm" -> ((s, dir) => {
-      // o_orderdate is TIMESTAMP_NTZ in the parquet; the UTC-session cast
-      // makes unix_micros well-defined and equal to DuckDB's epoch_ns//1000
-      Analytics.rfmCensus(orders(s, dir), col("o_custkey"),
-          unix_micros(col("o_orderdate").cast("timestamp")),
-          round(col("o_totalprice") * 100, 0).cast("long"))
-        .orderBy(col("r_bin"), col("f_bin"), col("m_bin"))
-    }),
-
-    // ABC / Pareto census over part revenue: the 80/95 concentration cut
-    // via cross-multiplied integer comparisons on the inclusive cumulative
-    // share — no percentage float ever exists.
-    "q_abc_parts" -> ((s, dir) => {
-      Analytics.abcCensus(lineitem(s, dir), col("l_partkey"),
-          round(col("l_extendedprice") * 100, 0).cast("long"))
-        .orderBy(col("abc_class"))
-    }),
-
-    // AUC census per source: does document length separate English from
-    // the rest? AUC IS the Mann-Whitney statistic, so the doubled-rank
-    // identity gives it exactly — never the n_pos×n_neg pairwise blowup.
-    // Exact rational (num, den) + round-half-up ppm.
-    "q_auc_source" -> ((s, dir) => {
-      Analytics.aucCensus(documents(s, dir), Seq(col("source")),
-          col("n_chars"), col("lang") === "en")
-        .orderBy(col("source"))
-    }),
-
-    // Two-sample KS census: each source's document-length distribution
-    // against the REST of the corpus — the shape-drift detector. Exact
-    // cross-multiplied ECDF distance on the discrete n_chars grid; ppm in
-    // decimal so no corpus size wraps it.
-    "q_ks_source" -> ((s, dir) => {
-      Analytics.ksCensus(documents(s, dir), col("source"), col("n_chars"))
-        .select(col("group").as("source"), col("n_g"), col("n_rest"),
-          col("d_num"), col("d_ppm"))
-        .orderBy(col("source"))
-    }),
-
-    // The bins path of the same census on a genuinely CONTINUOUS column:
-    // events.value quantizes to ~6.6k distinct cents at sf0.01 — past the
-    // 4096 guard, so this query EXERCISES the enforced contract (un-binned
-    // it would raise) and gates the equi-width integer binning arithmetic
-    // cross-engine: bucket = ((v-min)·64)/(span+1), floor ≡ truncate on
-    // both engines because everything is non-negative.
-    "q_ks_binned" -> ((s, dir) => {
-      Analytics.ksCensus(
-          events(s, dir).select(col("event_type"),
-            round(col("value") * 100, 0).cast("long").as("vu")),
-          col("event_type"), col("vu"),
-          bins = Some(64), maxDistinct = 4096L)
-        .select(col("group").as("event_type"), col("n_g"), col("n_rest"),
-          col("d_num"), col("d_ppm"))
-        .orderBy(col("event_type"))
-    }),
-
-    // Western-Electric SPC rule census per user over the user's own
-    // control limits — the 1956 handbook run rules (beyond 3σ; 2-of-3
-    // beyond 2σ same side; 4-of-5 beyond 1σ same side; 8 same side), all
-    // as cross-multiplied integer inequalities in decimal, zero floats.
-    "events_spc" -> ((s, dir) => {
-      Analytics.spcCensus(events(s, dir), "user_id",
-          Seq(unix_micros(col("ts")), col("event_id")), col("value"))
-        .orderBy(col("user_id"))
-    }),
-
-    // Pettitt changepoint census per user: the rank-based (outlier-immune)
-    // "where does this series split into before/after regimes" locator —
-    // the robust complement to the CUSUM census. Doubled average ranks
-    // keep tie handling integer; |U| <= 2n^2 stays in int64 at any sf.
-    "events_pettitt" -> ((s, dir) => {
-      Analytics.pettittCensus(events(s, dir), "user_id",
-          Seq(unix_micros(col("ts")), col("event_id")), col("value"))
-        .orderBy(col("user_id"))
-    }),
-
-    // Transposition-noise census: every customer name gets a deterministic
-    // adjacent-character swap (position keyed by custkey), then per nation
-    // we compare plain levenshtein against the native full
-    // Damerau-Levenshtein — where they differ, a one-slip transposition
-    // was being billed as two edits. Exercises the codegen'd
-    // Lowrance-Wagner expression against DuckDB's full-variant builtin.
-    "linkage_dl" -> ((s, dir) => {
-      import graft.functions.DamerauLevenshtein.damerauLevenshtein
-      val p = (pmod(col("c_custkey"), (length(col("c_name")) - 1).cast("long")) + 1)
-        .cast("int")
-      val swapped = concat(
-        col("c_name").substr(lit(1), p - 1),
-        col("c_name").substr(p + 1, lit(1)),
-        col("c_name").substr(p, lit(1)),
-        col("c_name").substr(p + 2, lit(1000)))
-      customer(s, dir)
-        .select(col("c_nationkey"),
-          levenshtein(col("c_name"), swapped).cast("long").as("lev"),
-          damerauLevenshtein(col("c_name"), swapped).as("dl"))
-        .groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("lev")).as("sum_lev"),
-          sum(col("dl")).as("sum_dl"),
-          sum(when(col("lev") > col("dl"), 1L).otherwise(0L))
-            .as("n_transposition_wins"))
-        .orderBy(col("c_nationkey"))
-    }),
-
-    // Association-rule census over order baskets (which parts co-occur):
-    // support/confidence/lift in exact integer ppm. Pairs come from a
-    // self-join ON THE BASKET KEY (fanout Σ|basket|², never |items|²),
-    // min-support cut on the aggregated pairs, marginals joined back.
-    "basket_rules" -> ((s, dir) => {
-      Analytics.associationRules(lineitem(s, dir),
-          col("l_orderkey"), col("l_partkey"), minSupport = 2)
-        .orderBy(col("item_a"), col("item_b"))
-    }),
-
-    // Flesch-Kincaid readability census per source — the complexity screen
-    // next to the Gopher rules. Deterministic counting conventions (word/
-    // sentence/vowel-group runs via codegen'd regexp_extract_all), grade
-    // in exact clamped milli-units, round-half-up divisions only.
-    "text_readability" -> ((s, dir) => {
-      TextAnalysis.readabilityCensus(documents(s, dir), Seq(col("source")),
-          col("text"))
-        .select(col("source"), col("n_docs"), col("mean_grade_milli"))
-        .orderBy(col("source"))
-    }),
-
-    // First-order Markov transition census over per-user event sequences —
-    // the sequence-mining companion to funnel/cohort: which step follows
-    // which, with conditional probability in integer ppm (pure integer
-    // round-half-up; no float anywhere). Per-key lead() shards by user;
-    // the census is a hash agg on at most |states|² rows.
-    "events_transitions" -> ((s, dir) => {
-      Analytics.transitionCensus(events(s, dir), "user_id",
-          Seq(unix_micros(col("ts")), col("event_id")), "event_type")
-        .orderBy(col("from_state"), col("to_state"))
-    }),
-
-    // Per-segment OLS trend fit (value drift over time per event type) from
-    // exact decimal moment sums — deliberately NOT regr_slope/intercept,
-    // whose double accumulation order makes a distributed run unverifiable
-    // against a single-threaded oracle. One two-level hash agg, one row per
-    // group, closed-form slope/intercept from identical integers.
-    "q_regression_per_group" -> ((s, dir) => {
-      // x in kilo-seconds since 2024-01-01 (non-negative, so truncating
-      // `div` ≡ DuckDB's flooring `//`): keeps every moment difference
-      // inside int64 through sf1, where the oracle's BIGINT→DOUBLE cast is
-      // a single correctly-rounded hardware op (DuckDB's HUGEINT→DOUBLE is
-      // NOT correctly rounded — measured 1-ulp off on negative >2⁵³ values)
-      Analytics.regressionPerGroup(events(s, dir),
-          Seq(col("event_type")),
-          x = expr("(unix_timestamp(ts) - 1704067200) div 1000"),
-          y = round(col("value") * 10000, 0).cast("long"),
-          scale = 8)
-        .select(col("event_type"), col("n"), col("slope"), col("intercept"))
-        .orderBy(col("event_type"))
-    }),
-
-    // Shannon entropy (nats) of the language distribution per source — the
-    // corpus-diversity / label-skew monitor. Counts aggregate exactly; the
-    // single float step (Σ c·ln c over ≤ a few categories) sits far inside
-    // the 6dp round.
-    "source_lang_entropy" -> ((s, dir) => {
-      Analytics.categoricalEntropy(documents(s, dir),
-          Seq(col("source")), col("lang"))
-        .select(col("source"), col("n_cats"), col("entropy"))
-        .orderBy(col("source"))
-    }),
-
-    // Mixture-drift monitor: KL divergence of each source's language mix
-    // against the corpus blend. One corpus hash agg to joint counts; the
-    // divergence math runs on the compact count table (marginals broadcast).
-    "mixture_kl" -> ((s, dir) => {
-      Analytics.klDivergence(documents(s, dir), Seq(col("source")), col("lang"))
-        .select(col("source"), col("n_rows"), col("n_cats"), col("kl"))
-        .orderBy(col("source"))
-    }),
-
-    // Independence census: per-source Pearson chi-square contribution of
-    // the lang×source table (textbook form incl. unobserved cells, which
-    // are synthesised by crossing the tiny marginal tables).
-    "mixture_chi2" -> ((s, dir) => {
-      Analytics.chiSquare(documents(s, dir), col("source"), col("lang"))
-        .select(col("row_cat").as("source"), col("n_rows"), col("n_cells"), col("chi2"))
-        .orderBy(col("source"))
-    }),
-
-    // OHLC downsample: per-user daily bars (open/close = min_by/max_by row
-    // selections under a total order, no float arithmetic; sums in exact
-    // micro-units). ONE map-side-combined hash agg — no sort anywhere.
-    "events_ohlc" -> ((s, dir) => {
-      Timeseries.resampleOhlc(events(s, dir), col("user_id"), col("ts"),
-          Seq(unix_micros(col("ts")), col("event_id")), col("value"), 86400L)
-        .select(col("__k").as("user_id"), col("bucket_s"), col("open"),
-          col("high"), col("low"), col("close"), col("n_events"), col("sum_u"))
-        .orderBy(col("user_id"), col("bucket_s"))
-    }),
-
-    // Scale path of q_winsorize: GK-sketch boundaries (map-side partial
-    // merge, no multiset, no sort) + the identical clamp. Rows-only —
-    // boundaries are sketch-dependent; invariants spec'd, exact form is
-    // the oracle anchor.
-    "q_winsorize_scale" -> ((s, dir) => {
-      Analytics.winsorizedStatsApprox(events(s, dir), Seq(col("event_type")),
-          col("value"), pLo = 5, pHi = 95)
-        .select(col("event_type"), col("n_rows"), col("lo"), col("hi"),
-          col("n_clipped_lo"), col("n_clipped_hi"), col("sum_u"))
-        .orderBy(col("event_type"))
-    }),
-
-    // Semi-structured VARIANT path (Spark 4): nested JSON built in-plan,
-    // parsed ONCE to the binary VARIANT encoding, then typed path
-    // extraction — the modern engine shape for schema-on-read columns
-    // (parse once, extract many, no per-path re-parse like
-    // get_json_object). Oracle replays the same paths over DuckDB JSON.
-    "q_json_variant" -> ((s, dir) => {
-      val js = concat(lit("{\"doc\": "), col("doc_id"),
-        lit(", \"meta\": {\"lang\": \""), col("lang"),
-        lit("\", \"n\": "), col("n_chars"),
-        lit("}, \"tags\": [\""), col("source"),
-        lit("\", \"t"), pmod(col("doc_id"), lit(5)),
-        lit("\"]}"))
-      documents(s, dir).withColumn("v", parse_json(js))
-        .select(
-          variant_get(col("v"), "$.meta.lang", "string").as("vlang"),
-          variant_get(col("v"), "$.tags[1]", "string").as("tag"),
-          variant_get(col("v"), "$.meta.n", "bigint").as("n"))
-        .groupBy(col("vlang"), col("tag"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n")).as("sum_n"))
-        .orderBy(col("vlang"), col("tag"))
-    }),
-
-    // Bollinger-band breach census: rows leaving the rolling mean ± 2σ
-    // band of the trailing 20 observations — the squared cross-multiplied
-    // form keeps EVERYTHING integer (no σ, no sqrt, no division), so the
-    // census is bit-exact cross-engine. One per-key window pass + hash agg.
-    "events_bollinger" -> ((s, dir) => {
-      Analytics.bollingerCensus(events(s, dir), "user_id",
-          Seq(unix_micros(col("ts")), col("event_id")), col("value"),
-          frameRows = 20, k = 2)
-        .select(col("user_id"), col("n_eval"), col("n_breaches"), col("first_breach"))
-        .orderBy(col("user_id"))
-    }),
-
-    // Robust rolling-outlier census — the median/MAD twin of
-    // events_bollinger: a spike inside the frame shifts a mean/σ band
-    // enough to mask the NEXT anomaly but barely moves the median/MAD.
-    // Odd frame → lower median IS the median; median, deviations, and MAD
-    // are exact micro-unit integers and |v−med| > k·MAD never touches a
-    // float. One frame-bounded window pass + one hash agg.
-    "events_rolling_median" -> ((s, dir) => {
-      Analytics.rollingMadCensus(events(s, dir), "user_id",
-          Seq(unix_micros(col("ts")), col("event_id")), col("value"),
-          frameRows = 7, k = 3)
-        .select(col("user_id"), col("n_eval"), col("n_outliers"), col("first_outlier"))
-        .orderBy(col("user_id"))
-    }),
-
-    // Time-weighted average per user: each reading holds until the next
-    // (step-function integral / elapsed time) — the irregular-sampling
-    // mean a plain AVG gets wrong on bursty streams. Micro-units ×
-    // whole-ms durations sum as DECIMAL(38,0); one lead window pass + one
-    // hash agg, final division is the family's floor-rounding.
-    "events_twap" -> ((s, dir) => {
-      Timeseries.timeWeightedAvg(events(s, dir), col("user_id"),
-          unix_micros(col("ts")),
-          Seq(unix_micros(col("ts")), col("event_id")), col("value"))
-        .select(col("__k").as("user_id"), col("n_segments"), col("dur_ms"),
-          col("twavg"))
-        .orderBy(col("user_id"))
-    }),
-
-    // Hour-of-day seasonal profile per event type (ratio-to-overall
-    // decomposition): phase mean ÷ type mean, cross-multiplied into exact
-    // DECIMAL(38,0) products. One corpus hash agg → |types·24| rows; the
-    // per-type totals window runs over THAT bounded table only.
-    "events_seasonal" -> ((s, dir) => {
-      Timeseries.seasonalIndex(events(s, dir), col("event_type"),
-          hour(col("ts")).cast("long"), col("value"))
-        .select(col("__k").as("event_type"), col("__p").as("hr"), col("n"),
-          col("idx"))
-        .orderBy(col("event_type"), col("hr"))
-    }),
-
-    // Distinct-user overlap across half-years from two persisted THETA
-    // set states — |A|, |B|, |A∩B|, |A∪B|, |A\B| per event type with NO
-    // rescan of either half (theta sketches close under union/
-    // intersection/difference, unlike HLL's union-only). Rows-tier: the
-    // estimates are sketch-family-dependent; IncrementalSuite pins
-    // exactness below sketch capacity and the set-algebra identities.
-    "events_user_overlap" -> ((s, dir) => {
-      val e = events(s, dir)
-      val cut = lit("2024-01-16").cast("timestamp") // events span Jan 2024
-      val keys = Seq(col("event_type"))
-      val a = Incremental.setState(e.filter(col("ts") < cut), keys, col("user_id"))
-      val b = Incremental.setState(e.filter(col("ts") >= cut), keys, col("user_id"))
-      Incremental.setOverlap(Seq("event_type"), a, b)
-        .orderBy(col("event_type"))
-    }),
-
-    // The SAME theta set algebra in its EXACT regime: below 2^lgK retained
-    // hashes a theta sketch stores EVERY distinct hash (theta = 1), so
-    // estimate == exact distinct count and union/intersection/difference
-    // are exact set operations — which hands the whole persisted-state
-    // serving path (sketch agg, intersection, AnotB, union, estimate) a
-    // DuckDB set-algebra oracle. The third generated-oracle conversion
-    // after BPE and Misra-Gries. The premise is ENFORCED in the plan: an
-    // assert on the true distinct-user count raises loudly if a corpus
-    // ever outgrows the exact range, instead of failing the gate with an
-    // estimate-vs-exact diff.
-    "events_user_overlap_exact" -> ((s, dir) => {
-      val e = events(s, dir)
-      val cut = lit("2024-01-16").cast("timestamp")
-      val keys = Seq(col("event_type"))
-      val guard = e.agg(countDistinct(col("user_id")).as("__nd"))
-      val a = Incremental.setState(e.filter(col("ts") < cut), keys, col("user_id"))
-      val b = Incremental.setState(e.filter(col("ts") >= cut), keys, col("user_id"))
-      Guards.inPlanAssert(
-          Incremental.setOverlap(Seq("event_type"), a, b),
-          guard, col("__nd") <= 4096,
-          "events_user_overlap_exact: distinct users exceed the theta " +
-            "exact range (2^12 retained hashes) — estimates would diverge from " +
-            "the set oracle; use events_user_overlap (sketch regime)")
-        .orderBy(col("event_type"))
-    }),
-
-    // The KLL quantile state in its EXACT regime: while a group's count
-    // stays ≤ k the sketch never compacts — no random coins, every item
-    // retained — so merged-state quantiles ARE order statistics, and the
-    // DataSketches INCLUSIVE rank rule (smallest item whose rank/n ≥ p)
-    // coincides with DuckDB's quantile_disc (probed: identical at n=4/5/8
-    // and through the merge path). That hands the whole maintenance path
-    // (agg → serialize → sorted pairwise merge fold → quantile eval) a
-    // SQL oracle — the fourth generated-oracle conversion after BPE,
-    // Misra-Gries, and theta. Probabilities are binary-exact (1/4, 1/2,
-    // 3/4, 7/8) so the ceil(p·n) boundary can't flip on float rounding in
-    // either engine; value is floored to micro-units in BOTH engines
-    // (DuckDB's double→BIGINT cast rounds where Spark's truncates — floor
-    // first makes the quantized longs identical). The premise is ENFORCED
-    // in the plan: an assert on the max per-group count raises loudly if
-    // a corpus outgrows the exact range, instead of failing the gate with
-    // a sketch-estimate-vs-exact diff.
-    "events_quantiles_exact" -> ((s, dir) => {
-      val e = events(s, dir)
-      val cut = lit("2024-01-16").cast("timestamp")
-      val k = 32768
-      val v = floor(col("value") * lit(1000000.0d)).cast("long")
-      val keys = Seq(col("event_type"))
-      val guard = e.groupBy(col("event_type")).count()
-        .agg(max(col("count")).as("__mx"))
-      val a = Incremental.quantileState(e.filter(col("ts") < cut), keys, v, k)
-      val b = Incremental.quantileState(e.filter(col("ts") >= cut), keys, v, k)
-      val m = Incremental.mergeQuantileStates(Seq("event_type"), a, b)
-      Guards.inPlanAssert(
-          Incremental.finishQuantiles(m, Seq("event_type"),
-            Seq(0.25, 0.5, 0.75, 0.875)),
-          guard, col("__mx") <= k,
-          "events_quantiles_exact: a group outgrew the KLL exact range " +
-            s"(k=$k retained items) — compaction would turn quantiles into " +
-            "sketch estimates; raise k or use the rank-error spec tier")
-        .orderBy(col("event_type"))
-    }),
-
-    // Snapshot diff audit: synthetic "tomorrow" snapshot (every 97th doc
-    // deleted, every 41st revised, every 89th re-added under a new id)
-    // diffed against today's by md5 fingerprint — one full outer join
-    // carrying (id, hash), bodies never shuffle. Census per change kind.
-    "corpus_diff" -> ((s, dir) => {
-      val a = documents(s, dir)
-      val b = a.filter(pmod(col("doc_id"), lit(97)) =!= 0)
-        .withColumn("text",
-          when(pmod(col("doc_id"), lit(41)) === 0, concat(col("text"), lit(" rev2")))
-            .otherwise(col("text")))
-        .unionByName(
-          a.filter(pmod(col("doc_id"), lit(89)) === 0)
-            .withColumn("doc_id", col("doc_id") + 1000000L))
-      Profile.snapshotDiff(a, b, "doc_id", "text")
-        .groupBy(col("change"))
-        .agg(count(lit(1)).as("n"), min(col("id")).as("first_id"))
-        .orderBy(col("change"))
-    }),
-
-    // CUSUM changepoint census per user (Page 1954): mean-centered
-    // cumulative deviation in the n-scaled integer form (no division, no
-    // float anywhere), crossings flagged against a 300-unit excursion
-    // budget. One per-key window pass + one hash agg.
-    "events_cusum" -> ((s, dir) => {
-      Analytics.cusumCensus(events(s, dir), col("user_id"),
-          Seq(unix_micros(col("ts")), col("event_id")), col("value"),
-          thresholdUnits = 300.0)
-        .select(col("__k").as("user_id"), col("n_events"), col("n_crossings"),
-          col("max_dev_u"), col("first_cross"))
-        .orderBy(col("user_id"))
-    }),
-
-    // Declarative data-quality expectations over lineitem: range / domain /
-    // uniqueness checks fold into ONE aggregate over ONE scan (adding a
-    // check never rescans); the FK check is a broadcast anti-join pass.
-    // qty_breaks_at_45 is a deliberately failing check so the report shape
-    // includes real violations.
-    "q_expectations" -> ((s, dir) => {
-      Profile.expectations(
-          lineitem(s, dir),
-          rowChecks = Seq(
-            "qty_in_range" -> col("l_quantity").between(1, 50),
-            "discount_in_range" -> col("l_discount").between(0.0, 0.1),
-            "price_positive" -> (col("l_extendedprice") > 0),
-            "returnflag_valid" -> col("l_returnflag").isin("A", "N", "R"),
-            "qty_breaks_at_45" -> (col("l_quantity") <= 45)),
-          uniqueCols = Seq("l_orderkey"),
-          fkChecks = Seq(("fk_order_exists", orders(s, dir), "l_orderkey", "o_orderkey")))
-        .orderBy(col("check_name"))
-    }),
-
-    // 3-step sequence mining: the most frequent event-type trigram paths
-    // across per-user timelines (the PrefixSpan-lite census behind funnel
-    // discovery). Two leads over one per-user sort, then a hash agg on at
-    // most |types|³ rows; total (n desc, steps) order makes the top-20 cut
-    // deterministic.
-    "events_sequences" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(unix_micros(col("ts")), col("event_id"))
-      events(s, dir)
-        .withColumn("s2", lead(col("event_type"), 1).over(w))
-        .withColumn("s3", lead(col("event_type"), 2).over(w))
-        .filter(col("s3").isNotNull)
-        .groupBy(col("event_type").as("step1"), col("s2").as("step2"),
-          col("s3").as("step3"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("step1"), col("step2"), col("step3"))
-        .limit(20)
-    }),
-
-    // Exact triangle census over the co-ordered-parts graph of URGENT
-    // orders (parts sharing an order are adjacent) — degree-ordered
-    // orientation bounds wedge fanout by out-degree ≤ O(√E), the trick
-    // that keeps hub vertices from melting the join at scale. Exact
-    // integer counts, fully oracle-able. One priority class keeps the
-    // co-occurrence graph's density (wedge count grows ~quadratically in
-    // mean degree) at census scale; the operator itself is density-agnostic.
-    "graph_triangles" -> ((s, dir) => {
-      val urgent = orders(s, dir)
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_orderkey"))
-      val li = lineitem(s, dir).select(col("l_orderkey"), col("l_partkey"))
-        .join(urgent, col("l_orderkey") === col("o_orderkey"))
-      val e = li.as("a").join(li.as("b"),
-          col("a.l_orderkey") === col("b.l_orderkey") &&
-            col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
-      Graph.triangleCount(e)
-    }),
-
-    // Full outer join — the reconciliation shape: high-balance customers
-    // vs per-customer order activity, censused by match side. Money folds
-    // to exact integer cents before any sum.
-    "q_outer_join" -> ((s, dir) => {
-      val hi = customer(s, dir).filter(col("c_acctbal") > 5000)
-        .select(col("c_custkey"))
-      val oc = orders(s, dir).groupBy(col("o_custkey"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(round(col("o_totalprice") * 100, 0).cast("long")).as("cents"))
-      hi.join(oc, col("c_custkey") === col("o_custkey"), "full_outer")
-        .groupBy(
-          when(col("c_custkey").isNull, lit("order_only"))
-            .when(col("o_custkey").isNull, lit("cust_only"))
-            .otherwise(lit("both")).as("side"))
-        .agg(count(lit(1)).as("n"),
-          sum(coalesce(col("n_orders"), lit(0L))).as("total_orders"),
-          sum(coalesce(col("cents"), lit(0L))).as("total_cents"))
-        .orderBy(col("side"))
-    }),
-
-    // Incremental aggregate maintenance — the daily-ingest shape: fold a
-    // delta batch's partial-aggregate state into the historical state
-    // instead of re-scanning the corpus. Here the 1999+ orders arrive as
-    // the delta against the pre-1999 base; merged state must equal the
-    // full recompute EXACTLY (integer cents, mergeable count/sum/min/max),
-    // which is precisely what the oracle's one-shot GROUP BY checks. At
-    // 100 TB the merge step scans |groups| rows + the delta — never the
-    // base corpus. (The state also carries a mergeable HLL sketch for
-    // distinct customers; dropped here so the query stays oracle-exact —
-    // Catalyst prunes the sketch agg away — and spec-checked instead.)
-    "agg_incremental" -> ((s, dir) => {
-      val o = orders(s, dir).select(
-        col("o_orderpriority"), col("o_orderstatus"),
-        col("o_orderdate"), col("o_custkey"),
-        round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
-      val cutoff = lit("1999-01-01").cast("timestamp")
-      val keys = Seq(col("o_orderpriority"), col("o_orderstatus"))
-      val keyNames = Seq("o_orderpriority", "o_orderstatus")
-      val base = Incremental.state(
-        o.filter(col("o_orderdate") < cutoff), keys, col("cents"), col("o_custkey"))
-      val delta = Incremental.state(
-        o.filter(col("o_orderdate") >= cutoff), keys, col("cents"), col("o_custkey"))
-      Incremental.finish(Incremental.merge(keyNames, base, delta), keyNames)
-        .drop("n_distinct_approx")
-        .orderBy(col("o_orderpriority"), col("o_orderstatus"))
-    }),
-
-    // Incremental TOP-K maintenance: per-priority best-5 orders by price,
-    // maintained as a mergeable k-bounded state — top-k under the total
-    // order (score desc, id asc) is a monoid, so base ∪ delta folds with
-    // NO approximation and the daily merge re-ranks |groups|·k state rows,
-    // never the corpus. Oracle = DuckDB row_number over the full table:
-    // merged state ≡ one-shot recompute, bit-exact (cents ride a double
-    // losslessly — far below 2^53).
-    "agg_incremental_topk" -> ((s, dir) => {
-      val o = orders(s, dir).select(
-        col("o_orderpriority"), col("o_orderkey"), col("o_orderdate"),
-        round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
-      val cutoff = lit("1996-01-01").cast("timestamp")
-      val keys = Seq(col("o_orderpriority"))
-      val keyNames = Seq("o_orderpriority")
-      def stTop(df: DataFrame) = Incremental.topKState(
-        df, keys, col("cents").cast("double"), col("o_orderkey"), k = 5)
-      val base = stTop(o.filter(col("o_orderdate") < cutoff))
-      val delta = stTop(o.filter(col("o_orderdate") >= cutoff))
-      Incremental.finishTopK(
-          Incremental.mergeTopK(keyNames, 5, base, delta), keyNames)
-        .select(col("o_orderpriority"), col("rank").cast("long").as("rank"),
-          col("id").as("o_orderkey"), col("score").cast("long").as("cents"))
-        .orderBy(col("o_orderpriority"), col("rank"))
-    }),
-
-    // Record linkage: every deterministically-perturbed customer name
-    // (substitute/delete/insert one char in the digit zone) finds its best
-    // clean match via q-gram blocking (frequency-capped stop-grams — the
-    // skew guard) + levenshtein verify on distinct candidates + argmin
-    // resolve. No all-pairs product; exchanges keyed on gram / pair.
-    "linkage_blocked" -> ((s, dir) => {
-      val cust = customer(s, dir)
-      val clean = cust.select(col("c_custkey"), col("c_name"))
-      val nameL = lower(col("c_name"))
-      val pos = lit(10) + pmod(col("c_custkey"), lit(9))
-      val m3 = pmod(col("c_custkey"), lit(3))
-      val dirtyName = when(m3 === 0,
-          concat(nameL.substr(lit(1), pos - 1), lit("x"), nameL.substr(pos + 1, lit(100))))
-        .when(m3 === 1,
-          concat(nameL.substr(lit(1), pos - 1), nameL.substr(pos + 1, lit(100))))
-        .otherwise(
-          concat(nameL.substr(lit(1), pos - 1), lit("z"), nameL.substr(pos, lit(100))))
-      val dirty = cust.select(col("c_custkey").as("d_id"), dirtyName.as("d_name"))
-      Linkage.bestMatch(
-          dirty, col("d_id"), col("d_name"),
-          clean, col("c_custkey"), col("c_name"))
-        .orderBy(col("left_id"))
-    }),
-
-    // Record linkage, Jaro-Winkler verifier: same q-gram BLOCK step and
-    // perturbed names as linkage_blocked, but verify/resolve by the
-    // native graft_jaro_winkler expression (prefix-weighted typo
-    // similarity, argmax per dirty record) — bit-compatible with DuckDB's
-    // jaro_winkler_similarity, so the whole block→verify→resolve pipe is
-    // hash-checked cross-engine. Rounded sim (6dp) drives the argmax
-    // ordering on BOTH engines: resolve stays stable even against an
-    // implementation differing in the last float bits.
-    "linkage_jw" -> ((s, dir) => {
-      val cust = customer(s, dir)
-      val clean = cust.select(col("c_custkey"), col("c_name"))
-      val nameL = lower(col("c_name"))
-      val pos = lit(10) + pmod(col("c_custkey"), lit(9))
-      val m3 = pmod(col("c_custkey"), lit(3))
-      val dirtyName = when(m3 === 0,
-          concat(nameL.substr(lit(1), pos - 1), lit("x"), nameL.substr(pos + 1, lit(100))))
-        .when(m3 === 1,
-          concat(nameL.substr(lit(1), pos - 1), nameL.substr(pos + 1, lit(100))))
-        .otherwise(
-          concat(nameL.substr(lit(1), pos - 1), lit("z"), nameL.substr(pos, lit(100))))
-      val dirty = cust.select(col("c_custkey").as("d_id"), dirtyName.as("d_name"))
-      Linkage.bestMatchJw(
-          dirty, col("d_id"), col("d_name"),
-          clean, col("c_custkey"), col("c_name"), minSim = 0.9)
-        .orderBy(col("left_id"))
-    }),
-
-    // PageRank over the supplier↔customer bipartite trade graph (symmetric
-    // closure of distinct lineitem⋈orders pairs), 3 iterations, damping 85%.
-    // Exact integer fixed-point (rank = BIGINT e12): integer sums are
-    // partition-order-free, so the distributed run equals the oracle's
-    // unrolled single-threaded recurrence bit-for-bit — float PageRank
-    // can't be cross-checked at all. Per iter: one edges⋈ranks shuffle +
-    // one dst hash agg; scalar tables broadcast.
-    "graph_pagerank" -> ((s, dir) => {
-      // symmetric closure via explode (r21): both directions from ONE
-      // execution of the lineitem⋈orders subtree (the dupClusters edge
-      // trick) — the former union-of-two-projections shape re-ran the
-      // broadcast join per branch and paid a pre-union distinct exchange
-      // that Graph.Prepared's own dedup makes redundant.
-      // LONG-coded vertices (r22): the rank recurrence never reads the
-      // id value, so the coded run's per-vertex ranks are the string
-      // run's bit-for-bit; ids decode at output (tradeVertexStr).
-      val e0 = lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey"))
-        .join(orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(supplierVertex(col("l_suppkey")).as("src"),
-          customerVertex(col("o_custkey")).as("dst"))
-      val sym = e0.select(explode(array(
-          struct(col("src"), col("dst")),
-          struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      Graph.pageRank(sym, iters = 3)
-        .select(tradeVertexStr(col("vertex")).as("vertex"), col("rank_e12"))
-        .orderBy(col("vertex"))
-    }),
-
-    // Multi-source BFS over the same trade graph: exact hop distance from
-    // a decile supplier cohort (s_suppkey % 10 = 0 — SF-stable, non-empty
-    // at every scale factor), capped at 3 hops — the blast-radius /
-    // influence-frontier query (who does a recall at these suppliers
-    // touch, and how directly?). Frontier iteration: each round joins only
-    // the newly-reached frontier against the persisted edge table, never
-    // the full reached set; integer distances make the distributed search
-    // equal DuckDB's recursive-CTE unrolling bit-for-bit.
-    "graph_reach" -> ((s, dir) => {
-      // symmetric closure via explode — single join execution, pre-union
-      // distinct dropped (shortestHops dedups); see graph_pagerank.
-      // LONG-coded vertices (r22): hop distances are id-value-free, so
-      // the coded BFS labels every vertex identically; decode at output.
-      val e0 = lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey"))
-        .join(orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(supplierVertex(col("l_suppkey")).as("src"),
-          customerVertex(col("o_custkey")).as("dst"))
-      val sym = e0.select(explode(array(
-          struct(col("src"), col("dst")),
-          struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      val seeds = supplier(s, dir)
-        .filter(pmod(col("s_suppkey"), lit(10)) === 0)
-        .select(supplierVertex(col("s_suppkey")).as("vertex"))
-      Graph.shortestHops(sym, seeds, maxHops = 3)
-        .select(tradeVertexStr(col("vertex")).as("vertex"), col("dist"))
-        .orderBy(col("vertex"))
-    }),
-
-    // Weighted bounded-hop SSSP over the trade graph: cheapest route (in
-    // lineitem price cents, min per supplier↔customer pair) from the
-    // decile supplier cohort within 3 edges — "at what cost", where
-    // graph_reach answers "how directly". Frontier-restricted Bellman-Ford
-    // (round r relaxes only vertices improved in r−1); after maxHops
-    // rounds the labels are exactly min-cost-over-≤3-edge-paths, a total
-    // contract the unrolled-CTE oracle reproduces bit-for-bit in integers.
-    "graph_sssp" -> ((s, dir) => {
-      // LONG-coded vertices (r22): min-cost labels are id-value-free —
-      // weights and the relaxation order are untouched; decode at output.
-      val e0 = lineitem(s, dir)
-        .join(orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(supplierVertex(col("l_suppkey")).as("src"),
-          customerVertex(col("o_custkey")).as("dst"),
-          round(col("l_extendedprice") * 100, 0).cast("long").as("w"))
-      // symmetric closure via explode — single join execution (see
-      // graph_pagerank); ssspBounded's min-agg collapses parallel edges
-      val sym = e0.select(explode(array(
-          struct(col("src"), col("dst"), col("w")),
-          struct(col("dst").as("src"), col("src").as("dst"), col("w")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"), col("e.w").as("w"))
-      val seeds = supplier(s, dir)
-        .filter(pmod(col("s_suppkey"), lit(10)) === 0)
-        .select(supplierVertex(col("s_suppkey")).as("vertex"))
-      Graph.ssspBounded(sym, seeds, maxHops = 3)
-        .select(tradeVertexStr(col("vertex")).as("vertex"), col("dist"))
-        .orderBy(col("vertex"))
-    }),
-
-    // k-core (k=4) of the high-quantity trade graph (l_quantity >= 45
-    // sparsifies enough that peeling bites): the dense-cohesion extractor.
-    // Contract is "the graph after 4 peel rounds" — identical to the
-    // oracle's unrolled rounds whether or not the fixpoint arrived (the
-    // spec pins multi-round convergence on handmade graphs; this data
-    // converges in 1–2).
-    "graph_kcore" -> ((s, dir) => {
-      // LONG-coded vertices (r22): kCore canonicalizes edges with least/
-      // greatest purely to DEDUP them — the undirected edge SET, hence
-      // every degree and every peel round, is identical under any
-      // injective recoding; decode at output.
-      val e = lineitem(s, dir).filter(col("l_quantity") >= 45)
-        .join(orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(customerVertex(col("o_custkey")).as("src"),
-          supplierVertex(col("l_suppkey")).as("dst"))
-      Graph.kCore(e, k = 4, maxRounds = 4)
-        .select(tradeVertexStr(col("vertex")).as("vertex"), col("degree"))
-        .orderBy(col("vertex"))
-    }),
-
-    // Connected components (min-label fixpoint / size-gated union-find —
-    // one engine with dupClusters) over a deterministic chain+bridge graph
-    // on the customer keys: decade chains (c—c+1 within each run of 10)
-    // bridged at c%100=55, so components have known bounded diameter and
-    // the DuckDB transitive-closure oracle stays linear. Component id =
-    // min vertex, bit-exact cross-engine.
-    "graph_components" -> ((s, dir) => {
-      val v = customer(s, dir).select(col("c_custkey").as("id"))
-      val e0 = v.filter(pmod(col("id"), lit(10)) =!= 0)
-        .select(col("id").as("src"), (col("id") + 1).as("dst"))
-        .unionByName(v.filter(pmod(col("id"), lit(100)) === 55)
-          .select(col("id").as("src"), (col("id") + 10).as("dst")))
-      // keep only edges whose endpoint exists (the last key's +1 doesn't)
-      val edges = e0.join(v.select(col("id").as("dst")), Seq("dst"), "left_semi")
-      Graph.connectedComponents(edges)
-        .orderBy(col("vertex"))
-    }),
-
-    // Winsorized robust stats per event type: nearest-rank [p5, p95]
-    // boundaries from the histogram-compacted integer multiset (exact —
-    // interpolated percentiles of 2dp money are the known cross-engine
-    // trap), boundaries broadcast back for the clamp. No global sort.
-    "q_winsorize" -> ((s, dir) => {
-      Analytics.winsorizedStats(events(s, dir), Seq(col("event_type")),
-          col("value"), pLo = 5, pHi = 95)
-        .select(col("event_type"), col("n_rows"), col("lo"), col("hi"),
-          col("n_clipped_lo"), col("n_clipped_hi"), col("sum_u"))
-        .orderBy(col("event_type"))
-    }),
-
-    // Deterministic mode: most frequent event type per user with a total
-    // tie-break (count desc, value asc) — the engines' native mode() is
-    // arbitrary on ties, useless for a reproducible pipeline. Count agg +
-    // per-key rank; shards by user.
-    "q_mode_per_group" -> ((s, dir) => {
-      Analytics.deterministicMode(events(s, dir),
-          Seq(col("user_id")), col("event_type"))
-        .select(col("user_id"), col("mode_val"), col("mode_n"))
-        .orderBy(col("user_id"))
-    }),
-
-    // One-pass column profiler over the corpus table: per column, rows /
-    // nulls / exact distincts / numeric min-max, all from a single
-    // aggregate over one scan (exact countDistinct = the Expand-planned
-    // oracle anchor; q_profile_scale is the HLL one-pass shape).
-    "q_profile" -> ((s, dir) => {
-      Profile.profile(documents(s, dir),
-          Seq("doc_id", "n_chars", "lang", "source", "text"), exact = true)
-        .orderBy(col("col_name"))
-    }),
-
-    // The 100 TB profiler shape: approx_count_distinct (HLL++ sketch per
-    // column, partial+final agg, NO Expand row multiplication). No SQL
-    // oracle: sketch-estimate-dependent; ±5% vs exact and plan shape
-    // asserted in ScalaTest.
-    "q_profile_scale" -> ((s, dir) => {
-      Profile.profile(documents(s, dir),
-          Seq("doc_id", "n_chars", "lang", "source", "text"), exact = false)
-        .orderBy(col("col_name"))
-    }),
-
-    // The scale path for the equi-depth histogram: bucket BOUNDARIES from
-    // one approx_percentile pass (mergeable sketch, partial+final agg),
-    // broadcast as a single row, and every row range-bucketed against
-    // them map-side — no global sort anywhere; the only shuffle is the
-    // 8-group count agg (no SQL oracle: sketch-boundary-dependent;
-    // balance/partition invariants in ScalaTest).
-    "q_histogram_equidepth_scale" -> ((s, dir) => {
-      val li = lineitem(s, dir).select(col("l_extendedprice").as("x"))
-      val bounds = li.agg(percentile_approx(col("x"),
-        typedlit((1 to 7).map(_ / 8.0)), lit(10000)).as("bs"))
-      li.crossJoin(broadcast(bounds))
-        .withColumn("bucket", (size(filter(col("bs"), b => col("x") >= b)) + 1).cast("long"))
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n_rows"),
-          round(min(col("x")), 2).as("lo"),
-          round(max(col("x")), 2).as("hi"))
-        .orderBy(col("bucket"))
-    }),
-
-    // Robust per-group outlier census: median + MAD (median absolute
-    // deviation), flag rows beyond 3 scaled MADs. Exact integer
-    // arithmetic end to end, same posture as events_gapfill: prices
-    // quantize to BIGINT cents, the group median of an even count is a
-    // half-cent integer (percentile·2), the deviation median a
-    // quarter-cent integer — the emitted doubles come from dividing
-    // identical integers, so no decimal rounding ever runs. Rounding the
-    // medians instead made sf-dependent x.xx5 ties that Spark and DuckDB
-    // break in opposite directions.
-    //
-    // Plan shape: the corpus collapses ONCE to a (flag, value, count)
-    // histogram — a hash agg with map-side combine — and every later pass
-    // (median, MAD, census) runs on that compact multiset via
-    // `percentile(x, p, frequency)`, which expands counts exactly like
-    // raw rows. The fact table is scanned once and its exchange reused
-    // (the three histogram branches canonicalize identically); the old
-    // formulation pushed all N rows through three grouped exact-percentile
-    // sorts. At 100 TB the histogram is |distinct prices|·|flags| rows —
-    // the 3-sigma census over raw values degenerates to approx sketches
-    // only when even THAT is too wide (q_outliers_mad_scale).
-    // NOTE (r22 measured-and-rejected): the VERDICT-proposed window-cumsum
-    // replacement for the two `percentile(x, 0.5, cnt)` aggs — bit-exact
-    // via med·2 = min(v | 2·cum > N−1) + min(v | 2·cum > N) — was
-    // implemented and benched at 3.32–3.74 s vs 2.84 s for this form
-    // (two idle sessions each). Root cause: at sf0.1 the histogram barely
-    // compacts (594,330 of 600,000 rows survive — prices are near-unique),
-    // so the per-flag window pays a 3-task exchange + full sort of the
-    // corpus twice, while percentile's 32-way partial maps only serialize
-    // at the per-flag merge. The percentile agg stays; at a scale where
-    // the value domain saturates (hist ≪ corpus) the window form becomes
-    // attractive again — re-decide with a cluster profile.
-    "q_outliers_mad" -> ((s, dir) => {
-      val hist = lineitem(s, dir)
-        .select(col("l_returnflag").as("flag"),
-          round(col("l_extendedprice") * 100, 0).cast("long").as("xc"))
-        .groupBy(col("flag"), col("xc"))
-        .agg(count(lit(1)).as("cnt"))
-      val med = hist.groupBy(col("flag"))
-        .agg(round(expr("percentile(xc, 0.5d, cnt)") * 2, 0).cast("long").as("med_hc"))
-      val dev = hist.join(broadcast(med), "flag")
-        .withColumn("d_hc", abs(col("xc") * 2 - col("med_hc")))
-      val mad = dev.groupBy(col("flag"))
-        .agg(round(expr("percentile(d_hc, 0.5d, cnt)") * 2, 0).cast("long").as("mad_qc"))
-      dev.join(broadcast(mad), "flag")
-        .groupBy(col("flag"))
-        .agg(sum(col("cnt")).as("n_rows"),
-          (first(col("med_hc")).cast("double") / 200.0).as("med"),
-          (first(col("mad_qc")).cast("double") / 400.0).as("mad"),
-          sum(when(col("d_hc").cast("double") > col("mad_qc") * 3 * 1.4826 / 2, col("cnt"))
-            .otherwise(0L)).as("n_outliers"))
-        .orderBy(col("flag"))
-    }),
-
-    // Scale companion to q_outliers_mad: both median passes run on
-    // percentile_approx (t-digest — one partial+final hash agg, mergeable
-    // across 1000 executors, no per-group sort), mirroring the
-    // q_percentiles → q_approx_percentiles pattern. Same census columns.
-    // No oracle (sketch-dependent); the spec pins it against the exact
-    // census within tolerance.
-    "q_outliers_mad_scale" -> ((s, dir) => {
-      val li = lineitem(s, dir)
-        .select(col("l_returnflag").as("flag"), col("l_extendedprice").as("x"))
-      val med = li.groupBy(col("flag"))
-        .agg(percentile_approx(col("x"), lit(0.5), lit(10000)).as("med"))
-      val mad = li.join(broadcast(med), "flag")
-        .withColumn("d", abs(col("x") - col("med")))
-        .groupBy(col("flag"))
-        .agg(percentile_approx(col("d"), lit(0.5), lit(10000)).as("mad"),
-          first(col("med")).as("med"))
-      li.join(broadcast(mad), "flag")
-        .withColumn("d", abs(col("x") - col("med")))
-        .groupBy(col("flag"))
-        .agg(count(lit(1)).as("n_rows"),
-          round(first(col("med")), 2).as("med"),
-          round(first(col("mad")), 2).as("mad"),
-          sum(when(col("d") > col("mad") * 3 * 1.4826, 1L).otherwise(0L))
-            .as("n_outliers"))
-        .orderBy(col("flag"))
-    }),
-
-    // Skew-safe salted join: event_type has only 5 values — the canonical
-    // hot-key shape. Salting spreads each key over 16 sub-keys; the result
-    // is oracle-identical to the plain join (the whole point).
-    "q_skew_join_salted" -> ((s, dir) => {
-      import s.implicits._
-      val weights = Seq(
-        ("click", 1.0), ("view", 0.5), ("purchase", 3.0),
-        ("error", 2.0), ("signup", 1.5))
-        .toDF("event_type", "weight")
-      Relational.saltedEquiJoin(
-          events(s, dir).select(col("event_id"), col("event_type"), col("value")),
-          weights, "event_type", col("event_id"), nSalts = 16)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          round(sum(col("value") * col("weight")), 2).as("weighted_value"))
-        .orderBy(col("event_type"))
-    }),
-
-    // Latest-wins MERGE: every 10th order arrives again as a CDC update
-    // (price in cents × 11, version 1); winner per key via ONE hash agg
-    // carrying the full payload — no ranking window, no join back. Money
-    // as integer cents end to end (never round a ×1.1 float cross-engine).
-    "q_merge_upsert" -> ((s, dir) => {
-      val o = orders(s, dir).select(col("o_orderkey"), col("o_custkey"),
-        round(col("o_totalprice") * 100, 0).cast("long").as("price_c"))
-      val base = o.withColumn("ver", lit(0L))
-      val upd = o.filter(pmod(col("o_orderkey"), lit(10)) === 0)
-        .withColumn("price_c", col("price_c") * 11)
-        .withColumn("ver", lit(1L))
-      Relational.upsertLatest(base, upd, Seq("o_orderkey"), "ver")
-        .orderBy(col("o_orderkey"))
-    }),
-
-    // TF-IDF top-3 terms per document: tf and df are hash aggs, the corpus
-    // size joins in as a broadcast 1-row agg (never a driver-side count),
-    // ranking is a per-doc window. Rank on the ROUNDED score + token
-    // tie-break so ordering is identical across engines.
-    "text_tfidf" -> ((s, dir) => {
-      val toks = documents(s, dir)
-        .select(col("doc_id"), explode(TextAnalysis.wordTokens(col("text"))).as("token"))
-      val tf = toks.groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf"))
-      // df = rows per token IN tf, as a window — one shuffle of the compact
-      // (doc, token, tf) agg by token, no second corpus explode and no join
-      // back. N comes from the base table without exploding (docs with at
-      // least one token, matching the toks-derived count).
-      val n = documents(s, dir).agg(
-        countDistinct(when(TextAnalysis.tokenCount(col("text")) > 0,
-          col("doc_id"))).as("n_total"))
-      val scored = tf
-        .withColumn("df", count(lit(1)).over(Window.partitionBy(col("token"))))
-        .crossJoin(broadcast(n))
-        .withColumn("tfidf",
-          round(col("tf") * log(col("n_total").cast("double") / col("df")), 4))
-      val w = Window.partitionBy(col("doc_id"))
-        .orderBy(col("tfidf").desc, col("token"))
-      scored.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 3)
-        .select(col("doc_id"), col("token"), col("tfidf"))
-        .orderBy(col("doc_id"), col("tfidf").desc, col("token"))
-    }),
-
-    // Per-document novelty: fraction of a doc's distinct 3-token shingles
-    // with corpus document-frequency 1 — the complement signal of the
-    // MinHash family (shared shingles instead of shared signatures), used
-    // to weight selection toward original prose. Integer ppm end to end;
-    // the gram-keyed join is the exact-substring-dedup shape, never
-    // all-pairs.
-    "text_novelty" -> ((s, dir) => {
-      TextAnalysis.noveltyCensus(documents(s, dir), "doc_id", "text",
-          shingleSize = 3)
-        .orderBy(col("doc_id"))
-    }),
-
-    // Compression-ratio quality screen (zlib-family): DEFLATE size of each
-    // document at fixed level over its raw UTF-8 bytes, as basis points.
-    // Highly compressible = boilerplate/template spam; incompressible =
-    // binary junk. Native codegen'd expression (functions/DeflateSize) —
-    // pure per-row CPU, no shuffle. No SQL oracle (DuckDB has no deflate);
-    // invariant + determinism specs in OperatorsSuite.
-    "text_compression_ratio" -> ((s, dir) => {
-      val raw = octet_length(col("text"))
-      documents(s, dir)
-        .withColumn("raw_bytes", raw.cast("long"))
-        .withColumn("deflate_bytes",
-          graft.functions.DeflateSize.deflateSize(col("text")).cast("long"))
-        .filter(col("raw_bytes") > 0)
-        .withColumn("ratio_bp",
-          (col("deflate_bytes") * 10000L / col("raw_bytes")).cast("long"))
-        .select(col("doc_id"), col("raw_bytes"), col("deflate_bytes"), col("ratio_bp"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Real subword token budgeting: train a BPE merge table on the corpus'
-    // word-frequency head (one explode + hash agg + bounded-heap top-k →
-    // driver merge loop — the sampled-codebook pattern), then count tokens
-    // in one codegen'd pass with the merges riding the expression. Census
-    // per source: whitespace counts vs subword counts. Oracle-tier via the
-    // generated-SQL pattern (langid/EWMA): the TRAINING loop isn't SQL-
-    // expressible, but the trained merge table is a bounded deterministic
-    // artifact — the query captures it and oracleSql (evaluated AFTER the
-    // queries run — Verify's dump order) emits DuckDB SQL that replays
-    // greedy encoding from those literals. Training itself stays pinned by
-    // the AnalyticsSuite textbook/parity specs.
-    "text_bpe_tokens" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      // the synthetic corpus has a ~31-word vocabulary; 40 merges leaves
-      // rare words split into subwords (200 would reconstruct every word
-      // whole and the census would just equal the whitespace counts)
-      val merges = graft.operators.Bpe.train(docs, col("text"),
-        numMerges = 40, maxWords = 20000)
-      bpeTrainedMerges = merges
-      docs.select(col("source"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("ws"),
-          graft.operators.Bpe.tokenCount(col("text"), merges).cast("long").as("bpe"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("ws")).as("ws_tokens"),
-          sum(col("bpe")).as("bpe_tokens"))
-        .orderBy(col("source"))
-    }),
-
-    // Unigram-LM (SentencePiece) tokenizer census — the other half of the
-    // subword family next to text_bpe_tokens: EM-fitted piece table over
-    // the word-frequency head, Viterbi encode on executors. vocabSize 64
-    // over the ~31-word synthetic vocabulary keeps rare words split into
-    // pieces. Oracle: the trained table is the embedded model artifact and
-    // the Viterbi DP is INDEPENDENTLY re-run in SQL (unigramOracleSql).
-    "text_unigram_tokens" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      val pieces = graft.operators.Unigram.train(docs, col("text"),
-        vocabSize = 64, maxWords = 20000)
-      unigramTrainedPieces = pieces
-      unigramMaxWordLen = docs
-        .select(explode(graft.functions.Tokenize.wordTokens(col("text"))).as("w"))
-        .agg(coalesce(max(length(col("w"))), lit(1)).as("m"))
-        .collect()(0).getInt(0).max(1)
-      docs.select(col("source"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("ws"),
-          graft.operators.Unigram.tokenCount(col("text"), pieces).cast("long").as("uni"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("ws")).as("ws_tokens"),
-          sum(col("uni")).as("uni_tokens"))
-        .orderBy(col("source"))
-    }),
-
-    // TPC-H Q5 shape: 6-way join across the full star schema. Fact-fact
-    // joins (orders⋈lineitem, ⋈customer) shuffle on their keys; nation/
-    // region/supplier are dims — Catalyst/AQE picks broadcast at any scale
-    // where they fit, shuffle otherwise.
-    "q_multi_join" -> ((s, dir) => {
-      val o = orders(s, dir)
-        .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("o_orderdate") < lit("1997-01-01").cast("timestamp"))
-      lineitem(s, dir)
-        .join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .join(supplier(s, dir),
-          col("l_suppkey") === col("s_suppkey") && col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(nation(s, dir)), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(region(s, dir).filter(col("r_name") === "ASIA")),
-          col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("n_name"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"),
-          count(lit(1)).as("n_items"))
-        .orderBy(col("n_name"))
-    }),
-
-    // ── LLM-pipeline operators [EXT] ──────────────────────────────────────
-
-    // Term frequency: explode word tokens → hash agg → global top-20.
-    "text_term_freq" -> ((s, dir) => {
-      documents(s, dir)
-        .select(explode(TextAnalysis.wordTokens(col("text"))).as("token"))
-        .groupBy(col("token"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("token"))
-        .limit(20)
-    }),
-
-    // Heavy hitters WITHOUT shuffling the vocabulary: Misra-Gries sketch
-    // (256 counters per partition, merge-order-invariant sum, top 20 at
-    // eval) — the scale companion of text_term_freq's exact hash agg,
-    // whose exchange carries one row per distinct term per partition (no
-    // SQL oracle: summary-dependent estimates; the n/(k+1) undercount
-    // guarantee is asserted against exact counts in ScalaTest).
-    "text_heavy_hitters" -> ((s, dir) => {
-      documents(s, dir)
-        .select(explode(TextAnalysis.wordTokens(col("text"))).as("token"))
-        .agg(FrequentItems.freqItems(col("token"), 256, 20).as("hh"))
-        .select(posexplode(col("hh")).as(Seq("rank0", "e")))
-        .select((col("rank0") + 1).as("rank"),
-          col("e.item").as("token"), col("e.est_count").as("est_count"))
-    }),
-
-    // The SAME native Misra-Gries aggregate in its EXACT regime: MG never
-    // decrements when capacity >= distinct items, so with the fixture
-    // vocabulary far below the 4096 capacity the sketch's counts ARE the
-    // exact term frequencies — which hands the whole native-aggregate
-    // path (update/merge/serialize/eval tie-break) a DuckDB hash gate,
-    // the generated-oracle trick that took BPE to oracle tier. The sketch
-    // regime above stays rows-tier by nature. The premise is ENFORCED in
-    // the plan: an assert_true filter on the distinct-token count raises
-    // loudly if a larger corpus ever outgrows the capacity, instead of
-    // failing the gate with a confusing undercount diff.
-    "text_heavy_hitters_exact" -> ((s, dir) => {
-      val toks = documents(s, dir)
-        .select(explode(TextAnalysis.wordTokens(col("text"))).as("token"))
-      val guard = toks.agg(countDistinct(col("token")).as("__nd"))
-      Guards.inPlanAssert(
-          toks.agg(FrequentItems.freqItems(col("token"), 4096, 4096).as("hh")),
-          guard, col("__nd") <= 4096,
-          "text_heavy_hitters_exact: vocabulary exceeds the exact-regime " +
-            "capacity (4096) — the MG sketch would decrement; raise the capacity " +
-            "or use text_heavy_hitters (sketch regime)")
-        .select(posexplode(col("hh")).as(Seq("rank0", "e")))
-        .select((col("rank0") + 1).cast("long").as("rank"),
-          col("e.item").as("token"), col("e.est_count").as("n"))
-    }),
-
-    // Exact dedup stats per language (text + normalized-fingerprint keys).
-    "dedup_exact" -> ((s, dir) => {
-      documents(s, dir)
-        .groupBy(col("lang"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          countDistinct(col("text")).as("n_unique_text"),
-          countDistinct(TextAnalysis.md5Fingerprint(col("text"))).as("n_unique_fp"))
-        .orderBy(col("lang"))
-    }),
-
-    // Exact dedup keeper set: lowest doc_id per content fingerprint.
-    "dedup_fingerprint_keep" -> ((s, dir) => {
-      documents(s, dir)
-        .groupBy(TextAnalysis.md5Fingerprint(col("text")).as("fp"))
-        .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_copies"))
-        .select(col("doc_id"), col("n_copies"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Keep-BEST dedup: the keeper of each duplicate cluster is the
-    // highest-quality member, not the lowest id. The fixture has no
-    // duplicates, so the query constructs the realistic pair (same page
-    // crawled once clean, once SHOUTING): an uppercased copy under a
-    // NEGATIVE id (-id-1: distinct even for doc 0) clusters with its
-    // original on md5(lower(text)). The
-    // copy's alpha_ratio is 0 ([a-z] only), so quality keeps the original
-    // — while a min-id rule would keep the negative-id copy, proving the
-    // rule is quality, not id. Ties (all-digit docs) fall to min id.
-    "dedup_keep_best" -> ((s, dir) => {
-      val docs = documents(s, dir).select(col("doc_id"), col("text"))
-      val all = docs.unionByName(
-        docs.select((-col("doc_id") - 1).as("doc_id"), upper(col("text")).as("text")))
-      Dedup.keepBestInCluster(TextAnalysis.withQuality(all, col("text")),
-          md5(lower(col("text"))), col("doc_id"), col("alpha_ratio"))
-        .select(col("doc_id"), col("alpha_ratio"), col("keep"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Exact 3-gram Jaccard near-dup pairs within length-bucket blocks
-    // (near-dups have near-equal length; the bucket bounds the quadratic).
-    "dedup_ngram_jaccard" -> ((s, dir) => {
-      val docs = documents(s, dir)
-        .withColumn("len_bucket", floor(col("n_chars") / 100))
-      Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-          Seq(col("len_bucket")), shingleSize = 3, threshold = 0.5)
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
-
-    // Same semantics via PPJoin-style prefix filtering — the heavy-hitter-
-    // safe scale path; shares the exact-Jaccard oracle above.
-    "dedup_ngram_jaccard_prefix" -> ((s, dir) => {
-      val docs = documents(s, dir)
-        .withColumn("len_bucket", floor(col("n_chars") / 100))
-      Dedup.ngramJaccardPairsPrefix(docs, "doc_id", "text",
-          Seq(col("len_bucket")), shingleSize = 3, threshold = 0.5)
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
-
-    // Directional containment C(A→B) = |A∩B|/|A| — the asymmetric near-dup
-    // shape (short doc pasted inside a long one) Jaccard structurally
-    // misses. Blocked on lang, NOT len_bucket: cross-size pairs are the
-    // whole point, so a size-derived blocking key would be wrong here.
-    "dedup_containment" -> ((s, dir) => {
-      Dedup.containmentPairs(documents(s, dir), "doc_id", "text",
-          Seq(col("lang")), shingleSize = 3, threshold = 0.8)
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
-
-    // TF-IDF cosine near-dup pairs — the WEIGHTED measure: rare shared
-    // terms count, ubiquitous ones don't (df = N terms have idf exactly 0
-    // and drop from the index — a result-preserving prune). Blocked on
-    // (lang, source), the same block-size-bounding choice as the Jaccard
-    // family's len_bucket: the inverted self-join costs Σ df² WITHIN
-    // blocks, and this synthetic corpus's ~30-word vocabulary makes every
-    // term a heavy hitter (measured 50 s at sf0.1 lang-only — SCALE.md);
-    // a natural Zipf corpus de-fangs that, and Bayardo 2007 prefix
-    // pruning is the published unblocked path.
-    "dedup_tfidf_cosine" -> ((s, dir) => {
-      Dedup.tfidfCosinePairs(documents(s, dir), "doc_id", "text",
-          Seq(col("lang"), col("source")), threshold = 0.85)
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
-
-    // Same semantics via l2-prefix index pruning (Bayardo 2007 framework,
-    // L2AP/WWW'14 Cauchy–Schwarz prefix bound) — the unblocked path a
-    // natural-Zipf crawl needs (measured sub-linear on the ZipfData
-    // fixture, SCALE.md); shares the exact oracle: pruning must not
-    // change the result set.
-    "dedup_tfidf_cosine_prefix" -> ((s, dir) => {
-      Dedup.tfidfCosinePairsPrefix(documents(s, dir), "doc_id", "text",
-          Seq(col("lang"), col("source")), threshold = 0.85)
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
-
-
-    // Same semantics via asymmetric (SSJoin-style) prefix filtering — probe
-    // side prefixed, container side fully indexed; shares the exact oracle.
-    "dedup_containment_prefix" -> ((s, dir) => {
-      Dedup.containmentPairsPrefix(documents(s, dir), "doc_id", "text",
-          Seq(col("lang")), shingleSize = 3, threshold = 0.8)
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
-
-    // Near-dup clusters over the exact-Jaccard pairs: connected components
-    // (iterative min-label propagation) + keep-one-per-cluster selection —
-    // the dedup decision a training pipeline actually applies. Oracle:
-    // DuckDB recursive-CTE transitive closure over the same pairs.
-    "dedup_clusters" -> ((s, dir) => {
-      val docs = documents(s, dir)
-        .withColumn("len_bucket", floor(col("n_chars") / 100))
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        Seq(col("len_bucket")), shingleSize = 3, threshold = 0.5)
-      Dedup.dupClusters(pairs, "doc_a", "doc_b")
-        .orderBy(col("doc_id"))
-    }),
-
-    // The same clusters-and-keep-one decision fed by MinHash+LSH candidate
-    // pairs instead of the blocked exact-Jaccard index — the composition a
-    // web-scale corpus actually runs. md5-KM hash family (see the
-    // dedup_minhash oracle) so DuckDB recomputes the exact band
-    // buckets → full hash-checked oracle, not rows-only; ScalaTest
-    // additionally proves set-equality with the exact-pair clustering at
-    // J >= 0.5 on unblocked fixtures.
-    "dedup_minhash_clusters" -> ((s, dir) => {
-      val pairs = Dedup.minhashPairs(documents(s, dir), "doc_id", "text",
-        shingleSize = 3, numHashes = 32, bands = 16, threshold = 0.5,
-        md5Family = true)
-      Dedup.dupClusters(pairs, "doc_a", "doc_b")
-        .orderBy(col("doc_id"))
-    }),
-
-    // MinHash+LSH near-dup on the DuckDB-recomputable md5 hash family
-    // (32 hashes, 16 bands of 2): the oracle rebuilds the identical
-    // signatures/band buckets in SQL, making LSH candidate generation
-    // itself hash-checked — same upgrade pattern as similarity_ivf_full_topk.
-    "dedup_minhash" -> ((s, dir) => {
-      Dedup.minhashPairs(documents(s, dir), "doc_id", "text",
-        numHashes = 32, bands = 16, threshold = 0.5, md5Family = true)
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
-
-    // SimHash near-dup candidates at Hamming ≤ 3 on the md5 family (60-bit
-    // fingerprint, 4 blocks of 15): DuckDB recomputes fingerprints, block
-    // buckets, and Hamming distances bit-for-bit → full oracle.
-    "dedup_simhash" -> ((s, dir) => {
-      Dedup.simhashPairsMd5(documents(s, dir), "doc_id", "text", maxHamming = 3)
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
-
-    // Consistent (hash-ordered) stratified sampling: the same 10 docs per
-    // language are chosen on every engine/run — the reproducible-sampling
-    // primitive for training-data pipelines (md5 is the cross-engine
-    // deterministic order; per-stratum rank shards by lang).
-    "sample_consistent" -> ((s, dir) => {
-      val w = Window.partitionBy(col("lang"))
-        .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
-      documents(s, dir)
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 10)
-        .select(col("lang"), col("rk"), col("doc_id"))
-        .orderBy(col("lang"), col("rk"))
-    }),
-
-    // Per-language token statistics.
-    "text_stats" -> ((s, dir) => {
-      val d = documents(s, dir)
-      d.groupBy(col("lang"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          round(avg(col("n_chars")), 2).as("avg_chars"),
-          round(avg(size(TextAnalysis.wsTokens(col("text")))), 4).as("avg_ws_tokens"),
-          round(avg(TextAnalysis.tokenCount(col("text"))), 4).as("avg_word_tokens"))
-        .orderBy(col("lang"))
-    }),
-
-    // Model-based quality filter (the GPT-3 §A.2 / CCNet classifier
-    // step): a hashed-BOW logistic classifier trained (spark.ml L-BFGS —
-    // one treeAggregate per iteration, distributed) to tell the corpus'
-    // real text from a synthetic-noise negative class, then applied as a
-    // NATIVE scan — weights ride one broadcast row, the logit is a
-    // codegen'd aggregate over hash() buckets, no UDF near the corpus.
-    // (No SQL oracle: learned model. Native ≡ trained arithmetic,
-    // held-out separation, and the filter composition are ScalaTest-
-    // asserted; the model artifact is bounded — 2^15 doubles.) Training
-    // runs at QUERY-CONSTRUCTION time — the weights compile into the
-    // plan, exactly the PqCodes pattern, so even a plan-only consumer
-    // (graft.Explain) pays the ~2 s fit; a production loop trains
-    // offline and freezes the artifact.
-    "text_quality_model" -> ((s, dir) => {
-      val clean = documents(s, dir).select(col("doc_id"), col("text"))
-      val noise = clean.select((col("doc_id") + 1000000L).as("doc_id"),
-        QualityModel.syntheticNoise(col("text")).as("text"))
-      val model = QualityModel.trainQualityClassifier(
-        clean.filter(col("doc_id") % 4 === 0),
-        noise.filter(col("doc_id") % 4 === 0),
-        "text", numFeatures = 1 << 15, maxIter = 5)
-      QualityModel.scoreQuality(clean.unionByName(noise), "text", model)
-        .select(col("doc_id"), col("quality_prob"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Per-document quality scores.
-    "text_quality" -> ((s, dir) => {
-      TextAnalysis.withQuality(documents(s, dir), col("text"))
-        .select(
-          col("doc_id"),
-          col("n_tokens"),
-          // already exact 4-decimal via ratio4 — no re-round
-          col("mean_token_len"),
-          col("alpha_ratio"),
-          col("stopword_ratio"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Language-ID heuristic (marker hit-rate argmax; deterministic — the
-    // struct-max tie-break is the same field-order comparison on both
-    // engines, so this is fully oracle-checked).
-    "text_langid" -> ((s, dir) => {
-      documents(s, dir)
-        .withColumn("lang_pred", TextAnalysis.langId(col("text")))
-        .groupBy(col("lang"), col("lang_pred"))
-        .agg(count(lit(1)).as("n_docs"))
-        .orderBy(col("lang"), col("lang_pred"))
-    }),
-
-    // Brute-force cosine top-5 for query vectors (vec_id < 5).
-    "similarity_topk" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding", 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // LSH-bucketed ANN top-5, oracle-tier.
-    "similarity_lsh_topk" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      // md5 table-plane family (Similarity.md5TablePlanes): DuckDB rebuilds
-      // all 4×6 planes, sign buckets, and the 1-bit multiprobe set in SQL →
-      // full hash-checked oracle (was rows-only); recall vs brute force
-      // stays asserted in ScalaTest
-      Similarity.lshTopK(emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding", 5,
-          md5Family = true)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // IVF ANN top-5: per-label centroid codebook, 3 probed cells per query
-    // (no SQL oracle; recall vs brute force asserted in ScalaTest).
-    "similarity_ivf_topk" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      // cells from the SAMPLED Lloyd trainer (driver-side over the 1024
-      // md5-deterministic vectors; assignment is one codegen projection) —
-      // labels are uncorrelated with cosine geometry, trained cells are
-      // the real IVF shape, and the sampled path is the 100 TB one
-      val cells = Similarity.kmeansCells(emb, "vec_id", "embedding",
-        nlist = 16, iters = 2, trainSample = 1024)
-      Similarity.ivfTopK(emb.join(cells, "vec_id"), emb.filter(col("vec_id") < 5),
-          "vec_id", "embedding", "cell", 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // IVF at FULL probe (nprobe = nlist): provably ≡ brute force — every
-    // cell is probed, so every vector is exact-cosine scored and the cell
-    // layer prunes nothing. That identity holds for ANY partition function
-    // (k-means quality only matters when pruning), so the cells here are a
-    // free hash split and the whole query is oracle-checked against the
-    // same DuckDB SQL as similarity_topk — a hard correctness gate on the
-    // ivfTopK probe/score/rank machinery itself.
-    "similarity_ivf_full_topk" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val assigned = emb.withColumn("cell", pmod(col("vec_id"), lit(8)).cast("long"))
-      Similarity.ivfTopK(assigned, emb.filter(col("vec_id") < 5),
-          "vec_id", "embedding", "cell", 5, nprobe = 8)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // PQ/ADC ANN top-5: the corpus compressed to m byte codes per vector,
-    // queries scored through per-query lookup tables — the memory-bounded
-    // scale path where even the float vectors are too big to scan (no SQL
-    // oracle: k-means-dependent; recall vs brute force in ScalaTest).
-    "similarity_pq_topk" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      // m=16/ksub=32 (finer than the m=8 default): the fixture vectors are
-      // near-random, so quantization noise needs the extra resolution for
-      // the recall the spec pins; real embedding corpora cluster and do
-      // fine at m=8/ksub=16
-      // trainSample: the Lloyd loop sees a deterministic 1024-vector
-      // sample (production-quantizer practice — the codebook needs a
-      // representative sample, not the corpus); ENCODING still covers
-      // every vector
-      Similarity.pqTopK(emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
-          dim = 64, k = 5, m = 16, ksub = 32, trainSample = 1024)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // PQ in the EXACT regime: corpus bounded to 200 vectors, ksub = 256 ≥
-    // corpus size, trainSample covers the whole corpus, iters = 0 — the
-    // driver Lloyd's init seeds every sampled sub-vector as its own
-    // centroid verbatim, so encoding is lossless (each sub-vector's code
-    // points at an exact copy of itself), the per-query LUT holds exact
-    // dot(q_sub, x_sub), and ADC ≡ the exact cosine of the unit vectors.
-    // Shares similarity_topk's DuckDB SQL restricted to the same corpus —
-    // a hard hash gate on the PQ encode / LUT / ADC kernels themselves
-    // (same exact-regime upgrade as similarity_ivf_full_topk /
-    // dedup_semantic_exact). Oracle-duty: the bounded corpus is the
-    // point; the scale path is similarity_pq_topk above.
-    "similarity_pq_topk_exact" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      Similarity.pqTopK(emb.filter(col("vec_id") < 200), emb.filter(col("vec_id") < 5),
-          "vec_id", "embedding", dim = 64, k = 5, m = 16, ksub = 256, iters = 0,
-          trainSample = 256)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // IVF-PQ composed ANN: trained coarse cells prune WHICH vectors are
-    // scored, PQ byte codes + per-query LUTs compress WHAT is scanned —
-    // the compressed inverted file a production vector store deploys (no
-    // SQL oracle: k-means-dependent; ≡ PQ at full probe + recall floor
-    // asserted in ScalaTest).
-    "similarity_ivfpq_topk" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      // iters=1: both codebooks converge in one Lloyd round on the fixture
-      // (deterministic seeds); the spec's full-probe ≡ PQ identity and
-      // recall floor run with the production default
-      Similarity.ivfPqTopK(emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
-          dim = 64, k = 5, nlist = 8, nprobe = 3, m = 16, ksub = 32, iters = 1,
-          trainSample = 1024)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // IVF-PQ in the EXACT regime — the COMPOSED path's hash gate: full
-    // probe (nprobe = nlist) makes the IVF layer prune nothing, and the
-    // PQ exact regime (corpus ≤ ksub, trainSample covers it, iters = 0 —
-    // see similarity_pq_topk_exact) makes ADC the exact cosine, so cell
-    // routing + per-cell code scan + LUT scoring must reproduce brute
-    // force bit-for-bit after rounding. Shares the PQ exact twin's DuckDB
-    // SQL (eighth exact-regime oracle conversion). Oracle-duty: the
-    // bounded corpus is the point; the scale path is similarity_ivfpq_topk.
-    "similarity_ivfpq_topk_exact" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      Similarity.ivfPqTopK(emb.filter(col("vec_id") < 200), emb.filter(col("vec_id") < 5),
-          "vec_id", "embedding", dim = 64, k = 5, nlist = 4, nprobe = 4, m = 16,
-          ksub = 256, iters = 0, trainSample = 256)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // k-NN JOIN: every vector against the whole corpus (not just 5 query
-    // rows) — the semdedup / kNN-graph shape. Exact brute force is the
-    // oracle tier; it broadcasts the query side, so corpus-as-queries only
-    // works while the id+vec table fits an executor (~2.5 MB here). The
-    // scale path is the LSH variant below.
-    "similarity_knn_join" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      Similarity.bruteForceTopK(emb, emb, "vec_id", "embedding", 3)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // LSH-bucketed k-NN join — both sides shuffle-partition on (table,
-    // bucket), nothing is broadcast, so corpus×corpus scales horizontally.
-    // md5 table-plane family → full hash-checked oracle (same pattern as
-    // similarity_lsh_topk); recall vs the exact join stays asserted in
-    // ScalaTest.
-    "similarity_knn_join_lsh" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      Similarity.lshTopK(emb, emb, "vec_id", "embedding", 3, md5Family = true)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // The scale path of the kNN join: numPlanes = 0 → AUTO-sized from the
-    // corpus count so bucket occupancy stays ≈ 32 (Similarity.autoPlanes).
-    // The fixed-plane twin above measured 14.8× time at 10× data on the r14
-    // scale curve (fixed 2^6-bucket space → occupancy ∝ n → candidate pairs
-    // ∝ n²); this one pins occupancy and stays linear. At the oracle gate
-    // scales auto resolves to the same 6 planes (2,000 vectors / 32 = 63
-    // buckets), so the DuckDB replay — which recomputes the same
-    // integer-exact plane-count formula from count(*) — hash-checks the
-    // full auto path end to end.
-    "similarity_knn_join_lsh_scale" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      Similarity.lshTopK(emb, emb, "vec_id", "embedding", 3, numPlanes = 0, md5Family = true)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // The rewrite half of substring dedup (Lee et al. 2021 CUT the
-    // duplicated spans): tokens covered by an earlier-owned 8-token run
-    // are removed and the document rebuilt — dedup_exact_substr is the
-    // audit view, this is the cleaned corpus.
-    "dedup_substr_rewrite" -> ((s, dir) => {
-      Dedup.removeSharedSpans(documents(s, dir), "doc_id", "text", k = 8)
-        .orderBy(col("doc_id"))
-    }),
-
-    // SemDeDup (Abbas et al. 2023): k-means cells, in-cell cosine near-dup
-    // groups, keep-one-per-group — the semantic dedup pass that catches
-    // paraphrases text fingerprints miss (no SQL oracle: k-means-dependent;
-    // totality, keeper invariants, in-cell recall = 1, and determinism
-    // asserted in ScalaTest).
-    // nlist <= 0 = AUTO cell sizing (Similarity.autoCells): cells ∝ corpus
-    // size at ~250 expected occupancy, keeping in-cell pair cost linear —
-    // resolves to 8 cells at the sf0.1 bench corpus (2000 vectors), the
-    // same constant the fixed form ran through r14.
-    "dedup_semantic" -> ((s, dir) => {
-      Dedup.semanticDedup(embeddings(s, dir), "vec_id", "embedding",
-          nlist = -1, threshold = 0.3)
-        .orderBy(col("vec_id"))
-    }),
-
-    // SemDeDup's EXACT regime: nlist = 1 puts every vector in one cell, so
-    // the in-cell pair stage IS global all-pairs cosine and the whole
-    // pipeline (assignment, pair join, connected components, keep-one)
-    // becomes DuckDB-expressible — the same full-probe trick as
-    // similarity_ivf_full_topk / select_cluster_balanced_exact. The
-    // k-means-dependent auto-cells form above stays the scale path;
-    // this entry hash-gates the machinery end to end. ORACLE-DUTY
-    // QUADRATIC (86 s at x10 vs the auto-cells twin's 2.3x ratio,
-    // SCALE.md) — same class as embedding_neardup, never the scale form.
-    "dedup_semantic_exact" -> ((s, dir) => {
-      Dedup.semanticDedup(embeddings(s, dir), "vec_id", "embedding",
-          nlist = 1, threshold = 0.3)
-        .orderBy(col("vec_id"))
-    }),
-
-    // Exact embedding near-dup pairs (cosine ≥ 0.3).
-    "embedding_neardup" -> ((s, dir) => {
-      Dedup.embeddingNearDupExact(embeddings(s, dir), "vec_id", "embedding", 0.3)
-        .orderBy(col("vec_a"), col("vec_b"))
-    }),
-
-    // LSH-bucketed embedding near-dup — the scale path for the exact query
-    // above. md5-derived integer hyperplanes (Similarity.md5Planes) let
-    // DuckDB rebuild the planes and sign buckets verbatim → full
-    // hash-checked oracle (sign margins data-measured at ~0.07, eleven
-    // orders above double noise); single-table recall vs the exact pairs
-    // stays asserted in ScalaTest.
-    "embedding_neardup_lsh" -> ((s, dir) => {
-      Dedup.embeddingNearDupLSH(embeddings(s, dir), "vec_id", "embedding", 0.3,
-          Similarity.md5Planes(4, 64))
-        .orderBy(col("vec_a"), col("vec_b"))
-    }),
-
-    // Int8 scalar quantization (SQ8): per-vector symmetric codes — the
-    // 4-8× embedding storage/shuffle cut. Pure per-row expressions, no
-    // shuffle; codes emitted as a joined string (array printing is not
-    // engine-portable), scale at 6 dp. The oracle mirrors Spark's
-    // HALF_UP-away-from-zero round as a sign-split floor(|x|/s + 0.5).
-    "embedding_quantize" -> ((s, dir) => {
-      embeddings(s, dir)
-        .select(col("vec_id"),
-          VectorFunctions.quantizeInt8(col("embedding")).as("qz"))
-        .select(col("vec_id"),
-          round(col("qz.scale"), 6).as("scale6"),
-          array_join(transform(col("qz.q"), _.cast("string")), ",").as("codes"))
-        .orderBy(col("vec_id"))
-    }),
-
-    // Per-label embedding centroids (element-wise mean): posexplode →
-    // hash-agg on (label, pos) — partial+final agg, no collect.
-    "embedding_centroid" -> ((s, dir) => {
-      embeddings(s, dir)
-        .select(col("label"),
-          posexplode(VectorFunctions.toDoubleArray(col("embedding"))).as(Seq("pos0", "v")))
-        .select(col("label"), (col("pos0") + 1).as("pos"), col("v"))
-        .groupBy(col("label"), col("pos"))
-        .agg(round(avg(col("v")), 6).as("centroid_v"))
-        .orderBy(col("label"), col("pos"))
-    }),
-
-    // Gap-based session windows (6h gap), per user.
-    "session_window" -> ((s, dir) => {
-      val ev = events(s, dir).withColumn("ts_s", unix_timestamp(col("ts")))
-      WindowAssign.sessionWindow(ev, col("user_id"), col("ts_s"), col("event_id"), 21600L)
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          min(col("ts_s")).as("session_start_s"),
-          (max(col("ts_s")) - min(col("ts_s"))).as("duration_s"),
-          round(sum(col("value")), 2).as("sum_value"))
-        .orderBy(col("user_id"), col("session_id"))
-    }),
-
-    // Gap-fill + linear interpolation: each user's irregular event values
-    // densified to an hourly grid with forward-fill and between-neighbor
-    // interpolation (user_id < 30 bounds the verify artifact; the operator
-    // is per-key-parallel at any user count).
-    "events_gapfill" -> ((s, dir) => {
-      val ev = events(s, dir).filter(col("user_id") < 30)
-      Timeseries.gapFillInterpolate(ev, col("user_id"),
-          unix_timestamp(col("ts")), col("value"), 3600L)
-        .select(col("key").as("user_id"), col("bucket_s"), col("is_observed"),
-          col("v_ffill"), col("v_interp"))
-        .orderBy(col("user_id"), col("bucket_s"))
-    }),
-
-    // Sliding (hopping) windows: 1h size, 15min slide — every event in 4.
-    "sliding_window" -> ((s, dir) => {
-      val ev = events(s, dir).withColumn("ts_s", unix_timestamp(col("ts")))
-      WindowAssign.slidingWindow(ev, col("ts_s"), 3600L, 900L)
-        .groupBy(col("window_start_s"))
-        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))
-        .orderBy(col("window_start_s"))
-    }),
-
-    // CUBE grouping sets (all four combinations).
-    "q_cube" -> ((s, dir) => {
-      lineitem(s, dir)
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(round(sum(col("l_quantity")), 2).as("sum_qty"), count(lit(1)).as("n"))
-        .select(
-          coalesce(col("l_returnflag"), lit("ALL")).as("returnflag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("linestatus"),
-          col("sum_qty"), col("n"))
-        .orderBy(col("returnflag"), col("linestatus"))
-    }),
-
-    // Explicit GROUPING SETS (asymmetric: not a cube/rollup): totals by
-    // (status, priority), by status alone, and grand total.
-    "q_grouping_sets" -> ((s, dir) => {
-      orders(s, dir)
-        .groupingSets(
-          Seq(Seq(col("o_orderstatus"), col("o_orderpriority")),
-            Seq(col("o_orderstatus")), Seq()),
-          col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_orders"), round(sum(col("o_totalprice")), 2).as("revenue"))
-        .select(
-          coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
-          coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
-          col("n_orders"), col("revenue"))
-        .orderBy(col("status"), col("priority"))
-    }),
-
-    // Exact interpolated percentiles (sort-based agg) per order priority.
-    // ORACLE SHAPE: at 100 TB run q_approx_percentiles (t-digest) instead.
-    // Exact interpolated quartiles, integer-exact across engines: prices
-    // quantize to BIGINT cents; a quantile at f ∈ {¼, ½, ¾} of integers is
-    // an exact multiple of a quarter-cent (a + f·(b−a), f a power-of-two
-    // fraction), so ×4 is an integer and the emitted double divides
-    // identical integers — rounding an interpolated money quantile to 2
-    // decimals is the constructed-tie class q_outliers_mad hit.
-    "q_percentiles" -> ((s, dir) => {
-      def q(f: Double, as: String) =
-        (round(expr(s"percentile(xc, ${f}d)") * 4, 0).cast("long")
-          .cast("double") / 400.0).as(as)
-      orders(s, dir)
-        .select(col("o_orderpriority"),
-          round(col("o_totalprice") * 100, 0).cast("long").as("xc"))
-        .groupBy(col("o_orderpriority"))
-        .agg(q(0.25, "p25"), q(0.5, "p50"), q(0.75, "p75"),
-          count(lit(1)).as("n_orders"))
-        .orderBy(col("o_orderpriority"))
-    }),
-
-    // Scale companion to q_percentiles: t-digest percentile_approx is one
-    // partial+final hash agg (no per-group sort) — the form a 100 TB
-    // pipeline runs. No oracle (sketch-dependent); the spec pins deviation
-    // vs the exact query to <=1%.
-    "q_approx_percentiles" -> ((s, dir) => {
-      orders(s, dir)
-        .groupBy(col("o_orderpriority"))
-        .agg(
-          round(percentile_approx(col("o_totalprice"), lit(0.25), lit(10000)), 2).as("p25"),
-          round(percentile_approx(col("o_totalprice"), lit(0.5), lit(10000)), 2).as("p50"),
-          round(percentile_approx(col("o_totalprice"), lit(0.75), lit(10000)), 2).as("p75"),
-          count(lit(1)).as("n_orders"))
-        .orderBy(col("o_orderpriority"))
-    }),
-
-    // percentile_approx in its EXACT regime: Greenwald-Khanna keeps every
-    // sample while 2·ε·n < 1 (compression can only drop a sample when the
-    // adjacent g/Δ sum stays under 2·ε·n, so with n < accuracy/2 nothing is
-    // ever dropped, through the partial-merge path included) — the serving
-    // quantile is then the plain order statistic at rank ceil(p·n), which
-    // coincides with DuckDB's quantile_disc (probed: identical on uniform,
-    // tied, and price-like data through multi-partition merges). Same
-    // conversion as events_quantiles_exact, giving the whole
-    // ApproximatePercentile path (partial update → merge → query) a SQL
-    // oracle; the sketch-regime twin q_approx_percentiles stays rows-tier.
-    // The premise is ENFORCED in the plan: assert max per-group count stays
-    // within the no-drop bound instead of silently drifting to estimates.
-    "q_approx_percentiles_exact" -> ((s, dir) => {
-      val acc = 131072
-      val o = orders(s, dir)
-      val guard = o.groupBy(col("o_orderpriority")).count()
-        .agg(max(col("count")).as("__mx"))
-      Guards.inPlanAssert(
-          o.groupBy(col("o_orderpriority"))
-            .agg(
-              percentile_approx(col("o_totalprice"), lit(0.25), lit(acc)).as("p25"),
-              percentile_approx(col("o_totalprice"), lit(0.5), lit(acc)).as("p50"),
-              percentile_approx(col("o_totalprice"), lit(0.75), lit(acc)).as("p75"),
-              count(lit(1)).as("n_orders")),
-          // STRICT bound, matching the invariant above: at n == accuracy/2
-          // the insert delta floor(2·ε·n) reaches 1 and exactness would
-          // rest on QuantileSummaries internals, not the documented premise
-          guard, col("__mx") * 2 < acc,
-          "q_approx_percentiles_exact: a group outgrew the GK exact range " +
-            s"(accuracy=$acc, no-drop bound n < accuracy/2) — compression " +
-            "would turn quantiles into estimates; raise accuracy or use " +
-            "q_approx_percentiles (sketch regime)")
-        .orderBy(col("o_orderpriority"))
-    }),
-
-    // Pivot (dynamic columns from event_type values) over per-user activity.
-    "q_pivot" -> ((s, dir) => {
-      events(s, dir)
-        .groupBy(col("user_id"))
-        .pivot("event_type", Seq("click", "view", "purchase", "error"))
-        .agg(round(sum(col("value")), 2))
-        .select(col("user_id"),
-          coalesce(col("click"), lit(0.0)).as("click_value"),
-          coalesce(col("view"), lit(0.0)).as("view_value"),
-          coalesce(col("purchase"), lit(0.0)).as("purchase_value"),
-          coalesce(col("error"), lit(0.0)).as("error_value"))
-        .orderBy(col("user_id"))
-    }),
-
-    // Collection aggregation: distinct set -> sorted -> joined (stable
-    // string form so the oracle hash-compares exactly).
-    "q_collect" -> ((s, dir) => {
-      events(s, dir)
-        .groupBy(col("user_id"))
-        .agg(
-          concat_ws(",", array_sort(collect_set(col("event_type")))).as("event_types"),
-          count(lit(1)).as("n_events"))
-        .orderBy(col("user_id"))
-    }),
-
-    // ── multimodal column plumbing [EXT] ──────────────────────────────────
-    // Synthetic media derived deterministically from documents (the binary
-    // payload is the utf-8 text; metadata from doc_id) — the oracle rebuilds
-    // the same derivation in SQL, so the PLUMBING (explode, integer-math
-    // transforms) is what's being checked.
-
-    // Frame sampling: one row per 1000ms frame tick per video.
-    "multimodal_frames" -> ((s, dir) => {
-      val media = Multimodal.syntheticMedia(documents(s, dir), "doc_id", "text")
-      Multimodal.frameSample(media.filter(col("duration_ms") > 0), 1000L)
-        .groupBy(col("media_id"))
-        .agg(count(lit(1)).as("n_frames"), max(col("frame_ts_ms")).as("last_frame_ms"))
-        .orderBy(col("media_id"))
-    }),
-
-    // Content-defined chunk dedup census over the binary media payloads:
-    // gear-CDC chunks (min 32 / avg 64 / max 256 bytes at this blob scale),
-    // duplicate-chunk mass per media type. No SQL oracle (rolling-hash
-    // chunker); spec-tier: partition/bounds/determinism and the
-    // shift-invariance property fixed-size chunking lacks.
-    "dedup_cdc_chunks" -> ((s, dir) => {
-      val media = Multimodal.syntheticMedia(documents(s, dir), "doc_id", "text")
-      Dedup.cdcChunkTable(media, "media_id", "content", 32, 64, 256)
-        .join(media.select(col("media_id").as("blob_id"), col("media_type")),
-          Seq("blob_id"))
-        .groupBy(col("media_type"))
-        .agg(countDistinct(col("blob_id")).as("n_blobs"),
-          count(lit(1)).as("n_chunks"),
-          countDistinct(col("chunk_hash")).as("n_distinct_chunks"),
-          sum(col("len")).as("chunk_bytes"))
-        .withColumn("dup_ratio", TextAnalysis.ratio4(
-          col("n_chunks") - col("n_distinct_chunks"), col("n_chunks")))
-        .orderBy(col("media_type"))
-    }),
-
-    // CDC chunk census in the EXACT regime: min = avg = max = 1 MiB ≫ any
-    // blob, so the gear loop can never cut (the min-size gate suppresses
-    // mask hits, the max-size force never triggers) and every blob is
-    // exactly ONE chunk covering its whole payload — n_chunks = n_blobs,
-    // the FNV-64 chunk hash is injective-on-the-fixture content identity
-    // (distinct chunk hashes ≡ distinct texts), and chunk_bytes is the
-    // plain byte length. The whole chunk-table plumbing — explode, struct
-    // fields, census aggregation, ratio4 — gets a DuckDB hash gate (ninth
-    // exact-regime conversion); the gear BOUNDARY behavior itself stays
-    // spec-tier (shift-invariance / resync specs). Oracle-duty twin of
-    // dedup_cdc_chunks above.
-    "dedup_cdc_chunks_exact" -> ((s, dir) => {
-      val media = Multimodal.syntheticMedia(documents(s, dir), "doc_id", "text")
-      Dedup.cdcChunkTable(media, "media_id", "content", 1 << 20, 1 << 20, 1 << 20)
-        .join(media.select(col("media_id").as("blob_id"), col("media_type")),
-          Seq("blob_id"))
-        .groupBy(col("media_type"))
-        .agg(countDistinct(col("blob_id")).as("n_blobs"),
-          count(lit(1)).as("n_chunks"),
-          countDistinct(col("chunk_hash")).as("n_distinct_chunks"),
-          sum(col("len")).as("chunk_bytes"))
-        .withColumn("dup_ratio", TextAnalysis.ratio4(
-          col("n_chunks") - col("n_distinct_chunks"), col("n_chunks")))
-        .orderBy(col("media_type"))
-    }),
-
-    // Incremental CDC dedup: new blobs vs the corpus chunk store. The new
-    // batch = lightly-edited copies of even-id media (3 prepended bytes —
-    // the file hash changes, the chunk mass doesn't) + odd-id media as
-    // fresh arrivals; the edited copies must drop, the fresh ones stay.
-    // No SQL oracle (rolling-hash chunker); spec-tier.
-    "dedup_incremental_cdc" -> ((s, dir) => {
-      val media = Multimodal.syntheticMedia(documents(s, dir), "doc_id", "text")
-      val corpus = media.filter(pmod(col("media_id"), lit(2)) === 0)
-      val edited = corpus
-        .select((col("media_id") + 1000000L).as("media_id"),
-          concat(lit(Array[Byte](1, 2, 3)), col("content")).as("content"))
-      val fresh = media.filter(pmod(col("media_id"), lit(2)) === 1)
-        .select(col("media_id"), col("content"))
-      // 32-byte average chunks: these payloads are small (200–3000 B), so
-      // coarser chunking would let a 3-byte edit damage a large FRACTION
-      // of a tiny blob's chunks (measured: 64/250 slipped at avg 64 vs
-      // 19/250 at avg 32). The minBlobBytes=256 tier closes most of THAT
-      // residue too: blobs under it re-test at avg-16 fine chunking
-      // against the corpus's own tiny blobs (measured: slips 19 → 5,
-      // fresh false-positives +1 — the floor on fine chunk size is what
-      // keeps common short byte sequences from colliding across
-      // genuinely-different blobs; see the operator's scaladoc)
-      val kept = Dedup.incrementalCdcNew(edited.unionByName(fresh), corpus,
-        "media_id", "content", 16, 32, 128, maxDupRatio = 0.5,
-        minBlobBytes = 256)
-      kept.select(col("media_id")).orderBy(col("media_id"))
-    }),
-
-    // Incremental CDC dedup in the EXACT regime: min = avg = max = 1 MiB ≫
-    // any blob (the dedup_cdc_chunks_exact recipe), so every blob is ONE
-    // whole-payload chunk and incrementalCdcNew degenerates to exact
-    // content-identity incremental dedup — dup ratio is 1 iff the whole
-    // payload already exists in the corpus (> 0.5 → drop), else 0 (keep).
-    // Batch: 3-byte-edited re-uploads of the even-id corpus (share NO
-    // whole-blob chunk → ALL kept; note the fine-chunking production form
-    // above drops them — the regime inverts that decision on purpose,
-    // hash-gating the ARITHMETIC: chunk semi-join, per-blob census, ratio
-    // threshold, anti-join), byte-IDENTICAL re-uploads of every 4th even
-    // blob (ratio 1 → ALL dropped — the drop branch fires at every sf),
-    // and odd-id fresh arrivals (kept unless their text coincides with an
-    // even-id text — 0 such at sf0.01, 4 at sf0.1). The oracle's
-    // edited-kept claim rests on corpus texts never starting with byte
-    // 0x01 (synthetic word text; min length 44+). Eleventh exact-regime
-    // conversion; oracle-duty twin of dedup_incremental_cdc above.
-    "dedup_incremental_cdc_exact" -> ((s, dir) => {
-      val media = Multimodal.syntheticMedia(documents(s, dir), "doc_id", "text")
-      val corpus = media.filter(pmod(col("media_id"), lit(2)) === 0)
-      val edited = corpus
-        .select((col("media_id") + 1000000L).as("media_id"),
-          concat(lit(Array[Byte](1, 2, 3)), col("content")).as("content"))
-      val reup = corpus.filter(pmod(col("media_id"), lit(4)) === 0)
-        .select((col("media_id") + 2000000L).as("media_id"), col("content"))
-      val fresh = media.filter(pmod(col("media_id"), lit(2)) === 1)
-        .select(col("media_id"), col("content"))
-      val kept = Dedup.incrementalCdcNew(
-        edited.unionByName(fresh).unionByName(reup), corpus,
-        "media_id", "content", 1 << 20, 1 << 20, 1 << 20, maxDupRatio = 0.5)
-      kept.select(col("media_id")).orderBy(col("media_id"))
-    }),
-
-    // Resize planning: aspect-preserving fit into a 256px box, integer math.
-    "multimodal_resize" -> ((s, dir) => {
-      val media = Multimodal.syntheticMedia(documents(s, dir), "doc_id", "text")
-      Multimodal.resizePlan(media, 256)
-        .orderBy(col("media_id"))
-    }),
-
-    // Feature extraction through the partition-local batched decoder
-    // (javax.imageio for real image bytes; deterministic byte-stride
-    // fallback for the synthetic text payloads here; mapPartitions — not
-    // SQL-expressible, so no oracle; determinism, batch shape, and real
-    // PNG decode asserted in ScalaTest).
-    "multimodal_features" -> ((s, dir) => {
-      val media = Multimodal.syntheticMedia(documents(s, dir), "doc_id", "text")
-      Multimodal.extractFeatures(media)
-        .groupBy(col("media_type"))
-        .agg(
-          count(lit(1)).as("n_media"),
-          round(avg(element_at(col("features"), 1)), 4).as("avg_f0"),
-          round(avg(element_at(col("features"), 16)), 4).as("avg_f15"))
-        .orderBy(col("media_type"))
-    }),
-
-    // extractFeatures in the EXACT regime (fourteenth conversion —
-    // previously a by-nature rows-tier family): on utf-8 TEXT payloads
-    // every row takes the deterministic byte-stride fallback, and feature
-    // j is (Σ bytes at positions j, j+16, …) % 1000 / 1000 — for a pure
-    // ASCII fixture (asserted: max codepoint 121, byte len = strlen at
-    // every sf) that is ord()-arithmetic DuckDB recomputes exactly. The
-    // float step is inverted before comparison: round(f·1000) recovers
-    // the exact integer stride sum (float32 error ≤ 6e-5 ≪ 0.5), so the
-    // oracle compares pure BIGINTs — no float-tie risk. n_undecoded
-    // additionally pins that NO text payload slips into the image-decode
-    // branch. Oracle-duty twin of multimodal_features above.
-    "multimodal_features_exact" -> ((s, dir) => {
-      val media = Multimodal.syntheticMedia(documents(s, dir), "doc_id", "text")
-      Multimodal.extractFeatures(media)
-        .groupBy(col("media_type"))
-        .agg(count(lit(1)).as("n_media"),
-          sum(when(col("decoded_width").isNull, 1L).otherwise(0L)).as("n_undecoded"),
-          sum(round(element_at(col("features"), 1) * 1000).cast("long")).as("sum_f0"),
-          sum(round(element_at(col("features"), 16) * 1000).cast("long")).as("sum_f15"))
-        .orderBy(col("media_type"))
-    }),
-
-    // Image perceptual-hash near-dup in the EXACT regime: the fixture is
-    // deterministic NOISE BMPs rendered from the md5 chain of each text
-    // (identical texts ⇒ byte-identical images; distinct texts ⇒
-    // independent 72-byte grids, dHash collision ~n²/2⁶⁵ — none here), a
-    // fifth of the docs re-keyed as byte-identical duplicate uploads.
-    // BMP is lossless, so at Hamming 0 the REAL pipeline — BMP encode,
-    // ImageIO decode, 9×8 grid luminance, dHash, pigeonhole banding,
-    // exact verify — must return exactly the identical-TEXT pairs, which
-    // IS SQL: the whole decode+hash+band path gets a DuckDB hash gate
-    // (the lossless-re-encode analogue of the PQ iters=0 trick; twelfth
-    // exact-regime conversion). The near-dup (Hamming > 0) behavior
-    // stays with `image_neardup` below + the JPEG/upscale specs.
-    "image_neardup_exact" -> ((s, dir) => {
-      // repartition BEFORE the per-row codec work: the sf fixtures are a
-      // single dense parquet file → one scan partition, which would pin
-      // the whole render+decode stage to one core; 5k text rows through
-      // one cheap exchange buys 32-way parallel image work (real media
-      // tables arrive multi-file and skip this)
-      val docs = documents(s, dir).select(col("doc_id"), col("text"))
-        .repartition(32)
-      val dupes = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      val media = Multimodal.syntheticImages(docs.unionByName(dupes), "doc_id", "text")
-      Dedup.imageNearDupPairs(media, maxHamming = 0)
-        .orderBy(col("media_a"), col("media_b"))
-    }),
-
-    // Keep-one-per-duplicate-image-cluster — the selection step an image
-    // corpus runs after pair generation, composed from the exact-regime
-    // pairs above (lossless BMP fixture: clusters over Hamming-0 pairs ≡
-    // identical-text groups of size > 1 with min-id representatives — a
-    // plain SQL grouping, so the dupClusters min-label/union-find
-    // machinery gains a hash-checked oracle consumer on an IMAGE pair
-    // list, the dedup_minhash_clusters pattern).
-    "image_neardup_clusters" -> ((s, dir) => {
-      val docs = documents(s, dir).select(col("doc_id"), col("text"))
-      val dupes = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      val media = Multimodal.syntheticImages(docs.unionByName(dupes), "doc_id", "text")
-      val pairs = Dedup.imageNearDupPairs(media, maxHamming = 0)
-      Dedup.dupClusters(pairs, "media_a", "media_b")
-        .orderBy(col("doc_id"))
-    }),
-
-    // Video near-dup in the EXACT regime — the fourth modality on the
-    // same recipe: deterministic 3-frame MJPEG-AVIs whose frame JPEGs
-    // derive from the md5 chain of text‖frame_idx (the JDK JPEG codec is
-    // deterministic for fixed input, so identical texts yield
-    // byte-identical videos and identical per-frame dHashes), a fifth of
-    // the docs re-keyed as byte-identical re-uploads. At Hamming 0 a
-    // video pair's matched_frames is exactly 3 iff the texts are equal
-    // (noise frames make cross-text frame collisions ~n²·3²/2⁶⁴) — SQL.
-    // Gates the RIFF-walk frame extraction, per-frame JPEG decode,
-    // dHash, packed-id banding, and the distinct-frame census
-    // (fifteenth exact-regime conversion).
-    "video_neardup_exact" -> ((s, dir) => {
-      val docs = documents(s, dir).select(col("doc_id"), col("text"))
-        .repartition(32)
-      val dupes = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      val media = Multimodal.syntheticVideos(docs.unionByName(dupes), "doc_id", "text")
-      Dedup.videoNearDupPairs(media, maxHamming = 0, minFrames = 3)
-        .orderBy(col("media_a"), col("media_b"))
-    }),
-
-    // Audio perceptual-hash near-dup in the EXACT regime — the image
-    // recipe on the third modality: deterministic PCM WAVs seeded from
-    // the md5 of each text (WAV is LOSSLESS, so identical texts yield
-    // byte-identical payloads and the encode → javax.sound decode →
-    // 65-segment RMS envelope → difference-hash path is exactly
-    // reproducible), a fifth of the docs re-keyed as byte-identical
-    // re-uploads. Hamming-0 pairs ≡ identical-text pairs — SQL. The
-    // near-dup (μ-law re-encode) behavior stays with audio_neardup
-    // below + the gain/transcode specs.
-    "audio_neardup_exact" -> ((s, dir) => {
-      val docs = documents(s, dir).select(col("doc_id"), col("text"))
-        .repartition(32)
-      val dupes = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      val media = Multimodal.syntheticAudioWav(docs.unionByName(dupes), "doc_id", "text")
-      Dedup.audioNearDupPairs(media, maxHamming = 0)
-        .orderBy(col("media_a"), col("media_b"))
-    }),
-
-    // Audio near-dup, the production shape: PCM WAVs plus REAL μ-law
-    // re-encodes (the JDK's own telephony transcode — same clip, half
-    // the bit depth, different bytes) of half of them, through decode →
-    // envelope hash → banding at Hamming ≤ 10. Census: every re-encode
-    // must link to its original (spec-asserted); link distances stay
-    // small because μ-law quantization noise averages out of segment
-    // RMS. No SQL oracle (the companding curve has no DuckDB form);
-    // exact-regime anchor: audio_neardup_exact gates the identical
-    // pipeline losslessly.
-    "audio_neardup" -> ((s, dir) => {
-      val base = Multimodal.syntheticAudioWav(
-          documents(s, dir).repartition(32), "doc_id", "text")
-        .localCheckpoint(false)
-      val variants = Multimodal.reencodeUlaw(
-          base.filter(pmod(col("media_id"), lit(2)) === 0))
-        .select((col("media_id") + 1000000L).as("media_id"),
-          col("media_type"), col("content"))
-      val pairs = Dedup.audioNearDupPairs(base.unionByName(variants), maxHamming = 10)
-      val isLink = col("media_b") === col("media_a") + 1000000L
-      pairs.agg(
-        count(lit(1)).as("n_pairs"),
-        sum(when(isLink, 1L).otherwise(0L)).as("n_reencode_links"),
-        round(avg(when(isLink, col("hamming"))), 4).as("avg_link_hamming"),
-        max(when(isLink, col("hamming"))).as("max_link_hamming"))
-    }),
-
-    // Keep-one-per-duplicate-audio-cluster — the selection step composed
-    // from the exact-regime WAV pairs (lossless codec: clusters over
-    // Hamming-0 pairs ≡ identical-text groups of size > 1 with min-id
-    // representatives — plain SQL), so dupClusters gains a hash-checked
-    // oracle consumer on an AUDIO pair list (the image_neardup_clusters
-    // pattern on the third modality).
-    "audio_neardup_clusters" -> ((s, dir) => {
-      val docs = documents(s, dir).select(col("doc_id"), col("text"))
-      val dupes = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      val media = Multimodal.syntheticAudioWav(docs.unionByName(dupes), "doc_id", "text")
-      val pairs = Dedup.audioNearDupPairs(media, maxHamming = 0)
-      Dedup.dupClusters(pairs, "media_a", "media_b")
-        .orderBy(col("doc_id"))
-    }),
-
-    // Video near-dup, the production shape — the audio_neardup census on
-    // the fourth modality: smooth 3-frame MJPEG-AVIs plus REAL per-frame
-    // JPEG re-encodes (quality 0.6, container rebuilt — same footage,
-    // different bytes: invisible to content-hash dedup) of half of them,
-    // through the RIFF frame walk → per-frame dHash → packed-id banding.
-    // Census: every re-encode must link to its original on ALL 3 frames
-    // (spec-asserted). Parameters are MEASURED, not guessed (the
-    // image_neardup fixture-density lesson, Prof videodensity at ×3):
-    // Hamming ≤ 10 / minFrames 2 admitted n²-growing cross-text pairs
-    // (12.3k at ×3, 132k at ×10 — smooth-plaid frame hashes land within
-    // 10 bits at ~1e-3 rates); Hamming ≤ 6 + minFrames 3 keeps 7500/7500
-    // re-encode links (all full, with a 2-bit margin: radius 4 loses its
-    // first 5 links) and cuts the cross noise to 45 — 5.3× faster, and
-    // the pair output is link-dominated (linear) again. No SQL oracle
-    // (JPEG DCT has no DuckDB form); exact-regime anchor:
-    // video_neardup_exact gates the identical pipeline losslessly.
-    "video_neardup" -> ((s, dir) => {
-      // lazy stage boundary: the synth feeds TWO consumers (union side
-      // and re-encode input) — without it the 3-frame render runs twice
-      val base = Multimodal.syntheticSmoothVideos(
-          documents(s, dir).repartition(32), "doc_id", "text")
-        .localCheckpoint(false)
-      val variants = Multimodal.reencodeVideo(
-          base.filter(pmod(col("media_id"), lit(2)) === 0), quality = 0.6f)
-        .select((col("media_id") + 1000000L).as("media_id"),
-          col("media_type"), col("content"))
-      val pairs = Dedup.videoNearDupPairs(base.unionByName(variants),
-        maxHamming = 6, minFrames = 3)
-      val isLink = col("media_b") === col("media_a") + 1000000L
-      pairs.agg(
-        count(lit(1)).as("n_pairs"),
-        sum(when(isLink, 1L).otherwise(0L)).as("n_reencode_links"),
-        sum(when(isLink && col("matched_frames") === 3, 1L).otherwise(0L))
-          .as("n_full_links"),
-        min(when(isLink, col("matched_frames"))).as("min_link_frames"))
-    }),
-
-    // Keep-one-per-duplicate-video-cluster — dupClusters over the
-    // exact-regime video pairs (deterministic codec: all-3-frame matches
-    // at Hamming 0 ≡ identical-text pairs), completing the modality row:
-    // pairs → clusters → keep-one, all oracle-tier (the
-    // image_neardup_clusters pattern on the fourth modality).
-    "video_neardup_clusters" -> ((s, dir) => {
-      val docs = documents(s, dir).select(col("doc_id"), col("text"))
-        .repartition(32)
-      val dupes = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      val media = Multimodal.syntheticVideos(docs.unionByName(dupes), "doc_id", "text")
-      val pairs = Dedup.videoNearDupPairs(media, maxHamming = 0, minFrames = 3)
-      Dedup.dupClusters(pairs, "media_a", "media_b")
-        .orderBy(col("doc_id"))
-    }),
-
-    // video_neardup_exact on the ANIMATED-GIF container: the same
-    // deterministic-codec trick (the JDK GIF sequence writer is
-    // deterministic for fixed input, so identical texts yield
-    // byte-identical payloads and identical per-frame dHashes) through
-    // the multi-IMAGE reader decode path — the frame branch the AVI
-    // fixture cannot exercise (RIFF walk vs getNumImages loop). At
-    // Hamming 0 / minFrames 3 pairs ≡ identical-text pairs — SQL.
-    // Completes oracle coverage of BOTH multi-frame decode branches.
-    "video_neardup_gif_exact" -> ((s, dir) => {
-      val docs = documents(s, dir).select(col("doc_id"), col("text"))
-        .repartition(32)
-      val dupes = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      val media = Multimodal.syntheticGifVideos(docs.unionByName(dupes), "doc_id", "text")
-      Dedup.videoNearDupPairs(media, maxHamming = 0, minFrames = 3)
-        .orderBy(col("media_a"), col("media_b"))
-    }),
-
-    // The Hamming band-join stage of image near-dup on SQL-recomputable
-    // hash columns (the dedup_simhash oracle pattern, aimed at the
-    // GENERIC hammingBandPairs layout imageNearDupPairs uses): 60-bit
-    // base hash per id-group from md5, XOR a doc-keyed nibble at a
-    // doc-keyed position — within a group distances span 0..8, so the
-    // maxHamming = 6 cut exercises both branches, and the 7-band layout
-    // over 60 bits has UNEVEN widths (4×9 + 3×8 — the remainder path the
-    // simhash queries' even layouts never touch). The oracle is the
-    // brute-force all-pairs bit_count(xor) ≤ 6 census — equality proves
-    // the pigeonhole banding is complete and the verify exact.
-    "image_neardup_banded" -> ((s, dir) => {
-      val hashed = documents(s, dir).select(col("doc_id"),
-        conv(substring(md5(pmod(col("doc_id"), lit(40)).cast("string")), 1, 15), 16, 10)
-          .cast("long")
-          .bitwiseXOR(call_function("shiftleft",
-            pmod(col("doc_id"), lit(16)),
-            (pmod(col("doc_id"), lit(15)) * 4).cast("int"))).as("h"))
-      Dedup.hammingBandPairs(hashed, "doc_id", "h", maxHamming = 6, bits = 60,
-          aOut = "media_a", bOut = "media_b")
-        .orderBy(col("media_a"), col("media_b"))
-    }),
-
-    // Image near-dup, the production shape: smooth synthetic stills plus
-    // REAL JPEG re-encodes (quality 0.75) of half of them — the dominant
-    // duplicate class in crawled image corpora (same picture, different
-    // bytes: invisible to CDC/content-hash dedup) — through decode →
-    // dHash → banding at Hamming ≤ 10. Census output: every re-encode
-    // must link to its original (n_reencode_links — spec-asserted equal
-    // to the variant count), link distances stay small. No SQL oracle
-    // (JPEG DCT has no DuckDB form); exact-regime anchor:
-    // image_neardup_exact above gates the identical pipeline losslessly.
-    "image_neardup" -> ((s, dir) => {
-      // lazy stage boundary: the rendered-BMP fixture feeds TWO consumers
-      // (the union side and the JPEG re-encode input) with different
-      // downstream projections — without it the 5k-image synth runs twice
-      val base = Multimodal.syntheticSmoothImages(
-          documents(s, dir).repartition(32), "doc_id", "text")
-        .localCheckpoint(false)
-      val variants = Multimodal.reencodeJpeg(
-          base.filter(pmod(col("media_id"), lit(2)) === 0), quality = 0.75f)
-        .select((col("media_id") + 1000000L).as("media_id"),
-          col("media_type"), col("content"))
-      val pairs = Dedup.imageNearDupPairs(base.unionByName(variants), maxHamming = 10)
-      val isLink = col("media_b") === col("media_a") + 1000000L
-      pairs.agg(
-        count(lit(1)).as("n_pairs"),
-        sum(when(isLink, 1L).otherwise(0L)).as("n_reencode_links"),
-        round(avg(when(isLink, col("hamming"))), 4).as("avg_link_hamming"),
-        max(when(isLink, col("hamming"))).as("max_link_hamming"))
-    }),
-
-    // True winnowing (Schleimer et al. 2003) fingerprint sets, grouped by
-    // fingerprint → shared-fingerprint candidate groups, the plagiarism/
-    // near-dup candidate index. md5 hash family: the distinct fingerprint
-    // set per doc is exactly the distinct WINDOW MINIMA (the rightmost-tie
-    // rule only picks the charged position, never the value), which DuckDB
-    // recomputes verbatim → full oracle; the native xxhash64 winnow
-    // (selection-order + locality guarantees) stays spec-covered.
-    "text_winnow" -> ((s, dir) => {
-      TextAnalysis.winnowFingerprintsMd5(documents(s, dir), "doc_id", "text")
-        .groupBy(col("fp"))
-        .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_docs"))
-        .select(col("fp"), col("doc_id"), col("n_docs"))
-        .orderBy(col("fp"))
-    }),
-
-    // ── training-pipeline analytics [EXT] ─────────────────────────────────
-
-    // Time-range window frame (RANGE BETWEEN an interval): per-user rolling
-    // 1-hour sum/count over events — the event-time analytic that ROWS
-    // frames cannot express. Epoch-microsecond order keys keep the frame
-    // bounds engine-exact; one shuffle on user_id, per-partition sort.
-    "q_window_range_frame" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"))
-        .rangeBetween(-3600L * 1000000L, Window.currentRow)
-      events(s, dir)
-        .withColumn("ts_us", unix_micros(col("ts")))
-        .withColumn("rolling_sum", round(sum(col("value")).over(w), 2))
-        .withColumn("rolling_n", count(lit(1)).over(w))
-        .select(col("event_id"), col("user_id"), col("rolling_sum"), col("rolling_n"))
-        .orderBy(col("event_id"))
-    }),
-
-    // Sequence packing: assign docs to fixed token-budget bins per language
-    // (bin = tokens-before-this-doc / budget, doc_id order) — the
-    // pretraining "pack documents into ~1k-token sequences" step as one
-    // per-language window cumsum; no driver loop, scales with languages ×
-    // docs. A doc straddling a boundary belongs to the bin where it starts.
-    "pack_sequences" -> ((s, dir) => {
-      Pipeline.packSequences(documents(s, dir),
-          strata = col("lang"), order = col("doc_id"),
-          tokens = size(split(col("text"), " ")), budget = 1000L)
-        .select(col("doc_id"), col("lang"), col("n_tok"), col("seq_id"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Repetition-based quality signals (the Gopher-style filters: duplicate-
-    // token fraction and top-bigram mass — Rae et al. 2021, §A1.1, public
-    // heuristic): per-row array ops + one (doc, bigram) hash agg; no
-    // cross-document work, embarrassingly parallel at any scale.
-    "text_repetition" -> ((s, dir) => {
-      TextAnalysis.repetitionScores(documents(s, dir), "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-
-    // Incremental exact dedup: a new ingest batch (doc_id >= 400) anti-
-    // joined against the kept corpus's fingerprint set (doc_id < 400) —
-    // the daily-ingest dedup shape; the corpus side reduces to distinct
-    // fingerprints before the join (see Dedup.incrementalExact).
-    "dedup_incremental" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      Dedup.incrementalExact(
-          docs.filter(col("doc_id") >= 400),
-          docs.filter(col("doc_id") < 400),
-          TextAnalysis.md5Fingerprint(col("text")))
-        .select(col("doc_id"), col("lang"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Incremental dedup with the Bloom prefilter — identical rows to
-    // dedup_incremental (same oracle SQL): the bloom only routes rows
-    // map-side, the exact anti join decides. At corpus scale the routed
-    // batch shrinks the join probe side to ~fpp·|batch| + |dups|.
-    "dedup_incremental_bloom" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      Dedup.incrementalBloom(
-          docs.filter(col("doc_id") >= 400),
-          docs.filter(col("doc_id") < 400),
-          TextAnalysis.md5Fingerprint(col("text")))
-        .select(col("doc_id"), col("lang"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Incremental NEAR-dup gate (exact): the new batch (doc_id >= 400) is
-    // kept only where no corpus (< 400) document reaches Jaccard 0.5 in
-    // its length block — the daily-ingest gate for lightly-EDITED re-posts
-    // that dedup_incremental's exact fingerprints sail past.
-    "dedup_incremental_jaccard" -> ((s, dir) => {
-      val d = documents(s, dir)
-        .withColumn("len_bucket", floor(col("n_chars") / 100))
-      Dedup.incrementalJaccardNew(
-          d.filter(col("doc_id") >= 400), d.filter(col("doc_id") < 400),
-          "doc_id", "text", Seq("len_bucket"), shingleSize = 3, threshold = 0.5)
-        .select(col("doc_id"), col("lang"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // The LSH scale path for the same gate — banding replaces blocking, so
-    // the corpus side joins on (band, bucket) only. md5 hash family makes
-    // the banding DuckDB-recomputable → full oracle; no-false-flags +
-    // recall vs the unblocked exact gate stay asserted in ScalaTest.
-    "dedup_incremental_minhash" -> ((s, dir) => {
-      val d = documents(s, dir)
-      Dedup.incrementalMinhashNew(
-          d.filter(col("doc_id") >= 400), d.filter(col("doc_id") < 400),
-          "doc_id", "text", numHashes = 32, bands = 16, threshold = 0.5,
-          md5Family = true)
-        .select(col("doc_id"), col("lang"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Deterministic train/valid/test split (80/10/10 by md5 bucket of the
-    // doc id): the same doc lands in the same split on every engine, run,
-    // and cluster size — no RNG at execution time (md5 is the cross-engine
-    // hash, as in sample_consistent). Census per (lang, split).
-    "sample_split" -> ((s, dir) => {
-      Pipeline.deterministicSplit(documents(s, dir), col("doc_id"))
-        .groupBy(col("lang"), col("split"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-        .orderBy(col("lang"), col("split"))
-    }),
-
-    // Incremental leakage-safe split — the daily-ingest form: a new doc
-    // (>= 400) near-duplicating an already-split corpus doc (< 400, md5
-    // splits as the given artifact) INHERITS that doc's split (smallest
-    // matching corpus id); unmatched new docs get the ordinary md5 split.
-    // The per-doc assignment is hash-checked.
-    "sample_split_incremental" -> ((s, dir) => {
-      val d = documents(s, dir)
-        .withColumn("len_bucket", floor(col("n_chars") / 100))
-      val corpus = Pipeline.deterministicSplit(
-        d.filter(col("doc_id") < 400), col("doc_id"))
-      Pipeline.splitLeakageSafeIncremental(
-          d.filter(col("doc_id") >= 400), corpus,
-          "doc_id", "text", "split", Seq("len_bucket"),
-          shingleSize = 3, threshold = 0.5)
-        .select(col("doc_id"), col("lang"), col("split"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Leakage-safe split: near-dup clusters (exact-Jaccard pairs, the
-    // dedup_clusters graph) land WHOLE in one split — the doc-keyed split
-    // above would put near-identical docs on both sides of the train/test
-    // boundary and contaminate every downstream eval. Per-doc output
-    // (doc_id, split) so the oracle hash-checks the assignment itself,
-    // not just a census.
-    "sample_split_leakage_safe" -> ((s, dir) => {
-      val docs = documents(s, dir)
-        .withColumn("len_bucket", floor(col("n_chars") / 100))
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        Seq(col("len_bucket")), shingleSize = 3, threshold = 0.5)
-      Pipeline.splitLeakageSafe(docs, "doc_id", pairs, "doc_a", "doc_b")
-        .select(col("doc_id"), col("lang"), col("split"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Domain-mixture sampling: per-language keep rates (the pretraining
-    // source-weighting step), deterministic md5 bucket — census per lang
-    // proves the realized mixture.
-    "sample_mixture" -> ((s, dir) => {
-      Pipeline.weightedSample(documents(s, dir), col("doc_id"), col("lang"),
-          Map("en" -> 100, "de" -> 50, "fr" -> 50, "es" -> 25, "zh" -> 10))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-        .orderBy(col("lang"))
-    }),
-
-    // Exact-size weighted sample without replacement (Efraimidis-Spirtes
-    // A-ES, md5-derived uniforms): a 500-doc budget preferring long
-    // documents — inclusion probability proportional to n_chars, output
-    // size exactly 500 regardless of the corpus. TakeOrderedAndProject
-    // plan (bounded per-partition heap, no global sort); the oracle
-    // recomputes the identical ln(u)/w scores, so the SELECTION ITSELF is
-    // hash-checked, not just its census.
-    "sample_reservoir_weighted" -> ((s, dir) => {
-      Pipeline.reservoirSample(documents(s, dir), col("doc_id"),
-          greatest(col("n_chars"), lit(1L)).cast("double"), k = 500)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Stratified A-ES: exact 50-doc weighted budget PER LANGUAGE (balanced
-    // downsampling with a fixed per-stratum quota). Runs the salted
-    // two-phase plan (saltBuckets=8) whose identity with the direct window
-    // is spec-asserted; the oracle recomputes the identical per-group
-    // selection with row_number over the same scores.
-    "sample_reservoir_stratified" -> ((s, dir) => {
-      Pipeline.reservoirSamplePerKey(documents(s, dir), col("doc_id"),
-          greatest(col("n_chars"), lit(1L)).cast("double"), col("lang"),
-          kPerKey = 50, saltBuckets = 8)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .orderBy(col("lang"), col("doc_id"))
-    }),
-
-    // Scan-time observability: gate metrics computed DURING the filtered
-    // pass via Dataset.observe (CollectMetricsExec accumulator — zero
-    // extra jobs), then emitted as a 1-row table. The oracle recomputes
-    // the same aggregates with plain SQL, so the observed values are
-    // hash-checked — observability with a correctness gate. All-integer
-    // metrics; the action is the collect inside collectWithMetrics.
-    "pipeline_observed_gate" -> ((s, dir) => {
-      val base = documents(s, dir)
-        .filter(col("n_chars") >= 200)
-        .select(col("doc_id"), col("n_chars"), col("lang"))
-      val observed = graft.sources.Observe.withMetrics(base, "gate", Seq(
-        "n_kept" -> count(lit(1)),
-        "sum_chars" -> sum(col("n_chars")),
-        "n_en" -> count_if(col("lang") === "en"),
-        "min_doc" -> min(col("doc_id")),
-        "max_doc" -> max(col("doc_id"))))
-      val (_, m) = graft.sources.Observe.collectWithMetrics(observed, "gate")
-      import s.implicits._
-      Seq((m.getAs[Long]("n_kept"), m.getAs[Long]("sum_chars"), m.getAs[Long]("n_en"),
-          m.getAs[Long]("min_doc"), m.getAs[Long]("max_doc")))
-        .toDF("n_kept", "sum_chars", "n_en", "min_doc", "max_doc")
-    }),
-
-    // Per-source quota cap (the domain-frequency ceiling of web-crawl
-    // curation): keep the 10 longest docs per source, census per source.
-    // Runs the salted two-phase plan (saltBuckets=8) whose row-identity
-    // with the direct window is asserted in ScalaTest — the oracle checks
-    // the direct formulation, so the equivalence is verified end-to-end.
-    "select_domain_cap" -> ((s, dir) => {
-      Pipeline.capPerKey(documents(s, dir), col("source"),
-          Seq(col("n_chars").desc, col("doc_id").asc), 10, col("doc_id"), saltBuckets = 8)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-          min(col("n_chars")).as("min_kept_chars"))
-        .orderBy(col("source"))
-    }),
-
-    // Cluster-balanced selection: select_domain_cap's quota shape over a
-    // LEARNED key — top-5 docs by n_chars per k-means cell of the
-    // embedding space, the diversity-preserving downsample when one topic
-    // dominates. FIXED nlist + sampled driver fit (the linear 100 TB
-    // shape — see the operator's scale note; auto-occupancy cells would
-    // make flat assignment n²/occ with no pair stage to justify it).
-    // No SQL oracle (k-means cells); spec-tier: nlist=1 ≡ global top-k
-    // anchor, per-cell top-score identity, salted ≡ unsalted, determinism.
-    "select_cluster_balanced" -> ((s, dir) => {
-      val docs = documents(s, dir).select(col("doc_id"), col("source"), col("n_chars"))
-      val emb = embeddings(s, dir).select(col("vec_id").as("doc_id"), col("embedding"))
-      Pipeline.selectClusterBalanced(docs, emb, "doc_id", "embedding", "n_chars",
-          nlist = 64, maxPerCluster = 5, trainSample = 512)
-        .select(col("doc_id"), col("cell"), col("source"), col("n_chars"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // The nlist=1 EXACT regime of cluster-balanced selection: one cell
-    // makes the per-cluster quota IDENTICAL to the global top-k cut, which
-    // is plain SQL — so the DuckDB oracle hash-gates the ENTIRE
-    // selectClusterBalanced pipeline (k-means fit, assignment join, salted
-    // quota window included) in its degenerate-exact regime. Same
-    // oracle-conversion trick as IVF's full-probe ≡ brute-force gate; the
-    // nlist=64 production shape above stays rows-tier with this entry as
-    // its in-family exact anchor.
-    "select_cluster_balanced_exact" -> ((s, dir) => {
-      val docs = documents(s, dir).select(col("doc_id"), col("source"), col("n_chars"))
-      val emb = embeddings(s, dir).select(col("vec_id").as("doc_id"), col("embedding"))
-      Pipeline.selectClusterBalanced(docs, emb, "doc_id", "embedding", "n_chars",
-          nlist = 1, maxPerCluster = 100, trainSample = 512)
-        .select(col("doc_id"), col("cell").cast("long").as("cell"),
-          col("source"), col("n_chars"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Whole-document BFD bin packing (docs never straddle sequences —
-    // instruction-tuning / doc-masked pretraining shape) per source at a
-    // 512-whitespace-token budget. No SQL oracle (sequential bin state);
-    // spec-tier: budgets exact, totality, textbook BFD assignment on a
-    // hand case, salted ≡ valid, oversize singletons.
-    "pack_bins" -> ((s, dir) => {
-      val docs = documents(s, dir)
-        .withColumn("n_tok", TextAnalysis.tokenCount(col("text")).cast("long"))
-      Pipeline.packBinsBFD(docs, "source", "doc_id", col("n_tok"), budget = 512L)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          countDistinct(col("bin_id")).as("n_bins"),
-          sum(col("n_tok")).as("sum_tok"),
-          max(col("n_tok")).as("max_tok"),
-          sum(when(col("oversize"), 1L).otherwise(0L)).as("n_oversize"))
-        .withColumn("fill_ratio", TextAnalysis.ratio4(
-          col("sum_tok"), col("n_bins") * 512L))
-        .orderBy(col("source"))
-    }),
-
-    // BFD packing in the EXACT regime: sizes padded by 100000 with budget
-    // 150000 — every doc fits a bin alone (n_chars ≪ 50000) but no two
-    // docs ever share one (2×100000 > budget), so best-fit-decreasing
-    // degenerates to "each doc opens the next bin in scan order" and
-    // bin_id IS the per-stratum rank by (size desc, id asc) — pure SQL.
-    // Hash-gates the packer's scan order, bin numbering, no-fit branch,
-    // and the integral-id guard per DOCUMENT (tenth exact-regime
-    // conversion); the true packing quality stays spec-tier (textbook
-    // assignment + budget-exactness specs). Oracle-duty twin of
-    // pack_bins above.
-    "pack_bins_exact" -> ((s, dir) => {
-      val docs = documents(s, dir)
-        .withColumn("n_pad", col("n_chars") + lit(100000L))
-      // FIXTURE INVARIANT the regime rests on: every doc must have
-      // n_chars ≤ 50000 (padded size ≤ budget), or oversize flips and the
-      // oracle's hardcoded `false AS oversize` breaks as an opaque hash
-      // mismatch. Asserted here so a regenerated fixture fails LOUDLY at
-      // the query instead. One scalar agg over an already-read column —
-      // negligible next to the pack itself.
-      val maxChars = docs.agg(max(col("n_chars")).cast("long")).head.getLong(0)
-      require(maxChars <= 50000L,
-        s"pack_bins_exact: fixture max n_chars = $maxChars > 50000 — the " +
-          "singleton-bin regime (pad 100000, budget 150000) no longer holds; " +
-          "raise the pad/budget together to restore size+pad <= budget < 2*pad")
-      Pipeline.packBinsBFD(docs, "source", "doc_id", col("n_pad"), budget = 150000L)
-        .orderBy(col("source"), col("bin_id"))
-    }),
-
-    // Deterministic training-order shuffle: epoch-seeded md5 of the doc id
-    // is the sort key, so every engine/run/cluster size derives the SAME
-    // permutation, and a new epoch string is a fresh permutation with zero
-    // state. The materialized `position` (global row_number) is the ORACLE
-    // SHAPE — at scale the md5 key itself IS the order (range-partitioned
-    // sort on write), no global rank ever materializes.
-    "sample_shuffle" -> ((s, dir) => {
-      val keyed = documents(s, dir)
-        .withColumn("shuffle_key", md5(concat(lit("epoch1:"), col("doc_id").cast("string"))))
-      keyed
-        .withColumn("position",
-          row_number().over(Window.orderBy(col("shuffle_key"), col("doc_id"))))
-        .select(col("position"), col("doc_id"), col("shuffle_key"))
-        .orderBy(col("position"))
-    }),
-
-    // Benchmark decontamination: every 50th doc plays the eval set; train
-    // docs sharing any 5-gram with it are flagged with the shared count
-    // (n=5 because the fixture vocabulary is tiny — real pipelines use
-    // 8-13; the one hit here is a genuine near-dup sharing a long span).
-    "text_decontaminate" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      Pipeline.contaminatedDocs(
-          docs.filter(pmod(col("doc_id"), lit(50)) =!= 0),
-          docs.filter(pmod(col("doc_id"), lit(50)) === 0),
-          "doc_id", "text", n = 5)
-        .orderBy(col("doc_id"))
-    }),
-
-    // Semantic decontamination: every 25th embedding plays the eval set;
-    // train vectors within cosine 0.3 of any eval vector are flagged with
-    // the hit count and the strongest similarity (broadcast the eval side,
-    // one corpus pass — the paraphrase-robust companion of
-    // text_decontaminate's n-gram overlap).
-    "decontaminate_semantic" -> ((s, dir) => {
-      val em = embeddings(s, dir)
-      Pipeline.semanticContaminated(
-          em.filter(pmod(col("vec_id"), lit(25)) =!= 0),
-          em.filter(pmod(col("vec_id"), lit(25)) === 0),
-          "vec_id", "embedding", 0.3)
-        .orderBy(col("train_id"))
-    }),
-
-    // C4-style markup stripping: each doc deterministically wrapped in an
-    // HTML frame (style + script blocks, tags, entities — the corpus
-    // itself is plain text), then the portable-regex strip chain;
-    // per-source audit of characters in/out. Shuffle-free per-row chain +
-    // one census agg.
-    "text_strip_markup" -> ((s, dir) => {
-      val wrapped = documents(s, dir).select(col("doc_id"), col("source"),
-        concat(
-          lit("<html><head><style>p{color:red}</style></head><body><h1>Doc "),
-          col("doc_id").cast("string"),
-          lit("</h1><p class=\"x\">"), col("text"),
-          lit(" &amp; more &lt;i&gt;</p><script>var x=1;</script></body></html>"))
-          .as("html"))
-      wrapped.withColumn("clean", TextAnalysis.stripMarkup(col("html")))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(length(col("html"))).as("chars_in"),
-          sum(length(col("clean"))).as("chars_out"))
-        .orderBy(col("source"))
-    }),
-
-    // PII scrubbing: deterministic synthetic PII appended per doc (the
-    // corpus itself is clean), then the portable-regex redaction chain;
-    // per-source audit of matches found and bytes removed.
-    "text_pii_redact" -> ((s, dir) => {
-      val emailPat = TextAnalysis.PiiPatterns.head._1
-      val phonePat = "[0-9]{3}-[0-9]{3}-[0-9]{4}"
-      val withPii = documents(s, dir).select(
-        col("doc_id"), col("source"),
-        concat(col("text"),
-          lit(" contact user"), col("doc_id").cast("string"),
-          lit("@example.com or 555-123-"),
-          lpad(pmod(col("doc_id"), lit(10000)).cast("string"), 4, "0")).as("text"))
-      withPii
-        .withColumn("clean", TextAnalysis.redact(col("text")))
-        .groupBy(col("source"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(regexp_count(col("text"), lit(emailPat))).as("n_emails"),
-          sum(regexp_count(col("text"), lit(phonePat))).as("n_phones"),
-          sum(length(col("text")) - length(col("clean"))).as("chars_removed"))
-        .orderBy(col("source"))
-    }),
-
-    // Big-big range join scale path: 40 overlapping value tiers joined to
-    // events WITHOUT broadcasting — band-quantized equi-join (the plan
-    // q_range_join's broadcast tier can't use when the ranges side is
-    // also huge). Result identical to the theta join by construction.
-    "q_range_join_banded" -> ((s, dir) => {
-      val ranges = s.range(40).select(
-        col("id").as("range_id"),
-        (col("id") * 5.0).as("lo"),
-        (col("id") * 5.0 + 25.0).as("hi"))
-      Relational.bandedRangeJoin(events(s, dir), ranges,
-          col("value"), col("lo"), col("hi"), bandWidth = 10.0)
-        .groupBy(col("range_id"))
-        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))
-        .orderBy(col("range_id"))
-    }),
-
-    // Substring-span dedup: docs sharing any 8-token run with an earlier
-    // doc — catches partial duplication whole-doc fingerprints miss.
-    "dedup_exact_substr" -> ((s, dir) => {
-      Dedup.exactSubstringDups(documents(s, dir), "doc_id", "text", k = 8)
-        .orderBy(col("doc_id"))
-    }),
-
-    // Gopher rule filter: per-rule booleans + verdict per document, so the
-    // pipeline can audit WHY a doc was dropped. minWords=50 and
-    // minStopHits=1 are the rules that split the fixture corpus (docs are
-    // 10-99 tokens, all-alpha, containing at most 'the'/'a' as stopwords).
-    "text_gopher_filter" -> ((s, dir) => {
-      TextAnalysis.gopherRules(documents(s, dir), col("text"),
-          minWords = 50, maxWords = 100000, minMeanLen = 3.0, maxMeanLen = 10.0,
-          minAlphaFrac = 0.8, minStopHits = 1)
-        .select(col("doc_id"), col("n_words"), col("mean_word_len"),
-          col("alpha_frac"), col("n_stop"), col("pass"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Context-window chunking: 64-token windows every 48 tokens (16-token
-    // overlap); the chunk itself is projected away — its md5 is the
-    // engine-stable witness (and the chunk-dedup key downstream).
-    "text_chunk" -> ((s, dir) => {
-      Pipeline.chunkTokens(documents(s, dir), col("doc_id"), col("text"),
-          window = 64, stride = 48)
-        .select(col("id").as("doc_id"), col("chunk_idx"),
-          col("chunk_tokens"), col("chunk_hash"))
-        .orderBy(col("doc_id"), col("chunk_idx"))
-    }),
-
-    // DSIR importance scores (Xie et al. 2023): rank raw docs by how much
-    // they "look like" a curated target domain (every 20th doc plays the
-    // target). Identity bigrams keep the exact, oracle-checkable form; the
-    // hashBuckets variant (spec-checked) is the bounded-weight-table scale
-    // path a 100 TB corpus runs.
-    "text_importance" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      Pipeline.importanceScores(
-          docs.filter(pmod(col("doc_id"), lit(20)) =!= 0),
-          docs.filter(pmod(col("doc_id"), lit(20)) === 0),
-          "doc_id", "text", n = 2)
-        .orderBy(col("doc_id"))
-    }),
-
-    // DSIR selection: scoring composed with quantile thresholding — keep
-    // the top 25% of raw docs by importance score. The threshold is one
-    // broadcast 1-row agg; the keep decision is a per-row filter (no sort
-    // or shuffle of the corpus). Closes the score → SELECT loop.
-    "text_importance_select" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      val scored = Pipeline.importanceScores(
-        docs.filter(pmod(col("doc_id"), lit(20)) =!= 0),
-        docs.filter(pmod(col("doc_id"), lit(20)) === 0),
-        "doc_id", "text", n = 2)
-      Pipeline.selectTopByScore(scored, col("score"), keepFrac = 0.25)
-        .orderBy(col("doc_id"))
-    }),
-
-    // Per-source quality census: the monitoring view a corpus pipeline
-    // keeps per domain — doc counts, Gopher pass rate, and the quality
-    // metric means, grouped by provenance. One hash agg over the per-row
-    // gopher expressions; the dashboard query that decides which source
-    // to investigate when pass rates drift.
-    "source_quality_census" -> ((s, dir) => {
-      TextAnalysis.gopherRules(documents(s, dir), col("text"), minStopHits = 1)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("pass"), 1L).otherwise(0L)).as("n_pass"),
-          round(avg(col("n_words")), 4).as("avg_words"),
-          round(avg(col("alpha_frac")), 4).as("avg_alpha_frac"),
-          round(avg(col("mean_word_len")), 4).as("avg_word_len"))
-        .orderBy(col("source"))
-    }),
-
-    // Canonical text normalization (NFC + lower + whitespace collapse +
-    // trim) with the normalized fingerprint — the pass that runs before
-    // any dedup key is computed. The fixture is ASCII so NFC is identity
-    // here; the unicode behavior (composed ≡ decomposed, NFKC folding) is
-    // pinned in ScalaTest.
-    "text_normalize" -> ((s, dir) => {
-      documents(s, dir)
-        .select(col("doc_id"),
-          TextAnalysis.normalizeText(col("text")).as("norm_text"))
-        .withColumn("n_chars_norm", length(col("norm_text")))
-        .withColumn("norm_fp", md5(col("norm_text")))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Bigram-LM fluency scores (CCNet-style perplexity filter — Wenzek et
-    // al. 2020 — with an add-alpha bigram LM standing in for KenLM): the
-    // corpus scored under its own bigram distribution; rank by avg_logp
-    // descending to keep fluent text, compose with selectTopByScore for
-    // the actual filter.
-    "text_bigram_ppl" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      Pipeline.bigramLogLikelihood(docs, docs, "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-
-    // The same LM scoring at order 3 (KenLM-grade pipelines run n=5; the
-    // plan shape is identical at any n) — sharper fluency signal, count
-    // tables one order bigger.
-    "text_trigram_ppl" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      Pipeline.ngramLogLikelihood(docs, docs, "doc_id", "text", n = 3)
-        .withColumnRenamed("n_bigrams", "n_grams")
-        .orderBy(col("doc_id"))
-    }),
-
-    // The KenLM-grade upgrade of the line above: interpolated MODIFIED
-    // KNESER-NEY (Chen-Goodman 1998 three-discount variant — what KenLM
-    // estimates and what CCNet's published pipeline actually trains),
-    // same self-scored corpus, same output contract. Every model quantity
-    // is a deterministic function of count tables, so the DuckDB oracle
-    // replays the ENTIRE estimator from raw parquet: trigram counts →
-    // count-of-counts → discounts → continuation counts → interpolated
-    // per-gram log-probs → per-doc average. An order whose discounts are
-    // inestimable or out of range falls back to KenLM's documented
-    // --discount_fallback defaults (0.5/1.0/1.5) — the synthetic corpus
-    // at sf0.1 exercises this for real (its dense templated vocabulary
-    // has no continuation count of exactly 1), so the fallback CASE is
-    // itself hash-gated.
-    "text_trigram_ppl_kn" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      Pipeline.knTrigramLogLikelihood(docs, docs, "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-
-    // The SERVED shape of the line above — the production CCNet setting
-    // (train the LM once on a reference, score every crawl shard): train
-    // on the even-doc_id half, score the WHOLE corpus through the
-    // persistable KnModel artifact. The odd half is partly
-    // out-of-vocabulary, so this query hash-gates the serve-time graded
-    // backoff (missing trigram → discounted-0 + γ3·p2; missing context →
-    // p2; missing v → p1; continuation-OOV grams drop) — the expression
-    // ladder the oracle replays term for term. Served ≡ composed is
-    // shared-code by construction (knScoreGraded); the parquet roundtrip
-    // of the artifact is spec-pinned.
-    "text_trigram_ppl_kn_served" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      val model = Pipeline.knTrainModel(
-        docs.filter(col("doc_id") % 2 === 0), "text")
-      Pipeline.knScoreAgainstModel(docs, model, "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-
-    // The CCNet loop closed: fluency scoring composed with the quantile
-    // threshold — keep the most reference-like half of the corpus. Same
-    // composition shape as text_importance_select, over the LM score.
-    "text_fluency_select" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      val scored = Pipeline.bigramLogLikelihood(docs, docs, "doc_id", "text")
-      Pipeline.selectTopByScore(scored, col("avg_logp"), keepFrac = 0.5)
-        .orderBy(col("doc_id"))
-    }),
-
-    // The same CCNet selection loop on the estimator CCNet actually
-    // trains (KenLM-grade modified Kneser-Ney, text_trigram_ppl_kn)
-    // instead of the add-alpha stand-in: score every doc with the KN
-    // trigram LM, keep the most reference-like half via the broadcast
-    // quantile threshold. Oracle = the full KN estimator SQL composed
-    // with the select tail — both halves already hash-gated standalone,
-    // composed here so the production filter is gated end-to-end.
-    "text_fluency_select_kn" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      val scored = Pipeline.knTrigramLogLikelihood(docs, docs, "doc_id", "text")
-      Pipeline.selectTopByScore(scored, col("avg_logp"), keepFrac = 0.5)
-        .orderBy(col("doc_id"))
-    }),
-
-    // CCNet's other half: the head/middle/tail split. Per-language ntile
-    // over the bigram-LM score (desc, doc_id tiebreak) — equal-thirds by
-    // construction, and the ntile deal is SQL-standard on both engines so
-    // the per-doc bucket is oracle-exact. Docs shorter than the LM order
-    // drop (no score), same as text_bigram_ppl.
-    "text_ccnet_buckets" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      val scored = Pipeline.bigramLogLikelihood(docs, docs, "doc_id", "text")
-        .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-      Pipeline.perplexityBuckets(scored, Seq(col("lang")), col("avg_logp"), col("doc_id"))
-        .withColumn("ppl_bucket",
-          when(col("bucket") === 1, "head")
-            .when(col("bucket") === 2, "middle").otherwise("tail"))
-        .select(col("doc_id"), col("lang"), col("avg_logp"), col("ppl_bucket"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // The CCNet bucketing's no-sort scale path: per-lang t-digest
-    // boundaries broadcast, per-row assignment — census per (lang,
-    // bucket). (No SQL oracle: sketch-boundary-dependent, like
-    // q_histogram_equidepth_scale; totality/monotonicity/balance are
-    // spec-asserted, and the exact ntile form above is the hash-checked
-    // anchor.)
-    "text_ccnet_buckets_scale" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      val scored = Pipeline.bigramLogLikelihood(docs, docs, "doc_id", "text")
-        .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-      Pipeline.perplexityBucketsApprox(scored, Seq("lang"), col("avg_logp"))
-        .groupBy(col("lang"), col("bucket"))
-        .agg(count(lit(1)).as("n_docs"),
-          min(col("avg_logp")).as("min_logp"), max(col("avg_logp")).as("max_logp"))
-        .orderBy(col("lang"), col("bucket"))
-    }),
-
-    // Token-budget selection: per-language, keep the highest-alpha-ratio
-    // docs until 10k chars of budget fill — the budget-constrained
-    // cousin of text_importance_select (a token budget, not a keep
-    // fraction). alpha_ratio is ratio4-quantized (exact integers / 10⁴),
-    // n_chars and the cumsum are BIGINTs — integer-exact end to end.
-    "select_token_budget" -> ((s, dir) => {
-      val scored = TextAnalysis.withQuality(documents(s, dir), col("text"))
-      Pipeline.selectByTokenBudget(scored, Seq(col("lang")), col("alpha_ratio"),
-          col("n_chars"), col("doc_id"), budget = 10000L)
-        .select(col("doc_id"), col("lang"), col("alpha_ratio"),
-          col("n_chars"), col("cum_tokens"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // The mixture-drives-selection composition: temperatureRates (T = 2)
-    // allocates each source's TOKEN BUDGET (rate × mass, integer DIV),
-    // and selectByTokenBudget fills each budget with that source's
-    // best-alpha-ratio docs. Census per source proves sum_chars ≤ budget.
-    // Every step is integer or correctly-rounded IEEE — full oracle.
-    "select_temperature_budget" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      val budgets = Pipeline.temperatureRates(docs, col("source"), col("n_chars"), 2.0)
-        .select(col("group").as("source"),
-          expr("(rate_bp * n_tokens) DIV 10000").as("budget"))
-      val scored = TextAnalysis.withQuality(docs, col("text"))
-        .join(broadcast(budgets), Seq("source"))
-      Pipeline.selectByTokenBudget(scored, Seq(col("source")), col("alpha_ratio"),
-          col("n_chars"), col("doc_id"), col("budget"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-          max(col("budget")).as("budget_chars"))
-        .orderBy(col("source"))
-    }),
-
-    // Temperature-scaled mixture (T = 2): per-source keep rates from
-    // token mass, applied as a deterministic md5 sample — census per
-    // source proves the realized mixture. T = 2 keeps the whole rate
-    // derivation in correctly-rounded IEEE ops (sqrt, not pow), so the
-    // basis-point rates are bit-identical cross-engine.
-    "sample_temperature" -> ((s, dir) => {
-      Pipeline.temperatureSample(documents(s, dir), col("doc_id"),
-          col("source"), col("n_chars"), temperature = 2.0)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-        .orderBy(col("source"))
-    }),
-
-    // Chunk-level dedup composition: chunkTokens' chunk_hash feeding
-    // Dedup.exactByKey — dedup CHUNKS across documents (boilerplate spans
-    // repeat even when whole docs differ), reporting per-doc chunk counts
-    // and how many survive as the canonical copy. The keeper of each
-    // distinct chunk is the lowest (doc_id, chunk_idx) — deterministic.
-    "dedup_chunks" -> ((s, dir) => {
-      val chunks = Pipeline.chunkTokens(documents(s, dir), col("doc_id"),
-          col("text"), window = 64, stride = 48)
-        .withColumn("chunk_uid", col("id") * lit(1000000L) + col("chunk_idx"))
-      val keep = Dedup.exactByKey(
-        chunks.select(col("chunk_hash"), col("chunk_uid")),
-        col("chunk_hash"), col("chunk_uid"))
-      chunks
-        .join(keep.select(col("chunk_uid"), lit(1L).as("__kept")),
-          Seq("chunk_uid"), "left")
-        .groupBy(col("id").as("doc_id"))
-        .agg(count(lit(1)).as("n_chunks"),
-          sum(coalesce(col("__kept"), lit(0L))).as("n_kept"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Line-level boilerplate dedup (C4/RefinedWeb-style): lines repeated
-    // across the corpus are stripped, documents rebuilt from what's left.
-    // The fixture's documents are single-line, so the query frames each in
-    // the boilerplate a crawled page carries (header/footer repeated on
-    // every doc) — the frame must vanish, unique content must survive, and
-    // whole-doc duplicate content lines (which repeat corpus-wide) go too.
-    "dedup_lines" -> ((s, dir) => {
-      val framed = documents(s, dir).select(col("doc_id"),
-        concat(lit("subscribe to our newsletter\n"), col("text"),
-          lit("\ncopyright example corp all rights reserved")).as("page"))
-      Dedup.lineLevelDedup(framed, "doc_id", "page", maxOcc = 1)
-        .orderBy(col("doc_id"))
-    }),
-
-    // The full training-data pipeline as ONE composed query — the thing a
-    // real user builds first from these operators. Round-10 widening:
-    // normalization runs before the dedup key, the CCNet fluency gate runs
-    // after decontamination, and the corpus ships as DEDUPED CHUNKS, so
-    // the census is per-(lang, split) doc/chunk counts. Stages:
-    // bench holdout → Gopher quality gate → PII redaction → canonical
-    // NORMALIZATION → whole-doc exact dedup → benchmark decontamination →
-    // CCNet FLUENCY gate → domain-mixture sampling → deterministic split →
-    // token CHUNKING → chunk-level exact dedup → census. Proves the
-    // operators compose without column/name collisions; every doc stage is
-    // a shrink (spec asserts monotonicity). Each stage keeps
-    // its scale shape: per-row filters, hash aggs, one broadcast-able gram
-    // join — the composition adds no new shuffle beyond its stages.
-    //
-    // STAGE MATERIALIZATION: the decontaminated corpus feeds the fluency
-    // LM four ways (n-gram counts, context counts, vocab, per-doc score)
-    // and the quantile gate scans its input twice, so without a barrier
-    // the full upstream chain re-executes ~9×. A production pipeline
-    // writes each stage to parquet and reads it back; inside one
-    // composed query the equivalent barrier is a LAZY localCheckpoint on
-    // the reused stage outputs (decon, split) — computed once at the
-    // first action, shared by every consumer, spills to executor disk
-    // (MEMORY_AND_DISK) when the stage outgrows storage memory, and the
-    // blocks are ContextCleaner-owned: released when the plan is GC'd.
-    // NOT persist(): the CacheManager holds a strong reference to cached
-    // plans until an unpersist() nobody here can issue (the stages are
-    // consumed lazily by the returned plan), so persist leaked the stage
-    // for the session AND let a later plan-equal invocation silently
-    // reuse the first invocation's cache — the basket_rules bench
-    // flattering class (BENCH_TRIAGE_r14). Trade: truncated lineage means
-    // executor loss after a barrier materializes fails the run where
-    // persist recomputed — the production answer is the real
-    // stage-to-parquet barrier; in one composed query, rerun on failure.
-    "pipeline_e2e" -> ((s, dir) => {
-      val docs = documents(s, dir)
-      val train = docs.filter(pmod(col("doc_id"), lit(50)) =!= 0)
-      val bench = docs.filter(pmod(col("doc_id"), lit(50)) === 0)
-      val quality = TextAnalysis.gopherRules(train, col("text"),
-          minWords = 50, maxWords = 100000, minMeanLen = 3.0, maxMeanLen = 10.0,
-          minAlphaFrac = 0.8, minStopHits = 1)
-        .filter(col("pass"))
-        .select(col("doc_id"), col("lang"), col("text"))
-      val clean = quality.withColumn("text", TextAnalysis.redact(col("text")))
-      // canonical normalization BEFORE any dedup key is computed; lazy
-      // stage boundary (r21): normed forks into the fingerprint agg and
-      // the keep join, whose pruned copies re-ran the regex-heavy
-      // gopher → redact → normalize chain twice per plan
-      val normed = clean.withColumn("text", TextAnalysis.normalizeText(col("text")))
-        .localCheckpoint(false)
-      val keepIds = Dedup.exactByKey(
-        normed.select(TextAnalysis.md5Fingerprint(col("text")).as("fp"), col("doc_id")),
-        col("fp"), col("doc_id"))
-      val deduped = normed.join(keepIds.select(col("doc_id")), Seq("doc_id"), "left_semi")
-      val contaminated = Pipeline.contaminatedDocs(deduped, bench, "doc_id", "text", n = 5)
-        .select(col("doc_id"))
-      val decon = deduped.join(contaminated, Seq("doc_id"), "left_anti")
-        .localCheckpoint(false)
-      // CCNet gate: the surviving corpus scored under its own bigram LM,
-      // keep the most fluent half (quantile threshold, no corpus sort)
-      val fluentIds = Pipeline.selectTopByScore(
-          Pipeline.bigramLogLikelihood(decon, decon, "doc_id", "text"),
-          col("avg_logp"), keepFrac = 0.5)
-        .select(col("doc_id"))
-      val fluent = decon.join(fluentIds, Seq("doc_id"), "left_semi")
-      val mixed = Pipeline.weightedSample(fluent, col("doc_id"), col("lang"),
-        Map("en" -> 100, "de" -> 50, "fr" -> 50, "es" -> 25, "zh" -> 10))
-      val split = Pipeline.deterministicSplit(mixed, col("doc_id"))
-        .localCheckpoint(false)
-      // ship as deduped CHUNKS: token windows, exact chunk dedup (lowest
-      // (doc, idx) keeps the canonical copy), census per (lang, split)
-      val chunks = Pipeline.chunkTokens(split, col("doc_id"), col("text"),
-          window = 64, stride = 48)
-        .withColumn("chunk_uid", col("id") * lit(1000000L) + col("chunk_idx"))
-      val keepChunks = Dedup.exactByKey(
-        chunks.select(col("chunk_hash"), col("chunk_uid")),
-        col("chunk_hash"), col("chunk_uid"))
-      chunks
-        .join(keepChunks.select(col("chunk_uid"), lit(1L).as("__kept")),
-          Seq("chunk_uid"), "left")
-        .join(split.select(col("doc_id").as("id"), col("lang"), col("split")), Seq("id"))
-        .groupBy(col("lang"), col("split"))
-        .agg(countDistinct(col("id")).as("n_docs"),
-          count(lit(1)).as("n_chunks"),
-          sum(coalesce(col("__kept"), lit(0L))).as("n_chunks_kept"))
-        .orderBy(col("lang"), col("split"))
-    }),
-
-    // ── web/URL curation [EXT] ────────────────────────────────────────────
-    // documents carries no URL column, so each query derives a deterministic
-    // synthetic URL in-plan (pure function of doc_id/source — the oracle
-    // derives the identical string in SQL); the OPERATORS under test
-    // (parse / registered-domain / canonicalize) see only the url string.
-
-    // URL parsing census: registered domain (eTLD+1 with multi-part public
-    // suffixes) × scheme, with explicit-port incidence. Pure codegen'd
-    // regexp per row; the only exchange is the census hash agg.
-    "url_parse" -> ((s, dir) => {
-      val u = documents(s, dir).withColumn("url", syntheticUrl)
-      u.select(
-          Web.registeredDomain(Web.host(col("url"))).as("reg_domain"),
-          Web.scheme(col("url")).as("scheme"),
-          Web.port(col("url")).as("prt"),
-          col("doc_id"))
-        .groupBy(col("reg_domain"), col("scheme"))
-        .agg(count(lit(1)).as("n_urls"),
-          sum(when(col("prt").isNotNull, 1L).otherwise(0L)).as("n_explicit_port"),
-          min(col("doc_id")).as("first_doc"))
-        .orderBy(col("reg_domain"), col("scheme"))
-    }),
-
-    // URL canonicalization: tracking params stripped, survivors sorted,
-    // default ports and fragments dropped, case folded — sampled rows so
-    // the oracle check sees the exact canonical string per input.
-    "url_canonicalize" -> ((s, dir) => {
-      documents(s, dir).withColumn("url", syntheticUrl)
-        .filter(pmod(col("doc_id"), lit(10)) === 0)
-        .select(col("doc_id"), col("url"),
-          Web.canonicalizeUrl(col("url")).as("canonical_url"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // URL-level dedup: documents whose URLs differ only by canonicalization
-    // noise (case, default port, tracking params, param order, fragment)
-    // fold onto one canonical key; keep-min-doc per key. Exact-dedup shape:
-    // one hash agg on the short canonical string, bodies never shuffle.
-    "url_dedup" -> ((s, dir) => {
-      documents(s, dir).withColumn("url", syntheticNoisyUrl)
-        .select(col("doc_id"), Web.canonicalizeUrl(col("url")).as("canonical_url"))
-        .groupBy(col("canonical_url"))
-        .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_dups"))
-        .orderBy(col("canonical_url"))
-    })
-  )
-
-  /** Deterministic synthetic absolute URL per document — wide variety
-    * (schemes, multi-part-suffix hosts, explicit/default ports, tracking
-    * params, fragments) so the parse/canonicalize operators are exercised
-    * on every branch. Mirrored literally in the DuckDB oracle.
-    */
-  private def syntheticUrl: Column = {
-    val id = col("doc_id")
-    val sch = when(pmod(id, lit(4)) === 0, lit("HTTP"))
-      .when(pmod(id, lit(4)) === 1, lit("https"))
-      .when(pmod(id, lit(4)) === 2, lit("http"))
-      .otherwise(lit("HTTPS"))
-    val hostBase = concat(col("source"), pmod(id, lit(7)).cast("string"))
-    val hst = when(pmod(id, lit(3)) === 0,
-        concat(lit("WWW."), upper(hostBase), lit(".Example.CO.UK")))
-      .when(pmod(id, lit(3)) === 1, concat(hostBase, lit(".example.com")))
-      .otherwise(concat(lit("cdn."), hostBase, lit(".example.org")))
-    val prt = when(pmod(id, lit(5)) === 0,
-        when(lower(sch) === "http", lit(":80")).otherwise(lit(":443")))
-      .when(pmod(id, lit(11)) === 0, lit(":8080"))
-      .otherwise(lit(""))
-    val pth = concat(lit("/docs/"), pmod(id, lit(50)).cast("string"),
-      when(pmod(id, lit(6)) === 0, lit("/index.html")).otherwise(lit("")))
-    val qs = when(pmod(id, lit(4)) === 0,
-        concat(lit("?utm_source=feed&id="), pmod(id, lit(20)).cast("string")))
-      .when(pmod(id, lit(4)) === 1,
-        concat(lit("?id="), pmod(id, lit(20)).cast("string"), lit("&utm_campaign=x&b=2")))
-      .when(pmod(id, lit(4)) === 2, lit("?z=9&a=1&fbclid=abc"))
-      .otherwise(lit(""))
-    val frag = when(pmod(id, lit(7)) === 0, lit("#sec2")).otherwise(lit(""))
-    concat(sch, lit("://"), hst, prt, pth, qs, frag)
-  }
-
-  /** Synthetic URL whose per-document variation lives ENTIRELY in
-    * canonicalization noise (scheme/host case, default port, tracking
-    * params, param order, fragment) — canonical form depends only on
-    * (source, doc_id mod 10), so url_dedup finds real duplicate groups.
-    */
-  private def syntheticNoisyUrl: Column = {
-    val id = col("doc_id")
-    val sch = when(pmod(id, lit(2)) === 0, lit("HTTPS")).otherwise(lit("https"))
-    val hostBase = concat(col("source"), lit(".example.com"))
-    val hst = when(pmod(id, lit(3)) === 0, upper(hostBase))
-      .when(pmod(id, lit(3)) === 1,
-        concat(upper(hostBase.substr(lit(1), lit(1))), hostBase.substr(lit(2), lit(255))))
-      .otherwise(hostBase)
-    val prt = when(pmod(id, lit(5)) === 0, lit(":443")).otherwise(lit(""))
-    val pth = concat(lit("/p/"), pmod(id, lit(10)).cast("string"))
-    val qs = when(pmod(id, lit(2)) === 0,
-        concat(lit("?v=1&utm_source=s"), pmod(id, lit(13)).cast("string")))
-      .otherwise(concat(lit("?utm_campaign=c"), pmod(id, lit(13)).cast("string"), lit("&v=1")))
-    val frag = concat(lit("#x"), id.cast("string"))
-    concat(sch, lit("://"), hst, prt, pth, qs, frag)
-  }
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
-    */
-  /** Merge table captured by the text_bpe_tokens run — deterministic given
-    * the corpus (tie-broken argmax, sorted frequency head), and `oracleSql`
-    * is evaluated AFTER the query loop in Verify, so the generated oracle's
-    * literals always describe the same table the Spark plan encoded with.
-    */
-  @volatile private var bpeTrainedMerges: Seq[(String, String)] = Seq.empty
-  @volatile private var unigramTrainedPieces: Seq[(String, Double)] = Seq.empty
-  @volatile private var unigramMaxWordLen: Int = 1
-
-  /** Blocklist for `text_blocklist` — fixed phrases (the bounded-artifact
-    * pattern), shared verbatim by the query and its oracle SQL. "merge" is
-    * nested inside "merge batch" and "quantum flux" never occurs.
-    */
-  private[graft] val blocklistPatterns: Seq[String] = Seq(
-    "merge batch", "merge", "slow scan", "row fast", "vector", "quantum flux")
-
-  /** DuckDB replay of greedy BPE encoding under [[bpeTrainedMerges]].
-    *
-    * Equivalence: [[graft.functions.BpeEncode.encodeWord]] merges the
-    * lowest-rank pair one occurrence at a time; because a pair of rank r
-    * can only ever be CREATED by merges of rank < r (its symbols must
-    * exist when it is learned — training would have assigned it an
-    * earlier rank otherwise), that is identical to applying the merges
-    * once each in rank order as left-to-right non-overlapping
-    * replace-alls. Each word becomes `~c~` per char (`~` cannot occur in
-    * a `[a-z0-9]+` word), so the pair pattern `~a~~b~` matches exactly a
-    * full-symbol adjacency — never inside a symbol, never sharing a
-    * delimiter with a neighboring occurrence — and one `replace` per
-    * merge is the whole encode. Symbol count = half the `~` count.
-    */
-  private def bpeOracleSql(merges: Seq[(String, String)]): String = {
-    val start = "concat('~', array_to_string(regexp_extract_all(w, '.'), '~~'), '~')"
-    val folded = merges.foldLeft(start) { case (acc, (a, b)) =>
-      val qa = a.replace("'", "''")
-      val qb = b.replace("'", "''")
-      s"replace($acc, '~$qa~~$qb~', '~$qa$qb~')"
-    }
-    s"""WITH words AS (
-       |  SELECT source, doc_id, unnest(regexp_extract_all(text, '[a-z0-9]+')) AS w
-       |  FROM documents),
-       |enc AS (
-       |  SELECT source, doc_id,
-       |         $folded AS s
-       |  FROM words),
-       |perdoc AS (
-       |  SELECT source, doc_id,
-       |         sum((length(s) - length(replace(s, '~', ''))) // 2)::BIGINT AS bpe
-       |  FROM enc GROUP BY 1, 2),
-       |base AS (
-       |  SELECT source, doc_id,
-       |         len(regexp_extract_all(text, '[a-z0-9]+'))::BIGINT AS ws
-       |  FROM documents)
-       |SELECT base.source, count(*)::BIGINT AS n_docs,
-       |       sum(base.ws)::BIGINT AS ws_tokens,
-       |       sum(coalesce(perdoc.bpe, 0))::BIGINT AS bpe_tokens
-       |FROM base LEFT JOIN perdoc
-       |  ON base.source = perdoc.source AND base.doc_id = perdoc.doc_id
-       |GROUP BY 1 ORDER BY 1""".stripMargin
-  }
-
-  /** DuckDB replay of unigram-LM Viterbi segmentation under
-    * [[unigramTrainedPieces]]: the trained piece table is the embedded
-    * model artifact (the bpe-merge/ewma-weight literal pattern) and the
-    * DP itself is INDEPENDENTLY re-run in SQL — one unrolled stage per
-    * word position, each taking the lexicographic max of
-    * (score, piece_len, count) over candidate pieces, OOV single chars as
-    * regular nodes at the kernel's min−10 unk score. The hash gate
-    * compares integer token counts; a count flip would need two EM-fitted
-    * double path sums exactly equal AND different segment counts — the
-    * accepted measure-zero class (and the (score, len) tiebreak mirrors
-    * the kernel's longest-piece rule regardless).
-    */
-  private def unigramOracleSql(pieces: Seq[(String, Double)], maxWordLen: Int): String = {
-    // oracleSql is dumped after Verify runs the queries, so the trained
-    // table is populated; the placeholder only guards a pre-run access
-    if (pieces.isEmpty) return "SELECT 'queries not yet run' AS placeholder"
-    val maxPieceLen = pieces.map(_._1.length).max
-    def dlit(d: Double) = s"CAST('${java.lang.Double.toString(d)}' AS DOUBLE)"
-    val unk = dlit(pieces.map(_._2).min - 10.0)
-    val vals = pieces
-      .map { case (p, lp) => s"('${p.replace("'", "''")}', ${dlit(lp)})" }
-      .mkString(",\n    ")
-    val stages = (1 to maxWordLen).map { i =>
-      val cands = (1 to math.min(maxPieceLen, i)).map { k =>
-        val j = i - k
-        if (k == 1)
-          s"""    SELECT d.w, d.best + COALESCE(p.lp, $unk) AS nb, 1 AS k, d.cnt + 1 AS nc
-             |    FROM dp$j d LEFT JOIN pieces p ON p.p = substr(d.w, $i, 1)
-             |    WHERE length(d.w) >= $i""".stripMargin
-        else
-          s"""    SELECT d.w, d.best + p.lp AS nb, $k AS k, d.cnt + 1 AS nc
-             |    FROM dp$j d JOIN pieces p ON p.p = substr(d.w, ${j + 1}, $k)
-             |    WHERE length(d.w) >= $i""".stripMargin
-      }.mkString("\n    UNION ALL\n")
-      s"""dp$i AS (
-         |  SELECT w, m['b'] AS best, m['c'] AS cnt FROM (
-         |    SELECT w, max(struct_pack(b := nb, k := k, c := nc)) AS m FROM (
-         |$cands
-         |    ) GROUP BY w)
-         |)""".stripMargin
-    }.mkString(",\n")
-    val finals = (1 to maxWordLen)
-      .map(i => s"  SELECT w, cnt FROM dp$i WHERE length(w) = $i")
-      .mkString("\n  UNION ALL\n")
-    s"""WITH pieces(p, lp) AS (VALUES
-       |    $vals),
-       |dw AS (
-       |  SELECT source, doc_id, unnest(regexp_extract_all(text, '[a-z0-9]+')) AS w
-       |  FROM documents),
-       |words AS (SELECT DISTINCT w FROM dw),
-       |dp0 AS (SELECT w, CAST(0.0 AS DOUBLE) AS best, 0 AS cnt FROM words),
-       |$stages,
-       |wcnt AS (
-       |$finals),
-       |perdoc AS (
-       |  SELECT source, doc_id, sum(cnt)::BIGINT AS uni
-       |  FROM dw JOIN wcnt USING (w) GROUP BY 1, 2),
-       |base AS (
-       |  SELECT source, doc_id,
-       |         len(regexp_extract_all(text, '[a-z0-9]+'))::BIGINT AS ws
-       |  FROM documents)
-       |SELECT base.source, count(*)::BIGINT AS n_docs,
-       |       sum(base.ws)::BIGINT AS ws_tokens,
-       |       sum(coalesce(perdoc.uni, 0))::BIGINT AS uni_tokens
-       |FROM base LEFT JOIN perdoc
-       |  ON base.source = perdoc.source AND base.doc_id = perdoc.doc_id
-       |GROUP BY 1 ORDER BY 1""".stripMargin
-  }
-
-  /** DuckDB mirror of [[Analytics.ewma]]: weight literals printed from the
-    * SAME `math.pow(1-α, j)` doubles the Spark plan embeds (Double.toString
-    * round-trips through DuckDB's literal parser to the identical bits) and
-    * terms summed in the same ascending-j association order.
-    */
-  private def ewmaOracleSql(alpha: Double, horizon: Int): String = {
-    val lagCols = (0 until horizon).map { j =>
-      if (j == 0) "xu AS x0" else s"lag(xu, $j) OVER w AS x$j"
-    }.mkString(", ")
-    def w(j: Int) = java.lang.Double.toString(math.pow(1 - alpha, j))
-    val num = (0 until horizon)
-      .map(j => s"(CASE WHEN x$j IS NOT NULL THEN ${w(j)} * x$j ELSE 0.0 END)")
-      .mkString(" + ")
-    val den = (0 until horizon)
-      .map(j => s"(CASE WHEN x$j IS NOT NULL THEN ${w(j)} ELSE 0.0 END)")
-      .mkString(" + ")
-    s"""WITH e AS (
-       |  SELECT event_id, user_id, epoch_ns(ts) // 1000 AS ts_us,
-       |         CAST(round(value * 10000, 0) AS BIGINT) AS xu
-       |  FROM events),
-       |l AS (
-       |  SELECT event_id, user_id, $lagCols
-       |  FROM e
-       |  WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id))
-       |SELECT event_id, user_id,
-       |       round(($num) / ($den) / 10000.0, 4) AS ewma
-       |FROM l
-       |WHERE event_id % 20 = 0
-       |ORDER BY event_id""".stripMargin
-  }
-
-  /** DuckDB regex literal of [[Web.UrlPattern]] (single-backslash form —
-    * both engines parse the same pattern text; it is RE2-safe by design).
-    */
-  private val urlPatSql = "'" + Web.UrlPattern.replace("\\\\", "\\") + "'"
-
-  private val suffixListSql = Web.MultiPartSuffixes.map(s => s"'$s'").mkString(", ")
-
-  /** SQL mirror of [[Web.registeredDomain]] over a lower-cased host column. */
-  private def regDomainSql(h: String): String =
-    s"""CASE WHEN regexp_extract($h, '([^.]+\\.[^.]+)$$', 1) = '' THEN $h
-       |     WHEN regexp_extract($h, '[^.]+\\.([^.]+\\.[^.]+)$$', 1) IN ($suffixListSql)
-       |          AND regexp_extract($h, '([^.]+\\.[^.]+\\.[^.]+)$$', 1) <> ''
-       |     THEN regexp_extract($h, '([^.]+\\.[^.]+\\.[^.]+)$$', 1)
-       |     ELSE regexp_extract($h, '([^.]+\\.[^.]+)$$', 1) END""".stripMargin
-
-  /** SQL CTE body mirroring [[syntheticUrl]] (same pure function of
-    * doc_id/source, emitted as DuckDB string expressions).
-    */
-  private val syntheticUrlSql =
-    """u0 AS (
-      |  SELECT doc_id,
-      |         CASE doc_id % 4 WHEN 0 THEN 'HTTP' WHEN 1 THEN 'https'
-      |                         WHEN 2 THEN 'http' ELSE 'HTTPS' END AS sch0,
-      |         source || (doc_id % 7)::VARCHAR AS hb
-      |  FROM documents),
-      |u AS (
-      |  SELECT doc_id,
-      |    sch0 || '://' ||
-      |    CASE doc_id % 3 WHEN 0 THEN 'WWW.' || upper(hb) || '.Example.CO.UK'
-      |                    WHEN 1 THEN hb || '.example.com'
-      |                    ELSE 'cdn.' || hb || '.example.org' END ||
-      |    CASE WHEN doc_id % 5 = 0 THEN
-      |           (CASE WHEN lower(sch0) = 'http' THEN ':80' ELSE ':443' END)
-      |         WHEN doc_id % 11 = 0 THEN ':8080' ELSE '' END ||
-      |    '/docs/' || (doc_id % 50)::VARCHAR ||
-      |    CASE WHEN doc_id % 6 = 0 THEN '/index.html' ELSE '' END ||
-      |    CASE doc_id % 4 WHEN 0 THEN '?utm_source=feed&id=' || (doc_id % 20)::VARCHAR
-      |                    WHEN 1 THEN '?id=' || (doc_id % 20)::VARCHAR || '&utm_campaign=x&b=2'
-      |                    WHEN 2 THEN '?z=9&a=1&fbclid=abc' ELSE '' END ||
-      |    CASE WHEN doc_id % 7 = 0 THEN '#sec2' ELSE '' END AS url
-      |  FROM u0)""".stripMargin
-
-  /** SQL CTE body mirroring [[syntheticNoisyUrl]]. */
-  private val syntheticNoisyUrlSql =
-    """u AS (
-      |  SELECT doc_id,
-      |    (CASE WHEN doc_id % 2 = 0 THEN 'HTTPS' ELSE 'https' END) || '://' ||
-      |    CASE doc_id % 3
-      |      WHEN 0 THEN upper(source || '.example.com')
-      |      WHEN 1 THEN upper(substr(source || '.example.com', 1, 1)) ||
-      |                  substr(source || '.example.com', 2)
-      |      ELSE source || '.example.com' END ||
-      |    CASE WHEN doc_id % 5 = 0 THEN ':443' ELSE '' END ||
-      |    '/p/' || (doc_id % 10)::VARCHAR ||
-      |    CASE WHEN doc_id % 2 = 0 THEN '?v=1&utm_source=s' || (doc_id % 13)::VARCHAR
-      |         ELSE '?utm_campaign=c' || (doc_id % 13)::VARCHAR || '&v=1' END ||
-      |    '#x' || doc_id::VARCHAR AS url
-      |  FROM documents)""".stripMargin
-
-  /** SQL CTEs `p` (parse of `u.url`) and `c` (canonical pieces) mirroring
-    * [[Web.canonicalizeUrl]] — shared by the url_canonicalize / url_dedup
-    * oracles.
-    */
-  private def canonicalCteSql(from: String = "u") =
-    s"""p AS (
-       |  SELECT doc_id, url,
-       |         lower(regexp_extract(url, $urlPatSql, 1)) AS sch,
-       |         lower(regexp_extract(url, $urlPatSql, 2)) AS hst,
-       |         regexp_extract(url, $urlPatSql, 3) AS p3,
-       |         regexp_extract(url, $urlPatSql, 4) AS p4,
-       |         regexp_extract(url, $urlPatSql, 5) AS p5
-       |  FROM $from),
-       |c AS (
-       |  SELECT doc_id, url, sch, hst,
-       |         CASE WHEN p3 = '' THEN NULL ELSE substr(p3, 2)::INT END AS prt,
-       |         CASE WHEN p4 = '' THEN '/' ELSE p4 END AS pth,
-       |         array_to_string(list_sort(list_filter(
-       |           string_split(CASE WHEN p5 = '' THEN '' ELSE substr(p5, 2) END, '&'),
-       |           x -> x <> '' AND NOT regexp_matches(x, '^(utm_[^=]*|gclid|fbclid|ref)='))), '&') AS qs
-       |  FROM p),
-       |canon AS (
-       |  SELECT doc_id, url,
-       |         sch || '://' || hst ||
-       |         CASE WHEN prt IS NOT NULL AND NOT ((sch = 'http' AND prt = 80)
-       |                                         OR (sch = 'https' AND prt = 443))
-       |              THEN ':' || prt::VARCHAR ELSE '' END ||
-       |         pth ||
-       |         CASE WHEN qs = '' THEN '' ELSE '?' || qs END AS canonical_url
-       |  FROM c)""".stripMargin
-
-  /** DuckDB mirror of [[Graph.pageRank]]: the same integer recurrence
-    * unrolled as one CTE pair (contribs, ranks) per iteration. Exact BIGINT
-    * arithmetic end-to-end — both engines produce identical ranks.
-    */
-  private def pageRankOracleSql(iters: Int): String = {
-    val s = Graph.Scale
-    val iterCtes = (1 to iters).map { i =>
-      s"""c$i AS (
-         |  SELECT ed.dst, sum(r.rank_e12 // deg.outdeg)::BIGINT AS s
-         |  FROM ed JOIN r${i - 1} r ON ed.src = r.vertex
-         |          JOIN deg ON ed.src = deg.src
-         |  GROUP BY 1),
-         |d$i AS (
-         |  SELECT coalesce(sum(r.rank_e12), 0)::BIGINT AS dmass
-         |  FROM r${i - 1} r LEFT JOIN deg ON r.vertex = deg.src
-         |  WHERE deg.src IS NULL),
-         |r$i AS (
-         |  SELECT v.vertex,
-         |         (((15 * $s) // 100) // nv.n
-         |          + (85 * (coalesce(c$i.s, 0) + d$i.dmass // nv.n)) // 100)::BIGINT
-         |           AS rank_e12
-         |  FROM v CROSS JOIN nv CROSS JOIN d$i
-         |       LEFT JOIN c$i ON v.vertex = c$i.dst)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH e0 AS (
-       |  SELECT DISTINCT 's' || l.l_suppkey::VARCHAR AS src,
-       |                  'c' || o.o_custkey::VARCHAR AS dst
-       |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-       |ed AS (SELECT src, dst FROM e0
-       |       UNION SELECT dst AS src, src AS dst FROM e0),
-       |v AS (SELECT src AS vertex FROM ed UNION SELECT dst FROM ed),
-       |deg AS (SELECT src, count(*)::BIGINT AS outdeg FROM ed GROUP BY 1),
-       |nv AS (SELECT count(*)::BIGINT AS n FROM v),
-       |r0 AS (SELECT vertex, ($s // n)::BIGINT AS rank_e12 FROM v, nv),
-       |$iterCtes
-       |SELECT vertex, rank_e12 FROM r$iters ORDER BY vertex""".stripMargin
-  }
-
-  /** DuckDB mirror of [[Graph.ssspBounded]]: Bellman-Ford unrolled as one
-    * full-relaxation CTE per round (the frontier restriction is a pure
-    * optimization — labels after round r are identical). Integer cents
-    * end-to-end.
-    */
-  private def ssspOracleSql(rounds: Int): String = {
-    val iter = (1 to rounds).map { i =>
-      s"""d$i AS (
-         |  SELECT vertex, min(dist)::BIGINT AS dist FROM (
-         |    SELECT vertex, dist FROM d${i - 1}
-         |    UNION ALL
-         |    SELECT ed.dst AS vertex, d${i - 1}.dist + ed.w AS dist
-         |    FROM d${i - 1} JOIN ed ON d${i - 1}.vertex = ed.src) GROUP BY 1)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH e0 AS (
-       |  SELECT 's' || l.l_suppkey::VARCHAR AS src,
-       |         'c' || o.o_custkey::VARCHAR AS dst,
-       |         min(CAST(round(l.l_extendedprice * 100, 0) AS BIGINT)) AS w
-       |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-       |  GROUP BY 1, 2),
-       |ed AS (SELECT src, dst, w FROM e0
-       |       UNION ALL SELECT dst, src, w FROM e0),
-       |d0 AS (SELECT DISTINCT 's' || s_suppkey::VARCHAR AS vertex,
-       |              0::BIGINT AS dist
-       |       FROM supplier WHERE s_suppkey % 10 = 0),
-       |$iter
-       |SELECT vertex, dist FROM d$rounds ORDER BY vertex""".stripMargin
-  }
-
-  /** DuckDB mirror of [[Graph.kCore]]: the peel unrolled as one
-    * (degrees, bad, surviving-edges) CTE triple per round — a no-op round
-    * once the fixpoint arrives, so the round count is a contract, not a
-    * convergence bet.
-    */
-  private def kCoreOracleSql(k: Int, rounds: Int): String = {
-    val roundCtes = (0 until rounds).map { i =>
-      s"""d$i AS (
-         |  SELECT v, count(*)::BIGINT AS d
-         |  FROM (SELECT lo AS v FROM e$i UNION ALL SELECT hi FROM e$i)
-         |  GROUP BY 1),
-         |b$i AS (SELECT v FROM d$i WHERE d < $k),
-         |e${i + 1} AS (
-         |  SELECT lo, hi FROM e$i
-         |  WHERE lo NOT IN (SELECT v FROM b$i)
-         |    AND hi NOT IN (SELECT v FROM b$i))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH e0 AS (
-       |  SELECT DISTINCT 'c' || o.o_custkey::VARCHAR AS lo,
-       |                  's' || l.l_suppkey::VARCHAR AS hi
-       |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-       |  WHERE l.l_quantity >= 45),
-       |$roundCtes,
-       |df AS (
-       |  SELECT v, count(*)::BIGINT AS d
-       |  FROM (SELECT lo AS v FROM e$rounds UNION ALL SELECT hi FROM e$rounds)
-       |  GROUP BY 1)
-       |SELECT v AS vertex, d AS degree FROM df WHERE d >= $k
-       |ORDER BY vertex""".stripMargin
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    "graph_pagerank" -> pageRankOracleSql(3),
-    "graph_sssp" -> ssspOracleSql(3),
-    "graph_kcore" -> kCoreOracleSql(4, 4),
-
-    "graph_reach" ->
-      """WITH RECURSIVE e0 AS (
-        |  SELECT DISTINCT 's' || l.l_suppkey::VARCHAR AS src,
-        |                  'c' || o.o_custkey::VARCHAR AS dst
-        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-        |ed AS (SELECT src, dst FROM e0
-        |       UNION SELECT dst AS src, src AS dst FROM e0),
-        |seeds AS (
-        |  SELECT DISTINCT 's' || s_suppkey::VARCHAR AS vertex
-        |  FROM supplier WHERE s_suppkey % 10 = 0),
-        |reach(vertex, dist) AS (
-        |  SELECT vertex, 0 FROM seeds
-        |  UNION
-        |  SELECT ed.dst, r.dist + 1
-        |  FROM reach r JOIN ed ON r.vertex = ed.src
-        |  WHERE r.dist < 3)
-        |SELECT vertex, min(dist)::BIGINT AS dist
-        |FROM reach GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "agg_incremental" ->
-      """WITH o AS (
-        |  SELECT o_orderpriority, o_orderstatus,
-        |         CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents
-        |  FROM orders)
-        |SELECT o_orderpriority, o_orderstatus,
-        |       count(*)::BIGINT AS n,
-        |       sum(cents)::BIGINT AS sum_u,
-        |       min(cents)::BIGINT AS min_u,
-        |       max(cents)::BIGINT AS max_u,
-        |       round(sum(cents)::DOUBLE / count(*), 4) AS avg_u
-        |FROM o GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "agg_incremental_topk" ->
-      """WITH o AS (
-        |  SELECT o_orderpriority, o_orderkey,
-        |         CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents
-        |  FROM orders),
-        |r AS (
-        |  SELECT o_orderpriority, o_orderkey, cents,
-        |         row_number() OVER (PARTITION BY o_orderpriority
-        |                            ORDER BY cents DESC, o_orderkey) AS rank
-        |  FROM o)
-        |SELECT o_orderpriority, rank::BIGINT AS rank, o_orderkey, cents
-        |FROM r WHERE rank <= 5 ORDER BY 1, 2""".stripMargin,
-
-    "text_bpe_tokens" -> bpeOracleSql(bpeTrainedMerges),
-    "text_unigram_tokens" ->
-      unigramOracleSql(unigramTrainedPieces, unigramMaxWordLen),
-
-    "graph_components" ->
-      """WITH RECURSIVE v AS (SELECT c_custkey AS id FROM customer),
-        |e0 AS (
-        |  SELECT id AS src, id + 1 AS dst FROM v WHERE id % 10 <> 0
-        |  UNION ALL
-        |  SELECT id AS src, id + 10 AS dst FROM v WHERE id % 100 = 55),
-        |e1 AS (SELECT src, dst FROM e0 JOIN v ON e0.dst = v.id),
-        |edges AS (
-        |  SELECT src AS u, dst AS w FROM e1
-        |  UNION
-        |  SELECT dst AS u, src AS w FROM e1),
-        |reach AS (
-        |  SELECT u, w FROM edges
-        |  UNION
-        |  SELECT r.u, e.w FROM reach r JOIN edges e ON r.w = e.u
-        |  WHERE e.w <> r.u)
-        |SELECT u AS vertex, LEAST(u, MIN(w)) AS component
-        |FROM reach GROUP BY u ORDER BY vertex""".stripMargin,
-
-    "q_json_variant" ->
-      """WITH j AS (
-        |  SELECT '{"doc": ' || doc_id || ', "meta": {"lang": "' || lang ||
-        |         '", "n": ' || n_chars || '}, "tags": ["' || source ||
-        |         '", "t' || (doc_id % 5) || '"]}' AS js
-        |  FROM documents)
-        |SELECT json_extract_string(js, '$.meta.lang') AS vlang,
-        |       json_extract_string(js, '$.tags[1]') AS tag,
-        |       count(*)::BIGINT AS n_docs,
-        |       sum(json_extract(js, '$.meta.n')::BIGINT)::BIGINT AS sum_n
-        |FROM j GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "events_bollinger" ->
-      """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000 AS ts_us, event_id,
-        |                  CAST(round(value * 10000, 0) AS BIGINT) AS vu
-        |           FROM events),
-        |m AS (SELECT user_id, vu,
-        |        row_number() OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS i,
-        |        count(*) OVER fr AS n, sum(vu) OVER fr AS sx,
-        |        sum(vu * vu) OVER fr AS sxx
-        |      FROM e
-        |      WINDOW fr AS (PARTITION BY user_id ORDER BY ts_us, event_id
-        |                    ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)),
-        |f AS (SELECT user_id, i,
-        |             (vu * n - sx) * (vu * n - sx) * (n - 1) >
-        |               4 * n * (n * sxx - sx * sx) AS b
-        |      FROM m WHERE n = 20)
-        |SELECT user_id, count(*)::BIGINT AS n_eval,
-        |       sum(CASE WHEN b THEN 1 ELSE 0 END)::BIGINT AS n_breaches,
-        |       min(CASE WHEN b THEN i END)::BIGINT AS first_breach
-        |FROM f GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "events_rolling_median" ->
-      """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000 AS ts_us, event_id,
-        |                  CAST(round(value * 10000, 0) AS BIGINT) AS vu
-        |           FROM events WHERE value IS NOT NULL),
-        |f AS (SELECT user_id, vu,
-        |        row_number() OVER w AS i,
-        |        list(vu) OVER (w ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS arr
-        |      FROM e
-        |      WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-        |m AS (SELECT user_id, vu, i, arr, list_sort(arr)[4] AS med
-        |      FROM f WHERE len(arr) = 7),
-        |d AS (SELECT user_id, i,
-        |             abs(vu - med) > 3 * list_sort([abs(x - med) for x in arr])[4] AS b
-        |      FROM m)
-        |SELECT user_id, count(*)::BIGINT AS n_eval,
-        |       sum(CASE WHEN b THEN 1 ELSE 0 END)::BIGINT AS n_outliers,
-        |       min(CASE WHEN b THEN i END)::BIGINT AS first_outlier
-        |FROM d GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "events_twap" ->
-      """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000 AS ts_us, event_id,
-        |                  CAST(round(value * 10000, 0) AS BIGINT) AS vu
-        |           FROM events),
-        |s AS (SELECT user_id, vu, ts_us,
-        |             lead(ts_us) OVER (PARTITION BY user_id
-        |                               ORDER BY ts_us, event_id) AS next_ts
-        |      FROM e),
-        |seg AS (SELECT user_id, vu, (next_ts - ts_us) // 1000 AS dur_ms
-        |        FROM s WHERE next_ts IS NOT NULL),
-        |a AS (SELECT user_id, count(*)::BIGINT AS n_segments,
-        |             sum(dur_ms)::BIGINT AS dur_ms,
-        |             sum(vu::HUGEINT * dur_ms) AS num
-        |      FROM seg GROUP BY 1)
-        |SELECT user_id, n_segments, dur_ms,
-        |       floor(num::DOUBLE / dur_ms::DOUBLE + 0.5) / 10000 AS twavg
-        |FROM a WHERE dur_ms > 0 ORDER BY user_id""".stripMargin,
-
-    "events_seasonal" ->
-      """WITH e AS (SELECT event_type, hour(ts)::BIGINT AS hr,
-        |                  CAST(round(value * 10000, 0) AS BIGINT) AS vu
-        |           FROM events),
-        |g AS (SELECT event_type, hr, count(*)::BIGINT AS n,
-        |             sum(vu)::BIGINT AS sum_u
-        |      FROM e GROUP BY 1, 2),
-        |t AS (SELECT event_type, hr, n, sum_u,
-        |             sum(n) OVER (PARTITION BY event_type) AS tn,
-        |             sum(sum_u) OVER (PARTITION BY event_type) AS tsum
-        |      FROM g)
-        |SELECT event_type, hr, n,
-        |       floor((sum_u::HUGEINT * tn)::DOUBLE / (n::HUGEINT * tsum)::DOUBLE
-        |             * 10000 + 0.5) / 10000 AS idx
-        |FROM t WHERE tsum > 0 ORDER BY 1, 2""".stripMargin,
-
-    // theta set algebra in its exact regime: plain set operations on the
-    // distinct (event_type, user_id) pairs of the two halves
-    "events_user_overlap_exact" ->
-      """WITH a AS (SELECT DISTINCT event_type, user_id FROM events
-        |           WHERE ts < TIMESTAMP '2024-01-16'),
-        |b AS (SELECT DISTINCT event_type, user_id FROM events
-        |      WHERE ts >= TIMESTAMP '2024-01-16'),
-        |ka AS (SELECT event_type, count(*)::BIGINT AS n_a FROM a GROUP BY 1),
-        |kb AS (SELECT event_type, count(*)::BIGINT AS n_b FROM b GROUP BY 1),
-        |nboth AS (SELECT event_type, count(*)::BIGINT AS n_both
-        |          FROM (SELECT * FROM a INTERSECT SELECT * FROM b) GROUP BY 1),
-        |neither AS (SELECT event_type, count(*)::BIGINT AS n_either
-        |            FROM (SELECT * FROM a UNION SELECT * FROM b) GROUP BY 1),
-        |nonly AS (SELECT event_type, count(*)::BIGINT AS n_only_a
-        |          FROM (SELECT * FROM a EXCEPT SELECT * FROM b) GROUP BY 1)
-        |SELECT ka.event_type, n_a, n_b,
-        |       coalesce(n_both, 0)::BIGINT AS n_both,
-        |       n_either,
-        |       coalesce(n_only_a, 0)::BIGINT AS n_only_a
-        |FROM ka
-        |JOIN kb USING (event_type)
-        |JOIN neither USING (event_type)
-        |LEFT JOIN nboth USING (event_type)
-        |LEFT JOIN nonly USING (event_type)
-        |ORDER BY event_type""".stripMargin,
-
-    // KLL quantile maintenance in its exact regime: the merged states
-    // retain every item, so the serving quantiles are plain inclusive
-    // order statistics — quantile_disc on the identically-quantized longs
-    "events_quantiles_exact" ->
-      """SELECT event_type,
-        |       quantile_disc(v, 0.25)  AS q_p25,
-        |       quantile_disc(v, 0.5)   AS q_p50,
-        |       quantile_disc(v, 0.75)  AS q_p75,
-        |       quantile_disc(v, 0.875) AS q_p88
-        |FROM (SELECT event_type, CAST(floor(value * 1000000) AS BIGINT) AS v
-        |      FROM events)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "corpus_diff" ->
-      """WITH a AS (SELECT doc_id, md5(text) AS h FROM documents),
-        |b0 AS (SELECT doc_id,
-        |              CASE WHEN doc_id % 41 = 0 THEN text || ' rev2' ELSE text END AS text
-        |       FROM documents WHERE doc_id % 97 <> 0),
-        |b1 AS (SELECT doc_id + 1000000 AS doc_id, text
-        |       FROM documents WHERE doc_id % 89 = 0),
-        |b AS (SELECT doc_id, md5(text) AS h FROM
-        |        (SELECT * FROM b0 UNION ALL SELECT * FROM b1)),
-        |d AS (SELECT coalesce(a.doc_id, b.doc_id) AS id,
-        |             CASE WHEN b.h IS NULL THEN 'removed'
-        |                  WHEN a.h IS NULL THEN 'added'
-        |                  WHEN a.h <> b.h THEN 'changed'
-        |                  ELSE 'unchanged' END AS change
-        |      FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id)
-        |SELECT change, count(*)::BIGINT AS n, min(id)::BIGINT AS first_id
-        |FROM d GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "events_cusum" ->
-      """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000 AS ts_us, event_id,
-        |                  CAST(round(value * 10000, 0) AS BIGINT) AS vu
-        |           FROM events),
-        |w AS (SELECT user_id,
-        |        row_number() OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS i,
-        |        sum(vu) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-        |                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |        count(*) OVER (PARTITION BY user_id) AS n,
-        |        sum(vu) OVER (PARTITION BY user_id) AS s
-        |      FROM e),
-        |c AS (SELECT user_id, i, n, n * cum - i * s AS cdev FROM w)
-        |SELECT user_id, max(n)::BIGINT AS n_events,
-        |       sum(CASE WHEN abs(cdev) > 3000000 * n THEN 1 ELSE 0 END)::BIGINT
-        |         AS n_crossings,
-        |       (max(abs(cdev)) // max(n))::BIGINT AS max_dev_u,
-        |       min(CASE WHEN abs(cdev) > 3000000 * n THEN i END)::BIGINT AS first_cross
-        |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_expectations" ->
-      """WITH agg AS (
-        |  SELECT count(*)::BIGINT AS n_rows,
-        |    sum(CASE WHEN l_quantity BETWEEN 1 AND 50 THEN 0 ELSE 1 END)::BIGINT AS v_qty,
-        |    sum(CASE WHEN l_discount BETWEEN 0.0 AND 0.1 THEN 0 ELSE 1 END)::BIGINT AS v_disc,
-        |    sum(CASE WHEN l_extendedprice > 0 THEN 0 ELSE 1 END)::BIGINT AS v_price,
-        |    sum(CASE WHEN l_returnflag IN ('A', 'N', 'R') THEN 0 ELSE 1 END)::BIGINT AS v_flag,
-        |    sum(CASE WHEN l_quantity <= 45 THEN 0 ELSE 1 END)::BIGINT AS v_q45,
-        |    (count(l_orderkey) - count(DISTINCT l_orderkey))::BIGINT AS v_uniq
-        |  FROM lineitem),
-        |fk AS (SELECT count(*)::BIGINT AS v_fk
-        |       FROM lineitem l LEFT JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |       WHERE o.o_orderkey IS NULL)
-        |SELECT check_name, n_rows, n_violations,
-        |       CASE WHEN n_violations = 0 THEN 1 ELSE 0 END AS passed
-        |FROM (
-        |  SELECT 'qty_in_range' AS check_name, n_rows, v_qty AS n_violations FROM agg
-        |  UNION ALL SELECT 'discount_in_range', n_rows, v_disc FROM agg
-        |  UNION ALL SELECT 'price_positive', n_rows, v_price FROM agg
-        |  UNION ALL SELECT 'returnflag_valid', n_rows, v_flag FROM agg
-        |  UNION ALL SELECT 'qty_breaks_at_45', n_rows, v_q45 FROM agg
-        |  UNION ALL SELECT 'unique_l_orderkey', n_rows, v_uniq FROM agg
-        |  UNION ALL SELECT 'fk_order_exists', n_rows, v_fk FROM agg, fk
-        |) ORDER BY check_name""".stripMargin,
-
-    "events_sequences" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_ns(ts) // 1000 AS ts_us, event_id
-        |           FROM events),
-        |l AS (SELECT user_id, event_type AS step1,
-        |             lead(event_type, 1) OVER w AS step2,
-        |             lead(event_type, 2) OVER w AS step3
-        |      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id))
-        |SELECT step1, step2, step3, count(*)::BIGINT AS n
-        |FROM l WHERE step3 IS NOT NULL
-        |GROUP BY 1, 2, 3
-        |ORDER BY n DESC, step1, step2, step3
-        |LIMIT 20""".stripMargin,
-
-    "graph_triangles" ->
-      """WITH urgent AS (SELECT o_orderkey FROM orders
-        |               WHERE o_orderpriority = '1-URGENT'),
-        |li AS (SELECT l.l_orderkey, l.l_partkey
-        |       FROM lineitem l JOIN urgent u ON l.l_orderkey = u.o_orderkey),
-        |e0 AS (
-        |  SELECT DISTINCT a.l_partkey AS lo, b.l_partkey AS hi
-        |  FROM li a JOIN li b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-        |deg AS (SELECT v, count(*)::BIGINT AS d
-        |        FROM (SELECT lo AS v FROM e0 UNION ALL SELECT hi FROM e0)
-        |        GROUP BY 1),
-        |wd AS (SELECT u.lo, u.hi, dl.d AS dlo, dh.d AS dhi
-        |       FROM e0 u JOIN deg dl ON u.lo = dl.v JOIN deg dh ON u.hi = dh.v),
-        |o AS (SELECT CASE WHEN (dlo, lo) < (dhi, hi) THEN lo ELSE hi END AS a,
-        |             CASE WHEN (dlo, lo) < (dhi, hi) THEN hi ELSE lo END AS b,
-        |             CASE WHEN (dlo, lo) < (dhi, hi) THEN dhi ELSE dlo END AS db
-        |      FROM wd),
-        |w AS (SELECT e1.b AS x, e2.b AS y
-        |      FROM o e1 JOIN o e2
-        |        ON e1.a = e2.a AND (e1.db, e1.b) < (e2.db, e2.b)),
-        |t AS (SELECT count(*)::BIGINT AS n_triangles
-        |      FROM w JOIN o e3 ON w.x = e3.a AND w.y = e3.b)
-        |SELECT (SELECT count(*) FROM deg)::BIGINT AS n_vertices,
-        |       (SELECT count(*) FROM e0)::BIGINT AS n_edges,
-        |       t.n_triangles
-        |FROM t""".stripMargin,
-
-    "q_outer_join" ->
-      """WITH hi AS (SELECT c_custkey FROM customer WHERE c_acctbal > 5000),
-        |oc AS (SELECT o_custkey, count(*)::BIGINT AS n_orders,
-        |              sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))::BIGINT AS cents
-        |       FROM orders GROUP BY 1)
-        |SELECT CASE WHEN hi.c_custkey IS NULL THEN 'order_only'
-        |            WHEN oc.o_custkey IS NULL THEN 'cust_only'
-        |            ELSE 'both' END AS side,
-        |       count(*)::BIGINT AS n,
-        |       sum(coalesce(n_orders, 0))::BIGINT AS total_orders,
-        |       sum(coalesce(cents, 0))::BIGINT AS total_cents
-        |FROM hi FULL OUTER JOIN oc ON hi.c_custkey = oc.o_custkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "linkage_blocked" ->
-      """WITH cl AS (SELECT c_custkey AS right_id, lower(c_name) AS rn FROM customer),
-        |dn AS (
-        |  SELECT c_custkey AS left_id,
-        |         10 + (c_custkey % 9) AS pos, c_custkey % 3 AS m3,
-        |         lower(c_name) AS n
-        |  FROM customer),
-        |dirty AS (
-        |  SELECT left_id,
-        |         CASE m3 WHEN 0 THEN substr(n, 1, pos - 1) || 'x' || substr(n, pos + 1)
-        |                 WHEN 1 THEN substr(n, 1, pos - 1) || substr(n, pos + 1)
-        |                 ELSE substr(n, 1, pos - 1) || 'z' || substr(n, pos) END AS ln
-        |  FROM dn),
-        |lt AS (SELECT left_id, ln, substr(ln, greatest(length(ln) - 7, 1), 8) AS tail
-        |       FROM dirty),
-        |lg AS (SELECT DISTINCT left_id, ln, substr(tail, i, 4) AS g
-        |       FROM lt, unnest(range(1, greatest(length(tail) - 3, 1) + 1)) u(i)),
-        |rd AS (SELECT min(right_id) AS right_id, rn FROM cl GROUP BY rn),
-        |rt AS (SELECT right_id, rn, substr(rn, greatest(length(rn) - 7, 1), 8) AS tail
-        |       FROM rd),
-        |rg AS (SELECT DISTINCT right_id, rn, substr(tail, i, 4) AS g
-        |       FROM rt, unnest(range(1, greatest(length(tail) - 3, 1) + 1)) u(i)),
-        |dfr AS (SELECT g, count(*) AS f FROM rg GROUP BY 1),
-        |lwf AS (SELECT lg.left_id, lg.ln, lg.g, d.f,
-        |               min(d.f) OVER (PARTITION BY lg.left_id) AS minf,
-        |               row_number() OVER (PARTITION BY lg.left_id
-        |                                  ORDER BY d.f, lg.g) AS rk
-        |        FROM lg JOIN dfr d USING (g)),
-        |lk AS (SELECT left_id, ln, g FROM lwf WHERE f <= 200
-        |       UNION ALL
-        |       SELECT left_id, ln, g FROM (
-        |         SELECT left_id, ln, g, count(*) OVER (PARTITION BY g) AS bc
-        |         FROM lwf WHERE minf > 200 AND rk <= 2)
-        |       WHERE bc <= 128),
-        |rwf AS (SELECT rg.right_id, rg.rn, rg.g, d.f,
-        |               min(d.f) OVER (PARTITION BY rg.right_id) AS minf,
-        |               row_number() OVER (PARTITION BY rg.right_id
-        |                                  ORDER BY d.f, rg.g) AS rk
-        |        FROM rg JOIN dfr d USING (g)),
-        |rk2 AS (SELECT right_id, rn, g FROM rwf WHERE f <= 200
-        |       UNION ALL
-        |       SELECT right_id, rn, g FROM (
-        |         SELECT right_id, rn, g, count(*) OVER (PARTITION BY g) AS bc
-        |         FROM rwf WHERE minf > 200 AND rk <= 2)
-        |       WHERE bc <= 128),
-        |pairs AS (
-        |  SELECT DISTINCT left_id, ln, right_id, rn
-        |  FROM lk JOIN rk2 USING (g)),
-        |ver AS (SELECT left_id, right_id, dist FROM
-        |          (SELECT left_id, right_id, levenshtein(ln, rn) AS dist FROM pairs)
-        |        WHERE dist <= 2),
-        |best AS (SELECT left_id, right_id, dist,
-        |                row_number() OVER (PARTITION BY left_id
-        |                                   ORDER BY dist, right_id) AS rk
-        |         FROM ver)
-        |SELECT left_id, right_id, dist::INTEGER AS dist
-        |FROM best WHERE rk = 1 ORDER BY left_id""".stripMargin,
-
-    "linkage_jw" ->
-      """WITH cl AS (SELECT c_custkey AS right_id, lower(c_name) AS rn FROM customer),
-        |dn AS (
-        |  SELECT c_custkey AS left_id,
-        |         10 + (c_custkey % 9) AS pos, c_custkey % 3 AS m3,
-        |         lower(c_name) AS n
-        |  FROM customer),
-        |dirty AS (
-        |  SELECT left_id,
-        |         CASE m3 WHEN 0 THEN substr(n, 1, pos - 1) || 'x' || substr(n, pos + 1)
-        |                 WHEN 1 THEN substr(n, 1, pos - 1) || substr(n, pos + 1)
-        |                 ELSE substr(n, 1, pos - 1) || 'z' || substr(n, pos) END AS ln
-        |  FROM dn),
-        |lt AS (SELECT left_id, ln, substr(ln, greatest(length(ln) - 7, 1), 8) AS tail
-        |       FROM dirty),
-        |lg AS (SELECT DISTINCT left_id, ln, substr(tail, i, 4) AS g
-        |       FROM lt, unnest(range(1, greatest(length(tail) - 3, 1) + 1)) u(i)),
-        |rd AS (SELECT min(right_id) AS right_id, rn FROM cl GROUP BY rn),
-        |rt AS (SELECT right_id, rn, substr(rn, greatest(length(rn) - 7, 1), 8) AS tail
-        |       FROM rd),
-        |rg AS (SELECT DISTINCT right_id, rn, substr(tail, i, 4) AS g
-        |       FROM rt, unnest(range(1, greatest(length(tail) - 3, 1) + 1)) u(i)),
-        |dfr AS (SELECT g, count(*) AS f FROM rg GROUP BY 1),
-        |lwf AS (SELECT lg.left_id, lg.ln, lg.g, d.f,
-        |               min(d.f) OVER (PARTITION BY lg.left_id) AS minf,
-        |               row_number() OVER (PARTITION BY lg.left_id
-        |                                  ORDER BY d.f, lg.g) AS rk
-        |        FROM lg JOIN dfr d USING (g)),
-        |lk AS (SELECT left_id, ln, g FROM lwf WHERE f <= 200
-        |       UNION ALL
-        |       SELECT left_id, ln, g FROM (
-        |         SELECT left_id, ln, g, count(*) OVER (PARTITION BY g) AS bc
-        |         FROM lwf WHERE minf > 200 AND rk <= 2)
-        |       WHERE bc <= 128),
-        |rwf AS (SELECT rg.right_id, rg.rn, rg.g, d.f,
-        |               min(d.f) OVER (PARTITION BY rg.right_id) AS minf,
-        |               row_number() OVER (PARTITION BY rg.right_id
-        |                                  ORDER BY d.f, rg.g) AS rk
-        |        FROM rg JOIN dfr d USING (g)),
-        |rk2 AS (SELECT right_id, rn, g FROM rwf WHERE f <= 200
-        |       UNION ALL
-        |       SELECT right_id, rn, g FROM (
-        |         SELECT right_id, rn, g, count(*) OVER (PARTITION BY g) AS bc
-        |         FROM rwf WHERE minf > 200 AND rk <= 2)
-        |       WHERE bc <= 128),
-        |pairs AS (
-        |  SELECT DISTINCT left_id, ln, right_id, rn
-        |  FROM lk JOIN rk2 USING (g)),
-        |ver AS (SELECT left_id, right_id, sim FROM
-        |          (SELECT left_id, right_id,
-        |                  round(jaro_winkler_similarity(ln, rn), 6) AS sim
-        |           FROM pairs)
-        |        WHERE sim >= 0.9),
-        |best AS (SELECT left_id, right_id, sim,
-        |                row_number() OVER (PARTITION BY left_id
-        |                                   ORDER BY sim DESC, right_id) AS rk
-        |         FROM ver)
-        |SELECT left_id, right_id, sim
-        |FROM best WHERE rk = 1 ORDER BY left_id""".stripMargin,
-
-    "mixture_kl" ->
-      """WITH j AS (SELECT source, lang, count(*)::BIGINT AS ngc
-        |           FROM documents GROUP BY 1, 2),
-        |g AS (SELECT source, sum(ngc)::BIGINT AS ng FROM j GROUP BY 1),
-        |c AS (SELECT lang, sum(ngc)::BIGINT AS nc FROM j GROUP BY 1),
-        |n AS (SELECT sum(nc)::BIGINT AS n FROM c)
-        |SELECT j.source, max(g.ng)::BIGINT AS n_rows, count(*)::BIGINT AS n_cats,
-        |       round(sum(ngc::DOUBLE * (ln(ngc::DOUBLE) + ln(n.n::DOUBLE)
-        |                                - ln(g.ng::DOUBLE) - ln(c.nc::DOUBLE)))
-        |             / max(g.ng)::DOUBLE, 6) AS kl
-        |FROM j JOIN g USING (source) JOIN c USING (lang), n
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "mixture_chi2" ->
-      """WITH j AS (SELECT source AS r, lang AS cst, count(*)::BIGINT AS o
-        |           FROM documents GROUP BY 1, 2),
-        |rt AS (SELECT r, sum(o)::BIGINT AS nr FROM j GROUP BY 1),
-        |ct AS (SELECT cst, sum(o)::BIGINT AS nc FROM j GROUP BY 1),
-        |n AS (SELECT sum(nc)::BIGINT AS n FROM ct),
-        |cells AS (
-        |  SELECT rt.r, ct.cst, rt.nr,
-        |         coalesce(j.o, 0)::DOUBLE AS od,
-        |         rt.nr::DOUBLE * ct.nc::DOUBLE / n.n::DOUBLE AS e
-        |  FROM rt CROSS JOIN ct CROSS JOIN n
-        |  LEFT JOIN j ON j.r = rt.r AND j.cst = ct.cst)
-        |SELECT r AS source, max(nr)::BIGINT AS n_rows, count(*)::BIGINT AS n_cells,
-        |       round(sum((od - e) * (od - e) / e), 6) AS chi2
-        |FROM cells GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "events_ohlc" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, epoch_ns(ts) // 1000 AS ts_us,
-        |         (epoch_ns(ts) // 1000000000 // 86400) * 86400 AS bucket_s, value
-        |  FROM events),
-        |r AS (
-        |  SELECT *,
-        |         row_number() OVER (PARTITION BY user_id, bucket_s
-        |                            ORDER BY ts_us, event_id) AS ra,
-        |         row_number() OVER (PARTITION BY user_id, bucket_s
-        |                            ORDER BY ts_us DESC, event_id DESC) AS rd
-        |  FROM e)
-        |SELECT user_id, bucket_s,
-        |       round(max(CASE WHEN ra = 1 THEN value END), 2) AS open,
-        |       round(max(value), 2) AS high,
-        |       round(min(value), 2) AS low,
-        |       round(max(CASE WHEN rd = 1 THEN value END), 2) AS close,
-        |       count(*)::BIGINT AS n_events,
-        |       sum(CAST(round(value * 10000, 0) AS BIGINT))::BIGINT AS sum_u
-        |FROM r GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_winsorize" ->
-      """WITH v AS (
-        |  SELECT event_type, CAST(round(value * 10000, 0) AS BIGINT) AS vu
-        |  FROM events),
-        |m AS (SELECT event_type, vu, count(*)::BIGINT AS c FROM v GROUP BY 1, 2),
-        |cm AS (
-        |  SELECT event_type, vu, c,
-        |         sum(c) OVER (PARTITION BY event_type ORDER BY vu
-        |                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS cum,
-        |         sum(c) OVER (PARTITION BY event_type)::BIGINT AS n
-        |  FROM m),
-        |b AS (
-        |  SELECT event_type, max(n)::BIGINT AS n_rows,
-        |         min(CASE WHEN cum >= (n * 5 + 99) // 100 THEN vu END)::BIGINT AS lo_u,
-        |         min(CASE WHEN cum >= (n * 95 + 99) // 100 THEN vu END)::BIGINT AS hi_u
-        |  FROM cm GROUP BY 1)
-        |SELECT v.event_type, max(b.n_rows)::BIGINT AS n_rows,
-        |       max(b.lo_u) / 10000.0 AS lo, max(b.hi_u) / 10000.0 AS hi,
-        |       sum(CASE WHEN vu < lo_u THEN 1 ELSE 0 END)::BIGINT AS n_clipped_lo,
-        |       sum(CASE WHEN vu > hi_u THEN 1 ELSE 0 END)::BIGINT AS n_clipped_hi,
-        |       sum(least(greatest(vu, lo_u), hi_u))::BIGINT AS sum_u
-        |FROM v JOIN b USING (event_type)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "url_parse" ->
-      s"""WITH $syntheticUrlSql,
-         |p AS (
-         |  SELECT doc_id,
-         |         lower(regexp_extract(url, $urlPatSql, 1)) AS scheme,
-         |         lower(regexp_extract(url, $urlPatSql, 2)) AS hst,
-         |         regexp_extract(url, $urlPatSql, 3) AS p3
-         |  FROM u),
-         |r AS (
-         |  SELECT doc_id, scheme,
-         |         CASE WHEN p3 = '' THEN NULL ELSE substr(p3, 2)::INT END AS prt,
-         |         ${regDomainSql("hst")} AS reg_domain
-         |  FROM p)
-         |SELECT reg_domain, scheme, count(*)::BIGINT AS n_urls,
-         |       sum(CASE WHEN prt IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_explicit_port,
-         |       min(doc_id)::BIGINT AS first_doc
-         |FROM r GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "url_canonicalize" ->
-      s"""WITH $syntheticUrlSql,
-         |f AS (SELECT doc_id, url FROM u WHERE doc_id % 10 = 0),
-         |${canonicalCteSql("f")}
-         |SELECT doc_id, url, canonical_url
-         |FROM canon ORDER BY doc_id""".stripMargin,
-
-    "url_dedup" ->
-      s"""WITH $syntheticNoisyUrlSql,
-         |${canonicalCteSql()}
-         |SELECT canonical_url, min(doc_id)::BIGINT AS keep_id,
-         |       count(*)::BIGINT AS n_dups
-         |FROM canon GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "count_window_agg" ->
-      """SELECT window_id,
-        |       count(*) AS n_events,
-        |       round(sum(value), 2) AS sum_value,
-        |       round(avg(value), 4) AS avg_value,
-        |       min(event_id) AS first_id,
-        |       max(event_id) AS last_id
-        |FROM (SELECT event_id, value,
-        |             (row_number() OVER (ORDER BY event_id) - 1) // 100 AS window_id
-        |      FROM events)
-        |GROUP BY window_id
-        |ORDER BY window_id""".stripMargin,
-
-    "count_window_per_key" ->
-      """SELECT user_id, window_id, count(*) AS n_events, round(sum(value), 2) AS sum_value
-        |FROM (SELECT user_id, value,
-        |             (row_number() OVER (PARTITION BY user_id ORDER BY event_id) - 1) // 10 AS window_id
-        |      FROM events)
-        |GROUP BY user_id, window_id
-        |ORDER BY user_id, window_id""".stripMargin,
-
-    "fixed_time_window" ->
-      """SELECT (epoch_ns(ts) // 3600000000000) * 3600 AS window_start_s,
-        |       count(*) AS n_events,
-        |       round(sum(value), 2) AS sum_value,
-        |       round(avg(value), 4) AS avg_value
-        |FROM events
-        |GROUP BY window_start_s
-        |ORDER BY window_start_s""".stripMargin,
-
-    "fixed_time_window_spine" ->
-      """WITH ev AS (SELECT (epoch_ns(ts) // 300000000000) * 300 AS ws, value FROM events),
-        |     bounds AS (SELECT min(ws) AS lo, max(ws) AS hi FROM ev),
-        |     spine AS (SELECT unnest(generate_series(lo, hi, 300)) AS window_start_s FROM bounds),
-        |     agg AS (SELECT ws, count(*) AS n, round(sum(value), 2) AS sv FROM ev GROUP BY ws)
-        |SELECT s.window_start_s,
-        |       coalesce(a.n, 0) AS n_events,
-        |       coalesce(a.sv, 0.0) AS sum_value
-        |FROM spine s LEFT JOIN agg a ON s.window_start_s = a.ws
-        |ORDER BY s.window_start_s""".stripMargin,
-
-    "relaxed_time_window" ->
-      """SELECT event_type, count(*) AS n_events, round(sum(value), 2) AS sum_value
-        |FROM events
-        |WHERE ts <= TIMESTAMP '2024-01-15 00:00:00'
-        |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-
-    "sorted_window" ->
-      """SELECT window_id, count(*) AS n_events,
-        |       round(min(value), 2) AS min_value,
-        |       round(max(value), 2) AS max_value
-        |FROM (SELECT value,
-        |             (row_number() OVER (ORDER BY value, event_id) - 1) // 50 AS window_id
-        |      FROM events WHERE event_id % 2 = 0)
-        |GROUP BY window_id
-        |ORDER BY window_id""".stripMargin,
-
-    "stream_buffer_filter" ->
-      """SELECT event_id, user_id, value
-        |FROM events
-        |WHERE event_type = 'error' AND value > 150
-        |ORDER BY event_id""".stripMargin,
-
-    "retention_cutoff" ->
-      """SELECT event_type, count(*) AS n_events, min(event_id) AS first_id
-        |FROM events
-        |WHERE epoch_ns(ts) // 1000000000 >
-        |      (SELECT max(epoch_ns(ts) // 1000000000) - 7*86400 FROM events)
-        |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       round(sum(l_quantity), 2) AS sum_qty,
-        |       round(sum(l_extendedprice), 2) AS sum_base_price,
-        |       round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-        |       round(avg(l_quantity), 4) AS avg_qty,
-        |       round(avg(l_discount), 4) AS avg_disc,
-        |       count(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1995-09-02 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q_join_broadcast" ->
-      """SELECT r_name, n_name, count(*) AS n_orders, round(sum(o_totalprice), 2) AS revenue
-        |FROM orders
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name
-        |ORDER BY r_name, n_name""".stripMargin,
-
-    // plain join: the Bloom prune is invisible to the result (no false
-    // negatives; join removes false positives)
-    "q_join_bloom_pruned" ->
-      """SELECT year(o.o_orderdate) * 100 + month(o.o_orderdate) AS month,
-        |       count(*)::BIGINT AS n_items,
-        |       sum(CAST(round(l.l_extendedprice * 100, 0) AS BIGINT)
-        |           * (10000 - CAST(round(l.l_discount * 10000, 0) AS BIGINT)))::BIGINT
-        |         AS revenue_u
-        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |WHERE o.o_orderpriority = '1-URGENT'
-        |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-
-    "q_semi_join" ->
-      """SELECT c_mktsegment, count(*) AS n_customers, round(sum(c_acctbal), 2) AS sum_acctbal
-        |FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
-
-    "q_anti_join" ->
-      """SELECT n_name, count(*) AS n_customers
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey AND year(o_orderdate) = 1995)
-        |GROUP BY n_name
-        |ORDER BY n_name""".stripMargin,
-
-    "q_topk_per_group" ->
-      """SELECT p_brand, rnk, p_partkey, p_retailprice
-        |FROM (SELECT p_brand, p_partkey, p_retailprice,
-        |             row_number() OVER (PARTITION BY p_brand
-        |                                ORDER BY p_retailprice DESC, p_partkey) AS rnk
-        |      FROM part)
-        |WHERE rnk <= 3
-        |ORDER BY p_brand, rnk""".stripMargin,
-
-    "q_topk_per_group_agg" ->
-      """SELECT p_brand, rnk, p_partkey, p_retailprice
-        |FROM (SELECT p_brand, p_partkey, p_retailprice,
-        |             row_number() OVER (PARTITION BY p_brand
-        |                                ORDER BY p_retailprice DESC, p_partkey) AS rnk
-        |      FROM part)
-        |WHERE rnk <= 3
-        |ORDER BY p_brand, rnk""".stripMargin,
-
-    "q_window_running" ->
-      """SELECT o_orderkey, o_custkey,
-        |       round(sum(o_totalprice) OVER w_frame, 2) AS running_total,
-        |       round(coalesce(lag(o_totalprice, 1) OVER w, 0), 2) AS prev_price,
-        |       row_number() OVER w AS rn
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
-        |       w_frame AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q_window_value_fns" ->
-      """SELECT o_orderkey, o_custkey,
-        |       round(o_totalprice * 100)::BIGINT AS price_c,
-        |       first_value(round(o_totalprice * 100)::BIGINT) OVER wf AS first_c,
-        |       last_value(round(o_totalprice * 100)::BIGINT) OVER wf AS last_c,
-        |       coalesce(nth_value(round(o_totalprice * 100)::BIGINT, 2) OVER wf, -1)::BIGINT AS second_c
-        |FROM orders
-        |WINDOW wf AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |              ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q_sort_limit" ->
-      """SELECT o_orderkey, o_totalprice
-        |FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey
-        |LIMIT 20""".stripMargin,
-
-    "q_set_ops" ->
-      """SELECT 'intersect' AS op, count(*) AS n FROM (
-        |  SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'O'
-        |  INTERSECT
-        |  SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'F')
-        |UNION ALL
-        |SELECT 'except' AS op, count(*) AS n FROM (
-        |  SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'O'
-        |  EXCEPT
-        |  SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'F')
-        |UNION ALL
-        |SELECT 'union' AS op, count(*) AS n FROM (
-        |  SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'O'
-        |  UNION
-        |  SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'F')
-        |ORDER BY op""".stripMargin,
-
-    "q_distinct_agg" ->
-      """SELECT event_type,
-        |       count(DISTINCT user_id) AS n_users,
-        |       count(*) AS n_events,
-        |       round(sum(value), 2) AS sum_value
-        |FROM events
-        |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-
-    "q_unpivot" ->
-      """SELECT l_returnflag, metric, count(*) AS n, CAST(sum(v) AS BIGINT) AS sum_v
-        |FROM (
-        |  SELECT l_returnflag, 'quantity_c' AS metric,
-        |         CAST(round(l_quantity * 100) AS BIGINT) AS v FROM lineitem
-        |  UNION ALL
-        |  SELECT l_returnflag, 'discount_bp',
-        |         CAST(round(l_discount * 10000) AS BIGINT) FROM lineitem
-        |  UNION ALL
-        |  SELECT l_returnflag, 'tax_bp',
-        |         CAST(round(l_tax * 10000) AS BIGINT) FROM lineitem)
-        |GROUP BY l_returnflag, metric
-        |ORDER BY l_returnflag, metric""".stripMargin,
-
-    "q_conditional_agg" ->
-      """SELECT n_name,
-        |       count(*) AS n_cust,
-        |       count(*) FILTER (WHERE c_acctbal > 0) AS n_pos,
-        |       bool_or(c_mktsegment = 'BUILDING') AS any_building,
-        |       bool_and(c_acctbal > 0) AS all_pos,
-        |       max(c_acctbal) FILTER (WHERE c_mktsegment = 'BUILDING') AS max_building_bal
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name
-        |ORDER BY n_name""".stripMargin,
-
-    "q_scalar_subquery" ->
-      """SELECT o_orderpriority, count(*) AS n_big
-        |FROM orders o
-        |WHERE o_totalprice > 2 * (SELECT min(o2.o_totalprice)
-        |                          FROM orders o2
-        |                          WHERE o2.o_custkey = o.o_custkey)
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-
-    "q_shipping_priority" ->
-      """SELECT l_orderkey, o_orderpriority,
-        |       CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) *
-        |                (10000 - CAST(round(l_discount * 10000) AS BIGINT))) AS BIGINT)
-        |         AS revenue_u
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |  AND l_shipdate > TIMESTAMP '1998-01-01'
-        |GROUP BY l_orderkey, o_orderpriority
-        |ORDER BY revenue_u DESC, l_orderkey
-        |LIMIT 10""".stripMargin,
-
-    "q_window_dist" ->
-      """SELECT o_orderkey, o_orderpriority, pr, cd, nt
-        |FROM (SELECT o_orderkey, o_orderpriority,
-        |             percent_rank() OVER w AS pr,
-        |             cume_dist()   OVER w AS cd,
-        |             ntile(10)     OVER w AS nt
-        |      FROM orders
-        |      WINDOW w AS (PARTITION BY o_orderpriority
-        |                   ORDER BY o_totalprice, o_orderkey))
-        |WHERE o_orderkey % 100 = 0
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q_zorder_cluster" ->
-      """WITH b AS (
-        |  SELECT l_partkey % 64 AS x, l_suppkey % 64 AS y FROM lineitem),
-        |z AS (
-        |  SELECT x, y,
-        |         (((x >> 0) & 1) * 1    + ((y >> 0) & 1) * 2
-        |        + ((x >> 1) & 1) * 4    + ((y >> 1) & 1) * 8
-        |        + ((x >> 2) & 1) * 16   + ((y >> 2) & 1) * 32
-        |        + ((x >> 3) & 1) * 64   + ((y >> 3) & 1) * 128
-        |        + ((x >> 4) & 1) * 256  + ((y >> 4) & 1) * 512
-        |        + ((x >> 5) & 1) * 1024 + ((y >> 5) & 1) * 2048) AS zv
-        |  FROM b)
-        |SELECT zv >> 6 AS z_bucket, count(*) AS n,
-        |       min(x) AS min_x, max(x) AS max_x,
-        |       min(y) AS min_y, max(y) AS max_y
-        |FROM z
-        |GROUP BY z_bucket
-        |ORDER BY z_bucket""".stripMargin,
-
-    "pipeline_observed_gate" ->
-      """SELECT count(*) AS n_kept,
-        |       CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |       count(*) FILTER (WHERE lang = 'en') AS n_en,
-        |       min(doc_id) AS min_doc,
-        |       max(doc_id) AS max_doc
-        |FROM documents
-        |WHERE n_chars >= 200""".stripMargin,
-
-    "select_domain_cap" ->
-      """SELECT source, count(*) AS n_docs,
-        |       CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |       min(n_chars) AS min_kept_chars
-        |FROM (SELECT source, n_chars, doc_id,
-        |             row_number() OVER (PARTITION BY source
-        |                                ORDER BY n_chars DESC, doc_id) AS rk
-        |      FROM documents)
-        |WHERE rk <= 10
-        |GROUP BY source
-        |ORDER BY source""".stripMargin,
-
-    "select_cluster_balanced_exact" ->
-      """SELECT doc_id, CAST(0 AS BIGINT) AS cell, source, n_chars
-        |FROM (SELECT d.doc_id, d.source, d.n_chars,
-        |             row_number() OVER (ORDER BY d.n_chars DESC, d.doc_id) AS rk
-        |      FROM documents d
-        |      JOIN embeddings e ON e.vec_id = d.doc_id)
-        |WHERE rk <= 100
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_rollup" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-        |       coalesce(l_linestatus, 'ALL') AS linestatus,
-        |       round(sum(l_quantity), 2) AS sum_qty,
-        |       count(*) AS n
-        |FROM lineitem
-        |GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY returnflag, linestatus""".stripMargin,
-
-    "q_json_extract" ->
-      """SELECT (json_extract_string(props, '$.k')::INTEGER) % 10 AS k_mod,
-        |       count(*) AS n,
-        |       sum(json_extract_string(props, '$.k')::INTEGER)::BIGINT AS sum_k,
-        |       round(avg(value), 4) AS avg_value
-        |FROM events
-        |GROUP BY k_mod
-        |ORDER BY k_mod""".stripMargin,
-
-    "q_scalar_funcs" ->
-      """SELECT split_part(p_type, ' ', 1) AS type_prefix,
-        |       count(*) AS n_parts,
-        |       round(avg(p_retailprice), 2) AS avg_price,
-        |       max(length(p_name)) AS max_name_len,
-        |       min(upper(p_brand)) AS min_brand
-        |FROM part
-        |GROUP BY type_prefix
-        |ORDER BY type_prefix""".stripMargin,
-
-    "q_date_agg" ->
-      """SELECT year(o_orderdate) AS o_year, quarter(o_orderdate) AS o_quarter,
-        |       count(*) AS n_orders, round(sum(o_totalprice), 2) AS revenue
-        |FROM orders
-        |GROUP BY o_year, o_quarter
-        |ORDER BY o_year, o_quarter""".stripMargin,
-
-    "q_multi_join" ->
-      """SELECT n_name,
-        |       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-        |       count(*) AS n_items
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY n_name
-        |ORDER BY n_name""".stripMargin,
-
-    "text_term_freq" ->
-      """SELECT token, count(*) AS n
-        |FROM (SELECT unnest(regexp_extract_all(text, '[a-z0-9]+')) AS token
-        |      FROM documents)
-        |GROUP BY token
-        |ORDER BY n DESC, token
-        |LIMIT 20""".stripMargin,
-
-    "q_funnel" ->
-      """SELECT count(*) AS n_users,
-        |       sum(CASE WHEN t_view IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_view,
-        |       sum(CASE WHEN t_view IS NOT NULL AND t_click > t_view
-        |                THEN 1 ELSE 0 END)::BIGINT AS n_view_click,
-        |       sum(CASE WHEN t_view IS NOT NULL AND t_click > t_view
-        |                 AND t_purchase > t_click
-        |                THEN 1 ELSE 0 END)::BIGINT AS n_view_click_purchase
-        |FROM (
-        |  SELECT user_id,
-        |         min(CASE WHEN event_type = 'view' THEN epoch_us(ts) END) AS t_view,
-        |         min(CASE WHEN event_type = 'click' THEN epoch_us(ts) END) AS t_click,
-        |         min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS t_purchase
-        |  FROM events GROUP BY user_id)""".stripMargin,
-
-    "q_cohort_retention" ->
-      """WITH e AS (SELECT user_id,
-        |                  date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS d
-        |           FROM events),
-        |f AS (SELECT user_id, min(d) AS cohort_day FROM e GROUP BY user_id)
-        |SELECT f.cohort_day, e.d - f.cohort_day AS day_offset,
-        |       count(DISTINCT e.user_id)::BIGINT AS n_users
-        |FROM e JOIN f USING (user_id)
-        |GROUP BY 1, 2
-        |ORDER BY cohort_day, day_offset""".stripMargin,
-
-    "q_histogram" ->
-      """SELECT floor(value / 25)::BIGINT AS bin, count(*) AS n,
-        |       round(min(value), 2) AS lo, round(max(value), 2) AS hi
-        |FROM events
-        |GROUP BY 1
-        |ORDER BY bin""".stripMargin,
-
-    "q_histogram_equidepth" ->
-      """WITH t AS (
-        |  SELECT l_extendedprice,
-        |         ntile(8) OVER (ORDER BY l_extendedprice, l_orderkey, l_linenumber) AS bucket
-        |  FROM lineitem)
-        |SELECT bucket, count(*)::BIGINT AS n_rows,
-        |       round(min(l_extendedprice), 2) AS lo,
-        |       round(max(l_extendedprice), 2) AS hi,
-        |       round(avg(l_extendedprice), 2) AS avg_price
-        |FROM t
-        |GROUP BY bucket
-        |ORDER BY bucket""".stripMargin,
-
-    "q_outliers_mad" ->
-      """WITH li AS (SELECT l_returnflag AS flag,
-        |                   CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS xc
-        |            FROM lineitem),
-        |med AS (SELECT flag,
-        |               CAST(round(quantile_cont(xc, 0.5) * 2, 0) AS BIGINT) AS med_hc
-        |        FROM li GROUP BY flag),
-        |mad AS (SELECT li.flag,
-        |               CAST(round(quantile_cont(abs(2 * xc - med_hc), 0.5) * 2, 0)
-        |                    AS BIGINT) AS mad_qc,
-        |               any_value(med_hc) AS med_hc
-        |        FROM li JOIN med USING (flag) GROUP BY li.flag)
-        |SELECT li.flag, count(*)::BIGINT AS n_rows,
-        |       any_value(mad.med_hc) / 200.0 AS med,
-        |       any_value(mad.mad_qc) / 400.0 AS mad,
-        |       sum(CASE WHEN abs(2 * xc - mad.med_hc) > mad.mad_qc * 3 * 1.4826 / 2
-        |                THEN 1 ELSE 0 END)::BIGINT AS n_outliers
-        |FROM li JOIN mad USING (flag)
-        |GROUP BY li.flag
-        |ORDER BY li.flag""".stripMargin,
-
-    // the salted join must be result-identical to the PLAIN join
-    "q_skew_join_salted" ->
-      """SELECT e.event_type, count(*) AS n_events,
-        |       round(sum(e.value * w.weight), 2) AS weighted_value
-        |FROM events e
-        |JOIN (VALUES ('click', 1.0), ('view', 0.5), ('purchase', 3.0),
-        |             ('error', 2.0), ('signup', 1.5)) AS w(event_type, weight)
-        |  ON e.event_type = w.event_type
-        |GROUP BY e.event_type
-        |ORDER BY e.event_type""".stripMargin,
-
-    "q_merge_upsert" ->
-      """WITH b AS (SELECT o_orderkey, o_custkey,
-        |                  round(o_totalprice * 100)::BIGINT AS price_c, 0::BIGINT AS ver
-        |           FROM orders),
-        |u AS (SELECT o_orderkey, o_custkey,
-        |             round(o_totalprice * 100)::BIGINT * 11 AS price_c, 1::BIGINT AS ver
-        |      FROM orders WHERE o_orderkey % 10 = 0),
-        |a AS (SELECT * FROM b UNION ALL SELECT * FROM u)
-        |SELECT o_orderkey, o_custkey, price_c, ver FROM a
-        |QUALIFY row_number() OVER (PARTITION BY o_orderkey ORDER BY ver DESC) = 1
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // generated from TextAnalysis.LangMarkers — one source of truth for
-    // both engines (widening the language table cannot desynchronize them)
-    "text_langid" -> {
-      val entries = graft.operators.TextAnalysis.LangMarkers.toSeq.sortBy(_._1)
-        .map { case (lang, ms) =>
-          val in = ms.map(m => s"'${m.replace("'", "''")}'").mkString(",")
-          s"{'score': len(list_filter(toks, x -> x IN ($in))), 'lang': '$lang'}"
-        }
-        .mkString(",\n               ")
-      s"""WITH d AS (SELECT doc_id, lang, string_split_regex(text, ' +') AS toks FROM documents),
-         |p AS (SELECT lang,
-         |             (list_max([
-         |               $entries
-         |             ])).lang AS lang_pred
-         |      FROM d)
-         |SELECT lang, lang_pred, count(*)::BIGINT AS n_docs
-         |FROM p GROUP BY lang, lang_pred
-         |ORDER BY lang, lang_pred""".stripMargin
-    },
-
-    // the MG aggregate's exact regime (capacity >= vocabulary): estimated
-    // counts equal true counts, (count desc, token asc) rank order
-    "text_heavy_hitters_exact" ->
-      """WITH t AS (
-        |  SELECT unnest(regexp_extract_all(text, '[a-z0-9]+')) AS token
-        |  FROM documents),
-        |c AS (SELECT token, count(*)::BIGINT AS n FROM t GROUP BY token)
-        |SELECT row_number() OVER (ORDER BY n DESC, token)::BIGINT AS rank, token, n
-        |FROM c
-        |ORDER BY rank""".stripMargin,
-
-    "text_tfidf" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(text, '[a-z0-9]+')) AS token
-        |  FROM documents
-        |),
-        |tf AS (SELECT doc_id, token, count(*) AS tf FROM toks GROUP BY doc_id, token),
-        |df AS (SELECT token, count(DISTINCT doc_id) AS df FROM toks GROUP BY token),
-        |n AS (SELECT count(DISTINCT doc_id) AS n_total FROM toks)
-        |SELECT doc_id, token, tfidf FROM (
-        |  SELECT tf.doc_id, tf.token,
-        |         round(tf.tf * ln(n.n_total::DOUBLE / df.df), 4) AS tfidf,
-        |         row_number() OVER (
-        |           PARTITION BY tf.doc_id
-        |           ORDER BY round(tf.tf * ln(n.n_total::DOUBLE / df.df), 4) DESC, tf.token) AS rk
-        |  FROM tf JOIN df USING (token) CROSS JOIN n)
-        |WHERE rk <= 3
-        |ORDER BY doc_id, tfidf DESC, token""".stripMargin,
-
-    "q_asof_join" ->
-      """SELECT event_id AS purchase_id, user_id, coalesce(last_click_id, -1) AS last_click_id
-        |FROM (SELECT event_id, user_id, event_type,
-        |             last_value(CASE WHEN event_type = 'click' THEN event_id END IGNORE NULLS)
-        |               OVER (PARTITION BY user_id ORDER BY event_id
-        |                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_click_id
-        |      FROM events)
-        |WHERE event_type = 'purchase'
-        |ORDER BY purchase_id""".stripMargin,
-
-    // tie mirror of Relational.nearestAsOf: equal distance → earlier
-    // (backward) candidate; equal time backward → larger value, forward →
-    // smaller (the CASE sign flip)
-    "q_asof_join_nearest" ->
-      """WITH l AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us
-        |  FROM events WHERE event_type = 'click'),
-        |r AS (
-        |  SELECT user_id, epoch_us(ts) AS p_ts, value
-        |  FROM events WHERE event_type = 'purchase'),
-        |m AS (
-        |  SELECT l.event_id, l.user_id, l.ts_us, r.value AS pv, r.p_ts,
-        |         abs(r.p_ts - l.ts_us) AS dist,
-        |         row_number() OVER (PARTITION BY l.event_id
-        |           ORDER BY abs(r.p_ts - l.ts_us), r.p_ts,
-        |                    CASE WHEN r.p_ts <= l.ts_us THEN -r.value
-        |                         ELSE r.value END) AS rn
-        |  FROM l JOIN r ON l.user_id = r.user_id
-        |  WHERE abs(r.p_ts - l.ts_us) <= 3600000000)
-        |SELECT event_id, user_id, ts_us, pv AS purchase_value,
-        |       p_ts AS purchase_ts_us, dist
-        |FROM m WHERE rn = 1
-        |UNION ALL
-        |SELECT l.event_id, l.user_id, l.ts_us, NULL, NULL, NULL
-        |FROM l
-        |WHERE NOT EXISTS (SELECT 1 FROM r
-        |                  WHERE r.user_id = l.user_id
-        |                    AND abs(r.p_ts - l.ts_us) <= 3600000000)
-        |ORDER BY event_id""".stripMargin,
-
-    "q_range_join" ->
-      """SELECT tier, count(*) AS n_events, round(sum(value), 2) AS sum_value
-        |FROM events e
-        |JOIN (VALUES (0.0, 50.0, 't1_low'), (50.0, 100.0, 't2_mid'),
-        |             (100.0, 150.0, 't3_high'), (150.0, 100000.0, 't4_extreme'))
-        |     t(lo, hi, tier)
-        |  ON e.value >= t.lo AND e.value < t.hi
-        |GROUP BY tier
-        |ORDER BY tier""".stripMargin,
-
-    "dedup_exact" ->
-      """SELECT lang, count(*) AS n_docs,
-        |       count(DISTINCT text) AS n_unique_text,
-        |       count(DISTINCT md5(lower(trim(text)))) AS n_unique_fp
-        |FROM documents
-        |GROUP BY lang
-        |ORDER BY lang""".stripMargin,
-
-    "dedup_fingerprint_keep" ->
-      """SELECT min(doc_id) AS doc_id, count(*) AS n_copies
-        |FROM documents
-        |GROUP BY md5(lower(trim(text)))
-        |ORDER BY doc_id""".stripMargin,
-
-    "dedup_keep_best" ->
-      """WITH all_docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT -doc_id - 1, upper(text) FROM documents),
-        |q AS (SELECT doc_id, text,
-        |        (20000 * length(regexp_replace(text, '[^a-z]', '', 'g'))
-        |           + greatest(length(text), 1)) // (2 * greatest(length(text), 1))
-        |          / 10000.0 AS alpha_ratio
-        |      FROM all_docs),
-        |r AS (SELECT doc_id, alpha_ratio,
-        |             row_number() OVER (PARTITION BY md5(lower(text))
-        |                                ORDER BY alpha_ratio DESC, doc_id) AS rn
-        |      FROM q)
-        |SELECT doc_id, alpha_ratio, rn = 1 AS keep FROM r
-        |ORDER BY doc_id""".stripMargin,
-
-    "dedup_ngram_jaccard" ->
-      """WITH s AS (
-        |  SELECT doc_id, n_chars // 100 AS len_bucket,
-        |         list_distinct([array_to_string(toks[i:i+2], ' ')
-        |                        for i in range(1, len(toks) - 1)]) AS sh
-        |  FROM (SELECT doc_id, n_chars, string_split_regex(text, ' +') AS toks
-        |        FROM documents)
-        |)
-        |SELECT doc_a, doc_b, jaccard FROM (
-        |  SELECT l.doc_id AS doc_a, r.doc_id AS doc_b,
-        |         round(len(list_intersect(l.sh, r.sh))::DOUBLE
-        |               / len(list_distinct(l.sh || r.sh)), 4) AS jaccard,
-        |         len(list_intersect(l.sh, r.sh))::DOUBLE
-        |               / len(list_distinct(l.sh || r.sh)) AS raw_j
-        |  FROM s l JOIN s r
-        |    ON l.len_bucket = r.len_bucket AND l.doc_id < r.doc_id)
-        |WHERE raw_j >= 0.5
-        |ORDER BY doc_a, doc_b""".stripMargin,
-
-    // identical oracle: prefix filtering must not change the result set
-    "dedup_ngram_jaccard_prefix" ->
-      """WITH s AS (
-        |  SELECT doc_id, n_chars // 100 AS len_bucket,
-        |         list_distinct([array_to_string(toks[i:i+2], ' ')
-        |                        for i in range(1, len(toks) - 1)]) AS sh
-        |  FROM (SELECT doc_id, n_chars, string_split_regex(text, ' +') AS toks
-        |        FROM documents)
-        |)
-        |SELECT doc_a, doc_b, jaccard FROM (
-        |  SELECT l.doc_id AS doc_a, r.doc_id AS doc_b,
-        |         round(len(list_intersect(l.sh, r.sh))::DOUBLE
-        |               / len(list_distinct(l.sh || r.sh)), 4) AS jaccard,
-        |         len(list_intersect(l.sh, r.sh))::DOUBLE
-        |               / len(list_distinct(l.sh || r.sh)) AS raw_j
-        |  FROM s l JOIN s r
-        |    ON l.len_bucket = r.len_bucket AND l.doc_id < r.doc_id)
-        |WHERE raw_j >= 0.5
-        |ORDER BY doc_a, doc_b""".stripMargin,
-
-    // directional: l is the contained doc (denominator |A| = len(l.sh)),
-    // r the container; lang blocking, no size blocking (cross-size pairs
-    // are the point of containment). Docs under shingleSize tokens have
-    // sh = [] and contribute no inverted-index rows on the Spark side —
-    // the len(sh) > 0 guard mirrors that (and keeps the division total).
-    "dedup_containment" ->
-      """WITH s AS (
-        |  SELECT doc_id, lang,
-        |         list_distinct([array_to_string(toks[i:i+2], ' ')
-        |                        for i in range(1, len(toks) - 1)]) AS sh
-        |  FROM (SELECT doc_id, lang, string_split_regex(text, ' +') AS toks
-        |        FROM documents)
-        |)
-        |SELECT doc_a, doc_b, containment FROM (
-        |  SELECT l.doc_id AS doc_a, r.doc_id AS doc_b,
-        |         round(len(list_intersect(l.sh, r.sh))::DOUBLE
-        |               / len(l.sh), 4) AS containment,
-        |         len(list_intersect(l.sh, r.sh))::DOUBLE
-        |               / len(l.sh) AS raw_c
-        |  FROM s l JOIN s r
-        |    ON l.lang = r.lang AND l.doc_id <> r.doc_id
-        |  WHERE len(l.sh) > 0)
-        |WHERE raw_c >= 0.8
-        |ORDER BY doc_a, doc_b""".stripMargin,
-
-    // df < N mirrors the engine's exact idf-0 prune; round-4 on the final
-    // cosine is the accepted summation-noise class (nearest corpus value
-    // sits 3e-5 from the threshold, measured)
-    "dedup_tfidf_cosine" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang, source,
-        |         unnest(regexp_extract_all(text, '[a-z0-9]+')) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, lang, source, term, count(*)::BIGINT AS c
-        |       FROM t GROUP BY 1, 2, 3, 4),
-        |dfreq AS (SELECT term, count(*)::BIGINT AS df FROM tf GROUP BY 1),
-        |n AS (SELECT count(*)::DOUBLE AS n FROM documents),
-        |w AS (
-        |  SELECT tf.doc_id, tf.lang, tf.source, tf.term,
-        |         tf.c * ln(n.n / dfreq.df) AS w
-        |  FROM tf JOIN dfreq ON tf.term = dfreq.term CROSS JOIN n
-        |  WHERE dfreq.df < n.n),
-        |nrm AS (SELECT doc_id, sqrt(sum(w * w)) AS nrm FROM w GROUP BY 1),
-        |dots AS (
-        |  SELECT l.doc_id AS doc_a, r.doc_id AS doc_b, sum(l.w * r.w) AS dot
-        |  FROM w l JOIN w r
-        |    ON l.term = r.term AND l.lang = r.lang AND l.source = r.source
-        |       AND l.doc_id < r.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc_a, doc_b, round(c, 4) AS cos FROM (
-        |  SELECT doc_a, doc_b, dot / (na.nrm * nb.nrm) AS c
-        |  FROM dots JOIN nrm na ON doc_a = na.doc_id
-        |            JOIN nrm nb ON doc_b = nb.doc_id)
-        |WHERE c >= 0.85
-        |ORDER BY doc_a, doc_b""".stripMargin,
-
-    // identical oracle to dedup_tfidf_cosine: l2-prefix pruning is exact
-    "dedup_tfidf_cosine_prefix" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang, source,
-        |         unnest(regexp_extract_all(text, '[a-z0-9]+')) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, lang, source, term, count(*)::BIGINT AS c
-        |       FROM t GROUP BY 1, 2, 3, 4),
-        |dfreq AS (SELECT term, count(*)::BIGINT AS df FROM tf GROUP BY 1),
-        |n AS (SELECT count(*)::DOUBLE AS n FROM documents),
-        |w AS (
-        |  SELECT tf.doc_id, tf.lang, tf.source, tf.term,
-        |         tf.c * ln(n.n / dfreq.df) AS w
-        |  FROM tf JOIN dfreq ON tf.term = dfreq.term CROSS JOIN n
-        |  WHERE dfreq.df < n.n),
-        |nrm AS (SELECT doc_id, sqrt(sum(w * w)) AS nrm FROM w GROUP BY 1),
-        |dots AS (
-        |  SELECT l.doc_id AS doc_a, r.doc_id AS doc_b, sum(l.w * r.w) AS dot
-        |  FROM w l JOIN w r
-        |    ON l.term = r.term AND l.lang = r.lang AND l.source = r.source
-        |       AND l.doc_id < r.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc_a, doc_b, round(c, 4) AS cos FROM (
-        |  SELECT doc_a, doc_b, dot / (na.nrm * nb.nrm) AS c
-        |  FROM dots JOIN nrm na ON doc_a = na.doc_id
-        |            JOIN nrm nb ON doc_b = nb.doc_id)
-        |WHERE c >= 0.85
-        |ORDER BY doc_a, doc_b""".stripMargin,
-
-    // identical oracle: prefix filtering must not change the result set
-    "dedup_containment_prefix" ->
-      """WITH s AS (
-        |  SELECT doc_id, lang,
-        |         list_distinct([array_to_string(toks[i:i+2], ' ')
-        |                        for i in range(1, len(toks) - 1)]) AS sh
-        |  FROM (SELECT doc_id, lang, string_split_regex(text, ' +') AS toks
-        |        FROM documents)
-        |)
-        |SELECT doc_a, doc_b, containment FROM (
-        |  SELECT l.doc_id AS doc_a, r.doc_id AS doc_b,
-        |         round(len(list_intersect(l.sh, r.sh))::DOUBLE
-        |               / len(l.sh), 4) AS containment,
-        |         len(list_intersect(l.sh, r.sh))::DOUBLE
-        |               / len(l.sh) AS raw_c
-        |  FROM s l JOIN s r
-        |    ON l.lang = r.lang AND l.doc_id <> r.doc_id
-        |  WHERE len(l.sh) > 0)
-        |WHERE raw_c >= 0.8
-        |ORDER BY doc_a, doc_b""".stripMargin,
-
-    "dedup_clusters" ->
-      """WITH RECURSIVE s AS (
-        |  SELECT doc_id, n_chars // 100 AS len_bucket,
-        |         list_distinct([array_to_string(toks[i:i+2], ' ')
-        |                        for i in range(1, len(toks) - 1)]) AS sh
-        |  FROM (SELECT doc_id, n_chars, string_split_regex(text, ' +') AS toks
-        |        FROM documents)
-        |),
-        |pairs AS (
-        |  SELECT l.doc_id AS doc_a, r.doc_id AS doc_b
-        |  FROM s l JOIN s r
-        |    ON l.len_bucket = r.len_bucket AND l.doc_id < r.doc_id
-        |  WHERE len(list_intersect(l.sh, r.sh))::DOUBLE
-        |          / len(list_distinct(l.sh || r.sh)) >= 0.5
-        |),
-        |edges AS (
-        |  SELECT doc_a AS u, doc_b AS v FROM pairs
-        |  UNION
-        |  SELECT doc_b AS u, doc_a AS v FROM pairs
-        |),
-        |reach AS (
-        |  SELECT u, v FROM edges
-        |  UNION
-        |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-        |  WHERE e.v <> r.u
-        |)
-        |SELECT doc_id, cluster_id, doc_id = cluster_id AS keep FROM (
-        |  SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id
-        |  FROM reach GROUP BY u)
-        |ORDER BY doc_id""".stripMargin,
-
-    // md5 MinHash family (Dedup.minhashSigTable md5 branch): one md5 per
-    // shingle split into integers a = int(hex[1..15]), b = int(hex[17..30]);
-    // permutation i's value is a + i·b (exact in BIGINT, no mod); signature
-    // entry = min over the shingle set; band bucket = '|'-joined decimal
-    // pair — recomputed here verbatim, so LSH candidate generation itself
-    // is hash-checked, then verified with the exact set Jaccard.
-    "dedup_minhash" ->
-      """WITH sf AS (
-        |  SELECT doc_id, sh FROM (
-        |    SELECT doc_id, list_distinct([array_to_string(toks[i:i+2], ' ')
-        |                                  for i in range(1, len(toks) - 1)]) AS sh
-        |    FROM (SELECT doc_id, string_split_regex(text, ' +') AS toks
-        |          FROM documents))
-        |  WHERE len(sh) > 0
-        |),
-        |mh AS (
-        |  SELECT doc_id, i, min(a + i*b) AS h
-        |  FROM (SELECT doc_id,
-        |               ('0x' || substr(m, 1, 15))::BIGINT AS a,
-        |               ('0x' || substr(m, 17, 14))::BIGINT AS b
-        |        FROM (SELECT doc_id, md5(unnest(sh)) AS m FROM sf)),
-        |       range(0, 32) t(i)
-        |  GROUP BY doc_id, i
-        |),
-        |sg AS (SELECT doc_id, list(h ORDER BY i) AS sig FROM mh GROUP BY doc_id),
-        |bk AS (
-        |  SELECT doc_id, b, sig[2*b + 1]::VARCHAR || '|' || sig[2*b + 2]::VARCHAR AS bucket
-        |  FROM sg, range(0, 16) t(b)
-        |),
-        |cand AS (
-        |  SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
-        |  FROM bk l JOIN bk r
-        |    ON l.b = r.b AND l.bucket = r.bucket AND l.doc_id < r.doc_id
-        |),
-        |ver AS (
-        |  SELECT doc_a, doc_b,
-        |         len(list_intersect(a.sh, b.sh))::DOUBLE
-        |           / len(list_distinct(a.sh || b.sh)) AS raw_j
-        |  FROM cand
-        |  JOIN sf a ON a.doc_id = cand.doc_a
-        |  JOIN sf b ON b.doc_id = cand.doc_b
-        |)
-        |SELECT doc_a, doc_b, round(raw_j, 4) AS jaccard
-        |FROM ver WHERE raw_j >= 0.5
-        |ORDER BY doc_a, doc_b""".stripMargin,
-
-    // same md5-family LSH pairs, then the dedup_clusters transitive
-    // closure + keep-one selection over them
-    "dedup_minhash_clusters" ->
-      """WITH RECURSIVE sf AS (
-        |  SELECT doc_id, sh FROM (
-        |    SELECT doc_id, list_distinct([array_to_string(toks[i:i+2], ' ')
-        |                                  for i in range(1, len(toks) - 1)]) AS sh
-        |    FROM (SELECT doc_id, string_split_regex(text, ' +') AS toks
-        |          FROM documents))
-        |  WHERE len(sh) > 0
-        |),
-        |mh AS (
-        |  SELECT doc_id, i, min(a + i*b) AS h
-        |  FROM (SELECT doc_id,
-        |               ('0x' || substr(m, 1, 15))::BIGINT AS a,
-        |               ('0x' || substr(m, 17, 14))::BIGINT AS b
-        |        FROM (SELECT doc_id, md5(unnest(sh)) AS m FROM sf)),
-        |       range(0, 32) t(i)
-        |  GROUP BY doc_id, i
-        |),
-        |sg AS (SELECT doc_id, list(h ORDER BY i) AS sig FROM mh GROUP BY doc_id),
-        |bk AS (
-        |  SELECT doc_id, b, sig[2*b + 1]::VARCHAR || '|' || sig[2*b + 2]::VARCHAR AS bucket
-        |  FROM sg, range(0, 16) t(b)
-        |),
-        |cand AS (
-        |  SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
-        |  FROM bk l JOIN bk r
-        |    ON l.b = r.b AND l.bucket = r.bucket AND l.doc_id < r.doc_id
-        |),
-        |pairs AS (
-        |  SELECT doc_a, doc_b
-        |  FROM cand
-        |  JOIN sf a ON a.doc_id = cand.doc_a
-        |  JOIN sf b ON b.doc_id = cand.doc_b
-        |  WHERE len(list_intersect(a.sh, b.sh))::DOUBLE
-        |          / len(list_distinct(a.sh || b.sh)) >= 0.5
-        |),
-        |edges AS (
-        |  SELECT doc_a AS u, doc_b AS v FROM pairs
-        |  UNION
-        |  SELECT doc_b AS u, doc_a AS v FROM pairs
-        |),
-        |reach AS (
-        |  SELECT u, v FROM edges
-        |  UNION
-        |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-        |  WHERE e.v <> r.u
-        |)
-        |SELECT doc_id, cluster_id, doc_id = cluster_id AS keep FROM (
-        |  SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id
-        |  FROM reach GROUP BY u)
-        |ORDER BY doc_id""".stripMargin,
-
-    // md5-family incremental gate: batch (doc_id >= 400) survives unless an
-    // LSH band bucket it shares with the corpus (< 400) verifies at J >= 0.5
-    "dedup_incremental_minhash" ->
-      """WITH sf AS (
-        |  SELECT doc_id, sh FROM (
-        |    SELECT doc_id, list_distinct([array_to_string(toks[i:i+2], ' ')
-        |                                  for i in range(1, len(toks) - 1)]) AS sh
-        |    FROM (SELECT doc_id, string_split_regex(text, ' +') AS toks
-        |          FROM documents))
-        |  WHERE len(sh) > 0
-        |),
-        |mh AS (
-        |  SELECT doc_id, i, min(a + i*b) AS h
-        |  FROM (SELECT doc_id,
-        |               ('0x' || substr(m, 1, 15))::BIGINT AS a,
-        |               ('0x' || substr(m, 17, 14))::BIGINT AS b
-        |        FROM (SELECT doc_id, md5(unnest(sh)) AS m FROM sf)),
-        |       range(0, 32) t(i)
-        |  GROUP BY doc_id, i
-        |),
-        |sg AS (SELECT doc_id, list(h ORDER BY i) AS sig FROM mh GROUP BY doc_id),
-        |bk AS (
-        |  SELECT doc_id, b, sig[2*b + 1]::VARCHAR || '|' || sig[2*b + 2]::VARCHAR AS bucket
-        |  FROM sg, range(0, 16) t(b)
-        |),
-        |cand AS (
-        |  SELECT DISTINCT l.doc_id AS batch_id, r.doc_id AS corpus_id
-        |  FROM bk l JOIN bk r ON l.b = r.b AND l.bucket = r.bucket
-        |  WHERE l.doc_id >= 400 AND r.doc_id < 400
-        |),
-        |flagged AS (
-        |  SELECT DISTINCT batch_id
-        |  FROM cand
-        |  JOIN sf a ON a.doc_id = cand.batch_id
-        |  JOIN sf b ON b.doc_id = cand.corpus_id
-        |  WHERE len(list_intersect(a.sh, b.sh))::DOUBLE
-        |          / len(list_distinct(a.sh || b.sh)) >= 0.5
-        |)
-        |SELECT doc_id, lang FROM documents
-        |WHERE doc_id >= 400
-        |  AND doc_id NOT IN (SELECT batch_id FROM flagged)
-        |ORDER BY doc_id""".stripMargin,
-
-    // md5 SimHash family (Dedup.simhash60Md5): per-shingle 60-bit hash =
-    // first 15 md5 hex chars as an integer; bit j of the fingerprint set
-    // iff the ±1 votes over the shingle set sum >= 0; candidates share one
-    // of 4 intact 15-bit blocks (pigeonhole at Hamming <= 3), then exact
-    // Hamming verification — every step recomputed here bit-for-bit.
-    "dedup_simhash" ->
-      """WITH sf AS (
-        |  SELECT doc_id, sh FROM (
-        |    SELECT doc_id, list_distinct([array_to_string(toks[i:i+2], ' ')
-        |                                  for i in range(1, len(toks) - 1)]) AS sh
-        |    FROM (SELECT doc_id, string_split_regex(text, ' +') AS toks
-        |          FROM documents))
-        |  WHERE len(sh) > 0
-        |),
-        |hv AS (
-        |  SELECT doc_id, ('0x' || substr(md5(e), 1, 15))::BIGINT AS h
-        |  FROM (SELECT doc_id, unnest(sh) AS e FROM sf)
-        |),
-        |bits AS (
-        |  SELECT doc_id, j,
-        |         CASE WHEN sum(((h >> j) & 1) * 2 - 1) >= 0
-        |              THEN (1::BIGINT << j) ELSE 0 END AS bv
-        |  FROM hv, range(0, 60) t(j)
-        |  GROUP BY doc_id, j
-        |),
-        |fp AS (SELECT doc_id, sum(bv)::BIGINT AS sh60 FROM bits GROUP BY doc_id),
-        |blk AS (
-        |  SELECT doc_id, sh60, b, (sh60 >> (b * 15)) & 32767 AS v
-        |  FROM fp, range(0, 4) t(b)
-        |)
-        |SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b,
-        |       bit_count(xor(l.sh60, r.sh60))::INTEGER AS hamming
-        |FROM blk l JOIN blk r
-        |  ON l.b = r.b AND l.v = r.v AND l.doc_id < r.doc_id
-        |WHERE bit_count(xor(l.sh60, r.sh60)) <= 3
-        |ORDER BY doc_a, doc_b""".stripMargin,
-
-    // lossless-BMP regime: perceptual pairs at Hamming 0 ≡ identical-text
-    // pairs (the fixture's images are byte-determined by the text)
-    "image_neardup_exact" ->
-      """WITH d AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 5 = 0)
-        |SELECT l.doc_id AS media_a, r.doc_id AS media_b, 0::INTEGER AS hamming
-        |FROM d l JOIN d r ON md5(l.text) = md5(r.text) AND l.doc_id < r.doc_id
-        |ORDER BY media_a, media_b""".stripMargin,
-
-    // byte-stride fallback on ASCII text payloads: feature j · 1000 =
-    // (Σ bytes at stride j) % 1000, exact integer arithmetic both sides
-    "multimodal_features_exact" ->
-      """WITH m AS (SELECT doc_id,
-        |                 CASE (doc_id % 3) WHEN 0 THEN 'image'
-        |                                   WHEN 1 THEN 'audio'
-        |                                   ELSE 'video' END AS media_type,
-        |                 text
-        |          FROM documents),
-        |b AS (SELECT doc_id, media_type, i, ord(substr(text, i, 1)) AS byte
-        |      FROM m, unnest(range(1, strlen(text) + 1)) u(i)),
-        |f AS (SELECT doc_id, media_type,
-        |             sum(byte) FILTER (WHERE (i - 1) % 16 = 0) % 1000 AS f0,
-        |             sum(byte) FILTER (WHERE (i - 1) % 16 = 15) % 1000 AS f15
-        |      FROM b GROUP BY doc_id, media_type)
-        |SELECT media_type, count(*)::BIGINT AS n_media,
-        |       count(*)::BIGINT AS n_undecoded,
-        |       sum(f0)::BIGINT AS sum_f0, sum(f15)::BIGINT AS sum_f15
-        |FROM f
-        |GROUP BY media_type
-        |ORDER BY media_type""".stripMargin,
-
-    // deterministic-codec regime: videos are byte-determined by the
-    // text, so all-3-frames-matched pairs at Hamming 0 ≡ identical-text
-    // pairs
-    "video_neardup_exact" ->
-      """WITH d AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 5 = 0)
-        |SELECT l.doc_id AS media_a, r.doc_id AS media_b, 3::BIGINT AS matched_frames
-        |FROM d l JOIN d r ON md5(l.text) = md5(r.text) AND l.doc_id < r.doc_id
-        |ORDER BY media_a, media_b""".stripMargin,
-
-    // lossless-WAV regime: envelope-hash pairs at Hamming 0 ≡
-    // identical-text pairs (payloads are byte-determined by the text)
-    "audio_neardup_exact" ->
-      """WITH d AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 5 = 0)
-        |SELECT l.doc_id AS media_a, r.doc_id AS media_b, 0::INTEGER AS hamming
-        |FROM d l JOIN d r ON md5(l.text) = md5(r.text) AND l.doc_id < r.doc_id
-        |ORDER BY media_a, media_b""".stripMargin,
-
-    // clusters over Hamming-0 envelope-hash pairs on the lossless WAV
-    // fixture ≡ equal-text groups of size > 1, min-id representative
-    "audio_neardup_clusters" ->
-      """WITH d AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 5 = 0),
-        |g AS (SELECT doc_id, md5(text) AS h FROM d),
-        |c AS (SELECT h, min(doc_id) AS cid, count(*) AS n FROM g GROUP BY h)
-        |SELECT g.doc_id, c.cid AS cluster_id, (g.doc_id = c.cid) AS keep
-        |FROM g JOIN c USING (h)
-        |WHERE c.n > 1
-        |ORDER BY doc_id""".stripMargin,
-
-    // deterministic-GIF regime: payloads byte-determined by the text, so
-    // all-3-frames-matched pairs at Hamming 0 ≡ identical-text pairs
-    "video_neardup_gif_exact" ->
-      """WITH d AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 5 = 0)
-        |SELECT l.doc_id AS media_a, r.doc_id AS media_b, 3::BIGINT AS matched_frames
-        |FROM d l JOIN d r ON md5(l.text) = md5(r.text) AND l.doc_id < r.doc_id
-        |ORDER BY media_a, media_b""".stripMargin,
-
-    // clusters over all-3-frame Hamming-0 video pairs on the
-    // deterministic-codec fixture ≡ equal-text groups of size > 1,
-    // min-id representative
-    "video_neardup_clusters" ->
-      """WITH d AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 5 = 0),
-        |g AS (SELECT doc_id, md5(text) AS h FROM d),
-        |c AS (SELECT h, min(doc_id) AS cid, count(*) AS n FROM g GROUP BY h)
-        |SELECT g.doc_id, c.cid AS cluster_id, (g.doc_id = c.cid) AS keep
-        |FROM g JOIN c USING (h)
-        |WHERE c.n > 1
-        |ORDER BY doc_id""".stripMargin,
-
-    // clusters over Hamming-0 pairs on the lossless fixture ≡ equal-text
-    // groups of size > 1, min-id representative
-    "image_neardup_clusters" ->
-      """WITH d AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 5 = 0),
-        |g AS (SELECT doc_id, md5(text) AS h FROM d),
-        |c AS (SELECT h, min(doc_id) AS cid, count(*) AS n FROM g GROUP BY h)
-        |SELECT g.doc_id, c.cid AS cluster_id, (g.doc_id = c.cid) AS keep
-        |FROM g JOIN c USING (h)
-        |WHERE c.n > 1
-        |ORDER BY doc_id""".stripMargin,
-
-    // brute-force all-pairs Hamming census — the banded Spark plan must
-    // reproduce it exactly (pigeonhole completeness + exact verify)
-    "image_neardup_banded" ->
-      """WITH hv AS (
-        |  SELECT doc_id,
-        |         xor(('0x' || substr(md5((doc_id % 40)::VARCHAR), 1, 15))::BIGINT,
-        |             (doc_id % 16) << (4 * (doc_id % 15))) AS h
-        |  FROM documents)
-        |SELECT l.doc_id AS media_a, r.doc_id AS media_b,
-        |       bit_count(xor(l.h, r.h))::INTEGER AS hamming
-        |FROM hv l JOIN hv r ON l.doc_id < r.doc_id
-        |WHERE bit_count(xor(l.h, r.h)) <= 6
-        |ORDER BY media_a, media_b""".stripMargin,
-
-    // md5 winnowing (TextAnalysis.winnowFingerprintsMd5): per-doc distinct
-    // window minima over 3-gram md5-int hashes, window w=4 (rows frame
-    // CURRENT..3 FOLLOWING truncated at the tail; valid starts only) —
-    // the distinct fingerprint set needs no tie rule, so both engines
-    // agree value-for-value.
-    "text_winnow" ->
-      """WITH g AS (
-        |  SELECT doc_id, q,
-        |         ('0x' || substr(md5(array_to_string(t[q:q+2], ' ')), 1, 15))::BIGINT AS h
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS q
-        |        FROM (SELECT doc_id, string_split_regex(text, ' +') AS t
-        |              FROM documents))
-        |),
-        |wm AS (
-        |  SELECT doc_id, q,
-        |         count(*) OVER (PARTITION BY doc_id) AS nh,
-        |         min(h) OVER (PARTITION BY doc_id ORDER BY q
-        |                      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS minh
-        |  FROM g
-        |),
-        |fps AS (
-        |  SELECT DISTINCT doc_id, minh AS fp FROM wm
-        |  WHERE q - 1 <= nh - least(4, nh)
-        |)
-        |SELECT fp, min(doc_id) AS doc_id, count(*) AS n_docs
-        |FROM fps GROUP BY fp ORDER BY fp""".stripMargin,
-
-    "sample_consistent" ->
-      """SELECT lang, rk, doc_id
-        |FROM (SELECT lang, doc_id,
-        |             row_number() OVER (PARTITION BY lang
-        |                                ORDER BY md5(doc_id::VARCHAR), doc_id) AS rk
-        |      FROM documents)
-        |WHERE rk <= 10
-        |ORDER BY lang, rk""".stripMargin,
-
-    "text_stats" ->
-      """SELECT lang, count(*) AS n_docs,
-        |       round(avg(n_chars), 2) AS avg_chars,
-        |       round(avg(len(string_split_regex(text, ' +'))), 4) AS avg_ws_tokens,
-        |       round(avg(len(regexp_extract_all(text, '[a-z0-9]+'))), 4) AS avg_word_tokens
-        |FROM documents
-        |GROUP BY lang
-        |ORDER BY lang""".stripMargin,
-
-    "text_quality" ->
-      """SELECT doc_id,
-        |       len(toks) AS n_tokens,
-        |       (20000 * coalesce(list_sum(list_transform(toks, t -> length(t))), 0)
-        |          + greatest(len(toks), 1)) // (2 * greatest(len(toks), 1))
-        |         / 10000.0 AS mean_token_len,
-        |       (20000 * length(regexp_replace(text, '[^a-z]', '', 'g'))
-        |          + greatest(length(text), 1)) // (2 * greatest(length(text), 1))
-        |         / 10000.0 AS alpha_ratio,
-        |       (20000 * len(list_filter(toks,
-        |                 t -> t IN ('the','a','and','of','to','in','is','it')))
-        |          + greatest(len(toks), 1)) // (2 * greatest(len(toks), 1))
-        |         / 10000.0 AS stopword_ratio
-        |FROM (SELECT doc_id, text, string_split_regex(text, ' +') AS toks FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-
-    "similarity_topk" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-        |           FROM embeddings WHERE vec_id < 5),
-        |     c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv FROM embeddings),
-        |     scored AS (
-        |       SELECT query_id, neighbor_id, list_cosine_similarity(qv, cv) AS s
-        |       FROM q CROSS JOIN c WHERE query_id <> neighbor_id),
-        |     ranked AS (
-        |       SELECT query_id, neighbor_id, s,
-        |              row_number() OVER (PARTITION BY query_id ORDER BY s DESC, neighbor_id) AS rank
-        |       FROM scored)
-        |SELECT query_id, neighbor_id, round(s, 4) AS cos_sim, rank
-        |FROM ranked WHERE rank <= 5
-        |ORDER BY query_id, rank""".stripMargin,
-
-    // md5 table-plane LSH (Similarity.md5TablePlanes, "t:p,d" keys): 4
-    // tables × 6 planes rebuilt verbatim; per (vec, table) the sign bucket;
-    // queries probe their bucket plus every 1-bit flip; candidates union
-    // across tables, then the same exact-cosine top-5 rank as
-    // similarity_topk.
-    "similarity_lsh_topk" ->
-      """WITH planes AS (
-        |  SELECT t, p, list(v ORDER BY d) AS plane
-        |  FROM (SELECT t, p, d,
-        |               (('0x' || substr(md5(t::VARCHAR || ':' || p::VARCHAR || ',' || d::VARCHAR), 1, 15))::BIGINT
-        |                  % 2001 - 1000)::DOUBLE AS v
-        |        FROM range(0, 4) tt(t), range(0, 6) pp(p), range(0, 64) dd(d))
-        |  GROUP BY t, p
-        |),
-        |sig AS (
-        |  SELECT e.vec_id, pl.t,
-        |         sum(CASE WHEN list_dot_product(e.embedding::DOUBLE[], pl.plane) >= 0
-        |                  THEN (1::BIGINT << pl.p) ELSE 0 END)::BIGINT AS bucket
-        |  FROM embeddings e, planes pl
-        |  GROUP BY e.vec_id, pl.t
-        |),
-        |flips AS (
-        |  SELECT 0::BIGINT AS flip
-        |  UNION ALL
-        |  SELECT (1::BIGINT << j) AS flip FROM range(0, 6) jj(j)
-        |),
-        |cand AS (
-        |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-        |  FROM (SELECT * FROM sig WHERE vec_id < 5) q
-        |  JOIN flips f ON true
-        |  JOIN sig c ON c.t = q.t AND c.bucket = xor(q.bucket, f.flip)
-        |  WHERE c.vec_id <> q.vec_id
-        |),
-        |scored AS (
-        |  SELECT cand.query_id, cand.neighbor_id,
-        |         list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) AS s
-        |  FROM cand
-        |  JOIN embeddings a ON a.vec_id = cand.query_id
-        |  JOIN embeddings b ON b.vec_id = cand.neighbor_id
-        |),
-        |ranked AS (
-        |  SELECT query_id, neighbor_id, s,
-        |         row_number() OVER (PARTITION BY query_id ORDER BY s DESC, neighbor_id) AS rank
-        |  FROM scored)
-        |SELECT query_id, neighbor_id, round(s, 4) AS cos_sim, rank
-        |FROM ranked WHERE rank <= 5
-        |ORDER BY query_id, rank""".stripMargin,
-
-    // full probe ≡ brute force (see the queries entry) — the oracle is the
-    // same exact-cosine top-5 SQL as similarity_topk
-    "similarity_ivf_full_topk" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-        |           FROM embeddings WHERE vec_id < 5),
-        |     c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv FROM embeddings),
-        |     scored AS (
-        |       SELECT query_id, neighbor_id, list_cosine_similarity(qv, cv) AS s
-        |       FROM q CROSS JOIN c WHERE query_id <> neighbor_id),
-        |     ranked AS (
-        |       SELECT query_id, neighbor_id, s,
-        |              row_number() OVER (PARTITION BY query_id ORDER BY s DESC, neighbor_id) AS rank
-        |       FROM scored)
-        |SELECT query_id, neighbor_id, round(s, 4) AS cos_sim, rank
-        |FROM ranked WHERE rank <= 5
-        |ORDER BY query_id, rank""".stripMargin,
-
-    // IVF-PQ exact regime (full probe + lossless PQ) — same bounded-corpus
-    // brute-force SQL as similarity_pq_topk_exact
-    "similarity_ivfpq_topk_exact" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-        |           FROM embeddings WHERE vec_id < 5),
-        |     c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv
-        |           FROM embeddings WHERE vec_id < 200),
-        |     scored AS (
-        |       SELECT query_id, neighbor_id, list_cosine_similarity(qv, cv) AS s
-        |       FROM q CROSS JOIN c WHERE query_id <> neighbor_id),
-        |     ranked AS (
-        |       SELECT query_id, neighbor_id, s,
-        |              row_number() OVER (PARTITION BY query_id ORDER BY s DESC, neighbor_id) AS rank
-        |       FROM scored)
-        |SELECT query_id, neighbor_id, round(s, 4) AS cos_sim, rank
-        |FROM ranked WHERE rank <= 5
-        |ORDER BY query_id, rank""".stripMargin,
-
-    // PQ exact regime (ksub ≥ corpus, lossless encode, ADC ≡ exact dot) —
-    // similarity_topk's SQL with the corpus bounded to the same 200 vectors
-    "similarity_pq_topk_exact" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-        |           FROM embeddings WHERE vec_id < 5),
-        |     c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv
-        |           FROM embeddings WHERE vec_id < 200),
-        |     scored AS (
-        |       SELECT query_id, neighbor_id, list_cosine_similarity(qv, cv) AS s
-        |       FROM q CROSS JOIN c WHERE query_id <> neighbor_id),
-        |     ranked AS (
-        |       SELECT query_id, neighbor_id, s,
-        |              row_number() OVER (PARTITION BY query_id ORDER BY s DESC, neighbor_id) AS rank
-        |       FROM scored)
-        |SELECT query_id, neighbor_id, round(s, 4) AS cos_sim, rank
-        |FROM ranked WHERE rank <= 5
-        |ORDER BY query_id, rank""".stripMargin,
-
-    // the exact k-NN JOIN is brute force with corpus-as-queries — fully
-    // SQL-expressible, so it graduates from rows+spec to a hard oracle
-    "similarity_knn_join" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-        |     scored AS (
-        |       SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-        |              list_cosine_similarity(a.vec, b.vec) AS s
-        |       FROM v a CROSS JOIN v b WHERE a.vec_id <> b.vec_id),
-        |     ranked AS (
-        |       SELECT query_id, neighbor_id, s,
-        |              row_number() OVER (PARTITION BY query_id ORDER BY s DESC, neighbor_id) AS rank
-        |       FROM scored)
-        |SELECT query_id, neighbor_id, round(s, 4) AS cos_sim, rank
-        |FROM ranked WHERE rank <= 3
-        |ORDER BY query_id, rank""".stripMargin,
-
-    // same md5 table-plane LSH as similarity_lsh_topk, corpus-as-queries
-    // (every vector probes its buckets + 1-bit flips), exact-cosine top-3
-    "similarity_knn_join_lsh" ->
-      """WITH planes AS (
-        |  SELECT t, p, list(v ORDER BY d) AS plane
-        |  FROM (SELECT t, p, d,
-        |               (('0x' || substr(md5(t::VARCHAR || ':' || p::VARCHAR || ',' || d::VARCHAR), 1, 15))::BIGINT
-        |                  % 2001 - 1000)::DOUBLE AS v
-        |        FROM range(0, 4) tt(t), range(0, 6) pp(p), range(0, 64) dd(d))
-        |  GROUP BY t, p
-        |),
-        |sig AS (
-        |  SELECT e.vec_id, pl.t,
-        |         sum(CASE WHEN list_dot_product(e.embedding::DOUBLE[], pl.plane) >= 0
-        |                  THEN (1::BIGINT << pl.p) ELSE 0 END)::BIGINT AS bucket
-        |  FROM embeddings e, planes pl
-        |  GROUP BY e.vec_id, pl.t
-        |),
-        |flips AS (
-        |  SELECT 0::BIGINT AS flip
-        |  UNION ALL
-        |  SELECT (1::BIGINT << j) AS flip FROM range(0, 6) jj(j)
-        |),
-        |cand AS (
-        |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-        |  FROM sig q
-        |  JOIN flips f ON true
-        |  JOIN sig c ON c.t = q.t AND c.bucket = xor(q.bucket, f.flip)
-        |  WHERE c.vec_id <> q.vec_id
-        |),
-        |scored AS (
-        |  SELECT cand.query_id, cand.neighbor_id,
-        |         list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) AS s
-        |  FROM cand
-        |  JOIN embeddings a ON a.vec_id = cand.query_id
-        |  JOIN embeddings b ON b.vec_id = cand.neighbor_id
-        |),
-        |ranked AS (
-        |  SELECT query_id, neighbor_id, s,
-        |         row_number() OVER (PARTITION BY query_id ORDER BY s DESC, neighbor_id) AS rank
-        |  FROM scored)
-        |SELECT query_id, neighbor_id, round(s, 4) AS cos_sim, rank
-        |FROM ranked WHERE rank <= 3
-        |ORDER BY query_id, rank""".stripMargin,
-
-    // the AUTO-plane twin: nplanes is recomputed from count(*) with the
-    // same integer-exact formula as Similarity.autoPlanes (smallest b >= 6
-    // with 2^b * 32 >= n, via binary-string length — never float log2,
-    // whose libm rounding could disagree across engines on exact powers of
-    // two). At this gate's scales it resolves to 6, so the result set
-    // equals similarity_knn_join_lsh — the point is that DuckDB replays
-    // the SIZING itself, not just the fixed-parameter LSH.
-    "similarity_knn_join_lsh_scale" ->
-      """WITH params AS (
-        |  SELECT greatest(6, length(bin((count(*) + 31) // 32 - 1))) AS nplanes
-        |  FROM embeddings
-        |),
-        |planes AS (
-        |  SELECT t, p, list(v ORDER BY d) AS plane
-        |  FROM (SELECT t, p, d,
-        |               (('0x' || substr(md5(t::VARCHAR || ':' || p::VARCHAR || ',' || d::VARCHAR), 1, 15))::BIGINT
-        |                  % 2001 - 1000)::DOUBLE AS v
-        |        FROM range(0, 4) tt(t), range(0, 48) pp(p), range(0, 64) dd(d)
-        |        WHERE p < (SELECT nplanes FROM params))
-        |  GROUP BY t, p
-        |),
-        |sig AS (
-        |  SELECT e.vec_id, pl.t,
-        |         sum(CASE WHEN list_dot_product(e.embedding::DOUBLE[], pl.plane) >= 0
-        |                  THEN (1::BIGINT << pl.p) ELSE 0 END)::BIGINT AS bucket
-        |  FROM embeddings e, planes pl
-        |  GROUP BY e.vec_id, pl.t
-        |),
-        |flips AS (
-        |  SELECT 0::BIGINT AS flip
-        |  UNION ALL
-        |  SELECT (1::BIGINT << j) AS flip FROM range(0, 48) jj(j)
-        |  WHERE j < (SELECT nplanes FROM params)
-        |),
-        |cand AS (
-        |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-        |  FROM sig q
-        |  JOIN flips f ON true
-        |  JOIN sig c ON c.t = q.t AND c.bucket = xor(q.bucket, f.flip)
-        |  WHERE c.vec_id <> q.vec_id
-        |),
-        |scored AS (
-        |  SELECT cand.query_id, cand.neighbor_id,
-        |         list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) AS s
-        |  FROM cand
-        |  JOIN embeddings a ON a.vec_id = cand.query_id
-        |  JOIN embeddings b ON b.vec_id = cand.neighbor_id
-        |),
-        |ranked AS (
-        |  SELECT query_id, neighbor_id, s,
-        |         row_number() OVER (PARTITION BY query_id ORDER BY s DESC, neighbor_id) AS rank
-        |  FROM scored)
-        |SELECT query_id, neighbor_id, round(s, 4) AS cos_sim, rank
-        |FROM ranked WHERE rank <= 3
-        |ORDER BY query_id, rank""".stripMargin,
-
-    // nlist = 1 ⇒ one cell (cell 0), pairs = global all-pairs cosine,
-    // clusters = recursive-CTE closure, keeper = min id; vectors with no
-    // pair keep themselves (the operator's left-join + coalesce)
-    "dedup_semantic_exact" ->
-      """WITH RECURSIVE pairs AS (
-        |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-        |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |  WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.3
-        |),
-        |edges AS (
-        |  SELECT vec_a AS u, vec_b AS v FROM pairs
-        |  UNION
-        |  SELECT vec_b AS u, vec_a AS v FROM pairs
-        |),
-        |reach AS (
-        |  SELECT u, v FROM edges
-        |  UNION
-        |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-        |  WHERE e.v <> r.u
-        |),
-        |clusters AS (
-        |  SELECT u AS vec_id, LEAST(u, MIN(v)) AS cluster_id
-        |  FROM reach GROUP BY u
-        |)
-        |SELECT e.vec_id AS vec_id, 0 AS cell,
-        |       coalesce(c.cluster_id, e.vec_id) AS cluster_id,
-        |       coalesce(e.vec_id = c.cluster_id, TRUE) AS keep
-        |FROM embeddings e LEFT JOIN clusters c ON e.vec_id = c.vec_id
-        |ORDER BY e.vec_id""".stripMargin,
-
-    "embedding_neardup" ->
-      """SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-        |       round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) AS cos_sim
-        |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.3
-        |ORDER BY vec_a, vec_b""".stripMargin,
-
-    // md5 hyperplane family (Similarity.md5Planes): plane[p][d] =
-    // int(md5hex(p||','||d)[1..15]) % 2001 - 1000; bucket bit p = sign of
-    // dot(embedding, plane p); candidates share the full 4-bit bucket,
-    // then exact cosine verification — planes, signs, and buckets all
-    // recomputed here verbatim.
-    "embedding_neardup_lsh" ->
-      """WITH planes AS (
-        |  SELECT p, list(v ORDER BY d) AS plane
-        |  FROM (SELECT p, d,
-        |               (('0x' || substr(md5(p::VARCHAR || ',' || d::VARCHAR), 1, 15))::BIGINT
-        |                  % 2001 - 1000)::DOUBLE AS v
-        |        FROM range(0, 4) t(p), range(0, 64) u(d))
-        |  GROUP BY p
-        |),
-        |sig AS (
-        |  SELECT e.vec_id,
-        |         sum(CASE WHEN list_dot_product(e.embedding::DOUBLE[], pl.plane) >= 0
-        |                  THEN (1::BIGINT << pl.p) ELSE 0 END)::BIGINT AS bucket
-        |  FROM embeddings e, planes pl
-        |  GROUP BY e.vec_id
-        |)
-        |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-        |       round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) AS cos_sim
-        |FROM sig sa
-        |JOIN sig sb ON sa.bucket = sb.bucket AND sa.vec_id < sb.vec_id
-        |JOIN embeddings a ON a.vec_id = sa.vec_id
-        |JOIN embeddings b ON b.vec_id = sb.vec_id
-        |WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.3
-        |ORDER BY vec_a, vec_b""".stripMargin,
-
-    "embedding_centroid" ->
-      """SELECT label, i AS pos, round(avg(embedding[i]::DOUBLE), 6) AS centroid_v
-        |FROM embeddings, range(1, 65) t(i)
-        |GROUP BY label, i
-        |ORDER BY label, pos""".stripMargin,
-
-    "session_window" ->
-      """WITH e AS (SELECT user_id, event_id, value,
-        |                  epoch_ns(ts) // 1000000000 AS ts_s
-        |           FROM events),
-        |     f AS (SELECT *, CASE WHEN lag(ts_s) OVER w IS NULL
-        |                            OR ts_s - lag(ts_s) OVER w > 21600
-        |                          THEN 1 ELSE 0 END AS new_sess
-        |           FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_s, event_id)),
-        |     g AS (SELECT *, (sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts_s, event_id
-        |                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))::BIGINT AS session_id
-        |           FROM f)
-        |SELECT user_id, session_id, count(*) AS n_events,
-        |       min(ts_s) AS session_start_s,
-        |       max(ts_s) - min(ts_s) AS duration_s,
-        |       round(sum(value), 2) AS sum_value
-        |FROM g
-        |GROUP BY user_id, session_id
-        |ORDER BY user_id, session_id""".stripMargin,
-
-    "q_scd2_intervals" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_ns(ts) // 1000000000 AS ts_s, event_type FROM events),
-        |c AS (SELECT user_id, event_id, ts_s, event_type,
-        |             CASE WHEN lag(event_type) OVER (PARTITION BY user_id ORDER BY ts_s, event_id)
-        |                       IS DISTINCT FROM event_type THEN 1 ELSE 0 END AS chg
-        |      FROM e),
-        |r AS (SELECT user_id, ts_s, event_type,
-        |             sum(chg) OVER (PARTITION BY user_id ORDER BY ts_s, event_id
-        |                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS run_id
-        |      FROM c),
-        |g AS (SELECT user_id, run_id, min(event_type) AS event_type,
-        |             min(ts_s)::BIGINT AS valid_from, count(*)::BIGINT AS n_events
-        |      FROM r GROUP BY 1, 2)
-        |SELECT user_id, event_type, valid_from,
-        |       coalesce(lead(valid_from) OVER (PARTITION BY user_id ORDER BY run_id),
-        |                253402300800)::BIGINT AS valid_to,
-        |       n_events
-        |FROM g
-        |ORDER BY user_id, valid_from""".stripMargin,
-
-    "q_profile" ->
-      """SELECT 'doc_id' AS col_name, count(*)::BIGINT AS n_rows,
-        |       (count(*) - count(doc_id))::BIGINT AS n_nulls,
-        |       count(DISTINCT doc_id)::BIGINT AS n_distinct,
-        |       min(doc_id)::DOUBLE AS min_num, max(doc_id)::DOUBLE AS max_num
-        |FROM documents
-        |UNION ALL
-        |SELECT 'n_chars', count(*)::BIGINT, (count(*) - count(n_chars))::BIGINT,
-        |       count(DISTINCT n_chars)::BIGINT, min(n_chars)::DOUBLE, max(n_chars)::DOUBLE
-        |FROM documents
-        |UNION ALL
-        |SELECT 'lang', count(*)::BIGINT, (count(*) - count(lang))::BIGINT,
-        |       count(DISTINCT lang)::BIGINT, NULL::DOUBLE, NULL::DOUBLE
-        |FROM documents
-        |UNION ALL
-        |SELECT 'source', count(*)::BIGINT, (count(*) - count(source))::BIGINT,
-        |       count(DISTINCT source)::BIGINT, NULL::DOUBLE, NULL::DOUBLE
-        |FROM documents
-        |UNION ALL
-        |SELECT 'text', count(*)::BIGINT, (count(*) - count(text))::BIGINT,
-        |       count(DISTINCT text)::BIGINT, NULL::DOUBLE, NULL::DOUBLE
-        |FROM documents
-        |ORDER BY col_name""".stripMargin,
-
-    "events_anomaly" ->
-      """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000000000 AS ts_s, value FROM events),
-        |w AS (SELECT user_id, value,
-        |             count(value) OVER fr AS n_window,
-        |             avg(value) OVER fr AS mean_w,
-        |             stddev_samp(value) OVER fr AS std_w
-        |      FROM e
-        |      WINDOW fr AS (PARTITION BY user_id ORDER BY ts_s
-        |                    RANGE BETWEEN 86400 PRECEDING AND CURRENT ROW))
-        |SELECT user_id, count(*)::BIGINT AS n_events,
-        |       sum(CASE WHEN n_window >= 10 AND std_w > 0
-        |                 AND abs(value - mean_w) > std_w * 3.0
-        |            THEN 1 ELSE 0 END)::BIGINT AS n_anomalies
-        |FROM w
-        |GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
-
-    "events_gapfill" ->
-      """WITH b AS (
-        |  SELECT user_id, (epoch_ns(ts) // 1000000000 // 3600) * 3600 AS bucket_s,
-        |         CAST(round(avg(value) * 10000, 0) AS BIGINT) AS v_u
-        |  FROM events WHERE user_id < 30 GROUP BY 1, 2),
-        |spine AS (
-        |  SELECT user_id, unnest(range(min(bucket_s), max(bucket_s) + 3600, 3600)) AS bucket_s
-        |  FROM b GROUP BY user_id),
-        |j AS (
-        |  SELECT s.user_id, s.bucket_s, b.v_u
-        |  FROM spine s LEFT JOIN b USING (user_id, bucket_s)),
-        |w AS (
-        |  SELECT user_id, bucket_s, v_u,
-        |    last_value(v_u IGNORE NULLS) OVER
-        |      (PARTITION BY user_id ORDER BY bucket_s) AS prev_u,
-        |    last_value(CASE WHEN v_u IS NOT NULL THEN bucket_s END IGNORE NULLS) OVER
-        |      (PARTITION BY user_id ORDER BY bucket_s) AS prev_t,
-        |    first_value(v_u IGNORE NULLS) OVER
-        |      (PARTITION BY user_id ORDER BY bucket_s
-        |       ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS next_u,
-        |    first_value(CASE WHEN v_u IS NOT NULL THEN bucket_s END IGNORE NULLS) OVER
-        |      (PARTITION BY user_id ORDER BY bucket_s
-        |       ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS next_t
-        |  FROM j)
-        |SELECT user_id, bucket_s, (v_u IS NOT NULL) AS is_observed,
-        |       prev_u / 10000.0 AS v_ffill,
-        |       (CASE WHEN v_u IS NOT NULL THEN v_u
-        |             WHEN prev_t IS NOT NULL AND next_t IS NOT NULL THEN
-        |               (prev_u * (next_t - bucket_s) + next_u * (bucket_s - prev_t))
-        |                 // (next_t - prev_t)
-        |             ELSE coalesce(prev_u, next_u) END) / 10000.0 AS v_interp
-        |FROM w
-        |ORDER BY user_id, bucket_s""".stripMargin,
-
-    "q_interval_overlap" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_ns(ts) // 1000000000 AS ts_s, event_type
-        |           FROM events WHERE user_id < 20),
-        |c AS (SELECT user_id, event_id, ts_s, event_type,
-        |             CASE WHEN lag(event_type) OVER (PARTITION BY user_id ORDER BY ts_s, event_id)
-        |                       IS DISTINCT FROM event_type THEN 1 ELSE 0 END AS chg
-        |      FROM e),
-        |r AS (SELECT user_id, ts_s,
-        |             sum(chg) OVER (PARTITION BY user_id ORDER BY ts_s, event_id
-        |                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS run_id
-        |      FROM c),
-        |g AS (SELECT user_id, run_id, min(ts_s)::BIGINT AS valid_from
-        |      FROM r GROUP BY 1, 2),
-        |iv AS (SELECT user_id, valid_from,
-        |              lead(valid_from) OVER (PARTITION BY user_id ORDER BY run_id) AS valid_to
-        |       FROM g),
-        |l AS (SELECT * FROM iv WHERE user_id < 10 AND valid_to IS NOT NULL),
-        |rr AS (SELECT * FROM iv WHERE user_id >= 10 AND valid_to IS NOT NULL)
-        |SELECT l.user_id AS l_user, l.valid_from AS l_from, count(*)::BIGINT AS n_concurrent
-        |FROM l JOIN rr ON l.valid_from < rr.valid_to AND rr.valid_from < l.valid_to
-        |GROUP BY 1, 2
-        |ORDER BY 1, 2""".stripMargin,
-
-    // EWMA: the lag-unrolled bounded-horizon form, with the (1-α)^j weight
-    // literals emitted from the SAME math.pow calls the Spark plan embeds
-    // (Double.toString round-trips, so DuckDB parses the identical double)
-    // and the numerator/denominator summed in the same ascending-j
-    // association order — the final division is bit-identical.
-    "events_ewma" -> ewmaOracleSql(alpha = 0.3, horizon = 8),
-
-    // moment differences cast ::BIGINT::DOUBLE (single hardware cvt) —
-    // DuckDB's direct HUGEINT→DOUBLE is not correctly rounded; the bounded
-    // 20-row frame keeps every difference far inside int64.
-    "events_rolling_corr" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id, epoch_ns(ts) // 1000 AS ts_us,
-        |         (epoch_ns(ts) // 1000000000 - 1704067200)::HUGEINT AS x,
-        |         CAST(round(value * 10000, 0) AS BIGINT)::HUGEINT AS y
-        |  FROM events),
-        |w AS (
-        |  SELECT event_id, user_id,
-        |         count(*) OVER fr AS n,
-        |         sum(x) OVER fr AS sx, sum(y) OVER fr AS sy,
-        |         sum(x * y) OVER fr AS sxy,
-        |         sum(x * x) OVER fr AS sxx, sum(y * y) OVER fr AS syy
-        |  FROM e
-        |  WINDOW fr AS (PARTITION BY user_id ORDER BY ts_us, event_id
-        |                ROWS BETWEEN 19 PRECEDING AND CURRENT ROW))
-        |SELECT event_id, user_id,
-        |       CASE WHEN (n * sxx - sx * sx)::BIGINT::DOUBLE > 0
-        |             AND (n * syy - sy * sy)::BIGINT::DOUBLE > 0
-        |            THEN floor((n * sxy - sx * sy)::BIGINT::DOUBLE
-        |                       / sqrt((n * sxx - sx * sx)::BIGINT::DOUBLE)
-        |                       / sqrt((n * syy - sy * sy)::BIGINT::DOUBLE)
-        |                       * 10000.0 + 0.5)::BIGINT / 10000.0
-        |            ELSE 2.0 END AS corr20
-        |FROM w
-        |WHERE event_id % 20 = 0
-        |ORDER BY event_id""".stripMargin,
-
-    "text_bm25" ->
-      """WITH t AS (
-        |  SELECT doc_id, regexp_extract_all(text, '[a-z0-9]+') AS toks
-        |  FROM documents),
-        |d AS (SELECT doc_id, toks, len(toks)::BIGINT AS dl FROM t),
-        |s AS (
-        |  SELECT count(*)::BIGINT AS n, sum(dl)::BIGINT AS tot,
-        |         sum(CASE WHEN list_contains(toks, 'join')
-        |             THEN 1 ELSE 0 END)::BIGINT AS df0,
-        |         sum(CASE WHEN list_contains(toks, 'vector')
-        |             THEN 1 ELSE 0 END)::BIGINT AS df1,
-        |         sum(CASE WHEN list_contains(toks, 'spark')
-        |             THEN 1 ELSE 0 END)::BIGINT AS df2
-        |  FROM d),
-        |w AS (
-        |  SELECT doc_id, dl,
-        |         len(list_filter(toks, x -> x = 'join'))::BIGINT AS tf0,
-        |         len(list_filter(toks, x -> x = 'vector'))::BIGINT AS tf1,
-        |         len(list_filter(toks, x -> x = 'spark'))::BIGINT AS tf2,
-        |         n, tot, df0, df1, df2,
-        |         (1.0 - 0.75) + 0.75 * ((dl * n)::DOUBLE / tot::DOUBLE) AS nrm
-        |  FROM d CROSS JOIN s)
-        |SELECT doc_id, dl,
-        |       floor((
-        |         CASE WHEN tf0 > 0 THEN
-        |           ln(1.0 + ((n - df0)::DOUBLE + 0.5) / (df0::DOUBLE + 0.5))
-        |           * (tf0::DOUBLE * (1.2 + 1.0)
-        |              / (tf0::DOUBLE + 1.2 * nrm)) ELSE 0.0 END
-        |         + CASE WHEN tf1 > 0 THEN
-        |           ln(1.0 + ((n - df1)::DOUBLE + 0.5) / (df1::DOUBLE + 0.5))
-        |           * (tf1::DOUBLE * (1.2 + 1.0)
-        |              / (tf1::DOUBLE + 1.2 * nrm)) ELSE 0.0 END
-        |         + CASE WHEN tf2 > 0 THEN
-        |           ln(1.0 + ((n - df2)::DOUBLE + 0.5) / (df2::DOUBLE + 0.5))
-        |           * (tf2::DOUBLE * (1.2 + 1.0)
-        |              / (tf2::DOUBLE + 1.2 * nrm)) ELSE 0.0 END
-        |       ) * 10000.0 + 0.5)::BIGINT / 10000.0 AS bm25
-        |FROM w WHERE doc_id % 10 = 0
-        |ORDER BY doc_id""".stripMargin,
-
-    "text_hapax" ->
-      """WITH t AS (
-        |  SELECT source, unnest(regexp_extract_all(text, '[a-z0-9]+')) AS term
-        |  FROM documents),
-        |c AS (SELECT source, term, count(*)::BIGINT AS c FROM t GROUP BY 1, 2)
-        |SELECT source, count(*)::BIGINT AS n_terms,
-        |       sum(CASE WHEN c = 1 THEN 1 ELSE 0 END)::BIGINT AS n_hapax,
-        |       ((sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) * 1000000 * 2
-        |         + count(*)) // (count(*) * 2))::BIGINT AS hapax_ppm
-        |FROM c GROUP BY source
-        |ORDER BY source""".stripMargin,
-
-    "text_blocklist" ->
-      s"""WITH p(pat) AS (VALUES
-        |    ${blocklistPatterns.map(p => s"('${p.replace("'", "''")}')").mkString(", ")}),
-        |hits AS (
-        |  SELECT d.source, d.doc_id,
-        |         sum(CASE WHEN strpos(d.text, p.pat) > 0 THEN 1 ELSE 0 END) AS h
-        |  FROM documents d CROSS JOIN p
-        |  GROUP BY 1, 2)
-        |SELECT source, count(*)::BIGINT AS n_docs,
-        |       sum(CASE WHEN h > 0 THEN 1 ELSE 0 END)::BIGINT AS n_flagged,
-        |       sum(CASE WHEN h > 0 THEN 0 ELSE 1 END)::BIGINT AS n_kept,
-        |       sum(h)::BIGINT AS pattern_hits
-        |FROM hits GROUP BY source
-        |ORDER BY source""".stripMargin,
-
-    "text_zipf" ->
-      """WITH t AS (
-        |  SELECT source, unnest(regexp_extract_all(text, '[a-z0-9]+')) AS term
-        |  FROM documents),
-        |tf AS (SELECT source, term, count(*)::BIGINT AS c FROM t GROUP BY 1, 2),
-        |stats AS (
-        |  SELECT source, sum(c)::BIGINT AS n_tokens, count(*)::BIGINT AS vocab
-        |  FROM tf GROUP BY 1),
-        |top AS (
-        |  SELECT source, ln(r::DOUBLE) AS x, ln(c::DOUBLE) AS y
-        |  FROM (SELECT source, c, row_number() OVER (
-        |          PARTITION BY source ORDER BY c DESC, term) AS r
-        |        FROM tf)
-        |  WHERE r <= 200),
-        |ols AS (
-        |  SELECT source, count(*)::DOUBLE AS n, sum(x) AS sx, sum(y) AS sy,
-        |         sum(x * y) AS sxy, sum(x * x) AS sxx
-        |  FROM top GROUP BY 1)
-        |SELECT s.source, s.n_tokens, s.vocab, n::BIGINT AS n_top,
-        |       CASE WHEN n >= 2
-        |            THEN round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6)
-        |       END AS zipf_slope
-        |FROM stats s JOIN ols USING (source)
-        |ORDER BY source""".stripMargin,
-
-    "q_wmedian_source" ->
-      """WITH r AS (
-        |  SELECT source, n_chars::BIGINT AS v, n_chars::BIGINT AS w, doc_id,
-        |         sum(n_chars) OVER (PARTITION BY source
-        |             ORDER BY n_chars, doc_id
-        |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |         sum(n_chars) OVER (PARTITION BY source) AS tot,
-        |         count(*) OVER (PARTITION BY source) AS n
-        |  FROM documents),
-        |q AS (SELECT * FROM r WHERE tot > 0 AND cum * 2 >= tot)
-        |SELECT source, max(n)::BIGINT AS n, max(tot)::BIGINT AS total_w,
-        |       min(v)::BIGINT AS wmedian
-        |FROM q GROUP BY source
-        |ORDER BY source""".stripMargin,
-
-    "events_dwell" ->
-      """WITH e AS (
-        |  SELECT user_id, epoch_ns(ts) // 1000 AS ts_us, event_id, event_type
-        |  FROM events),
-        |d AS (
-        |  SELECT event_type AS state,
-        |         lead(ts_us) OVER (PARTITION BY user_id
-        |                           ORDER BY ts_us, event_id) - ts_us AS dur
-        |  FROM e)
-        |SELECT state, count(*)::BIGINT AS n_stints, sum(dur)::BIGINT AS total_us,
-        |       ((sum(dur) * 2 + count(*)) // (count(*) * 2))::BIGINT AS mean_us
-        |FROM d WHERE dur IS NOT NULL
-        |GROUP BY state
-        |ORDER BY state""".stripMargin,
-
-    "events_sax" ->
-      """WITH e AS (
-        |  SELECT user_id AS k, epoch_ns(ts) // 1000 AS ts_us, event_id,
-        |         CAST(round(value * 10000, 0) AS BIGINT) AS v
-        |  FROM events),
-        |r AS (
-        |  SELECT k, v,
-        |         row_number() OVER (PARTITION BY k
-        |                            ORDER BY ts_us, event_id) AS rn,
-        |         row_number() OVER (PARTITION BY k
-        |                            ORDER BY v, ts_us, event_id) AS rv,
-        |         count(*) OVER (PARTITION BY k) AS n
-        |  FROM e),
-        |paa AS (
-        |  SELECT k, ((rn - 1) * 8) // n AS b,
-        |         count(*)::BIGINT AS c, sum(v)::BIGINT AS s
-        |  FROM r GROUP BY 1, 2),
-        |pa AS (SELECT k, b, (s * 2 + c) // (c * 2) AS paa_u FROM paa),
-        |bp AS (
-        |  SELECT k, v AS bpv FROM r
-        |  WHERE rv = (n * 1 + 3) // 4 OR rv = (n * 2 + 3) // 4
-        |     OR rv = (n * 3 + 3) // 4)
-        |SELECT pa.k AS user_id, pa.b AS bucket, pa.paa_u,
-        |       sum(CASE WHEN bp.bpv <= pa.paa_u THEN 1 ELSE 0 END)::BIGINT
-        |         AS symbol
-        |FROM pa LEFT JOIN bp ON pa.k = bp.k
-        |GROUP BY 1, 2, 3
-        |ORDER BY user_id, bucket""".stripMargin,
-
-    "events_sax_words" ->
-      """WITH e AS (
-        |  SELECT user_id AS k, epoch_ns(ts) // 1000 AS ts_us, event_id,
-        |         CAST(round(value * 10000, 0) AS BIGINT) AS v
-        |  FROM events),
-        |r AS (
-        |  SELECT k, v,
-        |         row_number() OVER (PARTITION BY k
-        |                            ORDER BY ts_us, event_id) AS rn,
-        |         row_number() OVER (PARTITION BY k
-        |                            ORDER BY v, ts_us, event_id) AS rv,
-        |         count(*) OVER (PARTITION BY k) AS n
-        |  FROM e),
-        |paa AS (
-        |  SELECT k, ((rn - 1) * 8) // n AS b,
-        |         count(*)::BIGINT AS c, sum(v)::BIGINT AS s
-        |  FROM r GROUP BY 1, 2),
-        |pa AS (SELECT k, b, (s * 2 + c) // (c * 2) AS paa_u FROM paa),
-        |bp AS (
-        |  SELECT k, v AS bpv FROM r
-        |  WHERE rv = (n * 1 + 3) // 4 OR rv = (n * 2 + 3) // 4
-        |     OR rv = (n * 3 + 3) // 4),
-        |sym AS (
-        |  SELECT pa.k, pa.b,
-        |         sum(CASE WHEN bp.bpv <= pa.paa_u THEN 1 ELSE 0 END)::BIGINT
-        |           AS symbol
-        |  FROM pa LEFT JOIN bp ON pa.k = bp.k
-        |  GROUP BY 1, 2),
-        |words AS (
-        |  SELECT k, string_agg(symbol::VARCHAR, '' ORDER BY b) AS sax_word
-        |  FROM sym GROUP BY k)
-        |SELECT sax_word, count(*)::BIGINT AS n_users
-        |FROM words GROUP BY 1
-        |ORDER BY sax_word""".stripMargin,
-
-    "events_attribution" ->
-      """WITH e AS (
-        |  SELECT user_id, epoch_ns(ts) // 1000 AS ts_us, event_id, event_type,
-        |         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS conv
-        |  FROM events),
-        |m AS (
-        |  SELECT user_id, ts_us, event_id, event_type, conv,
-        |         sum(conv) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-        |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |           - conv + 1 AS tgt,
-        |         sum(conv) OVER (PARTITION BY user_id) AS nc
-        |  FROM e),
-        |t AS (SELECT * FROM m WHERE conv = 0 AND tgt <= nc),
-        |r AS (
-        |  SELECT event_type,
-        |         row_number() OVER (PARTITION BY user_id, tgt
-        |                            ORDER BY ts_us, event_id) AS rn,
-        |         count(*) OVER (PARTITION BY user_id, tgt) AS n
-        |  FROM t),
-        |c AS (
-        |  SELECT event_type, rn, n,
-        |         1000000 // n + CASE WHEN rn = n
-        |                       THEN 1000000 - n * (1000000 // n)
-        |                       ELSE 0 END AS lin
-        |  FROM r)
-        |SELECT event_type,
-        |       sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END)::BIGINT AS first_n,
-        |       sum(CASE WHEN rn = n THEN 1 ELSE 0 END)::BIGINT AS last_n,
-        |       sum(lin)::BIGINT AS linear_ppm
-        |FROM c GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-
-    "q_rfm" ->
-      """WITH p AS (
-        |  SELECT o_custkey AS e,
-        |         max(epoch_ns(o_orderdate) // 1000) AS lastts,
-        |         count(*)::BIGINT AS f,
-        |         sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))::BIGINT AS m
-        |  FROM orders GROUP BY 1),
-        |a AS (SELECT max(lastts) AS asofts FROM p),
-        |b AS (
-        |  SELECT (ntile(5) OVER (ORDER BY asofts - lastts, e))::INTEGER AS r_bin,
-        |         (ntile(5) OVER (ORDER BY f DESC, e))::INTEGER AS f_bin,
-        |         (ntile(5) OVER (ORDER BY m DESC, e))::INTEGER AS m_bin,
-        |         m
-        |  FROM p CROSS JOIN a)
-        |SELECT r_bin, f_bin, m_bin, count(*)::BIGINT AS n_entities,
-        |       sum(m)::BIGINT AS cell_cents
-        |FROM b GROUP BY 1, 2, 3
-        |ORDER BY 1, 2, 3""".stripMargin,
-
-    "q_abc_parts" ->
-      """WITH p AS (
-        |  SELECT l_partkey AS i,
-        |         sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT))::BIGINT AS v
-        |  FROM lineitem GROUP BY 1),
-        |t AS (SELECT sum(v)::HUGEINT AS tot FROM p),
-        |c AS (
-        |  SELECT v,
-        |         sum(v) OVER (ORDER BY v DESC, i
-        |            ROWS BETWEEN UNBOUNDED PRECEDING
-        |            AND CURRENT ROW)::HUGEINT AS cum,
-        |         tot
-        |  FROM p CROSS JOIN t),
-        |k AS (SELECT v, tot,
-        |             CASE WHEN cum * 100 <= tot * 80 THEN 'A'
-        |                  WHEN cum * 100 <= tot * 95 THEN 'B'
-        |                  ELSE 'C' END AS abc_class
-        |      FROM c)
-        |SELECT abc_class, count(*)::BIGINT AS n_items, sum(v)::BIGINT AS class_cents,
-        |       ((sum(v)::HUGEINT * 2000000 + max(tot))
-        |        // (max(tot) * 2))::BIGINT AS share_ppm
-        |FROM k GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-
-    "q_auc_source" ->
-      """WITH d AS (
-        |  SELECT source, n_chars::BIGINT AS s, (lang = 'en') AS y
-        |  FROM documents),
-        |r AS (
-        |  SELECT source, y,
-        |         (2 * rank() OVER (PARTITION BY source ORDER BY s)
-        |          + count(*) OVER (PARTITION BY source, s) - 1)::HUGEINT AS d
-        |  FROM d),
-        |a AS (
-        |  SELECT source,
-        |         sum(CASE WHEN y THEN 1 ELSE 0 END)::HUGEINT AS n1,
-        |         sum(CASE WHEN y THEN 0 ELSE 1 END)::HUGEINT AS n0,
-        |         sum(CASE WHEN y THEN d ELSE 0 END) AS r1
-        |  FROM r GROUP BY 1)
-        |SELECT source, n1::BIGINT AS n_pos, n0::BIGINT AS n_neg,
-        |       (r1 - n1 * (n1 + 1))::BIGINT AS auc_num,
-        |       (2 * n1 * n0)::BIGINT AS auc_den,
-        |       (((r1 - n1 * (n1 + 1)) * 2000000 + 2 * n1 * n0)
-        |        // (2 * n1 * n0 * 2))::BIGINT AS auc_ppm
-        |FROM a WHERE n1 > 0 AND n0 > 0
-        |ORDER BY source""".stripMargin,
-
-    "q_ks_source" ->
-      """WITH c AS (SELECT source AS g, n_chars::BIGINT AS v,
-        |                  count(*)::BIGINT AS c
-        |           FROM documents GROUP BY 1, 2),
-        |t AS (SELECT g, sum(c)::BIGINT AS ng FROM c GROUP BY 1),
-        |a AS (SELECT v, sum(c)::BIGINT AS call FROM c GROUP BY 1),
-        |gr AS (SELECT sum(c)::BIGINT AS nall FROM c),
-        |grid AS (SELECT t.g, t.ng, a.v, a.call, gr.nall
-        |         FROM t CROSS JOIN a CROSS JOIN gr),
-        |j AS (SELECT grid.g, grid.ng, grid.v, grid.call, grid.nall,
-        |             coalesce(c.c, 0) AS c
-        |      FROM grid LEFT JOIN c ON grid.g = c.g AND grid.v = c.v),
-        |st AS (SELECT g, ng, nall - ng AS nr,
-        |              sum(c) OVER w AS cumg, sum(call) OVER w AS cumall
-        |       FROM j WINDOW w AS (PARTITION BY g ORDER BY v
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |m AS (SELECT g, max(ng) AS ng, max(nr) AS nr,
-        |             max(abs(cumg * nr - (cumall - cumg) * ng)) AS dnum
-        |      FROM st GROUP BY g)
-        |SELECT g AS source, ng::BIGINT AS n_g, nr::BIGINT AS n_rest,
-        |       dnum::BIGINT AS d_num,
-        |       ((dnum::HUGEINT * 2000000 + ng::HUGEINT * nr)
-        |        // (ng::HUGEINT * nr * 2))::BIGINT AS d_ppm
-        |FROM m WHERE nr > 0
-        |ORDER BY source""".stripMargin,
-
-    // the bins path: same ECDF tail over equi-width integer buckets of the
-    // cents-quantized value (floor ≡ truncate: everything non-negative)
-    "q_ks_binned" ->
-      """WITH e AS (SELECT event_type AS g, round(value * 100)::BIGINT AS v
-        |           FROM events),
-        |c0 AS (SELECT g, v, count(*)::BIGINT AS c FROM e GROUP BY 1, 2),
-        |b AS (SELECT min(v) AS mn, max(v) AS mx FROM c0),
-        |c AS (SELECT g,
-        |             ((v - mn)::HUGEINT * 64 // (mx - mn + 1)::HUGEINT)::BIGINT AS v,
-        |             sum(c)::BIGINT AS c
-        |      FROM c0 CROSS JOIN b GROUP BY 1, 2),
-        |t AS (SELECT g, sum(c)::BIGINT AS ng FROM c GROUP BY 1),
-        |a AS (SELECT v, sum(c)::BIGINT AS call FROM c GROUP BY 1),
-        |gr AS (SELECT sum(c)::BIGINT AS nall FROM c),
-        |grid AS (SELECT t.g, t.ng, a.v, a.call, gr.nall
-        |         FROM t CROSS JOIN a CROSS JOIN gr),
-        |j AS (SELECT grid.g, grid.ng, grid.v, grid.call, grid.nall,
-        |             coalesce(c.c, 0) AS c
-        |      FROM grid LEFT JOIN c ON grid.g = c.g AND grid.v = c.v),
-        |st AS (SELECT g, ng, nall - ng AS nr,
-        |              sum(c) OVER w AS cumg, sum(call) OVER w AS cumall
-        |       FROM j WINDOW w AS (PARTITION BY g ORDER BY v
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |m AS (SELECT g, max(ng) AS ng, max(nr) AS nr,
-        |             max(abs(cumg * nr - (cumall - cumg) * ng)) AS dnum
-        |      FROM st GROUP BY g)
-        |SELECT g AS event_type, ng::BIGINT AS n_g, nr::BIGINT AS n_rest,
-        |       dnum::BIGINT AS d_num,
-        |       ((dnum::HUGEINT * 2000000 + ng::HUGEINT * nr)
-        |        // (ng::HUGEINT * nr * 2))::BIGINT AS d_ppm
-        |FROM m WHERE nr > 0
-        |ORDER BY event_type""".stripMargin,
-
-    "events_spc" ->
-      """WITH e AS (
-        |  SELECT user_id, epoch_ns(ts) // 1000 AS ts_us, event_id,
-        |         CAST(round(value * 100, 0) AS BIGINT) AS v
-        |  FROM events),
-        |st AS (
-        |  SELECT user_id, ts_us, event_id, v,
-        |         count(*) OVER wk AS n,
-        |         sum(v) OVER wk AS s,
-        |         sum(v::HUGEINT * v) OVER wk AS q,
-        |         row_number() OVER wt AS rn
-        |  FROM e
-        |  WINDOW wk AS (PARTITION BY user_id),
-        |         wt AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-        |d AS (
-        |  SELECT user_id, ts_us, event_id, rn, n,
-        |         v::HUGEINT * n - s AS dev,
-        |         n::HUGEINT * q - s::HUGEINT * s AS vr
-        |  FROM st),
-        |f AS (
-        |  SELECT user_id, ts_us, event_id, rn, n, dev,
-        |         (dev * dev * (n - 1) > 9 * n::HUGEINT * vr) AS b3,
-        |         (dev * dev * (n - 1) > 4 * n::HUGEINT * vr) AS b2,
-        |         (dev * dev * (n - 1) > 1 * n::HUGEINT * vr) AS b1
-        |  FROM d),
-        |w2 AS (
-        |  SELECT user_id, n, rn, b3,
-        |         sum(CASE WHEN b2 AND dev > 0 THEN 1 ELSE 0 END) OVER w3 AS p2,
-        |         sum(CASE WHEN b2 AND dev < 0 THEN 1 ELSE 0 END) OVER w3 AS m2,
-        |         sum(CASE WHEN b1 AND dev > 0 THEN 1 ELSE 0 END) OVER w5 AS p1,
-        |         sum(CASE WHEN b1 AND dev < 0 THEN 1 ELSE 0 END) OVER w5 AS m1,
-        |         sum(CASE WHEN dev > 0 THEN 1 ELSE 0 END) OVER w8 AS pp,
-        |         sum(CASE WHEN dev < 0 THEN 1 ELSE 0 END) OVER w8 AS mm
-        |  FROM f
-        |  WINDOW w3 AS (PARTITION BY user_id ORDER BY ts_us, event_id
-        |                ROWS BETWEEN 2 PRECEDING AND CURRENT ROW),
-        |         w5 AS (PARTITION BY user_id ORDER BY ts_us, event_id
-        |                ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
-        |         w8 AS (PARTITION BY user_id ORDER BY ts_us, event_id
-        |                ROWS BETWEEN 7 PRECEDING AND CURRENT ROW))
-        |SELECT user_id, count(*)::BIGINT AS n,
-        |       sum(CASE WHEN b3 THEN 1 ELSE 0 END)::BIGINT AS r1,
-        |       sum(CASE WHEN rn >= 3 AND (p2 >= 2 OR m2 >= 2)
-        |           THEN 1 ELSE 0 END)::BIGINT AS r2,
-        |       sum(CASE WHEN rn >= 5 AND (p1 >= 4 OR m1 >= 4)
-        |           THEN 1 ELSE 0 END)::BIGINT AS r3,
-        |       sum(CASE WHEN rn >= 8 AND (pp = 8 OR mm = 8)
-        |           THEN 1 ELSE 0 END)::BIGINT AS r4
-        |FROM w2 GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
-
-    "events_pettitt" ->
-      """WITH e AS (
-        |  SELECT user_id, epoch_ns(ts) // 1000 AS ts_us, event_id,
-        |         CAST(round(value * 10000, 0) AS BIGINT) AS v
-        |  FROM events),
-        |r AS (
-        |  SELECT user_id, v,
-        |         count(*) OVER (PARTITION BY user_id) AS n,
-        |         2 * rank() OVER (PARTITION BY user_id ORDER BY v)
-        |           + count(*) OVER (PARTITION BY user_id, v) - 1 AS d,
-        |         row_number() OVER (PARTITION BY user_id
-        |                            ORDER BY ts_us, event_id) AS t
-        |  FROM e),
-        |u AS (
-        |  SELECT user_id, n, t,
-        |         sum(d - n - 1) OVER (PARTITION BY user_id ORDER BY t
-        |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ut
-        |  FROM r),
-        |w AS (
-        |  SELECT user_id, n, t, ut, abs(ut) AS a,
-        |         row_number() OVER (PARTITION BY user_id
-        |                            ORDER BY abs(ut) DESC, t) AS rn
-        |  FROM u WHERE t < n)
-        |SELECT user_id, n::BIGINT AS n, a::BIGINT AS k2_stat,
-        |       t::BIGINT AS t_hat,
-        |       (CASE WHEN ut > 0 THEN 1 WHEN ut < 0 THEN -1
-        |             ELSE 0 END)::BIGINT AS direction
-        |FROM w WHERE rn = 1
-        |ORDER BY user_id""".stripMargin,
-
-    "linkage_dl" ->
-      """WITH s AS (
-        |  SELECT c_nationkey, c_name,
-        |         (c_custkey % (length(c_name) - 1) + 1)::INTEGER AS p
-        |  FROM customer),
-        |w AS (
-        |  SELECT c_nationkey,
-        |         levenshtein(c_name,
-        |           substr(c_name, 1, p - 1) || substr(c_name, p + 1, 1) ||
-        |           substr(c_name, p, 1) || substr(c_name, p + 2, 1000))::BIGINT
-        |           AS lev,
-        |         damerau_levenshtein(c_name,
-        |           substr(c_name, 1, p - 1) || substr(c_name, p + 1, 1) ||
-        |           substr(c_name, p, 1) || substr(c_name, p + 2, 1000))::BIGINT
-        |           AS dl
-        |  FROM s)
-        |SELECT c_nationkey, count(*)::BIGINT AS n, sum(lev)::BIGINT AS sum_lev,
-        |       sum(dl)::BIGINT AS sum_dl,
-        |       sum(CASE WHEN lev > dl THEN 1 ELSE 0 END)::BIGINT
-        |         AS n_transposition_wins
-        |FROM w GROUP BY c_nationkey
-        |ORDER BY c_nationkey""".stripMargin,
-
-    "basket_rules" ->
-      """WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it
-        |           FROM lineitem),
-        |nb AS (SELECT count(DISTINCT bk)::HUGEINT AS N FROM b),
-        |i AS (SELECT it, count(*)::HUGEINT AS ni FROM b GROUP BY 1),
-        |p AS (SELECT l.it AS item_a, r.it AS item_b, count(*)::HUGEINT AS nab
-        |      FROM b l JOIN b r ON l.bk = r.bk AND l.it < r.it
-        |      GROUP BY 1, 2 HAVING count(*) >= 2)
-        |SELECT p.item_a, p.item_b, nab::BIGINT AS n_ab,
-        |       ((nab * 2000000 + N) // (N * 2))::BIGINT AS supp_ppm,
-        |       ((nab * 2000000 + a.ni) // (a.ni * 2))::BIGINT AS conf_ab_ppm,
-        |       ((nab * 2000000 + c.ni) // (c.ni * 2))::BIGINT AS conf_ba_ppm,
-        |       ((nab * N * 2000000 + a.ni * c.ni)
-        |        // (a.ni * c.ni * 2))::BIGINT AS lift_ppm
-        |FROM p JOIN i a ON p.item_a = a.it
-        |       JOIN i c ON p.item_b = c.it
-        |       CROSS JOIN nb
-        |ORDER BY item_a, item_b""".stripMargin,
-
-    "text_readability" ->
-      """WITH g AS (
-        |  SELECT source,
-        |         len(regexp_extract_all(text, '[A-Za-z]+'))::BIGINT AS w,
-        |         greatest(1,
-        |           len(regexp_extract_all(text, '[.!?]+')))::BIGINT AS s,
-        |         len(regexp_extract_all(text, '[aeiouyAEIOUY]+'))::BIGINT AS syl
-        |  FROM documents),
-        |d AS (
-        |  SELECT source,
-        |         greatest(0, (390 * w * 2 + s) // (s * 2)
-        |                     + (11800 * syl * 2 + w) // (w * 2) - 15590) AS grade
-        |  FROM g WHERE w > 0)
-        |SELECT source, count(*)::BIGINT AS n_docs,
-        |       ((sum(grade) * 2 + count(*))
-        |        // (count(*) * 2))::BIGINT AS mean_grade_milli
-        |FROM d GROUP BY source
-        |ORDER BY source""".stripMargin,
-
-    "events_active_spans" ->
-      """WITH e AS (
-        |  SELECT user_id, epoch_ns(ts) // 1000 AS s,
-        |         epoch_ns(ts) // 1000 + 300000000 AS e
-        |  FROM events),
-        |f AS (
-        |  SELECT user_id, s, e,
-        |         max(e) OVER (PARTITION BY user_id ORDER BY s, e
-        |                      ROWS BETWEEN UNBOUNDED PRECEDING
-        |                      AND 1 PRECEDING) AS pme
-        |  FROM e),
-        |g AS (
-        |  SELECT user_id, s, e,
-        |         CASE WHEN pme IS NULL OR s > pme THEN 1 ELSE 0 END AS nw
-        |  FROM f),
-        |h AS (
-        |  SELECT user_id, s, e,
-        |         sum(nw) OVER (PARTITION BY user_id ORDER BY s, e
-        |                       ROWS BETWEEN UNBOUNDED PRECEDING
-        |                       AND CURRENT ROW) AS isl
-        |  FROM g),
-        |i AS (
-        |  SELECT user_id, isl, min(s) AS f, max(e) AS t FROM h GROUP BY 1, 2)
-        |SELECT user_id, count(*)::BIGINT AS n_spans,
-        |       sum(t - f)::BIGINT AS active_us,
-        |       max(t - f)::BIGINT AS max_span_us
-        |FROM i GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
-
-    "q_spearman_source" ->
-      """WITH d AS (
-        |  SELECT source, n_chars::BIGINT AS x,
-        |         len(regexp_extract_all(text, '[a-z0-9]+'))::BIGINT AS y
-        |  FROM documents),
-        |r AS (
-        |  SELECT source,
-        |         (2 * rank() OVER (PARTITION BY source ORDER BY x)
-        |          + count(*) OVER (PARTITION BY source, x) - 1)::HUGEINT AS rx,
-        |         (2 * rank() OVER (PARTITION BY source ORDER BY y)
-        |          + count(*) OVER (PARTITION BY source, y) - 1)::HUGEINT AS ry
-        |  FROM d),
-        |a AS (
-        |  SELECT source, count(*)::HUGEINT AS n, sum(rx) AS sx, sum(ry) AS sy,
-        |         sum(rx * ry) AS sxy, sum(rx * rx) AS sxx, sum(ry * ry) AS syy
-        |  FROM r GROUP BY 1)
-        |SELECT source, n::BIGINT AS n,
-        |       CASE WHEN (n * sxx - sx * sx)::BIGINT::DOUBLE > 0
-        |             AND (n * syy - sy * sy)::BIGINT::DOUBLE > 0
-        |            THEN floor((n * sxy - sx * sy)::BIGINT::DOUBLE
-        |                       / sqrt((n * sxx - sx * sx)::BIGINT::DOUBLE)
-        |                       / sqrt((n * syy - sy * sy)::BIGINT::DOUBLE)
-        |                       * 10000.0 + 0.5)::BIGINT / 10000.0
-        |            ELSE 2.0 END AS rho
-        |FROM a
-        |ORDER BY source""".stripMargin,
-
-    "events_acf" ->
-      """WITH e AS (
-        |  SELECT event_type, epoch_ns(ts) // 1000 AS ts_us, event_id,
-        |         CAST(round(value * 10, 0) AS BIGINT) AS x
-        |  FROM events),
-        |l AS (
-        |  SELECT event_type, x,
-        |         lead(x, 1) OVER w AS y1,
-        |         lead(x, 2) OVER w AS y2,
-        |         lead(x, 3) OVER w AS y3
-        |  FROM e
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY ts_us, event_id)),
-        |p AS (
-        |  SELECT event_type, 1 AS lag, x::HUGEINT AS x, y1::HUGEINT AS y
-        |  FROM l WHERE y1 IS NOT NULL AND x IS NOT NULL
-        |  UNION ALL
-        |  SELECT event_type, 2, x::HUGEINT, y2::HUGEINT FROM l
-        |  WHERE y2 IS NOT NULL AND x IS NOT NULL
-        |  UNION ALL
-        |  SELECT event_type, 3, x::HUGEINT, y3::HUGEINT FROM l
-        |  WHERE y3 IS NOT NULL AND x IS NOT NULL),
-        |a AS (
-        |  SELECT event_type, lag, count(*)::HUGEINT AS n,
-        |         sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy,
-        |         sum(x * x) AS sxx, sum(y * y) AS syy
-        |  FROM p GROUP BY 1, 2)
-        |SELECT event_type, lag, n::BIGINT AS n_pairs,
-        |       CASE WHEN (n * sxx - sx * sx)::BIGINT::DOUBLE > 0
-        |             AND (n * syy - sy * sy)::BIGINT::DOUBLE > 0
-        |            THEN floor((n * sxy - sx * sy)::BIGINT::DOUBLE
-        |                       / sqrt((n * sxx - sx * sx)::BIGINT::DOUBLE)
-        |                       / sqrt((n * syy - sy * sy)::BIGINT::DOUBLE)
-        |                       * 10000.0 + 0.5)::BIGINT / 10000.0
-        |            ELSE 2.0 END AS acf
-        |FROM a
-        |ORDER BY event_type, lag""".stripMargin,
-
-    "q_gini_source" ->
-      """WITH r AS (
-        |  SELECT source, n_chars::HUGEINT AS x,
-        |         row_number() OVER (PARTITION BY source
-        |           ORDER BY n_chars, doc_id)::HUGEINT AS i
-        |  FROM documents),
-        |a AS (
-        |  SELECT source, count(*)::HUGEINT AS n, sum(x) AS sx, sum(i * x) AS six
-        |  FROM r GROUP BY 1)
-        |SELECT source, n::BIGINT AS n,
-        |       (((2 * six - (n + 1) * sx) * 2000000 + n * sx)
-        |        // (n * sx * 2))::BIGINT AS gini_ppm
-        |FROM a WHERE sx > 0
-        |ORDER BY source""".stripMargin,
-
-    "q_benford" ->
-      """WITH c AS (
-        |  SELECT CAST(substr(CAST(CAST(round(o_totalprice * 100, 0) AS BIGINT)
-        |                          AS VARCHAR), 1, 1) AS INTEGER) AS digit,
-        |         count(*)::BIGINT AS n
-        |  FROM orders
-        |  WHERE CAST(round(o_totalprice * 100, 0) AS BIGINT) > 0
-        |  GROUP BY 1),
-        |t AS (SELECT *, sum(n) OVER () AS tot FROM c),
-        |e AS (SELECT * FROM (VALUES (1, 301030), (2, 176091), (3, 124939),
-        |       (4, 96910), (5, 79181), (6, 66947), (7, 57992), (8, 51153),
-        |       (9, 45757)) AS v(digit, exp_ppm))
-        |SELECT t.digit, t.n,
-        |       ((t.n * 2000000 + tot) // (tot * 2))::BIGINT AS obs_ppm,
-        |       e.exp_ppm::BIGINT AS exp_ppm,
-        |       ((t.n * 2000000 + tot) // (tot * 2))::BIGINT - e.exp_ppm AS dev_ppm
-        |FROM t JOIN e ON t.digit = e.digit
-        |ORDER BY t.digit""".stripMargin,
-
-    "events_transitions" ->
-      """WITH p AS (
-        |  SELECT event_type AS from_state,
-        |         lead(event_type) OVER (PARTITION BY user_id
-        |           ORDER BY epoch_ns(ts) // 1000, event_id) AS to_state
-        |  FROM events),
-        |c AS (
-        |  SELECT from_state, to_state, count(*)::BIGINT AS n
-        |  FROM p WHERE to_state IS NOT NULL GROUP BY 1, 2),
-        |t AS (
-        |  SELECT *, sum(n) OVER (PARTITION BY from_state) AS tot FROM c)
-        |SELECT from_state, to_state, n,
-        |       ((n * 2000000 + tot) // (tot * 2))::BIGINT AS p_ppm
-        |FROM t
-        |ORDER BY from_state, to_state""".stripMargin,
-
-    // exact HUGEINT moments, but every →DOUBLE conversion routed through
-    // ::BIGINT: DuckDB's HUGEINT→DOUBLE is not correctly rounded (1 ulp off
-    // on negative >2⁵³ values — measured), while BIGINT→DOUBLE is a single
-    // hardware cvt. x in kilo-seconds keeps all differences inside int64.
-    "q_regression_per_group" ->
-      """WITH e AS (
-        |  SELECT event_type,
-        |         ((epoch_ns(ts) // 1000000000 - 1704067200) // 1000)::HUGEINT AS x,
-        |         CAST(round(value * 10000, 0) AS BIGINT)::HUGEINT AS y
-        |  FROM events),
-        |a AS (
-        |  SELECT event_type, count(*)::HUGEINT AS n,
-        |         sum(x) AS sx, sum(y) AS sy,
-        |         sum(x * y) AS sxy, sum(x * x) AS sxx
-        |  FROM e GROUP BY 1),
-        |d AS (
-        |  SELECT event_type, n::BIGINT::DOUBLE AS nd,
-        |         (n * sxy - sx * sy)::BIGINT::DOUBLE AS num,
-        |         (n * sxx - sx * sx)::BIGINT::DOUBLE AS det,
-        |         sx::BIGINT::DOUBLE AS sxd, sy::BIGINT::DOUBLE AS syd
-        |  FROM a)
-        |SELECT event_type, nd::BIGINT AS n,
-        |       floor(num / det * 100000000.0 + 0.5)::BIGINT
-        |         / 100000000.0 AS slope,
-        |       floor((syd - num / det * sxd)
-        |             / nd * 100000000.0 + 0.5)::BIGINT
-        |         / 100000000.0 AS intercept
-        |FROM d
-        |WHERE det > 0
-        |ORDER BY event_type""".stripMargin,
-
-    "source_lang_entropy" ->
-      """WITH c AS (
-        |  SELECT source, lang, count(*)::BIGINT AS c
-        |  FROM documents GROUP BY 1, 2)
-        |SELECT source, count(*)::BIGINT AS n_cats,
-        |       round(ln(sum(c)::DOUBLE)
-        |             - sum(c::DOUBLE * ln(c::DOUBLE)) / sum(c), 6) AS entropy
-        |FROM c GROUP BY source
-        |ORDER BY source""".stripMargin,
-
-    "q_mode_per_group" ->
-      """WITH c AS (
-        |  SELECT user_id, event_type AS mode_val, count(*)::BIGINT AS mode_n
-        |  FROM events GROUP BY 1, 2),
-        |r AS (
-        |  SELECT *, row_number() OVER (PARTITION BY user_id
-        |           ORDER BY mode_n DESC, mode_val) AS rk FROM c)
-        |SELECT user_id, mode_val, mode_n FROM r WHERE rk = 1
-        |ORDER BY user_id""".stripMargin,
-
-    "text_novelty" ->
-      """WITH s AS (
-        |  SELECT doc_id, list_distinct([array_to_string(toks[i:i+2], ' ')
-        |                                for i in range(1, len(toks) - 1)]) AS sh
-        |  FROM (SELECT doc_id, string_split_regex(text, ' +') AS toks
-        |        FROM documents)),
-        |g AS (SELECT doc_id, unnest(sh) AS shingle FROM s),
-        |d AS (SELECT shingle, count(*)::BIGINT AS df FROM g GROUP BY 1)
-        |SELECT g.doc_id, count(*)::BIGINT AS n_shingles,
-        |       sum(CASE WHEN d.df = 1 THEN 1 ELSE 0 END)::BIGINT AS n_unique,
-        |       ((sum(CASE WHEN d.df = 1 THEN 1 ELSE 0 END) * 2000000 + count(*))
-        |        // (count(*) * 2))::BIGINT AS novelty_ppm
-        |FROM g JOIN d USING (shingle)
-        |GROUP BY g.doc_id
-        |ORDER BY g.doc_id""".stripMargin,
-
-    "sliding_window" ->
-      """SELECT ws AS window_start_s, count(*) AS n_events, round(sum(value), 2) AS sum_value
-        |FROM (SELECT value,
-        |             unnest([((epoch_ns(ts) // 1000000000) // 900 - k) * 900
-        |                     for k in [0, 1, 2, 3]]) AS ws
-        |      FROM events)
-        |GROUP BY ws
-        |ORDER BY ws""".stripMargin,
-
-    "q_cube" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-        |       coalesce(l_linestatus, 'ALL') AS linestatus,
-        |       round(sum(l_quantity), 2) AS sum_qty,
-        |       count(*) AS n
-        |FROM lineitem
-        |GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY returnflag, linestatus""".stripMargin,
-
-    "q_grouping_sets" ->
-      """SELECT coalesce(o_orderstatus, 'ALL') AS status,
-        |       coalesce(o_orderpriority, 'ALL') AS priority,
-        |       count(*) AS n_orders,
-        |       round(sum(o_totalprice), 2) AS revenue
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), ())
-        |ORDER BY status, priority""".stripMargin,
-
-    "q_percentiles" ->
-      """WITH o AS (SELECT o_orderpriority,
-        |                  CAST(round(o_totalprice * 100, 0) AS BIGINT) AS xc
-        |           FROM orders)
-        |SELECT o_orderpriority,
-        |       CAST(round(quantile_cont(xc, 0.25) * 4, 0) AS BIGINT) / 400.0 AS p25,
-        |       CAST(round(quantile_cont(xc, 0.5) * 4, 0) AS BIGINT) / 400.0 AS p50,
-        |       CAST(round(quantile_cont(xc, 0.75) * 4, 0) AS BIGINT) / 400.0 AS p75,
-        |       count(*) AS n_orders
-        |FROM o
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-
-    // GK percentile_approx in its exact regime: every sample retained, so
-    // the serving quantile is the order statistic at rank ceil(p·n) —
-    // DuckDB's quantile_disc rule
-    "q_approx_percentiles_exact" ->
-      """SELECT o_orderpriority,
-        |       quantile_disc(o_totalprice, 0.25) AS p25,
-        |       quantile_disc(o_totalprice, 0.5)  AS p50,
-        |       quantile_disc(o_totalprice, 0.75) AS p75,
-        |       count(*) AS n_orders
-        |FROM orders
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-
-    "q_pivot" ->
-      """SELECT user_id,
-        |       round(coalesce(sum(value) FILTER (event_type = 'click'), 0), 2) AS click_value,
-        |       round(coalesce(sum(value) FILTER (event_type = 'view'), 0), 2) AS view_value,
-        |       round(coalesce(sum(value) FILTER (event_type = 'purchase'), 0), 2) AS purchase_value,
-        |       round(coalesce(sum(value) FILTER (event_type = 'error'), 0), 2) AS error_value
-        |FROM events
-        |GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
-
-    "q_collect" ->
-      """SELECT user_id,
-        |       string_agg(DISTINCT event_type, ',' ORDER BY event_type) AS event_types,
-        |       count(*) AS n_events
-        |FROM events
-        |GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
-
-    "multimodal_frames" ->
-      """SELECT media_id, count(*) AS n_frames, max(f) AS last_frame_ms
-        |FROM (SELECT doc_id AS media_id,
-        |             unnest(generate_series(0, length(text) * 10 - 1, 1000)) AS f
-        |      FROM documents
-        |      WHERE doc_id % 3 = 2 AND length(text) > 0)
-        |GROUP BY media_id
-        |ORDER BY media_id""".stripMargin,
-
-    "multimodal_resize" ->
-      """SELECT doc_id AS media_id,
-        |       ((doc_id % 64) * 16 + 16)::INTEGER AS width,
-        |       ((doc_id % 48) * 16 + 16)::INTEGER AS height,
-        |       floor(((doc_id % 64) * 16 + 16) * 256.0
-        |             / greatest((doc_id % 64) * 16 + 16, (doc_id % 48) * 16 + 16))::INTEGER AS out_width,
-        |       floor(((doc_id % 48) * 16 + 16) * 256.0
-        |             / greatest((doc_id % 64) * 16 + 16, (doc_id % 48) * 16 + 16))::INTEGER AS out_height
-        |FROM documents
-        |WHERE doc_id % 3 = 0
-        |ORDER BY media_id""".stripMargin,
-
-    "q_window_range_frame" ->
-      """SELECT event_id, user_id,
-        |       round(sum(value) OVER w, 2) AS rolling_sum,
-        |       count(*) OVER w AS rolling_n
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-        |             RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-
-    "pack_sequences" ->
-      """SELECT doc_id, lang, n_tok, floor((cum - n_tok) / 1000)::BIGINT AS seq_id
-        |FROM (SELECT doc_id, lang, len(string_split(text, ' '))::BIGINT AS n_tok,
-        |             sum(len(string_split(text, ' '))) OVER (PARTITION BY lang ORDER BY doc_id
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |      FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-
-    "text_repetition" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |base AS (
-        |  SELECT doc_id, len(t)::BIGINT AS n_tok,
-        |         (20000 * (len(t) - len(list_distinct(t))) + len(t))
-        |           // (2 * len(t)) / 10000.0 AS dup_frac,
-        |         [t[x] || ' ' || t[x+1] for x in range(1, len(t))] AS bgs
-        |  FROM toks),
-        |counts AS (
-        |  SELECT doc_id, n_tok, dup_frac, bg, count(*) AS bg_n
-        |  FROM (SELECT doc_id, n_tok, dup_frac, unnest(bgs) AS bg FROM base)
-        |  GROUP BY doc_id, n_tok, dup_frac, bg)
-        |SELECT doc_id, dup_frac,
-        |       (20000 * (max(bg_n) * 2) + n_tok) // (2 * n_tok) / 10000.0
-        |         AS top_bigram_frac
-        |FROM counts
-        |GROUP BY doc_id, dup_frac, n_tok
-        |ORDER BY doc_id""".stripMargin,
-
-    "dedup_incremental" ->
-      """SELECT d.doc_id, d.lang
-        |FROM documents d
-        |WHERE d.doc_id >= 400
-        |  AND NOT EXISTS (SELECT 1 FROM documents c
-        |                  WHERE c.doc_id < 400
-        |                    AND md5(lower(trim(c.text))) = md5(lower(trim(d.text))))
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // identical to dedup_incremental by design: the bloom prefilter only
-    // routes rows, the exact anti join decides
-    "dedup_incremental_bloom" ->
-      """SELECT d.doc_id, d.lang
-        |FROM documents d
-        |WHERE d.doc_id >= 400
-        |  AND NOT EXISTS (SELECT 1 FROM documents c
-        |                  WHERE c.doc_id < 400
-        |                    AND md5(lower(trim(c.text))) = md5(lower(trim(d.text))))
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "dedup_incremental_jaccard" ->
-      """WITH s AS (
-        |  SELECT doc_id, n_chars // 100 AS len_bucket,
-        |         list_distinct([array_to_string(toks[i:i+2], ' ')
-        |                        for i in range(1, len(toks) - 1)]) AS sh
-        |  FROM (SELECT doc_id, n_chars, string_split_regex(text, ' +') AS toks
-        |        FROM documents))
-        |SELECT d.doc_id, d.lang
-        |FROM documents d
-        |WHERE d.doc_id >= 400
-        |  AND NOT EXISTS (
-        |    SELECT 1
-        |    FROM s b JOIN s c ON b.len_bucket = c.len_bucket
-        |    WHERE b.doc_id = d.doc_id AND c.doc_id < 400
-        |      AND len(list_intersect(b.sh, c.sh))::DOUBLE
-        |            / len(list_distinct(b.sh || c.sh)) >= 0.5)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "sample_split" ->
-      """SELECT lang, split, count(*)::BIGINT AS n_docs, sum(n_chars)::BIGINT AS sum_chars
-        |FROM (SELECT lang, n_chars,
-        |        CASE WHEN b < 80 THEN 'train'
-        |             WHEN b < 90 THEN 'valid'
-        |             ELSE 'test' END AS split
-        |      FROM (SELECT lang, n_chars,
-        |              ('0x' || substr(md5(doc_id::VARCHAR), 1, 4))::BIGINT % 100 AS b
-        |            FROM documents))
-        |GROUP BY lang, split
-        |ORDER BY lang, split""".stripMargin,
-
-    // corpus split = md5 CASE on doc_id (< 400, the given artifact); a new
-    // doc (>= 400) inherits the split of its SMALLEST block-Jaccard match,
-    // else its own md5 bucket — same shingle/Jaccard math as
-    // dedup_incremental_jaccard
-    "sample_split_incremental" ->
-      """WITH s AS (
-        |  SELECT doc_id, n_chars // 100 AS len_bucket,
-        |         list_distinct([array_to_string(toks[i:i+2], ' ')
-        |                        for i in range(1, len(toks) - 1)]) AS sh
-        |  FROM (SELECT doc_id, n_chars, string_split_regex(text, ' +') AS toks
-        |        FROM documents)),
-        |corpus_split AS (
-        |  SELECT doc_id,
-        |         CASE WHEN b < 80 THEN 'train'
-        |              WHEN b < 90 THEN 'valid'
-        |              ELSE 'test' END AS split
-        |  FROM (SELECT doc_id,
-        |          ('0x' || substr(md5(doc_id::VARCHAR), 1, 4))::BIGINT % 100 AS b
-        |        FROM documents WHERE doc_id < 400)),
-        |inherited AS (
-        |  SELECT b.doc_id, min(c.doc_id) AS corpus_id
-        |  FROM s b JOIN s c ON b.len_bucket = c.len_bucket
-        |  WHERE b.doc_id >= 400 AND c.doc_id < 400
-        |    AND len(list_intersect(b.sh, c.sh))::DOUBLE
-        |          / len(list_distinct(b.sh || c.sh)) >= 0.5
-        |  GROUP BY b.doc_id)
-        |SELECT d.doc_id AS doc_id, d.lang AS lang,
-        |       coalesce(cs.split,
-        |         CASE WHEN ('0x' || substr(md5(d.doc_id::VARCHAR), 1, 4))::BIGINT % 100 < 80
-        |                THEN 'train'
-        |              WHEN ('0x' || substr(md5(d.doc_id::VARCHAR), 1, 4))::BIGINT % 100 < 90
-        |                THEN 'valid'
-        |              ELSE 'test' END) AS split
-        |FROM documents d
-        |LEFT JOIN inherited i ON d.doc_id = i.doc_id
-        |LEFT JOIN corpus_split cs ON i.corpus_id = cs.doc_id
-        |WHERE d.doc_id >= 400
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // same closure as dedup_clusters; split key = the cluster's min-id
-    // representative (singletons: the doc itself), same md5 bucketing as
-    // sample_split — the assignment itself is hash-checked per doc
-    "sample_split_leakage_safe" ->
-      """WITH RECURSIVE s AS (
-        |  SELECT doc_id, n_chars // 100 AS len_bucket,
-        |         list_distinct([array_to_string(toks[i:i+2], ' ')
-        |                        for i in range(1, len(toks) - 1)]) AS sh
-        |  FROM (SELECT doc_id, n_chars, string_split_regex(text, ' +') AS toks
-        |        FROM documents)
-        |),
-        |pairs AS (
-        |  SELECT l.doc_id AS doc_a, r.doc_id AS doc_b
-        |  FROM s l JOIN s r
-        |    ON l.len_bucket = r.len_bucket AND l.doc_id < r.doc_id
-        |  WHERE len(list_intersect(l.sh, r.sh))::DOUBLE
-        |          / len(list_distinct(l.sh || r.sh)) >= 0.5
-        |),
-        |edges AS (
-        |  SELECT doc_a AS u, doc_b AS v FROM pairs
-        |  UNION
-        |  SELECT doc_b AS u, doc_a AS v FROM pairs
-        |),
-        |reach AS (
-        |  SELECT u, v FROM edges
-        |  UNION
-        |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-        |  WHERE e.v <> r.u
-        |),
-        |clusters AS (
-        |  SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id
-        |  FROM reach GROUP BY u
-        |)
-        |SELECT d.doc_id AS doc_id, d.lang AS lang,
-        |       CASE WHEN b < 80 THEN 'train'
-        |            WHEN b < 90 THEN 'valid'
-        |            ELSE 'test' END AS split
-        |FROM (SELECT d.doc_id, d.lang,
-        |        ('0x' || substr(md5(coalesce(c.cluster_id, d.doc_id)::VARCHAR), 1, 4))::BIGINT
-        |          % 100 AS b
-        |      FROM documents d LEFT JOIN clusters c ON d.doc_id = c.doc_id) d
-        |ORDER BY doc_id""".stripMargin,
-
-    "sample_shuffle" ->
-      """SELECT row_number() OVER (ORDER BY shuffle_key, doc_id)::INTEGER AS position,
-        |       doc_id, shuffle_key
-        |FROM (SELECT doc_id, md5('epoch1:' || doc_id::VARCHAR) AS shuffle_key
-        |      FROM documents)
-        |ORDER BY position""".stripMargin,
-
-    "sample_mixture" ->
-      """SELECT lang, count(*)::BIGINT AS n_docs, sum(n_chars)::BIGINT AS sum_chars
-        |FROM (SELECT lang, n_chars,
-        |        ('0x' || substr(md5(doc_id::VARCHAR), 1, 4))::BIGINT % 100 AS b
-        |      FROM documents)
-        |WHERE b < CASE lang WHEN 'en' THEN 100 WHEN 'de' THEN 50 WHEN 'fr' THEN 50
-        |                    WHEN 'es' THEN 25 WHEN 'zh' THEN 10 ELSE 100 END
-        |GROUP BY lang
-        |ORDER BY lang""".stripMargin,
-
-    // identical A-ES scores (md5 uniform -> ln(u)/w) recomputed in SQL: u
-    // is exactly representable ((v+1)/2^32), ln is correctly rounded in
-    // both engines, and the top-500 boundary is scored on identical
-    // doubles — the selected SET hash-matches, scores never leave the
-    // engine
-    "sample_reservoir_weighted" ->
-      """WITH keyed AS (
-        |  SELECT doc_id, source, n_chars,
-        |         ln((('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT + 1)::DOUBLE
-        |            / 4294967296.0)
-        |           / greatest(n_chars, 1)::DOUBLE AS es
-        |  FROM documents),
-        |top AS (SELECT doc_id, source, n_chars FROM keyed
-        |        ORDER BY es DESC, doc_id LIMIT 500)
-        |SELECT doc_id, source, n_chars FROM top ORDER BY doc_id""".stripMargin,
-
-    "sample_reservoir_stratified" ->
-      """WITH keyed AS (
-        |  SELECT doc_id, lang, n_chars,
-        |         ln((('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT + 1)::DOUBLE
-        |            / 4294967296.0)
-        |           / greatest(n_chars, 1)::DOUBLE AS es
-        |  FROM documents),
-        |r AS (SELECT doc_id, lang, n_chars,
-        |             row_number() OVER (PARTITION BY lang ORDER BY es DESC, doc_id) AS rk
-        |      FROM keyed)
-        |SELECT doc_id, lang, n_chars FROM r WHERE rk <= 50
-        |ORDER BY lang, doc_id""".stripMargin,
-
-    "text_decontaminate" ->
-      """WITH s AS (
-        |  SELECT doc_id, list_distinct([array_to_string(toks[i:i+4], ' ')
-        |                                for i in range(1, len(toks) - 3)]) AS sh
-        |  FROM (SELECT doc_id, string_split_regex(text, ' +') AS toks FROM documents)
-        |), g AS (SELECT doc_id, unnest(sh) AS gram FROM s),
-        |bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 50 = 0)
-        |SELECT g.doc_id, count(*)::BIGINT AS n_shared_ngrams
-        |FROM g JOIN bench USING (gram)
-        |WHERE g.doc_id % 50 <> 0
-        |GROUP BY g.doc_id
-        |ORDER BY g.doc_id""".stripMargin,
-
-    "embedding_quantize" ->
-      """WITH q AS (
-        |  SELECT vec_id,
-        |         list_max(list_transform(embedding::DOUBLE[], x -> abs(x))) / 127.0 AS s,
-        |         embedding::DOUBLE[] AS e
-        |  FROM embeddings)
-        |SELECT vec_id, round(s, 6) AS scale6,
-        |       array_to_string(list_transform(e, x ->
-        |         (CASE WHEN s = 0 THEN 0
-        |               WHEN x < 0 THEN -floor(abs(x) / s + 0.5)
-        |               ELSE floor(abs(x) / s + 0.5) END)::INT), ',') AS codes
-        |FROM q
-        |ORDER BY vec_id""".stripMargin,
-
-    "decontaminate_semantic" ->
-      """SELECT t.vec_id AS train_id,
-        |       count(*)::BIGINT AS n_eval_hits,
-        |       round(max(list_cosine_similarity(t.embedding::DOUBLE[], e.embedding::DOUBLE[])), 4) AS max_cos
-        |FROM embeddings t JOIN embeddings e
-        |  ON t.vec_id % 25 <> 0 AND e.vec_id % 25 = 0
-        | AND list_cosine_similarity(t.embedding::DOUBLE[], e.embedding::DOUBLE[]) >= 0.3
-        |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-
-    "text_strip_markup" ->
-      """WITH w AS (
-        |  SELECT source,
-        |         '<html><head><style>p{color:red}</style></head><body><h1>Doc '
-        |           || doc_id::VARCHAR || '</h1><p class="x">' || text
-        |           || ' &amp; more &lt;i&gt;</p><script>var x=1;</script></body></html>' AS html
-        |  FROM documents),
-        |c AS (
-        |  SELECT source, html,
-        |         trim(regexp_replace(
-        |           regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        |           regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        |           regexp_replace(html,
-        |             '(?is)<script[^>]*>.*?</script>', ' ', 'g'),
-        |             '(?is)<style[^>]*>.*?</style>', ' ', 'g'),
-        |             '<[^>]+>', ' ', 'g'),
-        |             '&lt;', '<', 'g'),
-        |             '&gt;', '>', 'g'),
-        |             '&quot;', '"', 'g'),
-        |             '&#39;', '''', 'g'),
-        |             '&nbsp;', ' ', 'g'),
-        |             '&amp;', '&', 'g'),
-        |             '\s+', ' ', 'g')) AS clean
-        |  FROM w)
-        |SELECT source, count(*)::BIGINT AS n_docs,
-        |       sum(length(html))::BIGINT AS chars_in,
-        |       sum(length(clean))::BIGINT AS chars_out
-        |FROM c
-        |GROUP BY source
-        |ORDER BY source""".stripMargin,
-
-    "text_pii_redact" ->
-      """WITH p AS (
-        |  SELECT doc_id, source,
-        |         text || ' contact user' || doc_id::VARCHAR || '@example.com or 555-123-'
-        |              || lpad((doc_id % 10000)::VARCHAR, 4, '0') AS text
-        |  FROM documents),
-        |r AS (
-        |  SELECT doc_id, source, text,
-        |         regexp_replace(regexp_replace(regexp_replace(regexp_replace(text,
-        |           '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}', '<EMAIL>', 'g'),
-        |           '[0-9]{3}-[0-9]{2}-[0-9]{4}', '<SSN>', 'g'),
-        |           '[0-9]{3}-[0-9]{3}-[0-9]{4}', '<PHONE>', 'g'),
-        |           '([0-9]{1,3}\.){3}[0-9]{1,3}', '<IP>', 'g') AS clean
-        |  FROM p)
-        |SELECT source, count(*)::BIGINT AS n_docs,
-        |       sum(len(regexp_extract_all(text,
-        |         '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}')))::BIGINT AS n_emails,
-        |       sum(len(regexp_extract_all(text, '[0-9]{3}-[0-9]{3}-[0-9]{4}')))::BIGINT AS n_phones,
-        |       sum(length(text) - length(clean))::BIGINT AS chars_removed
-        |FROM r
-        |GROUP BY source
-        |ORDER BY source""".stripMargin,
-
-    "q_range_join_banded" ->
-      """SELECT t.range_id, count(*) AS n_events, round(sum(e.value), 2) AS sum_value
-        |FROM events e
-        |JOIN (SELECT range AS range_id, range * 5.0 AS lo, range * 5.0 + 25.0 AS hi
-        |      FROM range(0, 40)) t
-        |  ON e.value >= t.lo AND e.value < t.hi
-        |GROUP BY t.range_id
-        |ORDER BY t.range_id""".stripMargin,
-
-    "dedup_exact_substr" ->
-      """WITH g AS (
-        |  SELECT doc_id, unnest(list_distinct([array_to_string(toks[i:i+7], ' ')
-        |                                       for i in range(1, len(toks) - 6)])) AS gram
-        |  FROM (SELECT doc_id, string_split_regex(text, ' +') AS toks FROM documents)
-        |), o AS (SELECT gram, min(doc_id) AS first_doc FROM g GROUP BY gram)
-        |SELECT g.doc_id, count(*)::BIGINT AS n_shared_spans, min(o.first_doc) AS first_src
-        |FROM g JOIN o USING (gram)
-        |WHERE g.doc_id > o.first_doc
-        |GROUP BY g.doc_id
-        |ORDER BY g.doc_id""".stripMargin,
-
-    "text_gopher_filter" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(text, ' +') AS toks FROM documents),
-        |m AS (
-        |  SELECT doc_id,
-        |         len(toks)::BIGINT AS n_words,
-        |         (20000 * coalesce(list_sum([length(x) for x in toks]), 0)
-        |            + greatest(len(toks), 1)) // (2 * greatest(len(toks), 1))
-        |           / 10000.0 AS mean_word_len,
-        |         (20000 * len([x for x in toks if regexp_matches(x, '\p{L}')])
-        |            + greatest(len(toks), 1)) // (2 * greatest(len(toks), 1))
-        |           / 10000.0 AS alpha_frac,
-        |         (CASE WHEN list_contains(toks, 'the') THEN 1 ELSE 0 END +
-        |          CASE WHEN list_contains(toks, 'a')   THEN 1 ELSE 0 END +
-        |          CASE WHEN list_contains(toks, 'and') THEN 1 ELSE 0 END +
-        |          CASE WHEN list_contains(toks, 'of')  THEN 1 ELSE 0 END +
-        |          CASE WHEN list_contains(toks, 'to')  THEN 1 ELSE 0 END)::BIGINT AS n_stop
-        |  FROM t)
-        |SELECT doc_id, n_words, mean_word_len, alpha_frac, n_stop,
-        |       (n_words BETWEEN 50 AND 100000
-        |        AND mean_word_len BETWEEN 3.0 AND 10.0
-        |        AND alpha_frac >= 0.8 AND n_stop >= 1) AS pass
-        |FROM m
-        |ORDER BY doc_id""".stripMargin,
-
-    "text_chunk" ->
-      """WITH d AS (SELECT doc_id, string_split_regex(text, ' +') AS toks FROM documents)
-        |SELECT doc_id, s // 48 AS chunk_idx,
-        |       len(toks[s + 1:s + 64])::BIGINT AS chunk_tokens,
-        |       md5(array_to_string(toks[s + 1:s + 64], ' ')) AS chunk_hash
-        |FROM d, unnest(range(0, len(toks), 48)) u(s)
-        |ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    "text_importance" ->
-      """WITH d AS (SELECT doc_id, string_split_regex(text, ' +') AS toks FROM documents),
-        |rg AS (SELECT doc_id,
-        |              unnest([array_to_string(toks[i:i+1], ' ') for i in range(1, len(toks))]) AS g
-        |       FROM d WHERE doc_id % 20 <> 0),
-        |tg AS (SELECT unnest([array_to_string(toks[i:i+1], ' ') for i in range(1, len(toks))]) AS g
-        |       FROM d WHERE doc_id % 20 = 0),
-        |tc AS (SELECT g, count(*) AS tc FROM tg GROUP BY g),
-        |rc AS (SELECT g, count(*) AS rc FROM rg GROUP BY g),
-        |w AS (SELECT rc.g, ln(coalesce(tc.tc, 0) + 1.0) - ln(rc.rc + 1.0) AS w
-        |      FROM rc LEFT JOIN tc USING (g))
-        |SELECT rg.doc_id, count(*)::BIGINT AS n_grams, round(avg(w.w), 4) AS score
-        |FROM rg JOIN w ON rg.g = w.g
-        |GROUP BY rg.doc_id
-        |ORDER BY rg.doc_id""".stripMargin,
-
-    "text_importance_select" ->
-      """WITH d AS (SELECT doc_id, string_split_regex(text, ' +') AS toks FROM documents),
-        |rg AS (SELECT doc_id,
-        |              unnest([array_to_string(toks[i:i+1], ' ') for i in range(1, len(toks))]) AS g
-        |       FROM d WHERE doc_id % 20 <> 0),
-        |tg AS (SELECT unnest([array_to_string(toks[i:i+1], ' ') for i in range(1, len(toks))]) AS g
-        |       FROM d WHERE doc_id % 20 = 0),
-        |tc AS (SELECT g, count(*) AS tc FROM tg GROUP BY g),
-        |rc AS (SELECT g, count(*) AS rc FROM rg GROUP BY g),
-        |w AS (SELECT rc.g, ln(coalesce(tc.tc, 0) + 1.0) - ln(rc.rc + 1.0) AS w
-        |      FROM rc LEFT JOIN tc USING (g)),
-        |scored AS (
-        |  SELECT rg.doc_id, count(*)::BIGINT AS n_grams, round(avg(w.w), 4) AS score
-        |  FROM rg JOIN w ON rg.g = w.g
-        |  GROUP BY rg.doc_id),
-        |sq AS (SELECT doc_id, n_grams, score,
-        |              CAST(round(score * 10000, 0) AS BIGINT) AS scq
-        |       FROM scored),
-        |thr AS (SELECT CAST(round(quantile_cont(scq, 0.75) * 4, 0) AS BIGINT) AS tq
-        |        FROM sq)
-        |SELECT doc_id, n_grams, score
-        |FROM sq, thr
-        |WHERE scq * 4 >= tq
-        |ORDER BY doc_id""".stripMargin,
-
-    "source_quality_census" ->
-      """WITH d AS (SELECT source, string_split_regex(text, ' +') AS toks FROM documents),
-        |m AS (SELECT source,
-        |             len(toks)::BIGINT AS n_words,
-        |             (20000 * coalesce(list_sum([length(x) for x in toks]), 0)
-        |                + greatest(len(toks), 1)) // (2 * greatest(len(toks), 1))
-        |               / 10000.0 AS mean_word_len,
-        |             (20000 * len([x for x in toks if regexp_matches(x, '\p{L}')])
-        |                + greatest(len(toks), 1)) // (2 * greatest(len(toks), 1))
-        |               / 10000.0 AS alpha_frac,
-        |             (CASE WHEN list_contains(toks, 'the') THEN 1 ELSE 0 END +
-        |              CASE WHEN list_contains(toks, 'a')   THEN 1 ELSE 0 END +
-        |              CASE WHEN list_contains(toks, 'and') THEN 1 ELSE 0 END +
-        |              CASE WHEN list_contains(toks, 'of')  THEN 1 ELSE 0 END +
-        |              CASE WHEN list_contains(toks, 'to')  THEN 1 ELSE 0 END) AS n_stop
-        |      FROM d)
-        |SELECT source, count(*)::BIGINT AS n_docs,
-        |       sum(CASE WHEN n_words BETWEEN 50 AND 100000
-        |                 AND mean_word_len BETWEEN 3.0 AND 10.0
-        |                 AND alpha_frac >= 0.8
-        |                 AND n_stop >= 1 THEN 1 ELSE 0 END)::BIGINT AS n_pass,
-        |       round(avg(n_words), 4) AS avg_words,
-        |       round(avg(alpha_frac), 4) AS avg_alpha_frac,
-        |       round(avg(mean_word_len), 4) AS avg_word_len
-        |FROM m
-        |GROUP BY source
-        |ORDER BY source""".stripMargin,
-
-    "text_normalize" ->
-      """SELECT doc_id,
-        |       trim(regexp_replace(lower(nfc_normalize(text)),
-        |                           '[ \t\r\n]+', ' ', 'g')) AS norm_text,
-        |       length(trim(regexp_replace(lower(nfc_normalize(text)),
-        |                                  '[ \t\r\n]+', ' ', 'g')))::BIGINT AS n_chars_norm,
-        |       md5(trim(regexp_replace(lower(nfc_normalize(text)),
-        |                               '[ \t\r\n]+', ' ', 'g'))) AS norm_fp
-        |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-
-    "text_bigram_ppl" ->
-      """WITH toks AS (SELECT doc_id, string_split_regex(text, ' +') AS t FROM documents),
-        |uni AS (SELECT unnest(t) AS w FROM toks),
-        |ucnt AS (SELECT w, count(*) AS uc FROM uni GROUP BY w),
-        |v AS (SELECT count(*) AS v FROM ucnt),
-        |bg AS (SELECT doc_id, array_to_string(t[i:i+1], ' ') AS b, t[i] AS w1
-        |       FROM toks, unnest(range(1, len(t))) u(i)),
-        |bcnt AS (SELECT b, count(*) AS bc FROM bg GROUP BY b),
-        |db AS (SELECT doc_id, b, w1, count(*) AS c FROM bg GROUP BY doc_id, b, w1)
-        |SELECT db.doc_id, sum(db.c)::BIGINT AS n_bigrams,
-        |       round(sum(db.c * (ln(bcnt.bc + 1.0) - ln(ucnt.uc + 1.0 * v.v)))
-        |             / sum(db.c), 4) AS avg_logp
-        |FROM db JOIN bcnt USING (b) JOIN ucnt ON db.w1 = ucnt.w CROSS JOIN v
-        |GROUP BY db.doc_id
-        |ORDER BY db.doc_id""".stripMargin,
-
-    "text_trigram_ppl" ->
-      """WITH toks AS (SELECT doc_id, string_split_regex(text, ' +') AS t FROM documents),
-        |uni AS (SELECT unnest(t) AS w FROM toks),
-        |v AS (SELECT count(DISTINCT w) AS v FROM uni),
-        |ctx AS (SELECT array_to_string(t[i:i+1], ' ') AS c
-        |        FROM toks, unnest(range(1, len(t))) u(i)),
-        |ccnt AS (SELECT c, count(*) AS cc FROM ctx GROUP BY c),
-        |tg AS (SELECT doc_id, array_to_string(t[i:i+2], ' ') AS g,
-        |              array_to_string(t[i:i+1], ' ') AS c
-        |       FROM toks, unnest(range(1, len(t) - 1)) u(i)),
-        |gcnt AS (SELECT g, count(*) AS gc FROM tg GROUP BY g),
-        |db AS (SELECT doc_id, g, c, count(*) AS cnt FROM tg GROUP BY doc_id, g, c)
-        |SELECT db.doc_id, sum(db.cnt)::BIGINT AS n_grams,
-        |       round(sum(db.cnt * (ln(gcnt.gc + 1.0) - ln(ccnt.cc + 1.0 * v.v)))
-        |             / sum(db.cnt), 4) AS avg_logp
-        |FROM db JOIN gcnt USING (g) JOIN ccnt ON db.c = ccnt.c CROSS JOIN v
-        |GROUP BY db.doc_id
-        |ORDER BY db.doc_id""".stripMargin,
-
-    // Full modified-KN estimator replayed in SQL: counts → count-of-counts
-    // → discounts (Y = t1/(t1+2t2); D_k) → continuation counts (from
-    // trigram TYPES) → interpolated per-gram log-prob → per-doc average.
-    // Float expression structure mirrors the Spark side term for term so
-    // the doubles agree bitwise before the final 4dp round.
-    "text_trigram_ppl_kn" ->
-      """WITH toks AS (SELECT doc_id, string_split_regex(text, ' +') AS t FROM documents),
-        |tg AS (SELECT doc_id, array_to_string(t[i:i+2], ' ') AS g
-        |       FROM toks, unnest(range(1, len(t) - 1)) u(i)),
-        |tri0 AS (SELECT g, count(*) AS c3 FROM tg GROUP BY g),
-        |tri AS (SELECT g, c3,
-        |               array_to_string(p[1:2], ' ') AS uv,
-        |               array_to_string(p[2:3], ' ') AS vw,
-        |               p[2] AS v, p[3] AS w
-        |        FROM (SELECT g, c3, string_split(g, ' ') AS p FROM tri0)),
-        |ctx3 AS (SELECT uv, sum(c3) AS ctot,
-        |                sum(CASE WHEN c3 = 1 THEN 1 ELSE 0 END) AS n1,
-        |                sum(CASE WHEN c3 = 2 THEN 1 ELSE 0 END) AS n2,
-        |                sum(CASE WHEN c3 >= 3 THEN 1 ELSE 0 END) AS n3
-        |         FROM tri GROUP BY uv),
-        |coc3 AS (SELECT sum(CASE WHEN c3 = 1 THEN 1 ELSE 0 END)::DOUBLE AS t1,
-        |                sum(CASE WHEN c3 = 2 THEN 1 ELSE 0 END)::DOUBLE AS t2,
-        |                sum(CASE WHEN c3 = 3 THEN 1 ELSE 0 END)::DOUBLE AS t3,
-        |                sum(CASE WHEN c3 = 4 THEN 1 ELSE 0 END)::DOUBLE AS t4
-        |         FROM tri),
-        |d3e AS (SELECT t1, t2, t3,
-        |               1.0 - 2.0 * (CASE WHEN t1 + 2.0 * t2 > 0.0 THEN t1 / (t1 + 2.0 * t2) ELSE 0.0 END)
-        |                         * (CASE WHEN t1 > 0.0 THEN t2 / t1 ELSE 0.0 END) AS d1e,
-        |               2.0 - 3.0 * (CASE WHEN t1 + 2.0 * t2 > 0.0 THEN t1 / (t1 + 2.0 * t2) ELSE 0.0 END)
-        |                         * (CASE WHEN t2 > 0.0 THEN t3 / t2 ELSE 0.0 END) AS d2e,
-        |               3.0 - 4.0 * (CASE WHEN t1 + 2.0 * t2 > 0.0 THEN t1 / (t1 + 2.0 * t2) ELSE 0.0 END)
-        |                         * (CASE WHEN t3 > 0.0 THEN t4 / t3 ELSE 0.0 END) AS d3e
-        |        FROM coc3),
-        |d3 AS (SELECT CASE WHEN ok THEN d1e ELSE 0.5 END AS d1,
-        |              CASE WHEN ok THEN d2e ELSE 1.0 END AS d2,
-        |              CASE WHEN ok THEN d3e ELSE 1.5 END AS d3
-        |       FROM (SELECT d1e, d2e, d3e,
-        |                    t1 > 0.0 AND t2 > 0.0 AND t3 > 0.0
-        |                    AND d1e >= 0.0 AND d1e <= 1.0 AND d2e >= 0.0 AND d2e <= 2.0
-        |                    AND d3e >= 0.0 AND d3e <= 3.0 AS ok FROM d3e)),
-        |bg AS (SELECT vw, v, w, count(*) AS cc2 FROM tri GROUP BY vw, v, w),
-        |ctx2 AS (SELECT v, sum(cc2) AS cc2tot,
-        |                sum(CASE WHEN cc2 = 1 THEN 1 ELSE 0 END) AS m1,
-        |                sum(CASE WHEN cc2 = 2 THEN 1 ELSE 0 END) AS m2,
-        |                sum(CASE WHEN cc2 >= 3 THEN 1 ELSE 0 END) AS m3
-        |         FROM bg GROUP BY v),
-        |coc2 AS (SELECT sum(CASE WHEN cc2 = 1 THEN 1 ELSE 0 END)::DOUBLE AS t1,
-        |                sum(CASE WHEN cc2 = 2 THEN 1 ELSE 0 END)::DOUBLE AS t2,
-        |                sum(CASE WHEN cc2 = 3 THEN 1 ELSE 0 END)::DOUBLE AS t3,
-        |                sum(CASE WHEN cc2 = 4 THEN 1 ELSE 0 END)::DOUBLE AS t4
-        |         FROM bg),
-        |d2e AS (SELECT t1, t2, t3,
-        |               1.0 - 2.0 * (CASE WHEN t1 + 2.0 * t2 > 0.0 THEN t1 / (t1 + 2.0 * t2) ELSE 0.0 END)
-        |                         * (CASE WHEN t1 > 0.0 THEN t2 / t1 ELSE 0.0 END) AS d1e,
-        |               2.0 - 3.0 * (CASE WHEN t1 + 2.0 * t2 > 0.0 THEN t1 / (t1 + 2.0 * t2) ELSE 0.0 END)
-        |                         * (CASE WHEN t2 > 0.0 THEN t3 / t2 ELSE 0.0 END) AS d2e,
-        |               3.0 - 4.0 * (CASE WHEN t1 + 2.0 * t2 > 0.0 THEN t1 / (t1 + 2.0 * t2) ELSE 0.0 END)
-        |                         * (CASE WHEN t3 > 0.0 THEN t4 / t3 ELSE 0.0 END) AS d3e
-        |        FROM coc2),
-        |d2 AS (SELECT CASE WHEN ok THEN d1e ELSE 0.5 END AS d1,
-        |              CASE WHEN ok THEN d2e ELSE 1.0 END AS d2,
-        |              CASE WHEN ok THEN d3e ELSE 1.5 END AS d3
-        |       FROM (SELECT d1e, d2e, d3e,
-        |                    t1 > 0.0 AND t2 > 0.0 AND t3 > 0.0
-        |                    AND d1e >= 0.0 AND d1e <= 1.0 AND d2e >= 0.0 AND d2e <= 2.0
-        |                    AND d3e >= 0.0 AND d3e <= 3.0 AS ok FROM d2e)),
-        |uni AS (SELECT w, count(*) AS cc1 FROM bg GROUP BY w),
-        |tt AS (SELECT sum(cc1)::DOUBLE AS tot FROM uni),
-        |mdl AS (SELECT tri.g,
-        |        ln(greatest(tri.c3::DOUBLE - (CASE WHEN tri.c3 = 1 THEN d3.d1 WHEN tri.c3 = 2 THEN d3.d2 ELSE d3.d3 END), 0.0) / ctx3.ctot::DOUBLE
-        |           + ((d3.d1 * ctx3.n1::DOUBLE + d3.d2 * ctx3.n2::DOUBLE + d3.d3 * ctx3.n3::DOUBLE) / ctx3.ctot::DOUBLE)
-        |             * (greatest(bg.cc2::DOUBLE - (CASE WHEN bg.cc2 = 1 THEN d2.d1 WHEN bg.cc2 = 2 THEN d2.d2 ELSE d2.d3 END), 0.0) / ctx2.cc2tot::DOUBLE
-        |                + ((d2.d1 * ctx2.m1::DOUBLE + d2.d2 * ctx2.m2::DOUBLE + d2.d3 * ctx2.m3::DOUBLE) / ctx2.cc2tot::DOUBLE)
-        |                  * (uni.cc1::DOUBLE / tt.tot))) AS lp
-        |        FROM tri JOIN ctx3 USING (uv) JOIN bg USING (vw)
-        |             JOIN ctx2 ON tri.v = ctx2.v JOIN uni ON tri.w = uni.w
-        |             CROSS JOIN d3 CROSS JOIN d2 CROSS JOIN tt),
-        |db AS (SELECT doc_id, g, count(*) AS c FROM tg GROUP BY doc_id, g)
-        |SELECT db.doc_id, sum(db.c)::BIGINT AS n_grams,
-        |       round(sum(db.c * mdl.lp) / sum(db.c), 4) AS avg_logp
-        |FROM db JOIN mdl USING (g)
-        |GROUP BY db.doc_id
-        |ORDER BY db.doc_id""".stripMargin,
-
-    // The estimator above trained on the even-doc_id half only, scoring
-    // the whole corpus: in-model grams read mdl.lp; the OOV remainder
-    // replays the graded backoff ladder with the SAME float expression
-    // structure as the Spark side (0-numerator discounted top order +
-    // γ3·p2 under a seen context; p2 under a seen v; p1 otherwise;
-    // NULL continuation unigram → gram dropped).
-    "text_trigram_ppl_kn_served" ->
-      """WITH rtoks AS (SELECT doc_id, string_split_regex(text, ' +') AS t
-        |               FROM documents WHERE doc_id % 2 = 0),
-        |tg AS (SELECT doc_id, array_to_string(t[i:i+2], ' ') AS g
-        |       FROM rtoks, unnest(range(1, len(t) - 1)) u(i)),
-        |tri0 AS (SELECT g, count(*) AS c3 FROM tg GROUP BY g),
-        |tri AS (SELECT g, c3,
-        |               array_to_string(p[1:2], ' ') AS uv,
-        |               array_to_string(p[2:3], ' ') AS vw,
-        |               p[2] AS v, p[3] AS w
-        |        FROM (SELECT g, c3, string_split(g, ' ') AS p FROM tri0)),
-        |ctx3 AS (SELECT uv, sum(c3) AS ctot,
-        |                sum(CASE WHEN c3 = 1 THEN 1 ELSE 0 END) AS n1,
-        |                sum(CASE WHEN c3 = 2 THEN 1 ELSE 0 END) AS n2,
-        |                sum(CASE WHEN c3 >= 3 THEN 1 ELSE 0 END) AS n3
-        |         FROM tri GROUP BY uv),
-        |coc3 AS (SELECT sum(CASE WHEN c3 = 1 THEN 1 ELSE 0 END)::DOUBLE AS t1,
-        |                sum(CASE WHEN c3 = 2 THEN 1 ELSE 0 END)::DOUBLE AS t2,
-        |                sum(CASE WHEN c3 = 3 THEN 1 ELSE 0 END)::DOUBLE AS t3,
-        |                sum(CASE WHEN c3 = 4 THEN 1 ELSE 0 END)::DOUBLE AS t4
-        |         FROM tri),
-        |d3e AS (SELECT t1, t2, t3,
-        |               1.0 - 2.0 * (CASE WHEN t1 + 2.0 * t2 > 0.0 THEN t1 / (t1 + 2.0 * t2) ELSE 0.0 END)
-        |                         * (CASE WHEN t1 > 0.0 THEN t2 / t1 ELSE 0.0 END) AS d1e,
-        |               2.0 - 3.0 * (CASE WHEN t1 + 2.0 * t2 > 0.0 THEN t1 / (t1 + 2.0 * t2) ELSE 0.0 END)
-        |                         * (CASE WHEN t2 > 0.0 THEN t3 / t2 ELSE 0.0 END) AS d2e,
-        |               3.0 - 4.0 * (CASE WHEN t1 + 2.0 * t2 > 0.0 THEN t1 / (t1 + 2.0 * t2) ELSE 0.0 END)
-        |                         * (CASE WHEN t3 > 0.0 THEN t4 / t3 ELSE 0.0 END) AS d3e
-        |        FROM coc3),
-        |d3 AS (SELECT CASE WHEN ok THEN d1e ELSE 0.5 END AS d1,
-        |              CASE WHEN ok THEN d2e ELSE 1.0 END AS d2,
-        |              CASE WHEN ok THEN d3e ELSE 1.5 END AS d3
-        |       FROM (SELECT d1e, d2e, d3e,
-        |                    t1 > 0.0 AND t2 > 0.0 AND t3 > 0.0
-        |                    AND d1e >= 0.0 AND d1e <= 1.0 AND d2e >= 0.0 AND d2e <= 2.0
-        |                    AND d3e >= 0.0 AND d3e <= 3.0 AS ok FROM d3e)),
-        |bg AS (SELECT vw, v, w, count(*) AS cc2 FROM tri GROUP BY vw, v, w),
-        |ctx2 AS (SELECT v, sum(cc2) AS cc2tot,
-        |                sum(CASE WHEN cc2 = 1 THEN 1 ELSE 0 END) AS m1,
-        |                sum(CASE WHEN cc2 = 2 THEN 1 ELSE 0 END) AS m2,
-        |                sum(CASE WHEN cc2 >= 3 THEN 1 ELSE 0 END) AS m3
-        |         FROM bg GROUP BY v),
-        |coc2 AS (SELECT sum(CASE WHEN cc2 = 1 THEN 1 ELSE 0 END)::DOUBLE AS t1,
-        |                sum(CASE WHEN cc2 = 2 THEN 1 ELSE 0 END)::DOUBLE AS t2,
-        |                sum(CASE WHEN cc2 = 3 THEN 1 ELSE 0 END)::DOUBLE AS t3,
-        |                sum(CASE WHEN cc2 = 4 THEN 1 ELSE 0 END)::DOUBLE AS t4
-        |         FROM bg),
-        |d2e AS (SELECT t1, t2, t3,
-        |               1.0 - 2.0 * (CASE WHEN t1 + 2.0 * t2 > 0.0 THEN t1 / (t1 + 2.0 * t2) ELSE 0.0 END)
-        |                         * (CASE WHEN t1 > 0.0 THEN t2 / t1 ELSE 0.0 END) AS d1e,
-        |               2.0 - 3.0 * (CASE WHEN t1 + 2.0 * t2 > 0.0 THEN t1 / (t1 + 2.0 * t2) ELSE 0.0 END)
-        |                         * (CASE WHEN t2 > 0.0 THEN t3 / t2 ELSE 0.0 END) AS d2e,
-        |               3.0 - 4.0 * (CASE WHEN t1 + 2.0 * t2 > 0.0 THEN t1 / (t1 + 2.0 * t2) ELSE 0.0 END)
-        |                         * (CASE WHEN t3 > 0.0 THEN t4 / t3 ELSE 0.0 END) AS d3e
-        |        FROM coc2),
-        |d2 AS (SELECT CASE WHEN ok THEN d1e ELSE 0.5 END AS d1,
-        |              CASE WHEN ok THEN d2e ELSE 1.0 END AS d2,
-        |              CASE WHEN ok THEN d3e ELSE 1.5 END AS d3
-        |       FROM (SELECT d1e, d2e, d3e,
-        |                    t1 > 0.0 AND t2 > 0.0 AND t3 > 0.0
-        |                    AND d1e >= 0.0 AND d1e <= 1.0 AND d2e >= 0.0 AND d2e <= 2.0
-        |                    AND d3e >= 0.0 AND d3e <= 3.0 AS ok FROM d2e)),
-        |uni AS (SELECT w, count(*) AS cc1 FROM bg GROUP BY w),
-        |tt AS (SELECT sum(cc1)::DOUBLE AS tot FROM uni),
-        |mdl AS (SELECT tri.g,
-        |        ln(greatest(tri.c3::DOUBLE - (CASE WHEN tri.c3 = 1 THEN d3.d1 WHEN tri.c3 = 2 THEN d3.d2 ELSE d3.d3 END), 0.0) / ctx3.ctot::DOUBLE
-        |           + ((d3.d1 * ctx3.n1::DOUBLE + d3.d2 * ctx3.n2::DOUBLE + d3.d3 * ctx3.n3::DOUBLE) / ctx3.ctot::DOUBLE)
-        |             * (greatest(bg.cc2::DOUBLE - (CASE WHEN bg.cc2 = 1 THEN d2.d1 WHEN bg.cc2 = 2 THEN d2.d2 ELSE d2.d3 END), 0.0) / ctx2.cc2tot::DOUBLE
-        |                + ((d2.d1 * ctx2.m1::DOUBLE + d2.d2 * ctx2.m2::DOUBLE + d2.d3 * ctx2.m3::DOUBLE) / ctx2.cc2tot::DOUBLE)
-        |                  * (uni.cc1::DOUBLE / tt.tot))) AS lp
-        |        FROM tri JOIN ctx3 USING (uv) JOIN bg USING (vw)
-        |             JOIN ctx2 ON tri.v = ctx2.v JOIN uni ON tri.w = uni.w
-        |             CROSS JOIN d3 CROSS JOIN d2 CROSS JOIN tt),
-        |atoks AS (SELECT doc_id, string_split_regex(text, ' +') AS t FROM documents),
-        |atg AS (SELECT doc_id, array_to_string(t[i:i+2], ' ') AS g
-        |        FROM atoks, unnest(range(1, len(t) - 1)) u(i)),
-        |db AS (SELECT doc_id, g, count(*) AS c FROM atg GROUP BY doc_id, g),
-        |seen AS (SELECT db.doc_id, db.c, mdl.lp FROM db JOIN mdl USING (g)),
-        |un0 AS (SELECT db.doc_id, db.g, db.c FROM db LEFT JOIN mdl USING (g)
-        |        WHERE mdl.lp IS NULL),
-        |unk AS (SELECT doc_id, c,
-        |               array_to_string(p[1:2], ' ') AS uv,
-        |               array_to_string(p[2:3], ' ') AS vw,
-        |               p[2] AS v, p[3] AS w
-        |        FROM (SELECT doc_id, c, string_split(g, ' ') AS p FROM un0)),
-        |unb AS (SELECT unk.doc_id, unk.c,
-        |        ln(CASE WHEN ctx3.ctot IS NOT NULL THEN
-        |             greatest(0.0 - d3.d3, 0.0) / ctx3.ctot::DOUBLE
-        |             + ((d3.d1 * ctx3.n1::DOUBLE + d3.d2 * ctx3.n2::DOUBLE + d3.d3 * ctx3.n3::DOUBLE) / ctx3.ctot::DOUBLE)
-        |               * (CASE WHEN ctx2.cc2tot IS NOT NULL THEN
-        |                    greatest(COALESCE(bgs.cc2::DOUBLE, 0.0) - (CASE WHEN COALESCE(bgs.cc2, 0) = 1 THEN d2.d1 WHEN COALESCE(bgs.cc2, 0) = 2 THEN d2.d2 ELSE d2.d3 END), 0.0) / ctx2.cc2tot::DOUBLE
-        |                    + ((d2.d1 * ctx2.m1::DOUBLE + d2.d2 * ctx2.m2::DOUBLE + d2.d3 * ctx2.m3::DOUBLE) / ctx2.cc2tot::DOUBLE)
-        |                      * (uni.cc1::DOUBLE / tt.tot)
-        |                  ELSE uni.cc1::DOUBLE / tt.tot END)
-        |           ELSE
-        |             (CASE WHEN ctx2.cc2tot IS NOT NULL THEN
-        |                greatest(COALESCE(bgs.cc2::DOUBLE, 0.0) - (CASE WHEN COALESCE(bgs.cc2, 0) = 1 THEN d2.d1 WHEN COALESCE(bgs.cc2, 0) = 2 THEN d2.d2 ELSE d2.d3 END), 0.0) / ctx2.cc2tot::DOUBLE
-        |                + ((d2.d1 * ctx2.m1::DOUBLE + d2.d2 * ctx2.m2::DOUBLE + d2.d3 * ctx2.m3::DOUBLE) / ctx2.cc2tot::DOUBLE)
-        |                  * (uni.cc1::DOUBLE / tt.tot)
-        |              ELSE uni.cc1::DOUBLE / tt.tot END)
-        |           END) AS lp
-        |        FROM unk
-        |        LEFT JOIN ctx3 USING (uv)
-        |        LEFT JOIN (SELECT vw, cc2 FROM bg) bgs USING (vw)
-        |        LEFT JOIN ctx2 ON unk.v = ctx2.v
-        |        LEFT JOIN uni ON unk.w = uni.w
-        |        CROSS JOIN d3 CROSS JOIN d2 CROSS JOIN tt),
-        |alls AS (SELECT doc_id, c, lp FROM seen
-        |         UNION ALL
-        |         SELECT doc_id, c, lp FROM unb WHERE lp IS NOT NULL)
-        |SELECT doc_id, sum(c)::BIGINT AS n_grams,
-        |       round(sum(c * lp) / sum(c), 4) AS avg_logp
-        |FROM alls
-        |GROUP BY doc_id
-        |ORDER BY doc_id""".stripMargin,
-
-    // The KN estimator SQL composed with the quantile-select tail
-    // (the sq/thr form text_fluency_select uses) -- the CCNet filter on
-    // the estimator CCNet actually trains, gated end-to-end.
-    "text_fluency_select_kn" ->
-      """WITH toks AS (SELECT doc_id, string_split_regex(text, ' +') AS t FROM documents),
-        |tg AS (SELECT doc_id, array_to_string(t[i:i+2], ' ') AS g
-        |       FROM toks, unnest(range(1, len(t) - 1)) u(i)),
-        |tri0 AS (SELECT g, count(*) AS c3 FROM tg GROUP BY g),
-        |tri AS (SELECT g, c3,
-        |               array_to_string(p[1:2], ' ') AS uv,
-        |               array_to_string(p[2:3], ' ') AS vw,
-        |               p[2] AS v, p[3] AS w
-        |        FROM (SELECT g, c3, string_split(g, ' ') AS p FROM tri0)),
-        |ctx3 AS (SELECT uv, sum(c3) AS ctot,
-        |                sum(CASE WHEN c3 = 1 THEN 1 ELSE 0 END) AS n1,
-        |                sum(CASE WHEN c3 = 2 THEN 1 ELSE 0 END) AS n2,
-        |                sum(CASE WHEN c3 >= 3 THEN 1 ELSE 0 END) AS n3
-        |         FROM tri GROUP BY uv),
-        |coc3 AS (SELECT sum(CASE WHEN c3 = 1 THEN 1 ELSE 0 END)::DOUBLE AS t1,
-        |                sum(CASE WHEN c3 = 2 THEN 1 ELSE 0 END)::DOUBLE AS t2,
-        |                sum(CASE WHEN c3 = 3 THEN 1 ELSE 0 END)::DOUBLE AS t3,
-        |                sum(CASE WHEN c3 = 4 THEN 1 ELSE 0 END)::DOUBLE AS t4
-        |         FROM tri),
-        |d3e AS (SELECT t1, t2, t3,
-        |               1.0 - 2.0 * (CASE WHEN t1 + 2.0 * t2 > 0.0 THEN t1 / (t1 + 2.0 * t2) ELSE 0.0 END)
-        |                         * (CASE WHEN t1 > 0.0 THEN t2 / t1 ELSE 0.0 END) AS d1e,
-        |               2.0 - 3.0 * (CASE WHEN t1 + 2.0 * t2 > 0.0 THEN t1 / (t1 + 2.0 * t2) ELSE 0.0 END)
-        |                         * (CASE WHEN t2 > 0.0 THEN t3 / t2 ELSE 0.0 END) AS d2e,
-        |               3.0 - 4.0 * (CASE WHEN t1 + 2.0 * t2 > 0.0 THEN t1 / (t1 + 2.0 * t2) ELSE 0.0 END)
-        |                         * (CASE WHEN t3 > 0.0 THEN t4 / t3 ELSE 0.0 END) AS d3e
-        |        FROM coc3),
-        |d3 AS (SELECT CASE WHEN ok THEN d1e ELSE 0.5 END AS d1,
-        |              CASE WHEN ok THEN d2e ELSE 1.0 END AS d2,
-        |              CASE WHEN ok THEN d3e ELSE 1.5 END AS d3
-        |       FROM (SELECT d1e, d2e, d3e,
-        |                    t1 > 0.0 AND t2 > 0.0 AND t3 > 0.0
-        |                    AND d1e >= 0.0 AND d1e <= 1.0 AND d2e >= 0.0 AND d2e <= 2.0
-        |                    AND d3e >= 0.0 AND d3e <= 3.0 AS ok FROM d3e)),
-        |bg AS (SELECT vw, v, w, count(*) AS cc2 FROM tri GROUP BY vw, v, w),
-        |ctx2 AS (SELECT v, sum(cc2) AS cc2tot,
-        |                sum(CASE WHEN cc2 = 1 THEN 1 ELSE 0 END) AS m1,
-        |                sum(CASE WHEN cc2 = 2 THEN 1 ELSE 0 END) AS m2,
-        |                sum(CASE WHEN cc2 >= 3 THEN 1 ELSE 0 END) AS m3
-        |         FROM bg GROUP BY v),
-        |coc2 AS (SELECT sum(CASE WHEN cc2 = 1 THEN 1 ELSE 0 END)::DOUBLE AS t1,
-        |                sum(CASE WHEN cc2 = 2 THEN 1 ELSE 0 END)::DOUBLE AS t2,
-        |                sum(CASE WHEN cc2 = 3 THEN 1 ELSE 0 END)::DOUBLE AS t3,
-        |                sum(CASE WHEN cc2 = 4 THEN 1 ELSE 0 END)::DOUBLE AS t4
-        |         FROM bg),
-        |d2e AS (SELECT t1, t2, t3,
-        |               1.0 - 2.0 * (CASE WHEN t1 + 2.0 * t2 > 0.0 THEN t1 / (t1 + 2.0 * t2) ELSE 0.0 END)
-        |                         * (CASE WHEN t1 > 0.0 THEN t2 / t1 ELSE 0.0 END) AS d1e,
-        |               2.0 - 3.0 * (CASE WHEN t1 + 2.0 * t2 > 0.0 THEN t1 / (t1 + 2.0 * t2) ELSE 0.0 END)
-        |                         * (CASE WHEN t2 > 0.0 THEN t3 / t2 ELSE 0.0 END) AS d2e,
-        |               3.0 - 4.0 * (CASE WHEN t1 + 2.0 * t2 > 0.0 THEN t1 / (t1 + 2.0 * t2) ELSE 0.0 END)
-        |                         * (CASE WHEN t3 > 0.0 THEN t4 / t3 ELSE 0.0 END) AS d3e
-        |        FROM coc2),
-        |d2 AS (SELECT CASE WHEN ok THEN d1e ELSE 0.5 END AS d1,
-        |              CASE WHEN ok THEN d2e ELSE 1.0 END AS d2,
-        |              CASE WHEN ok THEN d3e ELSE 1.5 END AS d3
-        |       FROM (SELECT d1e, d2e, d3e,
-        |                    t1 > 0.0 AND t2 > 0.0 AND t3 > 0.0
-        |                    AND d1e >= 0.0 AND d1e <= 1.0 AND d2e >= 0.0 AND d2e <= 2.0
-        |                    AND d3e >= 0.0 AND d3e <= 3.0 AS ok FROM d2e)),
-        |uni AS (SELECT w, count(*) AS cc1 FROM bg GROUP BY w),
-        |tt AS (SELECT sum(cc1)::DOUBLE AS tot FROM uni),
-        |mdl AS (SELECT tri.g,
-        |        ln(greatest(tri.c3::DOUBLE - (CASE WHEN tri.c3 = 1 THEN d3.d1 WHEN tri.c3 = 2 THEN d3.d2 ELSE d3.d3 END), 0.0) / ctx3.ctot::DOUBLE
-        |           + ((d3.d1 * ctx3.n1::DOUBLE + d3.d2 * ctx3.n2::DOUBLE + d3.d3 * ctx3.n3::DOUBLE) / ctx3.ctot::DOUBLE)
-        |             * (greatest(bg.cc2::DOUBLE - (CASE WHEN bg.cc2 = 1 THEN d2.d1 WHEN bg.cc2 = 2 THEN d2.d2 ELSE d2.d3 END), 0.0) / ctx2.cc2tot::DOUBLE
-        |                + ((d2.d1 * ctx2.m1::DOUBLE + d2.d2 * ctx2.m2::DOUBLE + d2.d3 * ctx2.m3::DOUBLE) / ctx2.cc2tot::DOUBLE)
-        |                  * (uni.cc1::DOUBLE / tt.tot))) AS lp
-        |        FROM tri JOIN ctx3 USING (uv) JOIN bg USING (vw)
-        |             JOIN ctx2 ON tri.v = ctx2.v JOIN uni ON tri.w = uni.w
-        |             CROSS JOIN d3 CROSS JOIN d2 CROSS JOIN tt),
-        |db AS (SELECT doc_id, g, count(*) AS c FROM tg GROUP BY doc_id, g),
-        |scored AS (SELECT db.doc_id, sum(db.c)::BIGINT AS n_grams,
-        |                  round(sum(db.c * mdl.lp) / sum(db.c), 4) AS avg_logp
-        |           FROM db JOIN mdl USING (g)
-        |           GROUP BY db.doc_id),
-        |sq AS (SELECT doc_id, n_grams, avg_logp,
-        |              CAST(round(avg_logp * 10000, 0) AS BIGINT) AS scq
-        |       FROM scored),
-        |thr AS (SELECT CAST(round(quantile_cont(scq, 0.5) * 4, 0) AS BIGINT) AS tq
-        |        FROM sq)
-        |SELECT doc_id, n_grams, avg_logp
-        |FROM sq, thr
-        |WHERE scq * 4 >= tq
-        |ORDER BY doc_id""".stripMargin,
-
-    "text_fluency_select" ->
-      """WITH toks AS (SELECT doc_id, string_split_regex(text, ' +') AS t FROM documents),
-        |uni AS (SELECT unnest(t) AS w FROM toks),
-        |ucnt AS (SELECT w, count(*) AS uc FROM uni GROUP BY w),
-        |v AS (SELECT count(*) AS v FROM ucnt),
-        |bg AS (SELECT doc_id, array_to_string(t[i:i+1], ' ') AS b, t[i] AS w1
-        |       FROM toks, unnest(range(1, len(t))) u(i)),
-        |bcnt AS (SELECT b, count(*) AS bc FROM bg GROUP BY b),
-        |db AS (SELECT doc_id, b, w1, count(*) AS c FROM bg GROUP BY doc_id, b, w1),
-        |scored AS (
-        |  SELECT db.doc_id, sum(db.c)::BIGINT AS n_bigrams,
-        |         round(sum(db.c * (ln(bcnt.bc + 1.0) - ln(ucnt.uc + 1.0 * v.v)))
-        |               / sum(db.c), 4) AS avg_logp
-        |  FROM db JOIN bcnt USING (b) JOIN ucnt ON db.w1 = ucnt.w CROSS JOIN v
-        |  GROUP BY db.doc_id),
-        |sq AS (SELECT doc_id, n_bigrams, avg_logp,
-        |              CAST(round(avg_logp * 10000, 0) AS BIGINT) AS scq
-        |       FROM scored),
-        |thr AS (SELECT CAST(round(quantile_cont(scq, 0.5) * 4, 0) AS BIGINT) AS tq
-        |        FROM sq)
-        |SELECT doc_id, n_bigrams, avg_logp
-        |FROM sq, thr
-        |WHERE scq * 4 >= tq
-        |ORDER BY doc_id""".stripMargin,
-
-    "text_ccnet_buckets" ->
-      """WITH toks AS (SELECT doc_id, string_split_regex(text, ' +') AS t FROM documents),
-        |uni AS (SELECT unnest(t) AS w FROM toks),
-        |ucnt AS (SELECT w, count(*) AS uc FROM uni GROUP BY w),
-        |v AS (SELECT count(*) AS v FROM ucnt),
-        |bg AS (SELECT doc_id, array_to_string(t[i:i+1], ' ') AS b, t[i] AS w1
-        |       FROM toks, unnest(range(1, len(t))) u(i)),
-        |bcnt AS (SELECT b, count(*) AS bc FROM bg GROUP BY b),
-        |db AS (SELECT doc_id, b, w1, count(*) AS c FROM bg GROUP BY doc_id, b, w1),
-        |scored AS (
-        |  SELECT db.doc_id,
-        |         round(sum(db.c * (ln(bcnt.bc + 1.0) - ln(ucnt.uc + 1.0 * v.v)))
-        |               / sum(db.c), 4) AS avg_logp
-        |  FROM db JOIN bcnt USING (b) JOIN ucnt ON db.w1 = ucnt.w CROSS JOIN v
-        |  GROUP BY db.doc_id),
-        |nt AS (SELECT s.doc_id, d.lang, s.avg_logp,
-        |              ntile(3) OVER (PARTITION BY d.lang
-        |                             ORDER BY s.avg_logp DESC, s.doc_id) AS b
-        |       FROM scored s JOIN documents d USING (doc_id))
-        |SELECT doc_id, lang, avg_logp,
-        |       CASE b WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS ppl_bucket
-        |FROM nt
-        |ORDER BY doc_id""".stripMargin,
-
-    "select_token_budget" ->
-      """WITH q AS (SELECT doc_id, lang, n_chars,
-        |                  (20000 * length(regexp_replace(text, '[^a-z]', '', 'g'))
-        |                     + greatest(length(text), 1)) // (2 * greatest(length(text), 1))
-        |                    / 10000.0 AS alpha_ratio
-        |           FROM documents),
-        |c AS (SELECT doc_id, lang, alpha_ratio, n_chars,
-        |             CAST(sum(n_chars) OVER (PARTITION BY lang
-        |                                     ORDER BY alpha_ratio DESC, doc_id
-        |                                     ROWS BETWEEN UNBOUNDED PRECEDING
-        |                                     AND CURRENT ROW) AS BIGINT)
-        |               AS cum_tokens
-        |      FROM q)
-        |SELECT doc_id, lang, alpha_ratio, n_chars, cum_tokens
-        |FROM c WHERE cum_tokens <= 10000
-        |ORDER BY doc_id""".stripMargin,
-
-    "select_temperature_budget" ->
-      """WITH n AS (SELECT source, sum(n_chars) AS nt FROM documents GROUP BY source),
-        |r AS (SELECT source, nt,
-        |             CAST(floor(sqrt((SELECT min(nt) FROM n WHERE nt > 0)::DOUBLE
-        |                             / nt::DOUBLE) * 10000) AS BIGINT) AS rate_bp
-        |      FROM n),
-        |b AS (SELECT source, (rate_bp * nt) // 10000 AS budget FROM r),
-        |q AS (SELECT doc_id, source, n_chars,
-        |             (20000 * length(regexp_replace(text, '[^a-z]', '', 'g'))
-        |                + greatest(length(text), 1)) // (2 * greatest(length(text), 1))
-        |               / 10000.0 AS alpha_ratio
-        |      FROM documents),
-        |c AS (SELECT q.source, q.n_chars, b.budget,
-        |             CAST(sum(q.n_chars) OVER (PARTITION BY q.source
-        |                                       ORDER BY q.alpha_ratio DESC, q.doc_id
-        |                                       ROWS BETWEEN UNBOUNDED PRECEDING
-        |                                       AND CURRENT ROW) AS BIGINT) AS cum
-        |      FROM q JOIN b USING (source))
-        |SELECT source, count(*)::BIGINT AS n_docs, sum(n_chars)::BIGINT AS sum_chars,
-        |       CAST(max(budget) AS BIGINT) AS budget_chars
-        |FROM c WHERE cum <= budget
-        |GROUP BY source
-        |ORDER BY source""".stripMargin,
-
-    "sample_temperature" ->
-      """WITH n AS (SELECT source, sum(n_chars) AS nt FROM documents GROUP BY source),
-        |r AS (SELECT source,
-        |             CAST(floor(sqrt((SELECT min(nt) FROM n WHERE nt > 0)::DOUBLE
-        |                             / nt::DOUBLE) * 10000) AS BIGINT) AS rate_bp
-        |      FROM n)
-        |SELECT d.source, count(*)::BIGINT AS n_docs, sum(d.n_chars)::BIGINT AS sum_chars
-        |FROM documents d JOIN r USING (source)
-        |WHERE ('0x' || substr(md5(d.doc_id::VARCHAR), 1, 8))::BIGINT % 10000 < r.rate_bp
-        |GROUP BY d.source
-        |ORDER BY d.source""".stripMargin,
-
-    "dedup_chunks" ->
-      """WITH d AS (SELECT doc_id, string_split_regex(text, ' +') AS toks FROM documents),
-        |c AS (SELECT doc_id,
-        |             doc_id * 1000000 + s // 48 AS chunk_uid,
-        |             md5(array_to_string(toks[s + 1:s + 64], ' ')) AS chunk_hash
-        |      FROM d, unnest(range(0, len(toks), 48)) u(s)),
-        |k AS (SELECT chunk_hash, min(chunk_uid) AS chunk_uid FROM c GROUP BY chunk_hash)
-        |SELECT c.doc_id, count(*)::BIGINT AS n_chunks,
-        |       sum(CASE WHEN k.chunk_uid IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_kept
-        |FROM c LEFT JOIN k ON c.chunk_uid = k.chunk_uid
-        |GROUP BY c.doc_id
-        |ORDER BY c.doc_id""".stripMargin,
-
-    // singleton-bin regime: every doc opens the next bin in BFD scan
-    // order, so bin_id = per-stratum rank by (size desc, id asc)
-    "pack_bins_exact" ->
-      """SELECT source, doc_id,
-        |       (n_chars + 100000)::BIGINT AS n_tok,
-        |       (row_number() OVER (PARTITION BY source
-        |                           ORDER BY n_chars DESC, doc_id) - 1)::BIGINT AS bin_id,
-        |       false AS oversize
-        |FROM documents
-        |ORDER BY source, bin_id""".stripMargin,
-
-    // whole-blob regime: one chunk per blob, distinct chunk hashes ≡
-    // distinct texts (FNV-64 content identity), chunk_bytes = byte length
-    "dedup_cdc_chunks_exact" ->
-      """WITH m AS (SELECT doc_id AS blob_id,
-        |                 CASE (doc_id % 3) WHEN 0 THEN 'image'
-        |                                   WHEN 1 THEN 'audio'
-        |                                   ELSE 'video' END AS media_type,
-        |                 text
-        |          FROM documents)
-        |SELECT media_type,
-        |       count(DISTINCT blob_id)::BIGINT AS n_blobs,
-        |       count(*)::BIGINT AS n_chunks,
-        |       count(DISTINCT md5(text))::BIGINT AS n_distinct_chunks,
-        |       sum(strlen(text))::BIGINT AS chunk_bytes,
-        |       ((20000 * (count(*) - count(DISTINCT md5(text))) + count(*))
-        |          // (2 * count(*))) / 10000.0 AS dup_ratio
-        |FROM m
-        |GROUP BY media_type
-        |ORDER BY media_type""".stripMargin,
-
-    // whole-blob regime: drop iff the exact payload exists in the even-id
-    // corpus — edited re-uploads (3-byte prefix) all kept, byte-identical
-    // re-uploads all dropped, odd arrivals kept unless their text equals
-    // an even-id text
-    "dedup_incremental_cdc_exact" ->
-      """WITH ev AS (SELECT DISTINCT md5(text) AS h FROM documents WHERE doc_id % 2 = 0)
-        |SELECT media_id FROM (
-        |  SELECT doc_id + 1000000 AS media_id FROM documents WHERE doc_id % 2 = 0
-        |  UNION ALL
-        |  SELECT doc_id AS media_id FROM documents
-        |  WHERE doc_id % 2 = 1 AND md5(text) NOT IN (SELECT h FROM ev)
-        |) t
-        |ORDER BY media_id""".stripMargin,
-
-    "dedup_substr_rewrite" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(text, ' +') AS toks FROM documents),
-        |g AS (SELECT doc_id, i AS pos, array_to_string(toks[i:i+7], ' ') AS gram
-        |      FROM t, unnest(range(1, len(toks) - 6)) u(i)),
-        |o AS (SELECT gram, min(doc_id) AS first_doc FROM g GROUP BY gram),
-        |cov AS (SELECT DISTINCT g.doc_id, v.p AS pos
-        |        FROM g JOIN o USING (gram), unnest(range(g.pos, g.pos + 8)) v(p)
-        |        WHERE g.doc_id > o.first_doc),
-        |tok AS (SELECT doc_id, i AS pos, toks[i] AS tok
-        |        FROM t, unnest(range(1, len(toks) + 1)) u(i)),
-        |kept AS (SELECT tok.doc_id, count(*) AS n,
-        |                string_agg(tok.tok, ' ' ORDER BY tok.pos) AS txt
-        |         FROM tok LEFT JOIN cov
-        |           ON tok.doc_id = cov.doc_id AND tok.pos = cov.pos
-        |         WHERE cov.pos IS NULL
-        |         GROUP BY tok.doc_id)
-        |SELECT t.doc_id,
-        |       len(t.toks)::BIGINT AS n_tokens,
-        |       (len(t.toks) - coalesce(kept.n, 0))::BIGINT AS n_removed_tokens,
-        |       coalesce(kept.txt, '') AS text_clean
-        |FROM t LEFT JOIN kept USING (doc_id)
-        |ORDER BY t.doc_id""".stripMargin,
-
-    "dedup_lines" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |         'subscribe to our newsletter' || chr(10) || text || chr(10) ||
-        |         'copyright example corp all rights reserved' AS page
-        |  FROM documents),
-        |s AS (SELECT doc_id, string_split(page, chr(10)) AS ls FROM d),
-        |l AS (SELECT doc_id, i + 1 AS line_no, ls[i + 1] AS line
-        |      FROM s, unnest(range(0, len(ls))) u(i)),
-        |hot AS (SELECT trim(line, ' ' || chr(13)) AS k, count(*) AS c
-        |        FROM l WHERE trim(line, ' ' || chr(13)) <> ''
-        |        GROUP BY 1 HAVING count(*) > 1),
-        |m AS (SELECT l.doc_id, l.line_no, l.line, hot.k IS NULL AS keep
-        |      FROM l LEFT JOIN hot ON trim(l.line, ' ' || chr(13)) = hot.k)
-        |SELECT doc_id, count(*)::BIGINT AS n_lines,
-        |       coalesce(sum(CASE WHEN keep THEN 0 ELSE 1 END), 0)::BIGINT AS n_removed,
-        |       coalesce(string_agg(line, chr(10) ORDER BY line_no)
-        |                  FILTER (WHERE keep), '') AS text_clean
-        |FROM m
-        |GROUP BY doc_id
-        |ORDER BY doc_id""".stripMargin,
-
-    "pipeline_e2e" ->
-      """WITH train AS (
-        |  SELECT doc_id, lang, text, string_split_regex(text, ' +') AS toks
-        |  FROM documents WHERE doc_id % 50 <> 0),
-        |q AS (
-        |  SELECT doc_id, lang, text FROM train
-        |  WHERE len(toks) BETWEEN 50 AND 100000
-        |    AND (20000 * coalesce(list_sum([length(x) for x in toks]), 0)
-        |           + greatest(len(toks), 1)) // (2 * greatest(len(toks), 1))
-        |          / 10000.0 BETWEEN 3.0 AND 10.0
-        |    AND (20000 * len([x for x in toks if regexp_matches(x, '\p{L}')])
-        |           + greatest(len(toks), 1)) // (2 * greatest(len(toks), 1))
-        |          / 10000.0 >= 0.8
-        |    AND (CASE WHEN list_contains(toks, 'the') THEN 1 ELSE 0 END +
-        |         CASE WHEN list_contains(toks, 'a')   THEN 1 ELSE 0 END +
-        |         CASE WHEN list_contains(toks, 'and') THEN 1 ELSE 0 END +
-        |         CASE WHEN list_contains(toks, 'of')  THEN 1 ELSE 0 END +
-        |         CASE WHEN list_contains(toks, 'to')  THEN 1 ELSE 0 END) >= 1),
-        |r AS (
-        |  SELECT doc_id, lang,
-        |         regexp_replace(regexp_replace(regexp_replace(regexp_replace(text,
-        |           '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}', '<EMAIL>', 'g'),
-        |           '[0-9]{3}-[0-9]{2}-[0-9]{4}', '<SSN>', 'g'),
-        |           '[0-9]{3}-[0-9]{3}-[0-9]{4}', '<PHONE>', 'g'),
-        |           '([0-9]{1,3}\.){3}[0-9]{1,3}', '<IP>', 'g') AS text
-        |  FROM q),
-        |nrm AS (
-        |  SELECT doc_id, lang,
-        |         trim(regexp_replace(lower(nfc_normalize(text)),
-        |                             '[ \t\r\n]+', ' ', 'g')) AS text
-        |  FROM r),
-        |k AS (SELECT min(doc_id) AS doc_id FROM nrm GROUP BY md5(lower(trim(text)))),
-        |dd AS (SELECT nrm.* FROM nrm JOIN k USING (doc_id)),
-        |bg AS (
-        |  SELECT DISTINCT unnest(list_distinct(
-        |           [array_to_string(toks[i:i+4], ' ') for i in range(1, len(toks) - 3)])) AS gram
-        |  FROM (SELECT string_split_regex(text, ' +') AS toks
-        |        FROM documents WHERE doc_id % 50 = 0)),
-        |tg AS (
-        |  SELECT doc_id, unnest(list_distinct(
-        |           [array_to_string(toks[i:i+4], ' ') for i in range(1, len(toks) - 3)])) AS gram
-        |  FROM (SELECT doc_id, string_split_regex(text, ' +') AS toks FROM dd)),
-        |contam AS (SELECT DISTINCT tg.doc_id FROM tg JOIN bg USING (gram)),
-        |decon AS (SELECT * FROM dd WHERE doc_id NOT IN (SELECT doc_id FROM contam)),
-        |ftoks AS (SELECT doc_id, string_split_regex(text, ' +') AS t FROM decon),
-        |funi AS (SELECT unnest(t) AS w FROM ftoks),
-        |fucnt AS (SELECT w, count(*) AS uc FROM funi GROUP BY w),
-        |fv AS (SELECT count(*) AS v FROM fucnt),
-        |fbg AS (SELECT doc_id, array_to_string(t[i:i+1], ' ') AS b, t[i] AS w1
-        |        FROM ftoks, unnest(range(1, len(t))) u(i)),
-        |fbcnt AS (SELECT b, count(*) AS bc FROM fbg GROUP BY b),
-        |fdb AS (SELECT doc_id, b, w1, count(*) AS c FROM fbg GROUP BY doc_id, b, w1),
-        |fscore AS (
-        |  SELECT fdb.doc_id,
-        |         round(sum(fdb.c * (ln(fbcnt.bc + 1.0) - ln(fucnt.uc + 1.0 * fv.v)))
-        |               / sum(fdb.c), 4) AS avg_logp
-        |  FROM fdb JOIN fbcnt USING (b) JOIN fucnt ON fdb.w1 = fucnt.w CROSS JOIN fv
-        |  GROUP BY fdb.doc_id),
-        |fsq AS (SELECT doc_id, CAST(round(avg_logp * 10000, 0) AS BIGINT) AS scq
-        |        FROM fscore),
-        |fthr AS (SELECT CAST(round(quantile_cont(scq, 0.5) * 4, 0) AS BIGINT) AS tq
-        |         FROM fsq),
-        |fluent AS (SELECT decon.* FROM decon JOIN fsq USING (doc_id), fthr
-        |           WHERE fsq.scq * 4 >= fthr.tq),
-        |mixed AS (
-        |  SELECT * FROM fluent
-        |  WHERE ('0x' || substr(md5(doc_id::VARCHAR), 1, 4))::BIGINT % 100 <
-        |        CASE lang WHEN 'en' THEN 100 WHEN 'de' THEN 50 WHEN 'fr' THEN 50
-        |                  WHEN 'es' THEN 25 WHEN 'zh' THEN 10 ELSE 100 END),
-        |final AS (
-        |  SELECT doc_id, lang, text,
-        |         CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'valid'
-        |              ELSE 'test' END AS split
-        |  FROM (SELECT doc_id, lang, text,
-        |          ('0x' || substr(md5(doc_id::VARCHAR), 1, 4))::BIGINT % 100 AS b
-        |        FROM mixed)),
-        |fc AS (SELECT doc_id, lang, split, string_split_regex(text, ' +') AS toks
-        |       FROM final),
-        |c AS (SELECT doc_id, lang, split,
-        |             doc_id * 1000000 + s // 48 AS chunk_uid,
-        |             md5(array_to_string(toks[s + 1:s + 64], ' ')) AS chunk_hash
-        |      FROM fc, unnest(range(0, len(toks), 48)) u(s)),
-        |kc AS (SELECT chunk_hash, min(chunk_uid) AS chunk_uid FROM c GROUP BY chunk_hash)
-        |SELECT lang, split, count(DISTINCT c.doc_id)::BIGINT AS n_docs,
-        |       count(*)::BIGINT AS n_chunks,
-        |       sum(CASE WHEN kc.chunk_uid IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-        |         AS n_chunks_kept
-        |FROM c LEFT JOIN kc ON c.chunk_uid = kc.chunk_uid
-        |GROUP BY lang, split
-        |ORDER BY lang, split""".stripMargin
-  )
+  /** Evaluated per call, after the queries ran: see [[Registry.all]]. */
+  def oracleSql: Map[String, String] = Registry.all.oracleSql
 }

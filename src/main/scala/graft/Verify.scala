@@ -3,7 +3,7 @@ import org.apache.spark.sql.{Row, SparkSession}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * plus oracle_sql.json, for the DuckDB oracle compare.
   *
   * `--digest <sfDir> <outFile> [queryName...]` writes golden digests
   * instead: one [[digest]] line per query (see `digests/`).

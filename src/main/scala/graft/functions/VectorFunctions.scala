@@ -8,9 +8,9 @@ import org.apache.spark.sql.types.DoubleType
   * primitive — is a native codegen'd Catalyst expression
   * ([[DotProduct]]); the rest composes it. No UDFs, no serialization.
   *
-  * Loop order is ascending-index in both the native expression and the HOF
-  * fallback, so results are deterministic and match a sequential reference
-  * implementation (DuckDB's list_cosine_similarity) to ~1e-16.
+  * The native expression loops in ascending index order, so results are
+  * deterministic and match a sequential reference implementation (DuckDB's
+  * list_cosine_similarity) to ~1e-16.
   */
 object VectorFunctions {
 
@@ -20,18 +20,10 @@ object VectorFunctions {
   /** Native codegen'd dot product (inputs must be array<double>). */
   def dot(a: Column, b: Column): Column = DotProduct.dot(a, b)
 
-  /** HOF formulation, kept as a cross-check for the native expression. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Cosine similarity = dot(a,b) / (|a| * |b|). Inputs must be non-zero. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2Norm(a) * l2Norm(b))
-
-  /** Squared L2 distance (cheaper than sqrt for nearest-neighbor ranking). */
-  def l2Sq(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
 
   /** Symmetric int8 quantization: struct(scale, array<tinyint>) with
     * `scale = max|x| / 127`, `q_i = round(x_i / scale)`. Cuts embedding

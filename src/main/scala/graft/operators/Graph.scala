@@ -55,6 +55,13 @@ object Graph {
     * and per-iteration jobs at call time, not lazily at the caller's
     * first action. Plan auditors and callers that construct-but-discard
     * pay full execution.
+    *
+    * In this fixed-depth mode every step is an EAGER `localCheckpoint`: one
+    * Spark job per step runs when the DataFrame is built (when
+    * `SparkEntry.queries(...)` is invoked), so a harness that times only
+    * the caller's action under-measures it. The step blocks are pinned
+    * with truncated lineage: a lost executor block fails later actions on
+    * the returned DataFrame instead of being recomputed.
     */
   def pageRank(edges: DataFrame, iters: Int = 3): DataFrame = {
     require(iters >= 1, "pageRank: iters must be >= 1")

@@ -55,40 +55,6 @@ object Profile {
     one.select(explode(array(entries: _*)).as("p")).select("p.*")
   }
 
-  /** Per-group sufficient statistics for covariance / correlation / OLS
-    * regression: `n, Σx, Σy, Σx², Σy², Σxy` — the mergeable "stat state"
-    * a pipeline keeps per segment so slope/corr/r² are derivable later
-    * WITHOUT rescanning (merge two segments' states by summing them;
-    * same contract as `Relational.aggState`).
-    *
-    * Callers pass INTEGER-valued columns (pre-quantized micro-units);
-    * everything downstream is exact 64-bit arithmetic, so the state is
-    * bit-identical across engines and replay-safe. Spark's own
-    * `corr`/`regr_slope` fold to a float per group immediately — fine for
-    * one answer, useless as state.
-    *
-    * One hash aggregate (map-side combined): the exchange carries six
-    * longs per (group, partition). Overflow headroom is the caller's
-    * contract: |x|≤a, |y|≤b over N rows needs N·a², N·b², N·a·b < 2⁶³ —
-    * e.g. quantities ≤50 vs basis points ≤10⁴ holds to ~6×10⁹ rows
-    * (sf1000) with 10³× slack on the x side.
-    */
-  def regressionComponents(
-      df: DataFrame,
-      keys: Seq[Column],
-      x: Column,
-      y: Column): DataFrame = {
-    val xl = x.cast("long")
-    val yl = y.cast("long")
-    df.groupBy(keys: _*).agg(
-      count(lit(1)).as("n"),
-      sum(xl).as("sum_x"),
-      sum(yl).as("sum_y"),
-      sum(xl * xl).as("sum_xx"),
-      sum(yl * yl).as("sum_yy"),
-      sum(xl * yl).as("sum_xy"))
-  }
-
   /** Declarative data-quality gate (the Deequ/Great-Expectations check a
     * pipeline runs before promoting a new drop): evaluate a set of named
     * constraints and emit one row per constraint —

@@ -51,12 +51,6 @@ object TextAnalysis {
     graft.functions.Shingles.ngramsAll(wsTokens(text), n)
   }
 
-  /** Stopword ratio: fraction of tokens in `stopwords`. */
-  def stopwordRatio(text: Column, stopwords: Seq[String]): Column = {
-    val t = wsTokens(text)
-    size(filter(t, tok => tok.isInCollection(stopwords))) / greatest(size(t), lit(1)).cast("double")
-  }
-
   /** Exact 4-decimal round-half-up of the integer ratio num/den, computed
     * entirely in 64-bit integer arithmetic:
     * `(2·10⁴·num + den) DIV (2·den) / 10⁴` (Spark `DIV` ≡ DuckDB `//`).

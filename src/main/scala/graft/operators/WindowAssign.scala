@@ -42,29 +42,6 @@ object WindowAssign {
     df.withColumn("window_id", floor((row_number().over(w) - lit(1)) / lit(size)))
   }
 
-  /** Aligned tumbling window over `ts`; adds `window_start` truncated to the
-    * interval grid anchored at the epoch (matches FixedTimeWindow's
-    * last_read + k*interval grid, window.py:254-267).
-    */
-  def fixedTimeWindow(df: DataFrame, tsCol: Column, intervalSeconds: Long): DataFrame = {
-    val secs = unix_timestamp(tsCol)
-    df.withColumn(
-      "window_start",
-      timestamp_seconds(floor(secs / intervalSeconds) * intervalSeconds))
-  }
-
-  /** The empty-window spine: one row per interval between min and max ts,
-    * including intervals with no data (FixedTimeWindow emit_empty=True,
-    * window.py:251). Left-join aggregated data onto this spine.
-    */
-  def intervalSpine(df: DataFrame, tsCol: Column, intervalSeconds: Long): DataFrame = {
-    df.agg(
-        (floor(unix_timestamp(min(tsCol)) / intervalSeconds) * intervalSeconds).as("lo"),
-        (floor(unix_timestamp(max(tsCol)) / intervalSeconds) * intervalSeconds).as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"), lit(intervalSeconds))).as("epoch_s"))
-      .select(timestamp_seconds(col("epoch_s")).as("window_start"))
-  }
-
   /** Relaxed window batch form: all not-yet-consumed rows at or before the
     * cutoff (window.py:281-302 — no lower bound, catches stragglers).
     */

@@ -22,8 +22,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - an explicit limit / top-k.
   * A broadcast side that is a RAW RELATION (scan with no agg between it and
   * the exchange) is the dangerous shape — it must be on the documented
-  * allowlist below, which names the oracle-anchor / bounded-by-contract
-  * exceptions one by one. The test fails both ways: an un-allowlisted
+  * allowlist below (each query spec's `allPairsReason`), which names the
+  * oracle-anchor / bounded-by-contract exceptions one by one. The test fails both ways: an un-allowlisted
   * offender fails, and a stale allowlist entry (query no longer has the
   * node) fails — the list cannot rot.
   */
@@ -36,23 +36,12 @@ class PlanGuardSuite extends AnyFunSuite {
   import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
   import org.apache.spark.sql.catalyst.optimizer.BuildLeft
 
-  /** Queries whose plan legitimately carries an all-pairs node. Value =
-    * why it is safe (oracle anchor with a scale companion, or a broadcast
-    * side bounded by a contract the plan cannot express).
+  /** Queries whose plan legitimately carries an all-pairs node, from each
+    * spec's `allPairsReason`: why it is safe (oracle anchor with a scale
+    * companion, or a broadcast side bounded by a contract the plan cannot
+    * express).
     */
-  private val allowlist: Map[String, String] = Map(
-    "embedding_neardup" ->
-      "exact O(n^2) cosine oracle anchor (Explain.scaleNotes); scale path embedding_neardup_lsh",
-    "similarity_knn_join" ->
-      "corpus-as-queries broadcast oracle anchor; scale path similarity_knn_join_lsh (bucketed, nothing broadcast)",
-    "similarity_topk" ->
-      "query batch broadcast into the corpus probe — bounded by the ANN serving contract (batch << corpus); the corpus side never broadcasts",
-    "similarity_pq_topk" ->
-      "per-query LUT broadcast — |queries| x 16-subspace table, ANN serving contract",
-    "similarity_pq_topk_exact" ->
-      "same per-query LUT broadcast as similarity_pq_topk; oracle-duty exact regime, corpus bounded to 200 vectors by construction",
-    "decontaminate_semantic" ->
-      "eval-suite broadcast into the NLJ probe — eval sets bounded by contract; n-gram decontaminate is the equi-join scale path")
+  private val allowlist: Map[String, String] = graft.queries.Registry.all.allPairsReasons
   // (select_cluster_balanced briefly needed an entry for the distributed-
   // Lloyd centroid NLJ; its shipped query now uses the sampled-fit path —
   // single codegen'd broadcast-codebook assignment, no NLJ in the plan)
