@@ -52,6 +52,17 @@ import org.apache.spark.sql.SparkSession
   * itself — "pass 1 was uniformly 1.5× pass 2" reads as a regime shift,
   * "one query stalled once" reads as a GC pause — without re-running
   * anything.
+  *
+  * Layer record: every one of those samples is also recorded, while it
+  * runs, into target/bench_layers.json by [[BenchLayers]] — jobs and
+  * their time, stages, tasks, executor run and CPU time against scheduler
+  * delay, shuffle, spill and scan bytes, the write's planning phases and
+  * the non-zero `SQLMetrics` of every executed operator. One line per query holds its
+  * samples in the order of its bench_passes.json entry, each labelled
+  * (`pass1`, `pass2`, `pass3`, `retime1`, `retime2`) with its wall time,
+  * so a slow sample reads as "more stages", "scheduler-bound" or "one
+  * operator spilled" without re-running anything. The file is written
+  * after the last sample, once every sampled job's end event has arrived.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -96,10 +107,11 @@ object Bench {
     // surface them in the JSON so the caller sees them without reading
     // stderr.
     val failed = scala.collection.mutable.LinkedHashSet[String]()
-    def timedPass(): Seq[(String, Double)] =
+    val layers = new BenchLayers(spark)
+    def timedPass(label: String): Seq[(String, Double)] =
       selected.toSeq.sortBy(_._1).map { case (name, fn) =>
         val t0 = System.nanoTime()
-        try materialize(fn(spark, sfDir))
+        try layers.sample(s"$name/$label")(fn(spark, sfDir))(materialize)
         catch { case e: Throwable =>
           failed += name
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
@@ -126,10 +138,10 @@ object Bench {
     externalCpuLoad(): Unit // prime the tick counters
 
     System.gc()
-    val pass1 = timedPass()
+    val pass1 = timedPass("pass1")
     val externalMid = externalCpuLoad()
     System.gc()
-    val pass2 = timedPass().toMap
+    val pass2 = timedPass("pass2").toMap
     // sampled again AFTER pass 2: a workload starting mid-pass-2 would
     // otherwise inflate its times with contended=false and no third pass —
     // exactly the blind spot that cost r10/r12 a triage round each
@@ -142,7 +154,7 @@ object Bench {
     // and min-of-3 then recovers the idle number instead of recording a
     // contaminated total that costs a round of triage.
     val pass3: Map[String, Double] =
-      if (contended) { System.gc(); timedPass().toMap } else Map.empty
+      if (contended) { System.gc(); timedPass("pass3").toMap } else Map.empty
     // Per-query disagreement retime: min-of-2 on an IDLE box still lets a
     // one-off stall (GC pause, page-cache miss burst) survive as a query's
     // reported time — r13 recorded q_histogram_equidepth at 1.74× its idle
@@ -182,7 +194,7 @@ object Bench {
           !converged(samplesOf(name) ++ extra)) {
         val t0 = System.nanoTime()
         try {
-          materialize(selected(name)(spark, sfDir))
+          layers.sample(s"$name/retime${tries + 1}")(selected(name)(spark, sfDir))(materialize)
           extra ::= (System.nanoTime() - t0) / 1e9
         } catch {
           case e: Throwable =>
@@ -200,6 +212,9 @@ object Bench {
         retimes.getOrElse(name, Nil)).min
     }
     val loadPost = loadAvg()
+    if (!layers.settle(materialize))
+      System.err.println("[bench] the layer record is incomplete: Spark events still missing after " +
+        s"${BenchLayers.SettleTimeoutMs / 1000} s")
     // The driver keeps only the LAST ~2000 chars of stdout. With 125
     // queries the full per-query map is ~3.5 KB, so the line was always
     // truncated mid-JSON and both r9/r10 recorded "parsed": null. The full
@@ -240,6 +255,17 @@ object Bench {
     }
     java.nio.file.Files.write(java.nio.file.Paths.get("target/bench_passes.json"),
       (passesJson + "\n").getBytes("UTF-8"))
+    // the layer record, one line per query, samples in bench_passes order
+    val layersJson = pass1.map { case (name, _) =>
+      val rs = retimes.getOrElse(name, Nil)
+      val labels = Seq("pass1", "pass2") ++ (if (contended) Seq("pass3") else Nil) ++
+        rs.indices.map(i => s"retime${i + 1}")
+      labels.zip(samplesOf(name) ++ rs).map { case (label, t) =>
+        s"""{"sample":"$label","wall_s":${f"$t%.3f"},${layers.fields(s"$name/$label")}}"""
+      }.mkString("\"" + name + "\":[", ",", "]")
+    }.mkString(s"""{"sf":"$sfDir","cpus":$cpus,"queries":{\n""", ",\n", "\n}}\n")
+    java.nio.file.Files.write(java.nio.file.Paths.get("target/bench_layers.json"),
+      layersJson.getBytes("UTF-8"))
     // FULL-SUITE sessions additionally archive both artifacts into the
     // git-tracked bench/ dir: target/ is uncommitted and single-query
     // iteration runs overwrite it, which is exactly how the r18 recorded

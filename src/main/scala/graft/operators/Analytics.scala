@@ -121,16 +121,19 @@ object Analytics {
     // Beyond the envelope the guard FAILS LOUD per row with the DECIMAL
     // advice instead of risking silent wraparound under non-ANSI
     // sessions (ANSI mode would raise on the wrap anyway, just less
-    // helpfully). Nulls pass through the guard unchanged (sum/count skip
-    // them exactly as the decimal form did).
+    // helpfully). It checks the value BEFORE the long cast: with ANSI
+    // off, an out-of-range DECIMAL wraps on the cast (2^64 + 5 becomes
+    // 5) and would pass a check of the cast value silently. Nulls pass
+    // through the guard unchanged (sum/count skip them exactly as the
+    // decimal form did).
     val bound = math.floor(math.sqrt(Long.MaxValue.toDouble / 2.0) / frameRows).toLong
     def guarded(c: Column, name: String): Column =
       when(assert_true(abs(coalesce(c, lit(0L))) <= bound,
         lit(s"rollingCorr: |$name| exceeds the LONG-moment envelope " +
           s"(${bound} at frameRows=$frameRows) — quantize the series " +
-          "coarser or restore the DECIMAL(38,0) moment variant")).isNull, c)
-    val x = guarded(xCol.cast("long"), "x")
-    val y = guarded(yCol.cast("long"), "y")
+          "coarser or restore the DECIMAL(38,0) moment variant")).isNull, c.cast("long"))
+    val x = guarded(xCol, "x")
+    val y = guarded(yCol, "y")
     val n   = count(lit(1)).over(w)
     val sx  = sum(x).over(w)
     val sy  = sum(y).over(w)

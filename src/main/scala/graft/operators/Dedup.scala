@@ -392,7 +392,7 @@ object Dedup {
       maxBucket: Option[Long] = None): DataFrame = {
     // same decode-once stage boundary as imageNearDupPairs (8-byte hash
     // per clip through the boundary; measured 1.5 s of the 3.0 s full
-    // run at sf0.1 was the second decode pass, Prof audiostage)
+    // run at sf0.1 was the second decode pass; SCALE.md, r19)
     val hashed = Multimodal.perceptualAudioHashes(
       media.select(col(idCol).as("media_id"), col(binCol).as("content")))
       .localCheckpoint(false)

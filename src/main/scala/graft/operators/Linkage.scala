@@ -47,8 +47,8 @@ import org.apache.spark.sql.functions._
   */
 object Linkage {
 
-  /** Shared defaults — referenced by the `graft.Prof linkstage` stage
-    * replica so the profiler cannot silently drift from the operator.
+  /** Shared defaults of the blocking parameters: one value for every
+    * method that takes them.
     */
   val DefaultGramWidth = 4
   val DefaultTailLen = 8

@@ -207,10 +207,18 @@ object GraphQueries {
     * the public string form at output. NOT used where the algorithm
     * compares vertex ids themselves across the s/c namespaces (e.g.
     * graph_components' min-label winner is defined on the string order).
+    * The coding is a bijection only for keys 0 ≤ k < 2^62: each key is
+    * checked per row, in the pass that codes it, and a key outside fails
+    * the query instead of colliding or wrapping.
     */
-  private def supplierVertex(k: Column): Column = k * 2
+  private[graft] def supplierVertex(k: Column): Column = vertexKey(k, "supplier") * 2
 
-  private def customerVertex(k: Column): Column = k * 2 + 1
+  private[graft] def customerVertex(k: Column): Column = vertexKey(k, "customer") * 2 + 1
+
+  private def vertexKey(k: Column, side: String): Column =
+    when(assert_true(coalesce(k, lit(0L)).between(0L, (1L << 62) - 1),
+      lit(s"trade graph: a $side key is outside 0 <= k < 2^62, the domain of the 2k / 2k+1 vertex coding"))
+      .isNull, k)
 
   private def tradeVertexStr(v: Column): Column =
     concat(when(v.bitwiseAND(lit(1L)) === 0L, lit("s")).otherwise(lit("c")),

@@ -369,7 +369,7 @@ object MultimodalQueries {
     // through the RIFF frame walk → per-frame dHash → packed-id banding.
     // Census: every re-encode must link to its original on ALL 3 frames
     // (spec-asserted). Parameters are MEASURED, not guessed (the
-    // image_neardup fixture-density lesson, Prof videodensity at ×3):
+    // image_neardup fixture-density lesson; SCALE.md's census at ×3):
     // Hamming ≤ 10 / minFrames 2 admitted n²-growing cross-text pairs
     // (12.3k at ×3, 132k at ×10 — smooth-plaid frame hashes land within
     // 10 bits at ~1e-3 rates); Hamming ≤ 6 + minFrames 3 keeps 7500/7500

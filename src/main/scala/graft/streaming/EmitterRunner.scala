@@ -289,7 +289,9 @@ object EmitterRunner {
           byId.getOrElse(id, Nil).map(m => Row(m.stream, m.created, m.data)), MbStream.MessageSchema)),
           maxWorkers)
         if (windows.nonEmpty) {
-          lastMaxWindow.set(ids.last)
+          // monotone: a late batch's older windows must not lower the mark,
+          // or the next batch re-emits ids up to it as empty gap windows
+          lastMaxWindow.accumulateAndGet(ids.last, math.max(_, _))
           persist(windows, batchId)
         }
         carry.foreach(CountCarry.write(stream, batchId, _, retain))
@@ -321,17 +323,4 @@ object EmitterRunner {
         }
       } finally pool.shutdownNow()
     }
-
-  /** Drain-and-stop: process everything currently buffered, then return
-    * (the deterministic test/batch mode; reference tests' produce-sleep-stop
-    * choreography collapses to Trigger.AvailableNow + awaitTermination).
-    */
-  def drain(
-      stream: MbStream,
-      strategy: Strategy,
-      emitFn: (Long, DataFrame) => Unit,
-      keep: Boolean = false): Unit = {
-    val q = start(stream, strategy, emitFn, keep, Trigger.AvailableNow())
-    q.awaitTermination()
-  }
 }

@@ -106,6 +106,21 @@ class AnalyticsSuite extends AnyFunSuite {
       s"expected the envelope guard to raise, got: ${ex.getMessage}")
   }
 
+  test("rollingCorr: the envelope guard checks the value before its long cast (ANSI off)") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.ansi.enabled", "false")
+    // 2^64 + 5: beyond LONG, and beyond the envelope
+    val hot = s.sql("SELECT 'k' AS k, id AS x, CAST('18446744073709551621' AS DECIMAL(38,0)) AS y " +
+      "FROM range(1, 3)")
+    // the premise: without ANSI the cast wraps it to 5, inside the envelope
+    assert(hot.select(col("y").cast("long")).as[Long].collect().toSeq === Seq(5L, 5L))
+    val ex = intercept[Exception] {
+      hot.withColumn("c", Analytics.rollingCorr("k", Seq(col("x")), col("x"), col("y"), 20)).collect()
+    }
+    assert(ex.getMessage.contains("LONG-moment envelope"),
+      s"expected the envelope guard to raise, got: ${ex.getMessage}")
+  }
+
   test("rollingCorr: |r| <= 1 on real data wherever defined") {
     val ev = Tables.events(spark, sf)
     val out = ev.withColumn("c", Analytics.rollingCorr("user_id",

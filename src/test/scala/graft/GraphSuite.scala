@@ -17,6 +17,19 @@ class GraphSuite extends AnyFunSuite {
     Graph.pageRank(edges.toDF("src", "dst"), iters)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
+  test("trade-graph vertex coding: keys in 0 <= k < 2^62 code to 2k / 2k+1; a key outside raises") {
+    import graft.queries.GraphQueries.{customerVertex, supplierVertex}
+    val top = (1L << 62) - 1
+    val coded = Seq(0L, 7L, top).toDF("k")
+      .select(supplierVertex(col("k")), customerVertex(col("k"))).as[(Long, Long)].collect().toSeq
+    assert(coded === Seq((0L, 1L), (14L, 15L), (2 * top, 2 * top + 1)))
+    for (k <- Seq(-1L, 1L << 62, Long.MaxValue); (side, code) <- Seq(
+        ("supplier", supplierVertex _), ("customer", customerVertex _))) {
+      val ex = intercept[Exception](Seq(1L, k).toDF("k").select(code(col("k"))).collect())
+      assert(ex.getMessage.contains(s"a $side key is outside 0 <= k < 2^62"), s"k=$k: ${ex.getMessage}")
+    }
+  }
+
   test("mass conservation: ranks sum to Scale up to integer-floor loss") {
     val edges = Seq("a" -> "b", "b" -> "c", "c" -> "a", "a" -> "c")
     val m = ranksOf(edges)

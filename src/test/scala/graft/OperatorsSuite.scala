@@ -163,7 +163,7 @@ class OperatorsSuite extends AnyFunSuite {
     import spark.implicits._
     // the all-black-thumbnail shape: every row shares one hash, so every
     // band bucket holds the whole population and the ungated self-join
-    // is n^2 (measured in SCALE.md's hot-bucket table; Prof hotbucket)
+    // is n^2 (measured in SCALE.md's r20 hot-bucket table)
     val hot = (0L until 500L).map((_, 0x5a5a17a9L)).toDF("id", "h")
     val ex = intercept[Exception] {
       Dedup.hammingBandPairs(hot, "id", "h", maxHamming = 6,

@@ -98,4 +98,28 @@ class PlanGuardSuite extends AnyFunSuite {
     assert(stale.isEmpty,
       s"stale allowlist entries (plan no longer has the node — remove them): $stale")
   }
+
+  test("text_trigram_ppl_kn: the Kneser-Ney gram subtree collapses to 2 documents scans and 7 reused exchanges") {
+    // Pins knParts' no-op filters on the trigram counts (the isNotNull keys
+    // and the `__c3 >= 1` tautology): without them each consumer pushes its
+    // own filter or projection below the gram exchange, and the subtree is
+    // scanned once per consumer instead of being reused. Counted on the
+    // executed adaptive plan, not diffed as text: plan text order is not
+    // stable within a JVM. The documents are read through a private path:
+    // OperatorsSuite caches the canonical relation on this shared session,
+    // and the CacheManager would substitute that cache into this plan.
+    val dir = java.nio.file.Files.createTempDirectory("graft-kn-plan")
+    java.nio.file.Files.createSymbolicLink(dir.resolve("documents.parquet"),
+      java.nio.file.Paths.get(sf, "documents.parquet"))
+    val df = SparkEntry.queries("text_trigram_ppl_kn")(spark, dir.toString)
+    df.collect()
+    val nodes = BenchLayers.nodes(df.queryExecution.executedPlan)
+    val documentScans = nodes.count {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.relation.location.rootPaths.exists(_.getName == "documents.parquet")
+      case _ => false
+    }
+    val reused = nodes.count(_.isInstanceOf[org.apache.spark.sql.execution.exchange.ReusedExchangeExec])
+    assert((documentScans, reused) === (2, 7), "(documents scans, ReusedExchange nodes)")
+  }
 }

@@ -1071,6 +1071,20 @@ class StreamingSuite extends AnyFunSuite {
     assert(sink.toSeq === Seq(0L -> Seq("""{"i":0}"""), 1L -> Seq("""{"i":2}""")))
   }
 
+  test("emitEmpty: a late micro-batch does not lower the high-water mark, so no window is emitted twice") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("late-mark")
+    val base = 1699999980L // aligned to the 60 s grid
+    val w = base / 60
+    // one file per micro-batch, at windows W+10, W (late) and W+12
+    writeInOrder(st, Seq(10L, 0L, 12L).map(k => Seq((s"""{"w":$k}""", new Timestamp((base + 60 * k) * 1000L)))))
+    val (sink, fn) = collector()
+    mb.streaming(st.name).interval(60, relaxed = false).emitEmpty(true).maxFilesPerTrigger(1).emit(fn).run()
+    val emitted = sink.toSeq.map { case (id, rows) => (id - w, rows) }
+    assert(emitted.map(_._1).sorted === Seq(0L, 10L, 11L, 12L), s"every id reaches emitFn once: $emitted")
+    assert(emitted.collect { case (id, rows) if rows.isEmpty => id } === Seq(11L), s"W+11 is the only gap window: $emitted")
+  }
+
   test("status reports the rows the emitter read in its latest micro-batch") {
     val mb = Minibatch(spark, freshRoot())
     val st = mb.stream("counted")
