@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.net.URI
-import java.nio.file.{Path, Paths}
 import java.sql.Timestamp
 import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
@@ -11,8 +9,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.parquet.HadoopReadOptions
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.streaming.checkpointing.OffsetSeqLog
-import org.apache.spark.sql.execution.streaming.runtime.{FileStreamSourceLog, FileStreamSourceOffset, SerializedOffset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StructType}
@@ -28,24 +24,27 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * windows table (window.py:126-136).
   *
   * Every strategy windows on the driver: each micro-batch is read there
-  * (see [[BatchFiles]]: its buffer files come from the query's own
-  * checkpoint logs and are decoded by [[MbStream.readBufferFile]], so a
-  * trigger runs no Spark job) and cut by [[CountCarry.step]] (count
-  * strategies, carried across batches as described there) or [[cutTime]].
+  * (its buffer files are the entry [[BufferSource]] logged for it, decoded
+  * by [[MbStream.readBufferFile]], so a trigger runs no Spark job) and cut
+  * by [[CountCarry.step]] (count strategies, carried across batches as
+  * described there) or [[cutTime]].
   * Each window, and each `emitEmpty` gap window, reaches `emitFn` in id
   * order as a local DataFrame with [[MbStream.MessageSchema]] in arrival
   * order, so emitting starts no Spark job either; only `keep(true)` runs
   * one, the kept-history write. No cache, no shuffle, no state store. The
   * driver holds one micro-batch at a time; `maxFilesPerTrigger` bounds it.
   *
-  * Spark still plans the file-source scan of each micro-batch for
-  * `foreachBatch`, but never executes it, so `lastProgress.numInputRows`
-  * of a graft emitter reads 0; [[lastInputRows]] holds the engine's own
-  * count, which [[Minibatch.status]] reports.
+  * Spark keeps the trigger loop, the `offsets`/`commits` logs and the
+  * progress events, over [[BufferSource]]: each trigger lists the buffer
+  * with NIO, and Spark's scan of a batch has no partitions, so it lists,
+  * resolves and plans no parquet scan. `lastProgress.numInputRows` of a
+  * graft emitter reads 0; [[lastInputRows]] holds the engine's own count,
+  * which [[Minibatch.status]] reports.
   *
-  * The checkpoint logs a trigger writes (`sources/0`, `offsets`,
-  * `commits`) go through [[LocalCheckpointFileManager]], which [[start]]
-  * registers on the session unless it already names a manager of its own.
+  * Spark's checkpoint logs (`offsets`, `commits`) go through
+  * [[LocalCheckpointFileManager]], which [[start]] registers on the session
+  * unless it already names a manager of its own; the source writes its
+  * `graft-source` log through NIO itself.
   */
 object EmitterRunner {
 
@@ -86,46 +85,18 @@ object EmitterRunner {
   case object RelaxedTimeWindow extends Strategy
 
   /** Open the buffer as a stream (the reference's polling `query()` over
-    * unprocessed docs — offsets instead of `processed` flags).
-    * `maxFilesPerTrigger` caps each micro-batch (the reference's
-    * producer-side Batcher size / poll-batch tuning, SURVEY §1.3: Spark's
-    * micro-batch sizing knob subsumes it).
+    * unprocessed docs — offsets instead of `processed` flags) through
+    * [[BufferSource]]; the frame carries no rows, as each batch is read on
+    * the driver. `maxFilesPerTrigger` caps each micro-batch (the
+    * reference's producer-side Batcher size / poll-batch tuning, SURVEY
+    * §1.3: Spark's micro-batch sizing knob subsumes it).
     */
-  def readBuffer(stream: MbStream, maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val reader = stream.spark.readStream
-      .schema(MbStream.MessageSchema)
-      // tolerate the retention loop deleting aged files under a running
-      // emitter (same concurrency the reference's autoclear thread has)
-      .option("ignoreMissingFiles", "true")
+  private def readBuffer(stream: MbStream, maxFilesPerTrigger: Option[Int]): DataFrame = {
+    val reader = stream.spark.readStream.format(classOf[BufferSource].getName)
+      .option("path", stream.bufferDir)
+      .option("log", BufferSource.logDir(stream.checkpointsDir).toString)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(stream.bufferDir)
-  }
-
-  /** The buffer files of each micro-batch of an emitter, read from its own
-    * checkpoint logs: batch `b` holds the file-source log entries in
-    * `(logOffset(b - 1), logOffset(b)]`, the offsets being those of
-    * `checkpoints/offsets`, which is exactly the set `FileStreamSource`
-    * scans for it. Every `compactInterval`-th source-log batch (10 by
-    * default) keeps its entries only in `<batch>.compact`, which lists
-    * every file the source has seen, so reading such a batch grows with
-    * the stream's history, as Spark's own compaction write does.
-    */
-  private final class BatchFiles(stream: MbStream) {
-    private val offsets = new OffsetSeqLog(stream.spark, s"${stream.checkpointsDir}/offsets")
-    private val sources =
-      new FileStreamSourceLog(FileStreamSourceLog.VERSION, stream.spark, s"${stream.checkpointsDir}/sources/0")
-
-    private def logOffset(batchId: Long): Long =
-      if (batchId < 0) -1L
-      else offsets.get(batchId)
-        .getOrElse(throw new IllegalStateException(s"stream '${stream.name}': no offsets for batch $batchId"))
-        .offsets.headOption.flatten.fold(-1L)(o => FileStreamSourceOffset(SerializedOffset(o.json)).logOffset)
-
-    def apply(batchId: Long): Seq[Path] = {
-      val (from, to) = (logOffset(batchId - 1), logOffset(batchId))
-      if (to <= from) Nil
-      else sources.get(Some(from + 1), Some(to)).toSeq.flatMap(_._2).map(e => Paths.get(new URI(e.path)))
-    }
+    reader.load()
   }
 
   // keyed by query id, which the checkpoint keeps: one entry per checkpoint,
@@ -220,13 +191,12 @@ object EmitterRunner {
       case CountWindowTimeout(n, secs) => Some((n, Some(secs * 1000L)))
       case _ => None
     }
+    BufferSource.requireOwnLog(stream)
     if (count.nonEmpty) CountCarry.requireResumable(stream)
     val spark = stream.spark
     if (spark.conf.getOption(LocalCheckpointFileManager.ClassKey).isEmpty)
       spark.conf.set(LocalCheckpointFileManager.ClassKey, classOf[LocalCheckpointFileManager].getName)
     val retain = spark.conf.get("spark.sql.streaming.minBatchesToRetain").toInt
-    // the logs open on the query's thread, after Spark has set the checkpoint up
-    lazy val files = new BatchFiles(stream)
     val readOpts = HadoopReadOptions.builder(spark.sparkContext.hadoopConfiguration).build()
     val rowsRead = new AtomicLong(-1L)
     def gapIds(ids: Seq[Long]): Seq[Long] = strategy match {
@@ -275,7 +245,8 @@ object EmitterRunner {
       .trigger(trigger)
       .option("checkpointLocation", stream.checkpointsDir)
       .foreachBatch { (_: DataFrame, batchId: Long) =>
-        val msgs = files(batchId).flatMap(MbStream.readBufferFile(_, readOpts))
+        // a file deleted since the source took it reads as no rows
+        val msgs = BufferSource.batchFiles(stream, batchId).flatMap(MbStream.readBufferFile(_, readOpts))
         rowsRead.set(msgs.size)
         val (windows, carry) = count match {
           case Some((n, maxAgeMs)) =>

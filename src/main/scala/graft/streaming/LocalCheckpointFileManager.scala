@@ -13,8 +13,8 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
 
 /** A `CheckpointFileManager` that writes, lists and deletes the checkpoint
-  * logs of `file:` paths (`offsets`, `commits`, `sources/0`, `metadata`)
-  * through `java.nio`, registered by [[EmitterRunner.start]] under Spark's
+  * logs of `file:` paths (`offsets`, `commits`, `metadata`) through
+  * `java.nio`, registered by [[EmitterRunner.start]] under Spark's
   * `spark.sql.streaming.checkpointFileManagerClass` hook.
   *
   * Spark's default manager goes through Hadoop's local filesystem, which

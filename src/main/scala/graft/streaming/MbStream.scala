@@ -80,10 +80,10 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
     * is the session's `spark.sql.parquet.compression.codec`. The rows go
     * through parquet's `LocalOutputFile` to a hidden
     * `.part-<uuid>.parquet.tmp` and are moved (`ATOMIC_MOVE`) to
-    * `part-<uuid>.parquet` once the footer is written, so the emitter's file
-    * source and [[buffer]] never list a partial file. No Hadoop filesystem
-    * is involved: no `.crc` sidecar, and no forked `chmod`/`stat` process
-    * where Hadoop's native library is absent.
+    * `part-<uuid>.parquet` once the footer is written, so the emitter's
+    * [[BufferSource]] and [[buffer]] never list a partial file. No Hadoop
+    * filesystem is involved: no `.crc` sidecar, and no forked `chmod`/`stat`
+    * process where Hadoop's native library is absent.
     */
   def flush(): Unit = synchronized {
     if (pending.nonEmpty) {

@@ -40,8 +40,8 @@ final case class Minibatch(spark: SparkSession, root: String) {
     * 8-136), backed by `StreamingQuery.status`/`lastProgress` instead of a
     * Flask endpoint. `numInputRows` is the emitter's own count of the rows
     * its latest micro-batch read ([[EmitterRunner.lastInputRows]]): Spark's
-    * `lastProgress.numInputRows` reads 0, as the emitter never executes
-    * Spark's scan. Emitters started through [[EmitterBuilder.start]] are
+    * `lastProgress.numInputRows` reads 0, as Spark's scan of a batch has
+    * no partitions ([[BufferSource]]). Emitters started through [[EmitterBuilder.start]] are
     * named `graft-emitter-<stream>` so they are discoverable here.
     */
   def status(name: String): EmitterStatus = {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Tables
@@ -9,12 +10,17 @@ import graft.operators._
 /** Invariant tests for operators without a DuckDB oracle (hash-family- or
   * sketch-specific results), plus window-assignment invariants.
   */
-class OperatorsSuite extends AnyFunSuite {
+class OperatorsSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = TestSpark.spark
   val sf = TestSpark.sf0001
 
   lazy val docs = Tables.documents(spark, sf).cache()
   lazy val emb = Tables.embeddings(spark, sf).cache()
+
+  // the session is shared: suites that run later must see parquet scans in
+  // their plans, not these caches
+  override def afterAll(): Unit =
+    try { docs.unpersist(); emb.unpersist() } finally super.afterAll()
 
   /** Ground truth: blocking-free exact 3-gram Jaccard for all pairs ≥ 0.5
     * (computed once, reused by the minhash/simhash tests).

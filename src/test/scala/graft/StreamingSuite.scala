@@ -929,6 +929,24 @@ class StreamingSuite extends AnyFunSuite {
     }
   }
 
+  test("regression guard: a size(1) drain of 40 files in one micro-batch runs no Spark job") {
+    new JobLog().around { jl =>
+      val mb = Minibatch(spark, freshRoot())
+      val st = mb.stream("wide")
+      val n = 40 // more than spark.sql.sources.parallelPartitionDiscovery.threshold (32)
+      (0 until n).foreach(i => st.append(s"""{"i":$i}"""))
+      val (sink, fn) = collector()
+      val q = mb.streaming(st.name).size(1).emit(fn)
+        .withTrigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      jl.settle()
+      assert(sink.size === n)
+      assert(q.recentProgress.count(_.durationMs.containsKey("addBatch")) === 1, "all files in one micro-batch")
+      val drain = jl.jobs.filter(_._2 == q.id.toString)
+      assert(drain.isEmpty, s"listing the batch's files must start no Spark job: $drain")
+    }
+  }
+
   test("regression guard: appends and a size(1) drain leave no .crc sidecar in the buffer or the checkpoint logs") {
     val mb = Minibatch(spark, freshRoot())
     val st = mb.stream("sidecars")
@@ -938,7 +956,7 @@ class StreamingSuite extends AnyFunSuite {
     mb.streaming("sidecars").size(1).emit(fn).run()
     assert(sink.size === 6)
     val dirs = java.nio.file.Paths.get(st.bufferDir) +:
-      Seq("offsets", "commits", "sources").map(java.nio.file.Paths.get(st.checkpointsDir, _))
+      Seq("offsets", "commits", "graft-source").map(java.nio.file.Paths.get(st.checkpointsDir, _))
     val crcs = dirs.flatMap { d =>
       assert(Files.isDirectory(d), s"$d must exist after a drain")
       val s = Files.walk(d)
@@ -1046,11 +1064,14 @@ class StreamingSuite extends AnyFunSuite {
     try assert(reached.await(120, java.util.concurrent.TimeUnit.SECONDS), "the emitter never reached window 6")
     finally q.stop()
     assert(sink1.map(_._1) === (0L until stopAt))
-    val sources = java.nio.file.Paths.get(st.checkpointsDir, "sources", "0")
+    val sources = BufferSource.logDir(st.checkpointsDir)
     assert(Files.exists(sources.resolve("9.compact")) && !Files.exists(sources.resolve("19.compact")))
     val (sink2, fn2) = collector()
     mb.streaming(st.name).size(2).maxFilesPerTrigger(1).emit(fn2).run()
     assert(Files.exists(sources.resolve("19.compact")))
+    // a compaction keeps the entries since the previous one
+    assert(!Files.exists(sources.resolve("9.compact")) && !Files.exists(sources.resolve("9")) &&
+      Files.exists(sources.resolve("10")))
     assert((sink1 ++ sink2).toSeq === (0 until n / 2).map(w =>
       w.toLong -> Seq(s"""{"i":${2 * w}}""", s"""{"i":${2 * w + 1}}""")))
   }
@@ -1066,9 +1087,118 @@ class StreamingSuite extends AnyFunSuite {
       fn(id, df)
     }.run()
     // the source had listed the file before it went, so batch 1 names it
-    val batch1 = java.nio.file.Paths.get(st.checkpointsDir, "sources", "0", "1")
+    val batch1 = BufferSource.logDir(st.checkpointsDir).resolve("1")
     assert(new String(Files.readAllBytes(batch1), "UTF-8").contains(files(1).getFileName.toString))
     assert(sink.toSeq === Seq(0L -> Seq("""{"i":0}"""), 1L -> Seq("""{"i":2}""")))
+  }
+
+  /** Wait up to a minute for `cond`. */
+  private def await(what: String)(cond: => Boolean): Unit = {
+    val deadline = System.currentTimeMillis() + 60000
+    while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(20)
+    assert(cond, s"timed out waiting for $what")
+  }
+
+  private def logEntry(st: MbStream, name: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val lines = Files.readAllLines(BufferSource.logDir(st.checkpointsDir).resolve(name)).asScala.toSeq
+    assert(lines.head === "v1")
+    lines.tail
+  }
+
+  test("a file published late, with an older mtime than files already emitted, is emitted exactly once") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("late-file")
+    val now = new Timestamp(System.currentTimeMillis())
+    val files = writeInOrder(st, Seq(1, 2).map(i => Seq((s"""{"i":$i}""", now))))
+    val (sink, fn) = collector()
+    val q = mb.streaming(st.name).size(1).withTrigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+      .emit(fn).start()
+    try {
+      await("the first two files")(sink.size == 2)
+      // a slow producer's file: written elsewhere, aged, then moved in whole
+      val staged = mb.stream("late-file-staging").writeBufferFile(Seq(("""{"i":0}""", now)))
+      Files.setLastModifiedTime(staged, java.nio.file.attribute.FileTime.fromMillis(
+        Files.getLastModifiedTime(files.head).toMillis - 60000L))
+      Files.move(staged, java.nio.file.Paths.get(st.bufferDir).resolve(staged.getFileName),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      await("the late file")(sink.size == 3)
+      Thread.sleep(300) // further triggers must not take it again
+    } finally q.stop()
+    val (again, fn2) = collector()
+    mb.streaming(st.name).size(1).emit(fn2).run()
+    assert(again.isEmpty, s"a restart must not take the late file again: $again")
+    assert(sink.toSeq === Seq(0L -> Seq("""{"i":1}"""), 1L -> Seq("""{"i":2}"""), 2L -> Seq("""{"i":0}""")))
+  }
+
+  test("a restart after the source log recorded files that no micro-batch ran emits them exactly once") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("recorded")
+    val now = new Timestamp(System.currentTimeMillis())
+    def publish(f: Int): Unit = writeInOrder(st, Seq(Seq((s"""{"f":$f}""", now))))
+    // relaxed windows: the window id is the micro-batch id
+    def drain(fn: (Long, DataFrame) => Unit): Unit =
+      mb.streaming(st.name).emitter(EmitterRunner.RelaxedTimeWindow).emit(fn).run()
+    val (sink, fn) = collector()
+    publish(0)
+    drain(fn)
+    publish(1)
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](drain((_, _) => sys.error("emit failed")))
+    // batch 1's entry names f1; drop Spark's offset of batch 1, which leaves
+    // the state of a stop between the source log's write and Spark's
+    assert(logEntry(st, "1").size === 1)
+    Files.delete(java.nio.file.Paths.get(st.checkpointsDir, "offsets", "1"))
+    publish(2)
+    drain(fn)
+    // batch 1 reran its recorded entry instead of listing f1 and f2 together
+    assert(sink.toSeq === Seq(0L -> Seq("""{"f":0}"""), 1L -> Seq("""{"f":1}"""), 2L -> Seq("""{"f":2}""")))
+    assert(logEntry(st, "1").size === 1 && logEntry(st, "2").size === 1)
+  }
+
+  test("a file removed by runRetention under a running emitter is not emitted again and leaves the seen set") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("retained")
+    val old = new Timestamp(System.currentTimeMillis() - 3600 * 1000L)
+    val aged = writeInOrder(st, (0 until 3).map(i => Seq((s"""{"old":$i}""", old)))).map(_.getFileName.toString)
+    val (sink, fn) = collector()
+    val q = mb.streaming(st.name).size(1).maxFilesPerTrigger(1)
+      .withTrigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)).emit(fn).start()
+    val fresh = 12
+    try {
+      await("the aged files")(sink.size == 3)
+      assert(st.runRetention(60) === 3)
+      (0 until fresh).foreach(i => st.append(s"""{"new":$i}"""))
+      await("the fresh files")(sink.size == 3 + fresh)
+      Thread.sleep(300)
+    } finally q.stop()
+    val expected = (0 until 3).map(i => s"""{"old":$i}""") ++ (0 until fresh).map(i => s"""{"new":$i}""")
+    assert(sink.flatMap(_._2).sorted === expected.sorted, "every message exactly once")
+    // entry 9 (the tenth) was taken after the sweep: its compaction holds
+    // entries 3-9, the fresh files, and none of the removed ones
+    val seen = logEntry(st, "9.compact")
+    assert(seen.size === 7 && seen.intersect(aged).isEmpty, s"$seen against $aged")
+  }
+
+  test("an emitter refuses a checkpoint written by the file-source emitter, naming it and the way out") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("file-source")
+    st.appendAll(Seq("""{"i":0}""", """{"i":1}"""))
+    // the checkpoint the earlier emitter left: Spark's parquet file source over the buffer
+    spark.readStream.schema(MbStream.MessageSchema).parquet(st.bufferDir).writeStream
+      .option("checkpointLocation", st.checkpointsDir)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch((_: DataFrame, _: Long) => ()).start().awaitTermination()
+    val cp = java.nio.file.Paths.get(st.checkpointsDir)
+    assert(Files.isDirectory(cp.resolve("sources/0")) && !Files.exists(BufferSource.logDir(st.checkpointsDir)))
+    val (sink, fn) = collector()
+    val e = intercept[IllegalStateException](mb.streaming(st.name).size(1).emit(fn).run())
+    Seq("'file-source'", cp.resolve("sources/0").toString, s"delete ${st.checkpointsDir}").foreach(s =>
+      assert(e.getMessage.contains(s), s"the message must name $s: ${e.getMessage}"))
+    assert(sink.isEmpty)
+    // the named way out: without the checkpoint the buffer is re-read from its start
+    Files.walk(cp).sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
+    mb.streaming(st.name).size(1).emit(fn).run()
+    assert(sink.flatMap(_._2).sorted === Seq("""{"i":0}""", """{"i":1}"""))
   }
 
   test("emitEmpty: a late micro-batch does not lower the high-water mark, so no window is emitted twice") {
