@@ -28,11 +28,15 @@ import org.apache.spark.sql.SparkSession
   * concurrent load on the machine (the r12 bench ran inside a 1,271 s sbt
   * session) and each cost a round of manual triage. The JSON line now
   * carries `load_pre`/`load_post` (1-minute /proc/loadavg samples taken
-  * before Spark starts and after the last pass) and a `contended` flag; if
-  * the pre- or between-pass load says another workload holds a meaningful
-  * share of the cores, a THIRD timed pass runs and the per-query min is
-  * taken over all three, so a contended session either self-corrects or is
-  * at least flagged so nobody has to guess.
+  * before Spark starts and after the last pass, recorded only), the
+  * external CPU samples `external_pre`/`external_mid`/`external_end`
+  * (other processes' CPU use, in cores, before pass 1, after pass 1 and
+  * after pass 2) and a `contended` flag; if an external sample says
+  * another workload holds a meaningful share of the cores, a THIRD timed
+  * pass runs and the per-query min is taken over all three, so a
+  * contended session either self-corrects or is at least flagged so nobody
+  * has to guess. The load average does not decide it: before Spark starts
+  * it still carries sbt's own start-up.
   *
   * Idle-session noise: even uncontended, a one-off stall (GC pause,
   * page-cache miss burst) can survive min-of-2 as a query's reported time.
@@ -82,7 +86,28 @@ object Bench {
     // External load at or above a quarter of the machine's cores means
     // another workload is competing for CPU with the 32 bench threads.
     val contentionThreshold = Runtime.getRuntime.availableProcessors() * 0.25
-    val loadPre = loadAvg() // sampled BEFORE Spark spins up its own threads
+    // sampled BEFORE Spark spins up its own threads; recorded, not used to
+    // decide contention: the 1-minute average still carries sbt's own
+    // start-up and compile (above the threshold in every session on a
+    // 4-core host, while the external samples below read 0.02-0.07)
+    val loadPre = loadAvg()
+    // External CPU demand: system-wide CPU share minus this JVM's own share,
+    // scaled to cores. Unlike the 1-minute loadavg — which mostly reflects
+    // sbt's start-up before the run and the bench's own threads after a
+    // pass — this isolates OTHER processes' load. Both getters diff
+    // CPU-time ticks against the PREVIOUS call, so the bean is primed here,
+    // before Spark starts (the un-primed first call returns garbage), and
+    // each sample reads the external average since the one before it.
+    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+    def externalCpuLoad(): Double = osBean match {
+      case b: com.sun.management.OperatingSystemMXBean =>
+        val sysLoad = b.getCpuLoad
+        val selfLoad = b.getProcessCpuLoad
+        if (sysLoad.isNaN || selfLoad.isNaN) -1.0
+        else math.max(0.0, sysLoad - selfLoad) * Runtime.getRuntime.availableProcessors()
+      case _ => -1.0
+    }
+    externalCpuLoad(): Unit // prime the tick counters
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -118,25 +143,9 @@ object Bench {
         }
         name -> (System.nanoTime() - t0) / 1e9
       }
-    // External CPU demand sampled mid-run: system-wide CPU share minus this
-    // JVM's own share, scaled to cores. Unlike the 1-minute loadavg — which
-    // right after a pass mostly reflects the bench's own 32 threads — this
-    // isolates OTHER processes' load, so it can detect contention that
-    // starts after loadPre was sampled. Both getters diff CPU-time ticks
-    // against the PREVIOUS call, so the bean is primed once here (the
-    // un-primed first call returns garbage) and the mid-run sample then
-    // reads the external average over everything since this point.
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    def externalCpuLoad(): Double = osBean match {
-      case b: com.sun.management.OperatingSystemMXBean =>
-        val sysLoad = b.getCpuLoad
-        val selfLoad = b.getProcessCpuLoad
-        if (sysLoad.isNaN || selfLoad.isNaN) -1.0
-        else math.max(0.0, sysLoad - selfLoad) * Runtime.getRuntime.availableProcessors()
-      case _ => -1.0
-    }
-    externalCpuLoad(): Unit // prime the tick counters
-
+    // other processes' load over Spark's start-up and the warm-up, and
+    // then during each pass
+    val externalPre = externalCpuLoad()
     System.gc()
     val pass1 = timedPass("pass1")
     val externalMid = externalCpuLoad()
@@ -146,9 +155,7 @@ object Bench {
     // otherwise inflate its times with contended=false and no third pass —
     // exactly the blind spot that cost r10/r12 a triage round each
     val externalEnd = externalCpuLoad()
-    val contended =
-      loadPre > contentionThreshold || externalMid > contentionThreshold ||
-        externalEnd > contentionThreshold
+    val contended = Seq(externalPre, externalMid, externalEnd).exists(_ > contentionThreshold)
     // A contended session gets a third pass: by the time it runs the
     // competing workload has often drained (sbt test sessions, compactions),
     // and min-of-3 then recovers the idle number instead of recording a
@@ -234,7 +241,7 @@ object Bench {
       val total = results.map(_._2).sum // total always covers ALL queries
       val loadFields =
         s""","load_pre":${fmt(loadPre)},"load_post":${fmt(loadPost)}""" +
-          s""","external_mid":${fmt(externalMid)},"external_end":${fmt(externalEnd)},"contended":$contended""" +
+          s""","external_pre":${fmt(externalPre)},"external_mid":${fmt(externalMid)},"external_end":${fmt(externalEnd)},"contended":$contended""" +
           s""","passes":${if (contended) 3 else 2},"retimed":${retimes.size},"unstable":$unstable"""
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$om$fl$loadFields,"sf":"$sfDir"}"""
     }

@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.parquet.HadoopReadOptions
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.{col, max}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StructType}
 
@@ -30,9 +30,13 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * described there) or [[cutTime]].
   * Each window, and each `emitEmpty` gap window, reaches `emitFn` in id
   * order as a local DataFrame with [[MbStream.MessageSchema]] in arrival
-  * order, so emitting starts no Spark job either; only `keep(true)` runs
-  * one, the kept-history write. No cache, no shuffle, no state store. The
-  * driver holds one micro-batch at a time; `maxFilesPerTrigger` bounds it.
+  * order, so emitting starts no Spark job either. `keep(true)` writes the
+  * batch's windows on the driver too ([[MbStream.writeWindows]]), and a
+  * batch sink gets them as one local frame, which
+  * [[graft.sources.IdempotentTableSink]] writes on the driver as well: a
+  * trigger of a kept emitter with that sink runs no Spark job. No cache,
+  * no shuffle, no state store. The driver holds one micro-batch at a time;
+  * `maxFilesPerTrigger` bounds it.
   *
   * Spark keeps the trigger loop, the `offsets`/`commits` logs and the
   * progress events, over [[BufferSource]]: each trigger lists the buffer
@@ -222,24 +226,16 @@ object EmitterRunner {
       case _ => Seq.empty
     }
     def local(rows: Seq[Row], schema: StructType): DataFrame = spark.createDataFrame(rows.asJava, schema)
-    def persist(windows: Seq[(Long, Seq[Message])], batchId: Long): Unit = if (keep || batchSink.nonEmpty) {
-      val windowed = local(windows.flatMap { case (id, ms) => ms.map(m => Row(m.stream, m.created, m.data, id)) },
-        MbStream.MessageSchema.add("window_id", LongType, nullable = false))
-      if (keep) {
-        // replay-safe history: partition by batch_id and overwrite ONLY
-        // this batch's partition (dynamic mode), so a failed-then-
-        // replayed micro-batch rewrites its own slice instead of
-        // appending duplicates — the same effectively-once trick as
-        // IdempotentTableSink, built into the keep path
-        windowed.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(stream.windowsDir)
-      }
+    // persist(keep=True) (window.py:126-136): the kept history is written
+    // from the batch's messages on this thread, no frame and no Spark job,
+    // as one slice per batch that a replayed batch replaces whole — the
+    // same effectively-once trick as IdempotentTableSink
+    def persist(windows: Seq[(Long, Seq[Message])], batchId: Long): Unit = {
+      if (keep) stream.writeWindows(batchId, windows)
       // batch-level sink (gets the batch id → enables idempotent,
       // replay-safe writes, e.g. IdempotentTableSink)
-      batchSink.foreach(_(windowed, batchId))
+      batchSink.foreach(_(local(windows.flatMap { case (id, ms) => ms.map(m => Row(m.stream, m.created, m.data, id)) },
+        MbStream.MessageSchema.add("window_id", LongType, nullable = false)), batchId))
     }
     val writer = readBuffer(stream, maxFilesPerTrigger).writeStream
       .trigger(trigger)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 import scala.collection.mutable.ArrayBuffer
@@ -11,10 +11,8 @@ import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.io.{ColumnIOFactory, LocalInputFile, LocalOutputFile}
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageTypeParser, PrimitiveType}
+import org.apache.parquet.io.{ColumnIOFactory, LocalInputFile}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, MessageTypeParser, PrimitiveType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -80,7 +78,8 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
     * is the session's `spark.sql.parquet.compression.codec`. The rows go
     * through parquet's `LocalOutputFile` to a hidden
     * `.part-<uuid>.parquet.tmp` and are moved (`ATOMIC_MOVE`) to
-    * `part-<uuid>.parquet` once the footer is written, so the emitter's
+    * `part-<uuid>.parquet` once the footer is written
+    * ([[LocalParquet.writeFile]]), so the emitter's
     * [[BufferSource]] and [[buffer]] never list a partial file. No Hadoop
     * filesystem is involved: no `.crc` sidecar, and no forked `chmod`/`stat`
     * process where Hadoop's native library is absent.
@@ -94,39 +93,44 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
 
   /** Write `rows` as one buffer file, as [[flush]] does; the file's path. */
   private[graft] def writeBufferFile(rows: Seq[(String, Timestamp)]): java.nio.file.Path = {
-    val id = java.util.UUID.randomUUID()
-    val dir = Files.createDirectories(Paths.get(bufferDir))
-    val tmp = dir.resolve(s".part-$id.parquet.tmp")
-    val codec = spark.conf.get("spark.sql.parquet.compression.codec").toLowerCase match {
-      case "none" => CompressionCodecName.UNCOMPRESSED
-      case c => CompressionCodecName.fromConf(c)
-    }
-    try {
-      val writer = ExampleParquetWriter.builder(new LocalOutputFile(tmp))
-        .withConf(spark.sparkContext.hadoopConfiguration).withType(BufferParquetSchema)
-        .withCompressionCodec(codec).build()
-      val groups = new SimpleGroupFactory(BufferParquetSchema)
-      try rows.foreach { case (d, ts) =>
-        writer.write(groups.newGroup().append("stream", name)
-          .append("created", toMicros(ts)).append("data", d))
-      } finally writer.close()
-      Files.move(tmp, dir.resolve(s"part-$id.parquet"), StandardCopyOption.ATOMIC_MOVE)
-    } catch {
-      case e: Throwable => Files.deleteIfExists(tmp); throw e
-    }
+    val groups = new SimpleGroupFactory(BufferParquetSchema)
+    LocalParquet.writeFile(spark,
+      Files.createDirectories(Paths.get(bufferDir)).resolve(s"part-${java.util.UUID.randomUUID()}.parquet"),
+      BufferParquetSchema, rows.iterator.map { case (d, ts) =>
+        groups.newGroup().append("stream", name).append("created", toMicros(ts)).append("data", d)
+      })
+  }
+
+  /** Write micro-batch `batchId`'s kept windows as the history slice
+    * `windows/batch_id=<batchId>` (schema [[WindowParquetSchema]]), on the
+    * calling thread and without a Spark job, replacing a slice an earlier
+    * run of the batch wrote ([[LocalParquet.replaceSlice]]): a replayed
+    * batch overwrites its own slice, as a dynamic partition overwrite
+    * would, and leaves the others alone.
+    */
+  private[streaming] def writeWindows(batchId: Long, windows: Seq[(Long, Seq[EmitterRunner.Message])]): Unit = {
+    val groups = new SimpleGroupFactory(WindowParquetSchema)
+    LocalParquet.replaceSlice(spark, Files.createDirectories(Paths.get(windowsDir)), "batch_id", batchId,
+      WindowParquetSchema, windows.iterator.flatMap { case (id, ms) =>
+        ms.iterator.map(m => groups.newGroup().append("stream", m.stream)
+          .append("created", toMicros(m.created)).append("data", m.data).append("window_id", id))
+      })
   }
 
   /** Filtered read of the buffer (reference `stream.buffer()`, models.py:282-284). */
   def buffer(): DataFrame = readOrEmpty(bufferDir, MessageSchema)
 
   /** Read of the emitted-window history (reference `stream.window()`).
-    * The history is partitioned by batch_id (replay-safe dynamic
-    * overwrite, see EmitterRunner), so the read discovers partitions
-    * rather than listing top-level files.
+    * The history is partitioned by batch_id (one slice per micro-batch,
+    * replaced whole on replay, see [[writeWindows]]), so the read discovers
+    * partitions rather than listing top-level files. Slices written by
+    * Spark's own writer (INT96 `created`) read back beside them.
     */
   def windows(): DataFrame = {
     // Spark's own listing skips `.`/`_` entries; so must this walk, or a
-    // first kept write's `.spark-staging-*` dir reads as history
+    // hidden staging dir reads as history: a slice being written or moved
+    // aside by writeWindows (`.batch_id=<b>.<uuid>.tmp`/`.old`, left behind
+    // if the write was interrupted), or Spark's `.spark-staging-*`
     def hasData(p: java.nio.file.Path): Boolean = Files.isDirectory(p) && {
       try {
         val s = Files.list(p)
@@ -344,7 +348,7 @@ final class AttachedSource(
 
 object MbStream {
 
-  private[streaming] def toMicros(ts: Timestamp): Long = ts.getTime * 1000L + ts.getNanos / 1000 % 1000
+  private[graft] def toMicros(ts: Timestamp): Long = ts.getTime * 1000L + ts.getNanos / 1000 % 1000
 
   private[streaming] def fromMicros(us: Long): Timestamp = {
     val ts = new Timestamp(Math.floorDiv(us, 1000L))
@@ -399,12 +403,18 @@ object MbStream {
   /** [[MessageSchema]] as the parquet schema of the buffer files that
     * [[MbStream.flush]] writes.
     */
-  val BufferParquetSchema: org.apache.parquet.schema.MessageType = MessageTypeParser.parseMessageType(
+  val BufferParquetSchema: MessageType = MessageTypeParser.parseMessageType(
     """message spark_schema {
       |  required binary stream (STRING);
       |  required int64 created (TIMESTAMP(MICROS,true));
       |  required binary data (STRING);
       |}""".stripMargin)
+
+  /** The parquet schema of a kept-history file ([[MbStream.writeWindows]]):
+    * [[BufferParquetSchema]] plus the window id; `batch_id` is the
+    * directory's partition value. */
+  val WindowParquetSchema: MessageType = new MessageType("spark_schema",
+    (BufferParquetSchema.getFields.asScala :+ Types.required(PrimitiveTypeName.INT64).named("window_id")).asJava)
 
   /** The Julian day number of 1970-01-01, the epoch of INT96 timestamps' day field. */
   private val JulianDayOfEpoch = 2440588

@@ -469,9 +469,42 @@ class StreamingSuite extends AnyFunSuite {
       spark.sparkContext.parallelize(rows, 1), batch0.schema)
     sink.put(replay, 0L)
     assert(spark.read.parquet(target).count() === 4, "replay must be idempotent")
+    // the same replay as a local frame takes the driver-side path, and
+    // overwrites the slice just as well
+    import scala.jdk.CollectionConverters._
+    val localReplay = spark.createDataFrame(rows.asJava, batch0.schema)
+    assert(localReplay.isLocal && !replay.isLocal)
+    sink.put(localReplay, 0L)
+    assert(spark.read.parquet(target).count() === 4, "a local replay must be idempotent")
+    assert(spark.read.parquet(target).where("batch_id = 0").drop("batch_id").collect().toSeq.sortBy(_.toString) ===
+      rows.sortBy(_.toString))
     // a genuinely new batch still lands
     sink.put(replay.limit(1), 99L)
     assert(spark.read.parquet(target).count() === 5)
+
+    import org.apache.spark.sql.types._
+    def roundTrip(df: DataFrame): (Seq[Row], Boolean) = {
+      val dir = Files.createTempDirectory("graft-idem").toString + "/out"
+      val s = new IdempotentTableSink(dir)
+      s.put(df, 3L)
+      s.put(df, 3L)
+      // Spark's writer names its files part-<task>-<uuid>.c000…; the
+      // driver-side path writes one part-<uuid>.parquet
+      val names = Files.list(java.nio.file.Paths.get(dir, "batch_id=3")).toArray.toSeq.map(_.toString)
+      (spark.read.parquet(dir).drop("batch_id").collect().toSeq.sortBy(_.toString), names.exists(_.contains(".c000")))
+    }
+    // every flat type, nulls included, reads back equal from the driver-side path
+    val flat = spark.createDataFrame(Seq(
+        Row("a", 1L, 2, 0.5, true, new Timestamp(1700000000123L)),
+        Row(null, -3L, 0, -1.25, false, null)).asJava,
+      new StructType().add("s", StringType).add("l", LongType, nullable = false).add("i", IntegerType)
+        .add("d", DoubleType).add("b", BooleanType).add("t", TimestampType))
+    assert(roundTrip(flat) === ((flat.collect().toSeq.sortBy(_.toString), false)))
+    // a local frame with a column outside the flat set goes through Spark's writer
+    val nested = spark.createDataFrame(Seq(Row("a", new java.math.BigDecimal("1.25"), Seq(1, 2))).asJava,
+      new StructType().add("s", StringType).add("m", DecimalType(10, 2)).add("xs", ArrayType(IntegerType)))
+    assert(nested.isLocal)
+    assert(roundTrip(nested) === ((nested.collect().toSeq, true)))
   }
 
   test("upsert sink: bucket-granular latest-wins CDC apply, replay-safe, untouched buckets not rewritten") {
@@ -1215,6 +1248,139 @@ class StreamingSuite extends AnyFunSuite {
     assert(emitted.collect { case (id, rows) if rows.isEmpty => id } === Seq(11L), s"W+11 is the only gap window: $emitted")
   }
 
+  /** The kept history as sorted (stream, created µs, data, window_id, batch_id). */
+  private def history(st: MbStream): Seq[(String, Long, String, Long, Long)] =
+    st.windows().selectExpr("stream", "unix_micros(created)", "data", "window_id", "batch_id").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getLong(3), r.getLong(4))).toSeq.sorted
+
+  /** The entries of the windows directory, each with its files' names and
+    * modification times. */
+  private def slices(st: MbStream): Map[String, Seq[(String, Long)]] = {
+    def list(d: java.nio.file.Path): Seq[java.nio.file.Path] = {
+      val s = Files.list(d)
+      try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path]) finally s.close()
+    }
+    list(java.nio.file.Paths.get(st.windowsDir)).map(d => d.getFileName.toString ->
+      (if (Files.isDirectory(d)) list(d).map(f => (f.getFileName.toString, Files.getLastModifiedTime(f).toMillis)).sorted
+       else Nil)).toMap
+  }
+
+  /** Three buffer files, one 1 s window each, taken one per micro-batch. */
+  private def threeWindows(st: MbStream): Unit = {
+    val t0 = 1700000000000L
+    writeInOrder(st, (0 until 3).map(f => (0 until 3).map(j => (s"""{"f":$f,"j":$j}""", new Timestamp(t0 + f * 1000L + j)))))
+  }
+
+  test("regression guard: a kept fixed-window drain into an IdempotentTableSink runs no Spark job") {
+    import graft.sources.IdempotentTableSink
+    new JobLog().around { jl =>
+      val mb = Minibatch(spark, freshRoot())
+      val st = mb.stream("kept-guard")
+      val t0 = 1700000000000L
+      // five files, two a micro-batch, over two 1 s windows: each window
+      // spans two micro-batches, so it is emitted and kept in two parts
+      writeInOrder(st, (0 until 5).map(f => (0 until 3).map(j => (s"""{"f":$f,"j":$j}""", new Timestamp(t0 + f * 400L + j)))))
+      val emitted = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, String, Long)]()
+      val target = Files.createTempDirectory("graft-kept-sink").toString + "/out"
+      val sink = new IdempotentTableSink(target)
+      val q = mb.streaming(st.name).interval(1, relaxed = false).keep(true).maxFilesPerTrigger(2)
+        .emit((id, df) => df.selectExpr("stream", "unix_micros(created)", "data").collect().foreach(r =>
+          emitted.add((r.getString(0), r.getLong(1), r.getString(2), id))))
+        .batchSink((df, b) => sink.put(df, b))
+        .withTrigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      jl.settle()
+      assert(q.recentProgress.count(_.durationMs.containsKey("addBatch")) === 3)
+      val drain = jl.jobs.filter(_._2 == q.id.toString)
+      assert(drain.isEmpty, s"the kept-history and sink writes must start no Spark job: $drain")
+      import scala.jdk.CollectionConverters._
+      val want = emitted.asScala.toSeq.sorted
+      assert(want.size === 15 && want.map(_._4).distinct.size === 2)
+      val kept = history(st)
+      assert(kept.map(r => (r._1, r._2, r._3, r._4)) === want, "kept history = emitted windows, row for row")
+      assert(kept.map(_._5).distinct === Seq(0L, 1L, 2L))
+      val written = spark.read.parquet(target)
+        .selectExpr("stream", "unix_micros(created)", "data", "window_id", "CAST(batch_id AS LONG)").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getLong(3), r.getLong(4))).toSeq.sorted
+      assert(written === kept, "sink table = kept history, batch ids included")
+    }
+  }
+
+  test("kept history: a replayed batch replaces its batch_id slice exactly; other slices are untouched") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("kept-replay")
+    threeWindows(st)
+    val (sink, fn) = collector()
+    def drain(): Unit = mb.streaming(st.name).interval(1, relaxed = false).keep(true).maxFilesPerTrigger(1).emit(fn).run()
+    drain()
+    val before = history(st)
+    val layout = slices(st)
+    assert(before.size === 9 && layout.keySet === Set("batch_id=0", "batch_id=1", "batch_id=2"))
+    // a failure after batch 2's writes and before its commit: the restart re-runs it
+    Files.delete(java.nio.file.Paths.get(st.checkpointsDir, "commits", "2"))
+    drain()
+    assert(sink.size === 4 && sink(3) === sink(2), s"batch 2's window is emitted again: $sink")
+    assert(history(st) === before)
+    val after = slices(st)
+    assert(after.keySet === layout.keySet, s"no hidden entry is left: ${after.keySet}")
+    assert(after - "batch_id=2" === layout - "batch_id=2", "the other slices are untouched")
+    assert(after("batch_id=2").size === 1 && after("batch_id=2") != layout("batch_id=2"), "batch 2's slice is rewritten")
+  }
+
+  test("kept history: what an interrupted slice swap leaves is never read, and the replay of that batch removes it") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("kept-crash")
+    threeWindows(st)
+    def drain(): Unit = mb.streaming(st.name).interval(1, relaxed = false).keep(true).maxFilesPerTrigger(1).run()
+    drain()
+    val before = history(st)
+    // batch 2 stopped mid-swap: its slice moved aside, and a second staged
+    // copy written but not moved; batch 1's slice has a stale staged copy too
+    val dir = java.nio.file.Paths.get(st.windowsDir)
+    val file = slices(st)("batch_id=2").head._1
+    Files.move(dir.resolve("batch_id=2"), dir.resolve(".batch_id=2.a.old"))
+    for (staged <- Seq(".batch_id=2.b.tmp", ".batch_id=1.c.tmp")) {
+      Files.createDirectories(dir.resolve(staged))
+      Files.copy(dir.resolve(".batch_id=2.a.old").resolve(file), dir.resolve(staged).resolve(file))
+    }
+    assert(history(st) === before.filter(_._5 != 2L), "windows() reads no hidden slice")
+    Files.delete(java.nio.file.Paths.get(st.checkpointsDir, "commits", "2"))
+    drain()
+    assert(history(st) === before)
+    assert(slices(st).keySet === Set("batch_id=0", "batch_id=1", "batch_id=2", ".batch_id=1.c.tmp"),
+      "writing slice 2 removes slice 2's leftovers and no other slice's")
+  }
+
+  test("kept history: a Spark-written INT96 slice beside locally written ones reads back, and recovers the emitEmpty mark") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.io.LocalInputFile
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("kept-mixed")
+    val t0 = 1700000000000L
+    // batch 0 holds the newest window, so the high-water mark is in the slice Spark rewrites
+    writeInOrder(st, Seq(2L, 0L, 1L).map(k => Seq((s"""{"k":$k}""", new Timestamp(t0 + k * 1000L)))))
+    mb.streaming(st.name).interval(1, relaxed = false).keep(true).maxFilesPerTrigger(1).run()
+    val before = history(st)
+    assert(before.map(_._5) === Seq(1L, 2L, 0L))
+    st.windows().where(col("batch_id") === 0).write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic").partitionBy("batch_id").parquet(st.windowsDir)
+    def createdTypes(slice: String): Seq[String] = slices(st)(slice).map(_._1).filter(_.endsWith(".parquet")).map { f =>
+      val r = ParquetFileReader.open(new LocalInputFile(java.nio.file.Paths.get(st.windowsDir, slice, f)))
+      val schema = r.getFooter.getFileMetaData.getSchema
+      try schema.getType(schema.getFieldIndex("created")).asPrimitiveType.getPrimitiveTypeName.name
+      finally r.close()
+    }.distinct
+    assert(createdTypes("batch_id=0") === Seq("INT96") && createdTypes("batch_id=1") === Seq("INT64"))
+    assert(history(st) === before)
+    // a restart with emitEmpty recovers window 2 as the mark from the mixed
+    // history: windows 3 and 4 are gaps before the new window 5
+    writeInOrder(st, Seq(Seq(("""{"k":5}""", new Timestamp(t0 + 5000L)))))
+    val (sink, fn) = collector()
+    mb.streaming(st.name).interval(1, relaxed = false).keep(true).emitEmpty(true).emit(fn).run()
+    assert(sink.toSeq.map { case (id, rows) => (id - t0 / 1000, rows) } ===
+      Seq(3L -> Nil, 4L -> Nil, 5L -> Seq("""{"k":5}""")))
+  }
+
   test("status reports the rows the emitter read in its latest micro-batch") {
     val mb = Minibatch(spark, freshRoot())
     val st = mb.stream("counted")
@@ -1285,8 +1451,7 @@ class StreamingSuite extends AnyFunSuite {
         val batches = q.recentProgress.count(_.durationMs.containsKey("addBatch"))
         assert(batches === 2)
         val drain = jl.jobs.filter(_._2 == q.id.toString)
-        assert(drain.size === (if (keep) batches else 0),
-          s"no Spark job per micro-batch${if (keep) " but one keep write" else ""}: $drain")
+        assert(drain.isEmpty, s"no Spark job per micro-batch, the keep write included: $drain")
         assert(!jl.jobs.exists(_._1 == "emit"), "emitFn's collect() must start no Spark job")
         assert(!drain.exists(jl.shuffled), "a time-window drain must run no shuffle stage")
         assert(cachedDuringEmit.isEmpty && cachedSince().isEmpty, "a time-window drain must cache nothing")
