@@ -1,188 +1,174 @@
 package graft.streaming
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption, StandardOpenOption}
 import java.nio.file.attribute.BasicFileAttributes
+import java.util.UUID
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import graft.streaming.EmitterRunner.Message
 
-/** The emitter's Spark source: a micro-batch stream over a stream's buffer
-  * directory, built on the public `connector.read.streaming` API only.
-  *
-  * Spark keeps its trigger loop, its `offsets`/`commits` logs and its
-  * progress events; the source only decides which buffer files each batch
-  * holds. [[BufferSource.Stream.latestOffset]] lists `buffer/` with NIO,
-  * takes the files `FileStreamSource` takes (regular files whose names start
-  * with neither `.` nor `_`) that it has not taken before, oldest
-  * modification time first (then by name), at most `maxFilesPerTrigger` of
-  * them, and records them as entry `k` of its own log before it returns
-  * offset `k`. Each offset advances by one entry and Spark runs one batch
-  * per new offset, so batch `k` holds exactly the files of entry `k`:
-  * [[BufferSource.batchFiles]] reads them back for the emitter, which
-  * decodes them on the driver. Spark's own scan of a batch has no
-  * partitions and reads nothing. Under `Trigger.AvailableNow` the buffer
-  * is listed once, when the trigger starts, and only the files not taken
-  * by then are taken, in capped batches, as `FileStreamSource` does.
-  *
-  * The log is `checkpoints/graft-source/`, beside Spark's logs:
-  *
-  *  - `<k>`: `v1`, then the name of each file of entry `k`, one a line;
-  *  - `<k>.compact`, written with every [[CompactInterval]]-th entry: every
-  *    file taken up to entry `k` that the buffer still held, one a line.
-  *
-  * Both are written to a hidden temp file and published by `ATOMIC_MOVE`.
-  * A restarted source takes the newest compact file plus the entries after
-  * it as the files it has seen, and reuses an entry recorded after Spark's
-  * last offset (a stop between the two writes) instead of listing again,
-  * so those files reach one batch only. The seen set drops every name the
-  * buffer no longer lists (buffer file names are UUIDs and never return),
-  * so it is bounded by the buffer, not by the stream's history; a
-  * compaction keeps only the entries after the previous compaction.
+/** What a batch starts from, and what it leaves to its successor: the
+  * count-window carry (None for a time-window emitter) and the `emitEmpty`
+  * high-water mark, the newest window id emitted (`Long.MinValue` before
+  * the first).
   */
-final class BufferSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = MbStream.MessageSchema
+private[streaming] final case class BatchState(carry: Option[CountCarry], mark: Long)
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table = BufferSource.BufferTable
+/** Batch `batchId` of an emitter: the buffer files it takes, and the state it starts from. */
+private[streaming] final case class BatchRecord(batchId: Long, files: Seq[String], in: BatchState)
+
+/** The buffer files each batch of an emitter takes, and the emitter's
+  * batch log. Used by one emitter thread at a time.
+  *
+  * [[take]] lists `buffer/` with NIO and takes the files a parquet file
+  * source would (regular files whose names start with neither `.` nor
+  * `_`) that no batch has taken, oldest modification time first (then by
+  * name), at most `maxFilesPerTrigger`. After [[prepareAvailableNow]] it
+  * takes only the files untaken then, so `Trigger.AvailableNow` lists once.
+  *
+  * The log, `checkpoints/graft-batches/`, holds:
+  *  - `<k>`, the [[BatchRecord]] of batch `k`, written before the batch is
+  *    read and published by a hard link from a hidden temp file, which
+  *    fails if `<k>` exists: an emitter racing for batch `k` fails instead
+  *    of emitting it twice;
+  *  - `<k>.commit`, the state batch `k` leaves, written once it is emitted
+  *    and persisted;
+  *  - `<k>.compact` with every [[CompactInterval]]-th record: every file
+  *    taken up to batch `k` that the buffer still held.
+  *
+  * A restarted source takes the newest compact plus the records after it
+  * as the files it has seen. A newest record with no marker is
+  * [[pending]]: it runs again with the same files and state before any
+  * new file is taken. Otherwise the next batch starts from the marker's
+  * state and never re-reads the committed files, which retention may have
+  * deleted. The seen set drops every name the buffer no longer lists
+  * (buffer file names are UUIDs and never return), so it is bounded by the
+  * buffer; a compaction deletes the records and markers up to the
+  * previous compaction.
+  */
+private[streaming] final class BufferSource(stream: MbStream, maxFiles: Option[Int], initial: BatchState) {
+  import BufferSource._
+
+  private val buffer = Paths.get(stream.bufferDir)
+  private val log = logDir(stream)
+
+  // every name taken so far, and the untaken files (name -> modification
+  // time) when Trigger.AvailableNow started
+  private val seen = mutable.HashSet.empty[String]
+  private var availableNow: Option[Map[String, Long]] = None
+
+  /** The state the last committed batch left, and the id of the next new batch. */
+  private var committed: BatchState = initial
+  private var nextId: Long = 0L
+
+  /** The record written but not committed yet: the batch to run (again) first. */
+  var pending: Option[BatchRecord] = None
+
+  locally {
+    refuseSparkCheckpoint(stream)
+    val names = list(log)
+    val records = names.collect { case RecordName(k) => k.toLong }.sorted
+    val compact = names.collect { case CompactName(k) => k.toLong }.maxOption
+    compact.foreach(c => seen ++= read(log.resolve(s"$c.compact"))(readNames))
+    records.filter(_ > compact.getOrElse(-1L)).foreach(k => seen ++= readRecord(k).files)
+    records.lastOption.foreach { k =>
+      nextId = k + 1
+      try committed = read(marker(k))(readState)
+      catch { case _: NoSuchFileException => pending = Some(readRecord(k)) }
+    }
+  }
+
+  /** The emitter's query id, the same on every start over this log. */
+  val queryId: UUID = UUID.nameUUIDFromBytes(log.toAbsolutePath.normalize.toString.getBytes(UTF_8))
+
+  /** The batch that runs next: its id and the state it starts from. */
+  def upcoming: (Long, BatchState) = pending.fold((nextId, committed))(r => (r.batchId, r.in))
+
+  def prepareAvailableNow(): Unit = availableNow = Some(untaken().toMap)
+
+  /** The listed files not taken yet, with their modification times; the
+    * seen set first drops every name the buffer no longer lists. */
+  private def untaken(): Seq[(String, Long)] = {
+    val listed = list(buffer).toSet
+    seen.filterInPlace(listed.contains)
+    (listed -- seen).toSeq.flatMap { n =>
+      try {
+        val a = Files.readAttributes(buffer.resolve(n), classOf[BasicFileAttributes])
+        if (a.isRegularFile) Some((n, a.lastModifiedTime.toMillis)) else None
+      } catch { case _: NoSuchFileException => None } // deleted since the listing
+    }
+  }
+
+  /** The names of the files the next batch takes, in order; empty when there is none. */
+  def take(): Seq[String] = {
+    val fresh = availableNow.fold(untaken())(_.toSeq.filterNot(f => seen(f._1)))
+      .sortBy { case (n, mtime) => (mtime, n) }.map(_._1)
+    maxFiles.fold(fresh)(fresh.take)
+  }
+
+  /** Record the next batch as taking `files`, starting from the committed state. */
+  def record(files: Seq[String]): BatchRecord = {
+    val r = BatchRecord(nextId, files, committed)
+    publish(log.resolve(r.batchId.toString), replace = false) { out => writeNames(out, files); writeState(out, r.in) }
+    seen ++= files
+    pending = Some(r)
+    nextId += 1
+    if ((r.batchId + 1) % CompactInterval == 0) compact(r.batchId)
+    r
+  }
+
+  /** Mark `r` committed, leaving `out` to the next batch. */
+  def commit(r: BatchRecord, out: BatchState): Unit = {
+    publish(marker(r.batchId), replace = true)(writeState(_, out))
+    committed = out
+    pending = None
+  }
+
+  private def marker(k: Long): Path = log.resolve(s"$k.commit")
+
+  private def readRecord(k: Long): BatchRecord = read(log.resolve(k.toString))(in => BatchRecord(k, readNames(in), readState(in)))
+
+  private def compact(k: Long): Unit = {
+    publish(log.resolve(s"$k.compact"), replace = true)(writeNames(_, seen.toSeq.sorted))
+    list(log).foreach {
+      case CompactName(c) if c.toLong < k => Files.deleteIfExists(log.resolve(s"$c.compact"))
+      case n @ (RecordName(_) | MarkerName(_)) if n.takeWhile(_.isDigit).toLong <= k - CompactInterval =>
+        Files.deleteIfExists(log.resolve(n))
+      case _ => ()
+    }
+  }
 }
 
-object BufferSource {
+private[graft] object BufferSource {
 
-  /** A compact file is written with every `CompactInterval`-th entry, as
+  /** A compact file is written with every `CompactInterval`-th record, as
     * Spark's file source log compacts by default. */
   private val CompactInterval = 10
 
-  private val Version = "v1"
-  private val EntryName = """(\d+)""".r
+  private val Version = 1
+  private val RecordName = """(\d+)""".r
+  private val MarkerName = """(\d+)\.commit""".r
   private val CompactName = """(\d+)\.compact""".r
 
-  /** The source log of the emitter whose checkpoint is `checkpointsDir`. */
-  private[graft] def logDir(checkpointsDir: String): Path = Paths.get(checkpointsDir, "graft-source")
+  /** The batch log of the emitter of `stream`. */
+  def logDir(stream: MbStream): Path = Paths.get(stream.checkpointsDir, "graft-batches")
 
-  /** The buffer files of micro-batch `batchId` of the emitter of `stream`. */
-  private[streaming] def batchFiles(stream: MbStream, batchId: Long): Seq[Path] = {
-    val names = read(logDir(stream.checkpointsDir).resolve(batchId.toString)).getOrElse(
-      throw new IllegalStateException(s"stream '${stream.name}': no source log entry for batch $batchId " +
-        s"under ${logDir(stream.checkpointsDir)}"))
-    names.map(Paths.get(stream.bufferDir).resolve(_))
-  }
-
-  /** Refuse a checkpoint written by the earlier emitter, whose Spark file
-    * source kept its log in `sources/0`: this source cannot tell which
-    * buffer files that emitter has already emitted. */
-  private[streaming] def requireOwnLog(stream: MbStream): Unit = {
-    val fileSourceLog = Paths.get(stream.checkpointsDir, "sources", "0")
-    if (Files.exists(fileSourceLog) && !Files.exists(logDir(stream.checkpointsDir)))
+  /** Refuse a checkpoint that an emitter on Spark's streaming engine wrote
+    * (Spark's `offsets/` log, or its file source's `sources/0`) and that
+    * has no batch log: which buffer files it emitted cannot be told from
+    * new ones. */
+  private def refuseSparkCheckpoint(stream: MbStream): Unit = {
+    val sparkLogs = Seq("offsets", "sources/0").map(Paths.get(stream.checkpointsDir, _)).filter(Files.exists(_))
+    if (sparkLogs.nonEmpty && !Files.exists(logDir(stream)))
       throw new IllegalStateException(
-        s"stream '${stream.name}': the checkpoint ${stream.checkpointsDir} was written by the earlier " +
-          s"file-source emitter (its log is $fileSourceLog; it has no ${logDir(stream.checkpointsDir)}), " +
+        s"stream '${stream.name}': the checkpoint ${stream.checkpointsDir} was written by an earlier emitter " +
+          s"on Spark's streaming engine (it has ${sparkLogs.mkString(" and ")}, and no ${logDir(stream)}), " +
           "so the files it emitted cannot be told from new ones. Drain the stream on the release that " +
           s"wrote the checkpoint, or delete ${stream.checkpointsDir} to re-read the buffer from its start.")
-  }
-
-  private object BufferTable extends Table with SupportsRead {
-    override def name(): String = "graft-buffer"
-    override def schema(): StructType = MbStream.MessageSchema
-    override def capabilities(): java.util.Set[TableCapability] =
-      java.util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-    override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = () => new Scan {
-      override def readSchema(): StructType = MbStream.MessageSchema
-      override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = new Stream(
-        Paths.get(options.get("path")), Paths.get(options.get("log")),
-        Option(options.get("maxFilesPerTrigger")).map(_.toInt))
-    }
-  }
-
-  private final case class EntryOffset(entry: Long) extends Offset {
-    override def json(): String = entry.toString
-  }
-
-  private final class Stream(buffer: Path, log: Path, maxFiles: Option[Int])
-      extends MicroBatchStream with SupportsTriggerAvailableNow {
-
-    private def entries(): Seq[Long] = list(log).collect { case EntryName(k) => k.toLong }
-    private def compacts(): Seq[Long] = list(log).collect { case CompactName(k) => k.toLong }
-
-    // the newest entry recorded, and every name taken so far
-    private var lastEntry: Long = -1L
-    private val seen = mutable.HashSet.empty[String]
-    locally {
-      val recorded = entries()
-      val compact = compacts().maxOption
-      lastEntry = recorded.maxOption.getOrElse(-1L)
-      compact.foreach(c => seen ++= read(log.resolve(s"$c.compact")).getOrElse(Nil))
-      recorded.filter(_ > compact.getOrElse(-1L)).foreach(k => seen ++= read(log.resolve(k.toString)).getOrElse(Nil))
-    }
-
-    // the untaken files (name -> modification time) when Trigger.AvailableNow
-    // started: the only files it takes, so it lists the buffer once
-    private var availableNow: Option[Map[String, Long]] = None
-
-    override def initialOffset(): Offset = EntryOffset(-1L)
-    override def deserializeOffset(json: String): Offset = EntryOffset(json.trim.toLong)
-    override def commit(end: Offset): Unit = ()
-    override def stop(): Unit = ()
-
-    override def latestOffset(): Offset =
-      throw new UnsupportedOperationException("latestOffset(Offset, ReadLimit) should be called instead")
-
-    override def getDefaultReadLimit: ReadLimit = maxFiles.fold(ReadLimit.allAvailable())(ReadLimit.maxFiles)
-
-    override def prepareForTriggerAvailableNow(): Unit = availableNow = Some(untaken().toMap)
-
-    /** The listed files not taken yet, with their modification times; the
-      * seen set first drops every name the buffer no longer lists. */
-    private def untaken(): Seq[(String, Long)] = {
-      val listed = list(buffer).toSet
-      seen.filterInPlace(listed.contains)
-      (listed -- seen).toSeq.flatMap { n =>
-        try {
-          val a = Files.readAttributes(buffer.resolve(n), classOf[BasicFileAttributes])
-          if (a.isRegularFile) Some((n, a.lastModifiedTime.toMillis)) else None
-        } catch { case _: NoSuchFileException => None } // deleted since the listing
-      }
-    }
-
-    override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-      val next = start.asInstanceOf[EntryOffset].entry + 1
-      if (next <= lastEntry) EntryOffset(next)
-      else {
-        val fresh = availableNow.fold(untaken())(_.toSeq.filterNot(f => seen(f._1)))
-          .sortBy { case (n, mtime) => (mtime, n) }.map(_._1)
-        val taken = limit match {
-          case m: ReadMaxFiles => fresh.take(m.maxFiles)
-          case _ => fresh
-        }
-        // no offset at all before the first file, or Spark runs an empty batch 0
-        if (taken.isEmpty) { if (next == 0) null else start }
-        else {
-          write(log, next.toString, taken)
-          seen ++= taken
-          lastEntry = next
-          if ((next + 1) % CompactInterval == 0) compact(next)
-          EntryOffset(next)
-        }
-      }
-    }
-
-    private def compact(k: Long): Unit = {
-      write(log, s"$k.compact", seen.toSeq.sorted)
-      compacts().filter(_ < k).foreach(c => Files.deleteIfExists(log.resolve(s"$c.compact")))
-      entries().filter(_ <= k - CompactInterval).foreach(e => Files.deleteIfExists(log.resolve(e.toString)))
-    }
-
-    override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = Array.empty
-
-    override def createReaderFactory(): PartitionReaderFactory = (_: InputPartition) =>
-      throw new UnsupportedOperationException("the emitter reads buffer files on the driver")
   }
 
   /** The names in `dir` that start with neither `.` nor `_` (a file
@@ -195,17 +181,58 @@ object BufferSource {
       finally s.close()
     } catch { case _: NoSuchFileException => Nil }
 
-  private def write(dir: Path, name: String, names: Seq[String]): Unit = {
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(s".$name.tmp")
-    Files.write(tmp, (Version +: names).mkString("", "\n", "\n").getBytes(UTF_8))
-    Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  /** Write `f` through a hidden temp file: moved over `f` when `replace`,
+    * hard-linked to `f` otherwise, which fails if `f` exists. */
+  private def publish(f: Path, replace: Boolean)(body: DataOutputStream => Unit): Unit = {
+    val bytes = new ByteArrayOutputStream()
+    val out = new DataOutputStream(bytes)
+    out.writeInt(Version)
+    body(out)
+    out.flush()
+    Files.createDirectories(f.getParent)
+    val tmp = f.resolveSibling(s".${f.getFileName}.${UUID.randomUUID()}.tmp")
+    Files.write(tmp, bytes.toByteArray, StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+    try {
+      if (replace) Files.move(tmp, f, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      else Files.createLink(f, tmp)
+    } finally Files.deleteIfExists(tmp)
   }
 
-  private def read(f: Path): Option[Seq[String]] =
-    try {
-      val lines = new String(Files.readAllBytes(f), UTF_8).split('\n').toSeq
-      if (lines.headOption.contains(Version)) Some(lines.tail.filter(_.nonEmpty))
-      else throw new IllegalStateException(s"$f: source log format ${lines.headOption.getOrElse("")}, expected $Version")
-    } catch { case _: NoSuchFileException => None }
+  private def read[T](f: Path)(body: DataInputStream => T): T = {
+    val in = new DataInputStream(new ByteArrayInputStream(Files.readAllBytes(f)))
+    val version = in.readInt()
+    if (version != Version) throw new IllegalStateException(s"$f: batch log format $version, expected $Version")
+    body(in)
+  }
+
+  private def writeNames(out: DataOutputStream, names: Seq[String]): Unit = {
+    out.writeInt(names.size)
+    names.foreach(out.writeUTF)
+  }
+
+  private def readNames(in: DataInputStream): Seq[String] = Seq.fill(in.readInt())(in.readUTF())
+
+  // a payload may exceed writeUTF's 64 KB, so messages carry byte lengths
+  private def writeState(out: DataOutputStream, s: BatchState): Unit = {
+    def utf8(v: String): Unit = { val b = v.getBytes(UTF_8); out.writeInt(b.length); out.write(b) }
+    out.writeLong(s.mark)
+    out.writeBoolean(s.carry.isDefined)
+    s.carry.foreach { c =>
+      out.writeLong(c.nextWindowId)
+      out.writeLong(c.newestMs)
+      out.writeInt(c.pending.size)
+      c.pending.foreach { m => utf8(m.stream); out.writeLong(MbStream.toMicros(m.created)); utf8(m.data) }
+    }
+  }
+
+  private def readState(in: DataInputStream): BatchState = {
+    def utf8(): String = { val b = new Array[Byte](in.readInt()); in.readFully(b); new String(b, UTF_8) }
+    val mark = in.readLong()
+    val carry = if (!in.readBoolean()) None else {
+      val next = in.readLong()
+      val newest = in.readLong()
+      Some(CountCarry(next, newest, Vector.fill(in.readInt())(Message(utf8(), MbStream.fromMicros(in.readLong()), utf8()))))
+    }
+    BatchState(carry, mark)
+  }
 }

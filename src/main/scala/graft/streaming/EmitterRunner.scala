@@ -1,54 +1,40 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import java.util.UUID
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.parquet.HadoopReadOptions
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.{col, max}
+import org.apache.spark.sql.execution.streaming.{AvailableNowTrigger, ProcessingTimeTrigger}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StructType}
 
 /** The consumer-side run loop (reference `WindowEmitter.run`,
-  * minibatch/window.py:13-227) on Structured Streaming.
+  * minibatch/window.py:13-227), owned by graft: one driver thread per
+  * emitter ([[EmitterQuery]]) lists, records, reads, windows, emits,
+  * persists and commits each batch, with no Spark streaming engine.
   *
   * Stage mapping (SURVEY.md §3 E2): `window_ready`+`sleep` → trigger;
-  * `query` → source offsets; `process`/`timestamp`/`commit` → checkpoint
-  * commit log; `emit` → foreachBatch; `undo` → failed-batch replay
-  * (at-least-once into side effects, same as the reference's undo/redo,
-  * window.py:119-124); `persist(keep=True)` → append to the stream's
-  * windows table (window.py:126-136).
+  * `query` → [[BufferSource.take]]; `process`/`timestamp`/`commit` → the
+  * batch record and its commit marker; `emit` → `emitFn`; `undo` →
+  * failed-batch replay (at-least-once into side effects, as the
+  * reference's undo/redo, window.py:119-124); `persist(keep=True)` → the
+  * stream's windows table (window.py:126-136). The record is written
+  * before the batch is read and the marker after it is persisted: a
+  * replayable source plus idempotent writes give effectively-once output.
   *
-  * Every strategy windows on the driver: each micro-batch is read there
-  * (its buffer files are the entry [[BufferSource]] logged for it, decoded
-  * by [[MbStream.readBufferFile]], so a trigger runs no Spark job) and cut
-  * by [[CountCarry.step]] (count strategies, carried across batches as
-  * described there) or [[cutTime]].
-  * Each window, and each `emitEmpty` gap window, reaches `emitFn` in id
-  * order as a local DataFrame with [[MbStream.MessageSchema]] in arrival
-  * order, so emitting starts no Spark job either. `keep(true)` writes the
-  * batch's windows on the driver too ([[MbStream.writeWindows]]), and a
-  * batch sink gets them as one local frame, which
-  * [[graft.sources.IdempotentTableSink]] writes on the driver as well: a
-  * trigger of a kept emitter with that sink runs no Spark job. No cache,
-  * no shuffle, no state store. The driver holds one micro-batch at a time;
-  * `maxFilesPerTrigger` bounds it.
-  *
-  * Spark keeps the trigger loop, the `offsets`/`commits` logs and the
-  * progress events, over [[BufferSource]]: each trigger lists the buffer
-  * with NIO, and Spark's scan of a batch has no partitions, so it lists,
-  * resolves and plans no parquet scan. `lastProgress.numInputRows` of a
-  * graft emitter reads 0; [[lastInputRows]] holds the engine's own count,
-  * which [[Minibatch.status]] reports.
-  *
-  * Spark's checkpoint logs (`offsets`, `commits`) go through
-  * [[LocalCheckpointFileManager]], which [[start]] registers on the session
-  * unless it already names a manager of its own; the source writes its
-  * `graft-source` log through NIO itself.
+  * Every strategy windows on the driver: a batch's buffer files are
+  * decoded by [[MbStream.readBufferFile]] and cut by [[CountCarry.step]]
+  * (count strategies, from the record's carry) or [[cutTime]]. Each
+  * window, and each `emitEmpty` gap window, reaches `emitFn` in id order
+  * as a local DataFrame with [[MbStream.MessageSchema]] in arrival order.
+  * `keep(true)` writes the batch's windows on the driver
+  * ([[MbStream.writeWindows]]), and a batch sink gets them as one local
+  * frame, which [[graft.sources.IdempotentTableSink]] writes on the driver
+  * too: a trigger runs no Spark job, no cache, no shuffle and no state
+  * store. The driver holds one batch at a time; `maxFilesPerTrigger`
+  * bounds it.
   */
 object EmitterRunner {
 
@@ -88,30 +74,6 @@ object EmitterRunner {
     * RelaxedTimeWindow, window.py:281-302). */
   case object RelaxedTimeWindow extends Strategy
 
-  /** Open the buffer as a stream (the reference's polling `query()` over
-    * unprocessed docs — offsets instead of `processed` flags) through
-    * [[BufferSource]]; the frame carries no rows, as each batch is read on
-    * the driver. `maxFilesPerTrigger` caps each micro-batch (the
-    * reference's producer-side Batcher size / poll-batch tuning, SURVEY
-    * §1.3: Spark's micro-batch sizing knob subsumes it).
-    */
-  private def readBuffer(stream: MbStream, maxFilesPerTrigger: Option[Int]): DataFrame = {
-    val reader = stream.spark.readStream.format(classOf[BufferSource].getName)
-      .option("path", stream.bufferDir)
-      .option("log", BufferSource.logDir(stream.checkpointsDir).toString)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.load()
-  }
-
-  // keyed by query id, which the checkpoint keeps: one entry per checkpoint,
-  // replaced when its emitter restarts
-  private val inputRows = new ConcurrentHashMap[UUID, AtomicLong]()
-
-  /** The rows an emitter started by [[start]] read in its latest
-    * micro-batch (flush sentinels included), or None before its first. */
-  def lastInputRows(query: StreamingQuery): Option[Long] =
-    Option(inputRows.get(query.id)).map(_.get).filter(_ >= 0)
-
   /** A message's arrival order within a micro-batch: `created`, then payload. */
   def arrivalOrder(batch: Seq[Message]): Seq[Message] =
     batch.sortBy(m => (m.created.getTime, m.created.getNanos, m.data))
@@ -136,13 +98,14 @@ object EmitterRunner {
     }
   }
 
-  /** Start the emitter: per micro-batch, cut the strategy's windows on the
+  /** Start the emitter: per batch, cut the strategy's windows on the
     * driver and hand each to `emitFn` (the reference's dill-marshalled
     * emitfn — here an ordinary closure; JVM serialization is free,
     * marshaller.py is moot). `keep=true` appends emitted windows to the
     * stream's windows table (reference persist(keep), window.py:126-136).
-    * Failed emitFn → whole-batch replay from checkpoint (at-least-once,
-    * window.py:119-124).
+    * Failed emitFn → whole-batch replay from its record (at-least-once,
+    * window.py:119-124). `trigger` is `Trigger.ProcessingTime` or
+    * `Trigger.AvailableNow`; any other is refused.
     */
   def start(
       stream: MbStream,
@@ -157,61 +120,39 @@ object EmitterRunner {
       emitEmpty: Boolean = false,
       maxGapWindows: Int = 1000): StreamingQuery = {
     // emit_empty (reference FixedTimeWindow default, window.py:251): gap
-    // intervals between observed windows emit a zero-row window. Spark's
-    // micro-batch loop only wakes on data, so gap windows are synthesized
-    // when the NEXT data batch arrives (documented deltas vs the
+    // intervals between observed windows emit a zero-row window,
+    // synthesized when the NEXT data batch arrives (deltas vs the
     // reference's wall-clock loop: (1) during total silence nothing fires;
-    // (2) the high-water mark is in-memory — after a restart from
-    // checkpoint it is recovered from the kept windows history when
-    // keep=true, but with keep=false gap windows spanning the restart are
-    // not synthesized; (3) a gap burst is capped at `maxGapWindows` per
-    // micro-batch — after a long outage only the most recent gaps emit,
-    // older ones are logged and collapsed, so a weekend of silence cannot
-    // wedge the query with one emitFn call per missed interval).
-    val lastMaxWindow = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    if (emitEmpty && keep) {
-      // recover the high-water mark from the kept history so gap windows
-      // spanning a restart are synthesized instead of silently dropped.
-      // An absent/empty history is the normal first start (windows() returns
-      // an empty relation, row is null — no recovery needed). A failed read
-      // (corrupt history, permissions) is warn-logged and the query starts
-      // anyway: gap-window synthesis is best-effort decoration of the data
-      // path, and refusing to start the emitter over it would turn a
-      // recoverable history problem into an ingest outage. The cost is that
-      // gap windows spanning THIS restart are not synthesized — the WARN
-      // below is the signal.
-      try {
-        val row = stream.windows().agg(max(col("window_id"))).head()
-        if (!row.isNullAt(0)) lastMaxWindow.set(row.getLong(0))
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          log.warn("emitEmpty: failed to recover the window high-water mark " +
-            s"from the kept history at ${stream.windowsDir}; gap windows " +
-            "spanning this restart will not be synthesized", e)
-      }
-    }
+    // (2) the high-water mark is kept in the batch log, so gap windows
+    // spanning a restart are synthesized, with or without keep; (3) a gap
+    // burst is capped at `maxGapWindows` per batch — older gaps are logged
+    // and collapsed, so a long outage cannot wedge the emitter).
+    val interval = triggerInterval(trigger)
     val count = strategy match {
       case CountWindow(n) => Some((n, None))
       case CountWindowTimeout(n, secs) => Some((n, Some(secs * 1000L)))
       case _ => None
     }
-    BufferSource.requireOwnLog(stream)
-    if (count.nonEmpty) CountCarry.requireResumable(stream)
+    EmitterQuery.requireIdle(stream)
+    val source = new BufferSource(stream, maxFilesPerTrigger,
+      BatchState(count.map(_ => CountCarry.Empty), Long.MinValue))
+    val (firstId, firstIn) = source.upcoming
+    // a time-window emitter's batches leave no carry: starting a count
+    // emitter there would restart window ids at 0
+    if (count.nonEmpty && firstIn.carry.isEmpty) throw new IllegalStateException(
+      s"stream '${stream.name}': a time-window emitter wrote batch ${firstId - 1} under ${BufferSource.logDir(stream)}, " +
+        "so count-window ids cannot resume. Drain it with that emitter (a count emitter drains its remainder with " +
+        s"flushPartialOnDrain(true)), or delete ${stream.checkpointsDir} to re-read the buffer from its start.")
     val spark = stream.spark
-    if (spark.conf.getOption(LocalCheckpointFileManager.ClassKey).isEmpty)
-      spark.conf.set(LocalCheckpointFileManager.ClassKey, classOf[LocalCheckpointFileManager].getName)
-    val retain = spark.conf.get("spark.sql.streaming.minBatchesToRetain").toInt
+    val buffer = java.nio.file.Paths.get(stream.bufferDir)
     val readOpts = HadoopReadOptions.builder(spark.sparkContext.hadoopConfiguration).build()
-    val rowsRead = new AtomicLong(-1L)
-    def gapIds(ids: Seq[Long]): Seq[Long] = strategy match {
+    def gapIds(ids: Seq[Long], mark: Long): Seq[Long] = strategy match {
       case FixedTimeWindow(_) if emitEmpty && ids.nonEmpty =>
-        val from =
-          if (lastMaxWindow.get() == Long.MinValue) ids.head
-          else lastMaxWindow.get() + 1
+        val from = if (mark == Long.MinValue) ids.head else mark + 1
         val present = ids.toSet
         // cap the synthesized burst: a long outage can leave millions of
         // missed intervals; emitting one window per interval in a single
-        // micro-batch would wedge the query. Clamp the range BEFORE
+        // batch would wedge the emitter. Clamp the range BEFORE
         // materializing it, then trim exactly.
         val span = ids.last - from + 1
         val clampedFrom =
@@ -237,38 +178,39 @@ object EmitterRunner {
       batchSink.foreach(_(local(windows.flatMap { case (id, ms) => ms.map(m => Row(m.stream, m.created, m.data, id)) },
         MbStream.MessageSchema.add("window_id", LongType, nullable = false)), batchId))
     }
-    val writer = readBuffer(stream, maxFilesPerTrigger).writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", stream.checkpointsDir)
-      .foreachBatch { (_: DataFrame, batchId: Long) =>
-        // a file deleted since the source took it reads as no rows
-        val msgs = BufferSource.batchFiles(stream, batchId).flatMap(MbStream.readBufferFile(_, readOpts))
-        rowsRead.set(msgs.size)
-        val (windows, carry) = count match {
-          case Some((n, maxAgeMs)) =>
-            val (ws, c) = CountCarry.step(CountCarry.before(stream, batchId), msgs, n, maxAgeMs)
-            (ws, Some(c))
-          case None => (cutTime(strategy, msgs, batchId), None)
-        }
-        val ids = windows.map(_._1)
-        val byId = windows.toMap
-        emitAll((ids ++ gapIds(ids)).sorted, id => emitFn(id, local(
-          byId.getOrElse(id, Nil).map(m => Row(m.stream, m.created, m.data)), MbStream.MessageSchema)),
-          maxWorkers)
-        if (windows.nonEmpty) {
-          // monotone: a late batch's older windows must not lower the mark,
-          // or the next batch re-emits ids up to it as empty gap windows
-          lastMaxWindow.accumulateAndGet(ids.last, math.max(_, _))
-          persist(windows, batchId)
-        }
-        carry.foreach(CountCarry.write(stream, batchId, _, retain))
+    def runBatch(r: BatchRecord): (BatchState, Long) = {
+      // a file deleted since the source took it reads as no rows
+      val msgs = r.files.flatMap(f => MbStream.readBufferFile(buffer.resolve(f), readOpts))
+      val (windows, carry) = count match {
+        case Some((n, maxAgeMs)) =>
+          val (ws, c) = CountCarry.step(r.in.carry.getOrElse(CountCarry.Empty), msgs, n, maxAgeMs)
+          (ws, Some(c))
+        case None => (cutTime(strategy, msgs, r.batchId), None)
       }
-    val query = queryName.fold(writer)(writer.queryName).start()
-    inputRows.put(query.id, rowsRead)
-    query
+      val ids = windows.map(_._1)
+      val byId = windows.toMap
+      emitAll((ids ++ gapIds(ids, r.in.mark)).sorted, id => emitFn(id, local(
+        byId.getOrElse(id, Nil).map(m => Row(m.stream, m.created, m.data)), MbStream.MessageSchema)),
+        maxWorkers)
+      if (windows.nonEmpty) persist(windows, r.batchId)
+      // monotone: a late batch's older windows must not lower the mark, or
+      // the next batch re-emits ids up to it as empty gap windows
+      (BatchState(carry, ids.lastOption.fold(r.in.mark)(math.max(r.in.mark, _))), msgs.size.toLong)
+    }
+    new EmitterQuery(stream, queryName.orNull, interval, source, runBatch).start()
   }
 
-  /** Emit windows of one micro-batch, optionally in parallel (the
+  /** The trigger decoder, the one place that reads Spark's trigger case
+    * classes: the interval of `Trigger.ProcessingTime`, or None for
+    * `Trigger.AvailableNow`. */
+  private def triggerInterval(t: Trigger): Option[Long] = t match {
+    case ProcessingTimeTrigger(ms) => Some(ms)
+    case AvailableNowTrigger => None
+    case other => throw new IllegalArgumentException(
+      s"a graft emitter runs on Trigger.ProcessingTime or Trigger.AvailableNow, not $other")
+  }
+
+  /** Emit windows of one batch, optionally in parallel (the
     * reference's ProcessPoolExecutor `max_workers`, window.py:84,145-146 —
     * proven by test_slow_emitfn: one worker falls behind a slow emitfn,
     * five keep up). Spark supports concurrent job submission from multiple

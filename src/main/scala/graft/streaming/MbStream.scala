@@ -393,7 +393,7 @@ object MbStream {
   }
 
   /** Mirrors Buffer `{stream, created, data}` (models.py:139-154); the
-    * `processed` flag is replaced by checkpoint offsets.
+    * `processed` flag is replaced by the emitter's batch log.
     */
   val MessageSchema: StructType = StructType(Seq(
     StructField("stream", StringType, nullable = false),

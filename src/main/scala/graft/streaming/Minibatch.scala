@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -37,23 +39,21 @@ final case class Minibatch(spark: SparkSession, root: String) {
 
   /** Emitter status by stream name — the engine-level analogue of the
     * reference's StreamingApp `/status` watcher (contrib/apps/omegaml.py:
-    * 8-136), backed by `StreamingQuery.status`/`lastProgress` instead of a
-    * Flask endpoint. `numInputRows` is the emitter's own count of the rows
-    * its latest micro-batch read ([[EmitterRunner.lastInputRows]]): Spark's
-    * `lastProgress.numInputRows` reads 0, as Spark's scan of a batch has
-    * no partitions ([[BufferSource]]). Emitters started through [[EmitterBuilder.start]] are
-    * named `graft-emitter-<stream>` so they are discoverable here.
+    * 8-136), backed by the running emitter's `status`/`lastProgress`
+    * instead of a Flask endpoint. The emitter is the one this JVM runs on
+    * the stream ([[EmitterQuery]]'s registry); `numInputRows` is the rows
+    * its latest batch read, flush sentinels included.
     */
   def status(name: String): EmitterStatus = {
     // lifecycle status from the durable meta.json (reference Stream.status
     // field, models.py:164): "open"/"closed", or "unknown" for a name never
     // registered — independent of whether an emitter is running right now
     val lifecycle = registry.statusOf(name).getOrElse("unknown")
-    spark.streams.active.find(_.name == Minibatch.queryNameFor(name)) match {
+    EmitterQuery.of(java.nio.file.Paths.get(root, name).toString) match {
       case Some(q) =>
         val lp = Option(q.lastProgress)
         EmitterStatus(name, running = q.isActive, queryId = Some(q.id.toString),
-          lastBatchId = lp.map(_.batchId), numInputRows = EmitterRunner.lastInputRows(q),
+          lastBatchId = lp.map(_.batchId), numInputRows = lp.map(_.numInputRows),
           message = q.status.message, streamStatus = lifecycle)
       case None =>
         EmitterStatus(name, running = false, None, None, None,
@@ -100,12 +100,7 @@ final class GraftStatusListener
   def progressJson(stream: String): Option[String] = Option(latest.get(stream))
 
   /** Streams with at least one recorded progress event. */
-  def watched(): Set[String] = {
-    val it = latest.keySet().iterator()
-    val b = Set.newBuilder[String]
-    while (it.hasNext) b += it.next()
-    b.result()
-  }
+  def watched(): Set[String] = latest.keySet().asScala.toSet
 }
 
 /** Snapshot of one named emitter's run state (reference status payload:

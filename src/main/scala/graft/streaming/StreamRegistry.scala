@@ -13,9 +13,9 @@ import org.apache.spark.sql.SparkSession
   * {{{
   *   <root>/<name>/buffer/       appended message parquet (the Buffer)
   *   <root>/<name>/windows/      emitted-window history (persist(keep=true))
-  *   <root>/<name>/checkpoints/  Structured Streaming offsets — replaces the
-  *                               reference's `processed` flag + `last_read`
-  *                               cursor (models.py:143,169)
+  *   <root>/<name>/checkpoints/  the emitter's batch log (graft-batches/) —
+  *                               replaces the reference's `processed` flag
+  *                               + `last_read` cursor (models.py:143,169)
   *   <root>/<name>/meta.json     stream metadata (status, created, interval)
   * }}}
   *

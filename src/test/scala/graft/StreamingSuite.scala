@@ -13,8 +13,7 @@ import graft.streaming._
 import graft.sources.{TableSink, TableTailSource}
 
 /** Semantic ports of the reference's behavioral tests (SURVEY.md §5:
-  * minibatch/tests/test_minibatch.py) against the Structured Streaming
-  * emitter runner.
+  * minibatch/tests/test_minibatch.py) against the emitter run loop.
   */
 class StreamingSuite extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -64,7 +63,7 @@ class StreamingSuite extends AnyFunSuite {
     val (sink1, fn1) = collector()
     mb.streaming("cleaned").size(2).emit(fn1).run()
     assert(sink1.size === 2)
-    // offsets are committed in the checkpoint — consumed messages never re-emit
+    // batches are committed in the batch log — consumed messages never re-emit
     val (sink2, fn2) = collector()
     mb.streaming("cleaned").size(2).emit(fn2).run()
     assert(sink2.isEmpty, s"re-drain must emit nothing, got $sink2")
@@ -788,7 +787,7 @@ class StreamingSuite extends AnyFunSuite {
     val mb = Minibatch(spark, freshRoot())
     val st = mb.stream("upgraded")
     st.appendAll(Seq("""{"i":0}"""))
-    // commits but no carry: the shape a checkpoint of the earlier stateful plan has
+    // committed batches that leave no count carry: a time-window emitter's checkpoint
     mb.streaming("upgraded").emitter(EmitterRunner.RelaxedTimeWindow).emit((_, _) => ()).run()
     st.appendAll(Seq("""{"i":1}""", """{"i":2}"""))
     val e = intercept[IllegalStateException] {
@@ -988,8 +987,7 @@ class StreamingSuite extends AnyFunSuite {
     val (sink, fn) = collector()
     mb.streaming("sidecars").size(1).emit(fn).run()
     assert(sink.size === 6)
-    val dirs = java.nio.file.Paths.get(st.bufferDir) +:
-      Seq("offsets", "commits", "graft-source").map(java.nio.file.Paths.get(st.checkpointsDir, _))
+    val dirs = Seq(java.nio.file.Paths.get(st.bufferDir), BufferSource.logDir(st))
     val crcs = dirs.flatMap { d =>
       assert(Files.isDirectory(d), s"$d must exist after a drain")
       val s = Files.walk(d)
@@ -998,30 +996,28 @@ class StreamingSuite extends AnyFunSuite {
     assert(crcs.isEmpty, s"checksum sidecars: $crcs")
   }
 
+  private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
   private val SparkDefaultManager =
     "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
 
   /** Run `body` with the session's checkpoint manager class set to `cls`
-    * (None: unset), and check that the emitter left a set class untouched
-    * and registered the NIO manager in place of an unset one. */
+    * (None: unset, the emitter's own java.nio writes alone), and check that
+    * the emitter left the setting as it found it. */
   private def underManager[T](cls: Option[String])(body: => T): T = {
-    val key = LocalCheckpointFileManager.ClassKey
-    val before = spark.conf.getOption(key)
-    cls.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val before = spark.conf.getOption(CheckpointManagerKey)
+    cls.fold(spark.conf.unset(CheckpointManagerKey))(spark.conf.set(CheckpointManagerKey, _))
     try {
       val r = body
-      assert(spark.conf.getOption(key) ===
-        Some(cls.getOrElse(classOf[LocalCheckpointFileManager].getName)))
+      assert(spark.conf.getOption(CheckpointManagerKey) === cls)
       r
-    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    } finally before.fold(spark.conf.unset(CheckpointManagerKey))(spark.conf.set(CheckpointManagerKey, _))
   }
 
-  /** The batches whose commit-log entry has a `.crc` sidecar: those Spark's
-    * default manager wrote. */
-  private def checksummedCommits(st: MbStream): Seq[Long] = {
-    val s = Files.list(java.nio.file.Paths.get(st.checkpointsDir, "commits"))
-    try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
-      .collect { case n if n.endsWith(".crc") => n.stripPrefix(".").stripSuffix(".crc").toLong }.sorted
+  /** The `.crc` sidecars in the stream's batch log: none, whatever manager
+    * the session names, since the emitter writes the log through java.nio. */
+  private def batchLogSidecars(st: MbStream): Seq[String] = {
+    val s = Files.list(BufferSource.logDir(st))
+    try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString).filter(_.endsWith(".crc"))
     finally s.close()
   }
 
@@ -1041,7 +1037,7 @@ class StreamingSuite extends AnyFunSuite {
       assert(sink2.toSeq === Seq(2L -> Seq("""{"i":4}""", """{"i":5}"""), 3L -> Seq("""{"i":6}""", """{"i":7}""")))
       val all = (sink1 ++ sink2).flatMap(_._2)
       assert(all.sorted === (0 until 8).map(i => s"""{"i":$i}""").sorted)
-      assert(checksummedCommits(st) === Seq(if (first.isDefined) 0L else 1L))
+      assert(batchLogSidecars(st).isEmpty)
     }
 
     test(s"restart: an interval(60, relaxed = false).keep(true) checkpoint of $label: exactly once, ids and history continue") {
@@ -1059,11 +1055,11 @@ class StreamingSuite extends AnyFunSuite {
       write(0L, 70L)
       assert(drain(first) === Seq(0L -> Seq("""{"o":0}"""), 1L -> Seq("""{"o":70}""")))
       write(190L, 200L)
-      // the gap window 2 comes from the high-water mark read back from the kept history
+      // the gap window 2 comes from the high-water mark in the batch log
       assert(drain(second) === Seq(2L -> Nil, 3L -> Seq("""{"o":190}""", """{"o":200}""")))
       assert(st.windows().selectExpr("window_id - " + base / 60).collect().map(_.getLong(0)).sorted.toSeq ===
         Seq(0L, 1L, 3L, 3L))
-      assert(checksummedCommits(st) === Seq(if (first.isDefined) 0L else 1L))
+      assert(batchLogSidecars(st).isEmpty)
     }
   }
 
@@ -1083,28 +1079,26 @@ class StreamingSuite extends AnyFunSuite {
     val n = 24
     val now = new Timestamp(System.currentTimeMillis())
     writeInOrder(st, (0 until n).map(i => Seq((s"""{"i":$i}""", now))))
-    // window w holds messages 2w and 2w + 1, emitted by micro-batch 2w + 1;
-    // the stop interrupts window 6's emit before it records, in batch 13
+    // window w holds messages 2w and 2w + 1, emitted by batch 2w + 1; the
+    // emit of window 6 fails, which leaves batch 13 recorded, uncommitted
     val stopAt = 6L
-    val reached = new java.util.concurrent.CountDownLatch(1)
     val (sink1, fn1) = collector()
-    val q = mb.streaming(st.name).size(2).maxFilesPerTrigger(1)
-      .withTrigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-      .emit { (id, df) =>
-        if (id == stopAt) { reached.countDown(); Thread.sleep(600000L) }
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      mb.streaming(st.name).size(2).maxFilesPerTrigger(1).emit { (id, df) =>
+        if (id == stopAt) sys.error("stop at window 6")
         fn1(id, df)
-      }.start()
-    try assert(reached.await(120, java.util.concurrent.TimeUnit.SECONDS), "the emitter never reached window 6")
-    finally q.stop()
+      }.run()
+    }
     assert(sink1.map(_._1) === (0L until stopAt))
-    val sources = BufferSource.logDir(st.checkpointsDir)
+    val sources = BufferSource.logDir(st)
     assert(Files.exists(sources.resolve("9.compact")) && !Files.exists(sources.resolve("19.compact")))
+    assert(Files.exists(sources.resolve("13")) && !Files.exists(sources.resolve("13.commit")))
     val (sink2, fn2) = collector()
     mb.streaming(st.name).size(2).maxFilesPerTrigger(1).emit(fn2).run()
     assert(Files.exists(sources.resolve("19.compact")))
     // a compaction keeps the entries since the previous one
     assert(!Files.exists(sources.resolve("9.compact")) && !Files.exists(sources.resolve("9")) &&
-      Files.exists(sources.resolve("10")))
+      !Files.exists(sources.resolve("9.commit")) && Files.exists(sources.resolve("10")))
     assert((sink1 ++ sink2).toSeq === (0 until n / 2).map(w =>
       w.toLong -> Seq(s"""{"i":${2 * w}}""", s"""{"i":${2 * w + 1}}""")))
   }
@@ -1120,8 +1114,7 @@ class StreamingSuite extends AnyFunSuite {
       fn(id, df)
     }.run()
     // the source had listed the file before it went, so batch 1 names it
-    val batch1 = BufferSource.logDir(st.checkpointsDir).resolve("1")
-    assert(new String(Files.readAllBytes(batch1), "UTF-8").contains(files(1).getFileName.toString))
+    assert(logEntry(st, "1") === Seq(files(1).getFileName.toString))
     assert(sink.toSeq === Seq(0L -> Seq("""{"i":0}"""), 1L -> Seq("""{"i":2}""")))
   }
 
@@ -1132,11 +1125,13 @@ class StreamingSuite extends AnyFunSuite {
     assert(cond, s"timed out waiting for $what")
   }
 
+  /** The file names a batch record or a compact file of the batch log holds. */
   private def logEntry(st: MbStream, name: String): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    val lines = Files.readAllLines(BufferSource.logDir(st.checkpointsDir).resolve(name)).asScala.toSeq
-    assert(lines.head === "v1")
-    lines.tail
+    val in = new java.io.DataInputStream(Files.newInputStream(BufferSource.logDir(st).resolve(name)))
+    try {
+      assert(in.readInt() === 1, "batch log format")
+      Seq.fill(in.readInt())(in.readUTF())
+    } finally in.close()
   }
 
   test("a file published late, with an older mtime than files already emitted, is emitted exactly once") {
@@ -1177,13 +1172,11 @@ class StreamingSuite extends AnyFunSuite {
     drain(fn)
     publish(1)
     intercept[org.apache.spark.sql.streaming.StreamingQueryException](drain((_, _) => sys.error("emit failed")))
-    // batch 1's entry names f1; drop Spark's offset of batch 1, which leaves
-    // the state of a stop between the source log's write and Spark's
-    assert(logEntry(st, "1").size === 1)
-    Files.delete(java.nio.file.Paths.get(st.checkpointsDir, "offsets", "1"))
+    // batch 1's record names f1 and has no commit marker
+    assert(logEntry(st, "1").size === 1 && !Files.exists(BufferSource.logDir(st).resolve("1.commit")))
     publish(2)
     drain(fn)
-    // batch 1 reran its recorded entry instead of listing f1 and f2 together
+    // batch 1 reran its record instead of listing f1 and f2 together
     assert(sink.toSeq === Seq(0L -> Seq("""{"f":0}"""), 1L -> Seq("""{"f":1}"""), 2L -> Seq("""{"f":2}""")))
     assert(logEntry(st, "1").size === 1 && logEntry(st, "2").size === 1)
   }
@@ -1222,7 +1215,7 @@ class StreamingSuite extends AnyFunSuite {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch((_: DataFrame, _: Long) => ()).start().awaitTermination()
     val cp = java.nio.file.Paths.get(st.checkpointsDir)
-    assert(Files.isDirectory(cp.resolve("sources/0")) && !Files.exists(BufferSource.logDir(st.checkpointsDir)))
+    assert(Files.isDirectory(cp.resolve("sources/0")) && !Files.exists(BufferSource.logDir(st)))
     val (sink, fn) = collector()
     val e = intercept[IllegalStateException](mb.streaming(st.name).size(1).emit(fn).run())
     Seq("'file-source'", cp.resolve("sources/0").toString, s"delete ${st.checkpointsDir}").foreach(s =>
@@ -1232,6 +1225,178 @@ class StreamingSuite extends AnyFunSuite {
     Files.walk(cp).sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
     mb.streaming(st.name).size(1).emit(fn).run()
     assert(sink.flatMap(_._2).sorted === Seq("""{"i":0}""", """{"i":1}"""))
+  }
+
+  test("an emitter refuses a checkpoint left by the emitter on Spark's streaming engine, naming it and both ways out") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("spark-loop")
+    st.appendAll(Seq("""{"i":0}""", """{"i":1}"""))
+    // the checkpoint that emitter left: Spark's offsets and commits logs,
+    // its metadata, and its own graft-source and graft-count logs
+    val cp = java.nio.file.Paths.get(st.checkpointsDir)
+    for (f <- Seq("metadata", "offsets/0", "commits/0", "graft-source/0", "graft-count/0")) {
+      Files.createDirectories(cp.resolve(f).getParent)
+      Files.write(cp.resolve(f), "v1\n".getBytes("UTF-8"))
+    }
+    val (sink, fn) = collector()
+    val e = intercept[IllegalStateException](mb.streaming(st.name).size(1).emit(fn).run())
+    Seq("'spark-loop'", cp.resolve("offsets").toString, "on the release that wrote the checkpoint",
+        s"delete ${st.checkpointsDir}").foreach(s =>
+      assert(e.getMessage.contains(s), s"the message must name $s: ${e.getMessage}"))
+    assert(sink.isEmpty && !Files.exists(BufferSource.logDir(st)))
+    Files.walk(cp).sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
+    mb.streaming(st.name).size(1).emit(fn).run()
+    assert(sink.flatMap(_._2).sorted === Seq("""{"i":0}""", """{"i":1}"""))
+  }
+
+  test("start() refuses a second emitter on a stream whose emitter runs") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("single")
+    val q = mb.streaming(st.name).size(1)
+      .withTrigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(50)).start()
+    try {
+      val e = intercept[IllegalArgumentException](mb.streaming(st.name).size(1).run())
+      assert(e.getMessage.contains(st.name), e.getMessage)
+      assert(q.isActive && q.exception.isEmpty, "the running emitter is untouched")
+    } finally q.stop()
+    assert(!q.isActive)
+    mb.streaming(st.name).size(1).run() // the stream is free again
+  }
+
+  test("start() refuses any trigger but ProcessingTime and AvailableNow, naming it") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("once")
+    val e = intercept[IllegalArgumentException](mb.streaming(st.name).size(1)
+      .withTrigger(org.apache.spark.sql.streaming.Trigger.Once()).start())
+    assert(e.getMessage.contains("OneTimeTrigger"), e.getMessage)
+  }
+
+  /** Records the progress events of one emitter. */
+  private final class Progress(name: String) extends org.apache.spark.sql.streaming.StreamingQueryListener {
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.streaming.StreamingQueryProgress]()
+    override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+    override def onQueryProgress(e: QueryProgressEvent): Unit = if (e.progress.name == name) events.add(e.progress)
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+  }
+
+  test("an idle ProcessingTime emitter posts no progress event and runs no Spark job; one append posts one") {
+    new JobLog().around { jl =>
+      val mb = Minibatch(spark, freshRoot())
+      val st = mb.stream("idle")
+      val progress = new Progress(Minibatch.queryNameFor(st.name))
+      spark.streams.addListener(progress)
+      val (sink, fn) = collector()
+      val q = mb.streaming(st.name).size(1)
+        .withTrigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(10)).emit(fn).start()
+      try {
+        Thread.sleep(1000)
+        jl.settle()
+        assert(progress.events.isEmpty, s"idle polls posted ${progress.events.size} progress events")
+        assert(jl.jobs.filter(_._2 == q.id.toString).isEmpty, "idle polls must start no Spark job")
+        st.append("""{"i":0}""")
+        await("the appended message")(sink.size == 1 && !progress.events.isEmpty)
+        Thread.sleep(300)
+        import scala.jdk.CollectionConverters._
+        val ps = progress.events.asScala.toSeq
+        assert(ps.size === 1, s"one batch, one event: $ps")
+        assert(ps.head.durationMs.containsKey("addBatch") && ps.head.numInputRows === 1 && ps.head.batchId === 0)
+        assert(ps.head.stateOperators.isEmpty)
+      } finally { q.stop(); spark.streams.removeListener(progress) }
+    }
+  }
+
+  test("stop() while emitFn blocks lets the batch commit first; a restart re-emits nothing from it") {
+    import graft.sources.IdempotentTableSink
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("stopped")
+    st.appendAll(Seq("""{"i":0}""", """{"i":1}"""))
+    val target = Files.createTempDirectory("graft-stop-sink").toString + "/out"
+    val sink = new IdempotentTableSink(target)
+    val inEmit = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val (emitted, fn) = collector()
+    val q = mb.streaming(st.name).size(1).keep(true).batchSink((df, b) => sink.put(df, b))
+      .withTrigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(10))
+      .emit { (id, df) =>
+        fn(id, df)
+        if (id == 0) { inEmit.countDown(); release.await() }
+      }.start()
+    assert(inEmit.await(60, java.util.concurrent.TimeUnit.SECONDS), "the emitter never reached window 0")
+    val stopper = new Thread(() => q.stop())
+    stopper.start()
+    Thread.sleep(300)
+    assert(stopper.isAlive, "stop() must wait for the batch in flight")
+    release.countDown()
+    stopper.join(60000)
+    assert(!stopper.isAlive && !q.isActive && q.exception.isEmpty)
+    assert(emitted.map(_._1) === Seq(0L, 1L))
+    assert(Files.exists(BufferSource.logDir(st).resolve("0.commit")), "batch 0 is committed")
+    assert(st.windows().where("batch_id = 0").count() === 2)
+    assert(spark.read.parquet(target).where("batch_id = 0").count() === 2)
+    val (again, fn2) = collector()
+    mb.streaming(st.name).size(1).keep(true).batchSink((df, b) => sink.put(df, b)).emit(fn2).run()
+    assert(again.isEmpty, s"a restart must not emit batch 0 again: $again")
+  }
+
+  test("a size(2) batch recorded but not committed replays with the same carry and window ids") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("replay-count")
+    def drain(): Seq[(Long, Seq[String])] = {
+      val (sink, fn) = collector()
+      mb.streaming(st.name).size(2).emit(fn).run()
+      sink.toSeq
+    }
+    st.appendAll((0 until 3).map(i => s"""{"i":$i}"""))
+    assert(drain().map(_._1) === Seq(0L))
+    st.appendAll((3 until 6).map(i => s"""{"i":$i}"""))
+    val batch1 = drain()
+    assert(batch1 === Seq(1L -> Seq("""{"i":2}""", """{"i":3}"""), 2L -> Seq("""{"i":4}""", """{"i":5}""")))
+    // the emitter dies between batch 1's record and its commit marker
+    Files.delete(BufferSource.logDir(st).resolve("1.commit"))
+    st.appendAll(Seq("""{"i":6}"""))
+    assert(drain() === batch1, "batch 1 runs again from its own files and carry")
+    st.appendAll(Seq("""{"i":7}"""))
+    assert(drain() === Seq(3L -> Seq("""{"i":6}""", """{"i":7}""")), "ids and carry continue after the replay")
+  }
+
+  test("an interval(60, relaxed = false).emitEmpty(true) batch recorded but not committed replays its gap window, keep(false)") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("replay-fixed")
+    val base = 1699999980L // aligned to the 60 s grid
+    def write(offs: Long*): Unit =
+      st.writeBufferFile(offs.map(o => (s"""{"o":$o}""", new Timestamp((base + o) * 1000L))))
+    def drain(): Seq[(Long, Seq[String])] = {
+      val (sink, fn) = collector()
+      mb.streaming(st.name).interval(60, relaxed = false).emitEmpty(true).keep(false).emit(fn).run()
+      sink.toSeq.map { case (id, rows) => (id - base / 60, rows) }
+    }
+    write(0L)
+    assert(drain() === Seq(0L -> Seq("""{"o":0}""")))
+    write(130L)
+    // the gap window 1 spans the restart: the mark comes from the batch log
+    val batch1 = drain()
+    assert(batch1 === Seq(1L -> Nil, 2L -> Seq("""{"o":130}""")))
+    Files.delete(BufferSource.logDir(st).resolve("1.commit"))
+    assert(drain() === batch1, "batch 1 runs again from its own files and mark")
+    write(250L)
+    assert(drain() === Seq(3L -> Nil, 4L -> Seq("""{"o":250}""")))
+  }
+
+  test("tooling guard: src/main imports no Spark streaming internals but the trigger decoder's, and sets no checkpoint manager") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 50, s"the sources under ${root.toAbsolutePath}")
+    val allowed = (java.nio.file.Paths.get("src/main/scala/graft/streaming/EmitterRunner.scala"),
+      "import org.apache.spark.sql.execution.streaming.{AvailableNowTrigger, ProcessingTimeTrigger}")
+    val bad = files.flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (l, i) if (l.contains("org.apache.spark.sql.execution.streaming") && (f, l.trim) != allowed) ||
+            l.contains("checkpointFileManagerClass") => s"$f:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
   }
 
   test("emitEmpty: a late micro-batch does not lower the high-water mark, so no window is emitted twice") {
@@ -1317,7 +1482,7 @@ class StreamingSuite extends AnyFunSuite {
     val layout = slices(st)
     assert(before.size === 9 && layout.keySet === Set("batch_id=0", "batch_id=1", "batch_id=2"))
     // a failure after batch 2's writes and before its commit: the restart re-runs it
-    Files.delete(java.nio.file.Paths.get(st.checkpointsDir, "commits", "2"))
+    Files.delete(BufferSource.logDir(st).resolve("2.commit"))
     drain()
     assert(sink.size === 4 && sink(3) === sink(2), s"batch 2's window is emitted again: $sink")
     assert(history(st) === before)
@@ -1344,7 +1509,7 @@ class StreamingSuite extends AnyFunSuite {
       Files.copy(dir.resolve(".batch_id=2.a.old").resolve(file), dir.resolve(staged).resolve(file))
     }
     assert(history(st) === before.filter(_._5 != 2L), "windows() reads no hidden slice")
-    Files.delete(java.nio.file.Paths.get(st.checkpointsDir, "commits", "2"))
+    Files.delete(BufferSource.logDir(st).resolve("2.commit"))
     drain()
     assert(history(st) === before)
     assert(slices(st).keySet === Set("batch_id=0", "batch_id=1", "batch_id=2", ".batch_id=1.c.tmp"),
@@ -1372,8 +1537,8 @@ class StreamingSuite extends AnyFunSuite {
     }.distinct
     assert(createdTypes("batch_id=0") === Seq("INT96") && createdTypes("batch_id=1") === Seq("INT64"))
     assert(history(st) === before)
-    // a restart with emitEmpty recovers window 2 as the mark from the mixed
-    // history: windows 3 and 4 are gaps before the new window 5
+    // a restart with emitEmpty takes window 2 as the mark from the batch
+    // log: windows 3 and 4 are gaps before the new window 5
     writeInOrder(st, Seq(Seq(("""{"k":5}""", new Timestamp(t0 + 5000L)))))
     val (sink, fn) = collector()
     mb.streaming(st.name).interval(1, relaxed = false).keep(true).emitEmpty(true).emit(fn).run()
@@ -1392,10 +1557,12 @@ class StreamingSuite extends AnyFunSuite {
       .emit((_, df) => { emitted.addAndGet(df.collect().length); () }).start()
     try {
       val deadline = System.currentTimeMillis() + 60000
-      while (emitted.get < k && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      // the batch's progress is reported once it has committed, after its emits
+      while ((emitted.get < k || q.lastProgress == null) && System.currentTimeMillis() < deadline) Thread.sleep(50)
       assert(emitted.get === k)
       val s = mb.status(st.name)
       assert(s.running && s.numInputRows === Some(k.toLong))
+      assert(q.lastProgress.numInputRows === k)
       val srv = new StatusServer(mb, port = 0)
       try {
         val conn = java.net.URI.create(s"http://127.0.0.1:${srv.boundPort}/status/${st.name}").toURL.openStream()
