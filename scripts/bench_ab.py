@@ -1,11 +1,13 @@
 #!/usr/bin/env python3
-"""A/B runs of one benchmark workload: a parent checkout against a change.
+"""A/B runs of one benchmark workload, or of batch queries: a parent checkout against a change.
 
 Usage (from the root of the change's checkout):
 
     git worktree add ../parent HEAD~1
     python3 scripts/bench_ab.py --parent ../parent --change . \\
         --workload stream.fixed_keep --pairs 10 --seed 901
+    python3 scripts/bench_ab.py --parent ../parent --change . \\
+        --queries dedup_minhash,text_tfidf --sf-dir <data>/sf0.1 --pairs 5
 
 Make the parent checkout with `git worktree add` (or `git clone`), never
 by copying a checkout: a copy carries `target/`, whose incremental-compile
@@ -24,11 +26,22 @@ gap is in the better direction and larger than the parent's quartile
 spread. The regression verdict compares the median change with the
 metric's bound. With `--trace 1` it also prints both sides' medians of
 every `per_layer` metric of BENCHMARK.json that both sides report, which
-shows the layer a gain or a loss comes from. Exit status is 0 unless a
-run failed or was not correct. Standard library only.
+shows the layer a gain or a loss comes from.
+
+With `--queries a,b,...` each run is instead `sbt runMain graft.Bench a b
+...` with `SPARK_GRAFT_SF_DIR` set to `--sf-dir`, in the same alternating
+pairs, and the run's per-query seconds (Bench's best sample of the run)
+are read from that checkout's `target/bench.json`, which holds every
+query (Bench's final stdout line may drop the fastest). For each query it
+prints each side's median and quartiles, the change's wins (lower is
+better), and the change-minus-parent median gap against the parent's
+quartile spread; a query is `within` when the change's median is no more
+than the parent's median plus that spread. Exit status is 0 unless a run
+failed or was not correct. Standard library only.
 """
 import argparse
 import json
+import os
 import statistics
 import subprocess
 import sys
@@ -63,6 +76,40 @@ def build(checkout: Path) -> None:
                  "make the checkout with `git worktree add` or `git clone`, not by copying one")
 
 
+def run_queries(checkout: Path, names, sf_dir: Path):
+    """One `graft.Bench` run of `names` in a checkout: its target/bench.json object, or None."""
+    out = checkout / "target" / "bench.json"
+    out.unlink(missing_ok=True)
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=str(sf_dir))
+    proc = subprocess.run(["sbt", "-batch", "runMain graft.Bench " + " ".join(names)], cwd=checkout, env=env,
+                          stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
+    if proc.returncode != 0 or not out.is_file():
+        tail = "\n".join(proc.stderr.strip().splitlines()[-5:])
+        print(f"  {checkout}: exit {proc.returncode}\n{tail}", file=sys.stderr)
+        return None
+    return json.loads(out.read_text())
+
+
+def build_sbt(checkout: Path) -> None:
+    """Compiles a checkout and exits unless the program's classes are then in place."""
+    proc = subprocess.run(["sbt", "-batch", "compile"], cwd=checkout,
+                          stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
+    if proc.returncode != 0 or not (checkout / CLASS_PROBE).is_file():
+        sys.exit(f"{checkout}: `sbt compile` failed (exit {proc.returncode}) or left no {CLASS_PROBE}")
+
+
+def alternate(pairs: int, run_side):
+    """Runs `pairs` pairs, the parent first in even pairs and the change first
+    in odd ones, and yields each pair's index and `{"first", "parent", "change"}`
+    as soon as both sides have run; `run_side(side, i)` runs one side."""
+    for i in range(pairs):
+        order = SIDES if i % 2 == 0 else SIDES[::-1]
+        pair = {"first": order[0]}
+        for side in order:
+            pair[side] = run_side(side, i)
+        yield i, pair
+
+
 def quartiles(xs):
     if len(xs) < 2:
         return (xs[0],) * 3 if xs else (float("nan"),) * 3
@@ -83,29 +130,32 @@ def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--parent", required=True, type=Path, help="checkout of the parent commit")
     ap.add_argument("--change", required=True, type=Path, help="checkout of the change")
-    ap.add_argument("--workload", required=True)
+    ap.add_argument("--workload", help="perfbench workload (one of BENCHMARK.json's)")
+    ap.add_argument("--queries", type=lambda v: [q for q in v.split(",") if q],
+                    help="comma-separated graft.Bench query names, instead of --workload")
+    ap.add_argument("--sf-dir", type=Path, help="data directory of the --queries runs")
     ap.add_argument("--pairs", required=True, type=int)
-    ap.add_argument("--seed", required=True, type=int, help="seed of the first pair")
+    ap.add_argument("--seed", type=int, help="seed of the first pair (--workload)")
     ap.add_argument("--seconds", type=int, default=24)
     ap.add_argument("--trace", type=int, default=0, choices=(0, 1))
     ap.add_argument("--out", type=Path, help="also write every run's result here, as JSON")
     a = ap.parse_args()
 
+    dirs = {"parent": a.parent.resolve(), "change": a.change.resolve()}
+    if a.queries:
+        return queries_main(a, dirs)
+    if a.workload is None or a.seed is None:
+        ap.error("--workload and --seed are required without --queries")
     spec = json.loads((a.change / "BENCHMARK.json").read_text())
     gated = spec["end_to_end"]
-    dirs = {"parent": a.parent.resolve(), "change": a.change.resolve()}
     for side in SIDES:
         build(dirs[side])
     results = []  # per pair: {"seed", "first", "parent", "change"}
     ok = True
-    for i in range(a.pairs):
-        seed = a.seed + i
-        order = SIDES if i % 2 == 0 else SIDES[::-1]
-        pair = {"seed": seed, "first": order[0]}
-        for side in order:
-            pair[side] = run(dirs[side], a.workload, seed, a.seconds, a.trace)
+    for i, pair in alternate(a.pairs, lambda side, i: run(dirs[side], a.workload, a.seed + i, a.seconds, a.trace)):
+        pair["seed"] = a.seed + i
         results.append(pair)
-        print(f"pair {i + 1}/{a.pairs} seed {seed} ({order[0]} first)")
+        print(f"pair {i + 1}/{a.pairs} seed {pair['seed']} ({pair['first']} first)")
         for side in SIDES:
             r = pair[side]
             if r is None:
@@ -148,6 +198,44 @@ def main() -> int:
             if vals["parent"] and vals["change"]:
                 print(f"    {m['name']} [{m['unit']}, {m['better']} is better]: "
                       f"{fmt(statistics.median(vals['parent']))} -> {fmt(statistics.median(vals['change']))}")
+    return 0 if ok and len(done) == a.pairs else 1
+
+
+def queries_main(a, dirs) -> int:
+    if a.sf_dir is None:
+        sys.exit("--queries needs --sf-dir")
+    for side in SIDES:
+        build_sbt(dirs[side])
+    results, ok = [], True
+    for i, pair in alternate(a.pairs, lambda side, i: run_queries(dirs[side], a.queries, a.sf_dir.resolve())):
+        results.append(pair)
+        print(f"pair {i + 1}/{a.pairs} ({pair['first']} first)")
+        for side in SIDES:
+            r = pair[side]
+            if r is None or r.get("failed"):
+                print(f"  {side:6} FAILED {r and r['failed']}")
+                ok = False
+                continue
+            print(f"  {side:6} " + " ".join(f"{q}={fmt(r['queries'][q])}" for q in a.queries))
+        sys.stdout.flush()
+    if a.out:
+        a.out.write_text(json.dumps(results, indent=1))
+
+    done = [p for p in results if p["parent"] and p["change"] and not p["parent"].get("failed")
+            and not p["change"].get("failed")]
+    print(f"\nqueries at {a.sf_dir}: {len(done)} complete pairs of {a.pairs}; seconds, lower is better")
+    print(f"  {'query':32} {'parent median (q1..q3)':>26} {'change median (q1..q3)':>26} "
+          f"{'wins':>6} {'gap':>8} {'spread':>7}  verdict")
+    for q in a.queries:
+        vals = {s: [p[s]["queries"][q] for p in done] for s in SIDES}
+        if not vals["parent"]:
+            continue
+        (p1, pm, p3), (c1, cm, c3) = quartiles(vals["parent"]), quartiles(vals["change"])
+        wins = sum(c < p for p, c in zip(vals["parent"], vals["change"]))
+        gap, spread = cm - pm, p3 - p1
+        verdict = "within" if gap <= spread else "SLOWER than the parent's median plus spread"
+        print(f"  {q:32} {fmt(pm):>8} ({fmt(p1)}..{fmt(p3)}){'':>3} {fmt(cm):>8} ({fmt(c1)}..{fmt(c3)}){'':>3} "
+              f"{wins:>3}/{len(done):<2} {gap:>+8.3f} {spread:>7.3f}  {verdict}")
     return 0 if ok and len(done) == a.pairs else 1
 
 

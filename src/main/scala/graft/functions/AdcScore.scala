@@ -35,57 +35,36 @@ case class AdcScore(codes: Expression, lut: Expression, ksub: Int)
   override def inputTypes =
     Seq(ArrayType(LongType), ArrayType(DoubleType))
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val cs = a.asInstanceOf[ArrayData]
-    val table = b.asInstanceOf[ArrayData]
-    val m = cs.numElements()
-    val len = table.numElements()
-    var s = 0.0
-    var sub = 0
-    while (sub < m) {
-      val code = cs.getLong(sub)
-      val idx = sub * ksub + code
-      if (code < 0 || code >= ksub || idx >= len) {
-        throw new IllegalArgumentException(
-          s"graft_adc: code $code at sub $sub out of range (ksub=$ksub, lut=$len)")
-      }
-      s += table.getDouble(idx.toInt)
-      sub += 1
-    }
-    s
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    AdcScore.score(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], ksub)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val m = ctx.freshName("m")
-      val len = ctx.freshName("len")
-      val s = ctx.freshName("s")
-      val sub = ctx.freshName("sub")
-      val code = ctx.freshName("code")
-      val idx = ctx.freshName("idx")
-      s"""
-         |int $m = $a.numElements();
-         |int $len = $b.numElements();
-         |double $s = 0.0;
-         |for (int $sub = 0; $sub < $m; $sub++) {
-         |  long $code = $a.getLong($sub);
-         |  long $idx = (long) $sub * $ksub + $code;
-         |  if ($code < 0 || $code >= $ksub || $idx >= $len) {
-         |    throw new IllegalArgumentException(
-         |      "graft_adc: code " + $code + " at sub " + $sub +
-         |      " out of range (ksub=" + $ksub + ", lut=" + $len + ")");
-         |  }
-         |  $s += $b.getDouble((int) $idx);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = graft.functions.AdcScore.score($a, $b, $ksub);")
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(codes = newLeft, lut = newRight)
 }
 
 object AdcScore {
+  /** The kernel, shared by interpreted eval and generated code. */
+  def score(codes: ArrayData, lut: ArrayData, ksub: Int): Double = {
+    val m = codes.numElements()
+    val len = lut.numElements()
+    var s = 0.0
+    var sub = 0
+    while (sub < m) {
+      val code = codes.getLong(sub)
+      val idx = sub.toLong * ksub + code
+      if (code < 0 || code >= ksub || idx >= len) {
+        throw new IllegalArgumentException(
+          s"graft_adc: code $code at sub $sub out of range (ksub=$ksub, lut=$len)")
+      }
+      s += lut.getDouble(idx.toInt)
+      sub += 1
+    }
+    s
+  }
+
   /** Column API: `codes` array<long> (length m), `lut` array<double>
     * (length m·ksub, row-major by subspace).
     */

@@ -23,12 +23,23 @@ case class DotProduct(left: Expression, right: Expression)
   override def inputTypes =
     Seq(ArrayType(DoubleType), ArrayType(DoubleType))
 
-  // Mismatched dimensionality is a data/config bug (e.g. planes generated
-  // for the wrong dim) — silently truncating to min length would return
-  // plausible-but-wrong scores, so fail loudly instead.
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DotProduct.product(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = graft.functions.DotProduct.product($a, $b);")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object DotProduct {
+  /** The kernel, shared by interpreted eval and generated code.
+    * Mismatched dimensionality is a data/config bug (e.g. planes generated
+    * for the wrong dim) — silently truncating to min length would return
+    * plausible-but-wrong scores, so fail loudly instead.
+    */
+  def product(x: ArrayData, y: ArrayData): Double = {
     val n = x.numElements()
     if (n != y.numElements()) {
       throw new IllegalArgumentException(
@@ -40,30 +51,6 @@ case class DotProduct(left: Expression, right: Expression)
     s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  throw new IllegalArgumentException(
-         |    "graft_dot: vector length mismatch (" + $n + " vs " + $b.numElements() + ")");
-         |}
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += $a.getDouble($i) * $b.getDouble($i);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object DotProduct {
   /** Column API over the native expression. Inputs must be array<double>. */
   def dot(a: Column, b: Column): Column =
     ColumnBridge.column(DotProduct(ColumnBridge.expression(a), ColumnBridge.expression(b)))

@@ -32,9 +32,19 @@ case class DotSortedPairs(left: Expression, right: Expression)
 
   override def inputTypes = Seq(pairType, pairType)
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DotSortedPairs.mergeDot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = graft.functions.DotSortedPairs.mergeDot($a, $b);")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object DotSortedPairs {
+  /** The kernel, shared by interpreted eval and generated code. */
+  def mergeDot(x: ArrayData, y: ArrayData): Double = {
     val n = x.numElements()
     val m = y.numElements()
     var i = 0
@@ -52,39 +62,6 @@ case class DotSortedPairs(left: Expression, right: Expression)
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val m = ctx.freshName("m")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val acc = ctx.freshName("acc")
-      val xr = ctx.freshName("xr")
-      val yr = ctx.freshName("yr")
-      val xh = ctx.freshName("xh")
-      val yh = ctx.freshName("yh")
-      s"""
-         |int $n = $a.numElements();
-         |int $m = $b.numElements();
-         |int $i = 0; int $j = 0; double $acc = 0.0;
-         |while ($i < $n && $j < $m) {
-         |  org.apache.spark.sql.catalyst.InternalRow $xr = $a.getStruct($i, 2);
-         |  org.apache.spark.sql.catalyst.InternalRow $yr = $b.getStruct($j, 2);
-         |  long $xh = $xr.getLong(0);
-         |  long $yh = $yr.getLong(0);
-         |  if ($xh < $yh) { $i++; }
-         |  else if ($xh > $yh) { $j++; }
-         |  else { $acc += $xr.getDouble(1) * $yr.getDouble(1); $i++; $j++; }
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object DotSortedPairs {
   /** Column API: Σ w_a·w_b over shared keys of two ascending-key-sorted
     * `array<struct<h: long, w: double>>` columns.
     */

@@ -32,9 +32,20 @@ case class IntersectCountSorted(left: Expression, right: Expression)
   override def inputTypes =
     Seq(ArrayType(LongType), ArrayType(LongType))
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    IntersectCountSorted.mergeCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.IntersectCountSorted.mergeCount($a, $b);")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object IntersectCountSorted {
+  /** The kernel, shared by interpreted eval and generated code. */
+  def mergeCount(x: ArrayData, y: ArrayData): Int = {
     val n = x.numElements()
     val m = y.numElements()
     var i = 0
@@ -50,35 +61,6 @@ case class IntersectCountSorted(left: Expression, right: Expression)
     c
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val m = ctx.freshName("m")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      s"""
-         |int $n = $a.numElements();
-         |int $m = $b.numElements();
-         |int $i = 0; int $j = 0; int $c = 0;
-         |while ($i < $n && $j < $m) {
-         |  long $xv = $a.getLong($i);
-         |  long $yv = $b.getLong($j);
-         |  if ($xv < $yv) { $i++; }
-         |  else if ($xv > $yv) { $j++; }
-         |  else { $c++; $i++; $j++; }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object IntersectCountSorted {
   /** Column API: count of common elements of two sorted-ascending
     * `array<long>` columns.
     */

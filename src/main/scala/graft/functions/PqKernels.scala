@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
@@ -38,19 +38,84 @@ object PqKernels {
   final case class DenseCodebook(
       cb: Array[Double], cn2: Array[Double], m: Int, ksub: Int, dsub: Int)
 
-  /** In-place unit-normalization of a copied input vector; the summation
+  /** The input vector as a copied array, checked against the codebook's
+    * m·dsub and (when `normalize`) unit-normalized in place; the summation
     * order matches the HOF `aggregate` formulation the trainers use, so
     * codes from this kernel are bitwise-identical to the declarative
     * argmin's.
     */
-  private[functions] def normalized(v: ArrayData): Array[Double] = {
+  private def checkedVector(v: ArrayData, book: DenseCodebook, normalize: Boolean, fn: String): Array[Double] = {
     val x = v.toDoubleArray()
-    var n2 = 0.0
-    var i = 0
-    while (i < x.length) { n2 += x(i) * x(i); i += 1 }
-    val n = math.sqrt(n2)
-    if (n > 0.0) { i = 0; while (i < x.length) { x(i) /= n; i += 1 } }
+    if (x.length != book.m * book.dsub) {
+      throw new IllegalArgumentException(
+        s"$fn: vector length ${x.length} != ${book.m * book.dsub}")
+    }
+    if (normalize) {
+      var n2 = 0.0
+      var i = 0
+      while (i < x.length) { n2 += x(i) * x(i); i += 1 }
+      val n = math.sqrt(n2)
+      if (n > 0.0) { i = 0; while (i < x.length) { x(i) /= n; i += 1 } }
+    }
     x
+  }
+
+  /** Encode kernel of [[PqCodes]], shared by interpreted eval and
+    * generated code.
+    */
+  def encode(v: ArrayData, book: DenseCodebook, normalize: Boolean): ArrayData = {
+    val x = checkedVector(v, book, normalize, "graft_pq_codes")
+    val out = new Array[Long](book.m)
+    var sub = 0
+    while (sub < book.m) {
+      var bestCell = -1
+      var bestD = Double.PositiveInfinity
+      var cell = 0
+      while (cell < book.ksub) {
+        val c2 = book.cn2(sub * book.ksub + cell)
+        if (c2 != Double.PositiveInfinity) {
+          var dot = 0.0
+          val off = (sub * book.ksub + cell) * book.dsub
+          val voff = sub * book.dsub
+          var d = 0
+          while (d < book.dsub) { dot += x(voff + d) * book.cb(off + d); d += 1 }
+          val dist = c2 - 2.0 * dot
+          if (dist < bestD) { bestD = dist; bestCell = cell }
+        }
+        cell += 1
+      }
+      if (bestCell < 0) throw new IllegalStateException(
+        s"graft_pq_codes: no surviving cell in sub $sub")
+      out(sub) = bestCell.toLong
+      sub += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  /** Lookup-table kernel of [[PqLut]], shared by interpreted eval and
+    * generated code.
+    */
+  def lut(v: ArrayData, book: DenseCodebook): ArrayData = {
+    val x = checkedVector(v, book, normalize = true, "graft_pq_lut")
+    val out = new Array[Double](book.m * book.ksub)
+    var sub = 0
+    while (sub < book.m) {
+      var cell = 0
+      while (cell < book.ksub) {
+        val sc = sub * book.ksub + cell
+        if (book.cn2(sc) != Double.PositiveInfinity) {
+          var dot = 0.0
+          val off = sc * book.dsub
+          val voff = sub * book.dsub
+          var d = 0
+          while (d < book.dsub) { dot += x(voff + d) * book.cb(off + d); d += 1 }
+          out(sc) = dot
+        }
+        cell += 1
+      }
+      sub += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   /** PQ encode as a scalar expression: `array<long>` of m byte-range cell
@@ -70,95 +135,13 @@ object PqKernels {
     override def inputTypes = Seq(ArrayType(DoubleType))
     override def dataType: DataType = ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
 
-    override def nullSafeEval(input: Any): Any = {
-      val x =
-        if (normalize) normalized(input.asInstanceOf[ArrayData])
-        else input.asInstanceOf[ArrayData].toDoubleArray()
-      require(x.length == book.m * book.dsub,
-        s"graft_pq_codes: vector length ${x.length} != m*dsub (${book.m}*${book.dsub})")
-      val out = new Array[Long](book.m)
-      var sub = 0
-      while (sub < book.m) {
-        var bestCell = -1
-        var bestD = Double.PositiveInfinity
-        var cell = 0
-        while (cell < book.ksub) {
-          val c2 = book.cn2(sub * book.ksub + cell)
-          if (c2 != Double.PositiveInfinity) {
-            var dot = 0.0
-            val off = (sub * book.ksub + cell) * book.dsub
-            val voff = sub * book.dsub
-            var d = 0
-            while (d < book.dsub) { dot += x(voff + d) * book.cb(off + d); d += 1 }
-            val dist = c2 - 2.0 * dot
-            if (dist < bestD) { bestD = dist; bestCell = cell }
-          }
-          cell += 1
-        }
-        if (bestCell < 0) throw new IllegalStateException(
-          s"graft_pq_codes: no surviving cell in sub $sub")
-        out(sub) = bestCell.toLong
-        sub += 1
-      }
-      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
-    }
+    override def nullSafeEval(input: Any): Any =
+      encode(input.asInstanceOf[ArrayData], book, normalize)
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cbRef = ctx.addReferenceObj("pqCb", book.cb, "double[]")
-      val cn2Ref = ctx.addReferenceObj("pqCn2", book.cn2, "double[]")
-      val (m, ksub, dsub) = (book.m, book.ksub, book.dsub)
-      nullSafeCodeGen(ctx, ev, v => {
-        val x = ctx.freshName("x")
-        val n2 = ctx.freshName("n2")
-        val n = ctx.freshName("n")
-        val out = ctx.freshName("out")
-        val sub = ctx.freshName("sub")
-        val cell = ctx.freshName("cell")
-        val bestC = ctx.freshName("bestC")
-        val bestD = ctx.freshName("bestD")
-        val c2 = ctx.freshName("c2")
-        val dt = ctx.freshName("dt")
-        val off = ctx.freshName("off")
-        val voff = ctx.freshName("voff")
-        val i = ctx.freshName("i")
-        val d = ctx.freshName("d")
-        val dist = ctx.freshName("dist")
-        s"""
-           |double[] $x = $v.toDoubleArray();
-           |if ($x.length != ${m * dsub}) {
-           |  throw new IllegalArgumentException(
-           |    "graft_pq_codes: vector length " + $x.length + " != " + ${m * dsub});
-           |}
-           |${if (normalize) s"""
-           |double $n2 = 0.0;
-           |for (int $i = 0; $i < $x.length; $i++) { $n2 += $x[$i] * $x[$i]; }
-           |double $n = Math.sqrt($n2);
-           |if ($n > 0.0) { for (int $i = 0; $i < $x.length; $i++) { $x[$i] /= $n; } }""".stripMargin
-             else ""}
-           |long[] $out = new long[$m];
-           |for (int $sub = 0; $sub < $m; $sub++) {
-           |  int $bestC = -1;
-           |  double $bestD = Double.POSITIVE_INFINITY;
-           |  for (int $cell = 0; $cell < $ksub; $cell++) {
-           |    double $c2 = $cn2Ref[$sub * $ksub + $cell];
-           |    if ($c2 != Double.POSITIVE_INFINITY) {
-           |      double $dt = 0.0;
-           |      int $off = ($sub * $ksub + $cell) * $dsub;
-           |      int $voff = $sub * $dsub;
-           |      for (int $d = 0; $d < $dsub; $d++) { $dt += $x[$voff + $d] * $cbRef[$off + $d]; }
-           |      double $dist = $c2 - 2.0 * $dt;
-           |      if ($dist < $bestD) { $bestD = $dist; $bestC = $cell; }
-           |    }
-           |  }
-           |  if ($bestC < 0) {
-           |    throw new IllegalStateException("graft_pq_codes: no surviving cell in sub " + $sub);
-           |  }
-           |  $out[$sub] = (long) $bestC;
-           |}
-           |${ev.value} =
-           |  org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-         """.stripMargin
-      })
+      val bookRef = ctx.addReferenceObj("pqBook", book, classOf[DenseCodebook].getName)
+      nullSafeCodeGen(ctx, ev, v =>
+        s"${ev.value} = graft.functions.PqKernels.encode($v, $bookRef, $normalize);")
     }
 
     override protected def withNewChildInternal(newChild: Expression): PqCodes =
@@ -176,75 +159,12 @@ object PqKernels {
     override def inputTypes = Seq(ArrayType(DoubleType))
     override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
-    override def nullSafeEval(input: Any): Any = {
-      val x = normalized(input.asInstanceOf[ArrayData])
-      require(x.length == book.m * book.dsub,
-        s"graft_pq_lut: vector length ${x.length} != m*dsub (${book.m}*${book.dsub})")
-      val out = new Array[Double](book.m * book.ksub)
-      var sub = 0
-      while (sub < book.m) {
-        var cell = 0
-        while (cell < book.ksub) {
-          val sc = sub * book.ksub + cell
-          if (book.cn2(sc) != Double.PositiveInfinity) {
-            var dot = 0.0
-            val off = sc * book.dsub
-            val voff = sub * book.dsub
-            var d = 0
-            while (d < book.dsub) { dot += x(voff + d) * book.cb(off + d); d += 1 }
-            out(sc) = dot
-          }
-          cell += 1
-        }
-        sub += 1
-      }
-      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
-    }
+    override def nullSafeEval(input: Any): Any =
+      lut(input.asInstanceOf[ArrayData], book)
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cbRef = ctx.addReferenceObj("pqCb", book.cb, "double[]")
-      val cn2Ref = ctx.addReferenceObj("pqCn2", book.cn2, "double[]")
-      val (m, ksub, dsub) = (book.m, book.ksub, book.dsub)
-      nullSafeCodeGen(ctx, ev, v => {
-        val x = ctx.freshName("x")
-        val n2 = ctx.freshName("n2")
-        val n = ctx.freshName("n")
-        val out = ctx.freshName("out")
-        val sub = ctx.freshName("sub")
-        val cell = ctx.freshName("cell")
-        val sc = ctx.freshName("sc")
-        val dt = ctx.freshName("dt")
-        val off = ctx.freshName("off")
-        val voff = ctx.freshName("voff")
-        val i = ctx.freshName("i")
-        val d = ctx.freshName("d")
-        s"""
-           |double[] $x = $v.toDoubleArray();
-           |if ($x.length != ${m * dsub}) {
-           |  throw new IllegalArgumentException(
-           |    "graft_pq_lut: vector length " + $x.length + " != " + ${m * dsub});
-           |}
-           |double $n2 = 0.0;
-           |for (int $i = 0; $i < $x.length; $i++) { $n2 += $x[$i] * $x[$i]; }
-           |double $n = Math.sqrt($n2);
-           |if ($n > 0.0) { for (int $i = 0; $i < $x.length; $i++) { $x[$i] /= $n; } }
-           |double[] $out = new double[${m * ksub}];
-           |for (int $sub = 0; $sub < $m; $sub++) {
-           |  for (int $cell = 0; $cell < $ksub; $cell++) {
-           |    int $sc = $sub * $ksub + $cell;
-           |    if ($cn2Ref[$sc] != Double.POSITIVE_INFINITY) {
-           |      double $dt = 0.0;
-           |      int $off = $sc * $dsub;
-           |      int $voff = $sub * $dsub;
-           |      for (int $d = 0; $d < $dsub; $d++) { $dt += $x[$voff + $d] * $cbRef[$off + $d]; }
-           |      $out[$sc] = $dt;
-           |    }
-           |  }
-           |}
-           |${ev.value} =
-           |  org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-         """.stripMargin
-      })
+      val bookRef = ctx.addReferenceObj("pqBook", book, classOf[DenseCodebook].getName)
+      nullSafeCodeGen(ctx, ev, v => s"${ev.value} = graft.functions.PqKernels.lut($v, $bookRef);")
     }
 
     override protected def withNewChildInternal(newChild: Expression): PqLut =

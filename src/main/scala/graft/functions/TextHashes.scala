@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen'd Catalyst expressions for the text-dedup hash kernels.
   *
@@ -27,9 +26,43 @@ case class MinHashSig(child: Expression, numHashes: Int)
 
   override def inputTypes = Seq(ArrayType(StringType))
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val mins = Array.fill(numHashes)(Long.MaxValue)
+  override protected def nullSafeEval(input: Any): Any =
+    TextHashes.minhash(input.asInstanceOf[ArrayData], numHashes)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = graft.functions.TextHashes.minhash($a, $numHashes);")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** 64-bit SimHash over an array of token/shingle strings: bit j of the
+  * result is set iff the sum over elements of ±1 (sign of bit j of the
+  * element's xxhash64) is non-negative. One xxhash64 + 64 vote updates per
+  * element, all in one codegen'd loop.
+  */
+case class SimHash64(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
+
+  override def dataType: DataType = LongType
+
+  override def inputTypes = Seq(ArrayType(StringType))
+
+  override protected def nullSafeEval(input: Any): Any =
+    TextHashes.simhash(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = graft.functions.TextHashes.simhash($a);")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object TextHashes {
+  /** Kernel of [[MinHashSig]], shared by interpreted eval and generated code. */
+  def minhash(arr: ArrayData, numHashes: Int): ArrayData = {
+    val mins = new Array[Long](numHashes)
+    java.util.Arrays.fill(mins, Long.MaxValue)
     var i = 0
     val n = arr.numElements()
     while (i < n) {
@@ -48,54 +81,8 @@ case class MinHashSig(child: Expression, numHashes: Int)
     new GenericArrayData(mins)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val xxh = classOf[XXH64].getName
-      val gad = classOf[GenericArrayData].getName
-      val mins = ctx.freshName("mins")
-      val i = ctx.freshName("i")
-      val k = ctx.freshName("k")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val h1 = ctx.freshName("h1")
-      val h2 = ctx.freshName("h2")
-      val hk = ctx.freshName("hk")
-      s"""
-         |long[] $mins = new long[$numHashes];
-         |java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |int $n = $a.numElements();
-         |for (int $i = 0; $i < $n; $i++) {
-         |  org.apache.spark.unsafe.types.UTF8String $s = $a.getUTF8String($i);
-         |  long $h1 = $xxh.hashUTF8String($s, 42L);
-         |  long $h2 = $xxh.hashUTF8String($s, 1042L);
-         |  long $hk = $h1;
-         |  for (int $k = 0; $k < $numHashes; $k++) {
-         |    if ($hk < $mins[$k]) $mins[$k] = $hk;
-         |    $hk += $h2;
-         |  }
-         |}
-         |${ev.value} = new $gad($mins);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** 64-bit SimHash over an array of token/shingle strings: bit j of the
-  * result is set iff the sum over elements of ±1 (sign of bit j of the
-  * element's xxhash64) is non-negative. One xxhash64 + 64 vote updates per
-  * element, all in one codegen'd loop.
-  */
-case class SimHash64(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def dataType: DataType = LongType
-
-  override def inputTypes = Seq(ArrayType(StringType))
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  /** Kernel of [[SimHash64]], shared by interpreted eval and generated code. */
+  def simhash(arr: ArrayData): Long = {
     val votes = new Array[Int](64)
     var i = 0
     val n = arr.numElements()
@@ -117,37 +104,6 @@ case class SimHash64(child: Expression)
     out
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val xxh = classOf[XXH64].getName
-      val votes = ctx.freshName("votes")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val h = ctx.freshName("h")
-      val out = ctx.freshName("out")
-      s"""
-         |int[] $votes = new int[64];
-         |int $n = $a.numElements();
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $h = $xxh.hashUTF8String($a.getUTF8String($i), 42L);
-         |  for (int $j = 0; $j < 64; $j++) {
-         |    if ((($h >>> $j) & 1L) == 1L) $votes[$j]++; else $votes[$j]--;
-         |  }
-         |}
-         |long $out = 0L;
-         |for (int $j = 0; $j < 64; $j++) {
-         |  if ($votes[$j] >= 0) $out |= (1L << $j);
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object TextHashes {
   /** MinHash signature (array<long> of length numHashes) of an array<string>. */
   def minhashSig(shingles: Column, numHashes: Int): Column =
     ColumnBridge.column(MinHashSig(ColumnBridge.expression(shingles), numHashes))

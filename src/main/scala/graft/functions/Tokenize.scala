@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DataTypes, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -24,6 +24,44 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object Tokenize {
 
+  /** Kernel of [[WordTokens]], shared by interpreted eval and generated code. */
+  def tokens(text: UTF8String): ArrayData = {
+    val bytes = text.getBytes
+    val out = new java.util.ArrayList[UTF8String]()
+    var i = 0
+    val n = bytes.length
+    while (i < n) {
+      val b = bytes(i)
+      if ((b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')) {
+        val start = i
+        i += 1
+        while (i < n && {
+          val c = bytes(i); (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')
+        }) i += 1
+        out.add(UTF8String.fromBytes(bytes, start, i - start))
+      } else i += 1
+    }
+    new GenericArrayData(out.toArray)
+  }
+
+  /** Kernel of [[WordTokenCount]], shared by interpreted eval and
+    * generated code.
+    */
+  def tokenCount(text: UTF8String): Int = {
+    val bytes = text.getBytes
+    var count = 0
+    var inRun = false
+    var i = 0
+    while (i < bytes.length) {
+      val b = bytes(i)
+      val m = (b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')
+      if (m && !inRun) count += 1
+      inRun = m
+      i += 1
+    }
+    count
+  }
+
   /** `graft_word_tokens(text)` — array of the [a-z0-9]+ runs of `text`. */
   case class WordTokens(child: Expression)
       extends UnaryExpression with ExpectsInputTypes {
@@ -31,59 +69,11 @@ object Tokenize {
     override def inputTypes = Seq(StringType)
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
-    override protected def nullSafeEval(input: Any): Any = {
-      val bytes = input.asInstanceOf[UTF8String].getBytes
-      val out = new java.util.ArrayList[UTF8String]()
-      var i = 0
-      val n = bytes.length
-      while (i < n) {
-        val b = bytes(i)
-        if ((b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')) {
-          val start = i
-          i += 1
-          while (i < n && {
-            val c = bytes(i); (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')
-          }) i += 1
-          out.add(UTF8String.fromBytes(bytes, start, i - start))
-        } else i += 1
-      }
-      new GenericArrayData(out.toArray)
-    }
+    override protected def nullSafeEval(input: Any): Any =
+      tokens(input.asInstanceOf[UTF8String])
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val gad = classOf[GenericArrayData].getName
-      val utf8 = classOf[UTF8String].getName
-      nullSafeCodeGen(ctx, ev, v => {
-        val bytes = ctx.freshName("bytes")
-        val out = ctx.freshName("out")
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        val b = ctx.freshName("b")
-        val c = ctx.freshName("c")
-        val start = ctx.freshName("start")
-        s"""
-           |byte[] $bytes = $v.getBytes();
-           |java.util.ArrayList $out = new java.util.ArrayList();
-           |int $n = $bytes.length;
-           |int $i = 0;
-           |while ($i < $n) {
-           |  byte $b = $bytes[$i];
-           |  if (($b >= 'a' && $b <= 'z') || ($b >= '0' && $b <= '9')) {
-           |    int $start = $i;
-           |    $i++;
-           |    while ($i < $n) {
-           |      byte $c = $bytes[$i];
-           |      if (($c >= 'a' && $c <= 'z') || ($c >= '0' && $c <= '9')) { $i++; } else break;
-           |    }
-           |    $out.add($utf8.fromBytes($bytes, $start, $i - $start));
-           |  } else {
-           |    $i++;
-           |  }
-           |}
-           |${ev.value} = new $gad($out.toArray());
-         """.stripMargin
-      })
-    }
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, v => s"${ev.value} = graft.functions.Tokenize.tokens($v);")
 
     override protected def withNewChildInternal(newChild: Expression): WordTokens =
       copy(child = newChild)
@@ -99,42 +89,11 @@ object Tokenize {
     override def inputTypes = Seq(StringType)
     override def dataType: DataType = DataTypes.IntegerType
 
-    override protected def nullSafeEval(input: Any): Any = {
-      val bytes = input.asInstanceOf[UTF8String].getBytes
-      var count = 0
-      var inRun = false
-      var i = 0
-      while (i < bytes.length) {
-        val b = bytes(i)
-        val m = (b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')
-        if (m && !inRun) count += 1
-        inRun = m
-        i += 1
-      }
-      count
-    }
+    override protected def nullSafeEval(input: Any): Any =
+      tokenCount(input.asInstanceOf[UTF8String])
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, v => {
-        val bytes = ctx.freshName("bytes")
-        val i = ctx.freshName("i")
-        val b = ctx.freshName("b")
-        val m = ctx.freshName("m")
-        val inRun = ctx.freshName("inRun")
-        val cnt = ctx.freshName("cnt")
-        s"""
-           |byte[] $bytes = $v.getBytes();
-           |int $cnt = 0;
-           |boolean $inRun = false;
-           |for (int $i = 0; $i < $bytes.length; $i++) {
-           |  byte $b = $bytes[$i];
-           |  boolean $m = ($b >= 'a' && $b <= 'z') || ($b >= '0' && $b <= '9');
-           |  if ($m && !$inRun) $cnt++;
-           |  $inRun = $m;
-           |}
-           |${ev.value} = $cnt;
-         """.stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, v => s"${ev.value} = graft.functions.Tokenize.tokenCount($v);")
 
     override protected def withNewChildInternal(newChild: Expression): WordTokenCount =
       copy(child = newChild)

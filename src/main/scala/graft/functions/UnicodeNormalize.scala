@@ -28,33 +28,25 @@ case class UnicodeNormalize(child: Expression, form: String)
 
   override def inputTypes = Seq(StringType)
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
-    if (Normalizer.isNormalized(s, nf)) input
-    else UTF8String.fromString(Normalizer.normalize(s, nf))
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    UnicodeNormalize.normalized(input.asInstanceOf[UTF8String], nf)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val utf8 = classOf[UTF8String].getName
-      val norm = classOf[Normalizer].getName
-      val formRef = ctx.addReferenceObj("form", nf, classOf[Normalizer.Form].getName)
-      val s = ctx.freshName("s")
-      s"""
-         |String $s = $a.toString();
-         |if ($norm.isNormalized($s, $formRef)) {
-         |  ${ev.value} = $a;
-         |} else {
-         |  ${ev.value} = $utf8.fromString($norm.normalize($s, $formRef));
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.functions.UnicodeNormalize.normalized($a, java.text.Normalizer.Form.$nf);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 object UnicodeNormalize {
+  /** The kernel, shared by interpreted eval and generated code. */
+  def normalized(text: UTF8String, form: Normalizer.Form): UTF8String = {
+    val s = text.toString
+    if (Normalizer.isNormalized(s, form)) text
+    else UTF8String.fromString(Normalizer.normalize(s, form))
+  }
+
   /** Normalize a string column to the given Unicode normal form. */
   def normalize(text: Column, form: String = "NFC"): Column =
     ColumnBridge.column(UnicodeNormalize(ColumnBridge.expression(text), form))

@@ -39,10 +39,23 @@ case class WinnowFingerprints(child: Expression, n: Int, w: Int)
 
   override def inputTypes = Seq(ArrayType(StringType))
 
+  override protected def nullSafeEval(input: Any): Any =
+    Winnow.fingerprints(input.asInstanceOf[ArrayData], n, w)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = graft.functions.Winnow.fingerprints($a, $n, $w);")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object Winnow {
   private val sep = UTF8String.fromString(" ")
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val toks = input.asInstanceOf[ArrayData]
+  /** Kernel of [[WinnowFingerprints]], shared by interpreted eval and
+    * generated code.
+    */
+  def fingerprints(toks: ArrayData, n: Int, w: Int): ArrayData = {
     val m = toks.numElements()
     if (m < n) return new GenericArrayData(Array.empty[Any])
     val nh = m - n + 1
@@ -76,71 +89,6 @@ case class WinnowFingerprints(child: Expression, n: Int, w: Int)
     new GenericArrayData(arr)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val xxh = classOf[XXH64].getName
-      val gad = classOf[GenericArrayData].getName
-      val utf8 = classOf[UTF8String].getName
-      val sepRef = ctx.addReferenceObj("sep", sep, utf8)
-      val m = ctx.freshName("m")
-      val nh = ctx.freshName("nh")
-      val hashes = ctx.freshName("hashes")
-      val parts = ctx.freshName("parts")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val k = ctx.freshName("k")
-      val t = ctx.freshName("t")
-      val win = ctx.freshName("win")
-      val minIdx = ctx.freshName("minIdx")
-      val start = ctx.freshName("start")
-      val out = ctx.freshName("out")
-      val res = ctx.freshName("res")
-      val p = ctx.freshName("p")
-      val it = ctx.freshName("it")
-      s"""
-         |int $m = $a.numElements();
-         |if ($m < $n) {
-         |  ${ev.value} = new $gad(new long[0]);
-         |} else {
-         |  int $nh = $m - $n + 1;
-         |  long[] $hashes = new long[$nh];
-         |  for (int $i = 0; $i < $nh; $i++) {
-         |    $utf8[] $parts = new $utf8[$n];
-         |    for (int $j = 0; $j < $n; $j++) {
-         |      $parts[$j] = $a.getUTF8String($i + $j);
-         |    }
-         |    $hashes[$i] = $xxh.hashUTF8String($utf8.concatWs($sepRef, $parts), 42L);
-         |  }
-         |  int $win = java.lang.Math.min($w, $nh);
-         |  java.util.LinkedHashSet $out = new java.util.LinkedHashSet();
-         |  int $minIdx = -1;
-         |  for (int $t = $win - 1; $t < $nh; $t++) {
-         |    int $start = $t - $win + 1;
-         |    if ($minIdx < $start) {
-         |      $minIdx = $start;
-         |      for (int $k = $start + 1; $k <= $t; $k++) {
-         |        if ($hashes[$k] <= $hashes[$minIdx]) $minIdx = $k;
-         |      }
-         |    } else if ($hashes[$t] <= $hashes[$minIdx]) {
-         |      $minIdx = $t;
-         |    }
-         |    $out.add(java.lang.Long.valueOf($hashes[$minIdx]));
-         |  }
-         |  long[] $res = new long[$out.size()];
-         |  int $p = 0;
-         |  for (java.util.Iterator $it = $out.iterator(); $it.hasNext(); ) {
-         |    $res[$p++] = ((java.lang.Long) $it.next()).longValue();
-         |  }
-         |  ${ev.value} = new $gad($res);
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object Winnow {
   /** Winnowing fingerprint set of an array<string> token column. */
   def winnow(tokens: Column, n: Int, w: Int): Column =
     ColumnBridge.column(WinnowFingerprints(ColumnBridge.expression(tokens), n, w))

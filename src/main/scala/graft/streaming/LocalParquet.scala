@@ -39,9 +39,11 @@ private[graft] object LocalParquet {
 
   private def publish(from: Path, to: Path): Path = Files.move(from, to, StandardCopyOption.ATOMIC_MOVE)
 
-  private def deleteTree(p: Path): Unit = if (Files.exists(p)) {
+  /** Delete `p` and everything under it, deepest first; with `keepRoot`,
+    * only what is under it. A missing `p` is no error. */
+  def deleteTree(p: Path, keepRoot: Boolean = false): Unit = if (Files.exists(p)) {
     val s = Files.walk(p)
-    try s.sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.deleteIfExists(f))
+    try s.sorted(java.util.Comparator.reverseOrder()).forEach(f => if (!keepRoot || f != p) Files.deleteIfExists(f))
     finally s.close()
   }
 
@@ -80,7 +82,7 @@ private[graft] object LocalParquet {
       case e: Throwable => deleteTree(staging); throw e
     }
     val s = Files.list(table)
-    try s.iterator().asScala.filter(_.getFileName.toString.startsWith(s".$name.")).toList.foreach(deleteTree)
+    try s.iterator().asScala.filter(_.getFileName.toString.startsWith(s".$name.")).toList.foreach(deleteTree(_))
     finally s.close()
   }
 }

@@ -37,26 +37,24 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
   val checkpointsDir: String = s"$dir/checkpoints"
   val metaPath: java.nio.file.Path = Paths.get(dir, "meta.json")
 
-  private val pending = new ArrayBuffer[(String, Timestamp)]()
   private val attached = new ArrayBuffer[AttachedSource]()
 
   /** Producer ingest (reference `Stream.append`, models.py:209-211): stamp
-    * arrival time, accumulate in the producer-side batcher (models.py:25-81),
-    * flush as one parquet file per `batchSize` messages. The durable file is
-    * the process boundary — no ack protocol, like the reference's
-    * fast-insert path (models.py:84-113). Starts no Spark job: see [[flush]].
+    * arrival time and write the message as one parquet file. The durable
+    * file is the process boundary — no ack protocol, like the reference's
+    * fast-insert path (models.py:84-113). Starts no Spark job: see
+    * [[writeBufferFile]].
     */
-  def append(dataJson: String, batchSize: Int = 1): Unit = synchronized {
+  def append(dataJson: String): Unit = synchronized {
     refuseIfClosed()
-    pending += ((dataJson, new Timestamp(System.currentTimeMillis())))
-    if (pending.size >= batchSize) flush()
+    writeBufferFile(Seq((dataJson, new Timestamp(System.currentTimeMillis()))))
   }
 
+  /** [[append]] of several messages as one file, with one arrival time. */
   def appendAll(rows: Seq[String]): Unit = synchronized {
     refuseIfClosed()
     val now = new Timestamp(System.currentTimeMillis())
-    pending ++= rows.map(r => (r, now))
-    flush()
+    writeBufferFile(rows.map(r => (r, now)))
   }
 
   /** Engine-internal append for control messages (e.g. the CountWindow
@@ -64,11 +62,10 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
     * tail of a stream you just closed is the expected shutdown sequence.
     */
   private[streaming] def appendControl(dataJson: String): Unit = synchronized {
-    pending += ((dataJson, new Timestamp(System.currentTimeMillis())))
-    flush()
+    writeBufferFile(Seq((dataJson, new Timestamp(System.currentTimeMillis()))))
   }
 
-  /** Flush the producer batch to one parquet file in the buffer dir.
+  /** Write `rows` as one parquet file in the buffer dir; the file's path.
     *
     * The file is written on the calling thread with parquet's example
     * writer, not by a Spark job: per-message appends would otherwise pay a
@@ -84,14 +81,6 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
     * filesystem is involved: no `.crc` sidecar, and no forked `chmod`/`stat`
     * process where Hadoop's native library is absent.
     */
-  def flush(): Unit = synchronized {
-    if (pending.nonEmpty) {
-      writeBufferFile(pending.toSeq)
-      pending.clear()
-    }
-  }
-
-  /** Write `rows` as one buffer file, as [[flush]] does; the file's path. */
   private[graft] def writeBufferFile(rows: Seq[(String, Timestamp)]): java.nio.file.Path = {
     val groups = new SimpleGroupFactory(BufferParquetSchema)
     LocalParquet.writeFile(spark,
@@ -117,8 +106,12 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
       })
   }
 
-  /** Filtered read of the buffer (reference `stream.buffer()`, models.py:282-284). */
-  def buffer(): DataFrame = readOrEmpty(bufferDir, MessageSchema)
+  /** Filtered read of the buffer (reference `stream.buffer()`,
+    * models.py:282-284), without the flush sentinels a draining
+    * [[EmitterBuilder.run]] appends.
+    */
+  def buffer(): DataFrame =
+    readOrEmpty(bufferDir, MessageSchema).filter(!(col("data") <=> EmitterRunner.FlushSentinel))
 
   /** Read of the emitted-window history (reference `stream.window()`).
     * The history is partitioned by batch_id (one slice per micro-batch,
@@ -158,9 +151,7 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
       .select(col("stream"), col("created"), col("data"), col("payload.*"))
 
   /** Delete all buffered messages (reference `stream.clear()`, models.py:216-217). */
-  def clear(): Unit = {
-    deleteChildren(bufferDir)
-  }
+  def clear(): Unit = LocalParquet.deleteTree(Paths.get(bufferDir), keepRoot = true)
 
   // ── lifecycle (reference Stream.status INIT→OPEN→CLOSED, models.py:164,
   //    228-237: stop() halts source + housekeeping; the `closed` timestamp
@@ -177,15 +168,14 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
   def isClosed: Boolean = status == "closed"
 
   /** Close the stream (reference `Stream.stop()`, models.py:228-237, plus
-    * the `closed` timestamp and CLOSED status, models.py:164-166): flush the
-    * producer batcher, detach background sources, stop the retention loop,
-    * and durably flip meta.json status open→closed. After close, `append`/
+    * the `closed` timestamp and CLOSED status, models.py:164-166): detach
+    * background sources, stop the retention loop, and durably flip
+    * meta.json status open→closed. After close, `append`/
     * `appendAll` throw; buffered data and window history remain readable.
     * Idempotent. Reopen explicitly with [[reopen]] — `getOrCreate` never
     * silently reopens (see [[StreamRegistry.getOrCreate]]).
     */
   def close(): Unit = synchronized {
-    flush()
     attached.foreach(_.detach())
     attached.clear()
     stopRetention()
@@ -322,17 +312,6 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
     // time between a reader's file-listing and its execution — a
     // retention-enabled buffer must tolerate that, not fail the scan
     else spark.read.schema(schema).option("ignoreMissingFiles", "true").parquet(d)
-
-  private def deleteChildren(d: String): Unit = {
-    val p = Paths.get(d)
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .filter(f => f != p)
-        .forEach(f => Files.deleteIfExists(f))
-      finally s.close()
-    }
-  }
 }
 
 /** Handle for a background-attached source thread. */
@@ -401,7 +380,7 @@ object MbStream {
     StructField("data", StringType, nullable = false)))
 
   /** [[MessageSchema]] as the parquet schema of the buffer files that
-    * [[MbStream.flush]] writes.
+    * [[MbStream.writeBufferFile]] writes.
     */
   val BufferParquetSchema: MessageType = MessageTypeParser.parseMessageType(
     """message spark_schema {
@@ -421,7 +400,7 @@ object MbStream {
 
   /** Read one buffer file on the calling thread, without a Spark job:
     * every row as a [[EmitterRunner.Message]], in file order. `created` may
-    * be INT64 `TIMESTAMP(MICROS)`, as [[MbStream.flush]] writes it, or
+    * be INT64 `TIMESTAMP(MICROS)`, as [[MbStream.writeBufferFile]] writes it, or
     * Spark's INT96, as buffers written by Spark's own writer hold it.
     * `opts` carries the Hadoop configuration the codecs read: build it once
     * per reader, since a fresh `Configuration` re-parses Hadoop's XML

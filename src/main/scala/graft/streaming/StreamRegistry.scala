@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 
 /** Durable named streams — the engine analogue of the reference's `Stream`
@@ -67,28 +69,12 @@ final class StreamRegistry(val spark: SparkSession, val root: String) {
     if (!Files.exists(r)) Seq.empty
     else {
       val s = Files.list(r)
-      try s.iterator().asInstanceOf[java.util.Iterator[java.nio.file.Path]]
-        .asScala.filter(p => Files.exists(p.resolve("meta.json")))
+      try s.iterator().asScala.filter(p => Files.exists(p.resolve("meta.json")))
         .map(_.getFileName.toString).toSeq.sorted
       finally s.close()
     }
   }
 
   /** Drop the stream and all its data (reference: Stream deletion + clear). */
-  def drop(name: String): Unit = deleteRecursively(Paths.get(root, name))
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.deleteIfExists(f))
-      finally s.close()
-    }
-  }
-
-  private implicit class IterOps[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext: Boolean = it.hasNext
-      def next(): A = it.next()
-    }
-  }
+  def drop(name: String): Unit = LocalParquet.deleteTree(Paths.get(root, name))
 }

@@ -136,7 +136,6 @@ class ConnectorsSuite extends AnyFunSuite {
     source.stream(st)
     assert(fake.connected === 1 && fake.subscribed.toSeq === Seq("TEST/#"))
     fake.deliver("TEST/1", """{"foo":"bar"}""", 1, retain = true)
-    st.flush()
     val env = StructType(Seq(
       StructField("topic", StringType), StructField("qos", IntegerType),
       StructField("retain", BooleanType)))
@@ -168,7 +167,6 @@ class ConnectorsSuite extends AnyFunSuite {
     new MqttSource(inFake.client, "IN/#").stream(st)
     inFake.deliver("IN/a", """{"v":1}""", 0, retain = false)
     inFake.deliver("IN/b", """{"v":2}""", 0, retain = false)
-    st.flush()
     MqttSinkCapture.reset()
     val sink = new MqttSink(() => MqttSinkCapture.newClient(), "OUT")
     mb.streaming("mqtt_e2e").size(2)
@@ -188,7 +186,6 @@ class ConnectorsSuite extends AnyFunSuite {
     val st = mb.stream("http_a")
     st.append("""{"v":1}""")
     st.append("""{"v":2}""")
-    st.flush()
     mb.stream("http_b")
     // drain an emitter so http_a has real progress behind its status
     val emitted = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -234,7 +231,6 @@ class ConnectorsSuite extends AnyFunSuite {
     source.cancel()
     // post-cancel events are dropped (receiver.should_stop semantics)
     source.taskEvent("task-failed", "tasks.add", "zzz", "{}", "FAILURE", 0.1)
-    st.flush()
     val env = StructType(Seq(
       StructField("task_event", StringType), StructField("task_name", StringType),
       StructField("task_id", StringType), StructField("task_state", StringType),

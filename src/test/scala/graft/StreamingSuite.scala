@@ -37,7 +37,6 @@ class StreamingSuite extends AnyFunSuite {
     val st = mb.stream("test")
     st.append("""{"foo":"bar1"}""")
     st.append("""{"foo":"bar2"}""")
-    st.flush()
     assert(st.buffer().count() === 2)
     assert(st.buffer().select("stream").distinct().collect().map(_.getString(0)).toSeq === Seq("test"))
   }
@@ -123,7 +122,6 @@ class StreamingSuite extends AnyFunSuite {
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), MbStream.MessageSchema)
       .write.mode("append").parquet(st.bufferDir)
     st.append("""{"fresh":true}""")
-    st.flush()
     assert(st.buffer().count() === 4)
     val dropped = st.runRetention(maxAgeSeconds = 3600)
     assert(dropped === 1)
@@ -577,6 +575,8 @@ class StreamingSuite extends AnyFunSuite {
     assert(sink2.size === 1, s"expected the partial tail window, got $sink2")
     assert(sink2.head._1 === 2L)
     assert(sink2.head._2 === Seq("""{"i":6}"""))
+    // the drain's flush sentinel sits in buffer/ but never reads back as a message
+    assert(st.buffer().count() === 7)
     // window ids continue past the flushed window; no message re-emits
     st.appendAll((10 until 13).map(i => s"""{"i":$i}"""))
     val (sink3, fn3) = collector()
@@ -610,7 +610,6 @@ class StreamingSuite extends AnyFunSuite {
     again.reopen()
     assert(!st.isClosed)
     st.append("""{"i":3}""")
-    st.flush()
     assert(st.buffer().count() === 2)
     assert(mb.status("life").streamStatus === "open")
   }
