@@ -15,6 +15,12 @@ state still names the original's class files, so rebuilding the copy can
 delete them. The script first builds both sides and stops, before the
 first pair, unless each has its compiled classes.
 
+Before the first build, a workload A/B compares the two checkouts'
+BENCHMARK.json and every file under perfbench/ (build output in `target/`
+and `__pycache__/` aside) by SHA-256, and exits naming the first file that
+differs or exists on one side only: an A/B of two different harnesses
+measures the harnesses, not the change.
+
 Pair i runs `perfbench/run.py --seed <seed + i>` once in each checkout,
 the parent first in even pairs and the change first in odd ones, and
 prints both sides' metrics. It then prints, for every `end_to_end` metric
@@ -40,6 +46,7 @@ than the parent's median plus that spread. Exit status is 0 unless a run
 failed or was not correct. Standard library only.
 """
 import argparse
+import hashlib
 import json
 import os
 import statistics
@@ -62,6 +69,26 @@ def run(checkout: Path, workload: str, seed: int, seconds: int, trace: int):
         print(f"  {checkout}: exit {proc.returncode}\n{tail}", file=sys.stderr)
         return None
     return json.loads(lines[-1])
+
+
+def harness_files(checkout: Path):
+    """BENCHMARK.json and every file under perfbench/ but build output, as
+    checkout-relative paths mapped to their SHA-256."""
+    files = [checkout / "BENCHMARK.json"] + sorted(
+        f for f in (checkout / "perfbench").rglob("*")
+        if f.is_file() and not {"target", "__pycache__"} & set(f.relative_to(checkout).parts))
+    return {str(f.relative_to(checkout)): hashlib.sha256(f.read_bytes()).hexdigest() for f in files if f.is_file()}
+
+
+def require_same_harness(dirs) -> None:
+    """Exits naming the first harness file that differs between the two checkouts."""
+    parent, change = (harness_files(dirs[s]) for s in SIDES)
+    for name in sorted(parent.keys() | change.keys()):
+        if parent.get(name) != change.get(name):
+            where = ("only in the parent" if name not in change else
+                     "only in the change" if name not in parent else "differs")
+            sys.exit(f"{name} {where}: the two checkouts run different benchmarks, so an A/B "
+                     "would compare harnesses; put both on the same BENCHMARK.json and perfbench/")
 
 
 def build(checkout: Path) -> None:
@@ -146,6 +173,7 @@ def main() -> int:
         return queries_main(a, dirs)
     if a.workload is None or a.seed is None:
         ap.error("--workload and --seed are required without --queries")
+    require_same_harness(dirs)
     spec = json.loads((a.change / "BENCHMARK.json").read_text())
     gated = spec["end_to_end"]
     for side in SIDES:

@@ -9,6 +9,8 @@ import java.util.UUID
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import org.apache.parquet.HadoopReadOptions
+
 import graft.streaming.EmitterRunner.Message
 
 /** What a batch starts from, and what it leaves to its successor: the
@@ -18,17 +20,39 @@ import graft.streaming.EmitterRunner.Message
   */
 private[streaming] final case class BatchState(carry: Option[CountCarry], mark: Long)
 
-/** Batch `batchId` of an emitter: the buffer files it takes, and the state it starts from. */
-private[streaming] final case class BatchRecord(batchId: Long, files: Seq[String], in: BatchState)
+/** Records `[fromRow, toRow)` of segment `segment` (row `i` is the log's
+  * record `i`, and row `i` of its sealed file): bytes `[fromByte, toByte)`
+  * of its log, or, when they were taken from the sealed file,
+  * `fromByte = toByte = -1`. */
+private[streaming] final case class SegmentRange(segment: String, fromByte: Long, toByte: Long, fromRow: Long, toRow: Long)
 
-/** The buffer files each batch of an emitter takes, and the emitter's
-  * batch log. Used by one emitter thread at a time.
+/** Batch `batchId` of an emitter: the whole buffer files and the segment
+  * ranges it takes, and the state it starts from. */
+private[streaming] final case class BatchRecord(batchId: Long, files: Seq[String], ranges: Seq[SegmentRange], in: BatchState)
+
+/** What [[BufferSource.take]] found for the next batch. */
+private[streaming] final case class Taken(files: Seq[String], ranges: Seq[SegmentRange]) {
+  def isEmpty: Boolean = files.isEmpty && ranges.isEmpty
+}
+
+/** The buffer files and segment records each batch of an emitter takes,
+  * and the emitter's batch log. Used by one emitter thread at a time.
   *
-  * [[take]] lists `buffer/` with NIO and takes the files a parquet file
-  * source would (regular files whose names start with neither `.` nor
-  * `_`) that no batch has taken, oldest modification time first (then by
-  * name), at most `maxFilesPerTrigger`. After [[prepareAvailableNow]] it
-  * takes only the files untaken then, so `Trigger.AvailableNow` lists once.
+  * [[take]] lists `buffer/` with NIO and takes, at most
+  * `maxFilesPerTrigger` units in all:
+  *  - the files a parquet file source would (regular files whose names
+  *    start with neither `.` nor `_`) that no batch has taken, oldest
+  *    modification time first (then by name), each whole;
+  *  - the rest of each sealed file whose segment earlier batches read in
+  *    part (one unit each), and none of a sealed file whose rows were all
+  *    taken from its log: that file is marked seen unread;
+  *  - each unsealed segment's new complete appends, from its cursor, each
+  *    append one unit, as its parquet file was before appends went to a
+  *    log ([[Segments]]). A short, torn or CRC-failing record ends what is
+  *    read, so no cursor passes it.
+  * After [[prepareAvailableNow]] it takes only the files untaken then and
+  * the segments' records up to their readable ends then, so
+  * `Trigger.AvailableNow` lists once.
   *
   * The log, `checkpoints/graft-batches/`, holds:
   *  - `<k>`, the [[BatchRecord]] of batch `k`, written before the batch is
@@ -38,28 +62,37 @@ private[streaming] final case class BatchRecord(batchId: Long, files: Seq[String
   *  - `<k>.commit`, the state batch `k` leaves, written once it is emitted
   *    and persisted;
   *  - `<k>.compact` with every [[CompactInterval]]-th record: every file
-  *    taken up to batch `k` that the buffer still held.
+  *    taken up to batch `k` that the buffer still held, and every
+  *    segment's cursor (the byte and row its records were taken up to).
   *
   * A restarted source takes the newest compact plus the records after it
-  * as the files it has seen. A newest record with no marker is
-  * [[pending]]: it runs again with the same files and state before any
-  * new file is taken. Otherwise the next batch starts from the marker's
-  * state and never re-reads the committed files, which retention may have
-  * deleted. The seen set drops every name the buffer no longer lists
-  * (buffer file names are UUIDs and never return), so it is bounded by the
+  * as the files it has seen and the cursors. A newest record with no
+  * marker is [[pending]]: it runs again with the same files, ranges and
+  * state before anything new is taken, reading each range from its log
+  * or, once the segment is sealed, from the same rows of its sealed file.
+  * Otherwise the next batch starts from the marker's state and never
+  * re-reads what was committed, which retention may have deleted. The
+  * seen set drops every name the buffer no longer lists, and a cursor
+  * goes once neither its log nor its sealed file exists (buffer file and
+  * segment names are UUIDs and never return), so both are bounded by the
   * buffer; a compaction deletes the records and markers up to the
-  * previous compaction.
+  * previous compaction. A log of format 1, written before appends went
+  * to segments, lists files only and resumes as it is.
   */
 private[streaming] final class BufferSource(stream: MbStream, maxFiles: Option[Int], initial: BatchState) {
   import BufferSource._
 
   private val buffer = Paths.get(stream.bufferDir)
   private val log = logDir(stream)
+  private val readOpts = HadoopReadOptions.builder(stream.spark.sparkContext.hadoopConfiguration).build()
 
-  // every name taken so far, and the untaken files (name -> modification
-  // time) when Trigger.AvailableNow started
+  // every name taken so far, each segment's cursor, and what was untaken
+  // when Trigger.AvailableNow started
   private val seen = mutable.HashSet.empty[String]
-  private var availableNow: Option[Map[String, Long]] = None
+  private val cursors = mutable.HashMap.empty[String, Cursor]
+  private var availableNow: Option[Snapshot] = None
+  // the messages of the ranges the latest take read from their logs
+  private var fresh = Map.empty[SegmentRange, Seq[Message]]
 
   /** The state the last committed batch left, and the id of the next new batch. */
   private var committed: BatchState = initial
@@ -73,11 +106,14 @@ private[streaming] final class BufferSource(stream: MbStream, maxFiles: Option[I
     val names = list(log)
     val records = names.collect { case RecordName(k) => k.toLong }.sorted
     val compact = names.collect { case CompactName(k) => k.toLong }.maxOption
-    compact.foreach(c => seen ++= read(log.resolve(s"$c.compact"))(readNames))
-    records.filter(_ > compact.getOrElse(-1L)).foreach(k => seen ++= readRecord(k).files)
+    compact.foreach(c => read(log.resolve(s"$c.compact")) { (in, version) =>
+      seen ++= readNames(in)
+      if (version > 1) cursors ++= readCursors(in)
+    })
+    records.filter(_ > compact.getOrElse(-1L)).foreach(k => advance(readRecord(k)))
     records.lastOption.foreach { k =>
       nextId = k + 1
-      try committed = read(marker(k))(readState)
+      try committed = read(marker(k))((in, _) => readState(in))
       catch { case _: NoSuchFileException => pending = Some(readRecord(k)) }
     }
   }
@@ -88,37 +124,135 @@ private[streaming] final class BufferSource(stream: MbStream, maxFiles: Option[I
   /** The batch that runs next: its id and the state it starts from. */
   def upcoming: (Long, BatchState) = pending.fold((nextId, committed))(r => (r.batchId, r.in))
 
-  def prepareAvailableNow(): Unit = availableNow = Some(untaken().toMap)
+  /** Take what a record of `r` took: its files are seen, its segments' cursors move to its ranges' ends. */
+  private def advance(r: BatchRecord): Unit = {
+    seen ++= r.files
+    r.ranges.foreach { g =>
+      val c = cursors.getOrElse(g.segment, Start)
+      cursors(g.segment) = Cursor(if (g.toByte < 0) c.byte else g.toByte, g.toRow)
+    }
+  }
 
-  /** The listed files not taken yet, with their modification times; the
-    * seen set first drops every name the buffer no longer lists. */
-  private def untaken(): Seq[(String, Long)] = {
-    val listed = list(buffer).toSet
-    seen.filterInPlace(listed.contains)
-    (listed -- seen).toSeq.flatMap { n =>
+  /** `buffer/` now: the visible names, and the ids of the logs whose sealed file is not listed. */
+  private def listing(): (Seq[String], Seq[String]) = {
+    val names = list(buffer, hidden = true)
+    val files = names.filter(visible)
+    val fileSet = files.toSet
+    (files, names.flatMap(Segments.segmentOf).filterNot(id => fileSet(Segments.sealedName(id))).sorted)
+  }
+
+  /** The complete appends of log `id` after its cursor, up to byte `until`. */
+  private def appendsOf(id: String, until: Long): Segments.Read = {
+    val c = cursors.getOrElse(id, Start)
+    val f = buffer.resolve(Segments.logName(id))
+    val none = Segments.Read(c.byte, Vector.empty)
+    val grew = until > c.byte && (try Files.size(f) > c.byte catch { case _: NoSuchFileException => false })
+    if (!grew) none else Segments.read(f, c.byte, until).getOrElse(none)
+  }
+
+  /** Drop the names the buffer no longer lists from the seen set, and the
+    * cursors of segments whose log and sealed file are both gone. */
+  private def prune(files: Seq[String], logs: Seq[String]): Unit = {
+    val fileSet = files.toSet
+    seen.filterInPlace(fileSet)
+    // a listing taken during a seal may show neither the log nor its sealed file
+    cursors.filterInPlace { case (id, _) =>
+      logs.contains(id) || fileSet(Segments.sealedName(id)) ||
+        Files.exists(buffer.resolve(Segments.logName(id))) || Files.exists(buffer.resolve(Segments.sealedName(id)))
+    }
+  }
+
+  def prepareAvailableNow(): Unit = {
+    val (files, logs) = listing()
+    prune(files, logs)
+    availableNow = Some(Snapshot(untaken(files).toMap, logs.map { id =>
+      val c = cursors.getOrElse(id, Start)
+      val appends = appendsOf(id, Long.MaxValue).appends
+      id -> appends.lastOption.fold(c)(a => Cursor(a.end, c.row + appends.map(_.messages.size).sum))
+    }.toMap))
+  }
+
+  /** Whether `file` is the sealed file of a segment read in part, whose rest is taken by its cursor. */
+  private def sealedRest(file: String): Boolean = cursors.keysIterator.exists(Segments.sealedName(_) == file)
+
+  /** The listed files not taken yet, nor the rest of a segment read in
+    * part, with their modification times. */
+  private def untaken(files: Seq[String]): Seq[(String, Long)] =
+    files.filterNot(f => seen(f) || sealedRest(f)).flatMap { n =>
       try {
         val a = Files.readAttributes(buffer.resolve(n), classOf[BasicFileAttributes])
         if (a.isRegularFile) Some((n, a.lastModifiedTime.toMillis)) else None
       } catch { case _: NoSuchFileException => None } // deleted since the listing
     }
+
+  /** What the next batch takes; empty when there is nothing new. */
+  def take(): Taken = {
+    val (files, logs) = listing()
+    val fileSet = files.toSet
+    // a file of the AvailableNow snapshot is taken even if it is gone since, and reads as no rows
+    if (availableNow.isEmpty) prune(files, logs)
+    var budget = maxFiles.getOrElse(Int.MaxValue)
+    val whole = availableNow.fold(untaken(files))(_.files.toSeq.filterNot { case (f, _) => seen(f) || sealedRest(f) })
+      .sortBy { case (n, mtime) => (mtime, n) }.map(_._1).take(budget)
+    budget -= whole.size
+    val ranges = mutable.ArrayBuffer.empty[SegmentRange]
+    for ((id, c) <- cursors.toSeq.sortBy(_._1); name = Segments.sealedName(id) if budget > 0 && fileSet(name) && !seen(name))
+      MbStream.rowCount(buffer.resolve(name), readOpts).foreach { n =>
+        if (c.row >= n) seen += name
+        else {
+          val end = availableNow.fold(n)(s => if (s.files.contains(name)) n else s.ends.get(id).fold(c.row)(e => math.min(n, e.row)))
+          if (end > c.row) {
+            ranges += SegmentRange(id, -1L, -1L, c.row, end)
+            budget -= 1
+          }
+        }
+      }
+    val read = mutable.Map.empty[SegmentRange, Seq[Message]]
+    for (id <- logs if budget > 0) {
+      val c = cursors.getOrElse(id, Start)
+      val got = appendsOf(id, availableNow.fold(Long.MaxValue)(_.ends.get(id).fold(c.byte)(_.byte)))
+      val appends = got.appends.take(budget)
+      if (appends.nonEmpty) {
+        val msgs = appends.flatMap(_.messages)
+        val g = SegmentRange(id, got.start, appends.last.end, c.row, c.row + msgs.size)
+        ranges += g
+        read(g) = msgs
+        budget -= appends.size
+      }
+    }
+    fresh = read.toMap
+    Taken(whole, ranges.toSeq)
   }
 
-  /** The names of the files the next batch takes, in order; empty when there is none. */
-  def take(): Seq[String] = {
-    val fresh = availableNow.fold(untaken())(_.toSeq.filterNot(f => seen(f._1)))
-      .sortBy { case (n, mtime) => (mtime, n) }.map(_._1)
-    maxFiles.fold(fresh)(fresh.take)
-  }
-
-  /** Record the next batch as taking `files`, starting from the committed state. */
-  def record(files: Seq[String]): BatchRecord = {
-    val r = BatchRecord(nextId, files, committed)
-    publish(log.resolve(r.batchId.toString), replace = false) { out => writeNames(out, files); writeState(out, r.in) }
-    seen ++= files
+  /** Record the next batch as taking `t`, starting from the committed state. */
+  def record(t: Taken): BatchRecord = {
+    val r = BatchRecord(nextId, t.files, t.ranges, committed)
+    publish(log.resolve(r.batchId.toString), replace = false) { out =>
+      writeNames(out, r.files)
+      writeRanges(out, r.ranges)
+      writeState(out, r.in)
+    }
+    advance(r)
     pending = Some(r)
     nextId += 1
     if ((r.batchId + 1) % CompactInterval == 0) compact(r.batchId)
     r
+  }
+
+  /** Batch `r`'s messages: its files' rows, then its ranges' records, each
+    * read from its log or, once the segment is sealed, its sealed file. A
+    * file, log or sealed file removed since reads as no rows. */
+  def messages(r: BatchRecord): Seq[Message] =
+    r.files.flatMap(f => MbStream.readBufferFile(buffer.resolve(f), readOpts)) ++
+      r.ranges.flatMap(g => fresh.getOrElse(g, readRange(g)))
+
+  private def readRange(g: SegmentRange): Seq[Message] = {
+    def sealedRows = MbStream.readBufferFile(buffer.resolve(Segments.sealedName(g.segment)), readOpts)
+      .slice(g.fromRow.toInt, g.toRow.toInt)
+    if (g.fromByte < 0) sealedRows
+    else Segments.read(buffer.resolve(Segments.logName(g.segment)), g.fromByte, g.toByte)
+      .filter(_.appends.lastOption.exists(_.end == g.toByte))
+      .fold(sealedRows)(_.appends.flatMap(_.messages))
   }
 
   /** Mark `r` committed, leaving `out` to the next batch. */
@@ -126,14 +260,21 @@ private[streaming] final class BufferSource(stream: MbStream, maxFiles: Option[I
     publish(marker(r.batchId), replace = true)(writeState(_, out))
     committed = out
     pending = None
+    fresh = Map.empty
   }
 
   private def marker(k: Long): Path = log.resolve(s"$k.commit")
 
-  private def readRecord(k: Long): BatchRecord = read(log.resolve(k.toString))(in => BatchRecord(k, readNames(in), readState(in)))
+  private def readRecord(k: Long): BatchRecord = read(log.resolve(k.toString)) { (in, version) =>
+    val files = readNames(in)
+    BatchRecord(k, files, if (version > 1) readRanges(in) else Nil, readState(in))
+  }
 
   private def compact(k: Long): Unit = {
-    publish(log.resolve(s"$k.compact"), replace = true)(writeNames(_, seen.toSeq.sorted))
+    publish(log.resolve(s"$k.compact"), replace = true) { out =>
+      writeNames(out, seen.toSeq.sorted)
+      writeCursors(out, cursors.toSeq.sortBy(_._1))
+    }
     list(log).foreach {
       case CompactName(c) if c.toLong < k => Files.deleteIfExists(log.resolve(s"$c.compact"))
       case n @ (RecordName(_) | MarkerName(_)) if n.takeWhile(_.isDigit).toLong <= k - CompactInterval =>
@@ -149,10 +290,21 @@ private[graft] object BufferSource {
     * Spark's file source log compacts by default. */
   private val CompactInterval = 10
 
-  private val Version = 1
+  /** Format 2 adds the segment ranges to a record and the cursors to a
+    * compact; format 1 (files only) is still read. */
+  private val Version = 2
   private val RecordName = """(\d+)""".r
   private val MarkerName = """(\d+)\.commit""".r
   private val CompactName = """(\d+)\.compact""".r
+
+  /** A segment's records taken so far: up to byte `byte` of its log (0:
+    * none), `row` records. */
+  private final case class Cursor(byte: Long, row: Long)
+  private val Start = Cursor(0L, 0L)
+
+  /** What `Trigger.AvailableNow` drains: the untaken files (name ->
+    * modification time) and each unsealed segment's readable end. */
+  private final case class Snapshot(files: Map[String, Long], ends: Map[String, Cursor])
 
   /** The batch log of the emitter of `stream`. */
   def logDir(stream: MbStream): Path = Paths.get(stream.checkpointsDir, "graft-batches")
@@ -171,13 +323,16 @@ private[graft] object BufferSource {
           s"wrote the checkpoint, or delete ${stream.checkpointsDir} to re-read the buffer from its start.")
   }
 
-  /** The names in `dir` that start with neither `.` nor `_` (a file
-    * source skips the others; whether one is a regular file is checked
-    * only for names not taken yet). */
-  private def list(dir: Path): Seq[String] =
+  /** A name a parquet file source would read: it starts with neither `.`
+    * nor `_` (whether it is a regular file is checked only for names not
+    * taken yet). */
+  private def visible(name: String): Boolean = !name.startsWith(".") && !name.startsWith("_")
+
+  /** The names in `dir`: the visible ones, or with `hidden` all of them. */
+  private def list(dir: Path, hidden: Boolean = false): Seq[String] =
     try {
       val s = Files.newDirectoryStream(dir)
-      try s.iterator().asScala.map(_.getFileName.toString).filter(n => !n.startsWith(".") && !n.startsWith("_")).toSeq
+      try s.iterator().asScala.map(_.getFileName.toString).filter(n => hidden || visible(n)).toSeq
       finally s.close()
     } catch { case _: NoSuchFileException => Nil }
 
@@ -198,11 +353,11 @@ private[graft] object BufferSource {
     } finally Files.deleteIfExists(tmp)
   }
 
-  private def read[T](f: Path)(body: DataInputStream => T): T = {
+  private def read[T](f: Path)(body: (DataInputStream, Int) => T): T = {
     val in = new DataInputStream(new ByteArrayInputStream(Files.readAllBytes(f)))
     val version = in.readInt()
-    if (version != Version) throw new IllegalStateException(s"$f: batch log format $version, expected $Version")
-    body(in)
+    if (version < 1 || version > Version) throw new IllegalStateException(s"$f: batch log format $version, expected 1 to $Version")
+    body(in, version)
   }
 
   private def writeNames(out: DataOutputStream, names: Seq[String]): Unit = {
@@ -211,6 +366,25 @@ private[graft] object BufferSource {
   }
 
   private def readNames(in: DataInputStream): Seq[String] = Seq.fill(in.readInt())(in.readUTF())
+
+  private def writeRanges(out: DataOutputStream, ranges: Seq[SegmentRange]): Unit = {
+    out.writeInt(ranges.size)
+    ranges.foreach { g =>
+      out.writeUTF(g.segment)
+      Seq(g.fromByte, g.toByte, g.fromRow, g.toRow).foreach(out.writeLong)
+    }
+  }
+
+  private def readRanges(in: DataInputStream): Seq[SegmentRange] =
+    Seq.fill(in.readInt())(SegmentRange(in.readUTF(), in.readLong(), in.readLong(), in.readLong(), in.readLong()))
+
+  private def writeCursors(out: DataOutputStream, cursors: Seq[(String, Cursor)]): Unit = {
+    out.writeInt(cursors.size)
+    cursors.foreach { case (id, c) => out.writeUTF(id); out.writeLong(c.byte); out.writeLong(c.row) }
+  }
+
+  private def readCursors(in: DataInputStream): Seq[(String, Cursor)] =
+    Seq.fill(in.readInt())((in.readUTF(), Cursor(in.readLong(), in.readLong())))
 
   // a payload may exceed writeUTF's 64 KB, so messages carry byte lengths
   private def writeState(out: DataOutputStream, s: BatchState): Unit = {

@@ -15,8 +15,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent
 
 /** A running emitter: one daemon driver thread that runs list → record →
   * read, cut, emit and persist (`runBatch`) → commit per trigger, behind
-  * the public `StreamingQuery` interface. A poll that finds no file, and
-  * no uncommitted record to run again, ends the trigger: it writes
+  * the public `StreamingQuery` interface. A poll that finds no file or
+  * segment record, and no uncommitted record to run again, ends the trigger: it writes
   * nothing, posts nothing and runs no Spark job.
   *
   * `interval` is `Some(ms)` for `Trigger.ProcessingTime(ms)`, on Spark's
@@ -110,9 +110,9 @@ private[streaming] final class EmitterQuery(
     val n = lock.synchronized { polls += 1; polls }
     val startMs = System.currentTimeMillis()
     val t0 = System.nanoTime()
-    val files = if (source.pending.isEmpty) source.take() else Nil
+    val taken = if (source.pending.isEmpty) source.take() else Taken(Nil, Nil)
     val t1 = System.nanoTime()
-    source.pending.orElse(if (files.isEmpty) None else Some(source.record(files))) match {
+    source.pending.orElse(if (taken.isEmpty) None else Some(source.record(taken))) match {
       case None =>
         lock.synchronized { lastIdle = n; lock.notifyAll() }
         false

@@ -2,13 +2,13 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.parquet.HadoopReadOptions
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.streaming.{AvailableNowTrigger, ProcessingTimeTrigger}
+import org.apache.spark.sql.graft.FrameBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.LongType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The consumer-side run loop (reference `WindowEmitter.run`,
   * minibatch/window.py:13-227), owned by graft: one driver thread per
@@ -24,11 +24,14 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * before the batch is read and the marker after it is persisted: a
   * replayable source plus idempotent writes give effectively-once output.
   *
-  * Every strategy windows on the driver: a batch's buffer files are
-  * decoded by [[MbStream.readBufferFile]] and cut by [[CountCarry.step]]
-  * (count strategies, from the record's carry) or [[cutTime]]. Each
-  * window, and each `emitEmpty` gap window, reaches `emitFn` in id order
-  * as a local DataFrame with [[MbStream.MessageSchema]] in arrival order.
+  * Every strategy windows on the driver: a batch's buffer files and
+  * segment ranges are read by [[BufferSource.messages]] and cut by
+  * [[CountCarry.step]] (count strategies, from the record's carry) or
+  * [[cutTime]]. Each window, and each `emitEmpty` gap window, reaches
+  * `emitFn` in id order as a local DataFrame with
+  * [[MbStream.MessageSchema]] in arrival order, built over a
+  * `LocalRelation` marked analyzed ([[FrameBridge.local]]), so building
+  * it runs no Catalyst analysis.
   * `keep(true)` writes the batch's windows on the driver
   * ([[MbStream.writeWindows]]), and a batch sink gets them as one local
   * frame, which [[graft.sources.IdempotentTableSink]] writes on the driver
@@ -41,6 +44,10 @@ object EmitterRunner {
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   case class Message(stream: String, created: Timestamp, data: String)
+
+  /** `m` as a row of [[MbStream.MessageSchema]] in Spark's internal representation. */
+  def internalRow(m: Message): InternalRow =
+    InternalRow(UTF8String.fromString(m.stream), MbStream.toMicros(m.created), UTF8String.fromString(m.data))
 
   /** Reserved control message: a CountWindow batch that holds this
     * payload emits its sub-N remainder as a final partial window (see
@@ -144,8 +151,6 @@ object EmitterRunner {
         "so count-window ids cannot resume. Drain it with that emitter (a count emitter drains its remainder with " +
         s"flushPartialOnDrain(true)), or delete ${stream.checkpointsDir} to re-read the buffer from its start.")
     val spark = stream.spark
-    val buffer = java.nio.file.Paths.get(stream.bufferDir)
-    val readOpts = HadoopReadOptions.builder(spark.sparkContext.hadoopConfiguration).build()
     def gapIds(ids: Seq[Long], mark: Long): Seq[Long] = strategy match {
       case FixedTimeWindow(_) if emitEmpty && ids.nonEmpty =>
         val from = if (mark == Long.MinValue) ids.head else mark + 1
@@ -166,7 +171,7 @@ object EmitterRunner {
         (clampedFrom to ids.last).filterNot(present).takeRight(maxGapWindows)
       case _ => Seq.empty
     }
-    def local(rows: Seq[Row], schema: StructType): DataFrame = spark.createDataFrame(rows.asJava, schema)
+    val sinkSchema = MbStream.MessageSchema.add("window_id", LongType, nullable = false)
     // persist(keep=True) (window.py:126-136): the kept history is written
     // from the batch's messages on this thread, no frame and no Spark job,
     // as one slice per batch that a replayed batch replaces whole — the
@@ -175,12 +180,12 @@ object EmitterRunner {
       if (keep) stream.writeWindows(batchId, windows)
       // batch-level sink (gets the batch id → enables idempotent,
       // replay-safe writes, e.g. IdempotentTableSink)
-      batchSink.foreach(_(local(windows.flatMap { case (id, ms) => ms.map(m => Row(m.stream, m.created, m.data, id)) },
-        MbStream.MessageSchema.add("window_id", LongType, nullable = false)), batchId))
+      batchSink.foreach(_(FrameBridge.local(spark, sinkSchema, windows.flatMap { case (id, ms) =>
+        ms.map(m => InternalRow(UTF8String.fromString(m.stream), MbStream.toMicros(m.created), UTF8String.fromString(m.data), id))
+      }), batchId))
     }
     def runBatch(r: BatchRecord): (BatchState, Long) = {
-      // a file deleted since the source took it reads as no rows
-      val msgs = r.files.flatMap(f => MbStream.readBufferFile(buffer.resolve(f), readOpts))
+      val msgs = source.messages(r)
       val (windows, carry) = count match {
         case Some((n, maxAgeMs)) =>
           val (ws, c) = CountCarry.step(r.in.carry.getOrElse(CountCarry.Empty), msgs, n, maxAgeMs)
@@ -189,9 +194,8 @@ object EmitterRunner {
       }
       val ids = windows.map(_._1)
       val byId = windows.toMap
-      emitAll((ids ++ gapIds(ids, r.in.mark)).sorted, id => emitFn(id, local(
-        byId.getOrElse(id, Nil).map(m => Row(m.stream, m.created, m.data)), MbStream.MessageSchema)),
-        maxWorkers)
+      emitAll((ids ++ gapIds(ids, r.in.mark)).sorted, id => emitFn(id, FrameBridge.local(spark,
+        MbStream.MessageSchema, byId.getOrElse(id, Nil).map(internalRow))), maxWorkers)
       if (windows.nonEmpty) persist(windows, r.batchId)
       // monotone: a late batch's older windows must not lower the mark, or
       // the next batch re-emits ids up to it as empty gap windows

@@ -1,12 +1,13 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, NoSuchFileException, Paths}
+import java.nio.file.attribute.BasicFileAttributes
 import java.sql.Timestamp
 
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.{HadoopReadOptions, ParquetReadOptions}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
@@ -16,6 +17,7 @@ import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, MessageTyp
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.FrameBridge
 import org.apache.spark.sql.types._
 
 /** One durable stream: producer `append`, buffer/window accessors, clear,
@@ -24,8 +26,16 @@ import org.apache.spark.sql.types._
   *
   * Message shape mirrors Buffer docs `{stream, created, data, processed}`
   * (models.py:139-154): payload rides as a JSON string (`data`), `created`
-  * is stamped at append, and `processed` is subsumed by streaming
-  * checkpoints.
+  * is stamped at append, and `processed` is subsumed by the emitter's
+  * batch log.
+  *
+  * `buffer/` holds parquet files, which Spark and external writers may
+  * add, and this handle's open segment of the segment log
+  * ([[Segments]]): every append is a record written to it before the call
+  * returns, and the segment is sealed into a parquet file at a size or
+  * age bound, at [[close]], or by a retention sweep. Segment names are
+  * hidden, so `buffer/` reads as a parquet table; [[buffer]] adds the
+  * records of unsealed segments.
   */
 final class MbStream(val spark: SparkSession, val name: String, val dir: String) {
   import MbStream._
@@ -33,28 +43,37 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
   private lazy val log = org.slf4j.LoggerFactory.getLogger(classOf[MbStream])
 
   val bufferDir: String = s"$dir/buffer"
+  private val bufferPath = Paths.get(bufferDir)
   val windowsDir: String = s"$dir/windows"
   val checkpointsDir: String = s"$dir/checkpoints"
   val metaPath: java.nio.file.Path = Paths.get(dir, "meta.json")
 
   private val attached = new ArrayBuffer[AttachedSource]()
 
+  // this producer's segments are .seg-<producer>-<n>.log; the open one, if
+  // any, and whether its first append has swept the orphans (under `this`)
+  private val producer = java.util.UUID.randomUUID().toString
+  private var segments = 0L
+  private var open: Option[Segments.Open] = None
+  private var swept = false
+
   /** Producer ingest (reference `Stream.append`, models.py:209-211): stamp
-    * arrival time and write the message as one parquet file. The durable
-    * file is the process boundary — no ack protocol, like the reference's
-    * fast-insert path (models.py:84-113). Starts no Spark job: see
-    * [[writeBufferFile]].
+    * arrival time (epoch ms) and write the message as one record of this
+    * producer's open segment, with one `write`, before returning. The
+    * written record is the process boundary — no ack protocol and no
+    * fsync, like the reference's fast-insert path (models.py:84-113).
+    * Starts no Spark job and writes no parquet, except when the segment
+    * is due to be sealed (see [[Segments.SealBytes]]).
     */
   def append(dataJson: String): Unit = synchronized {
     refuseIfClosed()
-    writeBufferFile(Seq((dataJson, new Timestamp(System.currentTimeMillis()))))
+    write(Seq(dataJson))
   }
 
-  /** [[append]] of several messages as one file, with one arrival time. */
+  /** [[append]] of several messages as one write, with one arrival time. */
   def appendAll(rows: Seq[String]): Unit = synchronized {
     refuseIfClosed()
-    val now = new Timestamp(System.currentTimeMillis())
-    writeBufferFile(rows.map(r => (r, now)))
+    write(rows)
   }
 
   /** Engine-internal append for control messages (e.g. the CountWindow
@@ -62,33 +81,59 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
     * tail of a stream you just closed is the expected shutdown sequence.
     */
   private[streaming] def appendControl(dataJson: String): Unit = synchronized {
-    writeBufferFile(Seq((dataJson, new Timestamp(System.currentTimeMillis()))))
+    write(Seq(dataJson))
   }
 
-  /** Write `rows` as one parquet file in the buffer dir; the file's path.
-    *
-    * The file is written on the calling thread with parquet's example
-    * writer, not by a Spark job: per-message appends would otherwise pay a
-    * job's scheduling cost each. Its schema is [[BufferParquetSchema]]
-    * (`created` as INT64 TIMESTAMP(MICROS, UTC); files written by Spark's
-    * own writer, with INT96 `created`, read back identically) and its codec
-    * is the session's `spark.sql.parquet.compression.codec`. The rows go
-    * through parquet's `LocalOutputFile` to a hidden
-    * `.part-<uuid>.parquet.tmp` and are moved (`ATOMIC_MOVE`) to
-    * `part-<uuid>.parquet` once the footer is written
-    * ([[LocalParquet.writeFile]]), so the emitter's
-    * [[BufferSource]] and [[buffer]] never list a partial file. No Hadoop
-    * filesystem is involved: no `.crc` sidecar, and no forked `chmod`/`stat`
-    * process where Hadoop's native library is absent.
-    */
-  private[graft] def writeBufferFile(rows: Seq[(String, Timestamp)]): java.nio.file.Path = {
-    val groups = new SimpleGroupFactory(BufferParquetSchema)
-    LocalParquet.writeFile(spark,
-      Files.createDirectories(Paths.get(bufferDir)).resolve(s"part-${java.util.UUID.randomUUID()}.parquet"),
-      BufferParquetSchema, rows.iterator.map { case (d, ts) =>
-        groups.newGroup().append("stream", name).append("created", toMicros(ts)).append("data", d)
-      })
+  /** Append `rows` to the open segment: the first append of this handle
+    * seals the segments their dead producers left; a segment at its size
+    * or age bound is sealed and a new one opened. */
+  private def write(rows: Seq[String]): Unit = if (rows.nonEmpty) {
+    val nowMs = System.currentTimeMillis()
+    if (!swept) {
+      Segments.sealOrphans(spark, bufferPath)
+      swept = true
+    }
+    if (open.exists(_.due(nowMs))) sealOpen()
+    val s = open.getOrElse {
+      val o = Segments.open(Files.createDirectories(bufferPath), s"$producer-$segments", name, this, nowMs)
+      segments += 1
+      open = Some(o)
+      o
+    }
+    try s.append(Segments.encode(rows, nowMs * 1000L), nowMs)
+    catch {
+      case e: Throwable =>
+        // a failed write may leave a torn record, past which no reader reads:
+        // later appends go to a new segment, and a sweep seals this one
+        open = None
+        try s.close() catch { case c: Throwable => e.addSuppressed(c) }
+        throw e
+    }
   }
+
+  /** Seal the open segment, if any (a log that `clear()` removed leaves nothing). */
+  private def sealOpen(): Unit = synchronized {
+    open.foreach { s =>
+      Segments.seal(spark, bufferPath, s.id)
+      s.close()
+      open = None
+    }
+  }
+
+  /** Seal the open segment if it is segment `id` and its newest append is
+    * no newer than `cutoffMs`: a retention sweep's request. */
+  private[streaming] def sealIfIdle(id: String, cutoffMs: Long): Unit = synchronized {
+    if (open.exists(s => s.id == id && s.newestMs <= cutoffMs)) sealOpen()
+  }
+
+  /** Write `rows` as one parquet file in the buffer dir, with this
+    * stream's name; the file's path. For messages with chosen `created`
+    * times, and files that stand for another writer's.
+    */
+  private[graft] def writeBufferFile(rows: Seq[(String, Timestamp)]): java.nio.file.Path =
+    writeMessages(spark,
+      Files.createDirectories(bufferPath).resolve(s"part-${java.util.UUID.randomUUID()}.parquet"),
+      rows.iterator.map { case (d, ts) => EmitterRunner.Message(name, ts, d) })
 
   /** Write micro-batch `batchId`'s kept windows as the history slice
     * `windows/batch_id=<batchId>` (schema [[WindowParquetSchema]]), on the
@@ -108,10 +153,22 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
 
   /** Filtered read of the buffer (reference `stream.buffer()`,
     * models.py:282-284), without the flush sentinels a draining
-    * [[EmitterBuilder.run]] appends.
+    * [[EmitterBuilder.run]] appends: the parquet files, read by Spark
+    * (`*.parquet`), and the records of every segment not sealed yet,
+    * decoded on the driver. The segments are decoded first, and one whose
+    * sealed file Spark then lists is taken from that file, so a seal
+    * racing the read neither drops nor doubles its rows.
     */
-  def buffer(): DataFrame =
-    readOrEmpty(bufferDir, MessageSchema).filter(!(col("data") <=> EmitterRunner.FlushSentinel))
+  def buffer(): DataFrame = {
+    val unsealed = Segments.logs(bufferPath).flatMap(id => Segments.read(bufferPath.resolve(Segments.logName(id)), 0L)
+      .map(r => id -> r.appends.flatMap(_.messages)))
+    val files = readOrEmpty(bufferDir, MessageSchema)
+    val listed = files.inputFiles.map(f => f.substring(f.lastIndexOf('/') + 1)).toSet
+    val rows = unsealed.collect { case (id, ms) if !listed(Segments.sealedName(id)) => ms }.flatten
+    val all = if (rows.isEmpty) files
+      else files.union(FrameBridge.local(spark, MessageSchema, rows.map(EmitterRunner.internalRow)))
+    all.filter(!(col("data") <=> EmitterRunner.FlushSentinel))
+  }
 
   /** Read of the emitted-window history (reference `stream.window()`).
     * The history is partitioned by batch_id (one slice per micro-batch,
@@ -150,8 +207,15 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
       .withColumn("payload", from_json(col("data"), payloadSchema))
       .select(col("stream"), col("created"), col("data"), col("payload.*"))
 
-  /** Delete all buffered messages (reference `stream.clear()`, models.py:216-217). */
-  def clear(): Unit = LocalParquet.deleteTree(Paths.get(bufferDir), keepRoot = true)
+  /** Delete all buffered messages (reference `stream.clear()`,
+    * models.py:216-217), this handle's open segment too; the next append
+    * opens a new one. Another producer's segment goes as well, and that
+    * producer opens a new one at its next append. */
+  def clear(): Unit = synchronized {
+    LocalParquet.deleteTree(bufferPath, keepRoot = true)
+    open.foreach(_.close())
+    open = None
+  }
 
   // ── lifecycle (reference Stream.status INIT→OPEN→CLOSED, models.py:164,
   //    228-237: stop() halts source + housekeeping; the `closed` timestamp
@@ -169,8 +233,8 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
 
   /** Close the stream (reference `Stream.stop()`, models.py:228-237, plus
     * the `closed` timestamp and CLOSED status, models.py:164-166): detach
-    * background sources, stop the retention loop, and durably flip
-    * meta.json status open→closed. After close, `append`/
+    * background sources, stop the retention loop, seal this handle's open
+    * segment, and durably flip meta.json status open→closed. After close, `append`/
     * `appendAll` throw; buffered data and window history remain readable.
     * Idempotent. Reopen explicitly with [[reopen]] — `getOrCreate` never
     * silently reopens (see [[StreamRegistry.getOrCreate]]).
@@ -179,6 +243,7 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
     attached.foreach(_.detach())
     attached.clear()
     stopRetention()
+    sealOpen()
     MbStream.writeMetaStatus(metaPath, name, "closed",
       closedMs = Some(System.currentTimeMillis()))
   }
@@ -190,10 +255,27 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
     MbStream.writeMetaStatus(metaPath, name, "open", closedMs = None)
   }
 
-  private def refuseIfClosed(): Unit =
-    if (isClosed)
+  // meta.json's (file key, modification time, size) when last read, and whether it said closed
+  private var metaSeen: Option[(AnyRef, Boolean)] = None
+
+  /** Refuse an append to a closed stream. meta.json is read again only
+    * when its file key, modification time or size changed: it is replaced
+    * by `ATOMIC_MOVE` of a new file on every [[close]] and [[reopen]], so
+    * each append costs one `readAttributes`. */
+  private def refuseIfClosed(): Unit = {
+    val closed = try {
+      val a = Files.readAttributes(metaPath, classOf[BasicFileAttributes])
+      val key = (a.fileKey, a.lastModifiedTime, a.size)
+      metaSeen.collect { case (k, c) if a.fileKey != null && k == key => c }.getOrElse {
+        val c = isClosed
+        metaSeen = Some(key -> c)
+        c
+      }
+    } catch { case _: NoSuchFileException => false }
+    if (closed)
       throw new IllegalStateException(
         s"stream '$name' is closed — reopen() it before appending")
+  }
 
   /** Retention / housekeeping (reference `max_age` autoclear,
     * models.py:309-348): drop buffer files whose NEWEST row is older than
@@ -202,27 +284,22 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
     * documents (models.py:327-338). At cluster scale this is a partition
     * drop on a date-partitioned buffer, never a row rewrite.
     *
-    * One sweep is one Spark job: every partition reports the newest
-    * `created` per file it read (`_metadata.file_path`), and the driver
-    * merges them, so a file split across partitions is judged whole.
-    * Files deleted between the listing and the scan are skipped.
+    * A sweep runs no Spark job. It first seals the segments no live
+    * producer holds, and the open segments of this JVM's producers whose
+    * newest record has expired ([[Segments.sealOrphans]]); a live
+    * producer of another process keeps its segment until it seals it.
+    * Each parquet file is then judged by the `created` maximum in its
+    * footer statistics, or, where the footer has none (Spark writes no
+    * statistics for INT96 `created`), by reading that one column on the
+    * driver. A file deleted since the listing is skipped.
     */
   def runRetention(maxAgeSeconds: Double, nowMs: Long = System.currentTimeMillis()): Int = {
     val cutoff = nowMs - (maxAgeSeconds * 1000L).toLong
-    import spark.implicits._
-    // the directory, not a list of its files: Spark lists more than a few
-    // dozen explicit paths with a job of its own
-    val newest = if (listParquet(bufferDir).isEmpty) Map.empty[String, Long] else
-      spark.read.schema(MessageSchema).option("ignoreMissingFiles", "true").parquet(bufferDir)
-        .select(col("_metadata.file_path"), col("created")).as[(String, Timestamp)]
-        .mapPartitions { rows =>
-          val m = scala.collection.mutable.Map.empty[String, Long]
-          rows.foreach { case (f, ts) => if (ts != null) m(f) = math.max(m.getOrElse(f, Long.MinValue), ts.getTime) }
-          m.iterator
-        }.collect()
-        .groupMapReduce(_._1)(_._2)(math.max)
-    newest.count { case (f, ms) =>
-      ms <= cutoff && { Files.deleteIfExists(Paths.get(new java.net.URI(f))); true }
+    Segments.sealOrphans(spark, bufferPath, idleBefore = Some(cutoff))
+    val opts = HadoopReadOptions.builder(spark.sparkContext.hadoopConfiguration).build()
+    listParquet(bufferDir).count { f =>
+      val p = Paths.get(f)
+      newestCreatedMs(p, opts).exists(_ <= cutoff) && { Files.deleteIfExists(p); true }
     }
   }
 
@@ -311,7 +388,7 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
     // ignoreMissingFiles: the retention loop deletes whole files at any
     // time between a reader's file-listing and its execution — a
     // retention-enabled buffer must tolerate that, not fail the scan
-    else spark.read.schema(schema).option("ignoreMissingFiles", "true").parquet(d)
+    else spark.read.schema(schema).option("ignoreMissingFiles", "true").option("pathGlobFilter", "*.parquet").parquet(d)
 }
 
 /** Handle for a background-attached source thread. */
@@ -395,6 +472,28 @@ object MbStream {
   val WindowParquetSchema: MessageType = new MessageType("spark_schema",
     (BufferParquetSchema.getFields.asScala :+ Types.required(PrimitiveTypeName.INT64).named("window_id")).asJava)
 
+  /** Write `msgs` as the parquet file `file` (schema [[BufferParquetSchema]]),
+    * on the calling thread and without a Spark job; the file's path.
+    *
+    * The file is written with parquet's example writer, not by a Spark
+    * job. Its schema has `created` as INT64 TIMESTAMP(MICROS, UTC); files
+    * written by Spark's own writer, with INT96 `created`, read back
+    * identically. Its codec is the session's
+    * `spark.sql.parquet.compression.codec`. The rows go through parquet's
+    * `LocalOutputFile` to the hidden `.<name>.tmp` and are moved
+    * (`ATOMIC_MOVE`) to `file` once the footer is written
+    * ([[LocalParquet.writeFile]]), so the emitter's [[BufferSource]] and
+    * [[MbStream.buffer]] never list a partial file. No Hadoop filesystem is
+    * involved: no `.crc` sidecar, and no forked `chmod`/`stat` process
+    * where Hadoop's native library is absent.
+    */
+  private[streaming] def writeMessages(spark: SparkSession, file: java.nio.file.Path,
+      msgs: Iterator[EmitterRunner.Message]): java.nio.file.Path = {
+    val groups = new SimpleGroupFactory(BufferParquetSchema)
+    LocalParquet.writeFile(spark, file, BufferParquetSchema, msgs.map(m =>
+      groups.newGroup().append("stream", m.stream).append("created", toMicros(m.created)).append("data", m.data)))
+  }
+
   /** The Julian day number of 1970-01-01, the epoch of INT96 timestamps' day field. */
   private val JulianDayOfEpoch = 2440588
 
@@ -407,30 +506,62 @@ object MbStream {
     * defaults. No rows when the file is gone, as a scan with
     * `ignoreMissingFiles` skips it.
     */
-  private[streaming] def readBufferFile(file: java.nio.file.Path, opts: ParquetReadOptions): Seq[EmitterRunner.Message] = {
+  private[streaming] def readBufferFile(file: java.nio.file.Path, opts: ParquetReadOptions): Seq[EmitterRunner.Message] =
+    withReader(file, opts)(Seq.empty[EmitterRunner.Message]) { reader =>
+      val schema = reader.getFooter.getFileMetaData.getSchema
+      val Seq(stream, created, data) = Seq("stream", "created", "data").map(schema.getFieldIndex)
+      val micros = createdMicros(file, schema.getType(created).asPrimitiveType, created)
+      val rows = ArrayBuffer.empty[EmitterRunner.Message]
+      eachRow(reader, schema)(g => rows += EmitterRunner.Message(g.getString(stream, 0), fromMicros(micros(g)), g.getString(data, 0)))
+      rows.toSeq
+    }
+
+  /** `body` of a reader of `file`, or `gone` when the file is gone. */
+  private def withReader[T](file: java.nio.file.Path, opts: ParquetReadOptions)(gone: => T)(body: ParquetFileReader => T): T = {
     val opened =
       try Some(ParquetFileReader.open(new LocalInputFile(file), opts))
-      catch { case _: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException => None }
-    opened.fold(Seq.empty[EmitterRunner.Message]) { reader =>
-      try {
-        val schema = reader.getFooter.getFileMetaData.getSchema
-        val io = new ColumnIOFactory().getColumnIO(schema)
-        val Seq(stream, created, data) = Seq("stream", "created", "data").map(schema.getFieldIndex)
-        val micros = createdMicros(file, schema.getType(created).asPrimitiveType, created)
-        val rows = ArrayBuffer.empty[EmitterRunner.Message]
-        var pages = reader.readNextRowGroup()
-        while (pages != null) {
-          val records = io.getRecordReader(pages, new GroupRecordConverter(schema))
-          for (_ <- 0L until pages.getRowCount) {
-            val g = records.read()
-            rows += EmitterRunner.Message(g.getString(stream, 0), fromMicros(micros(g)), g.getString(data, 0))
-          }
-          pages = reader.readNextRowGroup()
-        }
-        rows.toSeq
-      } finally reader.close()
+      catch { case _: java.io.FileNotFoundException | _: NoSuchFileException => None }
+    opened.fold(gone)(reader => try body(reader) finally reader.close())
+  }
+
+  /** Every row of `reader`'s file in the columns of `schema` (the file's, or the reader's requested schema), in file order. */
+  private def eachRow(reader: ParquetFileReader, schema: MessageType)(f: Group => Unit): Unit = {
+    val io = new ColumnIOFactory().getColumnIO(schema, reader.getFooter.getFileMetaData.getSchema)
+    var pages = reader.readNextRowGroup()
+    while (pages != null) {
+      val records = io.getRecordReader(pages, new GroupRecordConverter(schema))
+      for (_ <- 0L until pages.getRowCount) f(records.read())
+      pages = reader.readNextRowGroup()
     }
   }
+
+  /** The rows of a buffer file from its footer; None when the file is gone. */
+  private[streaming] def rowCount(file: java.nio.file.Path, opts: ParquetReadOptions): Option[Long] =
+    withReader(file, opts)(Option.empty[Long])(r => Some(r.getRecordCount))
+
+  /** The newest `created` of a buffer file, in epoch ms (µs floored), or
+    * None when it has no row or is gone: from the footer's statistics when
+    * every row group has them, else from that one column, read here. */
+  private[streaming] def newestCreatedMs(file: java.nio.file.Path, opts: ParquetReadOptions): Option[Long] =
+    withReader(file, opts)(Option.empty[Long]) { reader =>
+      val schema = reader.getFooter.getFileMetaData.getSchema
+      val t = schema.getType(schema.getFieldIndex("created")).asPrimitiveType
+      val stats = reader.getFooter.getBlocks.asScala.toSeq.map(_.getColumns.asScala
+        .find(_.getPath.toDotString == "created").map(_.getStatistics).filter(_.hasNonNullValue))
+      val micros = t.getLogicalTypeAnnotation match {
+        case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
+            if ts.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS && stats.forall(_.nonEmpty) =>
+          stats.flatten.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue).maxOption
+        case _ =>
+          val column = new MessageType(schema.getName, t)
+          reader.setRequestedSchema(column)
+          val value = createdMicros(file, t, 0)
+          var newest = Option.empty[Long]
+          eachRow(reader, column)(g => newest = Some(newest.fold(value(g))(math.max(_, value(g)))))
+          newest
+      }
+      micros.map(Math.floorDiv(_, 1000L))
+    }
 
   /** Epoch µs of the `created` field (index `field`, type `t`) of a row. */
   private def createdMicros(file: java.nio.file.Path, t: PrimitiveType, field: Int): Group => Long =

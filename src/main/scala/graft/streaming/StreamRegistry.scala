@@ -13,7 +13,11 @@ import org.apache.spark.sql.SparkSession
   *
   * Layout per stream (SURVEY.md §7):
   * {{{
-  *   <root>/<name>/buffer/       appended message parquet (the Buffer)
+  *   <root>/<name>/buffer/       the Buffer: message parquet files, and the
+  *                               producers' hidden segment logs
+  *                               (.seg-<producer>-<n>.log, each with its
+  *                               .lock sidecar), sealed into
+  *                               part-<producer>-<n>.parquet (see [[Segments]])
   *   <root>/<name>/windows/      emitted-window history (persist(keep=true))
   *   <root>/<name>/checkpoints/  the emitter's batch log (graft-batches/) —
   *                               replaces the reference's `processed` flag

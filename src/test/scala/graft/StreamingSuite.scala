@@ -7,6 +7,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, get_json_object, lit, pmod, xxhash64}
+import org.apache.spark.sql.types.{StringType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming._
@@ -612,6 +613,10 @@ class StreamingSuite extends AnyFunSuite {
     st.append("""{"i":3}""")
     assert(st.buffer().count() === 2)
     assert(mb.status("life").streamStatus === "open")
+    // a close through another handle is seen by the next append
+    again.close()
+    intercept[IllegalStateException] { st.append("""{"i":4}""") }
+    assert(st.buffer().count() === 2)
   }
 
   test("streaming rolling anomalies match the batch operator for in-order arrival") {
@@ -882,7 +887,8 @@ class StreamingSuite extends AnyFunSuite {
       listings += 1
     })
     lister.start()
-    try (0 until 40).foreach(i => st.append(s"""{"i":$i,"pad":"${"x" * 2000}"}"""))
+    // 300 kB messages: the 4 MiB segment is sealed into a parquet file twice
+    try (0 until 40).foreach(i => st.append(s"""{"i":$i,"pad":"${"x" * 300000}"}"""))
     finally { done.set(true); lister.join() }
     assert(listings > 1 && seen.size > 0)
     import scala.jdk.CollectionConverters._
@@ -1128,7 +1134,7 @@ class StreamingSuite extends AnyFunSuite {
   private def logEntry(st: MbStream, name: String): Seq[String] = {
     val in = new java.io.DataInputStream(Files.newInputStream(BufferSource.logDir(st).resolve(name)))
     try {
-      assert(in.readInt() === 1, "batch log format")
+      assert(in.readInt() === 2, "batch log format")
       Seq.fill(in.readInt())(in.readUTF())
     } finally in.close()
   }
@@ -1192,7 +1198,7 @@ class StreamingSuite extends AnyFunSuite {
     try {
       await("the aged files")(sink.size == 3)
       assert(st.runRetention(60) === 3)
-      (0 until fresh).foreach(i => st.append(s"""{"new":$i}"""))
+      writeInOrder(st, (0 until fresh).map(i => Seq((s"""{"new":$i}""", new Timestamp(System.currentTimeMillis())))))
       await("the fresh files")(sink.size == 3 + fresh)
       Thread.sleep(300)
     } finally q.stop()
@@ -1678,6 +1684,250 @@ class StreamingSuite extends AnyFunSuite {
     }
     assert((listed() & expected).isEmpty && listed().size === files.size - expected.size)
     assert(st.buffer().count() === 4)
+  }
+
+  test("a retention sweep runs no Spark job: footer statistics, and an INT96 file's created column read locally") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("swept-local")
+    val now = 1700000000000L
+    def rows(ages: Long*) = ages.map(a => (s"""{"a":$a}""", new Timestamp(now - a * 1000L)))
+    st.writeBufferFile(rows(7200L, 3700L))
+    st.writeBufferFile(rows(30L))
+    // Spark's writer: INT96 created, no statistics in the footer
+    spark.createDataFrame(spark.sparkContext.parallelize(rows(9000L, 4000L).map { case (d, t) => Row(st.name, t, d) }, 1),
+      MbStream.MessageSchema).write.mode("append").parquet(st.bufferDir)
+    spark.createDataFrame(spark.sparkContext.parallelize(rows(5000L, 10L).map { case (d, t) => Row(st.name, t, d) }, 1),
+      MbStream.MessageSchema).write.mode("append").parquet(st.bufferDir)
+    new JobLog().around { jl =>
+      val dropped = jl.tagged("sweep")(st.runRetention(3600, nowMs = now))
+      jl.settle()
+      assert(jl.jobs.count(_._1 == "sweep") === 0, "a sweep runs no Spark job")
+      assert(dropped === 2)
+    }
+    assert(st.buffer().select("data").collect().map(_.getString(0)).sorted.toSeq ===
+      Seq("""{"a":10}""", """{"a":30}""", """{"a":5000}"""))
+  }
+
+  /** The segment logs in `st`'s buffer. */
+  private def segmentLogs(st: MbStream): Seq[java.nio.file.Path] = {
+    val s = Files.list(java.nio.file.Paths.get(st.bufferDir))
+    try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(f => f.getFileName.toString.startsWith(".seg-") && f.getFileName.toString.endsWith(".log")).sorted
+    finally s.close()
+  }
+
+  /** The visible parquet files in `st`'s buffer. */
+  private def bufferFiles(st: MbStream): Seq[String] = {
+    val s = Files.list(java.nio.file.Paths.get(st.bufferDir))
+    try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+      .filter(n => n.endsWith(".parquet") && !n.startsWith(".")).sorted
+    finally s.close()
+  }
+
+  private def payloads(sink: mutable.ArrayBuffer[(Long, Seq[String])]): Seq[String] = sink.toSeq.flatMap(_._2)
+
+  test("segment log: appends are records of one hidden segment; a torn last record and a bad CRC end what is read") {
+    val mb = Minibatch(spark, freshRoot())
+    for ((label, damage) <- Seq[(String, java.nio.file.Path => Unit)](
+        // a record header that promises 50 payload bytes, and 5 of them
+        "torn" -> (f => Files.write(f, java.nio.ByteBuffer.allocate(22).putInt(50).array, java.nio.file.StandardOpenOption.APPEND)),
+        // the last payload byte of the last record flipped
+        "crc" -> { f =>
+          val b = Files.readAllBytes(f)
+          b(b.length - 2) = (b(b.length - 2) ^ 1).toByte
+          Files.write(f, b)
+        })) {
+      val st = mb.stream(s"damaged-$label")
+      (0 until 3).foreach(i => st.append(s"""{"i":$i}"""))
+      assert(bufferFiles(st).isEmpty && segmentLogs(st).size === 1, "appends write no parquet file")
+      damage(segmentLogs(st).head)
+      val (sink, fn) = collector()
+      mb.streaming(st.name).size(1).emit(fn).run()
+      val kept = if (label == "torn") 3 else 2
+      assert(payloads(sink) === (0 until kept).map(i => s"""{"i":$i}"""), label)
+      assert(st.buffer().count() === kept, label)
+      // no cursor passes the damaged record: what follows it is never read
+      st.append("""{"i":9}""")
+      val (again, fn2) = collector()
+      mb.streaming(st.name).size(1).emit(fn2).run()
+      assert(again.isEmpty, s"$label: $again")
+    }
+  }
+
+  test("segment log: a seal while an emitter has read the segment in part delivers every message exactly once") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("sealed-under")
+    (0 until 10).foreach(i => st.append(s"""{"i":$i}"""))
+    val inEmit = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val (sink, fn) = collector()
+    val q = mb.streaming(st.name).size(1).maxFilesPerTrigger(1)
+      .withTrigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+      .emit { (id, df) =>
+        assert(df.isLocal && df.queryExecution.logical.analyzed, "a window is a local frame, analyzed when built")
+        fn(id, df)
+        if (id == 2) { inEmit.countDown(); release.await() }
+      }.start()
+    try {
+      assert(inEmit.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      st.close() // seals the segment: the emitter continues from the sealed file
+      assert(segmentLogs(st).isEmpty && bufferFiles(st).size === 1)
+      st.reopen()
+      release.countDown()
+      (10 until 12).foreach(i => st.append(s"""{"i":$i}"""))
+      await("every message")(sink.size >= 12)
+      Thread.sleep(300)
+    } finally { release.countDown(); q.stop() }
+    assert(q.exception.isEmpty, s"${q.exception}")
+    assert(sink.toSeq === (0 until 12).map(i => i.toLong -> Seq(s"""{"i":$i}""")))
+    val batches = (0 until 100).map(_.toString).filter(k => Files.exists(BufferSource.logDir(st).resolve(k)))
+    assert(batches.size === 3 + 1 + 2, s"one append per batch, the sealed rest as one: $batches")
+  }
+
+  test("segment log: exactly once across a seal and a restart that replays an uncommitted record") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("sealed-replay")
+    def drain(): Seq[(Long, Seq[String])] = {
+      val (sink, fn) = collector()
+      mb.streaming(st.name).size(2).emit(fn).run()
+      sink.toSeq
+    }
+    (0 until 4).foreach(i => st.append(s"""{"i":$i}"""))
+    assert(drain().map(_._1) === Seq(0L, 1L))
+    (4 until 6).foreach(i => st.append(s"""{"i":$i}"""))
+    val batch1 = drain()
+    assert(batch1 === Seq(2L -> Seq("""{"i":4}""", """{"i":5}""")))
+    // the emitter dies between batch 1's record and its commit marker, and
+    // the segment it read is sealed before the restart
+    Files.delete(BufferSource.logDir(st).resolve("1.commit"))
+    st.close()
+    st.reopen()
+    assert(segmentLogs(st).isEmpty && bufferFiles(st).size === 1)
+    (6 until 8).foreach(i => st.append(s"""{"i":$i}"""))
+    val (sink, fn) = collector()
+    mb.streaming(st.name).size(2).emit(fn).run()
+    assert(sink.toSeq === batch1 :+ (3L -> Seq("""{"i":6}""", """{"i":7}""")),
+      "batch 1 runs again from the sealed file's rows; the rest of that file is not taken again")
+    assert(drain().isEmpty)
+  }
+
+  test("segment log: clear() with an open segment empties the buffer, and later appends still arrive") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("cleared-open")
+    val other = mb.stream(st.name) // a second producer of the same stream
+    st.append("""{"i":0}""")
+    other.append("""{"o":0}""")
+    val (sink, fn) = collector()
+    mb.streaming(st.name).size(1).emit(fn).run()
+    assert(sink.size === 2 && segmentLogs(st).size === 2)
+    st.clear()
+    assert(st.buffer().count() === 0 && segmentLogs(st).isEmpty)
+    st.append("""{"i":1}""")
+    other.append("""{"o":1}""")
+    assert(st.buffer().count() === 2)
+    mb.streaming(st.name).size(1).emit(fn).run()
+    assert(payloads(sink).sorted === Seq("""{"i":0}""", """{"i":1}""", """{"o":0}""", """{"o":1}"""))
+  }
+
+  test("segment log: an orphan segment, left unlocked by its producer, is sealed by the next producer and emitted once") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("orphaned")
+    st.appendAll(Seq("""{"i":0}""", """{"i":1}"""))
+    // the segment as a dead producer leaves it: no lock held, no sidecar
+    val log = segmentLogs(st).head
+    val copy = Files.copy(log, Files.createTempFile("orphan", ".log"), java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    st.clear()
+    Files.move(copy, log.resolveSibling(".seg-orphan-0.log"))
+    assert(st.buffer().count() === 2, "an unsealed orphan reads back")
+    val next = mb.stream(st.name)
+    next.append("""{"i":2}""")
+    assert(bufferFiles(st) === Seq("part-orphan-0.parquet") && segmentLogs(st).size === 1,
+      "the next producer's first append seals the orphan")
+    val (sink, fn) = collector()
+    mb.streaming(st.name).size(1).emit(fn).run()
+    mb.streaming(st.name).size(1).emit(fn).run()
+    assert(payloads(sink).sorted === (0 until 3).map(i => s"""{"i":$i}"""))
+    // a retention sweep seals an orphan too, and then judges its file
+    Files.copy(log.resolveSibling(s"${segmentLogs(st).head.getFileName}"), log.resolveSibling(".seg-orphan-1.log"))
+    assert(st.runRetention(3600) === 0 && bufferFiles(st) === Seq("part-orphan-0.parquet", "part-orphan-1.parquet"))
+  }
+
+  test("segment log: a batch log of format 1 (files only) resumes: its files are not taken again, ids continue") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("format1")
+    val now = new Timestamp(System.currentTimeMillis())
+    val old = writeInOrder(st, Seq(Seq(("""{"i":0}""", now)))).head.getFileName.toString
+    // batch 0 as the emitter before segments wrote it: format 1, names, state
+    val dir = Files.createDirectories(BufferSource.logDir(st))
+    def write(name: String)(body: java.io.DataOutputStream => Unit): Unit = {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.DataOutputStream(bytes)
+      out.writeInt(1)
+      body(out)
+      out.flush()
+      Files.write(dir.resolve(name), bytes.toByteArray)
+    }
+    def state(out: java.io.DataOutputStream, nextWindow: Long): Unit = {
+      out.writeLong(Long.MinValue)
+      out.writeBoolean(true)
+      out.writeLong(nextWindow)
+      out.writeLong(now.getTime)
+      out.writeInt(0)
+    }
+    write("0") { out => out.writeInt(1); out.writeUTF(old); state(out, 0L) }
+    write("0.commit")(state(_, 1L))
+    st.append("""{"i":1}""")
+    val (sink, fn) = collector()
+    mb.streaming(st.name).size(1).emit(fn).run()
+    assert(sink.toSeq === Seq(1L -> Seq("""{"i":1}""")))
+    assert(logEntry(st, "1") === Nil, "batch 1 took a segment range, no file")
+  }
+
+  test("buffer(): the same rows as appended, across sealed, open and Spark-written INT96 files; Spark's parquet read sees no segment") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("mixed")
+    val t = new Timestamp(1700000000123L)
+    spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(st.name, t, """{"src":"spark"}""")), 1),
+      MbStream.MessageSchema).write.mode("append").parquet(st.bufferDir)
+    val before = System.currentTimeMillis()
+    st.appendAll(Seq("""{"src":"sealed","i":0}""", """{"src":"sealed","i":1}"""))
+    st.close()
+    st.reopen()
+    st.append("""{"src":"open","i":2}""")
+    val other = mb.stream(st.name)
+    other.appendAll(Seq("""{"src":"other","i":3}"""))
+    val after = System.currentTimeMillis()
+    assert(segmentLogs(st).size === 2 && bufferFiles(st).size === 2)
+    val rows = st.buffer().select("stream", "created", "data").collect()
+      .map(r => (r.getString(0), r.getTimestamp(1).getTime, r.getString(2))).sortBy(_._3).toSeq
+    assert(rows.map(r => (r._1, r._3)) === Seq("""{"src":"open","i":2}""", """{"src":"other","i":3}""",
+      """{"src":"sealed","i":0}""", """{"src":"sealed","i":1}""", """{"src":"spark"}""").map((st.name, _)))
+    assert(rows.last._2 === t.getTime)
+    assert(rows.init.forall(r => r._2 >= before && r._2 <= after), s"created is the append time: $rows")
+    assert(rows(2)._2 === rows(3)._2, "appendAll stamps one arrival time")
+    assert(spark.read.parquet(st.bufferDir).count() === 3, "Spark reads the parquet files only")
+    val typed = st.bufferTyped(new StructType().add("src", StringType)).select("src").collect().map(_.getString(0)).sorted
+    assert(typed.toSeq === Seq("open", "other", "sealed", "sealed", "spark"))
+  }
+
+  test("regression guard: appends that seal a full segment or an orphan run no Spark job") {
+    new JobLog().around { jl =>
+      val mb = Minibatch(spark, freshRoot())
+      val st = mb.stream("sealing")
+      val pad = "x" * (64 * 1024)
+      val n = (Segments.SealBytes / pad.length).toInt + 2
+      jl.tagged("append") {
+        (0 until n).foreach(i => st.append(s"""{"i":$i,"pad":"$pad"}"""))
+        // an orphan: a copy of the open segment, with no producer
+        val log = segmentLogs(st).head
+        Files.copy(log, log.resolveSibling(".seg-orphan-0.log"))
+        mb.stream(st.name).append("""{"i":"next"}""")
+      }
+      jl.settle()
+      assert(jl.jobs.count(_._1 == "append") === 0, "append, its seal and an orphan seal start no Spark job")
+      assert(bufferFiles(st).size === 2, "the full segment was sealed at the next append, the orphan by a new producer")
+      assert(st.buffer().count() === n + 1 + 2)
+    }
   }
 
   test("observe: streaming gate metrics surface per micro-batch in query progress") {
