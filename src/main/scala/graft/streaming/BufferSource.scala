@@ -5,9 +5,9 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption, StandardOpenOption}
 import java.nio.file.attribute.BasicFileAttributes
 import java.util.UUID
+import java.util.concurrent.TimeUnit
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 import org.apache.parquet.HadoopReadOptions
 
@@ -38,21 +38,25 @@ private[streaming] final case class Taken(files: Seq[String], ranges: Seq[Segmen
 /** The buffer files and segment records each batch of an emitter takes,
   * and the emitter's batch log. Used by one emitter thread at a time.
   *
-  * [[take]] lists `buffer/` with NIO and takes, at most
-  * `maxFilesPerTrigger` units in all:
+  * [[take]] lists `buffer/` with NIO and finds the units it may take:
   *  - the files a parquet file source would (regular files whose names
-  *    start with neither `.` nor `_`) that no batch has taken, oldest
-  *    modification time first (then by name), each whole;
+  *    start with neither `.` nor `_`) that no batch has taken, each whole,
+  *    aged by its modification time;
   *  - the rest of each sealed file whose segment earlier batches read in
-  *    part (one unit each), and none of a sealed file whose rows were all
-  *    taken from its log: that file is marked seen unread;
+  *    part, aged by its first untaken record, and none of a sealed file
+  *    whose rows were all taken from its log: that file is marked seen
+  *    unread;
   *  - each unsealed segment's new complete appends, from its cursor, each
   *    append one unit, as its parquet file was before appends went to a
-  *    log ([[Segments]]). A short, torn or CRC-failing record ends what is
-  *    read, so no cursor passes it.
-  * After [[prepareAvailableNow]] it takes only the files untaken then and
-  * the segments' records up to their readable ends then, so
-  * `Trigger.AvailableNow` lists once.
+  *    log ([[Segments]]), aged by its `created`. A short, torn or
+  *    CRC-failing record ends what is read, so no cursor passes it.
+  * It takes them oldest first, across all sources, at most
+  * `maxFilesPerTrigger` of them: a producer that appends faster than the
+  * cap does not starve another, and a draining run's flush sentinel,
+  * appended last, is taken last. After [[prepareAvailableNow]] it takes
+  * only the files untaken then and each segment's records up to its
+  * readable end then, from its log or, once it is sealed, its sealed
+  * file, so `Trigger.AvailableNow` lists once.
   *
   * The log, `checkpoints/graft-batches/`, holds:
   *  - `<k>`, the [[BatchRecord]] of batch `k`, written before the batch is
@@ -103,7 +107,7 @@ private[streaming] final class BufferSource(stream: MbStream, maxFiles: Option[I
 
   locally {
     refuseSparkCheckpoint(stream)
-    val names = list(log)
+    val names = Segments.list(log)._1
     val records = names.collect { case RecordName(k) => k.toLong }.sorted
     val compact = names.collect { case CompactName(k) => k.toLong }.maxOption
     compact.foreach(c => read(log.resolve(s"$c.compact")) { (in, version) =>
@@ -135,19 +139,19 @@ private[streaming] final class BufferSource(stream: MbStream, maxFiles: Option[I
 
   /** `buffer/` now: the visible names, and the ids of the logs whose sealed file is not listed. */
   private def listing(): (Seq[String], Seq[String]) = {
-    val names = list(buffer, hidden = true)
-    val files = names.filter(visible)
+    val (files, logs) = Segments.list(buffer)
     val fileSet = files.toSet
-    (files, names.flatMap(Segments.segmentOf).filterNot(id => fileSet(Segments.sealedName(id))).sorted)
+    (files, logs.filterNot(id => fileSet(Segments.sealedName(id))))
   }
 
-  /** The complete appends of log `id` after its cursor, up to byte `until`. */
-  private def appendsOf(id: String, until: Long): Segments.Read = {
+  /** The complete appends of log `id` after its cursor, up to byte `until`;
+    * None when the log is gone. */
+  private def appendsOf(id: String, until: Long): Option[Segments.Read] = {
     val c = cursors.getOrElse(id, Start)
     val f = buffer.resolve(Segments.logName(id))
-    val none = Segments.Read(c.byte, Vector.empty)
-    val grew = until > c.byte && (try Files.size(f) > c.byte catch { case _: NoSuchFileException => false })
-    if (!grew) none else Segments.read(f, c.byte, until).getOrElse(none)
+    val none = Segments.Read(c.byte, Vector.empty, c.byte)
+    val size = try Some(Files.size(f)) catch { case _: NoSuchFileException => None }
+    size.flatMap(n => if (until > c.byte && n > c.byte) Segments.read(f, c.byte, until) else Some(none))
   }
 
   /** Drop the names the buffer no longer lists from the seen set, and the
@@ -162,66 +166,83 @@ private[streaming] final class BufferSource(stream: MbStream, maxFiles: Option[I
     }
   }
 
+  /** Snapshot what `Trigger.AvailableNow` drains. Every segment gets a
+    * cursor, so that once it is sealed its records up to the snapshot's
+    * end are taken from its sealed file; a log sealed since the listing
+    * ends at its sealed file's last row. */
   def prepareAvailableNow(): Unit = {
     val (files, logs) = listing()
     prune(files, logs)
     availableNow = Some(Snapshot(untaken(files).toMap, logs.map { id =>
-      val c = cursors.getOrElse(id, Start)
-      val appends = appendsOf(id, Long.MaxValue).appends
-      id -> appends.lastOption.fold(c)(a => Cursor(a.end, c.row + appends.map(_.messages.size).sum))
+      val c = cursors.getOrElseUpdate(id, Start)
+      id -> (appendsOf(id, Long.MaxValue) match {
+        case Some(r) => Cursor(r.end, c.row + r.appends.map(_.messages.size).sum)
+        case None => Cursor(c.byte, MbStream.rowCount(buffer.resolve(Segments.sealedName(id)), readOpts).getOrElse(c.row))
+      })
     }.toMap))
   }
 
-  /** Whether `file` is the sealed file of a segment read in part, whose rest is taken by its cursor. */
+  /** Whether `file` is the sealed file of a segment with a cursor, whose rest is taken from the cursor. */
   private def sealedRest(file: String): Boolean = cursors.keysIterator.exists(Segments.sealedName(_) == file)
 
-  /** The listed files not taken yet, nor the rest of a segment read in
-    * part, with their modification times. */
+  /** The listed files not taken yet, nor the rest of a segment with a
+    * cursor, with their modification times (epoch µs). */
   private def untaken(files: Seq[String]): Seq[(String, Long)] =
     files.filterNot(f => seen(f) || sealedRest(f)).flatMap { n =>
       try {
         val a = Files.readAttributes(buffer.resolve(n), classOf[BasicFileAttributes])
-        if (a.isRegularFile) Some((n, a.lastModifiedTime.toMillis)) else None
+        if (a.isRegularFile) Some((n, a.lastModifiedTime.to(TimeUnit.MICROSECONDS))) else None
       } catch { case _: NoSuchFileException => None } // deleted since the listing
+    }
+
+  /** The rest of each listed sealed file whose segment earlier batches
+    * read in part, with its records; a sealed file whose rows were all
+    * taken is marked seen, unread. */
+  private def sealedRests(fileSet: Set[String]): Seq[(SegmentRange, Seq[Message])] =
+    cursors.toSeq.sortBy(_._1).flatMap { case (id, c) =>
+      val name = Segments.sealedName(id)
+      if (!fileSet(name) || seen(name)) None
+      else MbStream.rowCount(buffer.resolve(name), readOpts).flatMap { n =>
+        val end = availableNow.fold(n)(s => if (s.files.contains(name)) n else s.ends.get(id).fold(c.row)(e => math.min(n, e.row)))
+        if (c.row >= n) seen += name
+        val rows = if (end > c.row) MbStream.readBufferFile(buffer.resolve(name), readOpts).slice(c.row.toInt, end.toInt) else Nil
+        if (rows.isEmpty) None else Some(SegmentRange(id, -1L, -1L, c.row, end) -> rows)
+      }
     }
 
   /** What the next batch takes; empty when there is nothing new. */
   def take(): Taken = {
     val (files, logs) = listing()
-    val fileSet = files.toSet
     // a file of the AvailableNow snapshot is taken even if it is gone since, and reads as no rows
     if (availableNow.isEmpty) prune(files, logs)
-    var budget = maxFiles.getOrElse(Int.MaxValue)
     val whole = availableNow.fold(untaken(files))(_.files.toSeq.filterNot { case (f, _) => seen(f) || sealedRest(f) })
-      .sortBy { case (n, mtime) => (mtime, n) }.map(_._1).take(budget)
-    budget -= whole.size
-    val ranges = mutable.ArrayBuffer.empty[SegmentRange]
-    for ((id, c) <- cursors.toSeq.sortBy(_._1); name = Segments.sealedName(id) if budget > 0 && fileSet(name) && !seen(name))
-      MbStream.rowCount(buffer.resolve(name), readOpts).foreach { n =>
-        if (c.row >= n) seen += name
-        else {
-          val end = availableNow.fold(n)(s => if (s.files.contains(name)) n else s.ends.get(id).fold(c.row)(e => math.min(n, e.row)))
-          if (end > c.row) {
-            ranges += SegmentRange(id, -1L, -1L, c.row, end)
-            budget -= 1
-          }
-        }
-      }
-    val read = mutable.Map.empty[SegmentRange, Seq[Message]]
-    for (id <- logs if budget > 0) {
+    val rests = sealedRests(files.toSet)
+    val appends = logs.flatMap { id =>
       val c = cursors.getOrElse(id, Start)
-      val got = appendsOf(id, availableNow.fold(Long.MaxValue)(_.ends.get(id).fold(c.byte)(_.byte)))
-      val appends = got.appends.take(budget)
-      if (appends.nonEmpty) {
-        val msgs = appends.flatMap(_.messages)
-        val g = SegmentRange(id, got.start, appends.last.end, c.row, c.row + msgs.size)
-        ranges += g
-        read(g) = msgs
-        budget -= appends.size
-      }
+      appendsOf(id, availableNow.fold(Long.MaxValue)(_.ends.get(id).fold(c.byte)(_.byte)))
+        .filter(_.appends.nonEmpty).map(r => (id, c, r))
     }
-    fresh = read.toMap
-    Taken(whole, ranges.toSeq)
+    // every unit as (age µs, kind, source, place): a whole file (kind 0),
+    // a sealed rest (1) or a segment's append (2). The ages of a segment's
+    // appends are made non-decreasing, so what a cap takes of it is a prefix
+    def age(m: Message): Long = MbStream.toMicros(m.created)
+    val units = whole.map { case (f, mtime) => (mtime, 0, f, 0) } ++
+      rests.map { case (g, rows) => (age(rows.head), 1, g.segment, 0) } ++
+      appends.flatMap { case (id, _, r) =>
+        r.appends.map(a => age(a.messages.head)).scanLeft(Long.MinValue)(math.max).tail
+          .zipWithIndex.map { case (t, i) => (t, 2, id, i) }
+      }
+    val taken = maxFiles.fold(units)(units.sorted.take(_)).groupMapReduce(u => (u._2, u._3))(_ => 1)(_ + _)
+    def count(kind: Int, source: String): Int = taken.getOrElse((kind, source), 0)
+    val wholeTaken = whole.sortBy { case (n, mtime) => (mtime, n) }.map(_._1).filter(count(0, _) > 0)
+    val fromRests = rests.filter { case (g, _) => count(1, g.segment) > 0 }
+    val fromLogs = appends.flatMap { case (id, c, r) =>
+      val as = r.appends.take(count(2, id))
+      val msgs = as.flatMap(_.messages)
+      as.lastOption.map(a => SegmentRange(id, r.start, a.end, c.row, c.row + msgs.size) -> msgs)
+    }
+    fresh = (fromRests ++ fromLogs).toMap
+    Taken(wholeTaken, (fromRests ++ fromLogs).map(_._1))
   }
 
   /** Record the next batch as taking `t`, starting from the committed state. */
@@ -275,7 +296,7 @@ private[streaming] final class BufferSource(stream: MbStream, maxFiles: Option[I
       writeNames(out, seen.toSeq.sorted)
       writeCursors(out, cursors.toSeq.sortBy(_._1))
     }
-    list(log).foreach {
+    Segments.list(log)._1.foreach {
       case CompactName(c) if c.toLong < k => Files.deleteIfExists(log.resolve(s"$c.compact"))
       case n @ (RecordName(_) | MarkerName(_)) if n.takeWhile(_.isDigit).toLong <= k - CompactInterval =>
         Files.deleteIfExists(log.resolve(n))
@@ -303,7 +324,7 @@ private[graft] object BufferSource {
   private val Start = Cursor(0L, 0L)
 
   /** What `Trigger.AvailableNow` drains: the untaken files (name ->
-    * modification time) and each unsealed segment's readable end. */
+    * modification time, epoch µs) and each unsealed segment's readable end. */
   private final case class Snapshot(files: Map[String, Long], ends: Map[String, Cursor])
 
   /** The batch log of the emitter of `stream`. */
@@ -322,19 +343,6 @@ private[graft] object BufferSource {
           "so the files it emitted cannot be told from new ones. Drain the stream on the release that " +
           s"wrote the checkpoint, or delete ${stream.checkpointsDir} to re-read the buffer from its start.")
   }
-
-  /** A name a parquet file source would read: it starts with neither `.`
-    * nor `_` (whether it is a regular file is checked only for names not
-    * taken yet). */
-  private def visible(name: String): Boolean = !name.startsWith(".") && !name.startsWith("_")
-
-  /** The names in `dir`: the visible ones, or with `hidden` all of them. */
-  private def list(dir: Path, hidden: Boolean = false): Seq[String] =
-    try {
-      val s = Files.newDirectoryStream(dir)
-      try s.iterator().asScala.map(_.getFileName.toString).filter(n => hidden || visible(n)).toSeq
-      finally s.close()
-    } catch { case _: NoSuchFileException => Nil }
 
   /** Write `f` through a hidden temp file: moved over `f` when `replace`,
     * hard-linked to `f` otherwise, which fails if `f` exists. */

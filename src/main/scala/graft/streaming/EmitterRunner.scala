@@ -45,9 +45,10 @@ object EmitterRunner {
 
   case class Message(stream: String, created: Timestamp, data: String)
 
-  /** `m` as a row of [[MbStream.MessageSchema]] in Spark's internal representation. */
-  def internalRow(m: Message): InternalRow =
-    InternalRow(UTF8String.fromString(m.stream), MbStream.toMicros(m.created), UTF8String.fromString(m.data))
+  /** `m` as a row of [[MbStream.MessageSchema]] in Spark's internal
+    * representation, followed by the values of `more` columns. */
+  def internalRow(m: Message, more: Any*): InternalRow =
+    InternalRow(Seq(UTF8String.fromString(m.stream), MbStream.toMicros(m.created), UTF8String.fromString(m.data)) ++ more: _*)
 
   /** Reserved control message: a CountWindow batch that holds this
     * payload emits its sub-N remainder as a final partial window (see
@@ -181,7 +182,7 @@ object EmitterRunner {
       // batch-level sink (gets the batch id → enables idempotent,
       // replay-safe writes, e.g. IdempotentTableSink)
       batchSink.foreach(_(FrameBridge.local(spark, sinkSchema, windows.flatMap { case (id, ms) =>
-        ms.map(m => InternalRow(UTF8String.fromString(m.stream), MbStream.toMicros(m.created), UTF8String.fromString(m.data), id))
+        ms.map(internalRow(_, id))
       }), batchId))
     }
     def runBatch(r: BatchRecord): (BatchState, Long) = {
@@ -195,7 +196,7 @@ object EmitterRunner {
       val ids = windows.map(_._1)
       val byId = windows.toMap
       emitAll((ids ++ gapIds(ids, r.in.mark)).sorted, id => emitFn(id, FrameBridge.local(spark,
-        MbStream.MessageSchema, byId.getOrElse(id, Nil).map(internalRow))), maxWorkers)
+        MbStream.MessageSchema, byId.getOrElse(id, Nil).map(internalRow(_)))), maxWorkers)
       if (windows.nonEmpty) persist(windows, r.batchId)
       // monotone: a late batch's older windows must not lower the mark, or
       // the next batch re-emits ids up to it as empty gap windows

@@ -58,8 +58,8 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
   private var swept = false
 
   /** Producer ingest (reference `Stream.append`, models.py:209-211): stamp
-    * arrival time (epoch ms) and write the message as one record of this
-    * producer's open segment, with one `write`, before returning. The
+    * arrival time ([[arrivalMicros]]) and write the message as one record
+    * of this producer's open segment, with one `write`, before returning. The
     * written record is the process boundary — no ack protocol and no
     * fsync, like the reference's fast-insert path (models.py:84-113).
     * Starts no Spark job and writes no parquet, except when the segment
@@ -88,7 +88,8 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
     * seals the segments their dead producers left; a segment at its size
     * or age bound is sealed and a new one opened. */
   private def write(rows: Seq[String]): Unit = if (rows.nonEmpty) {
-    val nowMs = System.currentTimeMillis()
+    val createdMicros = arrivalMicros()
+    val nowMs = createdMicros / 1000L
     if (!swept) {
       Segments.sealOrphans(spark, bufferPath)
       swept = true
@@ -100,7 +101,7 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
       open = Some(o)
       o
     }
-    try s.append(Segments.encode(rows, nowMs * 1000L), nowMs)
+    try s.append(Segments.encode(rows, createdMicros), nowMs)
     catch {
       case e: Throwable =>
         // a failed write may leave a torn record, past which no reader reads:
@@ -160,13 +161,13 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
     * racing the read neither drops nor doubles its rows.
     */
   def buffer(): DataFrame = {
-    val unsealed = Segments.logs(bufferPath).flatMap(id => Segments.read(bufferPath.resolve(Segments.logName(id)), 0L)
+    val unsealed = Segments.list(bufferPath)._2.flatMap(id => Segments.read(bufferPath.resolve(Segments.logName(id)), 0L)
       .map(r => id -> r.appends.flatMap(_.messages)))
     val files = readOrEmpty(bufferDir, MessageSchema)
     val listed = files.inputFiles.map(f => f.substring(f.lastIndexOf('/') + 1)).toSet
     val rows = unsealed.collect { case (id, ms) if !listed(Segments.sealedName(id)) => ms }.flatten
     val all = if (rows.isEmpty) files
-      else files.union(FrameBridge.local(spark, MessageSchema, rows.map(EmitterRunner.internalRow)))
+      else files.union(FrameBridge.local(spark, MessageSchema, rows.map(EmitterRunner.internalRow(_))))
     all.filter(!(col("data") <=> EmitterRunner.FlushSentinel))
   }
 
@@ -405,6 +406,20 @@ final class AttachedSource(
 object MbStream {
 
   private[graft] def toMicros(ts: Timestamp): Long = ts.getTime * 1000L + ts.getNanos / 1000 % 1000
+
+  private val lastArrival = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+
+  /** The arrival time of an append, epoch µs: the clock's, or, when that is
+    * no later, one µs past the previous append's in this JVM. Appends
+    * through different handles then keep the order they were made in,
+    * which an emitter capped by `maxFilesPerTrigger` takes them in, and
+    * which a window orders its messages by: a draining run's flush
+    * sentinel comes after every message appended before it. */
+  private[streaming] def arrivalMicros(): Long = {
+    val now = java.time.Instant.now()
+    val us = now.getEpochSecond * 1000000L + now.getNano / 1000
+    lastArrival.updateAndGet(prev => math.max(us, prev + 1))
+  }
 
   private[streaming] def fromMicros(us: Long): Timestamp = {
     val ts = new Timestamp(Math.floorDiv(us, 1000L))

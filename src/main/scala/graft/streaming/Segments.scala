@@ -4,7 +4,7 @@ import java.lang.ref.WeakReference
 import java.nio.ByteBuffer
 import java.nio.channels.{FileChannel, OverlappingFileLockException}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, NoSuchFileException, Path}
+import java.nio.file.{Files, NoSuchFileException, Path, StandardCopyOption}
 import java.nio.file.StandardOpenOption.{APPEND, CREATE, CREATE_NEW, READ, WRITE}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.zip.CRC32C
@@ -32,8 +32,11 @@ import graft.streaming.EmitterRunner.Message
   * A segment is sealed into `part-<producer>-<n>.parquet` ([[seal]]): its
   * records in log order, so row `i` of the sealed file is the log's
   * record `i`. Once that file exists the log is ignored by every reader
-  * and deleted. Segment names start with `.`, so Spark's listing, and
-  * any reader of `buffer/` as a parquet table, never sees one.
+  * and deleted; a log whose readable records end short of its size is
+  * moved aside to `.seg-<producer>-<n>.log.damaged` instead, with a
+  * warning, so the bytes past the damage stay on disk. Segment names
+  * start with `.`, so Spark's listing, and any reader of `buffer/` as a
+  * parquet table, never sees one.
   *
   * Liveness: the producer holds a `FileChannel` lock on the hidden
   * sidecar `.seg-<producer>-<n>.lock` while its segment is open. The
@@ -45,6 +48,8 @@ import graft.streaming.EmitterRunner.Message
   * "held" when its lock cannot be taken.
   */
 private[graft] object Segments {
+
+  private lazy val logger = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** A segment is sealed at the first append that finds it this large.
     * 4 MiB keeps a sealed file to one parquet row group of a few
@@ -75,14 +80,20 @@ private[graft] object Segments {
   }
 
   def logName(id: String): String = s".seg-$id.log"
+  def damagedName(id: String): String = s".seg-$id.log.damaged"
   def lockName(id: String): String = s".seg-$id.lock"
   def sealedName(id: String): String = s"part-$id.parquet"
 
   /** One append's records: the byte just past them, and their messages. */
   final case class Append(end: Long, messages: Vector[Message])
 
-  /** What [[read]] found: the byte it started at and the complete appends from there. */
-  final case class Read(start: Long, appends: Vector[Append])
+  /** What [[read]] found: the byte it started at, the complete appends
+    * from there, and the byte it read up to. */
+  final case class Read(start: Long, appends: Vector[Append], upTo: Long) {
+    /** The byte just past the last complete append: short of [[upTo]] when
+      * what follows is torn, fails its CRC, or is an append not ended yet. */
+    def end: Long = appends.lastOption.fold(start)(_.end)
+  }
 
   private def header(stream: String): ByteBuffer = {
     val name = stream.getBytes(UTF_8)
@@ -120,7 +131,7 @@ private[graft] object Segments {
     try {
       val size = math.min(ch.size, until)
       val fixed = ByteBuffer.wrap(bytes(ch, 0, HeaderFixed))
-      if (fixed.limit() < HeaderFixed) Some(Read(from, Vector.empty)) // being created
+      if (fixed.limit() < HeaderFixed) Some(Read(from, Vector.empty, size)) // being created
       else {
         if (fixed.getInt(0) != Magic || fixed.getInt(4) != FormatVersion)
           throw new IllegalStateException(s"$log: not a graft segment log of format $FormatVersion")
@@ -128,7 +139,7 @@ private[graft] object Segments {
         val start = math.max(from, HeaderFixed.toLong + nameLen)
         val stream = new String(bytes(ch, HeaderFixed, nameLen), UTF_8)
         val arr = if (size <= start) Array.emptyByteArray else bytes(ch, start, Math.toIntExact(size - start))
-        Some(Read(start, parse(stream, arr, start)))
+        Some(Read(start, parse(stream, arr, start), math.max(start, size)))
       }
     } finally ch.close()
   }
@@ -161,27 +172,40 @@ private[graft] object Segments {
     appends.result()
   }
 
-  /** The ids of the logs in `buffer`. */
-  def logs(buffer: Path): Seq[String] =
+  /** A name a parquet file source reads: it starts with neither `.` nor `_`. */
+  def visible(name: String): Boolean = !name.startsWith(".") && !name.startsWith("_")
+
+  /** `dir` now: the visible names, and the ids of its segment logs, sorted. */
+  def list(dir: Path): (Seq[String], Seq[String]) =
     try {
-      val s = Files.newDirectoryStream(buffer, ".seg-*.log")
-      try s.iterator().asScala.flatMap(f => segmentOf(f.getFileName.toString)).toSeq.sorted
-      finally s.close()
-    } catch { case _: NoSuchFileException => Nil }
+      val s = Files.newDirectoryStream(dir)
+      try {
+        val names = s.iterator().asScala.map(_.getFileName.toString).toSeq
+        (names.filter(visible), names.flatMap(segmentOf).sorted)
+      } finally s.close()
+    } catch { case _: NoSuchFileException => (Nil, Nil) }
 
   /** Seal segment `id` of `buffer`, whose lock the caller holds: write its
     * readable records, in log order, as `part-<id>.parquet`
     * ([[MbStream.writeMessages]]: a hidden temp file published by
-    * `ATOMIC_MOVE`), then delete the log. A log whose sealed file exists
+    * `ATOMIC_MOVE`), then delete the log, or, when bytes past its readable
+    * records are torn or fail their CRC, move it aside to
+    * `.seg-<id>.log.damaged` and warn. A log whose sealed file exists
     * already is only deleted, and one with no record leaves no file. */
   def seal(spark: SparkSession, buffer: Path, id: String): Unit = {
-    val log = buffer.resolve(logName(id))
+    val seg = buffer.resolve(logName(id))
     val file = buffer.resolve(sealedName(id))
-    if (!Files.exists(file)) read(log, 0L).foreach { r =>
+    if (!Files.exists(file)) read(seg, 0L).foreach { r =>
       val msgs = r.appends.flatMap(_.messages)
       if (msgs.nonEmpty) MbStream.writeMessages(spark, file, msgs.iterator)
+      if (r.end < r.upTo) {
+        val aside = buffer.resolve(damagedName(id))
+        logger.warn(s"$seg: the ${r.upTo - r.end} bytes from byte ${r.end} are torn or fail their CRC, so no reader " +
+          s"reads them; sealed the ${msgs.size} records before them into $file and moved the log to $aside")
+        Files.move(seg, aside, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      }
     }
-    Files.deleteIfExists(log)
+    Files.deleteIfExists(seg)
   }
 
   // the logs that producers of this JVM hold open, each to its producer
@@ -202,7 +226,7 @@ private[graft] object Segments {
     * producer of this JVM whose newest record is no newer seals its own
     * segment as well, so retention can judge it. */
   def sealOrphans(spark: SparkSession, buffer: Path, idleBefore: Option[Long] = None): Unit =
-    logs(buffer).foreach { id =>
+    list(buffer)._2.foreach { id =>
       holder(buffer.resolve(logName(id))) match {
         case Some(owner) => idleBefore.foreach(owner.sealIfIdle(id, _))
         case None => sealIfUnlocked(spark, buffer, id)

@@ -1751,6 +1751,14 @@ class StreamingSuite extends AnyFunSuite {
       val (again, fn2) = collector()
       mb.streaming(st.name).size(1).emit(fn2).run()
       assert(again.isEmpty, s"$label: $again")
+      // a seal keeps the readable records and moves the damaged log aside, its bytes intact
+      val log = segmentLogs(st).head
+      val bytes = Files.readAllBytes(log)
+      st.close()
+      val aside = log.resolveSibling(s"${log.getFileName}.damaged")
+      assert(segmentLogs(st).isEmpty && bufferFiles(st).size === 1, label)
+      assert(Files.readAllBytes(aside).sameElements(bytes), s"$label: the damaged log is kept")
+      assert(st.buffer().count() === kept, label)
     }
   }
 
@@ -1908,6 +1916,102 @@ class StreamingSuite extends AnyFunSuite {
     assert(spark.read.parquet(st.bufferDir).count() === 3, "Spark reads the parquet files only")
     val typed = st.bufferTyped(new StructType().add("src", StringType)).select("src").collect().map(_.getString(0)).sorted
     assert(typed.toSeq === Seq("open", "other", "sealed", "sealed", "spark"))
+  }
+
+  test("segment log: a capped drain takes two producers' appends oldest first, and a draining run flushes the tail last") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("two-producers")
+    val other = mb.stream(st.name)
+    (0 until 5).foreach(i => (if (i % 2 == 0) st else other).append(s"""{"i":$i}"""))
+    val (sink, fn) = collector()
+    // run() appends the flush sentinel through a handle of its own, so it sits in a third segment
+    mb.streaming(st.name).size(2).maxFilesPerTrigger(1).flushPartialOnDrain(true).emit(fn).run()
+    assert(sink.toSeq === Seq(0L -> Seq("""{"i":0}""", """{"i":1}"""), 1L -> Seq("""{"i":2}""", """{"i":3}"""),
+      2L -> Seq("""{"i":4}""")))
+    val batches = (0 until 100).map(_.toString).filter(k => Files.exists(BufferSource.logDir(st).resolve(k)))
+    assert(batches.size === 6, s"one append per batch, the sentinel's last: $batches")
+  }
+
+  test("segment log: a capped AvailableNow drain takes the records of a segment sealed before the drain reached it") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("sealed-mid-drain")
+    val other = mb.stream(st.name)
+    (0 until 3).foreach(i => st.append(s"""{"i":$i}"""))
+    (3 until 6).foreach(i => other.append(s"""{"i":$i}"""))
+    val (sink, fn) = collector()
+    mb.streaming(st.name).size(1).maxFilesPerTrigger(1).emit { (id, df) =>
+      if (id == 0) {
+        st.append("""{"late":0}""") // after the drain's snapshot: left to the next drain
+        other.close() // seals the segment the drain has not taken from yet
+        assert(segmentLogs(st).size === 1 && bufferFiles(st).size === 1)
+      }
+      fn(id, df)
+    }.run()
+    assert(sink.toSeq === (0 until 6).map(i => i.toLong -> Seq(s"""{"i":$i}""")))
+    other.reopen()
+    val (again, fn2) = collector()
+    mb.streaming(st.name).size(1).emit(fn2).run()
+    assert(again.toSeq === Seq(6L -> Seq("""{"late":0}""")), "nothing is taken twice")
+  }
+
+  /** The cursors (segment -> (byte, row)) that a compact file of the batch log holds. */
+  private def compactCursors(st: MbStream, name: String): Map[String, (Long, Long)] = {
+    val in = new java.io.DataInputStream(Files.newInputStream(BufferSource.logDir(st).resolve(name)))
+    try {
+      assert(in.readInt() === 2, "batch log format")
+      Seq.fill(in.readInt())(in.readUTF())
+      Seq.fill(in.readInt())((in.readUTF(), (in.readLong(), in.readLong()))).toMap
+    } finally in.close()
+  }
+
+  test("segment log: appends, and an orphan that runRetention seals under a running emitter part-read, are emitted exactly once") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("retained-appends")
+    // an orphan segment of 4 appends, as a dead producer leaves it
+    val dead = mb.stream(st.name)
+    (0 until 4).foreach(i => dead.append(s"""{"orphan":$i}"""))
+    val copy = Files.copy(segmentLogs(st).head, Files.createTempFile("orphan", ".log"),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    dead.clear()
+    val old = new Timestamp(System.currentTimeMillis() - 3600 * 1000L)
+    val aged = writeInOrder(st, (0 until 3).map(i => Seq((s"""{"old":$i}""", old)))).map(_.getFileName.toString)
+    Files.move(copy, java.nio.file.Paths.get(st.bufferDir).resolve(".seg-orphan-0.log"))
+    val inEmit = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val (sink, fn) = collector()
+    val q = mb.streaming(st.name).size(1).maxFilesPerTrigger(1)
+      .withTrigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+      .emit { (id, df) =>
+        fn(id, df)
+        // the aged files are windows 0-2, the orphan's first two appends 3 and 4
+        if (id == 4) { inEmit.countDown(); release.await() }
+      }.start()
+    val fresh = 12
+    try {
+      assert(inEmit.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(st.runRetention(60) === 3)
+      assert(bufferFiles(st) === Seq("part-orphan-0.parquet") && segmentLogs(st).isEmpty,
+        "the sweep sealed the orphan the emitter has read in part")
+      (0 until fresh).foreach(i => st.append(s"""{"new":$i}"""))
+      release.countDown()
+      await("every message")(sink.size == 3 + 4 + fresh)
+      Thread.sleep(300) // further triggers must not take anything again
+    } finally { release.countDown(); q.stop() }
+    assert(q.exception.isEmpty, s"${q.exception}")
+    val expected = (0 until 3).map(i => s"""{"old":$i}""") ++ (0 until 4).map(i => s"""{"orphan":$i}""") ++
+      (0 until fresh).map(i => s"""{"new":$i}""")
+    assert(sink.toSeq === expected.zipWithIndex.map { case (m, w) => w.toLong -> Seq(m) }, "every message exactly once, oldest first")
+    // batch 5 took the sealed rest of the orphan, batches 6-9 the first four
+    // fresh appends: compact 9 holds both cursors, and of the files only the
+    // orphan's sealed file, all of whose rows were taken
+    assert(logEntry(st, "9.compact") === Seq("part-orphan-0.parquet"), s"against the removed $aged")
+    val log = segmentLogs(st).head
+    val cursors = compactCursors(st, "9.compact")
+    val producerSegment = log.getFileName.toString.stripPrefix(".seg-").stripSuffix(".log")
+    assert(cursors.keySet === Set("orphan-0", producerSegment))
+    assert(cursors("orphan-0")._2 === 4)
+    val (byte, row) = cursors(producerSegment)
+    assert(row === 4 && byte > 0 && byte < Files.size(log), s"$cursors")
   }
 
   test("regression guard: appends that seal a full segment or an orphan run no Spark job") {
