@@ -1,19 +1,24 @@
 #!/usr/bin/env python3
 """A/B runs of one benchmark workload, or of batch queries: a parent checkout against a change.
 
-Usage (from the root of the change's checkout):
+Usage, with the change committed, from the directory that holds the repo:
 
-    git worktree add ../parent HEAD~1
-    python3 scripts/bench_ab.py --parent ../parent --change . \\
+    git clone -q repo ab-parent && git -C ab-parent checkout -q HEAD~1
+    git clone -q repo ab-change
+    python3 repo/scripts/bench_ab.py --parent ab-parent --change ab-change \\
         --workload stream.fixed_keep --pairs 10 --seed 901
-    python3 scripts/bench_ab.py --parent ../parent --change . \\
+    python3 repo/scripts/bench_ab.py --parent ab-parent --change ab-change \\
         --queries dedup_minhash,text_tfidf --sf-dir <data>/sf0.1 --pairs 5
 
-Make the parent checkout with `git worktree add` (or `git clone`), never
-by copying a checkout: a copy carries `target/`, whose incremental-compile
-state still names the original's class files, so rebuilding the copy can
-delete them. The script first builds both sides and stops, before the
-first pair, unless each has its compiled classes.
+Run each side in a fresh `git clone` of its own, the two side by side,
+not the working checkout against a worktree beside it: the checkout
+directory alone moves a workload (in an A/A series of one commit
+against a second checkout of it, the second read `stream.count`'s
+`latency_p50_ms` up to 9.8 % higher), and two fresh clones differ only
+in the commit. Never copy a checkout: a copy carries `target/`, whose
+incremental-compile state still names the original's class files, so
+rebuilding the copy can delete them. The script first builds both sides
+and stops, before the first pair, unless each has its compiled classes.
 
 Before the first build, a workload A/B compares the two checkouts'
 BENCHMARK.json and every file under perfbench/ (build output in `target/`
@@ -100,7 +105,7 @@ def build(checkout: Path) -> None:
         sys.exit(f"{checkout}: the benchmark build failed (exit {proc.returncode}):\n{proc.stderr.strip()}")
     if not (checkout / CLASS_PROBE).is_file():
         sys.exit(f"{checkout}: built, but {CLASS_PROBE} is missing, so every run there would fail; "
-                 "make the checkout with `git worktree add` or `git clone`, not by copying one")
+                 "make the checkout with `git clone`, not by copying one")
 
 
 def run_queries(checkout: Path, names, sf_dir: Path):

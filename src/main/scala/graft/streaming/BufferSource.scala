@@ -27,8 +27,12 @@ private[streaming] final case class BatchState(carry: Option[CountCarry], mark: 
 private[streaming] final case class SegmentRange(segment: String, fromByte: Long, toByte: Long, fromRow: Long, toRow: Long)
 
 /** Batch `batchId` of an emitter: the whole buffer files and the segment
-  * ranges it takes, and the state it starts from. */
-private[streaming] final case class BatchRecord(batchId: Long, files: Seq[String], ranges: Seq[SegmentRange], in: BatchState)
+  * ranges it takes, and the state it starts from. A record that takes
+  * neither is a drain's flush: it emits the count carry's sub-N tail
+  * (see [[EmitterBuilder.flushPartialOnDrain]]). */
+private[streaming] final case class BatchRecord(batchId: Long, files: Seq[String], ranges: Seq[SegmentRange], in: BatchState) {
+  def isFlush: Boolean = files.isEmpty && ranges.isEmpty
+}
 
 /** What [[BufferSource.take]] found for the next batch. */
 private[streaming] final case class Taken(files: Seq[String], ranges: Seq[SegmentRange]) {
@@ -52,8 +56,8 @@ private[streaming] final case class Taken(files: Seq[String], ranges: Seq[Segmen
   *    CRC-failing record ends what is read, so no cursor passes it.
   * It takes them oldest first, across all sources, at most
   * `maxFilesPerTrigger` of them: a producer that appends faster than the
-  * cap does not starve another, and a draining run's flush sentinel,
-  * appended last, is taken last. After [[prepareAvailableNow]] it takes
+  * cap does not starve another, and a capped drain emits in the order the
+  * appends were made in. After [[prepareAvailableNow]] it takes
   * only the files untaken then and each segment's records up to its
   * readable end then, from its log or, once it is sealed, its sealed
   * file, so `Trigger.AvailableNow` lists once.
@@ -245,7 +249,8 @@ private[streaming] final class BufferSource(stream: MbStream, maxFiles: Option[I
     Taken(wholeTaken, (fromRests ++ fromLogs).map(_._1))
   }
 
-  /** Record the next batch as taking `t`, starting from the committed state. */
+  /** Record the next batch as taking `t`, starting from the committed
+    * state; an empty `t` records a flush. */
   def record(t: Taken): BatchRecord = {
     val r = BatchRecord(nextId, t.files, t.ranges, committed)
     publish(log.resolve(r.batchId.toString), replace = false) { out =>

@@ -22,7 +22,11 @@ import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent
   * `interval` is `Some(ms)` for `Trigger.ProcessingTime(ms)`, on Spark's
   * schedule (the next trigger at the first multiple of `ms`, in epoch ms,
   * after this one's start, or at once if the batch overran), or None for
-  * `Trigger.AvailableNow` (list once, drain, end).
+  * `Trigger.AvailableNow` (list once, drain, end). With `flushOnDrain`, a
+  * drain that took its whole snapshot and leaves a count carry holding
+  * rows ends with one more batch, a flush: its record takes no file and
+  * no range ([[BatchRecord.isFlush]]), and it is run and committed like
+  * any other, so a restart replays an uncommitted flush.
   *
   * As in Spark's loop, the thread's `sql.streaming.queryId` and
   * `streaming.sql.batchId` local properties name the emitter and the
@@ -42,6 +46,7 @@ private[streaming] final class EmitterQuery(
     stream: MbStream,
     override val name: String,
     interval: Option[Long],
+    flushOnDrain: Boolean,
     source: BufferSource,
     runBatch: BatchRecord => (BatchState, Long)) extends StreamingQuery {
   import EmitterQuery._
@@ -79,6 +84,7 @@ private[streaming] final class EmitterQuery(
       case None =>
         source.prepareAvailableNow()
         while (!stopping && trigger()) {}
+        if (!stopping && flushOnDrain && source.upcoming._2.carry.exists(_.pending.nonEmpty)) trigger(flush = true)
       case Some(ms) =>
         while (!stopping) {
           val start = System.currentTimeMillis()
@@ -105,14 +111,15 @@ private[streaming] final class EmitterQuery(
     }
   }
 
-  /** One trigger; false when it found no file. */
-  private def trigger(): Boolean = {
+  /** One trigger; false when it found no file. With `flush` it takes
+    * nothing and records a flush. */
+  private def trigger(flush: Boolean = false): Boolean = {
     val n = lock.synchronized { polls += 1; polls }
     val startMs = System.currentTimeMillis()
     val t0 = System.nanoTime()
-    val taken = if (source.pending.isEmpty) source.take() else Taken(Nil, Nil)
+    val taken = if (source.pending.isEmpty && !flush) source.take() else Taken(Nil, Nil)
     val t1 = System.nanoTime()
-    source.pending.orElse(if (taken.isEmpty) None else Some(source.record(taken))) match {
+    source.pending.orElse(if (taken.isEmpty && !flush) None else Some(source.record(taken))) match {
       case None =>
         lock.synchronized { lastIdle = n; lock.notifyAll() }
         false

@@ -50,13 +50,6 @@ object EmitterRunner {
   def internalRow(m: Message, more: Any*): InternalRow =
     InternalRow(Seq(UTF8String.fromString(m.stream), MbStream.toMicros(m.created), UTF8String.fromString(m.data)) ++ more: _*)
 
-  /** Reserved control message: a CountWindow batch that holds this
-    * payload emits its sub-N remainder as a final partial window (see
-    * [[EmitterBuilder.flushPartialOnDrain]]). Never surfaces as data — all
-    * strategies filter it out of the message flow.
-    */
-  val FlushSentinel: String = """{"__graft_flush__":true}"""
-
   sealed trait Strategy
   /** Emit a window for every N messages, exact, across micro-batches
     * (reference CountWindow, window.py:305-327). */
@@ -98,7 +91,7 @@ object EmitterRunner {
     * carry state across batches and are cut by [[CountCarry.step]].
     */
   def cutTime(strategy: Strategy, batch: Seq[Message], batchId: Long): Seq[(Long, Seq[Message])] = {
-    val msgs = arrivalOrder(batch.filter(_.data != FlushSentinel))
+    val msgs = arrivalOrder(batch)
     strategy match {
       case FixedTimeWindow(secs) => msgs.groupBy(m => fixedWindowId(m.created, secs)).toSeq.sortBy(_._1)
       case RelaxedTimeWindow => if (msgs.isEmpty) Nil else Seq((batchId, msgs))
@@ -113,7 +106,10 @@ object EmitterRunner {
     * stream's windows table (reference persist(keep), window.py:126-136).
     * Failed emitFn → whole-batch replay from its record (at-least-once,
     * window.py:119-124). `trigger` is `Trigger.ProcessingTime` or
-    * `Trigger.AvailableNow`; any other is refused.
+    * `Trigger.AvailableNow`; any other is refused. With
+    * `flushPartialOnDrain`, a count emitter's `Trigger.AvailableNow` drain
+    * ends by emitting its sub-N tail as one partial window, from a flush
+    * record of the batch log ([[EmitterQuery]]); time windows ignore it.
     */
   def start(
       stream: MbStream,
@@ -126,7 +122,8 @@ object EmitterRunner {
       maxFilesPerTrigger: Option[Int] = None,
       batchSink: Option[(DataFrame, Long) => Unit] = None,
       emitEmpty: Boolean = false,
-      maxGapWindows: Int = 1000): StreamingQuery = {
+      maxGapWindows: Int = 1000,
+      flushPartialOnDrain: Boolean = false): StreamingQuery = {
     // emit_empty (reference FixedTimeWindow default, window.py:251): gap
     // intervals between observed windows emit a zero-row window,
     // synthesized when the NEXT data batch arrives (deltas vs the
@@ -189,7 +186,7 @@ object EmitterRunner {
       val msgs = source.messages(r)
       val (windows, carry) = count match {
         case Some((n, maxAgeMs)) =>
-          val (ws, c) = CountCarry.step(r.in.carry.getOrElse(CountCarry.Empty), msgs, n, maxAgeMs)
+          val (ws, c) = CountCarry.step(r.in.carry.getOrElse(CountCarry.Empty), msgs, n, maxAgeMs, flush = r.isFlush)
           (ws, Some(c))
         case None => (cutTime(strategy, msgs, r.batchId), None)
       }
@@ -202,7 +199,7 @@ object EmitterRunner {
       // the next batch re-emits ids up to it as empty gap windows
       (BatchState(carry, ids.lastOption.fold(r.in.mark)(math.max(r.in.mark, _))), msgs.size.toLong)
     }
-    new EmitterQuery(stream, queryName.orNull, interval, source, runBatch).start()
+    new EmitterQuery(stream, queryName.orNull, interval, flushPartialOnDrain && count.nonEmpty, source, runBatch).start()
   }
 
   /** The trigger decoder, the one place that reads Spark's trigger case

@@ -76,14 +76,6 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
     write(rows)
   }
 
-  /** Engine-internal append for control messages (e.g. the CountWindow
-    * flush sentinel): skips the closed-stream check — flush-draining the
-    * tail of a stream you just closed is the expected shutdown sequence.
-    */
-  private[streaming] def appendControl(dataJson: String): Unit = synchronized {
-    write(Seq(dataJson))
-  }
-
   /** Append `rows` to the open segment: the first append of this handle
     * seals the segments their dead producers left; a segment at its size
     * or age bound is sealed and a new one opened. */
@@ -152,24 +144,32 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
       })
   }
 
-  /** Filtered read of the buffer (reference `stream.buffer()`,
-    * models.py:282-284), without the flush sentinels a draining
-    * [[EmitterBuilder.run]] appends: the parquet files, read by Spark
-    * (`*.parquet`), and the records of every segment not sealed yet,
-    * decoded on the driver. The segments are decoded first, and one whose
-    * sealed file Spark then lists is taken from that file, so a seal
-    * racing the read neither drops nor doubles its rows.
+  /** Read of the buffer (reference `stream.buffer()`, models.py:282-284):
+    * the parquet files, read by Spark (`*.parquet`), and the records of
+    * every segment not sealed yet, decoded on the driver. The segments are
+    * decoded first, and one whose sealed file Spark then lists is taken
+    * from that file, so a seal racing the read neither drops nor doubles
+    * its rows.
     */
   def buffer(): DataFrame = {
     val unsealed = Segments.list(bufferPath)._2.flatMap(id => Segments.read(bufferPath.resolve(Segments.logName(id)), 0L)
       .map(r => id -> r.appends.flatMap(_.messages)))
-    val files = readOrEmpty(bufferDir, MessageSchema)
+    val files =
+      if (parquetFiles().isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], MessageSchema)
+      // ignoreMissingFiles: the retention loop deletes whole files at any
+      // time between a reader's file-listing and its execution — a
+      // retention-enabled buffer must tolerate that, not fail the scan
+      else spark.read.schema(MessageSchema).option("ignoreMissingFiles", "true")
+        .option("pathGlobFilter", "*.parquet").parquet(bufferDir)
     val listed = files.inputFiles.map(f => f.substring(f.lastIndexOf('/') + 1)).toSet
     val rows = unsealed.collect { case (id, ms) if !listed(Segments.sealedName(id)) => ms }.flatten
-    val all = if (rows.isEmpty) files
-      else files.union(FrameBridge.local(spark, MessageSchema, rows.map(EmitterRunner.internalRow(_))))
-    all.filter(!(col("data") <=> EmitterRunner.FlushSentinel))
+    if (rows.isEmpty) files
+    else files.union(FrameBridge.local(spark, MessageSchema, rows.map(EmitterRunner.internalRow(_))))
   }
+
+  /** The parquet files of `buffer/` a reader reads, as [[BufferSource]] lists them ([[Segments.list]]). */
+  private def parquetFiles(): Seq[java.nio.file.Path] =
+    Segments.list(bufferPath)._1.filter(_.endsWith(".parquet")).map(bufferPath.resolve)
 
   /** Read of the emitted-window history (reference `stream.window()`).
     * The history is partitioned by batch_id (one slice per micro-batch,
@@ -298,10 +298,7 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
     val cutoff = nowMs - (maxAgeSeconds * 1000L).toLong
     Segments.sealOrphans(spark, bufferPath, idleBefore = Some(cutoff))
     val opts = HadoopReadOptions.builder(spark.sparkContext.hadoopConfiguration).build()
-    listParquet(bufferDir).count { f =>
-      val p = Paths.get(f)
-      newestCreatedMs(p, opts).exists(_ <= cutoff) && { Files.deleteIfExists(p); true }
-    }
+    parquetFiles().count(p => newestCreatedMs(p, opts).exists(_ <= cutoff) && { Files.deleteIfExists(p); true })
   }
 
   @volatile private var retentionHandle: Option[AttachedSource] = None
@@ -370,26 +367,6 @@ final class MbStream(val spark: SparkSession, val name: String, val dir: String)
     h
   }
 
-  private def listParquet(d: String): Seq[String] = {
-    val p = Paths.get(d)
-    if (!Files.exists(p)) Seq.empty
-    else {
-      val s = Files.list(p)
-      try {
-        val b = ArrayBuffer.empty[String]
-        s.forEach(f => if (f.toString.endsWith(".parquet")) b += f.toString)
-        b.toSeq.sorted
-      } finally s.close()
-    }
-  }
-
-  private def readOrEmpty(d: String, schema: StructType): DataFrame =
-    if (listParquet(d).isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    // ignoreMissingFiles: the retention loop deletes whole files at any
-    // time between a reader's file-listing and its execution — a
-    // retention-enabled buffer must tolerate that, not fail the scan
-    else spark.read.schema(schema).option("ignoreMissingFiles", "true").option("pathGlobFilter", "*.parquet").parquet(d)
 }
 
 /** Handle for a background-attached source thread. */
@@ -413,8 +390,7 @@ object MbStream {
     * no later, one µs past the previous append's in this JVM. Appends
     * through different handles then keep the order they were made in,
     * which an emitter capped by `maxFilesPerTrigger` takes them in, and
-    * which a window orders its messages by: a draining run's flush
-    * sentinel comes after every message appended before it. */
+    * which a window orders its messages by. */
   private[streaming] def arrivalMicros(): Long = {
     val now = java.time.Instant.now()
     val us = now.getEpochSecond * 1000000L + now.getNano / 1000

@@ -42,7 +42,7 @@ final case class Minibatch(spark: SparkSession, root: String) {
     * 8-136), backed by the running emitter's `status`/`lastProgress`
     * instead of a Flask endpoint. The emitter is the one this JVM runs on
     * the stream ([[EmitterQuery]]'s registry); `numInputRows` is the rows
-    * its latest batch read, flush sentinels included.
+    * its latest batch read (none for a drain's flush batch).
     */
   def status(name: String): EmitterStatus = {
     // lifecycle status from the durable meta.json (reference Stream.status
@@ -173,11 +173,15 @@ final case class EmitterBuilder(
     */
   def maxGapWindows(n: Int): EmitterBuilder = copy(gapCap = n)
 
-  /** On a [[run]] drain, emit the sub-N CountWindow tail as one final
-    * PARTIAL window instead of carrying it — so a batch job consuming a
-    * finite corpus sees every message. Default off (reference parity:
-    * CountWindow only ever emits complete windows, window.py:305-327).
-    * Only meaningful with [[size]]; time-window strategies ignore it.
+  /** On a `Trigger.AvailableNow` drain ([[run]], or [[start]] with that
+    * trigger), emit the sub-N CountWindow tail as one final PARTIAL window
+    * instead of carrying it — so a batch job consuming a finite corpus sees
+    * every message. Default off (reference parity: CountWindow only ever
+    * emits complete windows, window.py:305-327). Only meaningful with
+    * [[size]]; time-window strategies ignore it. The flush is a batch of
+    * the emitter's batch log that takes no message: it gets the next
+    * window id and is committed and replayed like any other batch, so a
+    * restart emits an uncommitted flush whatever this flag then says.
     */
   def flushPartialOnDrain(f: Boolean): EmitterBuilder = copy(flushPartial = f)
 
@@ -207,20 +211,12 @@ final case class EmitterBuilder(
       queryName = Some(Minibatch.queryNameFor(stream.name)),
       maxWorkers = workers, maxFilesPerTrigger = filesPerTrigger,
       batchSink = batchSinkFn, emitEmpty = emitEmptyWindows,
-      maxGapWindows = gapCap)
+      maxGapWindows = gapCap, flushPartialOnDrain = flushPartial)
   }
 
   /** Blocking drain (the reference's run(blocking=True) against a finite
-    * buffer; deterministic in tests). With [[flushPartialOnDrain]], a flush
-    * sentinel is appended ahead of the drain so the count window emits
-    * its sub-N tail as a final partial window.
+    * buffer; deterministic in tests): [[start]] under `Trigger.AvailableNow`.
+    * It writes nothing to the buffer, so it also drains a closed stream.
     */
-  def run(): Unit = {
-    if (flushPartial && strategy.forall(s =>
-        s.isInstanceOf[EmitterRunner.CountWindow] ||
-        s.isInstanceOf[EmitterRunner.CountWindowTimeout]))
-      stream.appendControl(EmitterRunner.FlushSentinel)
-    val q = withTrigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
+  def run(): Unit = withTrigger(Trigger.AvailableNow()).start().awaitTermination()
 }

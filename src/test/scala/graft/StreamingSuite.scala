@@ -576,7 +576,7 @@ class StreamingSuite extends AnyFunSuite {
     assert(sink2.size === 1, s"expected the partial tail window, got $sink2")
     assert(sink2.head._1 === 2L)
     assert(sink2.head._2 === Seq("""{"i":6}"""))
-    // the drain's flush sentinel sits in buffer/ but never reads back as a message
+    // the flush is a record of the batch log: the buffer holds the 7 messages only
     assert(st.buffer().count() === 7)
     // window ids continue past the flushed window; no message re-emits
     st.appendAll((10 until 13).map(i => s"""{"i":$i}"""))
@@ -585,6 +585,132 @@ class StreamingSuite extends AnyFunSuite {
     assert(sink3.size === 1)
     assert(sink3.head._1 === 3L)
     assert(sink3.head._2.size === 3)
+  }
+
+  /** Whether record `name` of `st`'s batch log takes no file and no segment range: a drain's flush. */
+  private def isFlushRecord(st: MbStream, name: String): Boolean = {
+    val in = new java.io.DataInputStream(Files.newInputStream(BufferSource.logDir(st).resolve(name)))
+    try {
+      assert(in.readInt() === 2, "batch log format")
+      in.readInt() == 0 && in.readInt() == 0
+    } finally in.close()
+  }
+
+  /** The batch records of `st`'s log, by name. */
+  private def batchRecords(st: MbStream): Seq[String] =
+    (0 until 100).map(_.toString).filter(k => Files.exists(BufferSource.logDir(st).resolve(k)))
+
+  /** The hidden names in `st`'s buffer: segment logs, their locks, temp files. */
+  private def hiddenInBuffer(st: MbStream): Seq[String] = {
+    val s = Files.list(java.nio.file.Paths.get(st.bufferDir))
+    try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString).filter(_.startsWith(".")).sorted
+    finally s.close()
+  }
+
+  test("the payload {\"__graft_flush__\":true} is an ordinary message: buffer(), interval and size windows") {
+    val marker = """{"__graft_flush__":true}"""
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("marker-payload")
+    Seq("""{"i":0}""", marker, """{"i":1}""", """{"i":2}""").foreach(st.append)
+    assert(st.buffer().count() === 4)
+    assert(st.buffer().where(col("data") === marker).count() === 1)
+    // size(2): the payload fills a window like any other message, and no partial window is flushed
+    val (counted, fn) = collector()
+    val q = mb.streaming(st.name).size(2).emit(fn).start()
+    q.awaitTermination()
+    assert(counted.toSeq === Seq(0L -> Seq("""{"i":0}""", marker).sorted, 1L -> Seq("""{"i":1}""", """{"i":2}""")))
+    assert(q.lastProgress.numInputRows === 4)
+    // interval(60, relaxed = false): one aligned window of all three messages
+    val fixed = mb.stream("marker-payload-fixed")
+    val base = 1699999980L // aligned to the 60 s grid
+    fixed.writeBufferFile(Seq("""{"o":0}""", marker, """{"o":2}""").zipWithIndex
+      .map { case (d, i) => (d, new Timestamp((base + i) * 1000L)) })
+    val (timed, fn2) = collector()
+    val q2 = mb.streaming(fixed.name).interval(60, relaxed = false).emit(fn2)
+      .withTrigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    q2.awaitTermination()
+    assert(timed.toSeq === Seq(base / 60 -> Seq("""{"o":0}""", """{"o":2}""", marker).sorted))
+    assert(q2.lastProgress.numInputRows === 3)
+  }
+
+  test("flush record: an emitFn failure on the partial window leaves it uncommitted; a restart without the flag emits it once") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("flush-replay")
+    st.appendAll((0 until 5).map(i => s"""{"i":$i}"""))
+    val (sink, fn) = collector()
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      mb.streaming(st.name).size(2).flushPartialOnDrain(true).emit { (id, df) =>
+        if (id == 2) sys.error("emit failed on the partial window")
+        fn(id, df)
+      }.run()
+    }
+    assert(sink.toSeq === Seq(0L -> Seq("""{"i":0}""", """{"i":1}"""), 1L -> Seq("""{"i":2}""", """{"i":3}""")))
+    val log = BufferSource.logDir(st)
+    assert(batchRecords(st) === Seq("0", "1") && Files.exists(log.resolve("0.commit")))
+    assert(isFlushRecord(st, "1") && !Files.exists(log.resolve("1.commit")), "the flush record is left uncommitted")
+    // the restart runs the uncommitted flush record whatever its builder says
+    val (again, fn2) = collector()
+    mb.streaming(st.name).size(2).emit(fn2).run()
+    assert(again.toSeq === Seq(2L -> Seq("""{"i":4}""")))
+    assert(Files.exists(log.resolve("1.commit")))
+    // emitted once: the carry is empty now, so a flush drain records nothing more
+    val (third, fn3) = collector()
+    mb.streaming(st.name).size(2).flushPartialOnDrain(true).emit(fn3).run()
+    assert(third.isEmpty && batchRecords(st) === Seq("0", "1"))
+    st.appendAll(Seq("""{"i":5}"""))
+    val (fourth, fn4) = collector()
+    mb.streaming(st.name).size(2).emit(fn4).run()
+    assert(fourth.isEmpty, "window ids continue after the flush; one message waits for the next")
+    mb.streaming(st.name).size(2).flushPartialOnDrain(true).emit(fn4).run()
+    assert(fourth.toSeq === Seq(3L -> Seq("""{"i":5}""")))
+  }
+
+  test("flush record: none after a drain whose carry is empty, and none for a time-window emitter") {
+    val mb = Minibatch(spark, freshRoot())
+    val even = mb.stream("flush-even")
+    even.appendAll((0 until 4).map(i => s"""{"i":$i}"""))
+    val (sink, fn) = collector()
+    mb.streaming(even.name).size(2).flushPartialOnDrain(true).emit(fn).run()
+    assert(sink.map(_._2.size) === Seq(2, 2))
+    assert(batchRecords(even) === Seq("0"), "no flush record after a drain that leaves no remainder")
+    val base = 1699999980L
+    Seq(EmitterRunner.FixedTimeWindow(60), EmitterRunner.RelaxedTimeWindow).zipWithIndex.foreach { case (s, i) =>
+      val st = mb.stream(s"flush-time-$i")
+      st.writeBufferFile(Seq(("""{"o":0}""", new Timestamp(base * 1000L)), ("""{"o":70}""", new Timestamp((base + 70) * 1000L))))
+      val (timed, fn2) = collector()
+      mb.streaming(st.name).emitter(s).flushPartialOnDrain(true).emit(fn2).run()
+      assert(timed.map(_._2.size).sum === 2, s"$s: $timed")
+      assert(batchRecords(st) === Seq("0"), s"$s ignores flushPartialOnDrain")
+    }
+  }
+
+  test("a flush drain writes nothing to buffer/: no segment log, no lock, and it drains a closed stream") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("flush-closed")
+    st.appendAll((0 until 3).map(i => s"""{"i":$i}"""))
+    st.close()
+    val before = (bufferFiles(st), hiddenInBuffer(st))
+    assert(before._2.isEmpty, s"close() sealed the segment: $before")
+    val (sink, fn) = collector()
+    mb.streaming(st.name).size(2).flushPartialOnDrain(true).emit(fn).run()
+    assert(sink.toSeq === Seq(0L -> Seq("""{"i":0}""", """{"i":1}"""), 1L -> Seq("""{"i":2}""")))
+    assert((bufferFiles(st), hiddenInBuffer(st)) === before, "the drain left the buffer as it found it")
+  }
+
+  test("start() under Trigger.AvailableNow flushes the count tail as run() does; under ProcessingTime it carries it") {
+    val mb = Minibatch(spark, freshRoot())
+    val st = mb.stream("flush-start")
+    st.appendAll((0 until 3).map(i => s"""{"i":$i}"""))
+    val (polled, fn) = collector()
+    val q = mb.streaming(st.name).size(2).flushPartialOnDrain(true)
+      .withTrigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(10)).emit(fn).start()
+    try q.processAllAvailable() finally q.stop()
+    assert(polled.toSeq === Seq(0L -> Seq("""{"i":0}""", """{"i":1}""")), "a polling emitter never flushes")
+    val (drained, fn2) = collector()
+    val q2 = mb.streaming(st.name).size(2).flushPartialOnDrain(true).emit(fn2).start()
+    q2.awaitTermination()
+    assert(drained.toSeq === Seq(1L -> Seq("""{"i":2}""")))
+    assert(q2.lastProgress.numInputRows === 0, "the flush batch reads no row")
   }
 
   test("close() flips status open->closed, refuses appends; reopen() restores (Stream.stop port)") {
@@ -1924,12 +2050,12 @@ class StreamingSuite extends AnyFunSuite {
     val other = mb.stream(st.name)
     (0 until 5).foreach(i => (if (i % 2 == 0) st else other).append(s"""{"i":$i}"""))
     val (sink, fn) = collector()
-    // run() appends the flush sentinel through a handle of its own, so it sits in a third segment
+    // the flush is one more batch record, after the drain has taken every append
     mb.streaming(st.name).size(2).maxFilesPerTrigger(1).flushPartialOnDrain(true).emit(fn).run()
     assert(sink.toSeq === Seq(0L -> Seq("""{"i":0}""", """{"i":1}"""), 1L -> Seq("""{"i":2}""", """{"i":3}"""),
       2L -> Seq("""{"i":4}""")))
     val batches = (0 until 100).map(_.toString).filter(k => Files.exists(BufferSource.logDir(st).resolve(k)))
-    assert(batches.size === 6, s"one append per batch, the sentinel's last: $batches")
+    assert(batches.size === 6, s"one append per batch, then the flush record: $batches")
   }
 
   test("segment log: a capped AvailableNow drain takes the records of a segment sealed before the drain reached it") {
